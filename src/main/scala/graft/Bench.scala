@@ -1,89 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
+
+import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val warehouseDir =
-      s"/tmp/graft_warehouse_bench_${ProcessHandle.current().pid()}"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Fixture-scale split sizing: the test parquet is a handful of
-      // single-digit-MB files, far below the 128 MB default split size,
-      // so every scan would be one task and per-row-heavy projections
-      // (tokenize, regex, md5 banks) would serialize. 512 KB splits give
-      // the local 32 threads real scan parallelism wherever the file's
-      // row-group layout allows it — the same splits-per-core tuning a
-      // real cluster does, just at fixture scale.
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.ui.enabled", "false")
-      // bucketed-layout queries saveAsTable; keep the warehouse out of
-      // the repo working tree; per-PID so two bench JVMs on the same
-      // fixture never race on DROP + recursive delete of shared table
-      // dirs (the discipline runStreamExec's sink paths already follow)
-      .config("spark.sql.warehouse.dir", warehouseDir)
-      // Shuffle-partition sizing across SFs (r11 verdict #2): a fixed 32
-      // partitions makes each task's window/join buffer 10× bigger at the
-      // 10× fixtures — at sf1mut that blew an 8 GB heap (heap OOM in
-      // ExternalAppendOnlyUnsafeRowArray under 32 concurrent fat tasks).
-      // With AQE on, shuffles START at ~one partition per input MB
-      // (clamped to [cpus, 8×cpus]) and the runtime coalescer merges them
-      // back to the advisory size wherever data is small — per-task
-      // working sets stay bounded as the corpus grows. Scaling the
-      // INITIAL count with the data, not a constant, matters both ways:
-      // a flat 8×cpus was measured +9% median per-query at sf0.1 (and 3×
-      // on the per-round BFS loops — 256 tasks of scheduling per tiny
-      // iteration), while cpus alone OOMs sf1mut; size to the data, like
-      // a cluster job sizes to its scan.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.util.PartitionSizing.initialPartitions(sfDir, cpus.toInt)
-          .toString)
-      // Let AQE plan cached-table materialization (default off only for
-      // output-partitioning compatibility): without it every QueryCaches
-      // memo is stored with whatever partition count its build stage
-      // happened to have (union of two 32-partition branches → 64 tiny
-      // cached partitions), and every downstream scan pays the per-task
-      // fixed cost × that count. With it, cached plans get the same
-      // coalesce-to-advisory-size discipline as every other exchange —
-      // guide §2.2 "fewer, larger partitions", applied to the cache.
-      // Measured (opt r13): q_text_textrank task time 50.7 s → 1.9 s,
-      // q_eng_modularity 59 s → 19 s, same results (oracle re-verified).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // Let the planner pick shuffled-hash join where its size conditions
-      // hold (guide §3.1 and the §9 baseline config): sort-merge pays an
-      // O(n log n) sort on BOTH sides per join; a shuffled-hash join
-      // builds a hash table over the (size-checked) smaller per-partition
-      // side and streams the other. Unlike a SHUFFLE_HASH hint this is
-      // still planner-guarded — it only fires when one side is provably
-      // much smaller and a partition fits the build budget, so it cannot
-      // OOM-by-fiat at scale. Measured (opt r14, ProbeStages A/B):
-      // q_eng_waiting_supplier task time 10.4 s → 6.4 s, q_eng_triangles
-      // 31.1 s → 26.7 s, mann_whitney/span_removal −10-15%, rest neutral;
-      // oracle re-proved 347/347 under the flag.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // local-iteration filter (unset, the whole suite is benched):
+    // comma-separated query names to re-measure after a targeted
+    // change without paying the whole-suite wall clock
+    val suite = new Suite("bench", sfDir,
+      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet))
+    val spark = suite.spark
     // warm the session (codegen compiler, parquet reader, shuffle + window
     // machinery) with the flagship query on the smallest SF so the first
     // measured query doesn't absorb one-time SQL-engine initialization
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    // per-query: one untimed warmup (absorbs plan compilation + shared-cache
-    // materialization), then median of `iters` timed runs — single-iteration
-    // numbers charged JIT/first-touch to whichever query ran first and made
-    // rounds incomparable (round-2 review: 36.6s reported for a 0.7s query)
-    // local-iteration filter (driver sets no filter and benches the full
-    // suite): comma-separated query names to re-measure after a targeted
-    // change without paying the whole-suite wall clock
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    // A failing query must surface as an error entry, never as a timing: the
-    // round-6 fixture break shipped 46 analysis errors as "healthy" ~0.06 s
-    // rows because failures were swallowed here. Failure during warmup skips
-    // the timed iterations (the plan won't suddenly start analyzing).
-    var errors = scala.collection.immutable.ListMap.empty[String, String]
     // Self-labeling against machine contention (r7 verdict "What's wrong
     // #4": the driver's recorded numbers ran 1.6–7.6× above a clean re-run
     // because OTHER processes shared the box). Record the 1-minute system
@@ -93,21 +29,18 @@ object Bench {
     // the timing is suspect.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     def loadAvg(): Double = osBean.getSystemLoadAverage // -1.0 if unsupported
-    var loads = scala.collection.immutable.ListMap.empty[String, Double]
+    var loads = ListMap.empty[String, Double]
     val loadStart = loadAvg()
     var loadMax = loadStart
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Double] = {
+    val loadThreshold = math.max(suite.cpus / 2.0, 8.0)
+    def once(fn: Suite.Query): Double = {
       val t0 = System.nanoTime()
       // the noop sink evaluates EVERY output column of the exact plan
       // Verify certifies (a bare .count() lets Catalyst prune the output
       // projection, so wide-output queries benched on a narrower plan)
       // without charging disk I/O to the timing
-      try {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch { case t: Throwable =>
-        Left(s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("").take(300)}")
-      }
+      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      (System.nanoTime() - t0) / 1e9
     }
     // Kept statistic (r10 verdict #3 — the ±15–30% machine-state swing
     // between identical-code benches was the largest error bar in
@@ -119,137 +52,68 @@ object Bench {
     // load-retry rule below already committed to ("the smaller median
     // wins"); min-of-k just applies it per query from the start. The
     // median is still recorded per query in bench_full.json ("medians")
-    // for continuity with pre-r11 artifacts. SPARK_GRAFT_BENCH_STAT=
-    // median restores the old kept statistic.
-    val keepMedian = sys.env.get("SPARK_GRAFT_BENCH_STAT").contains("median")
-    var medians = scala.collection.immutable.ListMap.empty[String, Double]
-    val loadThreshold = math.max(cpus.toDouble / 2.0, 8.0)
-    // Optional per-query quiesce (SPARK_GRAFT_BENCH_QUIESCE = total sleep
-    // budget in seconds, default 0 = off): before each query's timed
-    // iterations, wait in 2 s steps while the 1-min load exceeds the
-    // retry threshold, until the SHARED budget runs out. Off by default
-    // because at sf0.1 the 1-min average is dominated by the bench's own
-    // 32 worker threads (SCALING_sf1.md round-10 notes) and decays on a
-    // ~60 s constant — min-of-k is the effective lever; the budget exists
-    // for quantifying FOREIGN load on a shared box.
-    // Try-parse: a malformed value must degrade to "quiesce off", not
-    // crash the whole bench before any query runs (ADVICE r11)
-    var quiesceBudget = scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIESCE", "0").toDouble)
-      .getOrElse(0.0)
-    def quiesce(): Unit =
-      while (quiesceBudget > 0 && loadAvg() > loadThreshold) {
-        Thread.sleep(2000); quiesceBudget -= 2.0
-      }
-    // recordErrors=false for load-triggered RE-measures: the query already
-    // has a committed timing in `results`, so a transient retry failure must
-    // not add it to `errors` (ADVICE r9: the same name otherwise appears in
-    // both full_queries and errors and the FAILED banner fires for a query
-    // that has a valid number — the original row simply stands).
-    // returns (kept statistic, median of this pass); the caller decides
-    // which pass's numbers (and median label) to commit
-    def measure(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                recordErrors: Boolean = true)
-        : Option[(Double, Double)] = {
-      quiesce()
-      val runs = Seq.fill(iters)(once(name, fn))
-      runs.collectFirst { case Left(err) => err } match {
-        case Some(err) => if (recordErrors) errors += (name -> err); None
-        case None =>
-          val times = runs.collect { case Right(t) => t }.sorted
-          val med = times(times.size / 2)
-          Some((if (keepMedian) med else times.head, med))
-      }
+    // for continuity with pre-r11 artifacts.
+    var results = ListMap.empty[String, Double]
+    var medians = ListMap.empty[String, Double]
+    // timed runs per query, to turn the summed Spark metrics into per-run ones
+    var timedRuns = Map.empty[String, Int].withDefaultValue(0)
+    // (min, median) of `iters` timed runs; throws on the first failing run
+    def measure(name: String, fn: Suite.Query): (Double, Double) = {
+      val times = suite.metered(name)(Seq.fill(iters)(once(fn))).sorted
+      timedRuns += name -> (timedRuns(name) + iters)
+      (times.head, times(times.size / 2))
     }
-    var results = scala.collection.immutable.ListMap.empty[String, Double]
-    // Memo lifetime bound (r11 verdict #2): after each query, age the
-    // shared-memo registry and release memos no query touched for the
-    // last `memoAge` queries — the whole-suite union of cached memos
-    // (signatures + postings + n-grams + pair tables) does not fit an
-    // 8 GB heap at sf1mut, and nothing needs it to: family reuse is
-    // temporally local in suite order. An evicted memo a later query
-    // still wants is rebuilt during that query's UNTIMED warmup (timed
-    // rows stay post-memo); rebuild seconds accumulate in shared_builds.
-    // The valve opens on the SAME data-size signal as partition sizing:
-    // when the fixture is small enough that initialPartitions clamps to
-    // cpus, the whole memo union fits a default heap (the r11 sf0.1 pair
-    // proved it at 212 s) and eviction would only pay rebuilds — so the
-    // age bound engages only past that size.
-    val memoAge = scala.util.Try(
-      sys.env.get("SPARK_GRAFT_MEMO_AGE").map(_.toInt)).toOption.flatten
-      .getOrElse {
-        if (graft.util.PartitionSizing.initialPartitions(sfDir, cpus.toInt)
-            > cpus.toInt) 25
-        else Int.MaxValue / 2
-      }
-    var evicted = List.empty[String]
-    var qIdx = 0
-    val qTotal = SparkEntry.queries
-      .count { case (name, _) => only.forall(_.contains(name)) }
-    // SORTED execution order, not Map order: the memo-lifetime discipline
-    // (tick/evictStale/evictOnPressure) assumes a family's queries run
-    // contiguously so its shared caches age out together. HashMap order
-    // is arbitrary and reshuffles whenever the key set changes — the r13
-    // sf1mut 8 GB OOM was exactly this: the tail interleaved q_sim_* and
-    // q_dedup_* queries, each touch kept the OTHER family's heavyweight
-    // memos young, and two families' caches stayed resident at once.
-    // Name order clusters families by prefix and is stable across rounds.
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        // progress line BEFORE the query runs: when a run dies mid-suite
-        // (OOM, kill), the log names the query that was executing — the
-        // r13 sf1mut OOM was undiagnosable without this
-        qIdx += 1
-        System.err.println(s"[bench] $qIdx/$qTotal $name")
-        once(name, fn) match { // warmup
-          case Left(err) => errors += (name -> err)
-          case Right(_) =>
-            measure(name, fn).foreach { case (kept, med) =>
-              val la = loadAvg()
-              loads += (name -> la)
-              if (la > loadMax) loadMax = la
-              results += (name -> kept)
-              medians += (name -> med)
-            }
-        }
-        graft.queries.QueryCaches.tick()
-        // pressure valve first (storage-memory high-water → aggressive
-        // age-0-ish eviction), fixed age bound as the fallback
-        evicted ++= graft.queries.QueryCaches.evictOnPressure(spark)
-        evicted ++= graft.queries.QueryCaches.evictStale(memoAge)
-      }
-    // ACT on the load labels, don't just record them (r8 verdict: the
-    // committed map shipped 12.35 s for a verified-1.65 s query with only
-    // a footnote). Any row whose 1-min load exceeded ~cpus/2 is
-    // re-measured (up to 2 passes); the smaller kept statistic wins —
-    // contention only ever inflates a timing, so the smaller of two is
-    // the tighter upper bound on the clean time. Rows still above threshold
-    // after both passes stay labeled (the box never went quiet).
-    // The recorded load label must describe the pass that PRODUCED the kept
-    // median (ADVICE r9: relabeling with a rejected retry's lower load made
-    // the label describe a different run than the number). So the label is
-    // only replaced when the retry's median is the one kept; `retriedKept`
-    // records per query which rows carry a retry-pass number at all, so a
-    // reader can tell first-pass timings from re-measured ones.
-    var retried = 0
+    // per-query: one untimed warmup (absorbs plan compilation + shared-cache
+    // materialization), then min of `iters` timed runs — single-iteration
+    // numbers charged JIT/first-touch to whichever query ran first and made
+    // rounds incomparable (round-2 review: 36.6s reported for a 0.7s query).
+    // A failing query must surface as an error entry, never as a timing: the
+    // round-6 fixture break shipped 46 analysis errors as "healthy" ~0.06 s
+    // rows because failures were swallowed here. Failure during warmup skips
+    // the timed iterations (the plan won't suddenly start analyzing).
+    suite.run { (name, fn) =>
+      once(fn)
+      val (kept, med) = measure(name, fn)
+      val la = loadAvg()
+      loads += (name -> la)
+      if (la > loadMax) loadMax = la
+      results += (name -> kept)
+      medians += (name -> med)
+    }
+    // Re-measure the `suspects` (recomputed before each of up to 2
+    // passes); the smaller kept statistic wins — contention only ever
+    // inflates a timing, so the smaller of two is the tighter upper bound
+    // on the clean time. A retry failure adds no error (ADVICE r9: the
+    // same name otherwise appears in both full_queries and errors and the
+    // FAILED banner fires for a query that has a valid number — the
+    // original row simply stands). The recorded load label must describe
+    // the pass that PRODUCED the kept number (ADVICE r9: relabeling with a
+    // rejected retry's lower load made the label describe a different run
+    // than the number), so it is only replaced when the retry is kept;
+    // `retriedKept` records per query which rows carry a retry-pass number
+    // at all, so a reader can tell first-pass timings from re-measured ones.
+    val fns = suite.queries.toMap
     var retriedKept = Set.empty[String]
-    for (_ <- 0 until 2) {
-      val suspect = loads.filter { case (n, la) =>
-        la > loadThreshold && results.contains(n) }.keys.toSeq
-      for (name <- suspect; fn <- SparkEntry.queries.get(name)) {
-        retried += 1
-        measure(name, fn, recordErrors = false).foreach { case (kept2, med2) =>
-          val la2 = loadAvg()
+    def remeasure(suspects: => Iterable[String])(onRetry: String => Unit): Unit =
+      for (_ <- 0 until 2; name <- suspects.toSeq) {
+        onRetry(name)
+        scala.util.Try(measure(name, fns(name))).foreach { case (kept2, med2) =>
           if (kept2 < results(name)) {
             results += (name -> kept2)
             medians += (name -> med2)
-            loads += (name -> la2)
+            loads += (name -> loadAvg())
             retriedKept += name
           }
         }
       }
+    // ACT on the load labels, don't just record them (r8 verdict: the
+    // committed map shipped 12.35 s for a verified-1.65 s query with only
+    // a footnote). Any row whose 1-min load exceeded ~cpus/2 is
+    // re-measured. Rows still above threshold after both passes stay
+    // labeled (the box never went quiet).
+    var retried = 0
+    remeasure(loads.collect { case (n, la) if la > loadThreshold => n }) { _ =>
+      retried += 1
     }
     // Drift ledger (r11 verdict #3): min-of-k cannot fix a contention
     // window that spans all k timed runs of one query — BENCH_r11 shipped
@@ -257,8 +121,7 @@ object Bench {
     // code. The committed bench_full.json is a second, independent
     // estimate of the clean time, so any kept min exceeding ~3× it (and
     // by > 0.5 s absolutely, so millisecond rows can't trigger) is
-    // re-measured like a load suspect; the smaller statistic wins for the
-    // same reason as above (noise is strictly additive). The baseline is
+    // re-measured like a load suspect. The baseline is
     // only trusted when its "sf" matches this run — a sf1mut bench
     // compared against the committed sf0.1 pair would flag everything.
     // Rows that triggered land in `drift_retried`; rows STILL above the
@@ -268,15 +131,8 @@ object Bench {
     val baselinePath =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "bench_full.json")
     val baseline: Map[String, Double] = try {
-      import org.json4s._
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(baselinePath)), "UTF-8")
-      val j = org.json4s.jackson.JsonMethods.parse(txt)
-      val sfOk = (j \ "sf") match {
-        case JString(v) => v == sfDir
-        case _ => false
-      }
-      if (!sfOk) Map.empty
+      val j = parse(new String(Files.readAllBytes(Paths.get(baselinePath)), "UTF-8"))
+      if (j \ "sf" != JString(sfDir)) Map.empty
       else (j \ "full_queries") match {
         case JObject(fields) => fields.collect {
           case (k, JDouble(v)) => k -> v
@@ -289,22 +145,9 @@ object Bench {
     def drifting(n: String, v: Double): Boolean =
       baseline.get(n).exists(b => v > 3.0 * b && v - b > 0.5)
     var driftRetried = Set.empty[String]
-    for (_ <- 0 until 2) {
-      val suspects = results.filter { case (n, v) => drifting(n, v) }.keys.toSeq
-      for (name <- suspects; fn <- SparkEntry.queries.get(name)) {
-        driftRetried += name
-        measure(name, fn, recordErrors = false).foreach { case (kept2, med2) =>
-          if (kept2 < results(name)) {
-            results += (name -> kept2)
-            medians += (name -> med2)
-            loads += (name -> loadAvg())
-            retriedKept += name
-          }
-        }
-      }
-    }
+    remeasure(results.collect { case (n, v) if drifting(n, v) => n })(driftRetried += _)
     val driftFlagged =
-      results.collect { case (n, v) if drifting(n, v) => n }.toSet
+      results.collect { case (n, v) if drifting(n, v) => n }.toSeq.sorted
     val loadEnd = loadAvg()
     // shared-memo build ledger: memo materialization is timed inside
     // QueryCaches (forced at first touch, during some query's untimed
@@ -313,27 +156,24 @@ object Bench {
     // query ran first (r8: q_eng_bfs_hops 7.9 s standalone vs 2.9 s
     // in-suite was exactly this artifact).
     val sharedBuilds = graft.queries.QueryCaches.sharedBuilds
-    graft.queries.QueryCaches.clear()
-    def f3(v: Double): String = // Locale.ROOT: a comma decimal separator would break the JSON
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case '\r' => "\\r"; case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    def jmap(kv: Iterable[(String, Double)]): String =
-      kv.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
-    def jerrs(kv: Iterable[(String, String)]): String =
-      kv.map { case (k, v) => "\"" + k + "\":" + jstr(v) }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val metrics = suite.close()
+    val errors = suite.errors
+    def num(v: Double): JValue =
+      JDecimal(BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP))
+    def nums(kv: Iterable[(String, Double)]): JObject =
+      JObject(kv.map { case (k, v) => k -> num(v) }.toList)
+    def strs(names: Iterable[String]): JArray = JArray(names.map(JString).toList)
+    def json(fields: (String, JValue)*): String = compact(render(JObject(fields: _*)))
+    val errorsJson = JObject(errors.map { case (k, v) => k -> JString(v) }.toList)
+    val total = results.values.sum
     // The driver captures only the last ~4 KB of output, and at 111 queries
     // the full per-query map alone exceeds that (BENCH_r03/r04 "parsed":
     // null — the line was cut from the front). So: full map first on a line
     // the driver's {"metric" match skips, then a size-bounded parseable
     // final line — total + the 20 slowest queries (the ones perf review
     // reads) + the suite count. ~800 B regardless of suite growth.
-    println(s"""{"full_queries":${jmap(results)},"errors":${jerrs(errors)},"sf":"$sfDir"}""")
+    println(json("full_queries" -> nums(results), "errors" -> errorsJson,
+      "sf" -> JString(sfDir)))
     // also persist the full map as a file artifact — the driver's bounded
     // tail capture keeps only the slowest 20, so round-over-round diffs of
     // all queries need a committed file. The DEFAULT path is deliberately
@@ -353,31 +193,47 @@ object Bench {
     // only; "stat" names the kept statistic and "medians" preserves the
     // per-query median-of-iters for continuity with pre-r11 artifacts;
     // "drift_retried"/"drift_flagged" are the committed-baseline drift
-    // ledger (triggered / still-above-trigger after retries).
+    // ledger (triggered / still-above-trigger after retries);
+    // "memo_evicted" lists the memo keys the lifetime rule released;
+    // "metrics" holds each query's Spark work per timed run (jobs,
+    // stages, tasks, task run/CPU/GC seconds, shuffle and spill bytes) —
+    // the per-layer split of its row, from every timed run, never the
+    // warmup.
     // Schema note for the artifact: {full_queries, medians, stat, errors,
     // load, load_summary, shared_builds, retried, retried_kept,
-    // drift_retried, drift_flagged, total, n_queries, failed, sf}.
-    val retriedKeptJson =
-      retriedKept.toSeq.sorted.map(jstr).mkString("[", ",", "]")
-    val driftRetriedJson =
-      driftRetried.toSeq.sorted.map(jstr).mkString("[", ",", "]")
-    val driftFlaggedJson =
-      driftFlagged.toSeq.sorted.map(jstr).mkString("[", ",", "]")
-    // memo keys released by the age bound during the run (possibly with
-    // repeats if a rebuilt memo aged out again) — the working-set ledger
-    val memoEvictedJson = evicted.map(jstr).mkString("[", ",", "]")
-    val statName = if (keepMedian) "median" else "min"
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      s"""{"full_queries":${jmap(results.toSeq.sortBy(_._1))},"medians":${jmap(medians.toSeq.sortBy(_._1))},"stat":${jstr(statName)},"errors":${jerrs(errors)},"load":${jmap(loads.toSeq.sortBy(_._1))},"load_summary":${jmap(Seq("start" -> loadStart, "end" -> loadEnd, "max" -> loadMax, "retry_threshold" -> loadThreshold))},"shared_builds":${jmap(sharedBuilds.toSeq.sortBy(_._1))},"retried":$retried,"retried_kept":$retriedKeptJson,"drift_retried":$driftRetriedJson,"drift_flagged":$driftFlaggedJson,"memo_evicted":$memoEvictedJson,"total":${f3(total)},"n_queries":${results.size},"failed":${errors.size},"sf":"$sfDir"}""".getBytes("UTF-8"))
+    // drift_retried, drift_flagged, memo_evicted, metrics, total,
+    // n_queries, failed, sf}.
+    val loadSummary = Seq("start" -> loadStart, "end" -> loadEnd, "max" -> loadMax)
+    val sorted = results.toSeq.sortBy(_._1)
+    try Files.write(Paths.get(outFile), json(
+      "full_queries" -> nums(sorted),
+      "medians" -> nums(medians.toSeq.sortBy(_._1)),
+      "stat" -> JString("min"),
+      "errors" -> errorsJson,
+      "load" -> nums(loads.toSeq.sortBy(_._1)),
+      "load_summary" -> nums(loadSummary :+ ("retry_threshold" -> loadThreshold)),
+      "shared_builds" -> nums(sharedBuilds.toSeq.sortBy(_._1)),
+      "retried" -> JInt(retried),
+      "retried_kept" -> strs(retriedKept.toSeq.sorted),
+      "drift_retried" -> strs(driftRetried.toSeq.sorted),
+      "drift_flagged" -> strs(driftFlagged),
+      "memo_evicted" -> strs(suite.evicted),
+      "metrics" -> JObject(sorted.map { case (n, _) =>
+        n -> nums(metrics(n).map { case (k, v) => k -> v / timedRuns(n) })
+      }.toList),
+      "total" -> num(total),
+      "n_queries" -> JInt(results.size),
+      "failed" -> JInt(errors.size),
+      "sf" -> JString(sfDir)).getBytes("UTF-8"))
     catch { case _: Throwable => () }
-    val slowest = results.toSeq.sortBy(-_._2).take(20)
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"failed":${errors.size},"retried":$retried,"drift_retried":${driftRetried.size},"drift_flagged":$driftFlaggedJson,"load_summary":${jmap(Seq("start" -> loadStart, "end" -> loadEnd, "max" -> loadMax))},"queries":${jmap(slowest)},"sf":"$sfDir"}""")
-    spark.stop()
-    // the per-PID warehouse and streaming scratch are run-scoped —
-    // remove them so repeated runs don't accumulate /tmp debris
-    graft.util.Scratch.deleteRecursively(warehouseDir)
-    graft.queries.StreamTwinQueries.cleanupScratch()
-    graft.queries.ParityQueries.cleanupScratch()
+    println(json("metric" -> JString("total"), "value" -> num(total),
+      "unit" -> JString("sec"), "n_queries" -> JInt(results.size),
+      "failed" -> JInt(errors.size), "retried" -> JInt(retried),
+      "drift_retried" -> JInt(driftRetried.size),
+      "drift_flagged" -> strs(driftFlagged),
+      "load_summary" -> nums(loadSummary),
+      "queries" -> nums(results.toSeq.sortBy(-_._2).take(20)),
+      "sf" -> JString(sfDir)))
     // a non-zero failed count must be visible even if only the exit status
     // survives log truncation
     if (errors.nonEmpty) {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round measurement tool (guide §1.2/§7.2): dump
@@ -9,55 +8,21 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: runMain graft.Plans <sfDir> <outDir> [q_a,q_b,...]
   *
-  * Session config mirrors Bench exactly — the plans must describe the
-  * benched execution (same master/core count, same split sizing, same
-  * AQE initial-partition scaling), not some other session's.
+  * Runs in the certified [[Session]] through the same [[Suite]] as Bench —
+  * the plans must describe the benched execution (same master/core count,
+  * same split sizing, same AQE initial-partition scaling, same memo
+  * lifetime), not some other session's.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val warehouseDir =
-      s"/tmp/graft_warehouse_plans_${ProcessHandle.current().pid()}"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", warehouseDir)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.util.PartitionSizing.initialPartitions(sfDir, cpus.toInt)
-          .toString)
-      // AQE for cached-plan materialization — rationale in Bench.scala
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // allow shuffled-hash where its size conditions hold — rationale in
-      // Bench.scala (opt r14, guide §3.1/§9)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val suite = new Suite("plans", sfDir, args.lift(2).map(_.split(",").toSet))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/$name.txt"), txt)
-          System.err.println(s"[plans] $name ok")
-        } catch { case e: Throwable =>
-          System.err.println(s"[plans] $name FAILED: ${e.getMessage}")
-        }
-        graft.queries.QueryCaches.tick()
-        graft.queries.QueryCaches.evictStale(25)
-      }
-    graft.queries.QueryCaches.clear()
-    spark.stop()
-    graft.util.Scratch.deleteRecursively(warehouseDir)
-    graft.queries.StreamTwinQueries.cleanupScratch()
-    graft.queries.ParityQueries.cleanupScratch()
+    suite.run { (name, fn) =>
+      val txt = fn(suite.spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      Files.writeString(Paths.get(s"$outDir/$name.txt"), txt)
+    }
+    suite.close()
   }
 }

@@ -17,19 +17,26 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ParityQueries.queries("q_sample_filtered_strat")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ParityQueries.queries ++ TextQueries.queries ++ DedupQueries.queries ++
-      SimilarityQueries.queries ++ MultimodalQueries.queries ++
-      EngineQueries.queries ++ AnalyticsQueries.queries ++ EvalQueries.queries ++
-      DataQualityQueries.queries ++ StatsQueries.queries ++
-      MonitorQueries.queries ++ StreamTwinQueries.queries ++
-      PipelineQueries.queries
+  /** One (queries, oracleSql) pair per query file; [[queries]] and
+    * [[oracleSql]] are their unions. */
+  def registries: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
+    Seq(
+      ParityQueries.queries -> ParityQueries.oracleSql,
+      TextQueries.queries -> TextQueries.oracleSql,
+      DedupQueries.queries -> DedupQueries.oracleSql,
+      SimilarityQueries.queries -> SimilarityQueries.oracleSql,
+      MultimodalQueries.queries -> MultimodalQueries.oracleSql,
+      EngineQueries.queries -> EngineQueries.oracleSql,
+      AnalyticsQueries.queries -> AnalyticsQueries.oracleSql,
+      EvalQueries.queries -> EvalQueries.oracleSql,
+      DataQualityQueries.queries -> DataQualityQueries.oracleSql,
+      StatsQueries.queries -> StatsQueries.oracleSql,
+      MonitorQueries.queries -> MonitorQueries.oracleSql,
+      StreamTwinQueries.queries -> StreamTwinQueries.oracleSql,
+      PipelineQueries.queries -> PipelineQueries.oracleSql)
 
-  def oracleSql: Map[String, String] =
-    ParityQueries.oracleSql ++ TextQueries.oracleSql ++ DedupQueries.oracleSql ++
-      SimilarityQueries.oracleSql ++ MultimodalQueries.oracleSql ++
-      EngineQueries.oracleSql ++ AnalyticsQueries.oracleSql ++ EvalQueries.oracleSql ++
-      DataQualityQueries.oracleSql ++ StatsQueries.oracleSql ++
-      MonitorQueries.oracleSql ++ StreamTwinQueries.oracleSql ++
-      PipelineQueries.oracleSql
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registries.map(_._1).reduce(_ ++ _)
+
+  def oracleSql: Map[String, String] = registries.map(_._2).reduce(_ ++ _)
 }

@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, render}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,96 +9,31 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg (local iteration only; the driver passes two):
     // comma-separated query names to dump instead of the full suite
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val warehouseDir =
-      s"/tmp/graft_warehouse_verify_${ProcessHandle.current().pid()}"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // fixture-scale split sizing — rationale in Bench.scala
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.ui.enabled", "false")
-      // bucketed-layout queries saveAsTable; keep the warehouse out of
-      // the repo working tree; per-PID so side-by-side verify JVMs never
-      // race on the same table dirs (see Bench)
-      .config("spark.sql.warehouse.dir", warehouseDir)
-      // scale-adaptive shuffle sizing + bounded memo lifetime — rationale
-      // in Bench.scala / PartitionSizing (r11 verdict #2): per-task
-      // working sets must not grow linearly with the fixture
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.util.PartitionSizing.initialPartitions(sfDir, cpus.toInt)
-          .toString)
-      // AQE for cached-plan materialization — rationale in Bench.scala
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // allow shuffled-hash where its size conditions hold — rationale in
-      // Bench.scala (opt r14, guide §3.1/§9)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val suite = new Suite("verify", sfDir, args.lift(2).map(_.split(",").toSet))
     new java.io.File(outDir).mkdirs()
+    suite.run { (name, fn) =>
+      fn(suite.spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+    }
+    suite.close()
+    // json4s escapes quotes, backslashes and every control char — a tab or
+    // CR in oracle SQL must never make a reader's json.load fail and
+    // silently zero the round's correctness
+    def write(file: String, kv: Iterable[(String, String)]): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"),
+        compact(render(JObject(kv.map { case (k, v) => k -> JString(v) }.toList))))
+    write("oracle_sql.json", SparkEntry.oracleSql)
     // Per-query status ledger: a query that fails ANALYSIS writes no parquet
     // dir at all, and a checker that only globs output dirs would silently
     // skip it (the round-6 fixture break shipped exactly this way). The
     // ledger makes absence itself an auditable failure.
-    val status = scala.collection.mutable.LinkedHashMap[String, String]()
-    // memo lifetime valve — engages only when the fixture is big enough
-    // to need partition scaling (rationale in Bench.scala)
-    val memoAge =
-      if (graft.util.PartitionSizing.initialPartitions(sfDir, cpus.toInt)
-          > cpus.toInt) 25
-      else Int.MaxValue / 2
-    // sorted execution order — family-clustered memo locality, same
-    // rationale as Bench (the Map's order interleaves families)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        status(name) = "ok"
-      } catch { case e: Throwable =>
-        status(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-        System.err.println(s"[verify] $name failed: ${status(name)}")
-      }
-      graft.queries.QueryCaches.tick()
-      // pressure valve first, fixed age bound as fallback (see Bench)
-      graft.queries.QueryCaches.evictOnPressure(spark)
-      graft.queries.QueryCaches.evictStale(memoAge)
-    }
-    graft.queries.QueryCaches.clear()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val statusJson = status
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/verify_status.json"), statusJson)
-    val failed = status.collect { case (n, s) if s != "ok" => n }.toSeq
+    write("verify_status.json",
+      suite.queries.map { case (n, _) => n -> suite.errors.getOrElse(n, "ok") })
+    val failed = suite.errors.keys
     if (failed.nonEmpty)
       System.err.println(
-        s"[verify] FAILED ${failed.size}/${status.size}: ${failed.mkString(", ")}")
+        s"[verify] FAILED ${failed.size}/${suite.queries.size}: ${failed.mkString(", ")}")
     else
-      System.err.println(s"[verify] all ${status.size} queries dumped ok")
-    spark.stop()
-    // the per-PID warehouse and streaming scratch are run-scoped —
-    // remove them so repeated runs don't accumulate /tmp debris
-    graft.util.Scratch.deleteRecursively(warehouseDir)
-    graft.queries.StreamTwinQueries.cleanupScratch()
-    graft.queries.ParityQueries.cleanupScratch()
+      System.err.println(s"[verify] all ${suite.queries.size} queries dumped ok")
   }
 }

@@ -196,12 +196,4 @@ object Samplers {
       .where(col(rn) <= coalesce(element_at(tmap, sourceCol.cast("string")), lit(0)))
       .drop(rn)
   }
-
-  /** Filter-then-materialize (R3): predicate + projection, no sampling.
-    * Catalyst pushes both into the scan. */
-  def filterMaterialize(df: DataFrame, pred: Column,
-                        columns: Seq[String] = Nil): DataFrame = {
-    val filtered = df.where(pred)
-    if (columns.isEmpty) filtered else filtered.select(columns.map(col): _*)
-  }
 }

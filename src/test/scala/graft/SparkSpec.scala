@@ -3,16 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs: one per suite, sized for CI threads. */
+/** Shared local session for specs: one per suite, the certified
+  * [[Session]] at test size (4 threads over sf0.001). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      s"/tmp/graft_warehouse_${sys.props.getOrElse("user.name", "ci")}")
-    .getOrCreate()
-
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  lazy val spark: SparkSession = Session.start(4, sf, "spec")
 }

@@ -36,14 +36,17 @@ import org.apache.spark.sql.execution.joins.CartesianProductExec
 class PlanShapeSpec extends SparkSpec {
 
   // AQE off: assert on the static plan, not the runtime-replanned one.
-  // preferSortMergeJoin=false mirrors the Bench/Verify session (opt r14)
-  // so the pinned shapes describe the benched configuration — exchange
-  // budgets are join-strategy-invariant (SMJ→SHJ swaps sorts for a hash
-  // build, never an exchange), so the audited counts carry over.
+  // Everything else is the certified session, preferSortMergeJoin=false
+  // (opt r14) included — exchange budgets are join-strategy-invariant
+  // (SMJ→SHJ swaps sorts for a hash build, never an exchange), so the
+  // audited counts carry over.
+  // Fresh memos: the CacheManager is shared across sessions, so a memo an
+  // earlier spec cached in the AQE-on session would stand in for this
+  // session's own (static) build and change the pinned shape.
   private lazy val planSession: SparkSession = {
+    graft.queries.QueryCaches.clear()
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.join.preferSortMergeJoin", "false")
     s
   }
 
