@@ -10,6 +10,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
+    val e2eStart = System.nanoTime()
     // local-iteration filter (unset, the whole suite is benched):
     // comma-separated query names to re-measure after a targeted
     // change without paying the whole-suite wall clock
@@ -157,6 +158,7 @@ object Bench {
     // in-suite was exactly this artifact).
     val sharedBuilds = graft.queries.QueryCaches.sharedBuilds
     val metrics = suite.close()
+    val e2eWall = (System.nanoTime() - e2eStart) / 1e9
     val errors = suite.errors
     def num(v: Double): JValue =
       JDecimal(BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP))
@@ -198,14 +200,19 @@ object Bench {
     // "metrics" holds each query's Spark work per timed run (jobs,
     // stages, tasks, task run/CPU/GC seconds, shuffle and spill bytes) —
     // the per-layer split of its row, from every timed run, never the
-    // warmup.
+    // warmup; "e2e_wall" is the wall clock a user pays for the whole run,
+    // from suite construction (session start) to close, shared-memo builds,
+    // warmups and re-measures included — "total" sums only the kept rows.
     // Schema note for the artifact: {full_queries, medians, stat, errors,
     // load, load_summary, shared_builds, retried, retried_kept,
     // drift_retried, drift_flagged, memo_evicted, metrics, total,
-    // n_queries, failed, sf}.
+    // e2e_wall, n_queries, failed, sf}.
     val loadSummary = Seq("start" -> loadStart, "end" -> loadEnd, "max" -> loadMax)
     val sorted = results.toSeq.sortBy(_._1)
-    try Files.write(Paths.get(outFile), json(
+    // a failed write is reported (path + error on stderr, non-zero exit
+    // after the metric line) — a run must never look complete while its
+    // artifact is missing or stale
+    val writeError = try { Files.write(Paths.get(outFile), json(
       "full_queries" -> nums(sorted),
       "medians" -> nums(medians.toSeq.sortBy(_._1)),
       "stat" -> JString("min"),
@@ -222,10 +229,13 @@ object Bench {
         n -> nums(metrics(n).map { case (k, v) => k -> v / timedRuns(n) })
       }.toList),
       "total" -> num(total),
+      "e2e_wall" -> num(e2eWall),
       "n_queries" -> JInt(results.size),
       "failed" -> JInt(errors.size),
-      "sf" -> JString(sfDir)).getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+      "sf" -> JString(sfDir)).getBytes("UTF-8")); None }
+    catch { case e: Throwable => Some(e) }
+    writeError.foreach(e => System.err.println(
+      s"BENCH: could not write ${new java.io.File(outFile).getAbsolutePath}: $e"))
     println(json("metric" -> JString("total"), "value" -> num(total),
       "unit" -> JString("sec"), "n_queries" -> JInt(results.size),
       "failed" -> JInt(errors.size), "retried" -> JInt(retried),
@@ -239,5 +249,6 @@ object Bench {
     if (errors.nonEmpty) {
       System.err.println(s"BENCH: ${errors.size} queries FAILED: ${errors.keys.mkString(", ")}")
     }
+    if (writeError.isDefined) sys.exit(1)
   }
 }

@@ -3,11 +3,9 @@ package graft
 import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * `queries` maps one entry per implemented operator from SURVEY.md §2 (plus
-  * the training-data extension operators); `oracleSql` carries the DuckDB
-  * twin for every SQL-expressible entry. Column aliases match pairwise, and
+/** Driver contract (SURVEY.md §7): `queries` maps every registered query
+  * name to its Spark body and `oracleSql` maps it to its DuckDB twin, both
+  * derived once from [[registrations]]. Column aliases match pairwise, and
   * both sides order by a unique key so the hash compare is order-safe.
   */
 object SparkEntry {
@@ -17,26 +15,23 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ParityQueries.queries("q_sample_filtered_strat")(spark, "/root/testdata/sf0.001")
 
-  /** One (queries, oracleSql) pair per query file; [[queries]] and
-    * [[oracleSql]] are their unions. */
-  def registries: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
-    Seq(
-      ParityQueries.queries -> ParityQueries.oracleSql,
-      TextQueries.queries -> TextQueries.oracleSql,
-      DedupQueries.queries -> DedupQueries.oracleSql,
-      SimilarityQueries.queries -> SimilarityQueries.oracleSql,
-      MultimodalQueries.queries -> MultimodalQueries.oracleSql,
-      EngineQueries.queries -> EngineQueries.oracleSql,
-      AnalyticsQueries.queries -> AnalyticsQueries.oracleSql,
-      EvalQueries.queries -> EvalQueries.oracleSql,
-      DataQualityQueries.queries -> DataQualityQueries.oracleSql,
-      StatsQueries.queries -> StatsQueries.oracleSql,
-      MonitorQueries.queries -> MonitorQueries.oracleSql,
-      StreamTwinQueries.queries -> StreamTwinQueries.oracleSql,
-      PipelineQueries.queries -> PipelineQueries.oracleSql)
+  /** Each query file's registrations, one list per file. */
+  lazy val registries: Seq[Seq[Q]] = Seq(
+    ParityQueries.registry, TextQueries.registry, DedupQueries.registry,
+    SimilarityQueries.registry, MultimodalQueries.registry,
+    EngineQueries.registry, AnalyticsQueries.registry, EvalQueries.registry,
+    DataQualityQueries.registry, StatsQueries.registry,
+    MonitorQueries.registry, StreamTwinQueries.registry,
+    PipelineQueries.registry)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registries.map(_._1).reduce(_ ++ _)
+  /** Every query file's registrations, listed once. */
+  lazy val registrations: Seq[Q] = registries.flatten
 
-  def oracleSql: Map[String, String] = registries.map(_._2).reduce(_ ++ _)
+  /** Bodies and oracle twins by name, derived once from [[registrations]];
+    * [[Q.index]] fails on a duplicate name or an empty oracle. */
+  lazy val (queries, oracleSql) = {
+    val byName = Q.index(registrations)
+    (byName.map { case (n, q) => n -> q.build },
+      byName.map { case (n, q) => n -> q.oracle })
+  }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Distributed exact triangle counting.
   *
@@ -82,7 +83,15 @@ object Graph {
     // size(array_intersect), spec-pinned in IntersectExpressionsSpec)
     // cast("long") keeps integer-typed node ids working: the merge-count
     // expression requires array<bigint>, and the old array_intersect path
-    // accepted any element type (ADVICE r13 — no-op for long ids)
+    // accepted any element type (ADVICE r13 — no-op for long ids). Only
+    // integral ids may take it: a non-numeric id would cast to NULL, which
+    // collect_list drops, and the count would come out short with no error
+    for (c <- Seq("s", "t")) dir.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case other => throw new IllegalArgumentException(
+        s"countOriented: node id column '$c' has type ${other.simpleString}; " +
+          "ids must be integral (tinyint, smallint, int or bigint)")
+    }
     val adj = dir.groupBy(col("s"))
       .agg(array_sort(collect_list(col("t").cast("long"))).as("nbrs"))
     val tri = dir
@@ -202,14 +211,5 @@ object Graph {
         dist = dist.localCheckpoint()
     }
     dist
-  }
-
-  /** Convenience one-shot count over a raw (possibly messy) edge list —
-    * duplicates, reversed orientations, and self-loops normalize away.
-    * For repeated/benchmarked use, persist the intermediate stages (see
-    * class doc). */
-  def triangleCount(edges: DataFrame, u: String, v: String): DataFrame = {
-    val e = canonicalEdges(edges, u, v)
-    countOriented(orient(e), e)
   }
 }

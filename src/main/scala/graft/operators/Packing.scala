@@ -25,8 +25,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 object Packing {
 
   /** Append `binCol` = floor(exclusive running token total / budget) in
-    * `orderCol` order. `tokensCol` must be non-negative; `orderCol` unique
-    * for a deterministic layout. */
+    * `orderCol` order. `tokensCol` must be non-null and non-negative (a
+    * NULL fails the job, naming the column); `orderCol` unique for a
+    * deterministic layout. */
   def packByBudget(df: DataFrame, orderCol: Column, tokensCol: Column,
                    budget: Long, binCol: String = "bin"): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
@@ -53,10 +54,14 @@ object Packing {
     // via a JoinedRow the downstream scan node projects to unsafe format.
     val rdd = sorted.queryExecution.toRdd
     // pass 1: per-partition token totals → exclusive partition offsets
+    val tokName = tokensCol.toString
     val totals = rdd
       .mapPartitionsWithIndex { (pid, it) =>
         var s = 0L
-        it.foreach(r => s += r.getLong(tokIdx))
+        it.foreach { r =>
+          StableIds.requireNonNull(r, tokIdx, "packByBudget", tokName)
+          s += r.getLong(tokIdx)
+        }
         Iterator((pid, s))
       }.collect().sortBy(_._1).map(_._2)
     val offsets = totals.scanLeft(0L)(_ + _)

@@ -38,21 +38,6 @@ object Skew {
       .select(col("__key"), col("n"))
   }
 
-  /** Salted exact sum per key (same two-phase shape; sum is associative so
-    * partial-of-partials is exact; same content-salt contract as
-    * [[saltedCount]]). */
-  def saltedSum(df: DataFrame, key: Column, value: Column,
-                saltFrom: Seq[Column], buckets: Int): DataFrame = {
-    require(buckets > 0, s"buckets must be positive, got $buckets")
-    require(saltFrom.nonEmpty, "saltFrom must name at least one content column")
-    val salted = df.groupBy(key.as("__key"),
-        pmod(xxhash64(saltFrom: _*), lit(buckets.toLong)).as("__salt"))
-      .agg(sum(value).as("__partial"))
-    salted.groupBy(col("__key"))
-      .agg(sum(col("__partial")).as("total"))
-      .select(col("__key"), col("total"))
-  }
-
   /** Salted equi-join for a skewed LEFT side: each left row gets a
     * content-derived salt in [0, buckets); the right side is REPLICATED
     * once per salt value; the join runs on (key, salt). A left key holding

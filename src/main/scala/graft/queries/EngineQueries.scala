@@ -121,9 +121,9 @@ object EngineQueries {
         .agg(count(lit(1)).as("deg"))
     }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val registry: Seq[Q] = Seq(
     // TPC-H Q1-style pricing summary: single hash aggregate, map-side combine
-    "q_eng_pricing_summary" -> ((s, d) =>
+    Q("q_eng_pricing_summary", (s, d) =>
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -133,11 +133,20 @@ object EngineQueries {
             .as("sum_disc_price"),
           count(lit(1)).as("count_order"))
         .withColumn("avg_qty", col("sum_qty") / col("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")),
+        .orderBy("l_returnflag", "l_linestatus"),
+      s"""SELECT l_returnflag, l_linestatus,
+                 ${sqlMoneySum("l_quantity")} AS sum_qty,
+                 ${sqlMoneySum("l_extendedprice")} AS sum_base_price,
+                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS sum_disc_price,
+                 count(*) AS count_order,
+                 ${sqlMoneySum("l_quantity")} / count(*) AS avg_qty
+          FROM lineitem
+          GROUP BY l_returnflag, l_linestatus
+          ORDER BY l_returnflag, l_linestatus"""),
 
     // revenue per nation: fact table joined to broadcast dimensions —
     // customer/nation/region never shuffle the orders side
-    "q_eng_join_nation_revenue" -> ((s, d) =>
+    Q("q_eng_join_nation_revenue", (s, d) =>
       Tables.orders(s, d)
         .join(broadcast(Tables.customer(s, d)),
           col("o_custkey") === col("c_custkey"))
@@ -148,23 +157,35 @@ object EngineQueries {
         .groupBy(col("r_name"), col("n_name"))
         .agg(count(lit(1)).as("n_orders"),
           moneySum(col("o_totalprice")).as("revenue"))
-        .orderBy("r_name", "n_name")),
+        .orderBy("r_name", "n_name"),
+      s"""SELECT r_name, n_name, count(*) AS n_orders,
+                 ${sqlMoneySum("o_totalprice")} AS revenue
+          FROM orders
+          JOIN customer ON o_custkey = c_custkey
+          JOIN nation ON c_nationkey = n_nationkey
+          JOIN region ON n_regionkey = r_regionkey
+          GROUP BY r_name, n_name
+          ORDER BY r_name, n_name"""),
 
     // revenue per part brand: lineitem ⋈ broadcast(part)
-    "q_eng_join_brand_revenue" -> ((s, d) =>
+    Q("q_eng_join_brand_revenue", (s, d) =>
       Tables.lineitem(s, d)
         .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand"))
         .agg(count(lit(1)).as("n_items"),
           moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
             .as("revenue"))
-        .orderBy("p_brand")),
+        .orderBy("p_brand"),
+      s"""SELECT p_brand, count(*) AS n_items,
+                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
+          FROM lineitem JOIN part ON l_partkey = p_partkey
+          GROUP BY p_brand ORDER BY p_brand"""),
 
     // weekday seasonality: order volume + revenue share per weekday.
     // The weekday derives from an anchor-Monday day difference with a
     // sign-safe double mod — engine-independent (no dayofweek() calendar
     // convention mismatch); shares are integer ppm on the 7-row table
-    "q_eng_weekday_seasonality" -> ((s, d) => {
+    Q("q_eng_weekday_seasonality", (s, d) => {
       val o = Tables.orders(s, d)
         .select(pmod(datediff(col("o_orderdate"),
             to_date(lit("1995-01-02"))).cast("long"), lit(7L)).as("dow"),
@@ -177,7 +198,21 @@ object EngineQueries {
         .select(col("dow"), col("n_orders"), col("revenue"),
           expr("n_orders * 1000000 DIV nt").as("share_ppm"))
         .orderBy("dow")
-    }),
+    },
+      s"""WITH o AS (
+            SELECT ((datediff('day', TIMESTAMP '1995-01-02', o_orderdate) % 7)
+                    + 7) % 7 AS dow,
+                   o_totalprice
+            FROM orders),
+          t AS (SELECT CAST(count(*) AS BIGINT) AS nt FROM o),
+          g AS (
+            SELECT CAST(dow AS BIGINT) AS dow,
+                   CAST(count(*) AS BIGINT) AS n_orders,
+                   ${sqlMoneySum("o_totalprice")} AS revenue
+            FROM o GROUP BY 1)
+          SELECT dow, n_orders, revenue,
+                 CAST(n_orders * 1000000 // t.nt AS BIGINT) AS share_ppm
+          FROM g, t ORDER BY dow"""),
 
     // revenue Lorenz curve: cumulative revenue share of customer deciles
     // (ranked richest-first) — the concentration profile behind the Gini
@@ -191,7 +226,7 @@ object EngineQueries {
     // same class as Packing's per-partition offsets) and the cumulative
     // prefix runs on the driver — one distributed pass total, no window,
     // no self-join recompute
-    "q_eng_lorenz" -> ((s, d) => {
+    Q("q_eng_lorenz", (s, d) => {
       val rev = Tables.orders(s, d)
         .groupBy(col("o_custkey"))
         .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
@@ -217,13 +252,42 @@ object EngineQueries {
         .select(col("decile"), col("n_customers"),
           ppmWide(col("cum"), lit(tc)).as("cum_share_ppm"))
         .orderBy("decile")
-    }),
+    },
+      """WITH r AS (
+           SELECT o_custkey,
+                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+                    AS BIGINT) AS cents
+           FROM orders GROUP BY 1),
+         n AS (SELECT CAST(count(*) AS BIGINT) AS nc FROM r),
+         rk AS (
+           SELECT cents,
+                  CAST(row_number() OVER (ORDER BY cents DESC, o_custkey)
+                    AS BIGINT) AS rk
+           FROM r),
+         dec AS (
+           SELECT (rk - 1) * 10 // nc AS decile, cents FROM rk, n),
+         pd AS (
+           SELECT CAST(decile AS BIGINT) AS decile,
+                  CAST(count(*) AS BIGINT) AS n_customers,
+                  CAST(sum(cents) AS BIGINT) AS dc
+           FROM dec GROUP BY 1),
+         t AS (SELECT CAST(sum(dc) AS BIGINT) AS tc FROM pd),
+         c AS (
+           SELECT decile, n_customers,
+                  CAST(sum(dc) OVER (ORDER BY decile
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                    AS BIGINT) AS cum
+           FROM pd)
+         SELECT decile, n_customers,
+                CAST(CAST(cum AS HUGEINT) * 1000000 // CAST(t.tc AS HUGEINT)
+                  AS BIGINT) AS cum_share_ppm
+         FROM c, t ORDER BY decile"""),
 
     // inter-order gap histogram: per-customer lag() on the customer
     // shuffle gives consecutive-order gaps; the weekly histogram
     // partial-aggregates on a handful of bucket keys — the re-purchase
     // cadence profile behind retention/LTV models
-    "q_eng_order_gaps" -> ((s, d) => {
+    Q("q_eng_order_gaps", (s, d) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
       Tables.orders(s, d)
@@ -234,7 +298,17 @@ object EngineQueries {
         .groupBy(expr("gap_days DIV 7").as("gap_week"))
         .agg(count(lit(1)).as("n_gaps"))
         .orderBy("gap_week")
-    }),
+    },
+      """WITH g AS (
+           SELECT datediff('day',
+                    lag(o_orderdate) OVER (PARTITION BY o_custkey
+                      ORDER BY o_orderdate, o_orderkey),
+                    o_orderdate) AS gap_days
+           FROM orders)
+         SELECT CAST(gap_days // 7 AS BIGINT) AS gap_week,
+                CAST(count(*) AS BIGINT) AS n_gaps
+         FROM g WHERE gap_days IS NOT NULL
+         GROUP BY 1 ORDER BY gap_week"""),
 
     // market-basket association pairs: co-purchase support ≥ 3 with
     // exact integer-ppm lift (support·N / (cnt_a·cnt_b)) — the
@@ -242,7 +316,7 @@ object EngineQueries {
     // projection the graph queries share. Pair generation is the
     // per-order self-join (bounded by basket size, not corpus), counts
     // partial-aggregate on the pair key
-    "q_eng_basket_pairs" -> ((s, d) => {
+    Q("q_eng_basket_pairs", (s, d) => {
       // op is consumed four times (both self-join sides, part counts,
       // order count): materialize the distinct once instead of re-running
       // the lineitem scan + distinct per reference (opt r13, guide §2.4;
@@ -283,7 +357,23 @@ object EngineQueries {
           mulDivWide(wide(col("support")) * lit(1000000L), col("n"),
             wide(col("ca")) * wide(col("cb"))).as("lift_ppm"))
         .orderBy("pa", "pb")
-    }),
+    },
+      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+                     FROM lineitem),
+         pr AS (SELECT a.p AS pa, b.p AS pb, CAST(count(*) AS BIGINT) AS support
+                FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
+                GROUP BY 1, 2 HAVING count(*) >= 3),
+         c AS (SELECT p, CAST(count(*) AS BIGINT) AS c FROM op GROUP BY 1),
+         n AS (SELECT CAST(count(DISTINCT o) AS BIGINT) AS n FROM op)
+         SELECT pa, pb, support,
+                CAST(CAST(support AS HUGEINT) * n.n * 1000000
+                     // (CAST(ca.c AS HUGEINT) * cb.c) AS BIGINT)
+                  AS lift_ppm
+         FROM pr
+         JOIN c ca ON ca.p = pa
+         JOIN c cb ON cb.p = pb
+         CROSS JOIN n
+         ORDER BY pa, pb"""),
 
     // TPC-H Q7 shape: bilateral trade volume between two nations by ship
     // year. Both nation filters push into the TINY broadcast dims BEFORE
@@ -291,7 +381,7 @@ object EngineQueries {
     // each, so the only big work is lineitem ⋈ orders on orderkey (the
     // one unavoidable fact-fact shuffle) with both sides pre-filtered by
     // their broadcast joins
-    "q_eng_volume_shipping" -> ((s, d) => {
+    Q("q_eng_volume_shipping", (s, d) => {
       val nations = Seq("NATION_3", "NATION_7")
       val supN = broadcast(Tables.supplier(s, d)
         .join(broadcast(Tables.nation(s, d)
@@ -317,14 +407,32 @@ object EngineQueries {
           moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
             .as("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
-    }),
+    },
+      s"""SELECT supp_nation, cust_nation, l_year, count(*) AS n_lines,
+                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
+          FROM (
+            SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+                   CAST(year(l_shipdate) AS BIGINT) AS l_year,
+                   l_extendedprice, l_discount
+            FROM lineitem
+            JOIN supplier ON l_suppkey = s_suppkey
+            JOIN nation n1 ON s_nationkey = n1.n_nationkey
+            JOIN orders ON l_orderkey = o_orderkey
+            JOIN customer ON o_custkey = c_custkey
+            JOIN nation n2 ON c_nationkey = n2.n_nationkey
+            WHERE year(l_shipdate) IN (1995, 1996)
+              AND n1.n_name IN ('NATION_3', 'NATION_7')
+              AND n2.n_name IN ('NATION_3', 'NATION_7')
+              AND n1.n_name <> n2.n_name)
+          GROUP BY 1, 2, 3
+          ORDER BY supp_nation, cust_nation, l_year"""),
 
     // cumulative-peak drawdown over the daily revenue series: running
     // max then the largest peak-to-day gap — two windows over the
     // days-sized table (safe by construction), deterministic argmax via
     // (drawdown DESC, day DESC) ranking. The series-analytics shape
     // (drawdown/high-water-mark) on exact decimal-summed dailies
-    "q_eng_drawdown" -> ((s, d) => {
+    Q("q_eng_drawdown", (s, d) => {
       val daily = Tables.orders(s, d)
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(moneySum(col("o_totalprice")).as("rev"))
@@ -338,7 +446,23 @@ object EngineQueries {
         .where(col("rk") === 1)
         .select(col("day").cast("string").as("trough_day"),
           col("dd").as("max_drawdown"), col("run_max").as("peak_rev"))
-    }),
+    },
+      s"""WITH daily AS (
+           SELECT CAST(o_orderdate AS DATE) AS day,
+                  ${sqlMoneySum("o_totalprice")} AS rev
+           FROM orders GROUP BY 1),
+         r AS (
+           SELECT day, rev,
+                  max(rev) OVER (ORDER BY day
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_max
+           FROM daily),
+         d AS (SELECT day, run_max, run_max - rev AS dd FROM r),
+         k AS (SELECT day, run_max, dd,
+                      row_number() OVER (ORDER BY dd DESC, day DESC) AS rk
+               FROM d)
+         SELECT CAST(day AS VARCHAR) AS trough_day, dd AS max_drawdown,
+                run_max AS peak_rev
+         FROM k WHERE rk = 1"""),
 
     // exact weighted median per group via the bucket-pruned two-phase
     // operator: the naive per-group cumulative window would funnel the
@@ -346,14 +470,28 @@ object EngineQueries {
     // bucket aggregate, phase 2 windows only the crossing bucket's rows
     // with the carried weight offset. The oracle runs the NAIVE window
     // formulation — hash equality proves the rewrite exact
-    "q_eng_weighted_median" -> ((s, d) =>
+    Q("q_eng_weighted_median", (s, d) =>
       graft.operators.WeightedMedian.weightedMedian(
           Tables.lineitem(s, d),
           grp = col("l_returnflag"), v = col("l_extendedprice"),
           wt = col("l_quantity"),
           ord = struct(col("l_orderkey"), col("l_linenumber")),
           bucketWidth = 1000.0)
-        .orderBy("grp")),
+        .orderBy("grp"),
+      """WITH li AS (
+           SELECT l_returnflag AS grp, l_extendedprice AS v,
+                  CAST(l_quantity AS BIGINT) AS wt, l_orderkey, l_linenumber
+           FROM lineitem),
+         c AS (
+           SELECT grp, v,
+                  CAST(sum(wt) OVER (PARTITION BY grp
+                    ORDER BY v, l_orderkey, l_linenumber) AS BIGINT) AS cw
+           FROM li),
+         t AS (SELECT grp, CAST(sum(wt) AS BIGINT) AS tw FROM li GROUP BY 1)
+         SELECT c.grp, min_by(v, cw) AS w_median, min(tw) AS total_weight
+         FROM c JOIN t ON c.grp = t.grp
+         WHERE cw * 2 >= tw
+         GROUP BY 1 ORDER BY c.grp"""),
 
     // cumulative distinct users per day WITHOUT a running COUNT(DISTINCT):
     // a user contributes once, on their first-seen day, so the running
@@ -361,7 +499,7 @@ object EngineQueries {
     // first-seen trick that turns an unbounded-state running distinct
     // into one aggregate + a days-sized window (the shape incremental
     // metrics pipelines maintain at any scale)
-    "q_eng_running_distinct" -> ((s, d) => {
+    Q("q_eng_running_distinct", (s, d) => {
       val firstSeen = Tables.events(s, d)
         .select(col("user_id"), to_date(col("ts")).as("day"))
         .groupBy(col("user_id")).agg(min(col("day")).as("day"))
@@ -373,7 +511,15 @@ object EngineQueries {
         .select(col("day").cast("string").as("day"), col("new_users"),
           col("cum_users"))
         .orderBy("day")
-    }),
+    },
+      """WITH f AS (
+           SELECT user_id, min(CAST(ts AS DATE)) AS day
+           FROM events GROUP BY 1),
+         p AS (SELECT day, CAST(count(*) AS BIGINT) AS new_users
+               FROM f GROUP BY 1)
+         SELECT CAST(day AS VARCHAR) AS day, new_users,
+                CAST(sum(new_users) OVER (ORDER BY day) AS BIGINT) AS cum_users
+         FROM p ORDER BY day"""),
 
     // interval-union coverage per supplier: total distinct days with at
     // least one open line ([order date, ship date]) plus the peak
@@ -382,7 +528,7 @@ object EngineQueries {
     // the window, so each supplier's running sum scans its distinct
     // boundary days, not its rows; one orderkey equi-join of the two
     // fact tables, one window shuffle on supplier
-    "q_eng_interval_coverage" -> ((s, d) => {
+    Q("q_eng_interval_coverage", (s, d) => {
       val iv = Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
         .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_orderdate")),
@@ -412,7 +558,33 @@ object EngineQueries {
             .as("covered_days"),
           max(col("open")).as("peak_open"))
         .orderBy("supp")
-    }),
+    },
+      """WITH iv AS (
+           SELECT l_suppkey AS supp,
+                  CAST(datediff('day', TIMESTAMP '1995-01-01', o_orderdate)
+                    AS BIGINT) AS d0,
+                  CAST(datediff('day', TIMESTAMP '1995-01-01', l_shipdate)
+                    AS BIGINT) + 1 AS d1
+           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+           WHERE l_shipdate >= o_orderdate),
+         ev AS (
+           SELECT supp, day, CAST(sum(delta) AS BIGINT) AS delta FROM (
+             SELECT supp, d0 AS day, 1 AS delta FROM iv
+             UNION ALL
+             SELECT supp, d1 AS day, -1 AS delta FROM iv)
+           GROUP BY 1, 2),
+         run AS (
+           SELECT supp, day,
+                  CAST(sum(delta) OVER (PARTITION BY supp ORDER BY day)
+                    AS BIGINT) AS open,
+                  lead(day) OVER (PARTITION BY supp ORDER BY day) AS next_day
+           FROM ev)
+         SELECT supp,
+                CAST(sum(CASE WHEN open > 0 AND next_day IS NOT NULL
+                              THEN next_day - day ELSE 0 END) AS BIGINT)
+                  AS covered_days,
+                CAST(max(open) AS BIGINT) AS peak_open
+         FROM run GROUP BY 1 ORDER BY supp"""),
 
     // key-skew diagnostic: the profile a pipeline runs BEFORE choosing a
     // partitioning/salting strategy. Per-key counts reduce the data to a
@@ -422,7 +594,7 @@ object EngineQueries {
     // limit (per-partition top-10, merged on the driver) — no
     // single-partition window anywhere. Gini via the rank formula
     // G = (2·Σi·cᵢ − (n+1)·S)/(n·S) over counts ranked ascending
-    "q_eng_skew_report" -> ((s, d) => {
+    Q("q_eng_skew_report", (s, d) => {
       val counts = Tables.orders(s, d)
         .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
       val base = graft.operators.StableIds.withRank(counts,
@@ -451,7 +623,29 @@ object EngineQueries {
               - wide(col("n_keys") + lit(1L)) * wide(col("total")),
             lit(1000000L),
             wide(col("n_keys")) * wide(col("total"))).as("gini_ppm"))
-    }),
+    },
+      """WITH c AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS cnt
+                    FROM orders GROUP BY 1),
+         r AS (SELECT cnt, o_custkey,
+                      CAST(row_number() OVER (ORDER BY cnt ASC, o_custkey ASC)
+                        AS BIGINT) AS i,
+                      CAST(row_number() OVER (ORDER BY cnt DESC, o_custkey ASC)
+                        AS BIGINT) AS r
+               FROM c),
+         a AS (SELECT CAST(count(*) AS BIGINT) AS n_keys,
+                      CAST(sum(cnt) AS BIGINT) AS total,
+                      CAST(max(cnt) AS BIGINT) AS max_cnt,
+                      CAST(sum(CASE WHEN r <= 10 THEN cnt ELSE 0 END) AS BIGINT)
+                        AS top10,
+                      CAST(sum(i * cnt) AS BIGINT) AS sic
+               FROM r)
+         SELECT n_keys, total, max_cnt,
+                CAST(CAST(top10 AS HUGEINT) * 1000000
+                     // CAST(total AS HUGEINT) AS BIGINT) AS top10_share_ppm,
+                CAST((2 * CAST(sic AS HUGEINT) - (n_keys + 1) * CAST(total AS HUGEINT))
+                     * 1000000
+                     // (CAST(n_keys AS HUGEINT) * total) AS BIGINT) AS gini_ppm
+         FROM a"""),
 
     // Horvitz–Thompson total estimation from a deterministic hash
     // sample: include a row iff its md5 16-bit bucket < 6554, an EXACT
@@ -460,7 +654,7 @@ object EngineQueries {
     // hash-driven, reproducible on any partitioning/retry. The full-scan
     // truth rides along as the audit column; the sample-only estimate is
     // what a 100 TB pipeline would compute
-    "q_eng_ht_estimate" -> ((s, d) => {
+    Q("q_eng_ht_estimate", (s, d) => {
       val o = Tables.orders(s, d).withColumn("b",
         conv(substring(md5(col("o_orderkey").cast("string")), 1, 4), 16, 10)
           .cast("long"))
@@ -471,7 +665,21 @@ object EngineQueries {
               .cast("decimal(18,6)"))) *
             (lit(65536.0) / lit(6554.0))).as("ht_total"),
           moneySum(col("o_totalprice")).as("true_total"))
-    }),
+    },
+      s"""WITH o AS (
+           SELECT o_totalprice,
+                  CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 4)
+                    AS BIGINT) AS b
+           FROM orders)
+         SELECT CAST(count(CASE WHEN b < 6554 THEN 1 END) AS BIGINT) AS n_sampled,
+                ${graft.functions.WideDiv.sqlDecSumToDouble(
+                  "sum(CASE WHEN b < 6554 THEN " +
+                  "CAST(o_totalprice AS DECIMAL(18,6)) END)")}
+                  * (65536.0 / 6554.0) AS ht_total,
+                ${graft.functions.WideDiv.sqlDecSumToDouble(
+                  "sum(CAST(o_totalprice AS DECIMAL(18,6)))")}
+                  AS true_total
+         FROM o"""),
 
     // per-group OLS regression (order value vs order date) from exact
     // moment sums: integer x/x² sums, integer-CENTS y/xy sums in
@@ -485,7 +693,7 @@ object EngineQueries {
     // engines; the ÷100.0 after it is a single identical IEEE op. One
     // partial-aggregable shuffle; the moments pattern is the distributed
     // featurization primitive (same shape as corr/variance)
-    "q_eng_group_ols" -> ((s, d) => {
+    Q("q_eng_group_ols", (s, d) => {
       val o = Tables.orders(s, d).select(
         col("o_orderpriority").as("grp"),
         datediff(col("o_orderdate"), to_date(lit("1995-01-01"))).cast("long").as("x"),
@@ -507,13 +715,36 @@ object EngineQueries {
             col("n").cast("double"))
         .select("grp", "n", "slope", "intercept")
         .orderBy("grp")
-    }),
+    },
+      """WITH o AS (
+           SELECT o_orderpriority AS grp,
+                  CAST(datediff('day', TIMESTAMP '1995-01-01', o_orderdate)
+                    AS BIGINT) AS x,
+                  CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS yc
+           FROM orders),
+         m AS (
+           SELECT grp, CAST(count(*) AS BIGINT) AS n,
+                  CAST(sum(x) AS BIGINT) AS sx,
+                  CAST(sum(x * x) AS BIGINT) AS sxx,
+                  CAST(sum(CAST(yc AS DECIMAL(38,0))) AS DOUBLE) / 100.0 AS sy,
+                  CAST(sum(CAST(x * yc AS DECIMAL(38,0))) AS DOUBLE) / 100.0
+                    AS sxy
+           FROM o GROUP BY 1),
+         s AS (
+           SELECT grp, n, sx, sy,
+                  (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
+                    / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+                       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS slope
+           FROM m)
+         SELECT grp, n, slope,
+                (sy - slope * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE) AS intercept
+         FROM s ORDER BY grp"""),
 
     // TPC-H Q4 shape: priority histogram of orders with at least one
     // long-latency line. The EXISTS decorrelates to a LEFT SEMI join
     // whose condition carries the cross-table date predicate — the fact
     // table is touched once, no count-then-filter detour
-    "q_eng_order_priority" -> ((s, d) =>
+    Q("q_eng_order_priority", (s, d) =>
       Tables.orders(s, d)
         .join(Tables.lineitem(s, d),
           col("o_orderkey") === col("l_orderkey") &&
@@ -521,7 +752,14 @@ object EngineQueries {
           "leftsemi")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"))
-        .orderBy("o_orderpriority")),
+        .orderBy("o_orderpriority"),
+      // textbook correlated EXISTS — independent of the Spark semi join
+      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
+         FROM orders
+         WHERE EXISTS (SELECT 1 FROM lineitem
+                       WHERE l_orderkey = o_orderkey
+                         AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
+         GROUP BY 1 ORDER BY 1"""),
 
     // TPC-H Q17 shape: revenue from small-quantity lines of one brand,
     // threshold = half the part's average quantity. The correlated scalar
@@ -529,7 +767,7 @@ object EngineQueries {
     // l_partkey shuffle the filter runs on — one exchange, no agg+rejoin
     // of the fact table. Exact decimal accumulation makes the avg (and so
     // the comparison) bit-stable across engines
-    "q_eng_small_qty_revenue" -> ((s, d) => {
+    Q("q_eng_small_qty_revenue", (s, d) => {
       val pw = Window.partitionBy("l_partkey")
       Tables.lineitem(s, d)
         .join(broadcast(
@@ -543,13 +781,25 @@ object EngineQueries {
         .where(col("l_quantity") < lit(0.5) * col("avg_qty"))
         .agg(count(lit(1)).as("n_lines"),
           (moneySum(col("l_extendedprice")) / lit(7.0)).as("avg_yearly"))
-    }),
+    },
+      s"""WITH b AS (
+           SELECT l_partkey, l_quantity, l_extendedprice,
+                  ${graft.functions.WideDiv.sqlDecSumToDouble(
+                    "sum(CAST(l_quantity AS DECIMAL(18,6))) " +
+                    "OVER (PARTITION BY l_partkey)")}
+                    / count(*) OVER (PARTITION BY l_partkey) AS avg_qty
+           FROM lineitem JOIN part ON l_partkey = p_partkey
+           WHERE p_brand = 'Brand#11')
+         SELECT CAST(count(*) AS BIGINT) AS n_lines,
+                ${sqlMoneySum("l_extendedprice")} / 7.0
+                  AS avg_yearly
+         FROM b WHERE l_quantity < 0.5 * avg_qty"""),
 
     // TPC-H Q19 shape: disjunctive OR-of-ANDs over part attributes ×
     // line quantities. The brand/size legs push into the broadcast part
     // scan; the quantity bounds (the union of the three legs) push to
     // the lineitem scan — the OR does not force a full-scan join
-    "q_eng_disjunctive" -> ((s, d) =>
+    Q("q_eng_disjunctive", (s, d) =>
       Tables.lineitem(s, d)
         .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
         .where(
@@ -561,7 +811,16 @@ object EngineQueries {
             col("l_quantity").between(20, 30)))
         .agg(count(lit(1)).as("n_lines"),
           moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("revenue"))),
+            .as("revenue")),
+      s"""SELECT CAST(count(*) AS BIGINT) AS n_lines,
+                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
+          FROM lineitem JOIN part ON l_partkey = p_partkey
+          WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
+                 AND l_quantity BETWEEN 1 AND 11)
+             OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
+                 AND l_quantity BETWEEN 10 AND 20)
+             OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
+                 AND l_quantity BETWEEN 20 AND 30)"""),
 
     // TPC-H Q21 shape: suppliers whose returned line is the ONLY return
     // in a multi-supplier order. The classic double EXISTS / NOT EXISTS
@@ -575,7 +834,7 @@ object EngineQueries {
     // (VERDICT r13 #7). One scan, one exchange, then a broadcast dim join
     // over order-count-sized rows (opt r14, guide §2.4); the oracle keeps
     // the textbook EXISTS form, so equality proves the rewrite
-    "q_eng_waiting_supplier" -> ((s, d) => {
+    Q("q_eng_waiting_supplier", (s, d) => {
       val li = Tables.lineitem(s, d)
       // two-level aggregate instead of countDistinct: the multi-distinct
       // form Expands the corpus-sized scan (×2 in r13, ×3 with the
@@ -597,13 +856,27 @@ object EngineQueries {
         .agg(count(lit(1)).as("numwait"))
         .orderBy(col("numwait").desc, col("s_name"))
         .limit(20)
-    }),
+    },
+      // textbook double EXISTS / NOT EXISTS — proves the Spark side's
+      // per-order aggregate rewrite
+      """WITH r AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
+                    WHERE l_returnflag = 'R'),
+         a AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem)
+         SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
+         FROM r JOIN supplier ON r.l_suppkey = s_suppkey
+         WHERE EXISTS (SELECT 1 FROM a
+                       WHERE a.l_orderkey = r.l_orderkey
+                         AND a.l_suppkey <> r.l_suppkey)
+           AND NOT EXISTS (SELECT 1 FROM r r2
+                           WHERE r2.l_orderkey = r.l_orderkey
+                             AND r2.l_suppkey <> r.l_suppkey)
+         GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 20"""),
 
     // TPC-H Q3-style shipping priority: urgent orders placed before the
     // cutoff with lines still unshipped at the cutoff, top-10 by pending
     // revenue — a 2-way fact join (orders filter pushed to its scan) + one
     // aggregation + TakeOrdered, no global sort
-    "q_eng_shipping_priority" -> ((s, d) => {
+    Q("q_eng_shipping_priority", (s, d) => {
       val cutoff = "1998-06-01"
       val o = Tables.orders(s, d)
         .where(col("o_orderpriority") === "1-URGENT" &&
@@ -617,13 +890,23 @@ object EngineQueries {
           .as("revenue"))
         .orderBy(col("revenue").desc, col("o_orderkey"))
         .limit(10)
-    }),
+    },
+      s"""WITH o AS (SELECT o_orderkey FROM orders
+                     WHERE o_orderpriority = '1-URGENT'
+                       AND o_orderdate < TIMESTAMP '1998-06-01'),
+          a AS (SELECT l_orderkey AS o_orderkey,
+                       ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
+                FROM lineitem JOIN o ON l_orderkey = o.o_orderkey
+                WHERE l_shipdate > TIMESTAMP '1998-06-01'
+                GROUP BY 1)
+          SELECT o_orderkey, revenue FROM a
+          ORDER BY revenue DESC, o_orderkey LIMIT 10"""),
 
     // SQL-surface demonstration: correlated scalar subquery + correlated
     // EXISTS through spark.sql — Catalyst decorrelates both into joins
     // (a left aggregate join and a semi join), so the "subquery per row"
     // never executes per row. The same text runs in DuckDB verbatim
-    "q_eng_sql_correlated" -> ((s, d) => {
+    Q("q_eng_sql_correlated", (s, d) => {
       Tables.orders(s, d).createOrReplaceTempView("orders_v")
       Tables.customer(s, d).createOrReplaceTempView("customer_v")
       s.sql("""
@@ -636,7 +919,16 @@ object EngineQueries {
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_totalprice > 400000)
         ORDER BY c_custkey""")
-    }),
+    },
+      """SELECT c_custkey, c_name,
+                (SELECT count(*) FROM orders o
+                 WHERE o.o_custkey = c.c_custkey
+                   AND o.o_orderpriority = '1-URGENT') AS n_urgent
+         FROM customer c
+         WHERE EXISTS (SELECT 1 FROM orders o
+                       WHERE o.o_custkey = c.c_custkey
+                         AND o.o_totalprice > 400000)
+         ORDER BY c_custkey"""),
 
     // TPC-H Q5-style local-supplier volume: the six-table join chain
     // (lineitem ⋈ orders ⋈ customer ⋈ supplier ⋈ nation ⋈ region) with
@@ -644,7 +936,7 @@ object EngineQueries {
     // broadcasts and the date selection prunes orders at its scan, so the
     // fact table flows through one pipeline without shuffling for any
     // join — the canonical star-join plan at warehouse scale
-    "q_eng_local_supplier" -> ((s, d) => {
+    Q("q_eng_local_supplier", (s, d) => {
       val o = Tables.orders(s, d)
         .where(col("o_orderdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
           col("o_orderdate") < lit("1997-01-01").cast("timestamp_ntz"))
@@ -663,12 +955,25 @@ object EngineQueries {
         .agg(moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("revenue"))
         .orderBy(col("revenue").desc, col("n_name"))
-    }),
+    },
+      s"""SELECT n_name,
+                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
+          FROM lineitem
+          JOIN orders ON l_orderkey = o_orderkey
+          JOIN customer ON o_custkey = c_custkey
+          JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+          JOIN nation ON s_nationkey = n_nationkey
+          JOIN region ON n_regionkey = r_regionkey
+          WHERE r_name = 'ASIA'
+            AND o_orderdate >= TIMESTAMP '1996-01-01'
+            AND o_orderdate < TIMESTAMP '1997-01-01'
+          GROUP BY n_name
+          ORDER BY revenue DESC, n_name"""),
 
     // TPC-H Q8-style market share: one supplier nation's slice of yearly
     // revenue — conditional decimal sums (exact) with a single final
     // double division; supplier/nation dimensions broadcast
-    "q_eng_market_share" -> ((s, d) => {
+    Q("q_eng_market_share", (s, d) => {
       val sup = Tables.supplier(s, d)
         .join(broadcast(Tables.nation(s, d)),
           col("s_nationkey") === col("n_nationkey"))
@@ -686,11 +991,26 @@ object EngineQueries {
           moneySum(dec).as("total_rev"))
         .withColumn("share", col("nation_rev") / col("total_rev"))
         .orderBy("o_year")
-    }),
+    },
+      s"""WITH sup AS (SELECT s_suppkey, n_name
+                       FROM supplier JOIN nation ON s_nationkey = n_nationkey),
+          a AS (SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
+                       ${graft.functions.WideDiv.sqlDecSumToDouble(
+                         "sum(CAST(CASE WHEN n_name = 'NATION_7' " +
+                         "THEN l_extendedprice * (1.0 - l_discount) " +
+                         "ELSE 0.0 END AS DECIMAL(18,6)))")} AS nation_rev,
+                       ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS total_rev
+                FROM lineitem
+                JOIN orders ON l_orderkey = o_orderkey
+                JOIN sup ON l_suppkey = s_suppkey
+                GROUP BY 1)
+          SELECT o_year, nation_rev, total_rev,
+                 nation_rev / total_rev AS share
+          FROM a ORDER BY o_year"""),
 
     // top-3 orders per customer by totalprice: rank window, shuffle on
     // o_custkey only (no global sort)
-    "q_eng_window_top_orders" -> ((s, d) => {
+    Q("q_eng_window_top_orders", (s, d) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       Tables.orders(s, d)
@@ -698,14 +1018,21 @@ object EngineQueries {
         .where(col("rn") <= 3)
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rn"))
         .orderBy("o_custkey", "rn")
-    }),
+    },
+      """SELECT o_custkey, o_orderkey, o_totalprice, rn
+         FROM (SELECT o_custkey, o_orderkey, o_totalprice,
+                      CAST(row_number() OVER
+                        (PARTITION BY o_custkey
+                         ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rn
+               FROM orders)
+         WHERE rn <= 3 ORDER BY o_custkey, rn"""),
 
     // window-function breadth over ONE exchange: quartile bucket (ntile),
     // relative position (percent_rank), and gap to the previous order (lag)
     // all share the (priority, price) sort — Catalyst folds the three into
     // a single Window operator, no extra shuffle per function. percent_rank
     // is (rank−1)/(n−1) on exact integers in both engines, bitwise safe
-    "q_eng_window_funcs" -> ((s, d) => {
+    Q("q_eng_window_funcs", (s, d) => {
       val w = Window.partitionBy(col("o_orderpriority"))
         .orderBy(col("o_totalprice"), col("o_orderkey"))
       Tables.orders(s, d)
@@ -715,21 +1042,31 @@ object EngineQueries {
         .withColumn("price_gap",
           col("o_totalprice") - lag(col("o_totalprice"), 1).over(w))
         .orderBy("o_orderkey")
-    }),
+    },
+      """SELECT o_orderkey, o_orderpriority, o_totalprice,
+                CAST(ntile(4) OVER w AS BIGINT) AS quartile,
+                percent_rank() OVER w AS pct_rank,
+                o_totalprice - lag(o_totalprice, 1) OVER w AS price_gap
+         FROM orders
+         WINDOW w AS (PARTITION BY o_orderpriority
+                      ORDER BY o_totalprice, o_orderkey)
+         ORDER BY o_orderkey"""),
 
     // two-phase salted aggregation — the oracle equality proves the salted
     // plan returns exactly the single-phase answer (skew story: hot keys
     // spread over 16 reducers in phase 1)
-    "q_eng_salted_count" -> ((s, d) =>
+    Q("q_eng_salted_count", (s, d) =>
       graft.operators.Skew.saltedCount(Tables.lineitem(s, d), col("l_returnflag"),
         Seq(col("l_orderkey"), col("l_linenumber")), 16)
         .select(col("__key").as("l_returnflag"), col("n"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      """SELECT l_returnflag, count(*) AS n FROM lineitem
+         GROUP BY l_returnflag ORDER BY l_returnflag"""),
 
     // salted equi-join (16 salt buckets, right side replicated): the
     // oracle runs the PLAIN join — equality proves the salted plan is
     // row-identical while spreading each hot key over 16 reducers
-    "q_eng_salted_join" -> ((s, d) =>
+    Q("q_eng_salted_join", (s, d) =>
       graft.operators.Skew.saltedJoin(
           Tables.lineitem(s, d).select("l_partkey", "l_extendedprice", "l_discount",
             "l_orderkey", "l_linenumber"),
@@ -741,7 +1078,11 @@ object EngineQueries {
         .agg(count(lit(1)).as("n_items"),
           moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
             .as("revenue"))
-        .orderBy("p_brand")),
+        .orderBy("p_brand"),
+      s"""SELECT p_brand, count(*) AS n_items,
+                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
+          FROM lineitem JOIN part ON l_partkey = p_partkey
+          GROUP BY p_brand ORDER BY p_brand"""),
 
     // bucketed-table layout, gated end-to-end (r11 verdict #1): orders
     // and lineitem are WRITTEN bucketed+sorted on orderkey (once per
@@ -754,7 +1095,7 @@ object EngineQueries {
     // the raw parquet, so equality also proves the bucketed write is
     // lossless. All money pre-quantized to integer cents; top-20 orders
     // by line revenue, tie-broken on key.
-    "q_eng_bucketed_join" -> ((s, d) => {
+    Q("q_eng_bucketed_join", (s, d) => {
       val (ot, lt) = ensureBucketed(s, d)
       graft.etl.Bucketing.readBucketed(s, ot)
         .join(graft.etl.Bucketing.readBucketed(s, lt), "o_orderkey")
@@ -765,7 +1106,22 @@ object EngineQueries {
           sum(col("l_cents")).as("sum_cents"))
         .orderBy(col("sum_cents").desc, col("o_orderkey"))
         .limit(20)
-    }),
+    },
+      // replays the bucketed join over the RAW parquet tables — equality
+      // proves the bucketed write+read round-trip is lossless and the
+      // zero-exchange plan computes the plain join's answer
+      """WITH j AS (
+           SELECT o.o_orderkey,
+                  CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS oc,
+                  CAST(floor(l.l_quantity + 0.5) AS BIGINT) AS qty,
+                  CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT) AS lc
+           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey)
+         SELECT o_orderkey, CAST(max(oc) AS BIGINT) AS o_cents,
+                CAST(count(*) AS BIGINT) AS n_items,
+                CAST(sum(qty) AS BIGINT) AS sum_qty,
+                CAST(sum(lc) AS BIGINT) AS sum_cents
+         FROM j GROUP BY o_orderkey
+         ORDER BY sum_cents DESC, o_orderkey LIMIT 20"""),
 
     // Bucket-count EVOLUTION (r12 verdict #3): the same join across
     // tables bucketed at DIFFERENT counts (orders@16 ⋈ lineitem@32).
@@ -776,7 +1132,7 @@ object EngineQueries {
     // against older layouts during a live bucket-count migration. Same
     // aggregate + oracle as q_eng_bucketed_join: equality also proves
     // the coalesced read loses no rows.
-    "q_eng_bucketed_join_coalesce" -> ((s, d) => {
+    Q("q_eng_bucketed_join_coalesce", (s, d) => {
       val (ot, _) = ensureBucketed(s, d)
       val lt32 = ensureBucketed32(s, d)
       // set WITHOUT restore, deliberately: physical planning is lazy (the
@@ -795,21 +1151,37 @@ object EngineQueries {
           sum(col("l_cents")).as("sum_cents"))
         .orderBy(col("sum_cents").desc, col("o_orderkey"))
         .limit(20)
-    }),
+    },
+      // identical replay: the mixed-bucket-count (16 ⋈ 32, coalesced) join
+      // must land exactly the raw-parquet join's answer
+      """WITH j AS (
+           SELECT o.o_orderkey,
+                  CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS oc,
+                  CAST(floor(l.l_quantity + 0.5) AS BIGINT) AS qty,
+                  CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT) AS lc
+           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey)
+         SELECT o_orderkey, CAST(max(oc) AS BIGINT) AS o_cents,
+                CAST(count(*) AS BIGINT) AS n_items,
+                CAST(sum(qty) AS BIGINT) AS sum_qty,
+                CAST(sum(lc) AS BIGINT) AS sum_cents
+         FROM j GROUP BY o_orderkey
+         ORDER BY sum_cents DESC, o_orderkey LIMIT 20"""),
 
     // HLL approximate distinct vs exact, asserted within 5% in-plan —
     // the boolean invariant is the cross-engine-checkable part
-    "q_eng_approx_distinct" -> ((s, d) =>
+    Q("q_eng_approx_distinct", (s, d) =>
       Tables.lineitem(s, d)
         .agg(countDistinct(col("l_partkey")).as("n_exact"),
           approx_count_distinct(col("l_partkey")).as("n_approx"))
         .select(col("n_exact"),
           (abs(col("n_approx") - col("n_exact")).cast("double") /
-            col("n_exact").cast("double") <= 0.05).as("within_5pct"))),
+            col("n_exact").cast("double") <= 0.05).as("within_5pct")),
+      """SELECT count(DISTINCT l_partkey) AS n_exact, true AS within_5pct
+         FROM lineitem"""),
 
     // as-of join: each event picks up the latest prior config row for its
     // type (config = every 97th event). Oracle is DuckDB's native ASOF JOIN
-    "q_eng_asof_join" -> ((s, d) => {
+    Q("q_eng_asof_join", (s, d) => {
       val events = Tables.events(s, d)
       val cfg = events.where(col("event_id") % 97 === 0)
         .select(col("event_type"), col("ts"), col("value").as("cfg_value"))
@@ -823,13 +1195,21 @@ object EngineQueries {
         payloadCols = Seq("cfg_value"), bucketMs = 86400L * 1000)
         .select("event_id", "event_type", "cfg_value")
         .orderBy("event_id")
-    }),
+    },
+      """WITH cfg AS (
+           SELECT event_type, ts, value AS cfg_value
+           FROM events WHERE event_id % 97 = 0)
+         SELECT l.event_id, l.event_type, r.cfg_value
+         FROM events l
+         ASOF LEFT JOIN cfg r
+           ON l.event_type = r.event_type AND l.ts >= r.ts
+         ORDER BY l.event_id"""),
 
     // mergeable-sketch rollup: per-day HLL sketches union-merged into one
     // estimate WITHOUT recounting raw rows — the pre-aggregation pattern
     // that makes distinct-count rollups O(sketches) at 100 TB. Oracle
     // contract = exact count + the 5% estimate invariant
-    "q_eng_hll_merge" -> ((s, d) => {
+    Q("q_eng_hll_merge", (s, d) => {
       val ev = Tables.events(s, d)
       val daily = ev.groupBy(to_date(col("ts")).as("day"))
         .agg(hll_sketch_agg(col("user_id")).as("sk"))
@@ -840,69 +1220,97 @@ object EngineQueries {
         .select(col("n_exact"),
           (abs(col("approx") - col("n_exact")).cast("double") /
             col("n_exact").cast("double") <= 0.05).as("within_5pct"))
-    }),
+    },
+      """SELECT count(DISTINCT user_id) AS n_exact, true AS within_5pct
+         FROM events"""),
 
     // exact median per group (integral quantities → interpolation exact in
     // both engines)
-    "q_eng_median" -> ((s, d) =>
+    Q("q_eng_median", (s, d) =>
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(percentile(col("l_quantity"), lit(0.5)).as("median_qty"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      """SELECT l_returnflag, quantile_cont(l_quantity, 0.5) AS median_qty
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
 
     // rollup (grouping sets): counts at (region, nation), (region), ()
-    "q_eng_rollup" -> ((s, d) =>
+    Q("q_eng_rollup", (s, d) =>
       Tables.nation(s, d)
         .join(broadcast(Tables.region(s, d)),
           col("n_regionkey") === col("r_regionkey"))
         .rollup(col("r_name"), col("n_name"))
         .agg(count(lit(1)).as("n"))
-        .orderBy(col("r_name").asc_nulls_first, col("n_name").asc_nulls_first)),
+        .orderBy(col("r_name").asc_nulls_first, col("n_name").asc_nulls_first),
+      """SELECT r_name, n_name, count(*) AS n
+         FROM nation JOIN region ON n_regionkey = r_regionkey
+         GROUP BY ROLLUP (r_name, n_name)
+         ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST"""),
 
     // left-anti join: parts never sold above the premium threshold — the
     // complement of the semi join below, same no-payload-movement property
-    "q_eng_anti_join" -> ((s, d) =>
+    Q("q_eng_anti_join", (s, d) =>
       Tables.part(s, d)
         .join(Tables.lineitem(s, d).where(col("l_extendedprice") > 90000),
           col("p_partkey") === col("l_partkey"), "left_anti")
         .select("p_partkey", "p_brand")
-        .orderBy("p_partkey")),
+        .orderBy("p_partkey"),
+      """SELECT p_partkey, p_brand
+         FROM part
+         WHERE NOT EXISTS (SELECT 1 FROM lineitem
+                           WHERE l_partkey = p_partkey AND l_extendedprice > 90000)
+         ORDER BY p_partkey"""),
 
     // left-semi join: orders having at least one high-value line item —
     // the fact side is filtered without duplication or payload movement
-    "q_eng_semi_join" -> ((s, d) =>
+    Q("q_eng_semi_join", (s, d) =>
       Tables.orders(s, d)
         .join(Tables.lineitem(s, d).where(col("l_extendedprice") > 90000),
           col("o_orderkey") === col("l_orderkey"), "left_semi")
         .select("o_orderkey", "o_custkey", "o_orderstatus")
-        .orderBy("o_orderkey")),
+        .orderBy("o_orderkey"),
+      """SELECT o_orderkey, o_custkey, o_orderstatus
+         FROM orders
+         WHERE EXISTS (SELECT 1 FROM lineitem
+                       WHERE l_orderkey = o_orderkey AND l_extendedprice > 90000)
+         ORDER BY o_orderkey"""),
 
     // scalable stable-id assignment (range partition + zipWithIndex, NOT a
     // single-partition global window); oracle proves identity with the
     // row_number semantics
-    "q_eng_stable_ids" -> ((s, d) =>
+    Q("q_eng_stable_ids", (s, d) =>
       graft.operators.StableIds.assignIds(
         Tables.events(s, d).select("event_id", "event_type"),
         Seq(col("event_id")))
         .select("event_id", "event_type", "id")
-        .orderBy("event_id")),
+        .orderBy("event_id"),
+      """SELECT event_id, event_type,
+                CAST(row_number() OVER (ORDER BY event_id) - 1 AS BIGINT) AS id
+         FROM events ORDER BY event_id"""),
 
     // pivot: event counts per user bucket × event type (oracle mirrors the
     // pivot as conditional aggregation with identical column names)
-    "q_eng_pivot" -> ((s, d) =>
+    Q("q_eng_pivot", (s, d) =>
       Tables.events(s, d)
         .withColumn("bucket", col("user_id") % 10)
         .groupBy("bucket")
         .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
         .agg(count(lit(1)))
         .na.fill(0L)
-        .orderBy("bucket")),
+        .orderBy("bucket"),
+      """SELECT user_id % 10 AS bucket,
+                count(*) FILTER (event_type = 'click') AS click,
+                count(*) FILTER (event_type = 'error') AS error,
+                count(*) FILTER (event_type = 'purchase') AS purchase,
+                count(*) FILTER (event_type = 'signup') AS signup,
+                count(*) FILTER (event_type = 'view') AS view
+         FROM events GROUP BY 1 ORDER BY bucket"""),
 
     // SCD2 dimension build: each user's event-value history as validity
     // intervals [valid_from, valid_to) via one lead window — the
     // point-in-time dimension an as-of join then reads. Open intervals
     // carry valid_to = -1 (cross-engine null-free)
-    "q_eng_scd2" -> ((s, d) => {
+    Q("q_eng_scd2", (s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
       Tables.events(s, d)
@@ -913,12 +1321,20 @@ object EngineQueries {
         .select(col("user_id"), col("value"), col("us").as("valid_from"),
           col("valid_to"))
         .orderBy("user_id", "valid_from")
-    }),
+    },
+      """WITH e AS (
+           SELECT user_id, event_id, value,
+                  epoch_us(CAST(ts AS TIMESTAMP)) AS us
+           FROM events WHERE event_type = 'signup')
+         SELECT user_id, value, us AS valid_from,
+                coalesce(lead(us, 1) OVER (PARTITION BY user_id
+                                           ORDER BY us, event_id), -1) AS valid_to
+         FROM e ORDER BY user_id, valid_from"""),
 
     // batch gap-based sessionization (30-minute gap): one exchange on
     // user_id feeds both the gap-lag and the running-sum windows; all gap
     // math on exact integer microseconds
-    "q_eng_sessions" -> ((s, d) =>
+    Q("q_eng_sessions", (s, d) =>
       graft.operators.Sessions.sessionize(
           Tables.events(s, d).select("event_id", "user_id", "ts"),
           col("user_id"), col("ts"), col("event_id"), gapUs = 30L * 60 * 1000000)
@@ -927,24 +1343,61 @@ object EngineQueries {
           min(unix_micros(col("ts"))).as("start_us"),
           max(unix_micros(col("ts"))).as("end_us"))
         .withColumn("dur_us", col("end_us") - col("start_us"))
-        .orderBy("user_id", "session_idx")),
+        .orderBy("user_id", "session_idx"),
+      """WITH e AS (SELECT user_id, event_id,
+                           epoch_us(CAST(ts AS TIMESTAMP)) AS us
+                    FROM events),
+         o AS (SELECT user_id, us,
+                      CASE WHEN lag(us) OVER w IS NULL
+                             OR us - lag(us) OVER w > 1800000000
+                           THEN 1 ELSE 0 END AS is_new,
+                      event_id
+               FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+         s AS (SELECT user_id, us,
+                      sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
+                                        ROWS UNBOUNDED PRECEDING) AS session_idx
+               FROM o)
+         SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
+                CAST(count(*) AS BIGINT) AS n_events,
+                min(us) AS start_us, max(us) AS end_us,
+                max(us) - min(us) AS dur_us
+         FROM s GROUP BY 1, 2 ORDER BY user_id, session_idx"""),
 
     // time-series gap fill: each user's irregular events resampled to a
     // daily last-observation-carried-forward series over the user's own
     // date range (Resample.dailyLocf). Events reduce to one row per
     // (user, day) before the calendar spine materializes, so cost is
     // keys × days, not event volume
-    "q_eng_gap_fill" -> ((s, d) =>
+    Q("q_eng_gap_fill", (s, d) =>
       graft.operators.Resample.dailyLocf(Tables.events(s, d),
           col("user_id"), col("ts"), col("value"), col("event_id"))
         .select(col("key").as("user_id"), col("day").cast("string").as("day"),
           col("value"), col("observed"))
-        .orderBy("user_id", "day")),
+        .orderBy("user_id", "day"),
+      """WITH e AS (SELECT user_id AS key,
+                           CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
+                           CAST(ts AS TIMESTAMP) AS uts, event_id, value
+                    FROM events),
+         obs AS (SELECT key, day, value FROM (
+                   SELECT *, row_number() OVER (PARTITION BY key, day
+                     ORDER BY uts DESC, event_id DESC) AS rn
+                   FROM e) WHERE rn = 1),
+         r AS (SELECT key, min(day) AS d0, max(day) AS d1 FROM obs GROUP BY 1),
+         spine AS (SELECT key, CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
+                   FROM r),
+         f AS (SELECT spine.key, spine.day,
+                      obs.value IS NOT NULL AS observed,
+                      last_value(obs.value IGNORE NULLS) OVER (
+                        PARTITION BY spine.key ORDER BY spine.day
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value
+               FROM spine LEFT JOIN obs ON spine.key = obs.key AND spine.day = obs.day)
+         SELECT key AS user_id, CAST(day AS VARCHAR) AS day, value, observed
+         FROM f ORDER BY user_id, day"""),
 
     // weekly cohort retention: cohort = user's first active week, matrix of
     // distinct users per (cohort, week offset). Two shuffles on user_id
     // (dedup + cohort agg), cohort table broadcast back
-    "q_eng_retention" -> ((s, d) => {
+    Q("q_eng_retention", (s, d) => {
       val uw = Tables.events(s, d)
         .select(col("user_id"),
           floor(datediff(to_date(col("ts")), to_date(lit("2024-01-01"))) / lit(7))
@@ -955,12 +1408,20 @@ object EngineQueries {
         .groupBy(col("cohort_week"), (col("week") - col("cohort_week")).as("week_offset"))
         .agg(countDistinct("user_id").as("n_users"))
         .orderBy("cohort_week", "week_offset")
-    }),
+    },
+      """WITH uw AS (SELECT DISTINCT user_id,
+                            datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7 AS week
+                     FROM events),
+         c AS (SELECT user_id, min(week) AS cohort_week FROM uw GROUP BY 1)
+         SELECT cohort_week, week - cohort_week AS week_offset,
+                CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+         FROM uw JOIN c USING (user_id)
+         GROUP BY 1, 2 ORDER BY cohort_week, week_offset"""),
 
     // declarative data-quality report: six constraints evaluated in ONE
     // aggregation pass (each check = one aggregate expression over the
     // same scan), long-format exact-integer output
-    "q_eng_quality_report" -> ((s, d) => {
+    Q("q_eng_quality_report", (s, d) => {
       import graft.etl.QualityReport._
       report(Tables.lineitem(s, d), Seq(
         Complete("l_orderkey"), Complete("l_shipdate"),
@@ -969,43 +1430,80 @@ object EngineQueries {
         InSet("l_returnflag", Seq("A", "N", "R")),
         InSet("l_linestatus", Seq("O"))))
         .orderBy("check", "column")
-    }),
+    },
+      """WITH a AS (SELECT
+           CAST(count(CASE WHEN l_orderkey IS NULL THEN 1 END) AS BIGINT) AS c0,
+           CAST(count(CASE WHEN l_shipdate IS NULL THEN 1 END) AS BIGINT) AS c1,
+           CAST(count(CASE WHEN l_orderkey IS NOT NULL THEN 1 END)
+                - count(DISTINCT l_orderkey) AS BIGINT) AS c2,
+           CAST(count(CASE WHEN l_quantity < 1.0 OR l_quantity > 50.0 THEN 1 END) AS BIGINT) AS c3,
+           CAST(count(CASE WHEN l_returnflag IS NOT NULL
+                            AND l_returnflag NOT IN ('A','N','R') THEN 1 END) AS BIGINT) AS c4,
+           CAST(count(CASE WHEN l_linestatus IS NOT NULL
+                            AND l_linestatus NOT IN ('O') THEN 1 END) AS BIGINT) AS c5
+           FROM lineitem)
+         SELECT * FROM (
+           SELECT 'complete' AS "check", 'l_orderkey' AS "column",
+                  c0 AS violations, c0 = 0 AS pass FROM a
+           UNION ALL SELECT 'complete', 'l_shipdate', c1, c1 = 0 FROM a
+           UNION ALL SELECT 'unique', 'l_orderkey', c2, c2 = 0 FROM a
+           UNION ALL SELECT 'bounds', 'l_quantity', c3, c3 = 0 FROM a
+           UNION ALL SELECT 'in_set', 'l_returnflag', c4, c4 = 0 FROM a
+           UNION ALL SELECT 'in_set', 'l_linestatus', c5, c5 = 0 FROM a)
+         ORDER BY "check", "column""""),
 
     // Z-order (Morton) clustering key over (customer, order-day): the
     // write-side layout key that serves predicates on EITHER dimension;
     // pure integer bit interleaving, verified exactly
-    "q_eng_zorder" -> ((s, d) =>
+    Q("q_eng_zorder", (s, d) =>
       Tables.orders(s, d).select(col("o_orderkey"),
         graft.etl.Layout.zorder2(col("o_custkey"),
           datediff(to_date(col("o_orderdate")), to_date(lit("1995-01-01"))))
           .as("z"))
-        .orderBy("o_orderkey")),
+        .orderBy("o_orderkey"),
+      """SELECT o_orderkey,
+                list_reduce(list_prepend(0::BIGINT,
+                  [(((CAST(o_custkey AS BIGINT) >> i) & 1) << (2*i))
+                   + (((CAST(datediff('day', DATE '1995-01-01',
+                          CAST(o_orderdate AS DATE)) AS BIGINT) >> i) & 1)
+                      << (2*i + 1))
+                   for i in range(0, 32)]),
+                  (a, b) -> a + b) AS z
+         FROM orders ORDER BY o_orderkey"""),
 
     // t-digest/GK approximate quantile vs exact, asserted within 1% —
     // the invariant (not the sketch value) is the cross-engine contract
-    "q_eng_approx_quantile" -> ((s, d) =>
+    Q("q_eng_approx_quantile", (s, d) =>
       Tables.lineitem(s, d).agg(
         percentile(col("l_quantity"), lit(0.9)).as("p90_exact"),
         approx_percentile(col("l_quantity"), lit(0.9), lit(10000)).as("__ap"))
         .select(col("p90_exact"),
           (abs(col("__ap") - col("p90_exact")) /
-            greatest(col("p90_exact"), lit(1.0)) <= 0.01).as("within_1pct"))),
+            greatest(col("p90_exact"), lit(1.0)) <= 0.01).as("within_1pct")),
+      """SELECT quantile_cont(l_quantity, 0.9) AS p90_exact,
+                true AS within_1pct
+         FROM lineitem"""),
 
     // fixed-width histogram: one map-side binning expression + single
     // hash agg — the profile query a pipeline runs before choosing
     // partition boundaries
-    "q_eng_histogram" -> ((s, d) =>
+    Q("q_eng_histogram", (s, d) =>
       Tables.lineitem(s, d)
         .groupBy(floor(col("l_extendedprice") / lit(10000.0)).cast("long").as("bucket"))
         .agg(count(lit(1)).as("n"),
           min(col("l_extendedprice")).as("lo"),
           max(col("l_extendedprice")).as("hi"))
-        .orderBy("bucket")),
+        .orderBy("bucket"),
+      """SELECT CAST(floor(l_extendedprice / 10000.0) AS BIGINT) AS bucket,
+                CAST(count(*) AS BIGINT) AS n,
+                min(l_extendedprice) AS lo,
+                max(l_extendedprice) AS hi
+         FROM lineitem GROUP BY 1 ORDER BY bucket"""),
 
     // argmax without a window or self-join: lexicographic struct-max picks
     // the priciest line item per return flag with a fully deterministic
     // tiebreak — one partial-aggregating shuffle instead of a sort
-    "q_eng_argmax" -> ((s, d) =>
+    Q("q_eng_argmax", (s, d) =>
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(max(struct(col("l_extendedprice"), col("l_orderkey"),
@@ -1014,7 +1512,14 @@ object EngineQueries {
           col("mx.l_extendedprice").as("top_price"),
           col("mx.l_orderkey").as("top_orderkey"),
           col("mx.l_linenumber").as("top_linenumber"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      """SELECT l_returnflag, l_extendedprice AS top_price,
+                l_orderkey AS top_orderkey, l_linenumber AS top_linenumber
+         FROM (SELECT *, row_number() OVER (PARTITION BY l_returnflag
+                 ORDER BY l_extendedprice DESC, l_orderkey DESC,
+                          l_linenumber DESC) AS rn
+               FROM lineitem)
+         WHERE rn = 1 ORDER BY l_returnflag"""),
 
     // CUBE grouping sets: counts + exact money sums at every combination
     // of (returnflag, linestatus) including both marginals and the total.
@@ -1025,7 +1530,7 @@ object EngineQueries {
     // marginals/total — count and the DECIMAL money sum are associative
     // and exact, and the double conversion happens once at the end, so
     // every value is bit-identical to the cube (oracle re-proven).
-    "q_eng_cube" -> ((s, d) => {
+    Q("q_eng_cube", (s, d) => {
       import graft.functions.WideDiv.decSumToDouble
       val cells = Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -1053,26 +1558,36 @@ object EngineQueries {
       cell.unionByName(mF).unionByName(mS).unionByName(tot)
         .orderBy(col("l_returnflag").asc_nulls_first,
           col("l_linestatus").asc_nulls_first)
-    }),
+    },
+      s"""SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS n,
+                 ${sqlMoneySum("l_extendedprice")} AS revenue
+          FROM lineitem
+          GROUP BY CUBE (l_returnflag, l_linestatus)
+          ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"""),
 
     // semi-structured extraction: parse the JSON props column with
     // Spark's JSON path (codegen'd get_json_object — no UDF) and
     // aggregate; the oracle extracts the same field with an RE2-safe
     // regex, so the check does not depend on DuckDB's JSON extension
-    "q_eng_json_extract" -> ((s, d) =>
+    Q("q_eng_json_extract", (s, d) =>
       Tables.events(s, d)
         .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
           min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy("event_type")),
+        .orderBy("event_type"),
+      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+                CAST(sum(CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS BIGINT)) AS BIGINT) AS sum_k,
+                min(CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS BIGINT)) AS min_k,
+                max(CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS BIGINT)) AS max_k
+         FROM events GROUP BY 1 ORDER BY event_type"""),
 
     // winsorization audit: per event type, exact rank-selected p05/p95
     // bounds (percentile_disc-style — value at ceil(q·n), deterministic
     // integer rank math, no interpolation) and how many values each
     // clip bound would touch. One sort-window pass computes the ranks;
     // the 5-row bounds table broadcasts back
-    "q_eng_winsorize" -> ((s, d) => {
+    Q("q_eng_winsorize", (s, d) => {
       val e = Tables.events(s, d).select("event_id", "event_type", "value")
       val wR = Window.partitionBy("event_type").orderBy(col("value"), col("event_id"))
       val wN = Window.partitionBy("event_type")
@@ -1091,14 +1606,31 @@ object EngineQueries {
           count(when(col("value") < col("p05"), 1)).as("n_lo"),
           count(when(col("value") > col("p95"), 1)).as("n_hi"))
         .orderBy("event_type")
-    }),
+    },
+      """WITH e AS (SELECT event_id, event_type, value FROM events),
+         r AS (SELECT *,
+                      row_number() OVER (PARTITION BY event_type
+                        ORDER BY value, event_id) AS rn,
+                      count(*) OVER (PARTITION BY event_type) AS n
+               FROM e),
+         b AS (SELECT event_type,
+                      max(CASE WHEN rn = greatest(1, CAST(ceil(n * 0.05) AS BIGINT))
+                               THEN value END) AS p05,
+                      max(CASE WHEN rn = CAST(ceil(n * 0.95) AS BIGINT)
+                               THEN value END) AS p95
+               FROM r GROUP BY 1)
+         SELECT e.event_type, CAST(count(*) AS BIGINT) AS n, b.p05, b.p95,
+                CAST(count(CASE WHEN value < p05 THEN 1 END) AS BIGINT) AS n_lo,
+                CAST(count(CASE WHEN value > p95 THEN 1 END) AS BIGINT) AS n_hi
+         FROM e JOIN b USING (event_type)
+         GROUP BY 1, 3, 4 ORDER BY event_type"""),
 
     // CDC snapshot diff: the minimal I/U/D changeset between a simulated
     // previous snapshot (no keys divisible by 13) and a next snapshot
     // (keys divisible by 17 removed, prices bumped for keys divisible by
     // 11) — one full-outer join on the key, compared columns as a single
     // struct
-    "q_eng_snapshot_diff" -> ((s, d) => {
+    Q("q_eng_snapshot_diff", (s, d) => {
       val o = Tables.orders(s, d)
       val prev = o.where(col("o_orderkey") % 13 =!= 0)
       val next = o.where(col("o_orderkey") % 17 =!= 0)
@@ -1108,13 +1640,33 @@ object EngineQueries {
       graft.operators.ChangeData.snapshotDiff(prev, next, "o_orderkey",
           Seq("o_orderstatus", "o_totalprice"))
         .orderBy("o_orderkey")
-    }),
+    },
+      """WITH prev AS (
+           SELECT o_orderkey, o_orderstatus, o_totalprice
+           FROM orders WHERE o_orderkey % 13 != 0),
+         nxt AS (
+           SELECT o_orderkey, o_orderstatus,
+                  CASE WHEN o_orderkey % 11 = 0 THEN o_totalprice + 1.0
+                       ELSE o_totalprice END AS o_totalprice
+           FROM orders WHERE o_orderkey % 17 != 0),
+         j AS (
+           SELECT coalesce(prev.o_orderkey, nxt.o_orderkey) AS o_orderkey,
+                  CASE WHEN prev.o_orderkey IS NULL THEN 'I'
+                       WHEN nxt.o_orderkey IS NULL THEN 'D'
+                       WHEN NOT (prev.o_orderstatus IS NOT DISTINCT FROM nxt.o_orderstatus
+                                 AND prev.o_totalprice IS NOT DISTINCT FROM nxt.o_totalprice)
+                       THEN 'U' END AS op,
+                  nxt.o_orderstatus, nxt.o_totalprice
+           FROM prev FULL OUTER JOIN nxt
+             ON prev.o_orderkey = nxt.o_orderkey)
+         SELECT o_orderkey, op, o_orderstatus, o_totalprice
+         FROM j WHERE op IS NOT NULL ORDER BY o_orderkey"""),
 
     // explicit GROUPING SETS beyond cube/rollup's fixed lattices: the
     // (priority, status) / (priority) / () sets in ONE pass — Spark
     // expands the sets through a single Expand node feeding one hash
     // aggregate, one shuffle total (vs three separate groupBys + union)
-    "q_eng_grouping_sets" -> ((s, d) =>
+    Q("q_eng_grouping_sets", (s, d) =>
       Tables.orders(s, d)
         .groupingSets(
           Seq(Seq(col("o_orderpriority"), col("o_orderstatus")),
@@ -1122,12 +1674,19 @@ object EngineQueries {
           col("o_orderpriority"), col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), moneySum(col("o_totalprice")).as("rev"))
         .orderBy(col("o_orderpriority").asc_nulls_first,
-          col("o_orderstatus").asc_nulls_first)),
+          col("o_orderstatus").asc_nulls_first),
+      s"""SELECT o_orderpriority, o_orderstatus, CAST(count(*) AS BIGINT) AS n,
+                 ${sqlMoneySum("o_totalprice")} AS rev
+          FROM orders
+          GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
+                                  (o_orderpriority), ())
+          ORDER BY o_orderpriority ASC NULLS FIRST,
+                   o_orderstatus ASC NULLS FIRST"""),
 
     // integer PageRank (3 iterations) over the part↔supplier bipartite
     // graph from lineitem: graph centrality as joins + aggregations; all
     // arithmetic integral, so the oracle equality is exact
-    "q_eng_pagerank" -> ((s, d) => {
+    Q("q_eng_pagerank", (s, d) => {
       // PageRank.prepared over the SUITE-SHARED graph tables: the
       // part↔supplier bipartite graph here is bit-identical to the one
       // q_eng_deepwalk_pairs memoizes (same ×2/×2+1 node encoding), so
@@ -1147,13 +1706,37 @@ object EngineQueries {
       graft.operators.PageRank.prepared(nodes, deg, e,
           iters = 3, broadcastRanks = true) // 2k vertices vs 160k edges
         .orderBy(col("pr").desc, col("node")).limit(25)
-    }),
+    },
+      {
+        def iter(k: Int, prev: String) =
+          s"""c$k AS (SELECT r.node, r.pr // d.deg AS c
+                    FROM $prev r JOIN deg d USING (node)),
+            s$k AS (SELECT e.dst AS node, CAST(sum(c.c) AS BIGINT) AS s
+                    FROM e JOIN c$k c ON e.src = c.node GROUP BY 1),
+            r$k AS (SELECT nodes.node,
+                           15 * (1000000000000 // n.n) // 100
+                             + 85 * coalesce(s$k.s, 0) // 100 AS pr
+                    FROM nodes LEFT JOIN s$k USING (node), n)"""
+        s"""WITH ps AS (SELECT DISTINCT l_partkey * 2 AS pnode,
+                             l_suppkey * 2 + 1 AS snode FROM lineitem),
+          e AS (SELECT pnode AS src, snode AS dst FROM ps
+                UNION ALL SELECT snode, pnode FROM ps),
+          nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
+          deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
+                  FROM e GROUP BY 1),
+          n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
+          r0 AS (SELECT node, 1000000000000 // n.n AS pr FROM nodes, n),
+          ${iter(1, "r0")},
+          ${iter(2, "r1")},
+          ${iter(3, "r2")}
+          SELECT node, pr FROM r3 ORDER BY pr DESC, node LIMIT 25"""
+      }),
 
     // 7-day rolling revenue: RANGE frame over the pre-aggregated daily
     // table (cardinality = distinct days — tiny at any corpus scale, so
     // the unpartitioned window is safe by construction); decimal
     // accumulation keeps the rolling sum exact and order-independent
-    "q_eng_rolling" -> ((s, d) => {
+    Q("q_eng_rolling", (s, d) => {
       val daily = Tables.orders(s, d)
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(col("o_totalprice").cast("decimal(18,6)")).as("rev_dec"),
@@ -1169,7 +1752,23 @@ object EngineQueries {
           graft.functions.WideDiv.decSumToDouble(col("rev_dec")).as("rev"),
           col("rolling7_rev"), col("n_days_7"), col("n_orders"))
         .orderBy("day")
-    }),
+    },
+      s"""WITH daily AS (
+           SELECT CAST(o_orderdate AS DATE) AS day,
+                  sum(CAST(o_totalprice AS DECIMAL(18,6))) AS rev_dec,
+                  CAST(count(*) AS BIGINT) AS n_orders
+           FROM orders GROUP BY 1),
+         d2 AS (SELECT *, datediff('day', DATE '1995-01-01', day) AS day_i
+                FROM daily)
+         SELECT CAST(day AS VARCHAR) AS day,
+                ${graft.functions.WideDiv.sqlDecSumToDouble("rev_dec")} AS rev,
+                ${graft.functions.WideDiv.sqlDecSumToDouble(
+                  "sum(rev_dec) OVER w")} AS rolling7_rev,
+                CAST(count(*) OVER w AS BIGINT) AS n_days_7,
+                n_orders
+         FROM d2
+         WINDOW w AS (ORDER BY day_i RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
+         ORDER BY day"""),
 
     // point-in-interval range join via bucket expansion (RangeJoin): line
     // items shipped within 30 days of each urgent high-value order's date.
@@ -1186,7 +1785,7 @@ object EngineQueries {
     // the residual-BETWEEN work goes quadratic — the sf0.1→sf1 bench
     // measured 25x time at 10x data; coarsened it is linear + a
     // constant-size join
-    "q_eng_range_join" -> ((s, d) => {
+    Q("q_eng_range_join", (s, d) => {
       // date columns are parquet TIMESTAMP_NTZ; cast-to-timestamp under the
       // UTC session makes unix_micros read the same naive micros DuckDB's
       // epoch_us sees
@@ -1209,14 +1808,26 @@ object EngineQueries {
       oi.select("o_orderkey").join(matched, Seq("o_orderkey"), "left")
         .na.fill(0L, Seq("n_items")).na.fill(0.0, Seq("sum_qty"))
         .orderBy("o_orderkey")
-    }),
+    },
+      s"""WITH oi AS (SELECT o_orderkey, epoch_us(o_orderdate) AS s_us,
+                             epoch_us(o_orderdate) + 2592000000000 AS e_us
+                      FROM orders
+                      WHERE o_orderpriority = '1-URGENT' AND o_totalprice >= 450000),
+          m AS (SELECT o_orderkey, CAST(count(*) AS BIGINT) AS n_items,
+                       ${sqlMoneySum("l_quantity")} AS sum_qty
+                FROM oi JOIN lineitem
+                  ON epoch_us(l_shipdate) >= s_us AND epoch_us(l_shipdate) <= e_us
+                GROUP BY 1)
+          SELECT oi.o_orderkey, coalesce(n_items, 0) AS n_items,
+                 coalesce(sum_qty, 0.0) AS sum_qty
+          FROM oi LEFT JOIN m USING (o_orderkey) ORDER BY o_orderkey"""),
 
     // bloom-filter semi-join reduction: the fact side is pre-filtered by a
     // distributed Bloom sketch of the dim keys BEFORE any join exchange;
     // the real join afterwards removes false positives, so the result
     // equals the plain join (the oracle is that plain join — equality IS
     // the exactness proof, as with the salted operators)
-    "q_eng_bloom_join" -> ((s, d) => {
+    Q("q_eng_bloom_join", (s, d) => {
       val dim = Tables.part(s, d)
         .where(col("p_size") <= 4).select(col("p_partkey"), col("p_brand"))
       val fact = Tables.lineitem(s, d)
@@ -1229,13 +1840,20 @@ object EngineQueries {
         .agg(count(lit(1)).as("n_items"),
           moneySum(col("l_extendedprice")).as("revenue"))
         .orderBy("p_brand")
-    }),
+    },
+      // the PLAIN join — Spark runs bloom-prune + join; equality proves the
+      // reduction is lossless (bloom has no false negatives)
+      s"""SELECT p_brand, CAST(count(*) AS BIGINT) AS n_items,
+                 ${sqlMoneySum("l_extendedprice")} AS revenue
+          FROM lineitem JOIN part ON l_partkey = p_partkey
+          WHERE p_size <= 4
+          GROUP BY p_brand ORDER BY p_brand"""),
 
     // exact equi-depth (10-quantile) binning of order totals WITHOUT a
     // single-partition global window: distributed global rank (range
     // partition + in-partition sort + zipWithIndex offsets — StableIds),
     // then bin = floor(rank·10 / total); DuckDB mirrors with row_number
-    "q_eng_equidepth" -> ((s, d) => {
+    Q("q_eng_equidepth", (s, d) => {
       val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
       val total = o.count() // metadata-scale action: one long
       val ranked = graft.operators.StableIds.assignIds(
@@ -1246,13 +1864,26 @@ object EngineQueries {
         .agg(count(lit(1)).as("n"),
           min(col("o_totalprice")).as("lo"), max(col("o_totalprice")).as("hi"))
         .orderBy("bin")
-    }),
+    },
+      // row_number mirror of the distributed StableIds rank; both sides
+      // floor an exact-integer double division (rk·10 and total are far
+      // below 2^53, and quotients land ≥ 1/total away from integers except
+      // at exact multiples, which divide exactly)
+      """WITH r AS (
+           SELECT o_orderkey, o_totalprice,
+                  row_number() OVER (ORDER BY o_totalprice, o_orderkey) - 1 AS rk,
+                  count(*) OVER () AS total
+           FROM orders)
+         SELECT CAST(floor(rk * 10 / CAST(total AS DOUBLE)) AS BIGINT) AS bin,
+                CAST(count(*) AS BIGINT) AS n,
+                min(o_totalprice) AS lo, max(o_totalprice) AS hi
+         FROM r GROUP BY 1 ORDER BY bin"""),
 
     // ordered 3-step funnel (view → click → purchase, strictly increasing
     // event time per user): each stage is a min-aggregate after a
     // user-key join with its predecessor's first-completion time —
     // 3 key-partitioned aggregates, no window over the full event stream
-    "q_eng_funnel" -> ((s, d) => {
+    Q("q_eng_funnel", (s, d) => {
       val ev = Tables.events(s, d).select(col("user_id"), col("event_type"), col("ts"))
       val v = ev.where(col("event_type") === "view")
         .groupBy("user_id").agg(min("ts").as("t1"))
@@ -1265,7 +1896,18 @@ object EngineQueries {
       v.agg(count(lit(1)).as("n_view"))
         .crossJoin(c.agg(count(lit(1)).as("n_click_after")))
         .crossJoin(p.agg(count(lit(1)).as("n_purchase_after")))
-    }),
+    },
+      """WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
+                    WHERE event_type = 'view' GROUP BY 1),
+         c AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
+               JOIN v ON v.user_id = e.user_id
+               WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY 1),
+         p AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
+               JOIN c ON c.user_id = e.user_id
+               WHERE e.event_type = 'purchase' AND e.ts > c.t2 GROUP BY 1)
+         SELECT (SELECT CAST(count(*) AS BIGINT) FROM v) AS n_view,
+                (SELECT CAST(count(*) AS BIGINT) FROM c) AS n_click_after,
+                (SELECT CAST(count(*) AS BIGINT) FROM p) AS n_purchase_after"""),
 
     // plan-time set operators: customers ordering in BOTH 1995 and 1996
     // (INTERSECT — hashed semi set op) minus those also ordering in 1997
@@ -1273,7 +1915,7 @@ object EngineQueries {
     // Years chosen inside the fixture's order-date domain
     // (1995-01-01..2001-08-01) so every leg is non-empty — the r7 verdict
     // flagged the old 1994 leg as empty-by-construction (vacuous gate).
-    "q_eng_intersect_except" -> ((s, d) => {
+    Q("q_eng_intersect_except", (s, d) => {
       def custsIn(year: Int): DataFrame =
         Tables.orders(s, d)
           .where(org.apache.spark.sql.functions.year(
@@ -1281,12 +1923,18 @@ object EngineQueries {
           .select(col("o_custkey"))
       custsIn(1995).intersect(custsIn(1996)).except(custsIn(1997))
         .orderBy("o_custkey")
-    }),
+    },
+      """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
+         INTERSECT
+         SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
+         EXCEPT
+         SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1997
+         ORDER BY o_custkey"""),
 
     // month-over-month revenue trend: lag over the MONTHLY pre-aggregate
     // (bounded cardinality — the one place a global-order window is the
     // right plan: ~dozens of rows after the aggregate, not raw data)
-    "q_eng_monthly_trend" -> ((s, d) => {
+    Q("q_eng_monthly_trend", (s, d) => {
       val w = Window.orderBy("month")
       Tables.orders(s, d)
         .groupBy(date_format(col("o_orderdate").cast("timestamp"), "yyyy-MM")
@@ -1296,13 +1944,22 @@ object EngineQueries {
         .withColumn("prev_rev", lag(col("rev"), 1).over(w))
         .withColumn("delta", col("rev") - col("prev_rev"))
         .orderBy("month")
-    }),
+    },
+      s"""WITH m AS (
+            SELECT strftime(o_orderdate, '%Y-%m') AS month,
+                   ${sqlMoneySum("o_totalprice")} AS rev,
+                   CAST(count(*) AS BIGINT) AS n_orders
+            FROM orders GROUP BY 1)
+          SELECT month, rev, n_orders,
+                 lag(rev, 1) OVER (ORDER BY month) AS prev_rev,
+                 rev - lag(rev, 1) OVER (ORDER BY month) AS delta
+          FROM m ORDER BY month"""),
 
     // TPC-H Q10-style returned-items ranking: who cost us the most in
     // returns — lineitem(R) joins orders on the fact keys while customer
     // and nation broadcast; one revenue aggregate, top-20 via
     // TakeOrderedAndProject (no global sort)
-    "q_eng_returned_top" -> ((s, d) => {
+    Q("q_eng_returned_top", (s, d) => {
       val li = Tables.lineitem(s, d).where(col("l_returnflag") === "R")
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
       val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
@@ -1317,21 +1974,36 @@ object EngineQueries {
           .as("revenue"), count(lit(1)).as("n_items"))
         .orderBy(col("revenue").desc, col("c_custkey"))
         .limit(20)
-    }),
+    },
+      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
+                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue,
+                 CAST(count(*) AS BIGINT) AS n_items
+          FROM lineitem
+          JOIN orders ON l_orderkey = o_orderkey
+          JOIN customer ON o_custkey = c_custkey
+          JOIN nation ON c_nationkey = n_nationkey
+          WHERE l_returnflag = 'R'
+          GROUP BY 1, 2, 3, 4
+          ORDER BY revenue DESC, c_custkey LIMIT 20"""),
 
     // ROLLUP with grouping_id(): the bitmask that disambiguates "NULL
     // because aggregated" from "NULL in the data" — one Expand node,
     // standard-SQL bit semantics shared with the oracle's GROUPING()
-    "q_eng_grouping_id" -> ((s, d) =>
+    Q("q_eng_grouping_id", (s, d) =>
       Tables.lineitem(s, d)
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"), grouping_id().as("gid"))
         .orderBy(col("gid"), col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)),
+          col("l_linestatus").asc_nulls_first),
+      """SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS n,
+                CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
+         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
+         ORDER BY gid, l_returnflag ASC NULLS FIRST,
+                  l_linestatus ASC NULLS FIRST"""),
 
     // relational unpivot (melt) through the Dataset.unpivot API — one
     // Expand node, no join/union of re-scans
-    "q_eng_unpivot" -> ((s, d) =>
+    Q("q_eng_unpivot", (s, d) =>
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(moneySum(col("l_quantity")).as("sum_qty"),
@@ -1340,7 +2012,22 @@ object EngineQueries {
         .unpivot(Array(col("l_returnflag")),
           Array(col("sum_qty"), col("sum_price"), col("n_items")),
           "metric", "value")
-        .orderBy("l_returnflag", "metric")),
+        .orderBy("l_returnflag", "metric"),
+      // UNION ALL mirror of the unpivot (portable melt); metric names match
+      // the Spark-side value-column names
+      s"""WITH a AS (
+            SELECT l_returnflag,
+                   ${sqlMoneySum("l_quantity")} AS sum_qty,
+                   ${sqlMoneySum("l_extendedprice")} AS sum_price,
+                   CAST(count(*) AS DOUBLE) AS n_items
+            FROM lineitem GROUP BY 1)
+          SELECT l_returnflag, metric, value FROM (
+            SELECT l_returnflag, 'sum_qty' AS metric, sum_qty AS value FROM a
+            UNION ALL
+            SELECT l_returnflag, 'sum_price', sum_price FROM a
+            UNION ALL
+            SELECT l_returnflag, 'n_items', n_items FROM a)
+          ORDER BY l_returnflag, metric"""),
 
     // interval-concurrency sweep line: peak open (ordered-not-yet-shipped)
     // line items. Each [o_orderdate, l_shipdate] interval contributes +1
@@ -1350,7 +2037,7 @@ object EngineQueries {
     // The unpartitioned window is safe by construction — its input is
     // days, not rows. Concurrency only changes on event days, so the
     // top-k is attained there.
-    "q_eng_concurrency" -> ((s, d) => {
+    Q("q_eng_concurrency", (s, d) => {
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey"), to_date(col("l_shipdate")).as("ship"))
         .join(Tables.orders(s, d)
@@ -1367,7 +2054,20 @@ object EngineQueries {
         .select(col("day").cast("string").as("day"), col("in_transit"))
         .orderBy(col("in_transit").desc, col("day"))
         .limit(10)
-    }),
+    },
+      """WITH iv AS (
+           SELECT CAST(o_orderdate AS DATE) AS placed,
+                  CAST(l_shipdate AS DATE) AS ship
+           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+         de AS (
+           SELECT placed AS day, 1 AS delta FROM iv
+           UNION ALL
+           SELECT ship + 1, -1 FROM iv),
+         daily AS (SELECT day, CAST(sum(delta) AS BIGINT) AS d
+                   FROM de GROUP BY 1)
+         SELECT CAST(day AS VARCHAR) AS day,
+                CAST(sum(d) OVER (ORDER BY day) AS BIGINT) AS in_transit
+         FROM daily ORDER BY in_transit DESC, day LIMIT 10"""),
 
     // exact triangle count over the co-order part graph (parts appearing
     // in the same order are linked): degree-ordered orientation bounds
@@ -1378,7 +2078,7 @@ object EngineQueries {
     // read one materialization instead of re-deriving the per-order
     // pair self-join per consumer — the cluster analogue of persisting
     // the edge list before graph analytics
-    "q_eng_triangles" -> ((s, d) => {
+    Q("q_eng_triangles", (s, d) => {
       val e = QueryCaches.memo(s, d, "tri_edges") {
         val op = Tables.lineitem(s, d)
           .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
@@ -1392,13 +2092,28 @@ object EngineQueries {
         graft.operators.Graph.orient(e)
       }
       graft.operators.Graph.countOriented(dir, e)
-    }),
+    },
+      // naive all-pairs enumeration: e1=(a,b), e2=(a,c) with b<c closes on
+      // e3=(b,c) — independent of the Spark side's degree-ordered
+      // orientation, so equality proves the oriented count exact
+      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+                     FROM lineitem),
+         e AS (SELECT DISTINCT a.p AS u, b.p AS v
+               FROM op a JOIN op b ON a.o = b.o AND a.p < b.p)
+         SELECT (SELECT CAST(count(DISTINCT n) AS BIGINT)
+                 FROM (SELECT u AS n FROM e UNION ALL SELECT v FROM e))
+                  AS n_nodes,
+                (SELECT CAST(count(*) AS BIGINT) FROM e) AS n_edges,
+                (SELECT CAST(count(*) AS BIGINT)
+                 FROM e e1
+                 JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
+                 JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v) AS n_triangles"""),
 
     // log2-bucketed degree distribution of the co-purchase graph — the
     // first diagnostic before choosing graph-algorithm parameters (is
     // there a heavy tail?). Reuses the suite-cached edge table; the
     // bucket key is integer (bit-length − 1), identical in both engines
-    "q_eng_degree_dist" -> ((s, d) => {
+    Q("q_eng_degree_dist", (s, d) => {
       val e = QueryCaches.memo(s, d, "tri_edges") {
         val op = Tables.lineitem(s, d)
           .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
@@ -1414,14 +2129,26 @@ object EngineQueries {
         .agg(count(lit(1)).as("n_nodes"),
           min(col("deg")).as("min_deg"), max(col("deg")).as("max_deg"))
         .orderBy("log2_deg")
-    }),
+    },
+      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+                     FROM lineitem),
+         e AS (SELECT DISTINCT a.p AS u, b.p AS v
+               FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+         d AS (SELECT n, CAST(count(*) AS BIGINT) AS deg
+               FROM (SELECT u AS n FROM e UNION ALL SELECT v FROM e)
+               GROUP BY 1)
+         SELECT CAST(length(bin(deg)) - 1 AS BIGINT) AS log2_deg,
+                CAST(count(*) AS BIGINT) AS n_nodes,
+                CAST(min(deg) AS BIGINT) AS min_deg,
+                CAST(max(deg) AS BIGINT) AS max_deg
+         FROM d GROUP BY 1 ORDER BY log2_deg"""),
 
     // k-core peeling on the part co-purchase graph: 3 rounds of
     // drop-degree-below-80, reusing the suite-cached canonical edge
     // table. Per round one degree shuffle + two semi joins against the
     // node-sized keep set; the oracle unrolls the same 3 rounds as CTEs,
     // so equality proves every peel round bit-exact
-    "q_eng_kcore" -> ((s, d) => {
+    Q("q_eng_kcore", (s, d) => {
       val e = QueryCaches.memo(s, d, "tri_edges") {
         val op = Tables.lineitem(s, d)
           .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
@@ -1434,7 +2161,26 @@ object EngineQueries {
       graft.operators.Graph.kCorePeel(e, k = 80, rounds = 3)
         .select(col("n").as("node"), col("deg"))
         .orderBy("node")
-    }),
+    },
+      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+                     FROM lineitem),
+         e0 AS MATERIALIZED (SELECT DISTINCT a.p AS u, b.p AS v
+                FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+         k1 AS (SELECT n FROM (SELECT u AS n FROM e0 UNION ALL SELECT v FROM e0)
+                GROUP BY n HAVING count(*) >= 80),
+         e1 AS MATERIALIZED (SELECT * FROM e0
+                WHERE u IN (SELECT n FROM k1) AND v IN (SELECT n FROM k1)),
+         k2 AS (SELECT n FROM (SELECT u AS n FROM e1 UNION ALL SELECT v FROM e1)
+                GROUP BY n HAVING count(*) >= 80),
+         e2 AS MATERIALIZED (SELECT * FROM e1
+                WHERE u IN (SELECT n FROM k2) AND v IN (SELECT n FROM k2)),
+         k3 AS (SELECT n FROM (SELECT u AS n FROM e2 UNION ALL SELECT v FROM e2)
+                GROUP BY n HAVING count(*) >= 80),
+         e3 AS MATERIALIZED (SELECT * FROM e2
+                WHERE u IN (SELECT n FROM k3) AND v IN (SELECT n FROM k3))
+         SELECT n AS node, CAST(count(*) AS BIGINT) AS deg
+         FROM (SELECT u AS n FROM e3 UNION ALL SELECT v FROM e3)
+         GROUP BY 1 ORDER BY 1"""),
 
     // exact distinct via 32-bit bitmap words: users bucket by id div 32,
     // one bit_or per (segment, bucket) builds a reusable bitmap table —
@@ -1443,7 +2189,7 @@ object EngineQueries {
     // via naive COUNT(DISTINCT)/INTERSECT, proving the bitmap algebra
     // exact. Two partial-aggregable shuffles; words, not ids, cross the
     // second one.
-    "q_eng_bitmap_distinct" -> ((s, d) => {
+    Q("q_eng_bitmap_distinct", (s, d) => {
       val words = Tables.events(s, d)
         .select(col("event_type"),
           call_function("div", col("user_id"), lit(32L)).as("bucket"),
@@ -1460,13 +2206,26 @@ object EngineQueries {
           .as("n_users"))
         .select(lit("click_and_purchase").as("segment"), col("n_users"))
       perType.unionByName(inter).orderBy("segment")
-    }),
+    },
+      // naive COUNT(DISTINCT) + INTERSECT — independent of the Spark
+      // side's bitmap-word algebra
+      """SELECT * FROM (
+           SELECT event_type AS segment,
+                  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+           FROM events GROUP BY 1
+           UNION ALL
+           SELECT 'click_and_purchase',
+                  CAST(count(*) AS BIGINT)
+           FROM (SELECT user_id FROM events WHERE event_type = 'click'
+                 INTERSECT
+                 SELECT user_id FROM events WHERE event_type = 'purchase'))
+         ORDER BY segment"""),
 
     // mode per group in one pass: counts, then min(struct(-n, value))
     // picks highest count with smallest-value ties — no rank window, two
     // partial-aggregable shuffles; share_pm is the mode's exact
     // integer permille of the group
-    "q_eng_mode" -> ((s, d) => {
+    Q("q_eng_mode", (s, d) => {
       val cnts = Tables.events(s, d)
         .groupBy((col("user_id") % 10).as("bucket"), col("event_type"))
         .agg(count(lit(1)).as("n"))
@@ -1478,7 +2237,20 @@ object EngineQueries {
           call_function("div", -col("s.neg") * 1000, col("total"))
             .as("share_pm"))
         .orderBy("bucket")
-    }),
+    },
+      """WITH c AS (SELECT user_id % 10 AS bucket, event_type,
+                           CAST(count(*) AS BIGINT) AS n
+                    FROM events GROUP BY 1, 2),
+         t AS (SELECT bucket, CAST(sum(n) AS BIGINT) AS total
+               FROM c GROUP BY 1),
+         r AS (SELECT bucket, event_type, n,
+                      row_number() OVER (PARTITION BY bucket
+                                         ORDER BY n DESC, event_type) AS rk
+               FROM c)
+         SELECT r.bucket, r.event_type AS mode_value, r.n,
+                r.n * 1000 // t.total AS share_pm
+         FROM r JOIN t USING (bucket)
+         WHERE rk = 1 ORDER BY r.bucket"""),
 
     // exact distributed second moments: per-group (n, Σx, Σy, Σx², Σxy,
     // Σy²) over integer-domain columns, plus the exact covariance
@@ -1488,7 +2260,7 @@ object EngineQueries {
     // enters as exact permille (its values are 2-decimal, so ·1000+0.5
     // never sits at a floor boundary); all sums stay in BIGINT range
     // through sf100 per group
-    "q_eng_corr_stats" -> ((s, d) =>
+    Q("q_eng_corr_stats", (s, d) =>
       Tables.lineitem(s, d)
         .select(col("l_returnflag"),
           col("l_quantity").cast("long").as("q"),
@@ -1501,7 +2273,21 @@ object EngineQueries {
           sum(col("dp") * col("dp")).as("sum_dd"))
         .withColumn("cov_num",
           col("n") * col("sum_qd") - col("sum_q") * col("sum_d"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      """WITH t AS (SELECT l_returnflag,
+                           CAST(l_quantity AS BIGINT) AS q,
+                           CAST(floor(l_discount * 1000 + 0.5) AS BIGINT) AS dp
+                    FROM lineitem),
+         a AS (SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
+                      CAST(sum(q) AS BIGINT) AS sum_q,
+                      CAST(sum(dp) AS BIGINT) AS sum_d,
+                      CAST(sum(q * q) AS BIGINT) AS sum_qq,
+                      CAST(sum(q * dp) AS BIGINT) AS sum_qd,
+                      CAST(sum(dp * dp) AS BIGINT) AS sum_dd
+               FROM t GROUP BY 1)
+         SELECT l_returnflag, n, sum_q, sum_d, sum_qq, sum_qd, sum_dd,
+                n * sum_qd - sum_q * sum_d AS cov_num
+         FROM a ORDER BY l_returnflag"""),
 
     // incremental aggregate maintenance: the monthly rollup is kept
     // current by aggregating ONLY the delta partition (1998+) and
@@ -1510,7 +2296,7 @@ object EngineQueries {
     // bitwise, which the full-recompute oracle proves. At 100 TB the
     // base aggregate is a materialized table; the daily job scans just
     // the new partition
-    "q_eng_incr_agg" -> ((s, d) => {
+    Q("q_eng_incr_agg", (s, d) => {
       val ords = Tables.orders(s, d)
       def agg(df: DataFrame): DataFrame = df
         .groupBy(date_format(col("o_orderdate").cast("timestamp"), "yyyy-MM")
@@ -1527,14 +2313,19 @@ object EngineQueries {
         .select(col("month"), col("o_orderpriority"), col("n_orders"),
           graft.functions.WideDiv.decSumToDouble(col("rev2")).as("rev"))
         .orderBy("month", "o_orderpriority")
-    }),
+    },
+      // full recompute — proves base⊕delta merge is lossless
+      s"""SELECT strftime(o_orderdate, '%Y-%m') AS month, o_orderpriority,
+                 CAST(count(*) AS BIGINT) AS n_orders,
+                 ${sqlMoneySum("o_totalprice")} AS rev
+          FROM orders GROUP BY 1, 2 ORDER BY month, o_orderpriority"""),
 
     // first-order Markov chain over user event streams: lead() pairs each
     // event with its successor inside the user partition (one shuffle on
     // user), then transition counts and exact integer permille
     // probabilities — the classic session-behavior model, no state kept
     // on the driver
-    "q_eng_markov" -> ((s, d) => {
+    Q("q_eng_markov", (s, d) => {
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       val tr = Tables.events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
@@ -1547,13 +2338,28 @@ object EngineQueries {
         .select(col("src"), col("dst"), col("n"),
           call_function("div", col("n") * 1000, col("total")).as("prob_pm"))
         .orderBy("src", "dst")
-    }),
+    },
+      // ns→us CAST mirrors Spark's micro-truncated event timestamps so the
+      // (ts, event_id) successor order is identical in both engines
+      """WITH e AS (SELECT user_id, event_id, event_type,
+                           CAST(ts AS TIMESTAMP) AS us
+                    FROM events),
+         p AS (SELECT event_type AS src,
+                      lead(event_type, 1) OVER (PARTITION BY user_id
+                                                ORDER BY us, event_id) AS dst
+               FROM e),
+         tr AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS n
+                FROM p WHERE dst IS NOT NULL GROUP BY 1, 2),
+         t AS (SELECT src, CAST(sum(n) AS BIGINT) AS total
+               FROM tr GROUP BY 1)
+         SELECT tr.src, tr.dst, tr.n, tr.n * 1000 // t.total AS prob_pm
+         FROM tr JOIN t USING (src) ORDER BY tr.src, tr.dst"""),
 
     // Pareto skyline of 1995 orders (maximize revenue, minimize line
     // count): grid-pruned two-stage skyline — the bucket prefilter is a
     // broadcast map-only pass; only O(skyline) survivors reach the exact
     // window. Oracle is the independent NOT EXISTS dominance test.
-    "q_eng_skyline" -> ((s, d) => {
+    Q("q_eng_skyline", (s, d) => {
       val pts = Tables.orders(s, d)
         .where(year(to_date(col("o_orderdate"))) === 1995)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -1563,13 +2369,26 @@ object EngineQueries {
         .select(col("o_orderkey"), col("o_totalprice"), col("n_items"))
       graft.operators.Skyline.skyline2D(pts, "o_totalprice", "n_items", 10000.0)
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    }),
+    },
+      """WITH p AS (
+           SELECT o_orderkey, o_totalprice, CAST(count(*) AS BIGINT) AS n_items
+           FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+           WHERE year(CAST(o_orderdate AS DATE)) = 1995
+           GROUP BY 1, 2)
+         SELECT o_orderkey, o_totalprice, n_items
+         FROM p a
+         WHERE NOT EXISTS (
+           SELECT 1 FROM p b
+           WHERE b.o_totalprice >= a.o_totalprice
+             AND b.n_items <= a.n_items
+             AND (b.o_totalprice > a.o_totalprice OR b.n_items < a.n_items))
+         ORDER BY o_totalprice DESC, o_orderkey"""),
 
     // TPC-H Q15-style top supplier(s) for 1996Q1. Revenue stays in exact
     // decimal through the max comparison (ties kept, engine-independent);
     // the max window runs on the supplier-cardinality aggregate — tiny at
     // any corpus scale — and doubles appear only at output
-    "q_eng_top_supplier" -> ((s, d) => {
+    Q("q_eng_top_supplier", (s, d) => {
       val rev = Tables.lineitem(s, d)
         .where(to_date(col("l_shipdate")) >= to_date(lit("1996-01-01")) &&
           to_date(col("l_shipdate")) < to_date(lit("1996-04-01")))
@@ -1584,13 +2403,27 @@ object EngineQueries {
         .select(col("s_suppkey"), col("s_name"),
           graft.functions.WideDiv.decSumToDouble(col("rev_dec")).as("total_rev"))
         .orderBy("s_suppkey")
-    }),
+    },
+      """WITH r AS (
+           SELECT l_suppkey,
+                  sum(CAST(l_extendedprice * (1.0 - l_discount)
+                    AS DECIMAL(18,6))) AS rev_dec
+           FROM lineitem
+           WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
+             AND CAST(l_shipdate AS DATE) < DATE '1996-04-01'
+           GROUP BY 1),
+         m AS (SELECT max(rev_dec) AS mx FROM r)
+         SELECT s_suppkey, s_name,
+                CAST(CAST(rev_dec * 1000000 AS DECIMAL(38,0)) AS DOUBLE)
+                  / 1000000.0 AS total_rev
+         FROM r JOIN supplier ON l_suppkey = s_suppkey, m
+         WHERE rev_dec = m.mx ORDER BY s_suppkey"""),
 
     // TPC-H Q14-style promo revenue share: one conditional aggregate over
     // the month, part type from a broadcast dimension; the share is an
     // exact integer-ppm formula on the micro-unit decimal sums (the /1000
     // rescale keeps every product in BIGINT range at any SF)
-    "q_eng_promo_share" -> ((s, d) => {
+    Q("q_eng_promo_share", (s, d) => {
       val disc = (col("l_extendedprice") * (lit(1.0) - col("l_discount")))
         .cast("decimal(18,6)")
       Tables.lineitem(s, d)
@@ -1609,12 +2442,29 @@ object EngineQueries {
             (col("promo_dec") * 1000000).cast("long") * 1000L,
             call_function("div", (col("total_dec") * 1000000).cast("long"),
               lit(1000L))).as("share_ppm"))
-    }),
+    },
+      """WITH a AS (
+           SELECT sum(CASE WHEN p_type LIKE 'PROMO%'
+                           THEN CAST(l_extendedprice * (1.0 - l_discount)
+                             AS DECIMAL(18,6))
+                           ELSE CAST(0 AS DECIMAL(18,6)) END) AS promo_dec,
+                  sum(CAST(l_extendedprice * (1.0 - l_discount)
+                    AS DECIMAL(18,6))) AS total_dec
+           FROM lineitem JOIN part ON l_partkey = p_partkey
+           WHERE CAST(l_shipdate AS DATE) >= DATE '1995-09-01'
+             AND CAST(l_shipdate AS DATE) < DATE '1995-10-01')
+         SELECT CAST(CAST(promo_dec * 1000000 AS DECIMAL(38,0)) AS DOUBLE)
+                  / 1000000.0 AS promo_rev,
+                CAST(CAST(total_dec * 1000000 AS DECIMAL(38,0)) AS DOUBLE)
+                  / 1000000.0 AS total_rev,
+                (CAST(promo_dec * 1000000 AS BIGINT) * 1000)
+                  // (CAST(total_dec * 1000000 AS BIGINT) // 1000) AS share_ppm
+         FROM a"""),
 
     // TPC-H Q18-style large-volume orders: HAVING on the per-order
     // quantity aggregate (partial-agg shuffle on orderkey, already the
     // fact table's join key), then the order/customer decoration
-    "q_eng_large_orders" -> ((s, d) =>
+    Q("q_eng_large_orders", (s, d) =>
       Tables.lineitem(s, d).groupBy(col("l_orderkey"))
         .agg(sum(col("l_quantity").cast("decimal(18,6)")).as("qty_dec"))
         .where(col("qty_dec") >= 250)
@@ -1626,13 +2476,24 @@ object EngineQueries {
           col("o_custkey") === col("c_custkey"))
         .select(col("c_name"), col("o_orderkey"), col("o_totalprice"),
           graft.functions.WideDiv.decSumToDouble(col("qty_dec")).as("total_qty"))
-        .orderBy(col("total_qty").desc, col("o_orderkey"))),
+        .orderBy(col("total_qty").desc, col("o_orderkey")),
+      """WITH q AS (
+           SELECT l_orderkey,
+                  sum(CAST(l_quantity AS DECIMAL(18,6))) AS qty_dec
+           FROM lineitem GROUP BY 1
+           HAVING sum(CAST(l_quantity AS DECIMAL(18,6))) >= 250)
+         SELECT c_name, o_orderkey, o_totalprice,
+                CAST(CAST(qty_dec * 1000000 AS DECIMAL(38,0)) AS DOUBLE)
+                  / 1000000.0 AS total_qty
+         FROM q JOIN orders ON l_orderkey = o_orderkey
+                JOIN customer ON o_custkey = c_custkey
+         ORDER BY total_qty DESC, o_orderkey"""),
 
     // TPC-H Q22-style dormant rich customers: scalar-subquery threshold
     // (broadcast single row), anti-join against recent (1998) orders,
     // nation rollup. The average is one double division on the exact
     // decimal sum — identical expression tree in the oracle
-    "q_eng_idle_customers" -> ((s, d) => {
+    Q("q_eng_idle_customers", (s, d) => {
       val cust = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_acctbal"), col("c_nationkey"))
       val avgBal = cust.agg(
@@ -1651,7 +2512,25 @@ object EngineQueries {
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("n_cust"), moneySum(col("c_acctbal")).as("total_bal"))
         .orderBy("n_name")
-    }),
+    },
+      """WITH a AS (
+           SELECT CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) * 1000000
+                         AS DECIMAL(38,0)) AS DOUBLE) / 1000000.0
+                    / count(*) AS avg_bal
+           FROM customer),
+         idle AS (
+           SELECT c.c_nationkey, c.c_acctbal
+           FROM customer c, a
+           WHERE c.c_acctbal > a.avg_bal
+             AND NOT EXISTS (SELECT 1 FROM orders o
+                             WHERE o.o_custkey = c.c_custkey
+                               AND year(CAST(o.o_orderdate AS DATE)) = 1998))
+         SELECT n_name, CAST(count(*) AS BIGINT) AS n_cust,
+                CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) * 1000000
+                       AS DECIMAL(38,0)) AS DOUBLE) / 1000000.0
+                  AS total_bal
+         FROM idle JOIN nation ON c_nationkey = n_nationkey
+         GROUP BY 1 ORDER BY n_name"""),
 
     // EWMA of daily revenue — the smoothing every monitoring dashboard
     // wants over an ingest stream. The recurrence e_t = (α·x_t +
@@ -1661,7 +2540,7 @@ object EngineQueries {
     // α = 0.2 in per-mille integer arithmetic: 200·x + 800·e stays exact
     // through day revenues of ~1e16 cents, and the floor division goes
     // through mulDivWide so both engines round identically.
-    "q_eng_ewma" -> ((s, d) => {
+    Q("q_eng_ewma", (s, d) => {
       val daily = Tables.orders(s, d)
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
@@ -1688,7 +2567,30 @@ object EngineQueries {
           col("r.rev_cents").as("rev_cents"),
           col("r.ewma_cents").as("ewma_cents"))
         .orderBy("day")
-    }),
+    },
+      // recursive CTE walks the bounded day series one step per iteration —
+      // the sequential recurrence the Spark side runs via aggregate() on the
+      // collected day array; per-mille integer arithmetic matches exactly
+      """WITH RECURSIVE daily AS (
+           SELECT CAST(o_orderdate AS DATE) AS day,
+                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+                    AS BIGINT) AS rev_cents
+           FROM orders GROUP BY 1),
+         idx AS (
+           SELECT day, rev_cents,
+                  CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
+           FROM daily),
+         r AS (
+           SELECT i, day, rev_cents, rev_cents AS ewma_cents
+           FROM idx WHERE i = 1
+           UNION ALL
+           SELECT idx.i, idx.day, idx.rev_cents,
+                  CAST((200 * CAST(idx.rev_cents AS HUGEINT) +
+                        800 * CAST(r.ewma_cents AS HUGEINT)) // 1000
+                    AS BIGINT)
+           FROM r JOIN idx ON idx.i = r.i + 1)
+         SELECT CAST(day AS VARCHAR) AS day, rev_cents, ewma_cents
+         FROM r ORDER BY day"""),
 
     // one-way ANOVA of order quantity across return flags, fully in exact
     // integer moments (corr_stats discipline): one distributed partial
@@ -1696,7 +2598,7 @@ object EngineQueries {
     // group table, F statistic in ppm via DECIMAL(38) floor division —
     // bit-identical to the HUGEINT oracle. SSB = Σ s_g²/n_g − G²/N,
     // SSW = Σq² − Σ s_g²/n_g, F = (SSB/df_b)/(SSW/df_w).
-    "q_eng_anova" -> ((s, d) => {
+    Q("q_eng_anova", (s, d) => {
       val groups = Tables.lineitem(s, d)
         .select(col("l_returnflag"), col("l_quantity").cast("long").as("q"))
         .groupBy("l_returnflag")
@@ -1713,7 +2615,35 @@ object EngineQueries {
         .select(col("k"), col("n_total"), col("ssb"), col("ssw"),
           mulDivWide(col("ssb"), (col("n_total") - col("k")) * lit(1000000L),
             col("ssw") * (col("k") - lit(1L))).as("f_ppm"))
-    }),
+    },
+      s"""WITH g AS (
+           SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
+                  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS s,
+                  CAST(sum(CAST(l_quantity AS BIGINT) *
+                           CAST(l_quantity AS BIGINT)) AS BIGINT) AS ss,
+                  ${graft.functions.WideDiv.sqlMulDiv(
+                    "sum(CAST(l_quantity AS BIGINT))",
+                    "sum(CAST(l_quantity AS BIGINT))",
+                    "count(*)")} AS contrib
+           FROM lineitem GROUP BY 1),
+         t AS (
+           SELECT CAST(count(*) AS BIGINT) AS k,
+                  CAST(sum(n) AS BIGINT) AS n_total,
+                  CAST(sum(s) AS BIGINT) AS grand_sum,
+                  CAST(sum(ss) AS BIGINT) AS sum_sq,
+                  CAST(sum(contrib) AS BIGINT) AS sum_contrib
+           FROM g),
+         d AS (
+           SELECT k, n_total,
+                  sum_contrib - ${graft.functions.WideDiv.sqlMulDiv(
+                    "grand_sum", "grand_sum", "n_total")} AS ssb,
+                  sum_sq - sum_contrib AS ssw
+           FROM t)
+         SELECT k, n_total, CAST(ssb AS BIGINT) AS ssb,
+                CAST(ssw AS BIGINT) AS ssw,
+                ${graft.functions.WideDiv.sqlMulDiv(
+                  "ssb", "(n_total - k) * 1000000", "ssw * (k - 1)")} AS f_ppm
+         FROM d"""),
 
     // Mann–Kendall trend test on daily revenue: S = Σ_{i<j} sign(x_j−x_i)
     // over the bounded day domain (a few thousand rows at ANY corpus size —
@@ -1730,7 +2660,7 @@ object EngineQueries {
     // a cumulative over the ~day-count table (bounded global window, the
     // drawdown precedent). All integer; the argmax day reported with
     // first-day tiebreak via min_by on (−|U|, day).
-    "q_eng_pettitt" -> ((s, d) => {
+    Q("q_eng_pettitt", (s, d) => {
       val daily = Tables.orders(s, d)
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
@@ -1748,14 +2678,35 @@ object EngineQueries {
         .where(col("au") === col("k_stat"))
         .groupBy(col("n_days"), col("k_stat"))
         .agg(min(col("day")).cast("string").as("change_day"))
-    }),
+    },
+      """WITH daily AS (
+           SELECT CAST(o_orderdate AS DATE) AS day,
+                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+                    AS BIGINT) AS x
+           FROM orders GROUP BY 1),
+         v AS (
+           SELECT a.day AS day,
+                  CAST(sum(CASE WHEN a.x > b.x THEN 1
+                                WHEN a.x < b.x THEN -1 ELSE 0 END) AS BIGINT)
+                    AS v
+           FROM daily a JOIN daily b ON a.day <> b.day GROUP BY 1),
+         u AS (
+           SELECT day,
+                  abs(sum(v) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING))
+                    AS au
+           FROM v),
+         k AS (SELECT CAST(count(*) AS BIGINT) AS n_days,
+                      CAST(max(au) AS BIGINT) AS k_stat
+               FROM u)
+         SELECT n_days, k_stat, CAST(min(day) AS VARCHAR) AS change_day
+         FROM u, k WHERE au = k_stat GROUP BY 1, 2"""),
 
     // Kadane maximum-sum run over day-over-day revenue DELTAS: the
     // "best consecutive growth stretch" scan, exact integer cents. Same
     // sequential-recurrence shape as EWMA/Holt: collect_list over the
     // bounded day domain, aggregate() fold carrying (cur, best, end day),
     // recursive-CTE oracle. First maximal run wins (strict > on update).
-    "q_eng_kadane" -> ((s, d) => {
+    Q("q_eng_kadane", (s, d) => {
       val daily = Tables.orders(s, d)
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
@@ -1788,7 +2739,37 @@ object EngineQueries {
         // so both engines agree on empty output. A REAL best can never be
         // Long.MinValue (deltas are bounded day-revenue differences).
         .where(col("best_run_cents") =!= lit(Long.MinValue))
-    }),
+    },
+      // the recurrence repeats the new-cur expression (SQL cannot reference
+      // a same-SELECT alias); strict > keeps the FIRST maximal run's end day
+      {
+        val newCur = """CASE WHEN dd.delta > r.cur + dd.delta
+                           THEN dd.delta ELSE r.cur + dd.delta END"""
+        s"""WITH RECURSIVE daily AS (
+           SELECT CAST(o_orderdate AS DATE) AS day,
+                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+                    AS BIGINT) AS x
+           FROM orders GROUP BY 1),
+         idx AS (
+           SELECT day, x - lag(x) OVER (ORDER BY day) AS delta,
+                  CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
+           FROM daily),
+         dd AS (SELECT i - 1 AS i, day, CAST(delta AS BIGINT) AS delta
+                FROM idx WHERE delta IS NOT NULL),
+         r AS (
+           SELECT i, delta AS cur, delta AS best, day AS bday
+           FROM dd WHERE i = 1
+           UNION ALL
+           SELECT dd.i, $newCur AS cur,
+                  CASE WHEN $newCur > r.best THEN $newCur
+                       ELSE r.best END AS best,
+                  CASE WHEN $newCur > r.best THEN dd.day
+                       ELSE r.bday END AS bday
+           FROM r JOIN dd ON dd.i = r.i + 1)
+         SELECT CAST(best AS BIGINT) AS best_run_cents,
+                CAST(bday AS VARCHAR) AS best_end_day
+         FROM r ORDER BY i DESC LIMIT 1"""
+      }),
 
     // Partial correlation price↔quantity controlling for discount:
     // EXACT integer moment sums (cents / units / discount-per-mille,
@@ -1799,7 +2780,7 @@ object EngineQueries {
     // DECIMAL(38,0)→DOUBLE is correctly rounded in both engines — probed,
     // SURVEY §8 r7 — and every IEEE op after that is identical), then
     // r_xy.z = (Cxy·Czz − Cxz·Cyz)/√((Cxx·Czz − Cxz²)(Cyy·Czz − Cyz²)).
-    "q_eng_partial_corr" -> ((s, d) => {
+    Q("q_eng_partial_corr", (s, d) => {
       val t = Tables.lineitem(s, d).select(
         floor(col("l_extendedprice") * 100 + lit(0.5)).cast("long").as("x"),
         col("l_quantity").cast("long").as("y"),
@@ -1827,9 +2808,54 @@ object EngineQueries {
             sqrt((col("cxx") * col("czz") - col("cxz") * col("cxz")) *
               (col("cyy") * col("czz") - col("cyz") * col("cyz"))))
             .as("r_xy_given_z"))
-    }),
+    },
+      // HUGEINT moment algebra is exact; the int128→DOUBLE casts are single
+      // correctly-rounded conversions (scale 0 — no second ÷10^k rounding,
+      // the group_ols lesson), after which both engines run identical IEEE
+      """WITH t AS (
+           SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS x,
+                  CAST(l_quantity AS BIGINT) AS y,
+                  CAST(floor(l_discount * 1000 + 0.5) AS BIGINT) AS z
+           FROM lineitem),
+         m AS (
+           SELECT CAST(count(*) AS BIGINT) AS n,
+                  CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+                  CAST(sum(z) AS BIGINT) AS sz,
+                  sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
+                  sum(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS syy,
+                  sum(CAST(z AS HUGEINT) * CAST(z AS HUGEINT)) AS szz,
+                  sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy,
+                  sum(CAST(x AS HUGEINT) * CAST(z AS HUGEINT)) AS sxz,
+                  sum(CAST(y AS HUGEINT) * CAST(z AS HUGEINT)) AS syz
+           FROM t),
+         c AS (
+           SELECT n,
+                  CAST(CAST(n AS HUGEINT) * sxy -
+                       CAST(sx AS HUGEINT) * CAST(sy AS HUGEINT) AS DOUBLE)
+                    AS cxy,
+                  CAST(CAST(n AS HUGEINT) * sxz -
+                       CAST(sx AS HUGEINT) * CAST(sz AS HUGEINT) AS DOUBLE)
+                    AS cxz,
+                  CAST(CAST(n AS HUGEINT) * syz -
+                       CAST(sy AS HUGEINT) * CAST(sz AS HUGEINT) AS DOUBLE)
+                    AS cyz,
+                  CAST(CAST(n AS HUGEINT) * sxx -
+                       CAST(sx AS HUGEINT) * CAST(sx AS HUGEINT) AS DOUBLE)
+                    AS cxx,
+                  CAST(CAST(n AS HUGEINT) * syy -
+                       CAST(sy AS HUGEINT) * CAST(sy AS HUGEINT) AS DOUBLE)
+                    AS cyy,
+                  CAST(CAST(n AS HUGEINT) * szz -
+                       CAST(sz AS HUGEINT) * CAST(sz AS HUGEINT) AS DOUBLE)
+                    AS czz
+           FROM m)
+         SELECT n, cxy / sqrt(cxx * cyy) AS r_xy,
+                (cxy * czz - cxz * cyz) /
+                sqrt((cxx * czz - cxz * cxz) * (cyy * czz - cyz * cyz))
+                  AS r_xy_given_z
+         FROM c"""),
 
-    "q_eng_mann_kendall" -> ((s, d) => {
+    Q("q_eng_mann_kendall", (s, d) => {
       val daily = Tables.orders(s, d)
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
@@ -1850,7 +2876,31 @@ object EngineQueries {
           when(col("var18") === 0L, 0L)
             .otherwise(mulDivWide(wide(col("s_stat")) * wide(col("s_stat")),
               lit(18000000L), col("var18"))).as("z2_micro"))
-    }),
+    },
+      s"""WITH daily AS (
+           SELECT CAST(o_orderdate AS DATE) AS day,
+                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+                    AS BIGINT) AS x
+           FROM orders GROUP BY 1),
+         p AS (
+           SELECT CASE WHEN b.x > a.x THEN 1
+                       WHEN b.x < a.x THEN -1 ELSE 0 END AS sgn
+           FROM daily a JOIN daily b ON a.day < b.day),
+         st AS (SELECT CAST(sum(sgn) AS BIGINT) AS s_stat FROM p),
+         tg AS (SELECT CAST(count(*) AS BIGINT) AS t FROM daily GROUP BY x),
+         ti AS (
+           SELECT CAST(sum(t) AS BIGINT) AS n_days,
+                  CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term
+           FROM tg),
+         v AS (
+           SELECT n_days, s_stat,
+                  n_days * (n_days - 1) * (2 * n_days + 5) - tie_term AS var18
+           FROM st, ti)
+         SELECT n_days, s_stat, var18,
+                CASE WHEN var18 = 0 THEN 0 ELSE ${graft.functions.WideDiv
+                  .sqlMulDiv("s_stat", "CAST(s_stat AS HUGEINT) * 18000000",
+                    "var18")} END AS z2_micro
+         FROM v"""),
 
     // Theil–Sen robust trend: the LOWER MEDIAN of all pairwise slopes
     // (x_j−x_i)/(d_j−d_i) over the bounded day domain, each slope held as
@@ -1864,7 +2914,7 @@ object EngineQueries {
     // rows re-ranked with a bucket-partitioned row_number. The O(days²)
     // slope table (≈3M rows for a decade of days) is CONSTANT in corpus
     // size — only `daily` touches fact-scale data.
-    "q_eng_theil_sen" -> ((s, d) => {
+    Q("q_eng_theil_sen", (s, d) => {
       import graft.functions.WideDiv.mulDivWideSigned
       val daily = Tables.orders(s, d)
         .groupBy(to_date(col("o_orderdate")).as("day"))
@@ -1909,14 +2959,31 @@ object EngineQueries {
           s.range(1).select(lit(m).as("n_pairs"),
             lit(median).as("slope_micro_median"))
       }
-    }),
+    },
+      s"""WITH daily AS (
+           SELECT CAST(o_orderdate AS DATE) AS day,
+                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+                    AS BIGINT) AS x
+           FROM orders GROUP BY 1),
+         sl AS (
+           SELECT ${graft.functions.WideDiv.sqlMulDivSigned("b.x - a.x",
+             "1000000", "date_diff('day', a.day, b.day)")} AS slope_micro
+           FROM daily a JOIN daily b ON a.day < b.day),
+         r AS (
+           SELECT slope_micro,
+                  CAST(row_number() OVER (ORDER BY slope_micro) AS BIGINT)
+                    AS rk,
+                  CAST(count(*) OVER () AS BIGINT) AS m
+           FROM sl)
+         SELECT m AS n_pairs, slope_micro AS slope_micro_median
+         FROM r WHERE rk = (m + 1) // 2"""),
 
     // gaps-and-islands dual of q_eng_order_gaps: longest streak of
     // CONSECUTIVE order months per customer (island id = month index −
     // dense_rank, the classic tabulation), rolled into a streak-length
     // histogram. Both windows partition by customer — per-key state only,
     // no global window, scales with the customer-key shuffle.
-    "q_eng_streaks" -> ((s, d) => {
+    Q("q_eng_streaks", (s, d) => {
       val w = Window.partitionBy(col("o_custkey")).orderBy(col("m"))
       val months = Tables.orders(s, d)
         .select(col("o_custkey"),
@@ -1932,7 +2999,25 @@ object EngineQueries {
         .groupBy(col("best").as("streak_months"))
         .agg(count(lit(1)).as("n_customers"))
         .orderBy("streak_months")
-    }),
+    },
+      """WITH months AS (
+           SELECT DISTINCT o_custkey,
+                  CAST(year(CAST(o_orderdate AS DATE)) * 12 +
+                       month(CAST(o_orderdate AS DATE)) AS BIGINT) AS m
+           FROM orders),
+         isl AS (
+           SELECT o_custkey,
+                  m - dense_rank() OVER (PARTITION BY o_custkey ORDER BY m)
+                    AS island
+           FROM months),
+         runs AS (
+           SELECT o_custkey, island, CAST(count(*) AS BIGINT) AS len
+           FROM isl GROUP BY 1, 2),
+         best AS (
+           SELECT o_custkey, max(len) AS best FROM runs GROUP BY 1)
+         SELECT best AS streak_months,
+                CAST(count(*) AS BIGINT) AS n_customers
+         FROM best GROUP BY 1 ORDER BY streak_months"""),
 
     // Holt double-exponential smoothing (level + linear trend) over daily
     // revenue — the forecasting dual of q_eng_ewma. Same scalable shape:
@@ -1942,7 +3027,7 @@ object EngineQueries {
     // exact per-mille integers; the trend state goes NEGATIVE on downturns,
     // so division is the SIGNED truncating variant (DuckDB `//` truncates
     // toward zero — mulDivWideSigned mirrors that, not floor).
-    "q_eng_holt" -> ((s, d) => {
+    Q("q_eng_holt", (s, d) => {
       import graft.functions.WideDiv.mulDivWideSigned
       val daily = Tables.orders(s, d)
         .groupBy(to_date(col("o_orderdate")).as("day"))
@@ -1978,7 +3063,41 @@ object EngineQueries {
           col("r.trend_cents").as("trend_cents"),
           (col("r.level_cents") + col("r.trend_cents")).as("forecast_cents"))
         .orderBy("day")
-    }),
+    },
+      // the trend recurrence repeats the level expression (SQL cannot
+      // reference a same-SELECT alias); HUGEINT `//` truncates toward zero,
+      // matching mulDivWideSigned exactly on the signed trend
+      """WITH RECURSIVE daily AS (
+           SELECT CAST(o_orderdate AS DATE) AS day,
+                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+                    AS BIGINT) AS rev_cents
+           FROM orders GROUP BY 1),
+         idx AS (
+           SELECT day, rev_cents,
+                  CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
+           FROM daily),
+         r AS (
+           SELECT i, day, rev_cents, rev_cents AS level_cents,
+                  CAST(0 AS BIGINT) AS trend_cents
+           FROM idx WHERE i = 1
+           UNION ALL
+           SELECT idx.i, idx.day, idx.rev_cents,
+                  CAST((300 * CAST(idx.rev_cents AS HUGEINT) +
+                        700 * (CAST(r.level_cents AS HUGEINT) +
+                               CAST(r.trend_cents AS HUGEINT))) // 1000
+                    AS BIGINT),
+                  CAST((200 * (CAST((300 * CAST(idx.rev_cents AS HUGEINT) +
+                                     700 * (CAST(r.level_cents AS HUGEINT) +
+                                            CAST(r.trend_cents AS HUGEINT)))
+                                    // 1000 AS HUGEINT) -
+                               CAST(r.level_cents AS HUGEINT)) +
+                        800 * CAST(r.trend_cents AS HUGEINT)) // 1000
+                    AS BIGINT)
+           FROM r JOIN idx ON idx.i = r.i + 1)
+         SELECT CAST(day AS VARCHAR) AS day, rev_cents, level_cents,
+                trend_cents,
+                CAST(level_cents + trend_cents AS BIGINT) AS forecast_cents
+         FROM r ORDER BY day"""),
 
     // Right-censored survival analysis over customer lifetimes: duration =
     // first→last order date per customer, churn event iff the last order
@@ -1988,7 +3107,7 @@ object EngineQueries {
     // fact-sized pass; the risk-set and cumulative windows run over the
     // DISTINCT-DURATION domain, bounded by the fixture's date range in
     // days — not keys-sized, safe at any row count.
-    "q_eng_survival" -> ((s, d) => {
+    Q("q_eng_survival", (s, d) => {
       val cust = Tables.orders(s, d)
         .groupBy(col("o_custkey"))
         .agg(min(to_date(col("o_orderdate"))).as("firstd"),
@@ -2012,7 +3131,34 @@ object EngineQueries {
         .select(col("t").as("duration_days"), col("d").as("n_events"),
           col("n_at_risk"), col("hazard_pico"), col("cum_hazard_pico"))
         .orderBy("duration_days")
-    }),
+    },
+      s"""WITH cust AS (
+            SELECT o_custkey, min(CAST(o_orderdate AS DATE)) AS firstd,
+                   max(CAST(o_orderdate AS DATE)) AS lastd
+            FROM orders GROUP BY 1),
+          mx AS (SELECT max(lastd) AS maxd FROM cust),
+          byt AS (
+            SELECT CAST(date_diff('day', firstd, lastd) AS BIGINT) AS t,
+                   CAST(count(*) AS BIGINT) AS c,
+                   CAST(sum(CASE WHEN lastd < maxd - INTERVAL 90 DAY
+                                 THEN 1 ELSE 0 END) AS BIGINT) AS d
+            FROM cust, mx GROUP BY 1),
+          r AS (
+            SELECT t, d,
+                   CAST(sum(c) OVER (ORDER BY t DESC
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                     AS BIGINT) AS n_at_risk
+            FROM byt),
+          h AS (
+            SELECT t, d, n_at_risk,
+                   ${graft.functions.WideDiv.sqlMulDiv(
+                     "d", "1000000000000", "n_at_risk")} AS hazard_pico
+            FROM r)
+          SELECT t AS duration_days, d AS n_events, n_at_risk, hazard_pico,
+                 CAST(sum(hazard_pico) OVER (ORDER BY t
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   AS BIGINT) AS cum_hazard_pico
+          FROM h ORDER BY duration_days"""),
 
     // Classical seasonal decomposition of monthly revenue: trend = centered
     // 12-month moving average (full windows only), seasonal index = mean
@@ -2020,7 +3166,7 @@ object EngineQueries {
     // SIGNED, so their mean uses the truncating signed division. Windows
     // run over the bounded month domain (~84 rows); the seasonal-index
     // table (12 rows) broadcasts back onto it.
-    "q_eng_seasonal" -> ((s, d) => {
+    Q("q_eng_seasonal", (s, d) => {
       import graft.functions.WideDiv.mulDivWideSigned
       val monthly = Tables.orders(s, d)
         .groupBy((year(to_date(col("o_orderdate"))) * 100 +
@@ -2045,7 +3191,35 @@ object EngineQueries {
           col("seasonal_cents"),
           (col("detrended") - col("seasonal_cents")).as("residual_cents"))
         .orderBy("m")
-    }),
+    },
+      """WITH monthly AS (
+           SELECT CAST(year(CAST(o_orderdate AS DATE)) * 100 +
+                       month(CAST(o_orderdate AS DATE)) AS BIGINT) AS m,
+                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+                    AS BIGINT) AS rev_cents
+           FROM orders GROUP BY 1),
+         win AS (
+           SELECT m, rev_cents,
+                  count(*) OVER w AS wn,
+                  CAST(sum(rev_cents) OVER w AS BIGINT) AS wsum
+           FROM monthly
+           WINDOW w AS (ORDER BY m ROWS BETWEEN 6 PRECEDING AND 5 FOLLOWING)),
+         trended AS (
+           SELECT m, rev_cents,
+                  CAST(CAST(wsum AS HUGEINT) // 12 AS BIGINT) AS trend_cents,
+                  CAST(rev_cents - CAST(CAST(wsum AS HUGEINT) // 12 AS BIGINT)
+                    AS BIGINT) AS detrended
+           FROM win WHERE wn = 12),
+         seasonal AS (
+           SELECT m % 100 AS moy,
+                  CAST(CAST(sum(detrended) AS HUGEINT) // count(*) AS BIGINT)
+                    AS seasonal_cents
+           FROM trended GROUP BY 1)
+         SELECT t.m, t.rev_cents, t.trend_cents, s.seasonal_cents,
+                CAST(t.detrended - s.seasonal_cents AS BIGINT)
+                  AS residual_cents
+         FROM trended t JOIN seasonal s ON t.m % 100 = s.moy
+         ORDER BY t.m"""),
 
     // Link prediction on the co-purchase graph: common-neighbor counts and
     // neighborhood Jaccard for part pairs. Wedges enumerate ONLY through
@@ -2056,7 +3230,7 @@ object EngineQueries {
     // this fixture no pair reaches 3 common low-hub neighbors at any SF,
     // so the higher threshold made the gate vacuous (r7 verdict). Top-100
     // via TakeOrderedAndProject with a total-order tiebreak.
-    "q_eng_common_neighbors" -> ((s, d) => {
+    Q("q_eng_common_neighbors", (s, d) => {
       val e = QueryCaches.memo(s, d, "tri_edges") {
         val op = Tables.lineitem(s, d)
           .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
@@ -2111,7 +3285,29 @@ object EngineQueries {
             .as("jaccard_ppm"))
         .orderBy(desc("jaccard_ppm"), col("x"), col("y"))
         .limit(100)
-    }),
+    },
+      s"""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+                      FROM lineitem),
+          e AS (SELECT DISTINCT a.p AS u, b.p AS v
+                FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+          und AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
+          deg AS (SELECT u AS n, CAST(count(*) AS BIGINT) AS deg
+                  FROM und GROUP BY 1),
+          lowhub AS (
+            SELECT und.u, und.v FROM und
+            JOIN deg ON deg.n = und.v WHERE deg.deg <= 64),
+          wedges AS (
+            SELECT a.u AS x, b.u AS y, CAST(count(*) AS BIGINT) AS cn
+            FROM lowhub a JOIN lowhub b ON a.v = b.v AND a.u < b.u
+            GROUP BY 1, 2 HAVING count(*) >= 2)
+          SELECT w.x, w.y, w.cn,
+                 ${graft.functions.WideDiv.sqlPpm(
+                   "w.cn", "dx.deg + dy.deg - w.cn")} AS jaccard_ppm
+          FROM wedges w
+          JOIN deg dx ON dx.n = w.x
+          JOIN deg dy ON dy.n = w.y
+          ORDER BY jaccard_ppm DESC, w.x, w.y
+          LIMIT 100"""),
 
     // CEP sequence detection, batch twin gated cross-engine (r7 ask #3):
     // greedy-earliest NON-OVERLAPPING view→click→purchase per user within
@@ -2126,7 +3322,7 @@ object EngineQueries {
     // for post-1970 timestamps (Timestamp.getTime / epoch_ms), and the
     // fixture has no same-user same-millisecond ties at any SF, so the
     // ts-only sort is total.
-    "q_eng_funnel_sequence" -> ((s, d) => {
+    Q("q_eng_funnel_sequence", (s, d) => {
       import s.implicits._
       val ev = Tables.events(s, d)
         .where(col("event_type").isin("view", "click", "purchase"))
@@ -2139,7 +3335,49 @@ object EngineQueries {
         .select(col("user_id"), unix_millis(col("start_ts")).as("start_ms"),
           unix_millis(col("end_ts")).as("end_ms"), col("span_ms"))
         .orderBy("user_id", "start_ms")
-    }),
+    },
+      // recursive-CTE replay of PatternMatch.detectBatch's greedy fold: one
+      // recursion step per (user, event index). `eff` = the partial's stage
+      // AFTER span expiry (expiry runs before matching, exactly like the
+      // Scala fold); a completed match emits (hit_start, hit_end) on the
+      // step row and resets to stage 0.
+      {
+        val span = 259200000L
+        val eff = s"CASE WHEN s.stage > 0 AND e.t - s.start_ms > $span " +
+          "THEN 0 ELSE s.stage END"
+        val effStart = s"CASE WHEN s.stage > 0 AND e.t - s.start_ms > $span " +
+          "THEN NULL ELSE s.start_ms END"
+        val done = s"($eff) = 2 AND e.event_type = 'purchase'"
+        s"""WITH RECURSIVE ev AS (
+           SELECT user_id, epoch_ms(ts) AS t, event_type,
+                  CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts)
+                    AS BIGINT) AS i
+           FROM events
+           WHERE event_type IN ('view', 'click', 'purchase')),
+         n AS (SELECT user_id FROM ev GROUP BY 1),
+         step AS (
+           SELECT user_id, CAST(1 AS BIGINT) AS i, 0 AS stage,
+                  CAST(NULL AS BIGINT) AS start_ms,
+                  CAST(NULL AS BIGINT) AS hit_start,
+                  CAST(NULL AS BIGINT) AS hit_end
+           FROM n
+           UNION ALL
+           SELECT s.user_id, s.i + 1,
+                  CASE WHEN $done THEN 0
+                       WHEN ($eff) = 0 AND e.event_type = 'view' THEN 1
+                       WHEN ($eff) = 1 AND e.event_type = 'click' THEN 2
+                       ELSE ($eff) END AS stage,
+                  CASE WHEN $done THEN NULL
+                       WHEN ($eff) = 0 AND e.event_type = 'view' THEN e.t
+                       ELSE ($effStart) END AS start_ms,
+                  CASE WHEN $done THEN ($effStart) END AS hit_start,
+                  CASE WHEN $done THEN e.t END AS hit_end
+           FROM step s JOIN ev e ON e.user_id = s.user_id AND e.i = s.i)
+         SELECT user_id, hit_start AS start_ms, hit_end AS end_ms,
+                hit_end - hit_start AS span_ms
+         FROM step WHERE hit_end IS NOT NULL
+         ORDER BY user_id, start_ms"""
+      }),
 
     // DeepWalk corpus generation — the preprocessing that turns a graph
     // into skip-gram training pairs: one deterministic 4-step random walk
@@ -2150,7 +3388,7 @@ object EngineQueries {
     // rows, each step ONE equi-join on (node, neighbor-index) against
     // the adjacency (never a per-node collect); the pair join is per-walk
     // bounded (5 positions). Top-50 by support, fully tie-broken.
-    "q_eng_deepwalk_pairs" -> ((s, d) => {
+    Q("q_eng_deepwalk_pairs", (s, d) => {
       // memoized per (session, sf): the 5-branch union otherwise re-plans
       // the lineitem scan + adjacency window per branch AND per step
       // (measured 6.8 s → the adjacency builds once here)
@@ -2186,1434 +3424,16 @@ object EngineQueries {
         .agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("center"), col("context"))
         .limit(50)
-    })
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_eng_pricing_summary" ->
-      s"""SELECT l_returnflag, l_linestatus,
-                 ${sqlMoneySum("l_quantity")} AS sum_qty,
-                 ${sqlMoneySum("l_extendedprice")} AS sum_base_price,
-                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS sum_disc_price,
-                 count(*) AS count_order,
-                 ${sqlMoneySum("l_quantity")} / count(*) AS avg_qty
-          FROM lineitem
-          GROUP BY l_returnflag, l_linestatus
-          ORDER BY l_returnflag, l_linestatus""",
-
-    "q_eng_join_nation_revenue" ->
-      s"""SELECT r_name, n_name, count(*) AS n_orders,
-                 ${sqlMoneySum("o_totalprice")} AS revenue
-          FROM orders
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation ON c_nationkey = n_nationkey
-          JOIN region ON n_regionkey = r_regionkey
-          GROUP BY r_name, n_name
-          ORDER BY r_name, n_name""",
-
-    "q_eng_join_brand_revenue" ->
-      s"""SELECT p_brand, count(*) AS n_items,
-                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-          GROUP BY p_brand ORDER BY p_brand""",
-
-    "q_eng_weekday_seasonality" ->
-      s"""WITH o AS (
-            SELECT ((datediff('day', TIMESTAMP '1995-01-02', o_orderdate) % 7)
-                    + 7) % 7 AS dow,
-                   o_totalprice
-            FROM orders),
-          t AS (SELECT CAST(count(*) AS BIGINT) AS nt FROM o),
-          g AS (
-            SELECT CAST(dow AS BIGINT) AS dow,
-                   CAST(count(*) AS BIGINT) AS n_orders,
-                   ${sqlMoneySum("o_totalprice")} AS revenue
-            FROM o GROUP BY 1)
-          SELECT dow, n_orders, revenue,
-                 CAST(n_orders * 1000000 // t.nt AS BIGINT) AS share_ppm
-          FROM g, t ORDER BY dow""",
-
-    "q_eng_lorenz" ->
-      """WITH r AS (
-           SELECT o_custkey,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS cents
-           FROM orders GROUP BY 1),
-         n AS (SELECT CAST(count(*) AS BIGINT) AS nc FROM r),
-         rk AS (
-           SELECT cents,
-                  CAST(row_number() OVER (ORDER BY cents DESC, o_custkey)
-                    AS BIGINT) AS rk
-           FROM r),
-         dec AS (
-           SELECT (rk - 1) * 10 // nc AS decile, cents FROM rk, n),
-         pd AS (
-           SELECT CAST(decile AS BIGINT) AS decile,
-                  CAST(count(*) AS BIGINT) AS n_customers,
-                  CAST(sum(cents) AS BIGINT) AS dc
-           FROM dec GROUP BY 1),
-         t AS (SELECT CAST(sum(dc) AS BIGINT) AS tc FROM pd),
-         c AS (
-           SELECT decile, n_customers,
-                  CAST(sum(dc) OVER (ORDER BY decile
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS cum
-           FROM pd)
-         SELECT decile, n_customers,
-                CAST(CAST(cum AS HUGEINT) * 1000000 // CAST(t.tc AS HUGEINT)
-                  AS BIGINT) AS cum_share_ppm
-         FROM c, t ORDER BY decile""",
-
-    "q_eng_order_gaps" ->
-      """WITH g AS (
-           SELECT datediff('day',
-                    lag(o_orderdate) OVER (PARTITION BY o_custkey
-                      ORDER BY o_orderdate, o_orderkey),
-                    o_orderdate) AS gap_days
-           FROM orders)
-         SELECT CAST(gap_days // 7 AS BIGINT) AS gap_week,
-                CAST(count(*) AS BIGINT) AS n_gaps
-         FROM g WHERE gap_days IS NOT NULL
-         GROUP BY 1 ORDER BY gap_week""",
-
-    "q_eng_basket_pairs" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                     FROM lineitem),
-         pr AS (SELECT a.p AS pa, b.p AS pb, CAST(count(*) AS BIGINT) AS support
-                FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
-                GROUP BY 1, 2 HAVING count(*) >= 3),
-         c AS (SELECT p, CAST(count(*) AS BIGINT) AS c FROM op GROUP BY 1),
-         n AS (SELECT CAST(count(DISTINCT o) AS BIGINT) AS n FROM op)
-         SELECT pa, pb, support,
-                CAST(CAST(support AS HUGEINT) * n.n * 1000000
-                     // (CAST(ca.c AS HUGEINT) * cb.c) AS BIGINT)
-                  AS lift_ppm
-         FROM pr
-         JOIN c ca ON ca.p = pa
-         JOIN c cb ON cb.p = pb
-         CROSS JOIN n
-         ORDER BY pa, pb""",
-
-    "q_eng_volume_shipping" ->
-      s"""SELECT supp_nation, cust_nation, l_year, count(*) AS n_lines,
-                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
-          FROM (
-            SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                   CAST(year(l_shipdate) AS BIGINT) AS l_year,
-                   l_extendedprice, l_discount
-            FROM lineitem
-            JOIN supplier ON l_suppkey = s_suppkey
-            JOIN nation n1 ON s_nationkey = n1.n_nationkey
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation n2 ON c_nationkey = n2.n_nationkey
-            WHERE year(l_shipdate) IN (1995, 1996)
-              AND n1.n_name IN ('NATION_3', 'NATION_7')
-              AND n2.n_name IN ('NATION_3', 'NATION_7')
-              AND n1.n_name <> n2.n_name)
-          GROUP BY 1, 2, 3
-          ORDER BY supp_nation, cust_nation, l_year""",
-
-    "q_eng_drawdown" ->
-      s"""WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  ${sqlMoneySum("o_totalprice")} AS rev
-           FROM orders GROUP BY 1),
-         r AS (
-           SELECT day, rev,
-                  max(rev) OVER (ORDER BY day
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_max
-           FROM daily),
-         d AS (SELECT day, run_max, run_max - rev AS dd FROM r),
-         k AS (SELECT day, run_max, dd,
-                      row_number() OVER (ORDER BY dd DESC, day DESC) AS rk
-               FROM d)
-         SELECT CAST(day AS VARCHAR) AS trough_day, dd AS max_drawdown,
-                run_max AS peak_rev
-         FROM k WHERE rk = 1""",
-
-    "q_eng_weighted_median" ->
-      """WITH li AS (
-           SELECT l_returnflag AS grp, l_extendedprice AS v,
-                  CAST(l_quantity AS BIGINT) AS wt, l_orderkey, l_linenumber
-           FROM lineitem),
-         c AS (
-           SELECT grp, v,
-                  CAST(sum(wt) OVER (PARTITION BY grp
-                    ORDER BY v, l_orderkey, l_linenumber) AS BIGINT) AS cw
-           FROM li),
-         t AS (SELECT grp, CAST(sum(wt) AS BIGINT) AS tw FROM li GROUP BY 1)
-         SELECT c.grp, min_by(v, cw) AS w_median, min(tw) AS total_weight
-         FROM c JOIN t ON c.grp = t.grp
-         WHERE cw * 2 >= tw
-         GROUP BY 1 ORDER BY c.grp""",
-
-    "q_eng_running_distinct" ->
-      """WITH f AS (
-           SELECT user_id, min(CAST(ts AS DATE)) AS day
-           FROM events GROUP BY 1),
-         p AS (SELECT day, CAST(count(*) AS BIGINT) AS new_users
-               FROM f GROUP BY 1)
-         SELECT CAST(day AS VARCHAR) AS day, new_users,
-                CAST(sum(new_users) OVER (ORDER BY day) AS BIGINT) AS cum_users
-         FROM p ORDER BY day""",
-
-    "q_eng_interval_coverage" ->
-      """WITH iv AS (
-           SELECT l_suppkey AS supp,
-                  CAST(datediff('day', TIMESTAMP '1995-01-01', o_orderdate)
-                    AS BIGINT) AS d0,
-                  CAST(datediff('day', TIMESTAMP '1995-01-01', l_shipdate)
-                    AS BIGINT) + 1 AS d1
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           WHERE l_shipdate >= o_orderdate),
-         ev AS (
-           SELECT supp, day, CAST(sum(delta) AS BIGINT) AS delta FROM (
-             SELECT supp, d0 AS day, 1 AS delta FROM iv
-             UNION ALL
-             SELECT supp, d1 AS day, -1 AS delta FROM iv)
-           GROUP BY 1, 2),
-         run AS (
-           SELECT supp, day,
-                  CAST(sum(delta) OVER (PARTITION BY supp ORDER BY day)
-                    AS BIGINT) AS open,
-                  lead(day) OVER (PARTITION BY supp ORDER BY day) AS next_day
-           FROM ev)
-         SELECT supp,
-                CAST(sum(CASE WHEN open > 0 AND next_day IS NOT NULL
-                              THEN next_day - day ELSE 0 END) AS BIGINT)
-                  AS covered_days,
-                CAST(max(open) AS BIGINT) AS peak_open
-         FROM run GROUP BY 1 ORDER BY supp""",
-
-    "q_eng_skew_report" ->
-      """WITH c AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS cnt
-                    FROM orders GROUP BY 1),
-         r AS (SELECT cnt, o_custkey,
-                      CAST(row_number() OVER (ORDER BY cnt ASC, o_custkey ASC)
-                        AS BIGINT) AS i,
-                      CAST(row_number() OVER (ORDER BY cnt DESC, o_custkey ASC)
-                        AS BIGINT) AS r
-               FROM c),
-         a AS (SELECT CAST(count(*) AS BIGINT) AS n_keys,
-                      CAST(sum(cnt) AS BIGINT) AS total,
-                      CAST(max(cnt) AS BIGINT) AS max_cnt,
-                      CAST(sum(CASE WHEN r <= 10 THEN cnt ELSE 0 END) AS BIGINT)
-                        AS top10,
-                      CAST(sum(i * cnt) AS BIGINT) AS sic
-               FROM r)
-         SELECT n_keys, total, max_cnt,
-                CAST(CAST(top10 AS HUGEINT) * 1000000
-                     // CAST(total AS HUGEINT) AS BIGINT) AS top10_share_ppm,
-                CAST((2 * CAST(sic AS HUGEINT) - (n_keys + 1) * CAST(total AS HUGEINT))
-                     * 1000000
-                     // (CAST(n_keys AS HUGEINT) * total) AS BIGINT) AS gini_ppm
-         FROM a""",
-
-    "q_eng_ht_estimate" ->
-      s"""WITH o AS (
-           SELECT o_totalprice,
-                  CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 4)
-                    AS BIGINT) AS b
-           FROM orders)
-         SELECT CAST(count(CASE WHEN b < 6554 THEN 1 END) AS BIGINT) AS n_sampled,
-                ${graft.functions.WideDiv.sqlDecSumToDouble(
-                  "sum(CASE WHEN b < 6554 THEN " +
-                  "CAST(o_totalprice AS DECIMAL(18,6)) END)")}
-                  * (65536.0 / 6554.0) AS ht_total,
-                ${graft.functions.WideDiv.sqlDecSumToDouble(
-                  "sum(CAST(o_totalprice AS DECIMAL(18,6)))")}
-                  AS true_total
-         FROM o""",
-
-    "q_eng_group_ols" ->
-      """WITH o AS (
-           SELECT o_orderpriority AS grp,
-                  CAST(datediff('day', TIMESTAMP '1995-01-01', o_orderdate)
-                    AS BIGINT) AS x,
-                  CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS yc
-           FROM orders),
-         m AS (
-           SELECT grp, CAST(count(*) AS BIGINT) AS n,
-                  CAST(sum(x) AS BIGINT) AS sx,
-                  CAST(sum(x * x) AS BIGINT) AS sxx,
-                  CAST(sum(CAST(yc AS DECIMAL(38,0))) AS DOUBLE) / 100.0 AS sy,
-                  CAST(sum(CAST(x * yc AS DECIMAL(38,0))) AS DOUBLE) / 100.0
-                    AS sxy
-           FROM o GROUP BY 1),
-         s AS (
-           SELECT grp, n, sx, sy,
-                  (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-                    / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS slope
-           FROM m)
-         SELECT grp, n, slope,
-                (sy - slope * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE) AS intercept
-         FROM s ORDER BY grp""",
-
-    // textbook correlated EXISTS — independent of the Spark semi join
-    "q_eng_order_priority" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
-         FROM orders
-         WHERE EXISTS (SELECT 1 FROM lineitem
-                       WHERE l_orderkey = o_orderkey
-                         AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-         GROUP BY 1 ORDER BY 1""",
-
-    "q_eng_small_qty_revenue" ->
-      s"""WITH b AS (
-           SELECT l_partkey, l_quantity, l_extendedprice,
-                  ${graft.functions.WideDiv.sqlDecSumToDouble(
-                    "sum(CAST(l_quantity AS DECIMAL(18,6))) " +
-                    "OVER (PARTITION BY l_partkey)")}
-                    / count(*) OVER (PARTITION BY l_partkey) AS avg_qty
-           FROM lineitem JOIN part ON l_partkey = p_partkey
-           WHERE p_brand = 'Brand#11')
-         SELECT CAST(count(*) AS BIGINT) AS n_lines,
-                ${sqlMoneySum("l_extendedprice")} / 7.0
-                  AS avg_yearly
-         FROM b WHERE l_quantity < 0.5 * avg_qty""",
-
-    "q_eng_disjunctive" ->
-      s"""SELECT CAST(count(*) AS BIGINT) AS n_lines,
-                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-          WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-                 AND l_quantity BETWEEN 1 AND 11)
-             OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
-                 AND l_quantity BETWEEN 10 AND 20)
-             OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
-                 AND l_quantity BETWEEN 20 AND 30)""",
-
-    // textbook double EXISTS / NOT EXISTS — proves the Spark side's
-    // per-order aggregate rewrite
-    "q_eng_waiting_supplier" ->
-      """WITH r AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-                    WHERE l_returnflag = 'R'),
-         a AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem)
-         SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-         FROM r JOIN supplier ON r.l_suppkey = s_suppkey
-         WHERE EXISTS (SELECT 1 FROM a
-                       WHERE a.l_orderkey = r.l_orderkey
-                         AND a.l_suppkey <> r.l_suppkey)
-           AND NOT EXISTS (SELECT 1 FROM r r2
-                           WHERE r2.l_orderkey = r.l_orderkey
-                             AND r2.l_suppkey <> r.l_suppkey)
-         GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 20""",
-
-    "q_eng_sql_correlated" ->
-      """SELECT c_custkey, c_name,
-                (SELECT count(*) FROM orders o
-                 WHERE o.o_custkey = c.c_custkey
-                   AND o.o_orderpriority = '1-URGENT') AS n_urgent
-         FROM customer c
-         WHERE EXISTS (SELECT 1 FROM orders o
-                       WHERE o.o_custkey = c.c_custkey
-                         AND o.o_totalprice > 400000)
-         ORDER BY c_custkey""",
-
-    "q_eng_local_supplier" ->
-      s"""SELECT n_name,
-                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
-          FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-          JOIN nation ON s_nationkey = n_nationkey
-          JOIN region ON n_regionkey = r_regionkey
-          WHERE r_name = 'ASIA'
-            AND o_orderdate >= TIMESTAMP '1996-01-01'
-            AND o_orderdate < TIMESTAMP '1997-01-01'
-          GROUP BY n_name
-          ORDER BY revenue DESC, n_name""",
-
-    "q_eng_shipping_priority" ->
-      s"""WITH o AS (SELECT o_orderkey FROM orders
-                     WHERE o_orderpriority = '1-URGENT'
-                       AND o_orderdate < TIMESTAMP '1998-06-01'),
-          a AS (SELECT l_orderkey AS o_orderkey,
-                       ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
-                FROM lineitem JOIN o ON l_orderkey = o.o_orderkey
-                WHERE l_shipdate > TIMESTAMP '1998-06-01'
-                GROUP BY 1)
-          SELECT o_orderkey, revenue FROM a
-          ORDER BY revenue DESC, o_orderkey LIMIT 10""",
-
-    "q_eng_market_share" ->
-      s"""WITH sup AS (SELECT s_suppkey, n_name
-                       FROM supplier JOIN nation ON s_nationkey = n_nationkey),
-          a AS (SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-                       ${graft.functions.WideDiv.sqlDecSumToDouble(
-                         "sum(CAST(CASE WHEN n_name = 'NATION_7' " +
-                         "THEN l_extendedprice * (1.0 - l_discount) " +
-                         "ELSE 0.0 END AS DECIMAL(18,6)))")} AS nation_rev,
-                       ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS total_rev
-                FROM lineitem
-                JOIN orders ON l_orderkey = o_orderkey
-                JOIN sup ON l_suppkey = s_suppkey
-                GROUP BY 1)
-          SELECT o_year, nation_rev, total_rev,
-                 nation_rev / total_rev AS share
-          FROM a ORDER BY o_year""",
-
-    "q_eng_window_top_orders" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn
-         FROM (SELECT o_custkey, o_orderkey, o_totalprice,
-                      CAST(row_number() OVER
-                        (PARTITION BY o_custkey
-                         ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rn
-               FROM orders)
-         WHERE rn <= 3 ORDER BY o_custkey, rn""",
-
-    "q_eng_window_funcs" ->
-      """SELECT o_orderkey, o_orderpriority, o_totalprice,
-                CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-                percent_rank() OVER w AS pct_rank,
-                o_totalprice - lag(o_totalprice, 1) OVER w AS price_gap
-         FROM orders
-         WINDOW w AS (PARTITION BY o_orderpriority
-                      ORDER BY o_totalprice, o_orderkey)
-         ORDER BY o_orderkey""",
-
-    "q_eng_salted_count" ->
-      """SELECT l_returnflag, count(*) AS n FROM lineitem
-         GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    "q_eng_approx_distinct" ->
-      """SELECT count(DISTINCT l_partkey) AS n_exact, true AS within_5pct
-         FROM lineitem""",
-
-    "q_eng_salted_join" ->
-      s"""SELECT p_brand, count(*) AS n_items,
-                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-          GROUP BY p_brand ORDER BY p_brand""",
-
-    // replays the bucketed join over the RAW parquet tables — equality
-    // proves the bucketed write+read round-trip is lossless and the
-    // zero-exchange plan computes the plain join's answer
-    "q_eng_bucketed_join" ->
-      """WITH j AS (
-           SELECT o.o_orderkey,
-                  CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS oc,
-                  CAST(floor(l.l_quantity + 0.5) AS BIGINT) AS qty,
-                  CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT) AS lc
-           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey)
-         SELECT o_orderkey, CAST(max(oc) AS BIGINT) AS o_cents,
-                CAST(count(*) AS BIGINT) AS n_items,
-                CAST(sum(qty) AS BIGINT) AS sum_qty,
-                CAST(sum(lc) AS BIGINT) AS sum_cents
-         FROM j GROUP BY o_orderkey
-         ORDER BY sum_cents DESC, o_orderkey LIMIT 20""",
-
-    // identical replay: the mixed-bucket-count (16 ⋈ 32, coalesced) join
-    // must land exactly the raw-parquet join's answer
-    "q_eng_bucketed_join_coalesce" ->
-      """WITH j AS (
-           SELECT o.o_orderkey,
-                  CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS oc,
-                  CAST(floor(l.l_quantity + 0.5) AS BIGINT) AS qty,
-                  CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT) AS lc
-           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey)
-         SELECT o_orderkey, CAST(max(oc) AS BIGINT) AS o_cents,
-                CAST(count(*) AS BIGINT) AS n_items,
-                CAST(sum(qty) AS BIGINT) AS sum_qty,
-                CAST(sum(lc) AS BIGINT) AS sum_cents
-         FROM j GROUP BY o_orderkey
-         ORDER BY sum_cents DESC, o_orderkey LIMIT 20""",
-
-    "q_eng_asof_join" ->
-      """WITH cfg AS (
-           SELECT event_type, ts, value AS cfg_value
-           FROM events WHERE event_id % 97 = 0)
-         SELECT l.event_id, l.event_type, r.cfg_value
-         FROM events l
-         ASOF LEFT JOIN cfg r
-           ON l.event_type = r.event_type AND l.ts >= r.ts
-         ORDER BY l.event_id""",
-
-    "q_eng_median" ->
-      """SELECT l_returnflag, quantile_cont(l_quantity, 0.5) AS median_qty
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    "q_eng_hll_merge" ->
-      """SELECT count(DISTINCT user_id) AS n_exact, true AS within_5pct
-         FROM events""",
-
-    "q_eng_rollup" ->
-      """SELECT r_name, n_name, count(*) AS n
-         FROM nation JOIN region ON n_regionkey = r_regionkey
-         GROUP BY ROLLUP (r_name, n_name)
-         ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""",
-
-    "q_eng_anti_join" ->
-      """SELECT p_partkey, p_brand
-         FROM part
-         WHERE NOT EXISTS (SELECT 1 FROM lineitem
-                           WHERE l_partkey = p_partkey AND l_extendedprice > 90000)
-         ORDER BY p_partkey""",
-
-    "q_eng_semi_join" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus
-         FROM orders
-         WHERE EXISTS (SELECT 1 FROM lineitem
-                       WHERE l_orderkey = o_orderkey AND l_extendedprice > 90000)
-         ORDER BY o_orderkey""",
-
-    "q_eng_stable_ids" ->
-      """SELECT event_id, event_type,
-                CAST(row_number() OVER (ORDER BY event_id) - 1 AS BIGINT) AS id
-         FROM events ORDER BY event_id""",
-
-    "q_eng_scd2" ->
-      """WITH e AS (
-           SELECT user_id, event_id, value,
-                  epoch_us(CAST(ts AS TIMESTAMP)) AS us
-           FROM events WHERE event_type = 'signup')
-         SELECT user_id, value, us AS valid_from,
-                coalesce(lead(us, 1) OVER (PARTITION BY user_id
-                                           ORDER BY us, event_id), -1) AS valid_to
-         FROM e ORDER BY user_id, valid_from""",
-
-    "q_eng_sessions" ->
-      """WITH e AS (SELECT user_id, event_id,
-                           epoch_us(CAST(ts AS TIMESTAMP)) AS us
-                    FROM events),
-         o AS (SELECT user_id, us,
-                      CASE WHEN lag(us) OVER w IS NULL
-                             OR us - lag(us) OVER w > 1800000000
-                           THEN 1 ELSE 0 END AS is_new,
-                      event_id
-               FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-         s AS (SELECT user_id, us,
-                      sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-                                        ROWS UNBOUNDED PRECEDING) AS session_idx
-               FROM o)
-         SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-                CAST(count(*) AS BIGINT) AS n_events,
-                min(us) AS start_us, max(us) AS end_us,
-                max(us) - min(us) AS dur_us
-         FROM s GROUP BY 1, 2 ORDER BY user_id, session_idx""",
-
-    "q_eng_gap_fill" ->
-      """WITH e AS (SELECT user_id AS key,
-                           CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
-                           CAST(ts AS TIMESTAMP) AS uts, event_id, value
-                    FROM events),
-         obs AS (SELECT key, day, value FROM (
-                   SELECT *, row_number() OVER (PARTITION BY key, day
-                     ORDER BY uts DESC, event_id DESC) AS rn
-                   FROM e) WHERE rn = 1),
-         r AS (SELECT key, min(day) AS d0, max(day) AS d1 FROM obs GROUP BY 1),
-         spine AS (SELECT key, CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
-                   FROM r),
-         f AS (SELECT spine.key, spine.day,
-                      obs.value IS NOT NULL AS observed,
-                      last_value(obs.value IGNORE NULLS) OVER (
-                        PARTITION BY spine.key ORDER BY spine.day
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value
-               FROM spine LEFT JOIN obs ON spine.key = obs.key AND spine.day = obs.day)
-         SELECT key AS user_id, CAST(day AS VARCHAR) AS day, value, observed
-         FROM f ORDER BY user_id, day""",
-
-    "q_eng_retention" ->
-      """WITH uw AS (SELECT DISTINCT user_id,
-                            datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7 AS week
-                     FROM events),
-         c AS (SELECT user_id, min(week) AS cohort_week FROM uw GROUP BY 1)
-         SELECT cohort_week, week - cohort_week AS week_offset,
-                CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-         FROM uw JOIN c USING (user_id)
-         GROUP BY 1, 2 ORDER BY cohort_week, week_offset""",
-
-    "q_eng_quality_report" ->
-      """WITH a AS (SELECT
-           CAST(count(CASE WHEN l_orderkey IS NULL THEN 1 END) AS BIGINT) AS c0,
-           CAST(count(CASE WHEN l_shipdate IS NULL THEN 1 END) AS BIGINT) AS c1,
-           CAST(count(CASE WHEN l_orderkey IS NOT NULL THEN 1 END)
-                - count(DISTINCT l_orderkey) AS BIGINT) AS c2,
-           CAST(count(CASE WHEN l_quantity < 1.0 OR l_quantity > 50.0 THEN 1 END) AS BIGINT) AS c3,
-           CAST(count(CASE WHEN l_returnflag IS NOT NULL
-                            AND l_returnflag NOT IN ('A','N','R') THEN 1 END) AS BIGINT) AS c4,
-           CAST(count(CASE WHEN l_linestatus IS NOT NULL
-                            AND l_linestatus NOT IN ('O') THEN 1 END) AS BIGINT) AS c5
-           FROM lineitem)
-         SELECT * FROM (
-           SELECT 'complete' AS "check", 'l_orderkey' AS "column",
-                  c0 AS violations, c0 = 0 AS pass FROM a
-           UNION ALL SELECT 'complete', 'l_shipdate', c1, c1 = 0 FROM a
-           UNION ALL SELECT 'unique', 'l_orderkey', c2, c2 = 0 FROM a
-           UNION ALL SELECT 'bounds', 'l_quantity', c3, c3 = 0 FROM a
-           UNION ALL SELECT 'in_set', 'l_returnflag', c4, c4 = 0 FROM a
-           UNION ALL SELECT 'in_set', 'l_linestatus', c5, c5 = 0 FROM a)
-         ORDER BY "check", "column"""",
-
-    "q_eng_zorder" ->
-      """SELECT o_orderkey,
-                list_reduce(list_prepend(0::BIGINT,
-                  [(((CAST(o_custkey AS BIGINT) >> i) & 1) << (2*i))
-                   + (((CAST(datediff('day', DATE '1995-01-01',
-                          CAST(o_orderdate AS DATE)) AS BIGINT) >> i) & 1)
-                      << (2*i + 1))
-                   for i in range(0, 32)]),
-                  (a, b) -> a + b) AS z
-         FROM orders ORDER BY o_orderkey""",
-
-    "q_eng_approx_quantile" ->
-      """SELECT quantile_cont(l_quantity, 0.9) AS p90_exact,
-                true AS within_1pct
-         FROM lineitem""",
-
-    "q_eng_histogram" ->
-      """SELECT CAST(floor(l_extendedprice / 10000.0) AS BIGINT) AS bucket,
-                CAST(count(*) AS BIGINT) AS n,
-                min(l_extendedprice) AS lo,
-                max(l_extendedprice) AS hi
-         FROM lineitem GROUP BY 1 ORDER BY bucket""",
-
-    "q_eng_argmax" ->
-      """SELECT l_returnflag, l_extendedprice AS top_price,
-                l_orderkey AS top_orderkey, l_linenumber AS top_linenumber
-         FROM (SELECT *, row_number() OVER (PARTITION BY l_returnflag
-                 ORDER BY l_extendedprice DESC, l_orderkey DESC,
-                          l_linenumber DESC) AS rn
-               FROM lineitem)
-         WHERE rn = 1 ORDER BY l_returnflag""",
-
-    "q_eng_cube" ->
-      s"""SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS n,
-                 ${sqlMoneySum("l_extendedprice")} AS revenue
-          FROM lineitem
-          GROUP BY CUBE (l_returnflag, l_linestatus)
-          ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""",
-
-    "q_eng_json_extract" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                CAST(sum(CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS BIGINT)) AS BIGINT) AS sum_k,
-                min(CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS BIGINT)) AS min_k,
-                max(CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS BIGINT)) AS max_k
-         FROM events GROUP BY 1 ORDER BY event_type""",
-
-    "q_eng_winsorize" ->
-      """WITH e AS (SELECT event_id, event_type, value FROM events),
-         r AS (SELECT *,
-                      row_number() OVER (PARTITION BY event_type
-                        ORDER BY value, event_id) AS rn,
-                      count(*) OVER (PARTITION BY event_type) AS n
-               FROM e),
-         b AS (SELECT event_type,
-                      max(CASE WHEN rn = greatest(1, CAST(ceil(n * 0.05) AS BIGINT))
-                               THEN value END) AS p05,
-                      max(CASE WHEN rn = CAST(ceil(n * 0.95) AS BIGINT)
-                               THEN value END) AS p95
-               FROM r GROUP BY 1)
-         SELECT e.event_type, CAST(count(*) AS BIGINT) AS n, b.p05, b.p95,
-                CAST(count(CASE WHEN value < p05 THEN 1 END) AS BIGINT) AS n_lo,
-                CAST(count(CASE WHEN value > p95 THEN 1 END) AS BIGINT) AS n_hi
-         FROM e JOIN b USING (event_type)
-         GROUP BY 1, 3, 4 ORDER BY event_type""",
-
-    "q_eng_snapshot_diff" ->
-      """WITH prev AS (
-           SELECT o_orderkey, o_orderstatus, o_totalprice
-           FROM orders WHERE o_orderkey % 13 != 0),
-         nxt AS (
-           SELECT o_orderkey, o_orderstatus,
-                  CASE WHEN o_orderkey % 11 = 0 THEN o_totalprice + 1.0
-                       ELSE o_totalprice END AS o_totalprice
-           FROM orders WHERE o_orderkey % 17 != 0),
-         j AS (
-           SELECT coalesce(prev.o_orderkey, nxt.o_orderkey) AS o_orderkey,
-                  CASE WHEN prev.o_orderkey IS NULL THEN 'I'
-                       WHEN nxt.o_orderkey IS NULL THEN 'D'
-                       WHEN NOT (prev.o_orderstatus IS NOT DISTINCT FROM nxt.o_orderstatus
-                                 AND prev.o_totalprice IS NOT DISTINCT FROM nxt.o_totalprice)
-                       THEN 'U' END AS op,
-                  nxt.o_orderstatus, nxt.o_totalprice
-           FROM prev FULL OUTER JOIN nxt
-             ON prev.o_orderkey = nxt.o_orderkey)
-         SELECT o_orderkey, op, o_orderstatus, o_totalprice
-         FROM j WHERE op IS NOT NULL ORDER BY o_orderkey""",
-
-    "q_eng_grouping_sets" ->
-      s"""SELECT o_orderpriority, o_orderstatus, CAST(count(*) AS BIGINT) AS n,
-                 ${sqlMoneySum("o_totalprice")} AS rev
-          FROM orders
-          GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
-                                  (o_orderpriority), ())
-          ORDER BY o_orderpriority ASC NULLS FIRST,
-                   o_orderstatus ASC NULLS FIRST""",
-
-    "q_eng_pagerank" -> {
-      def iter(k: Int, prev: String) =
-        s"""c$k AS (SELECT r.node, r.pr // d.deg AS c
-                    FROM $prev r JOIN deg d USING (node)),
-            s$k AS (SELECT e.dst AS node, CAST(sum(c.c) AS BIGINT) AS s
-                    FROM e JOIN c$k c ON e.src = c.node GROUP BY 1),
-            r$k AS (SELECT nodes.node,
-                           15 * (1000000000000 // n.n) // 100
-                             + 85 * coalesce(s$k.s, 0) // 100 AS pr
-                    FROM nodes LEFT JOIN s$k USING (node), n)"""
-      s"""WITH ps AS (SELECT DISTINCT l_partkey * 2 AS pnode,
-                             l_suppkey * 2 + 1 AS snode FROM lineitem),
-          e AS (SELECT pnode AS src, snode AS dst FROM ps
-                UNION ALL SELECT snode, pnode FROM ps),
-          nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-          deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
-                  FROM e GROUP BY 1),
-          n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-          r0 AS (SELECT node, 1000000000000 // n.n AS pr FROM nodes, n),
-          ${iter(1, "r0")},
-          ${iter(2, "r1")},
-          ${iter(3, "r2")}
-          SELECT node, pr FROM r3 ORDER BY pr DESC, node LIMIT 25"""
     },
-
-    "q_eng_rolling" ->
-      s"""WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  sum(CAST(o_totalprice AS DECIMAL(18,6))) AS rev_dec,
-                  CAST(count(*) AS BIGINT) AS n_orders
-           FROM orders GROUP BY 1),
-         d2 AS (SELECT *, datediff('day', DATE '1995-01-01', day) AS day_i
-                FROM daily)
-         SELECT CAST(day AS VARCHAR) AS day,
-                ${graft.functions.WideDiv.sqlDecSumToDouble("rev_dec")} AS rev,
-                ${graft.functions.WideDiv.sqlDecSumToDouble(
-                  "sum(rev_dec) OVER w")} AS rolling7_rev,
-                CAST(count(*) OVER w AS BIGINT) AS n_days_7,
-                n_orders
-         FROM d2
-         WINDOW w AS (ORDER BY day_i RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-         ORDER BY day""",
-
-    "q_eng_range_join" ->
-      s"""WITH oi AS (SELECT o_orderkey, epoch_us(o_orderdate) AS s_us,
-                             epoch_us(o_orderdate) + 2592000000000 AS e_us
-                      FROM orders
-                      WHERE o_orderpriority = '1-URGENT' AND o_totalprice >= 450000),
-          m AS (SELECT o_orderkey, CAST(count(*) AS BIGINT) AS n_items,
-                       ${sqlMoneySum("l_quantity")} AS sum_qty
-                FROM oi JOIN lineitem
-                  ON epoch_us(l_shipdate) >= s_us AND epoch_us(l_shipdate) <= e_us
-                GROUP BY 1)
-          SELECT oi.o_orderkey, coalesce(n_items, 0) AS n_items,
-                 coalesce(sum_qty, 0.0) AS sum_qty
-          FROM oi LEFT JOIN m USING (o_orderkey) ORDER BY o_orderkey""",
-
-    "q_eng_pivot" ->
-      """SELECT user_id % 10 AS bucket,
-                count(*) FILTER (event_type = 'click') AS click,
-                count(*) FILTER (event_type = 'error') AS error,
-                count(*) FILTER (event_type = 'purchase') AS purchase,
-                count(*) FILTER (event_type = 'signup') AS signup,
-                count(*) FILTER (event_type = 'view') AS view
-         FROM events GROUP BY 1 ORDER BY bucket""",
-
-    // the PLAIN join — Spark runs bloom-prune + join; equality proves the
-    // reduction is lossless (bloom has no false negatives)
-    "q_eng_bloom_join" ->
-      s"""SELECT p_brand, CAST(count(*) AS BIGINT) AS n_items,
-                 ${sqlMoneySum("l_extendedprice")} AS revenue
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-          WHERE p_size <= 4
-          GROUP BY p_brand ORDER BY p_brand""",
-
-    // row_number mirror of the distributed StableIds rank; both sides
-    // floor an exact-integer double division (rk·10 and total are far
-    // below 2^53, and quotients land ≥ 1/total away from integers except
-    // at exact multiples, which divide exactly)
-    "q_eng_equidepth" ->
-      """WITH r AS (
-           SELECT o_orderkey, o_totalprice,
-                  row_number() OVER (ORDER BY o_totalprice, o_orderkey) - 1 AS rk,
-                  count(*) OVER () AS total
-           FROM orders)
-         SELECT CAST(floor(rk * 10 / CAST(total AS DOUBLE)) AS BIGINT) AS bin,
-                CAST(count(*) AS BIGINT) AS n,
-                min(o_totalprice) AS lo, max(o_totalprice) AS hi
-         FROM r GROUP BY 1 ORDER BY bin""",
-
-    "q_eng_funnel" ->
-      """WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
-                    WHERE event_type = 'view' GROUP BY 1),
-         c AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-               JOIN v ON v.user_id = e.user_id
-               WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY 1),
-         p AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-               JOIN c ON c.user_id = e.user_id
-               WHERE e.event_type = 'purchase' AND e.ts > c.t2 GROUP BY 1)
-         SELECT (SELECT CAST(count(*) AS BIGINT) FROM v) AS n_view,
-                (SELECT CAST(count(*) AS BIGINT) FROM c) AS n_click_after,
-                (SELECT CAST(count(*) AS BIGINT) FROM p) AS n_purchase_after""",
-
-    "q_eng_intersect_except" ->
-      """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
-         INTERSECT
-         SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-         EXCEPT
-         SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1997
-         ORDER BY o_custkey""",
-
-    "q_eng_monthly_trend" ->
-      s"""WITH m AS (
-            SELECT strftime(o_orderdate, '%Y-%m') AS month,
-                   ${sqlMoneySum("o_totalprice")} AS rev,
-                   CAST(count(*) AS BIGINT) AS n_orders
-            FROM orders GROUP BY 1)
-          SELECT month, rev, n_orders,
-                 lag(rev, 1) OVER (ORDER BY month) AS prev_rev,
-                 rev - lag(rev, 1) OVER (ORDER BY month) AS delta
-          FROM m ORDER BY month""",
-
-    "q_eng_returned_top" ->
-      s"""SELECT c_custkey, c_name, c_acctbal, n_name,
-                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue,
-                 CAST(count(*) AS BIGINT) AS n_items
-          FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation ON c_nationkey = n_nationkey
-          WHERE l_returnflag = 'R'
-          GROUP BY 1, 2, 3, 4
-          ORDER BY revenue DESC, c_custkey LIMIT 20""",
-
-    "q_eng_grouping_id" ->
-      """SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS n,
-                CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-         ORDER BY gid, l_returnflag ASC NULLS FIRST,
-                  l_linestatus ASC NULLS FIRST""",
-
-    // UNION ALL mirror of the unpivot (portable melt); metric names match
-    // the Spark-side value-column names
-    "q_eng_unpivot" ->
-      s"""WITH a AS (
-            SELECT l_returnflag,
-                   ${sqlMoneySum("l_quantity")} AS sum_qty,
-                   ${sqlMoneySum("l_extendedprice")} AS sum_price,
-                   CAST(count(*) AS DOUBLE) AS n_items
-            FROM lineitem GROUP BY 1)
-          SELECT l_returnflag, metric, value FROM (
-            SELECT l_returnflag, 'sum_qty' AS metric, sum_qty AS value FROM a
-            UNION ALL
-            SELECT l_returnflag, 'sum_price', sum_price FROM a
-            UNION ALL
-            SELECT l_returnflag, 'n_items', n_items FROM a)
-          ORDER BY l_returnflag, metric""",
-
-    "q_eng_concurrency" ->
-      """WITH iv AS (
-           SELECT CAST(o_orderdate AS DATE) AS placed,
-                  CAST(l_shipdate AS DATE) AS ship
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         de AS (
-           SELECT placed AS day, 1 AS delta FROM iv
-           UNION ALL
-           SELECT ship + 1, -1 FROM iv),
-         daily AS (SELECT day, CAST(sum(delta) AS BIGINT) AS d
-                   FROM de GROUP BY 1)
-         SELECT CAST(day AS VARCHAR) AS day,
-                CAST(sum(d) OVER (ORDER BY day) AS BIGINT) AS in_transit
-         FROM daily ORDER BY in_transit DESC, day LIMIT 10""",
-
-    // naive all-pairs enumeration: e1=(a,b), e2=(a,c) with b<c closes on
-    // e3=(b,c) — independent of the Spark side's degree-ordered
-    // orientation, so equality proves the oriented count exact
-    "q_eng_triangles" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                     FROM lineitem),
-         e AS (SELECT DISTINCT a.p AS u, b.p AS v
-               FROM op a JOIN op b ON a.o = b.o AND a.p < b.p)
-         SELECT (SELECT CAST(count(DISTINCT n) AS BIGINT)
-                 FROM (SELECT u AS n FROM e UNION ALL SELECT v FROM e))
-                  AS n_nodes,
-                (SELECT CAST(count(*) AS BIGINT) FROM e) AS n_edges,
-                (SELECT CAST(count(*) AS BIGINT)
-                 FROM e e1
-                 JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
-                 JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v) AS n_triangles""",
-
-    "q_eng_degree_dist" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                     FROM lineitem),
-         e AS (SELECT DISTINCT a.p AS u, b.p AS v
-               FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-         d AS (SELECT n, CAST(count(*) AS BIGINT) AS deg
-               FROM (SELECT u AS n FROM e UNION ALL SELECT v FROM e)
-               GROUP BY 1)
-         SELECT CAST(length(bin(deg)) - 1 AS BIGINT) AS log2_deg,
-                CAST(count(*) AS BIGINT) AS n_nodes,
-                CAST(min(deg) AS BIGINT) AS min_deg,
-                CAST(max(deg) AS BIGINT) AS max_deg
-         FROM d GROUP BY 1 ORDER BY log2_deg""",
-
-    "q_eng_kcore" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                     FROM lineitem),
-         e0 AS MATERIALIZED (SELECT DISTINCT a.p AS u, b.p AS v
-                FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-         k1 AS (SELECT n FROM (SELECT u AS n FROM e0 UNION ALL SELECT v FROM e0)
-                GROUP BY n HAVING count(*) >= 80),
-         e1 AS MATERIALIZED (SELECT * FROM e0
-                WHERE u IN (SELECT n FROM k1) AND v IN (SELECT n FROM k1)),
-         k2 AS (SELECT n FROM (SELECT u AS n FROM e1 UNION ALL SELECT v FROM e1)
-                GROUP BY n HAVING count(*) >= 80),
-         e2 AS MATERIALIZED (SELECT * FROM e1
-                WHERE u IN (SELECT n FROM k2) AND v IN (SELECT n FROM k2)),
-         k3 AS (SELECT n FROM (SELECT u AS n FROM e2 UNION ALL SELECT v FROM e2)
-                GROUP BY n HAVING count(*) >= 80),
-         e3 AS MATERIALIZED (SELECT * FROM e2
-                WHERE u IN (SELECT n FROM k3) AND v IN (SELECT n FROM k3))
-         SELECT n AS node, CAST(count(*) AS BIGINT) AS deg
-         FROM (SELECT u AS n FROM e3 UNION ALL SELECT v FROM e3)
-         GROUP BY 1 ORDER BY 1""",
-
-    // naive COUNT(DISTINCT) + INTERSECT — independent of the Spark
-    // side's bitmap-word algebra
-    "q_eng_bitmap_distinct" ->
-      """SELECT * FROM (
-           SELECT event_type AS segment,
-                  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-           FROM events GROUP BY 1
-           UNION ALL
-           SELECT 'click_and_purchase',
-                  CAST(count(*) AS BIGINT)
-           FROM (SELECT user_id FROM events WHERE event_type = 'click'
-                 INTERSECT
-                 SELECT user_id FROM events WHERE event_type = 'purchase'))
-         ORDER BY segment""",
-
-    "q_eng_mode" ->
-      """WITH c AS (SELECT user_id % 10 AS bucket, event_type,
-                           CAST(count(*) AS BIGINT) AS n
-                    FROM events GROUP BY 1, 2),
-         t AS (SELECT bucket, CAST(sum(n) AS BIGINT) AS total
-               FROM c GROUP BY 1),
-         r AS (SELECT bucket, event_type, n,
-                      row_number() OVER (PARTITION BY bucket
-                                         ORDER BY n DESC, event_type) AS rk
-               FROM c)
-         SELECT r.bucket, r.event_type AS mode_value, r.n,
-                r.n * 1000 // t.total AS share_pm
-         FROM r JOIN t USING (bucket)
-         WHERE rk = 1 ORDER BY r.bucket""",
-
-    "q_eng_corr_stats" ->
-      """WITH t AS (SELECT l_returnflag,
-                           CAST(l_quantity AS BIGINT) AS q,
-                           CAST(floor(l_discount * 1000 + 0.5) AS BIGINT) AS dp
-                    FROM lineitem),
-         a AS (SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-                      CAST(sum(q) AS BIGINT) AS sum_q,
-                      CAST(sum(dp) AS BIGINT) AS sum_d,
-                      CAST(sum(q * q) AS BIGINT) AS sum_qq,
-                      CAST(sum(q * dp) AS BIGINT) AS sum_qd,
-                      CAST(sum(dp * dp) AS BIGINT) AS sum_dd
-               FROM t GROUP BY 1)
-         SELECT l_returnflag, n, sum_q, sum_d, sum_qq, sum_qd, sum_dd,
-                n * sum_qd - sum_q * sum_d AS cov_num
-         FROM a ORDER BY l_returnflag""",
-
-    // full recompute — proves base⊕delta merge is lossless
-    "q_eng_incr_agg" ->
-      s"""SELECT strftime(o_orderdate, '%Y-%m') AS month, o_orderpriority,
-                 CAST(count(*) AS BIGINT) AS n_orders,
-                 ${sqlMoneySum("o_totalprice")} AS rev
-          FROM orders GROUP BY 1, 2 ORDER BY month, o_orderpriority""",
-
-    // ns→us CAST mirrors Spark's micro-truncated event timestamps so the
-    // (ts, event_id) successor order is identical in both engines
-    "q_eng_markov" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-                           CAST(ts AS TIMESTAMP) AS us
-                    FROM events),
-         p AS (SELECT event_type AS src,
-                      lead(event_type, 1) OVER (PARTITION BY user_id
-                                                ORDER BY us, event_id) AS dst
-               FROM e),
-         tr AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS n
-                FROM p WHERE dst IS NOT NULL GROUP BY 1, 2),
-         t AS (SELECT src, CAST(sum(n) AS BIGINT) AS total
-               FROM tr GROUP BY 1)
-         SELECT tr.src, tr.dst, tr.n, tr.n * 1000 // t.total AS prob_pm
-         FROM tr JOIN t USING (src) ORDER BY tr.src, tr.dst""",
-
-    "q_eng_skyline" ->
-      """WITH p AS (
-           SELECT o_orderkey, o_totalprice, CAST(count(*) AS BIGINT) AS n_items
-           FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-           WHERE year(CAST(o_orderdate AS DATE)) = 1995
-           GROUP BY 1, 2)
-         SELECT o_orderkey, o_totalprice, n_items
-         FROM p a
-         WHERE NOT EXISTS (
-           SELECT 1 FROM p b
-           WHERE b.o_totalprice >= a.o_totalprice
-             AND b.n_items <= a.n_items
-             AND (b.o_totalprice > a.o_totalprice OR b.n_items < a.n_items))
-         ORDER BY o_totalprice DESC, o_orderkey""",
-
-    "q_eng_top_supplier" ->
-      """WITH r AS (
-           SELECT l_suppkey,
-                  sum(CAST(l_extendedprice * (1.0 - l_discount)
-                    AS DECIMAL(18,6))) AS rev_dec
-           FROM lineitem
-           WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
-             AND CAST(l_shipdate AS DATE) < DATE '1996-04-01'
-           GROUP BY 1),
-         m AS (SELECT max(rev_dec) AS mx FROM r)
-         SELECT s_suppkey, s_name,
-                CAST(CAST(rev_dec * 1000000 AS DECIMAL(38,0)) AS DOUBLE)
-                  / 1000000.0 AS total_rev
-         FROM r JOIN supplier ON l_suppkey = s_suppkey, m
-         WHERE rev_dec = m.mx ORDER BY s_suppkey""",
-
-    "q_eng_promo_share" ->
-      """WITH a AS (
-           SELECT sum(CASE WHEN p_type LIKE 'PROMO%'
-                           THEN CAST(l_extendedprice * (1.0 - l_discount)
-                             AS DECIMAL(18,6))
-                           ELSE CAST(0 AS DECIMAL(18,6)) END) AS promo_dec,
-                  sum(CAST(l_extendedprice * (1.0 - l_discount)
-                    AS DECIMAL(18,6))) AS total_dec
-           FROM lineitem JOIN part ON l_partkey = p_partkey
-           WHERE CAST(l_shipdate AS DATE) >= DATE '1995-09-01'
-             AND CAST(l_shipdate AS DATE) < DATE '1995-10-01')
-         SELECT CAST(CAST(promo_dec * 1000000 AS DECIMAL(38,0)) AS DOUBLE)
-                  / 1000000.0 AS promo_rev,
-                CAST(CAST(total_dec * 1000000 AS DECIMAL(38,0)) AS DOUBLE)
-                  / 1000000.0 AS total_rev,
-                (CAST(promo_dec * 1000000 AS BIGINT) * 1000)
-                  // (CAST(total_dec * 1000000 AS BIGINT) // 1000) AS share_ppm
-         FROM a""",
-
-    "q_eng_large_orders" ->
-      """WITH q AS (
-           SELECT l_orderkey,
-                  sum(CAST(l_quantity AS DECIMAL(18,6))) AS qty_dec
-           FROM lineitem GROUP BY 1
-           HAVING sum(CAST(l_quantity AS DECIMAL(18,6))) >= 250)
-         SELECT c_name, o_orderkey, o_totalprice,
-                CAST(CAST(qty_dec * 1000000 AS DECIMAL(38,0)) AS DOUBLE)
-                  / 1000000.0 AS total_qty
-         FROM q JOIN orders ON l_orderkey = o_orderkey
-                JOIN customer ON o_custkey = c_custkey
-         ORDER BY total_qty DESC, o_orderkey""",
-
-    "q_eng_idle_customers" ->
-      """WITH a AS (
-           SELECT CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) * 1000000
-                         AS DECIMAL(38,0)) AS DOUBLE) / 1000000.0
-                    / count(*) AS avg_bal
-           FROM customer),
-         idle AS (
-           SELECT c.c_nationkey, c.c_acctbal
-           FROM customer c, a
-           WHERE c.c_acctbal > a.avg_bal
-             AND NOT EXISTS (SELECT 1 FROM orders o
-                             WHERE o.o_custkey = c.c_custkey
-                               AND year(CAST(o.o_orderdate AS DATE)) = 1998))
-         SELECT n_name, CAST(count(*) AS BIGINT) AS n_cust,
-                CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) * 1000000
-                       AS DECIMAL(38,0)) AS DOUBLE) / 1000000.0
-                  AS total_bal
-         FROM idle JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY 1 ORDER BY n_name""",
-
-    // recursive CTE walks the bounded day series one step per iteration —
-    // the sequential recurrence the Spark side runs via aggregate() on the
-    // collected day array; per-mille integer arithmetic matches exactly
-    "q_eng_ewma" ->
-      """WITH RECURSIVE daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS rev_cents
-           FROM orders GROUP BY 1),
-         idx AS (
-           SELECT day, rev_cents,
-                  CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
-           FROM daily),
-         r AS (
-           SELECT i, day, rev_cents, rev_cents AS ewma_cents
-           FROM idx WHERE i = 1
-           UNION ALL
-           SELECT idx.i, idx.day, idx.rev_cents,
-                  CAST((200 * CAST(idx.rev_cents AS HUGEINT) +
-                        800 * CAST(r.ewma_cents AS HUGEINT)) // 1000
-                    AS BIGINT)
-           FROM r JOIN idx ON idx.i = r.i + 1)
-         SELECT CAST(day AS VARCHAR) AS day, rev_cents, ewma_cents
-         FROM r ORDER BY day""",
-
-    "q_eng_anova" ->
-      s"""WITH g AS (
-           SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-                  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS s,
-                  CAST(sum(CAST(l_quantity AS BIGINT) *
-                           CAST(l_quantity AS BIGINT)) AS BIGINT) AS ss,
-                  ${graft.functions.WideDiv.sqlMulDiv(
-                    "sum(CAST(l_quantity AS BIGINT))",
-                    "sum(CAST(l_quantity AS BIGINT))",
-                    "count(*)")} AS contrib
-           FROM lineitem GROUP BY 1),
-         t AS (
-           SELECT CAST(count(*) AS BIGINT) AS k,
-                  CAST(sum(n) AS BIGINT) AS n_total,
-                  CAST(sum(s) AS BIGINT) AS grand_sum,
-                  CAST(sum(ss) AS BIGINT) AS sum_sq,
-                  CAST(sum(contrib) AS BIGINT) AS sum_contrib
-           FROM g),
-         d AS (
-           SELECT k, n_total,
-                  sum_contrib - ${graft.functions.WideDiv.sqlMulDiv(
-                    "grand_sum", "grand_sum", "n_total")} AS ssb,
-                  sum_sq - sum_contrib AS ssw
-           FROM t)
-         SELECT k, n_total, CAST(ssb AS BIGINT) AS ssb,
-                CAST(ssw AS BIGINT) AS ssw,
-                ${graft.functions.WideDiv.sqlMulDiv(
-                  "ssb", "(n_total - k) * 1000000", "ssw * (k - 1)")} AS f_ppm
-         FROM d""",
-
-    "q_eng_pettitt" ->
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
-           FROM orders GROUP BY 1),
-         v AS (
-           SELECT a.day AS day,
-                  CAST(sum(CASE WHEN a.x > b.x THEN 1
-                                WHEN a.x < b.x THEN -1 ELSE 0 END) AS BIGINT)
-                    AS v
-           FROM daily a JOIN daily b ON a.day <> b.day GROUP BY 1),
-         u AS (
-           SELECT day,
-                  abs(sum(v) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING))
-                    AS au
-           FROM v),
-         k AS (SELECT CAST(count(*) AS BIGINT) AS n_days,
-                      CAST(max(au) AS BIGINT) AS k_stat
-               FROM u)
-         SELECT n_days, k_stat, CAST(min(day) AS VARCHAR) AS change_day
-         FROM u, k WHERE au = k_stat GROUP BY 1, 2""",
-
-    // the recurrence repeats the new-cur expression (SQL cannot reference
-    // a same-SELECT alias); strict > keeps the FIRST maximal run's end day
-    "q_eng_kadane" -> {
-      val newCur = """CASE WHEN dd.delta > r.cur + dd.delta
-                           THEN dd.delta ELSE r.cur + dd.delta END"""
-      s"""WITH RECURSIVE daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
-           FROM orders GROUP BY 1),
-         idx AS (
-           SELECT day, x - lag(x) OVER (ORDER BY day) AS delta,
-                  CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
-           FROM daily),
-         dd AS (SELECT i - 1 AS i, day, CAST(delta AS BIGINT) AS delta
-                FROM idx WHERE delta IS NOT NULL),
-         r AS (
-           SELECT i, delta AS cur, delta AS best, day AS bday
-           FROM dd WHERE i = 1
-           UNION ALL
-           SELECT dd.i, $newCur AS cur,
-                  CASE WHEN $newCur > r.best THEN $newCur
-                       ELSE r.best END AS best,
-                  CASE WHEN $newCur > r.best THEN dd.day
-                       ELSE r.bday END AS bday
-           FROM r JOIN dd ON dd.i = r.i + 1)
-         SELECT CAST(best AS BIGINT) AS best_run_cents,
-                CAST(bday AS VARCHAR) AS best_end_day
-         FROM r ORDER BY i DESC LIMIT 1"""
-    },
-
-    // HUGEINT moment algebra is exact; the int128→DOUBLE casts are single
-    // correctly-rounded conversions (scale 0 — no second ÷10^k rounding,
-    // the group_ols lesson), after which both engines run identical IEEE
-    "q_eng_partial_corr" ->
-      """WITH t AS (
-           SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS x,
-                  CAST(l_quantity AS BIGINT) AS y,
-                  CAST(floor(l_discount * 1000 + 0.5) AS BIGINT) AS z
-           FROM lineitem),
-         m AS (
-           SELECT CAST(count(*) AS BIGINT) AS n,
-                  CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-                  CAST(sum(z) AS BIGINT) AS sz,
-                  sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
-                  sum(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS syy,
-                  sum(CAST(z AS HUGEINT) * CAST(z AS HUGEINT)) AS szz,
-                  sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy,
-                  sum(CAST(x AS HUGEINT) * CAST(z AS HUGEINT)) AS sxz,
-                  sum(CAST(y AS HUGEINT) * CAST(z AS HUGEINT)) AS syz
-           FROM t),
-         c AS (
-           SELECT n,
-                  CAST(CAST(n AS HUGEINT) * sxy -
-                       CAST(sx AS HUGEINT) * CAST(sy AS HUGEINT) AS DOUBLE)
-                    AS cxy,
-                  CAST(CAST(n AS HUGEINT) * sxz -
-                       CAST(sx AS HUGEINT) * CAST(sz AS HUGEINT) AS DOUBLE)
-                    AS cxz,
-                  CAST(CAST(n AS HUGEINT) * syz -
-                       CAST(sy AS HUGEINT) * CAST(sz AS HUGEINT) AS DOUBLE)
-                    AS cyz,
-                  CAST(CAST(n AS HUGEINT) * sxx -
-                       CAST(sx AS HUGEINT) * CAST(sx AS HUGEINT) AS DOUBLE)
-                    AS cxx,
-                  CAST(CAST(n AS HUGEINT) * syy -
-                       CAST(sy AS HUGEINT) * CAST(sy AS HUGEINT) AS DOUBLE)
-                    AS cyy,
-                  CAST(CAST(n AS HUGEINT) * szz -
-                       CAST(sz AS HUGEINT) * CAST(sz AS HUGEINT) AS DOUBLE)
-                    AS czz
-           FROM m)
-         SELECT n, cxy / sqrt(cxx * cyy) AS r_xy,
-                (cxy * czz - cxz * cyz) /
-                sqrt((cxx * czz - cxz * cxz) * (cyy * czz - cyz * cyz))
-                  AS r_xy_given_z
-         FROM c""",
-
-    "q_eng_mann_kendall" ->
-      s"""WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
-           FROM orders GROUP BY 1),
-         p AS (
-           SELECT CASE WHEN b.x > a.x THEN 1
-                       WHEN b.x < a.x THEN -1 ELSE 0 END AS sgn
-           FROM daily a JOIN daily b ON a.day < b.day),
-         st AS (SELECT CAST(sum(sgn) AS BIGINT) AS s_stat FROM p),
-         tg AS (SELECT CAST(count(*) AS BIGINT) AS t FROM daily GROUP BY x),
-         ti AS (
-           SELECT CAST(sum(t) AS BIGINT) AS n_days,
-                  CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term
-           FROM tg),
-         v AS (
-           SELECT n_days, s_stat,
-                  n_days * (n_days - 1) * (2 * n_days + 5) - tie_term AS var18
-           FROM st, ti)
-         SELECT n_days, s_stat, var18,
-                CASE WHEN var18 = 0 THEN 0 ELSE ${graft.functions.WideDiv
-                  .sqlMulDiv("s_stat", "CAST(s_stat AS HUGEINT) * 18000000",
-                    "var18")} END AS z2_micro
-         FROM v""",
-
-    "q_eng_theil_sen" ->
-      s"""WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
-           FROM orders GROUP BY 1),
-         sl AS (
-           SELECT ${graft.functions.WideDiv.sqlMulDivSigned("b.x - a.x",
-             "1000000", "date_diff('day', a.day, b.day)")} AS slope_micro
-           FROM daily a JOIN daily b ON a.day < b.day),
-         r AS (
-           SELECT slope_micro,
-                  CAST(row_number() OVER (ORDER BY slope_micro) AS BIGINT)
-                    AS rk,
-                  CAST(count(*) OVER () AS BIGINT) AS m
-           FROM sl)
-         SELECT m AS n_pairs, slope_micro AS slope_micro_median
-         FROM r WHERE rk = (m + 1) // 2""",
-
-    "q_eng_streaks" ->
-      """WITH months AS (
-           SELECT DISTINCT o_custkey,
-                  CAST(year(CAST(o_orderdate AS DATE)) * 12 +
-                       month(CAST(o_orderdate AS DATE)) AS BIGINT) AS m
-           FROM orders),
-         isl AS (
-           SELECT o_custkey,
-                  m - dense_rank() OVER (PARTITION BY o_custkey ORDER BY m)
-                    AS island
-           FROM months),
-         runs AS (
-           SELECT o_custkey, island, CAST(count(*) AS BIGINT) AS len
-           FROM isl GROUP BY 1, 2),
-         best AS (
-           SELECT o_custkey, max(len) AS best FROM runs GROUP BY 1)
-         SELECT best AS streak_months,
-                CAST(count(*) AS BIGINT) AS n_customers
-         FROM best GROUP BY 1 ORDER BY streak_months""",
-
-    // the trend recurrence repeats the level expression (SQL cannot
-    // reference a same-SELECT alias); HUGEINT `//` truncates toward zero,
-    // matching mulDivWideSigned exactly on the signed trend
-    "q_eng_holt" ->
-      """WITH RECURSIVE daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS rev_cents
-           FROM orders GROUP BY 1),
-         idx AS (
-           SELECT day, rev_cents,
-                  CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
-           FROM daily),
-         r AS (
-           SELECT i, day, rev_cents, rev_cents AS level_cents,
-                  CAST(0 AS BIGINT) AS trend_cents
-           FROM idx WHERE i = 1
-           UNION ALL
-           SELECT idx.i, idx.day, idx.rev_cents,
-                  CAST((300 * CAST(idx.rev_cents AS HUGEINT) +
-                        700 * (CAST(r.level_cents AS HUGEINT) +
-                               CAST(r.trend_cents AS HUGEINT))) // 1000
-                    AS BIGINT),
-                  CAST((200 * (CAST((300 * CAST(idx.rev_cents AS HUGEINT) +
-                                     700 * (CAST(r.level_cents AS HUGEINT) +
-                                            CAST(r.trend_cents AS HUGEINT)))
-                                    // 1000 AS HUGEINT) -
-                               CAST(r.level_cents AS HUGEINT)) +
-                        800 * CAST(r.trend_cents AS HUGEINT)) // 1000
-                    AS BIGINT)
-           FROM r JOIN idx ON idx.i = r.i + 1)
-         SELECT CAST(day AS VARCHAR) AS day, rev_cents, level_cents,
-                trend_cents,
-                CAST(level_cents + trend_cents AS BIGINT) AS forecast_cents
-         FROM r ORDER BY day""",
-
-    "q_eng_survival" ->
-      s"""WITH cust AS (
-            SELECT o_custkey, min(CAST(o_orderdate AS DATE)) AS firstd,
-                   max(CAST(o_orderdate AS DATE)) AS lastd
-            FROM orders GROUP BY 1),
-          mx AS (SELECT max(lastd) AS maxd FROM cust),
-          byt AS (
-            SELECT CAST(date_diff('day', firstd, lastd) AS BIGINT) AS t,
-                   CAST(count(*) AS BIGINT) AS c,
-                   CAST(sum(CASE WHEN lastd < maxd - INTERVAL 90 DAY
-                                 THEN 1 ELSE 0 END) AS BIGINT) AS d
-            FROM cust, mx GROUP BY 1),
-          r AS (
-            SELECT t, d,
-                   CAST(sum(c) OVER (ORDER BY t DESC
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                     AS BIGINT) AS n_at_risk
-            FROM byt),
-          h AS (
-            SELECT t, d, n_at_risk,
-                   ${graft.functions.WideDiv.sqlMulDiv(
-                     "d", "1000000000000", "n_at_risk")} AS hazard_pico
-            FROM r)
-          SELECT t AS duration_days, d AS n_events, n_at_risk, hazard_pico,
-                 CAST(sum(hazard_pico) OVER (ORDER BY t
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS BIGINT) AS cum_hazard_pico
-          FROM h ORDER BY duration_days""",
-
-    "q_eng_seasonal" ->
-      """WITH monthly AS (
-           SELECT CAST(year(CAST(o_orderdate AS DATE)) * 100 +
-                       month(CAST(o_orderdate AS DATE)) AS BIGINT) AS m,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS rev_cents
-           FROM orders GROUP BY 1),
-         win AS (
-           SELECT m, rev_cents,
-                  count(*) OVER w AS wn,
-                  CAST(sum(rev_cents) OVER w AS BIGINT) AS wsum
-           FROM monthly
-           WINDOW w AS (ORDER BY m ROWS BETWEEN 6 PRECEDING AND 5 FOLLOWING)),
-         trended AS (
-           SELECT m, rev_cents,
-                  CAST(CAST(wsum AS HUGEINT) // 12 AS BIGINT) AS trend_cents,
-                  CAST(rev_cents - CAST(CAST(wsum AS HUGEINT) // 12 AS BIGINT)
-                    AS BIGINT) AS detrended
-           FROM win WHERE wn = 12),
-         seasonal AS (
-           SELECT m % 100 AS moy,
-                  CAST(CAST(sum(detrended) AS HUGEINT) // count(*) AS BIGINT)
-                    AS seasonal_cents
-           FROM trended GROUP BY 1)
-         SELECT t.m, t.rev_cents, t.trend_cents, s.seasonal_cents,
-                CAST(t.detrended - s.seasonal_cents AS BIGINT)
-                  AS residual_cents
-         FROM trended t JOIN seasonal s ON t.m % 100 = s.moy
-         ORDER BY t.m""",
-
-    "q_eng_common_neighbors" ->
-      s"""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                      FROM lineitem),
-          e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-          und AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
-          deg AS (SELECT u AS n, CAST(count(*) AS BIGINT) AS deg
-                  FROM und GROUP BY 1),
-          lowhub AS (
-            SELECT und.u, und.v FROM und
-            JOIN deg ON deg.n = und.v WHERE deg.deg <= 64),
-          wedges AS (
-            SELECT a.u AS x, b.u AS y, CAST(count(*) AS BIGINT) AS cn
-            FROM lowhub a JOIN lowhub b ON a.v = b.v AND a.u < b.u
-            GROUP BY 1, 2 HAVING count(*) >= 2)
-          SELECT w.x, w.y, w.cn,
-                 ${graft.functions.WideDiv.sqlPpm(
-                   "w.cn", "dx.deg + dy.deg - w.cn")} AS jaccard_ppm
-          FROM wedges w
-          JOIN deg dx ON dx.n = w.x
-          JOIN deg dy ON dy.n = w.y
-          ORDER BY jaccard_ppm DESC, w.x, w.y
-          LIMIT 100""",
-
-    // recursive-CTE replay of PatternMatch.detectBatch's greedy fold: one
-    // recursion step per (user, event index). `eff` = the partial's stage
-    // AFTER span expiry (expiry runs before matching, exactly like the
-    // Scala fold); a completed match emits (hit_start, hit_end) on the
-    // step row and resets to stage 0.
-    "q_eng_funnel_sequence" -> {
-      val span = 259200000L
-      val eff = s"CASE WHEN s.stage > 0 AND e.t - s.start_ms > $span " +
-        "THEN 0 ELSE s.stage END"
-      val effStart = s"CASE WHEN s.stage > 0 AND e.t - s.start_ms > $span " +
-        "THEN NULL ELSE s.start_ms END"
-      val done = s"($eff) = 2 AND e.event_type = 'purchase'"
-      s"""WITH RECURSIVE ev AS (
-           SELECT user_id, epoch_ms(ts) AS t, event_type,
-                  CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts)
-                    AS BIGINT) AS i
-           FROM events
-           WHERE event_type IN ('view', 'click', 'purchase')),
-         n AS (SELECT user_id FROM ev GROUP BY 1),
-         step AS (
-           SELECT user_id, CAST(1 AS BIGINT) AS i, 0 AS stage,
-                  CAST(NULL AS BIGINT) AS start_ms,
-                  CAST(NULL AS BIGINT) AS hit_start,
-                  CAST(NULL AS BIGINT) AS hit_end
-           FROM n
-           UNION ALL
-           SELECT s.user_id, s.i + 1,
-                  CASE WHEN $done THEN 0
-                       WHEN ($eff) = 0 AND e.event_type = 'view' THEN 1
-                       WHEN ($eff) = 1 AND e.event_type = 'click' THEN 2
-                       ELSE ($eff) END AS stage,
-                  CASE WHEN $done THEN NULL
-                       WHEN ($eff) = 0 AND e.event_type = 'view' THEN e.t
-                       ELSE ($effStart) END AS start_ms,
-                  CASE WHEN $done THEN ($effStart) END AS hit_start,
-                  CASE WHEN $done THEN e.t END AS hit_end
-           FROM step s JOIN ev e ON e.user_id = s.user_id AND e.i = s.i)
-         SELECT user_id, hit_start AS start_ms, hit_end AS end_ms,
-                hit_end - hit_start AS span_ms
-         FROM step WHERE hit_end IS NOT NULL
-         ORDER BY user_id, start_ms"""
-    },
-
-    "q_eng_deepwalk_pairs" -> {
-      // every chained CTE MATERIALIZED (w4→w3→…→w0 would inline and
-      // re-evaluate), and the neighbor pick computed in its own
-      // materialized CTE so the adjacency join is a clean composite
-      // equi-join on (node, idx) — with the pick expression inside the
-      // join condition DuckDB probed on node alone and spilled 30+ GB of
-      // deg-fanout intermediates at sf1
-      def stepCte(i: Int): String =
-        s"""p$i AS MATERIALIZED (
+      {
+        // every chained CTE MATERIALIZED (w4→w3→…→w0 would inline and
+        // re-evaluate), and the neighbor pick computed in its own
+        // materialized CTE so the adjacency join is a clean composite
+        // equi-join on (node, idx) — with the pick expression inside the
+        // join condition DuckDB probed on node alone and spilled 30+ GB of
+        // deg-fanout intermediates at sf1
+        def stepCte(i: Int): String =
+          s"""p$i AS MATERIALIZED (
              SELECT w.walk_id, w.node,
                     CAST('0x' || substr(md5(
                       CAST(w.walk_id AS VARCHAR) || ':' ||
@@ -3625,7 +3445,7 @@ object EngineQueries {
                     a.dst AS node
              FROM p$i p
              JOIN adj a ON a.node = p.node AND a.idx = p.pick)"""
-      s"""WITH ps AS (SELECT DISTINCT l_partkey * 2 AS a,
+        s"""WITH ps AS (SELECT DISTINCT l_partkey * 2 AS a,
                              l_suppkey * 2 + 1 AS b FROM lineitem),
          edges AS MATERIALIZED (SELECT a AS src, b AS dst FROM ps
                    UNION ALL SELECT b, a FROM ps),
@@ -3650,6 +3470,6 @@ object EngineQueries {
           AND abs(x.pos - y.pos) <= 2
          GROUP BY 1, 2
          ORDER BY cnt DESC, center, context LIMIT 50"""
-    }
+      })
   )
 }

@@ -288,7 +288,7 @@ object EvalQueries {
           (lit(2.0) * sqrt(col("vfloor").cast("double")))).as("z"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val registry: Seq[Q] = Seq(
     // AUC of the cents score predicting the returned label, as the exact
     // Mann-Whitney rank-sum with the standard tie correction: over the
     // distinct-score domain, U2 = Σ np(s)·(2·negBelow(s) + nn(s)) — twice
@@ -297,7 +297,7 @@ object EvalQueries {
     // scan (rankAndCumSums), not a global window; per-term products run in
     // DECIMAL(38) (np × cumulative counts is sums-of-rows × rows — past
     // int64 at the 100 TB design point).
-    "q_eng_auc" -> ((s, d) => {
+    Q("q_eng_auc", (s, d) => {
       val sc = scored(s, d)
         .groupBy(col("cents"))
         .agg(sum(col("label")).as("np"),
@@ -314,7 +314,25 @@ object EvalQueries {
           mulDivWide(col("u2"), lit(1000000L),
             wide(col("npos")) * wide(col("nneg")) * wide(lit(2L))).as("auc_ppm"),
           col("npos"), col("nneg"))
-    }),
+    },
+      s"""WITH $scoredSql,
+         sc AS (SELECT cents, CAST(sum(label) AS BIGINT) AS np,
+                       CAST(count(*) - sum(label) AS BIGINT) AS nn
+                FROM scored GROUP BY 1),
+         cumt AS (SELECT np, nn,
+                    CAST(sum(nn) OVER (ORDER BY cents
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                      AS BIGINT) AS cumnn
+                  FROM sc),
+         u AS (SELECT CAST(sum(CAST(np AS HUGEINT) *
+                        (2 * (cumnn - nn) + nn)) AS HUGEINT) AS u2,
+                      CAST(sum(np) AS BIGINT) AS npos,
+                      CAST(sum(nn) AS BIGINT) AS nneg
+               FROM cumt)
+         SELECT ${sqlMulDiv("u2", "1000000",
+        "2 * CAST(npos AS HUGEINT) * CAST(nneg AS HUGEINT)")} AS auc_ppm,
+                npos, nneg
+         FROM u"""),
 
     // two-sample Kolmogorov-Smirnov distance between the order-value
     // distributions of urgent vs non-urgent orders: D = max_s |F1(s)-F2(s)|,
@@ -322,7 +340,7 @@ object EvalQueries {
     // ECDFs never touch floating point. Both running counts come from the
     // SAME two-phase scan over the distinct-score domain — this is what
     // rankAndCumSums' multi-value form exists for.
-    "q_eng_ks_test" -> ((s, d) => {
+    Q("q_eng_ks_test", (s, d) => {
       val sc = scored(s, d)
         .withColumn("g1",
           when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L))
@@ -342,409 +360,7 @@ object EvalQueries {
           mulDivWide(col("maxdiff"), lit(1000000L),
             wide(col("t1")) * wide(col("t2"))).as("ks_ppm"),
           col("t1").as("n_urgent"), col("t2").as("n_other"))
-    }),
-
-    // Mann-Whitney U (Wilcoxon rank-sum) between urgent and non-urgent
-    // order values: the nonparametric two-sample location test that
-    // complements the KS distance above. Average ranks ride the SAME
-    // distinct-score rankAndCumSums scan (2× scaling keeps tied mid-ranks
-    // integer: avgrank·2 = 2·cum_before + t + 1), the tie-corrected
-    // variance floor V = ⌊n1·n2·(N(N−1)(N+1) − Σ(t³−t)) / (12N(N−1))⌋ is
-    // exact DECIMAL(38) arithmetic mirrored floor-for-floor in DuckDB, and
-    // z is one identical IEEE tree over the exact integers (A / 2√V; the
-    // sub-integer truncation of V is ~1e-16 relative at fixture scale and
-    // bit-identical cross-engine by construction).
-    "q_eng_mann_whitney" -> ((s, d) =>
-      mannWhitneyU(scored(s, d), col("cents"),
-          col("o_orderpriority") === "1-URGENT")
-        .withColumnRenamed("n_a", "n_urgent")
-        .withColumnRenamed("n_b", "n_other")),
-
-    // Cohen's d effect size between the urgent / non-urgent order-value
-    // arms — the standardized-mean-difference companion to the MW-U rank
-    // test: one conditional-moment aggregate (count, Σ, Σ² per arm, the
-    // squares in DECIMAL(38)), then d = (m1−m2)/s_pooled as a single
-    // identical IEEE tree over the exact integer moments (integer-valued
-    // DECIMAL(38,0) → DOUBLE is correctly rounded in both engines — the
-    // decSumToDouble audit).
-    "q_eng_cohens_d" -> ((s, d) => {
-      val o = scored(s, d).select(
-        (col("o_orderpriority") === "1-URGENT").as("g"), col("cents"))
-      val a = o.agg(
-        count(when(col("g"), 1)).as("n1"),
-        count(when(!col("g"), 1)).as("n2"),
-        sum(when(col("g"), wide(col("cents")))).as("s1"),
-        sum(when(!col("g"), wide(col("cents")))).as("s2"),
-        sum(when(col("g"), wide(col("cents")) * wide(col("cents"))))
-          .as("q1"),
-        sum(when(!col("g"), wide(col("cents")) * wide(col("cents"))))
-          .as("q2"))
-      def dbl(c: Column): Column = c.cast("double")
-      val ss1 = dbl(col("q1")) - dbl(col("s1")) * dbl(col("s1")) / dbl(col("n1"))
-      val ss2 = dbl(col("q2")) - dbl(col("s2")) * dbl(col("s2")) / dbl(col("n2"))
-      a.select(col("n1").as("n_urgent"), col("n2").as("n_other"),
-        ((dbl(col("s1")) / dbl(col("n1")) - dbl(col("s2")) / dbl(col("n2"))) /
-          sqrt((ss1 + ss2) / (dbl(col("n1")) + dbl(col("n2")) - lit(2.0))))
-          .as("cohens_d"))
-    }),
-
-    // Cochran-Armitage trend test: does the returned-order rate trend
-    // monotonically across the ordered priority scale (score = the
-    // priority digit 1..5)? The dose-response audit a pipeline runs on
-    // any ordinal quality band before trusting it as a filter. One
-    // bounded (score → n_i, r_i) aggregate; z² is one exact rational —
-    // numerator N·(N·Σsr − R·Σsn)², denominator
-    // R·(N−R)·(N·Σs²n − (Σsn)²) — floored once to ppm in DECIMAL(38).
-    "q_eng_cochran_armitage" -> ((s, d) => {
-      val g = scored(s, d)
-        .select(substring(col("o_orderpriority"), 1, 1).cast("long").as("sc"),
-          col("label"))
-        .groupBy(col("sc"))
-        .agg(count(lit(1)).as("n_i"), sum(col("label")).as("r_i"))
-      val a = g.agg(sum(col("n_i")).as("n"), sum(col("r_i")).as("r"),
-        sum(col("sc") * col("n_i")).as("sn"),
-        sum(col("sc") * col("r_i")).as("sr"),
-        sum(col("sc") * col("sc") * col("n_i")).as("s2n"))
-      val t = wide(col("n")) * wide(col("sr")) - wide(col("r")) * wide(col("sn"))
-      a.select(col("n"), col("r"),
-        signum(t).cast("long").as("trend_sign"),
-        mulDivWide(wide(col("n")) * t * t, lit(1000000L),
-          wide(col("r")) * wide(col("n") - col("r")) *
-            (wide(col("n")) * wide(col("s2n")) -
-              wide(col("sn")) * wide(col("sn")))).as("z2_ppm"))
-    }),
-
-    // Cochran's Q: did the same customers' ordering behavior change
-    // across 1995/1996/1997? Blocks = customers, treatments = years,
-    // x_ij = customer i placed ≥1 order in year j. The repeated-measures
-    // binary test kappa/McNemar generalize to k > 2. One distinct
-    // (customer, year) flag table (bounded by 3 rows per customer), then
-    // Q = (k−1)(kΣC_j² − N²)/(kN − ΣR_i²) in exact integers.
-    "q_eng_cochran_q" -> ((s, d) => {
-      val x = Tables.orders(s, d)
-        .select(col("o_custkey").as("ck"),
-          year(to_date(col("o_orderdate"))).cast("long").as("yr"))
-        .where(col("yr").between(1995L, 1997L))
-        .distinct()
-      val rows = x.groupBy(col("ck")).agg(count(lit(1)).as("ri"))
-      val colsT = x.groupBy(col("yr")).agg(count(lit(1)).as("cj"))
-      val tot = rows.agg(sum(col("ri")).as("nn"),
-        sum(col("ri") * col("ri")).as("r2"), count(lit(1)).as("b"))
-      val csum = colsT.agg(sum(col("cj") * col("cj")).as("c2"))
-      tot.crossJoin(broadcast(csum))
-        .select(col("b").as("n_blocks"), col("nn").as("n_flags"),
-          mulDivWide(
-            wide(lit(2L)) * (wide(lit(3L)) * wide(col("c2")) -
-              wide(col("nn")) * wide(col("nn"))),
-            lit(1000000L),
-            wide(lit(3L)) * wide(col("nn")) - wide(col("r2"))).as("q_ppm"))
-    }),
-
-    // calibration / lift table: equidepth deciles of the score (ranked
-    // scalably — range-partitioned zipWithIndex, no global window), per-bin
-    // observed positive rate in ppm and lift vs the base rate in ppm.
-    // The reliability readout a pipeline runs on every heuristic quality
-    // scorer before using it to filter a corpus.
-    "q_eng_calibration" -> ((s, d) => {
-      val sc = scored(s, d)
-      val tot = sc.agg(count(lit(1)).as("n_tot"), sum(col("label")).as("pos_tot"))
-      StableIds.withRank(sc, Seq(col("cents").desc, col("o_orderkey")), "rk")
-        .crossJoin(broadcast(tot))
-        .withColumn("bin", expr("(rk - 1) * 10 DIV n_tot"))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n_bin"), sum(col("label")).as("pos_bin"),
-          max(col("n_tot")).as("n_tot"), max(col("pos_tot")).as("pos_tot"))
-        .select(col("bin"), col("n_bin"), col("pos_bin"),
-          ppmWide(col("pos_bin"), col("n_bin")).as("pos_rate_ppm"),
-          mulDivWide(wide(col("pos_bin")) * wide(col("n_tot")), lit(1000000L),
-            wide(col("n_bin")) * wide(col("pos_tot"))).as("lift_ppm"))
-        .orderBy(col("bin"))
-    }),
-
-    // Brier score + Murphy decomposition (reliability − resolution +
-    // uncertainty) of the decile-binned rank forecaster: forecast =
-    // the bin's mean score percentile (p_ppm = (n−rk)·1e6 DIV (n−1)),
-    // outcome = the returned-order label. Everything in exact ppm²
-    // integers — see [[brierDecomposition]], which runs the MERGEABLE
-    // path: per-slice integer bin tables (n/pos/S — pure sums) merged by
-    // addition before any division, the shape a 100 TB evaluation runs
-    // (each slice stays inside the DECIMAL(38) envelope; the merge is
-    // exact). Gated here; envelope-spec'd at ~3e6 synthetic rows against
-    // a BigInt driver reference in BrierMergeSpec.
-    "q_eng_brier" -> ((s, d) => brierDecomposition(scored(s, d))),
-
-    // leave-one-out target encoding of customer nation against the returned
-    // label: enc(nation, label) = (pos(nation) - label) / (n(nation) - 1) in
-    // exact ppm. LOO is constant given (nation, label), so the output is the
-    // bounded (nation × label) table — the full per-row encode at 100 TB is
-    // the same broadcast of per-nation stats this plan builds. Orders join
-    // customers on the one custkey shuffle; nation names broadcast.
-    "q_eng_target_encode" -> ((s, d) => {
-      val oc = scored(s, d)
-        .join(Tables.customer(s, d)
-          .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-      val byLabel = oc.groupBy(col("c_nationkey"), col("label"))
-        .agg(count(lit(1)).as("n_rows"))
-      val stats = oc.groupBy(col("c_nationkey").as("nk"))
-        .agg(count(lit(1)).as("n"), sum(col("label")).as("pos"))
-      byLabel
-        .join(broadcast(stats), col("c_nationkey") === col("nk"))
-        .where(col("n") > 1L)
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name"), col("label"), col("n_rows"),
-          ppmWide(col("pos") - col("label"), col("n") - 1L).as("enc_ppm"))
-        .orderBy(col("n_name"), col("label"))
-    }),
-
-    // Cohen's kappa between two heuristic raters — rater A: order priority
-    // urgent/high; rater B: returned label. One pass builds the 2x2
-    // contingency; kappa = (n·(n00+n11) - pe) / (n² - pe) with
-    // pe = a1·b1 + a0·b0, all in DECIMAL(38) (n² overflows int64 past ~3e9
-    // rows), signed-truncating division — kappa is legitimately negative
-    // for anti-correlated raters.
-    "q_eng_kappa" -> ((s, d) => {
-      scored(s, d)
-        .withColumn("a",
-          when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L))
-        .agg(count(lit(1)).as("n"), sum(col("a")).as("a1"),
-          sum(col("label")).as("b1"),
-          sum(col("a") * col("label")).as("n11"))
-        .select(
-          mulDivWideSigned(
-            wide(col("n")) * wide(col("n") - col("a1") - col("b1") +
-              col("n11") * 2L) -
-              (wide(col("a1")) * wide(col("b1")) +
-                wide(col("n") - col("a1")) * wide(col("n") - col("b1"))),
-            lit(1000000L),
-            wide(col("n")) * wide(col("n")) -
-              (wide(col("a1")) * wide(col("b1")) +
-                wide(col("n") - col("a1")) * wide(col("n") - col("b1"))))
-            .as("kappa_ppm"),
-          col("n"), col("a1"), col("b1"), col("n11"))
-    }),
-
-    // Benjamini–Hochberg FDR over per-nation return-rate tests, all-integer:
-    // under H0 a nation's positive count is Binomial(n, p0) with p0 the
-    // global rate, and Chebyshev bounds p ≤ Var/dev² = n·p0(1−p0)/(pos−n·p0)².
-    // Clearing denominators by n_tot²: varnum = n·pos_tot·(n_tot−pos_tot),
-    // dev = |pos·n_tot − n·pos_tot|. The ppm bound divides by dev TWICE
-    // (q1 = ⌊varnum/dev⌋, then ⌊q1·1e6/dev⌋, with an early q1 ≥ dev → 1e6
-    // cap) so no intermediate ever squares dev — dev² alone reaches 1e48
-    // at the 100 TB design point and would overflow DECIMAL(38)/HUGEINT
-    // in BOTH engines. The two-step truncation IS the cross-engine
-    // contract, mirrored verbatim in the oracle. The BH step-up then runs
-    // on the BOUNDED nation domain (≤25 rows — the Window is over a
-    // dimension table, same discipline as q_sample_pps): rank by (p asc,
-    // name), reject ranks ≤ max{i : p_(i)·m ≤ i·α·1e6}, α = 0.05.
-    "q_eng_fdr_bh" -> ((s, d) =>
-      bhStepUp(nationReturnPv(s, d), alphaPpm = 50000L)),
-
-    // Benjamini–Yekutieli over the SAME per-nation Chebyshev p-value
-    // bounds: the dependence-robust step-up (per-nation tests share the
-    // global rate estimate, so independence is genuinely questionable
-    // here). Same bounded-domain machinery; only the rejection threshold
-    // tightens by the exact integer harmonic factor.
-    "q_eng_fdr_by" -> ((s, d) =>
-      byStepUp(nationReturnPv(s, d), alphaPpm = 50000L)),
-
-    // McNemar's paired test on the 2×2 disagreement between the two
-    // heuristic raters q_eng_kappa compares (rater A: priority ∈
-    // {urgent, high}; rater B: order contains a return): χ² = (b−c)²/(b+c)
-    // over the discordant counts only — the paired-rater upgrade question
-    // ("does B systematically flag what A misses?") that kappa's symmetric
-    // agreement number can't answer. One corpus aggregate; (b−c)² runs in
-    // DECIMAL(38) (b,c are row counts — squares pass int64 at ~3e9 rows).
-    "q_eng_mcnemar" -> ((s, d) => {
-      scored(s, d)
-        .withColumn("a",
-          when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L))
-        .agg(sum(when(col("a") === 1L && col("label") === 0L, 1L)
-            .otherwise(0L)).as("b"),
-          sum(when(col("a") === 0L && col("label") === 1L, 1L)
-            .otherwise(0L)).as("c"))
-        .select(col("b"), col("c"),
-          when(col("b") + col("c") === 0L, lit(0L))
-            .otherwise(mulDivWide(
-              wide(col("b") - col("c")) * wide(col("b") - col("c")),
-              lit(1000000L), col("b") + col("c"))).as("chi2_ppm"))
-    }),
-
-    // Spearman rank correlation between order value and basket size
-    // (line count), tie-corrected via Pearson-on-midranks in EXACT integer
-    // arithmetic: doubled midranks (2·cum − cnt + 1, always integral) have
-    // mean exactly n+1, so centering is integer subtraction and the
-    // centered values are |c| ≤ n — the moment sums stay ≤ n³ ≤ 1e36 in
-    // DECIMAL(38) at the 100 TB design point (never the n⁴ of the
-    // uncentered form). ρ² would need num²/(dx·dy) ~ n¹² — instead the
-    // SYMMETRIC two-step t1 = ⌊|num|·1e6/dx⌋, t2 = ⌊|num|·1e6/dy⌋,
-    // ρ²_ppm = sign·⌊t1·t2/1e6⌋ keeps every intermediate ≤ 1e24 and the
-    // product ≤ 1e12 by Cauchy–Schwarz (num² ≤ dx·dy). The two-step
-    // truncation IS the cross-engine contract, mirrored in the oracle.
-    // Midrank lookup: x-ranks come from one rankAndCumSums over the
-    // distinct-cents domain joined back on cents; y (basket size) is a
-    // ≤10-value domain — broadcast.
-    "q_eng_spearman" -> ((s, d) => {
-      // memoized: the (cents, nlines) pair table feeds FOUR consumers
-      // (x-domain, y-domain, total, centered moments) — without the cache
-      // each re-runs the orders⋈lineitem join; with it the join runs once
-      // (the production-scale persist, lifecycle-managed by QueryCaches)
-      val rows = QueryCaches.memo(s, d, "spearman_rows") {
-        scored(s, d)
-          .join(Tables.lineitem(s, d)
-            .groupBy(col("l_orderkey")).agg(count(lit(1)).as("nlines")),
-            col("o_orderkey") === col("l_orderkey"))
-          .select(col("cents"), col("nlines"))
-      }
-      val xd = rows.groupBy(col("cents")).agg(count(lit(1)).as("cnt"))
-      val xr = StableIds.rankAndCumSums(xd, Seq(col("cents")),
-          Seq("cnt" -> "cum"))
-        .select(col("cents").as("xv"),
-          (col("cum") * 2L - col("cnt") + 1L).as("mx2"))
-      val yd = rows.groupBy(col("nlines")).agg(count(lit(1)).as("cnt"))
-      val yr = StableIds.rankAndCumSums(yd, Seq(col("nlines")),
-          Seq("cnt" -> "cum"))
-        .select(col("nlines").as("yv"),
-          (col("cum") * 2L - col("cnt") + 1L).as("my2"))
-      val tot = rows.agg(count(lit(1)).as("n"))
-      val cent = rows
-        .join(xr, col("cents") === col("xv"))
-        .join(broadcast(yr), col("nlines") === col("yv"))
-        .crossJoin(broadcast(tot))
-        .select(col("n"), (col("mx2") - col("n") - 1L).as("cx"),
-          (col("my2") - col("n") - 1L).as("cy"))
-      cent.groupBy(col("n"))
-        .agg(sum(wide(col("cx")) * wide(col("cy"))).as("num"),
-          sum(wide(col("cx")) * wide(col("cx"))).as("dx"),
-          sum(wide(col("cy")) * wide(col("cy"))).as("dy"))
-        .select(col("n"),
-          when(col("dx") <= 0 || col("dy") <= 0, lit(0L))
-            .otherwise(
-              when(col("num") < 0, lit(-1L)).otherwise(lit(1L)) *
-                mulDivWide(
-                  mulDivWideDec(abs(col("num")), lit(1000000L), col("dx")),
-                  mulDivWideDec(abs(col("num")), lit(1000000L), col("dy")),
-                  lit(1000000L))).as("rho2_sign_ppm"))
-    }),
-
-    // Split-conformal prediction thresholds with test-side coverage:
-    // calibration = odd order keys, test = even; per priority group the
-    // threshold is the k-th smallest calibration score with
-    // k = min(n, ⌈0.9·(n+1)⌉) (the n-cap keeps the group well-defined when
-    // ⌈0.9(n+1)⌉ > n — documented divergence from the +∞ threshold).
-    // Selection is NOT a per-group sort: the distinct (group, score)
-    // domain goes through ONE global rankAndCumSums two-phase scan ordered
-    // by (group, score); per-group running counts are the global running
-    // sum minus the earlier-groups offset (a ≤5-row broadcast — the
-    // Window below is over the bounded priority domain). Coverage then
-    // broadcasts the 5-row threshold table against the test split.
-    "q_eng_conformal" -> ((s, d) => {
-      val sc = scored(s, d)
-      val cal = sc.where(col("o_orderkey") % 2 === 1)
-      val tst = sc.where(col("o_orderkey") % 2 === 0)
-      val dist = cal.groupBy(col("o_orderpriority").as("g"), col("cents"))
-        .agg(count(lit(1)).as("cnt"))
-      val cum = StableIds.rankAndCumSums(dist,
-        Seq(col("g"), col("cents")), Seq("cnt" -> "cum"))
-      val gk = dist.groupBy(col("g")).agg(sum(col("cnt")).as("n_cal"))
-        .withColumn("off", coalesce(sum(col("n_cal")).over(
-          Window.orderBy(col("g"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("k",
-          least(col("n_cal"), expr("(n_cal * 9 + 18) DIV 10")))
-      val thr = cum.join(broadcast(gk), Seq("g"))
-        .where(col("cum") - col("off") >= col("k"))
-        .groupBy(col("g"))
-        .agg(min(col("cents")).as("threshold_cents"))
-      val cov = tst
-        .join(broadcast(thr), col("o_orderpriority") === thr("g"))
-        .groupBy(col("g"))
-        .agg(count(lit(1)).as("n_test"),
-          sum(when(col("cents") <= col("threshold_cents"), 1L).otherwise(0L))
-            .as("covered"))
-      gk.join(broadcast(thr), Seq("g")).join(broadcast(cov), Seq("g"))
-        .select(col("g").as("priority"), col("n_cal"), col("k"),
-          col("threshold_cents"), col("n_test"), col("covered"),
-          ppmWide(col("covered"), col("n_test")).as("coverage_ppm"))
-        .orderBy(col("priority"))
-    }),
-
-    // Isotonic (monotone non-decreasing) calibration of the score→label
-    // relation via the PAVA minimax identity: over 20 equidepth score bins,
-    // fit_i = max_{j≤i} min_{k≥i} rate(j..k) with rate(j..k) the pooled
-    // positive rate of bins j..k. The minimax runs over ppm-TRUNCATED pooled
-    // rates — that truncation is the cross-engine contract (comparing exact
-    // rationals would need fraction ordering both engines can't hash-match).
-    // Scale shape: ONE corpus-sized aggregate lands the 20-row bin table
-    // (ranked scalably via StableIds — no global row window); every join
-    // after it is over the bounded bin/interval domain (≤ 210 interval
-    // rows, ≤ 1.5k interval×bin rows), so the O(B³) closed form replaces
-    // the inherently sequential PAVA sweep with bounded declarative joins.
-    // The Window below is over the 20-row bin domain.
-    "q_eng_isotonic" -> ((s, d) => {
-      val sc = scored(s, d)
-      val tot = sc.agg(count(lit(1)).as("n_tot"))
-      // localCheckpoint: the 20-row bin table is consumed by four
-      // downstream subtrees (lo/hi/minimax/final) — without it each one
-      // re-runs the corpus aggregate (8 parquet scans in the probed plan;
-      // 1 after). Same tiny-frame precedent as Similarity.kmeansCentroids.
-      val bins = StableIds.withRank(sc, Seq(col("cents"), col("o_orderkey")), "rk")
-        .crossJoin(broadcast(tot))
-        .withColumn("bin", expr("(rk - 1) * 20 DIV n_tot"))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n_bin"), sum(col("label")).as("pos_bin"))
-        .localCheckpoint()
-      bins.join(broadcast(isotonicFit(bins)), Seq("bin"))
-        .select(col("bin"), col("n_bin"), col("pos_bin"),
-          ppmWide(col("pos_bin"), col("n_bin")).as("raw_ppm"), col("iso_ppm"))
-        .orderBy(col("bin"))
-    }),
-
-    // Wald's sequential probability ratio test over the arrival-ordered
-    // returned-label stream: H0 p = 0.6 vs H1 p = 0.7, α = β = 0.05. Each
-    // order contributes a FIXED integer micro-nat log-likelihood step
-    // (⌊ln(0.7/0.6)·1e6⌋ = +154150 on a return, trunc(ln(0.3/0.4)·1e6) =
-    // −287682 otherwise — the constants are shared literals, no runtime
-    // logs, so the walk is exact integer arithmetic in both engines); the
-    // test stops at the first |LLR| ≥ ⌊ln((1−β)/α)·1e6⌋ = ln(19) µnats.
-    // The corpus-sized running sum is ONE StableIds.rankAndCumSums
-    // two-phase scan (never a single-partition ORDER BY window); crossing
-    // detection is an aggregate over the crossing rows plus one broadcast
-    // row-lookup join. The early-stopping readout an A/B pipeline runs
-    // instead of fixing n up front.
-    "q_eng_sprt" -> ((s, d) =>
-      sprtDetect(
-        scored(s, d).select(col("o_orderkey").as("key"),
-          when(col("label") === 1L, lit(154150L)).otherwise(lit(-287682L))
-            .as("llr")),
-        bound = 2944438L))
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_eng_auc" ->
-      s"""WITH $scoredSql,
-         sc AS (SELECT cents, CAST(sum(label) AS BIGINT) AS np,
-                       CAST(count(*) - sum(label) AS BIGINT) AS nn
-                FROM scored GROUP BY 1),
-         cumt AS (SELECT np, nn,
-                    CAST(sum(nn) OVER (ORDER BY cents
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      AS BIGINT) AS cumnn
-                  FROM sc),
-         u AS (SELECT CAST(sum(CAST(np AS HUGEINT) *
-                        (2 * (cumnn - nn) + nn)) AS HUGEINT) AS u2,
-                      CAST(sum(np) AS BIGINT) AS npos,
-                      CAST(sum(nn) AS BIGINT) AS nneg
-               FROM cumt)
-         SELECT ${sqlMulDiv("u2", "1000000",
-        "2 * CAST(npos AS HUGEINT) * CAST(nneg AS HUGEINT)")} AS auc_ppm,
-                npos, nneg
-         FROM u""",
-
-    "q_eng_ks_test" ->
+    },
       s"""WITH $scoredSql,
          sc AS (SELECT cents,
                        CAST(sum(CASE WHEN o_orderpriority = '1-URGENT'
@@ -768,9 +384,23 @@ object EvalQueries {
          SELECT ${sqlMulDiv("maxdiff", "1000000",
         "CAST(t1 AS HUGEINT) * CAST(t2 AS HUGEINT)")} AS ks_ppm,
                 t1 AS n_urgent, t2 AS n_other
-         FROM m""",
+         FROM m"""),
 
-    "q_eng_mann_whitney" ->
+    // Mann-Whitney U (Wilcoxon rank-sum) between urgent and non-urgent
+    // order values: the nonparametric two-sample location test that
+    // complements the KS distance above. Average ranks ride the SAME
+    // distinct-score rankAndCumSums scan (2× scaling keeps tied mid-ranks
+    // integer: avgrank·2 = 2·cum_before + t + 1), the tie-corrected
+    // variance floor V = ⌊n1·n2·(N(N−1)(N+1) − Σ(t³−t)) / (12N(N−1))⌋ is
+    // exact DECIMAL(38) arithmetic mirrored floor-for-floor in DuckDB, and
+    // z is one identical IEEE tree over the exact integers (A / 2√V; the
+    // sub-integer truncation of V is ~1e-16 relative at fixture scale and
+    // bit-identical cross-engine by construction).
+    Q("q_eng_mann_whitney", (s, d) =>
+      mannWhitneyU(scored(s, d), col("cents"),
+          col("o_orderpriority") === "1-URGENT")
+        .withColumnRenamed("n_a", "n_urgent")
+        .withColumnRenamed("n_b", "n_other"),
       s"""WITH $scoredSql,
          sc AS (SELECT cents,
                        CAST(sum(CASE WHEN o_orderpriority = '1-URGENT'
@@ -807,9 +437,35 @@ object EvalQueries {
          SELECT t1 AS n_urgent, t2 AS n_other, u1x2,
                 CAST(adiff AS DOUBLE) / (2.0 * sqrt(CAST(vfloor AS DOUBLE)))
                   AS z
-         FROM c""",
+         FROM c"""),
 
-    "q_eng_cohens_d" ->
+    // Cohen's d effect size between the urgent / non-urgent order-value
+    // arms — the standardized-mean-difference companion to the MW-U rank
+    // test: one conditional-moment aggregate (count, Σ, Σ² per arm, the
+    // squares in DECIMAL(38)), then d = (m1−m2)/s_pooled as a single
+    // identical IEEE tree over the exact integer moments (integer-valued
+    // DECIMAL(38,0) → DOUBLE is correctly rounded in both engines — the
+    // decSumToDouble audit).
+    Q("q_eng_cohens_d", (s, d) => {
+      val o = scored(s, d).select(
+        (col("o_orderpriority") === "1-URGENT").as("g"), col("cents"))
+      val a = o.agg(
+        count(when(col("g"), 1)).as("n1"),
+        count(when(!col("g"), 1)).as("n2"),
+        sum(when(col("g"), wide(col("cents")))).as("s1"),
+        sum(when(!col("g"), wide(col("cents")))).as("s2"),
+        sum(when(col("g"), wide(col("cents")) * wide(col("cents"))))
+          .as("q1"),
+        sum(when(!col("g"), wide(col("cents")) * wide(col("cents"))))
+          .as("q2"))
+      def dbl(c: Column): Column = c.cast("double")
+      val ss1 = dbl(col("q1")) - dbl(col("s1")) * dbl(col("s1")) / dbl(col("n1"))
+      val ss2 = dbl(col("q2")) - dbl(col("s2")) * dbl(col("s2")) / dbl(col("n2"))
+      a.select(col("n1").as("n_urgent"), col("n2").as("n_other"),
+        ((dbl(col("s1")) / dbl(col("n1")) - dbl(col("s2")) / dbl(col("n2"))) /
+          sqrt((ss1 + ss2) / (dbl(col("n1")) + dbl(col("n2")) - lit(2.0))))
+          .as("cohens_d"))
+    },
       s"""WITH $scoredSql,
          a AS (SELECT
                  CAST(count(CASE WHEN o_orderpriority = '1-URGENT'
@@ -834,9 +490,33 @@ object EvalQueries {
                           * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)))
                        / (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) - 2.0))
                   AS cohens_d
-         FROM a""",
+         FROM a"""),
 
-    "q_eng_cochran_armitage" ->
+    // Cochran-Armitage trend test: does the returned-order rate trend
+    // monotonically across the ordered priority scale (score = the
+    // priority digit 1..5)? The dose-response audit a pipeline runs on
+    // any ordinal quality band before trusting it as a filter. One
+    // bounded (score → n_i, r_i) aggregate; z² is one exact rational —
+    // numerator N·(N·Σsr − R·Σsn)², denominator
+    // R·(N−R)·(N·Σs²n − (Σsn)²) — floored once to ppm in DECIMAL(38).
+    Q("q_eng_cochran_armitage", (s, d) => {
+      val g = scored(s, d)
+        .select(substring(col("o_orderpriority"), 1, 1).cast("long").as("sc"),
+          col("label"))
+        .groupBy(col("sc"))
+        .agg(count(lit(1)).as("n_i"), sum(col("label")).as("r_i"))
+      val a = g.agg(sum(col("n_i")).as("n"), sum(col("r_i")).as("r"),
+        sum(col("sc") * col("n_i")).as("sn"),
+        sum(col("sc") * col("r_i")).as("sr"),
+        sum(col("sc") * col("sc") * col("n_i")).as("s2n"))
+      val t = wide(col("n")) * wide(col("sr")) - wide(col("r")) * wide(col("sn"))
+      a.select(col("n"), col("r"),
+        signum(t).cast("long").as("trend_sign"),
+        mulDivWide(wide(col("n")) * t * t, lit(1000000L),
+          wide(col("r")) * wide(col("n") - col("r")) *
+            (wide(col("n")) * wide(col("s2n")) -
+              wide(col("sn")) * wide(col("sn")))).as("z2_ppm"))
+    },
       s"""WITH $scoredSql,
          g AS (SELECT CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS sc,
                       CAST(count(*) AS BIGINT) AS n_i,
@@ -859,9 +539,33 @@ object EvalQueries {
                   // (CAST(r AS HUGEINT) * (n - r)
                       * (CAST(n AS HUGEINT) * s2n
                          - CAST(sn AS HUGEINT) * sn)) AS BIGINT) AS z2_ppm
-         FROM t""",
+         FROM t"""),
 
-    "q_eng_cochran_q" ->
+    // Cochran's Q: did the same customers' ordering behavior change
+    // across 1995/1996/1997? Blocks = customers, treatments = years,
+    // x_ij = customer i placed ≥1 order in year j. The repeated-measures
+    // binary test kappa/McNemar generalize to k > 2. One distinct
+    // (customer, year) flag table (bounded by 3 rows per customer), then
+    // Q = (k−1)(kΣC_j² − N²)/(kN − ΣR_i²) in exact integers.
+    Q("q_eng_cochran_q", (s, d) => {
+      val x = Tables.orders(s, d)
+        .select(col("o_custkey").as("ck"),
+          year(to_date(col("o_orderdate"))).cast("long").as("yr"))
+        .where(col("yr").between(1995L, 1997L))
+        .distinct()
+      val rows = x.groupBy(col("ck")).agg(count(lit(1)).as("ri"))
+      val colsT = x.groupBy(col("yr")).agg(count(lit(1)).as("cj"))
+      val tot = rows.agg(sum(col("ri")).as("nn"),
+        sum(col("ri") * col("ri")).as("r2"), count(lit(1)).as("b"))
+      val csum = colsT.agg(sum(col("cj") * col("cj")).as("c2"))
+      tot.crossJoin(broadcast(csum))
+        .select(col("b").as("n_blocks"), col("nn").as("n_flags"),
+          mulDivWide(
+            wide(lit(2L)) * (wide(lit(3L)) * wide(col("c2")) -
+              wide(col("nn")) * wide(col("nn"))),
+            lit(1000000L),
+            wide(lit(3L)) * wide(col("nn")) - wide(col("r2"))).as("q_ppm"))
+    },
       """WITH x AS (
            SELECT DISTINCT o_custkey AS ck,
                   CAST(year(CAST(o_orderdate AS DATE)) AS BIGINT) AS yr
@@ -878,9 +582,28 @@ object EvalQueries {
                 CAST(2 * (3 * CAST(c2 AS HUGEINT)
                           - CAST(nn AS HUGEINT) * nn) * 1000000
                   // (3 * CAST(nn AS HUGEINT) - r2) AS BIGINT) AS q_ppm
-         FROM tot CROSS JOIN cs""",
+         FROM tot CROSS JOIN cs"""),
 
-    "q_eng_calibration" ->
+    // calibration / lift table: equidepth deciles of the score (ranked
+    // scalably — range-partitioned zipWithIndex, no global window), per-bin
+    // observed positive rate in ppm and lift vs the base rate in ppm.
+    // The reliability readout a pipeline runs on every heuristic quality
+    // scorer before using it to filter a corpus.
+    Q("q_eng_calibration", (s, d) => {
+      val sc = scored(s, d)
+      val tot = sc.agg(count(lit(1)).as("n_tot"), sum(col("label")).as("pos_tot"))
+      StableIds.withRank(sc, Seq(col("cents").desc, col("o_orderkey")), "rk")
+        .crossJoin(broadcast(tot))
+        .withColumn("bin", expr("(rk - 1) * 10 DIV n_tot"))
+        .groupBy(col("bin"))
+        .agg(count(lit(1)).as("n_bin"), sum(col("label")).as("pos_bin"),
+          max(col("n_tot")).as("n_tot"), max(col("pos_tot")).as("pos_tot"))
+        .select(col("bin"), col("n_bin"), col("pos_bin"),
+          ppmWide(col("pos_bin"), col("n_bin")).as("pos_rate_ppm"),
+          mulDivWide(wide(col("pos_bin")) * wide(col("n_tot")), lit(1000000L),
+            wide(col("n_bin")) * wide(col("pos_tot"))).as("lift_ppm"))
+        .orderBy(col("bin"))
+    },
       s"""WITH $scoredSql,
          rk AS (SELECT label,
                        CAST(row_number() OVER (ORDER BY cents DESC, o_orderkey)
@@ -897,9 +620,19 @@ object EvalQueries {
                 ${sqlPpm("sum(label)", "count(*)")} AS pos_rate_ppm,
                 ${sqlMulDiv("sum(label) * CAST(max(n_tot) AS HUGEINT)",
         "1000000", "count(*) * CAST(max(pos_tot) AS HUGEINT)")} AS lift_ppm
-         FROM b GROUP BY bin ORDER BY bin""",
+         FROM b GROUP BY bin ORDER BY bin"""),
 
-    "q_eng_brier" ->
+    // Brier score + Murphy decomposition (reliability − resolution +
+    // uncertainty) of the decile-binned rank forecaster: forecast =
+    // the bin's mean score percentile (p_ppm = (n−rk)·1e6 DIV (n−1)),
+    // outcome = the returned-order label. Everything in exact ppm²
+    // integers — see [[brierDecomposition]], which runs the MERGEABLE
+    // path: per-slice integer bin tables (n/pos/S — pure sums) merged by
+    // addition before any division, the shape a 100 TB evaluation runs
+    // (each slice stays inside the DECIMAL(38) envelope; the merge is
+    // exact). Gated here; envelope-spec'd at ~3e6 synthetic rows against
+    // a BigInt driver reference in BrierMergeSpec.
+    Q("q_eng_brier", (s, d) => brierDecomposition(scored(s, d)),
       s"""WITH $scoredSql,
          t AS (SELECT CAST(count(*) AS BIGINT) AS nt,
                       CAST(sum(label) AS BIGINT) AS pt FROM scored),
@@ -952,9 +685,32 @@ object EvalQueries {
          SELECT n_tot, pos_tot, brier_ppm2, rel_ppm2, res_ppm2, unc_ppm2,
                 brier_ppm2 - (rel_ppm2 - res_ppm2 + unc_ppm2)
                   AS identity_gap_ppm2
-         FROM fin""",
+         FROM fin"""),
 
-    "q_eng_target_encode" ->
+    // leave-one-out target encoding of customer nation against the returned
+    // label: enc(nation, label) = (pos(nation) - label) / (n(nation) - 1) in
+    // exact ppm. LOO is constant given (nation, label), so the output is the
+    // bounded (nation × label) table — the full per-row encode at 100 TB is
+    // the same broadcast of per-nation stats this plan builds. Orders join
+    // customers on the one custkey shuffle; nation names broadcast.
+    Q("q_eng_target_encode", (s, d) => {
+      val oc = scored(s, d)
+        .join(Tables.customer(s, d)
+          .select(col("c_custkey"), col("c_nationkey")),
+          col("o_custkey") === col("c_custkey"))
+      val byLabel = oc.groupBy(col("c_nationkey"), col("label"))
+        .agg(count(lit(1)).as("n_rows"))
+      val stats = oc.groupBy(col("c_nationkey").as("nk"))
+        .agg(count(lit(1)).as("n"), sum(col("label")).as("pos"))
+      byLabel
+        .join(broadcast(stats), col("c_nationkey") === col("nk"))
+        .where(col("n") > 1L)
+        .join(broadcast(Tables.nation(s, d)),
+          col("c_nationkey") === col("n_nationkey"))
+        .select(col("n_name"), col("label"), col("n_rows"),
+          ppmWide(col("pos") - col("label"), col("n") - 1L).as("enc_ppm"))
+        .orderBy(col("n_name"), col("label"))
+    },
       s"""WITH $scoredSql,
          oc AS (SELECT c_nationkey, label FROM scored s
                 JOIN customer c ON s.o_custkey = c.c_custkey),
@@ -968,9 +724,35 @@ object EvalQueries {
          FROM bl JOIN st ON bl.c_nationkey = st.nk
          JOIN nation ON bl.c_nationkey = n_nationkey
          WHERE n > 1
-         ORDER BY n_name, label""",
+         ORDER BY n_name, label"""),
 
-    "q_eng_kappa" ->
+    // Cohen's kappa between two heuristic raters — rater A: order priority
+    // urgent/high; rater B: returned label. One pass builds the 2x2
+    // contingency; kappa = (n·(n00+n11) - pe) / (n² - pe) with
+    // pe = a1·b1 + a0·b0, all in DECIMAL(38) (n² overflows int64 past ~3e9
+    // rows), signed-truncating division — kappa is legitimately negative
+    // for anti-correlated raters.
+    Q("q_eng_kappa", (s, d) => {
+      scored(s, d)
+        .withColumn("a",
+          when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
+            .otherwise(0L))
+        .agg(count(lit(1)).as("n"), sum(col("a")).as("a1"),
+          sum(col("label")).as("b1"),
+          sum(col("a") * col("label")).as("n11"))
+        .select(
+          mulDivWideSigned(
+            wide(col("n")) * wide(col("n") - col("a1") - col("b1") +
+              col("n11") * 2L) -
+              (wide(col("a1")) * wide(col("b1")) +
+                wide(col("n") - col("a1")) * wide(col("n") - col("b1"))),
+            lit(1000000L),
+            wide(col("n")) * wide(col("n")) -
+              (wide(col("a1")) * wide(col("b1")) +
+                wide(col("n") - col("a1")) * wide(col("n") - col("b1"))))
+            .as("kappa_ppm"),
+          col("n"), col("a1"), col("b1"), col("n11"))
+    },
       s"""WITH $scoredSql,
          c AS (SELECT CAST(count(*) AS BIGINT) AS n,
                       CAST(sum(CASE WHEN o_orderpriority IN
@@ -989,11 +771,25 @@ object EvalQueries {
           "(CAST(a1 AS HUGEINT) * b1 + CAST(n - a1 AS HUGEINT) * (n - b1))")}
            AS kappa_ppm,
                 n, a1, b1, n11
-         FROM c""",
+         FROM c"""),
 
-    // mirrors the two-step truncating division verbatim (HUGEINT `//` is
-    // floor division; operands non-negative here)
-    "q_eng_fdr_bh" ->
+    // Benjamini–Hochberg FDR over per-nation return-rate tests, all-integer:
+    // under H0 a nation's positive count is Binomial(n, p0) with p0 the
+    // global rate, and Chebyshev bounds p ≤ Var/dev² = n·p0(1−p0)/(pos−n·p0)².
+    // Clearing denominators by n_tot²: varnum = n·pos_tot·(n_tot−pos_tot),
+    // dev = |pos·n_tot − n·pos_tot|. The ppm bound divides by dev TWICE
+    // (q1 = ⌊varnum/dev⌋, then ⌊q1·1e6/dev⌋, with an early q1 ≥ dev → 1e6
+    // cap) so no intermediate ever squares dev — dev² alone reaches 1e48
+    // at the 100 TB design point and would overflow DECIMAL(38)/HUGEINT
+    // in BOTH engines. The two-step truncation IS the cross-engine
+    // contract, mirrored verbatim in the oracle. The BH step-up then runs
+    // on the BOUNDED nation domain (≤25 rows — the Window is over a
+    // dimension table, same discipline as q_sample_pps): rank by (p asc,
+    // name), reject ranks ≤ max{i : p_(i)·m ≤ i·α·1e6}, α = 0.05.
+    Q("q_eng_fdr_bh", (s, d) =>
+      bhStepUp(nationReturnPv(s, d), alphaPpm = 50000L),
+      // mirrors the two-step truncating division verbatim (HUGEINT `//` is
+      // floor division; operands non-negative here)
       s"""WITH $scoredSql,
          oc AS (SELECT c_nationkey, label FROM scored s
                 JOIN customer c ON s.o_custkey = c.c_custkey),
@@ -1025,11 +821,17 @@ object EvalQueries {
          SELECT n_name, p_ub_ppm, rk,
                 CAST(CASE WHEN rk <= coalesce(km.kmax, 0) THEN 1 ELSE 0 END
                   AS BIGINT) AS rejected
-         FROM rk, km ORDER BY rk""",
+         FROM rk, km ORDER BY rk"""),
 
-    // BY: same chain as BH with the exact integer harmonic factor in the
-    // step-up comparison (list comprehension over the bounded family)
-    "q_eng_fdr_by" ->
+    // Benjamini–Yekutieli over the SAME per-nation Chebyshev p-value
+    // bounds: the dependence-robust step-up (per-nation tests share the
+    // global rate estimate, so independence is genuinely questionable
+    // here). Same bounded-domain machinery; only the rejection threshold
+    // tightens by the exact integer harmonic factor.
+    Q("q_eng_fdr_by", (s, d) =>
+      byStepUp(nationReturnPv(s, d), alphaPpm = 50000L),
+      // BY: same chain as BH with the exact integer harmonic factor in the
+      // step-up comparison (list comprehension over the bounded family)
       s"""WITH $scoredSql,
          oc AS (SELECT c_nationkey, label FROM scored s
                 JOIN customer c ON s.o_custkey = c.c_custkey),
@@ -1066,9 +868,30 @@ object EvalQueries {
          SELECT n_name, p_ub_ppm, rk,
                 CAST(CASE WHEN rk <= coalesce(km.kmax, 0) THEN 1 ELSE 0 END
                   AS BIGINT) AS rejected
-         FROM hm, km ORDER BY rk""",
+         FROM hm, km ORDER BY rk"""),
 
-    "q_eng_mcnemar" ->
+    // McNemar's paired test on the 2×2 disagreement between the two
+    // heuristic raters q_eng_kappa compares (rater A: priority ∈
+    // {urgent, high}; rater B: order contains a return): χ² = (b−c)²/(b+c)
+    // over the discordant counts only — the paired-rater upgrade question
+    // ("does B systematically flag what A misses?") that kappa's symmetric
+    // agreement number can't answer. One corpus aggregate; (b−c)² runs in
+    // DECIMAL(38) (b,c are row counts — squares pass int64 at ~3e9 rows).
+    Q("q_eng_mcnemar", (s, d) => {
+      scored(s, d)
+        .withColumn("a",
+          when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
+            .otherwise(0L))
+        .agg(sum(when(col("a") === 1L && col("label") === 0L, 1L)
+            .otherwise(0L)).as("b"),
+          sum(when(col("a") === 0L && col("label") === 1L, 1L)
+            .otherwise(0L)).as("c"))
+        .select(col("b"), col("c"),
+          when(col("b") + col("c") === 0L, lit(0L))
+            .otherwise(mulDivWide(
+              wide(col("b") - col("c")) * wide(col("b") - col("c")),
+              lit(1000000L), col("b") + col("c"))).as("chi2_ppm"))
+    },
       s"""WITH $scoredSql,
          c AS (SELECT
                  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -1082,11 +905,66 @@ object EvalQueries {
                      ELSE ${sqlMulDiv(
         "CAST(b - c AS HUGEINT) * (b - c)", "1000000", "b + c")}
                 END AS chi2_ppm
-         FROM c""",
+         FROM c"""),
 
-    // symmetric two-step ρ² division mirrored verbatim (all division
-    // operands non-negative → HUGEINT // floor == the Spark floor)
-    "q_eng_spearman" ->
+    // Spearman rank correlation between order value and basket size
+    // (line count), tie-corrected via Pearson-on-midranks in EXACT integer
+    // arithmetic: doubled midranks (2·cum − cnt + 1, always integral) have
+    // mean exactly n+1, so centering is integer subtraction and the
+    // centered values are |c| ≤ n — the moment sums stay ≤ n³ ≤ 1e36 in
+    // DECIMAL(38) at the 100 TB design point (never the n⁴ of the
+    // uncentered form). ρ² would need num²/(dx·dy) ~ n¹² — instead the
+    // SYMMETRIC two-step t1 = ⌊|num|·1e6/dx⌋, t2 = ⌊|num|·1e6/dy⌋,
+    // ρ²_ppm = sign·⌊t1·t2/1e6⌋ keeps every intermediate ≤ 1e24 and the
+    // product ≤ 1e12 by Cauchy–Schwarz (num² ≤ dx·dy). The two-step
+    // truncation IS the cross-engine contract, mirrored in the oracle.
+    // Midrank lookup: x-ranks come from one rankAndCumSums over the
+    // distinct-cents domain joined back on cents; y (basket size) is a
+    // ≤10-value domain — broadcast.
+    Q("q_eng_spearman", (s, d) => {
+      // memoized: the (cents, nlines) pair table feeds FOUR consumers
+      // (x-domain, y-domain, total, centered moments) — without the cache
+      // each re-runs the orders⋈lineitem join; with it the join runs once
+      // (the production-scale persist, lifecycle-managed by QueryCaches)
+      val rows = QueryCaches.memo(s, d, "spearman_rows") {
+        scored(s, d)
+          .join(Tables.lineitem(s, d)
+            .groupBy(col("l_orderkey")).agg(count(lit(1)).as("nlines")),
+            col("o_orderkey") === col("l_orderkey"))
+          .select(col("cents"), col("nlines"))
+      }
+      val xd = rows.groupBy(col("cents")).agg(count(lit(1)).as("cnt"))
+      val xr = StableIds.rankAndCumSums(xd, Seq(col("cents")),
+          Seq("cnt" -> "cum"))
+        .select(col("cents").as("xv"),
+          (col("cum") * 2L - col("cnt") + 1L).as("mx2"))
+      val yd = rows.groupBy(col("nlines")).agg(count(lit(1)).as("cnt"))
+      val yr = StableIds.rankAndCumSums(yd, Seq(col("nlines")),
+          Seq("cnt" -> "cum"))
+        .select(col("nlines").as("yv"),
+          (col("cum") * 2L - col("cnt") + 1L).as("my2"))
+      val tot = rows.agg(count(lit(1)).as("n"))
+      val cent = rows
+        .join(xr, col("cents") === col("xv"))
+        .join(broadcast(yr), col("nlines") === col("yv"))
+        .crossJoin(broadcast(tot))
+        .select(col("n"), (col("mx2") - col("n") - 1L).as("cx"),
+          (col("my2") - col("n") - 1L).as("cy"))
+      cent.groupBy(col("n"))
+        .agg(sum(wide(col("cx")) * wide(col("cy"))).as("num"),
+          sum(wide(col("cx")) * wide(col("cx"))).as("dx"),
+          sum(wide(col("cy")) * wide(col("cy"))).as("dy"))
+        .select(col("n"),
+          when(col("dx") <= 0 || col("dy") <= 0, lit(0L))
+            .otherwise(
+              when(col("num") < 0, lit(-1L)).otherwise(lit(1L)) *
+                mulDivWide(
+                  mulDivWideDec(abs(col("num")), lit(1000000L), col("dx")),
+                  mulDivWideDec(abs(col("num")), lit(1000000L), col("dy")),
+                  lit(1000000L))).as("rho2_sign_ppm"))
+    },
+      // symmetric two-step ρ² division mirrored verbatim (all division
+      // operands non-negative → HUGEINT // floor == the Spark floor)
       s"""WITH $scoredSql,
          rws AS (SELECT cents, nlines FROM scored s
                  JOIN (SELECT l_orderkey,
@@ -1123,9 +1001,49 @@ object EvalQueries {
                        ((abs(num) * 1000000 // dx) *
                         (abs(num) * 1000000 // dy) // 1000000) AS BIGINT)
                 END AS rho2_sign_ppm
-         FROM mom""",
+         FROM mom"""),
 
-    "q_eng_conformal" ->
+    // Split-conformal prediction thresholds with test-side coverage:
+    // calibration = odd order keys, test = even; per priority group the
+    // threshold is the k-th smallest calibration score with
+    // k = min(n, ⌈0.9·(n+1)⌉) (the n-cap keeps the group well-defined when
+    // ⌈0.9(n+1)⌉ > n — documented divergence from the +∞ threshold).
+    // Selection is NOT a per-group sort: the distinct (group, score)
+    // domain goes through ONE global rankAndCumSums two-phase scan ordered
+    // by (group, score); per-group running counts are the global running
+    // sum minus the earlier-groups offset (a ≤5-row broadcast — the
+    // Window below is over the bounded priority domain). Coverage then
+    // broadcasts the 5-row threshold table against the test split.
+    Q("q_eng_conformal", (s, d) => {
+      val sc = scored(s, d)
+      val cal = sc.where(col("o_orderkey") % 2 === 1)
+      val tst = sc.where(col("o_orderkey") % 2 === 0)
+      val dist = cal.groupBy(col("o_orderpriority").as("g"), col("cents"))
+        .agg(count(lit(1)).as("cnt"))
+      val cum = StableIds.rankAndCumSums(dist,
+        Seq(col("g"), col("cents")), Seq("cnt" -> "cum"))
+      val gk = dist.groupBy(col("g")).agg(sum(col("cnt")).as("n_cal"))
+        .withColumn("off", coalesce(sum(col("n_cal")).over(
+          Window.orderBy(col("g"))
+            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .withColumn("k",
+          least(col("n_cal"), expr("(n_cal * 9 + 18) DIV 10")))
+      val thr = cum.join(broadcast(gk), Seq("g"))
+        .where(col("cum") - col("off") >= col("k"))
+        .groupBy(col("g"))
+        .agg(min(col("cents")).as("threshold_cents"))
+      val cov = tst
+        .join(broadcast(thr), col("o_orderpriority") === thr("g"))
+        .groupBy(col("g"))
+        .agg(count(lit(1)).as("n_test"),
+          sum(when(col("cents") <= col("threshold_cents"), 1L).otherwise(0L))
+            .as("covered"))
+      gk.join(broadcast(thr), Seq("g")).join(broadcast(cov), Seq("g"))
+        .select(col("g").as("priority"), col("n_cal"), col("k"),
+          col("threshold_cents"), col("n_test"), col("covered"),
+          ppmWide(col("covered"), col("n_test")).as("coverage_ppm"))
+        .orderBy(col("priority"))
+    },
       s"""WITH $scoredSql,
          cal AS (SELECT o_orderpriority AS g, cents FROM scored
                  WHERE o_orderkey % 2 = 1),
@@ -1153,11 +1071,40 @@ object EvalQueries {
                 thr.threshold_cents, cov.n_test, cov.covered,
                 ${sqlPpm("cov.covered", "cov.n_test")} AS coverage_ppm
          FROM gk JOIN thr USING (g) JOIN cov ON cov.g = gk.g
-         ORDER BY priority""",
+         ORDER BY priority"""),
 
-    // minimax over the SAME ppm-truncated pooled rates (HUGEINT `//` =
-    // floor on the non-negative operands here)
-    "q_eng_isotonic" ->
+    // Isotonic (monotone non-decreasing) calibration of the score→label
+    // relation via the PAVA minimax identity: over 20 equidepth score bins,
+    // fit_i = max_{j≤i} min_{k≥i} rate(j..k) with rate(j..k) the pooled
+    // positive rate of bins j..k. The minimax runs over ppm-TRUNCATED pooled
+    // rates — that truncation is the cross-engine contract (comparing exact
+    // rationals would need fraction ordering both engines can't hash-match).
+    // Scale shape: ONE corpus-sized aggregate lands the 20-row bin table
+    // (ranked scalably via StableIds — no global row window); every join
+    // after it is over the bounded bin/interval domain (≤ 210 interval
+    // rows, ≤ 1.5k interval×bin rows), so the O(B³) closed form replaces
+    // the inherently sequential PAVA sweep with bounded declarative joins.
+    // The Window below is over the 20-row bin domain.
+    Q("q_eng_isotonic", (s, d) => {
+      val sc = scored(s, d)
+      val tot = sc.agg(count(lit(1)).as("n_tot"))
+      // localCheckpoint: the 20-row bin table is consumed by four
+      // downstream subtrees (lo/hi/minimax/final) — without it each one
+      // re-runs the corpus aggregate (8 parquet scans in the probed plan;
+      // 1 after). Same tiny-frame precedent as Similarity.kmeansCentroids.
+      val bins = StableIds.withRank(sc, Seq(col("cents"), col("o_orderkey")), "rk")
+        .crossJoin(broadcast(tot))
+        .withColumn("bin", expr("(rk - 1) * 20 DIV n_tot"))
+        .groupBy(col("bin"))
+        .agg(count(lit(1)).as("n_bin"), sum(col("label")).as("pos_bin"))
+        .localCheckpoint()
+      bins.join(broadcast(isotonicFit(bins)), Seq("bin"))
+        .select(col("bin"), col("n_bin"), col("pos_bin"),
+          ppmWide(col("pos_bin"), col("n_bin")).as("raw_ppm"), col("iso_ppm"))
+        .orderBy(col("bin"))
+    },
+      // minimax over the SAME ppm-truncated pooled rates (HUGEINT `//` =
+      // floor on the non-negative operands here)
       s"""WITH $scoredSql,
          rk AS (SELECT label,
                        CAST(row_number() OVER (ORDER BY cents, o_orderkey)
@@ -1187,11 +1134,28 @@ object EvalQueries {
                  FROM mn GROUP BY 1)
          SELECT bins.bin, n_bin, pos_bin,
                 ${sqlPpm("pos_bin", "n_bin")} AS raw_ppm, iso_ppm
-         FROM bins JOIN iso USING (bin) ORDER BY bin""",
+         FROM bins JOIN iso USING (bin) ORDER BY bin"""),
 
-    // same fixed micro-nat step constants; single-partition running sum is
-    // the oracle-side form only
-    "q_eng_sprt" ->
+    // Wald's sequential probability ratio test over the arrival-ordered
+    // returned-label stream: H0 p = 0.6 vs H1 p = 0.7, α = β = 0.05. Each
+    // order contributes a FIXED integer micro-nat log-likelihood step
+    // (⌊ln(0.7/0.6)·1e6⌋ = +154150 on a return, trunc(ln(0.3/0.4)·1e6) =
+    // −287682 otherwise — the constants are shared literals, no runtime
+    // logs, so the walk is exact integer arithmetic in both engines); the
+    // test stops at the first |LLR| ≥ ⌊ln((1−β)/α)·1e6⌋ = ln(19) µnats.
+    // The corpus-sized running sum is ONE StableIds.rankAndCumSums
+    // two-phase scan (never a single-partition ORDER BY window); crossing
+    // detection is an aggregate over the crossing rows plus one broadcast
+    // row-lookup join. The early-stopping readout an A/B pipeline runs
+    // instead of fixing n up front.
+    Q("q_eng_sprt", (s, d) =>
+      sprtDetect(
+        scored(s, d).select(col("o_orderkey").as("key"),
+          when(col("label") === 1L, lit(154150L)).otherwise(lit(-287682L))
+            .as("llr")),
+        bound = 2944438L),
+      // same fixed micro-nat step constants; single-partition running sum is
+      // the oracle-side form only
       s"""WITH $scoredSql,
          st AS (SELECT o_orderkey,
                        CASE WHEN label = 1 THEN 154150 ELSE -287682 END AS llr
@@ -1208,6 +1172,6 @@ object EvalQueries {
          SELECT x.n_obs, cum.cum_llr AS llr_micro,
                 CASE WHEN cum.cum_llr >= 2944438 THEN 'accept_h1'
                      ELSE 'accept_h0' END AS decision
-         FROM cum JOIN x ON cum.rnk = x.n_obs"""
+         FROM cum JOIN x ON cum.rnk = x.n_obs""")
   )
 }

@@ -79,84 +79,23 @@ object MonitorQueries {
       .groupBy(to_date(col("o_orderdate")).as("day"))
       .agg(sum(cents).as("x"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val registry: Seq[Q] = Seq(
     // HyperLogLog cardinality over two id streams: o_custkey (1.5k+
     // distinct — saturates all 256 registers, exercising the raw harmonic
     // estimator) and c_nationkey (25 distinct — most registers empty,
     // exercising the linear-counting leg). Both estimator columns are
     // live at every SF by construction.
-    "q_eng_hll_card" -> ((s, d) => {
+    Q("q_eng_hll_card", (s, d) => {
       val custs = hllSketch(
         Tables.orders(s, d).select(col("o_custkey").as("id")), "o_custkey")
       val nats = hllSketch(
         Tables.customer(s, d).select(col("c_nationkey").as("id")),
         "c_nationkey")
       custs.unionAll(nats).orderBy(col("domain"))
-    }),
-
-    // CUSUM changepoint alarm on daily revenue, zero-slack mean-shift
-    // form. The sequential recurrence S_t = max(0, S_{t−1} + (x_t − μ))
-    // is NOT computed sequentially: with P_t = Σ_{i≤t}(x_i·n − S) (mean
-    // cleared by cross-multiplication — exact integers, no float mean),
-    // S_t·n = P_t − min(0, min_{k≤t} P_k), two cumulative windows over
-    // the BOUNDED day domain (~2.4k rows; the fact-scale work is the one
-    // daily aggregate). Top-5 alarm days, fully tie-broken. cusum_scaled
-    // ≤ n·Σ|x| ≲ 6e16 at sf100 — int64-safe.
-    "q_eng_cusum_alarm" -> ((s, d) => {
-      val daily = dailyRevenue(s, d)
-      val tot = daily.agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
-      // bounded day domain: ~2.4k rows per the fixture's fixed calendar
-      // span, constant in corpus size — the global window is keys-sized
-      val w = Window.orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      daily.crossJoin(broadcast(tot))
-        .withColumn("dev", wide(col("x")) * wide(col("n")) - wide(col("sx")))
-        .withColumn("p", sum(col("dev")).over(w))
-        .withColumn("minp",
-          least(lit(0L).cast("decimal(38,0)"), min(col("p")).over(w)))
-        .select(col("day").cast("string").as("day"), col("x"),
-          (col("p") - col("minp")).cast("long").as("cusum_scaled"))
-        .orderBy(col("cusum_scaled").desc, col("day"))
-        .limit(5)
-    }),
-
-    // the HLL sketch ON the gate as a real Catalyst aggregate: per-type
-    // distinct-user cardinalities through the SQL-registered
-    // TypedImperativeAggregate (graft_hll) — a FIXED 256-byte register
-    // buffer per group, partial-aggregated map-side and merged as a
-    // bytewise max, so the exchange moves 256 bytes per group regardless
-    // of input size. The oracle recomputes the identical register math
-    // per group, so the aggregate's update/merge/eval path is
-    // hash-compared cross-engine, not just spec-tested (the KMV
-    // discipline, q_eng_kmv_agg).
-    "q_eng_hll_by_type" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
-      Tables.events(s, d).createOrReplaceTempView("hll_events")
-      s.sql(
-        // every literal CAST AS DOUBLE: Spark SQL parses bare decimal
-        // literals as DECIMAL, whose mixed arithmetic rounds differently
-        // from the pure-double tree the Column API / DuckDB evaluate
-        s"""SELECT event_type, sk.v_zero AS v_zero, sk.s_scaled AS s_scaled,
-                  CAST(floor(CAST(0.7213 AS DOUBLE)
-                       / (CAST(1.0 AS DOUBLE)
-                          + CAST(1.079 AS DOUBLE) / CAST(256.0 AS DOUBLE))
-                       * CAST(65536.0 AS DOUBLE)
-                       * CAST($HllScale AS DOUBLE)
-                       / CAST(sk.s_scaled AS DOUBLE)
-                       * CAST(1000000.0 AS DOUBLE)
-                       + CAST(0.5 AS DOUBLE)) AS BIGINT) AS raw_est_micro,
-                  n_exact
-           FROM (SELECT event_type, graft_hll(user_id) AS sk,
-                        CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact
-                 FROM hll_events GROUP BY event_type)
-           ORDER BY event_type""")
-    })
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_eng_hll_card" -> {
-      def sketch(src: String, idExpr: String, domain: String): String =
-        s"""SELECT '$domain' AS domain, CAST(256 AS BIGINT) AS m,
+    },
+      {
+        def sketch(src: String, idExpr: String, domain: String): String =
+          s"""SELECT '$domain' AS domain, CAST(256 AS BIGINT) AS m,
               CAST(256 - v_hit AS BIGINT) AS v_zero,
               CAST(s_hit + (256 - v_hit) * $HllScale AS BIGINT) AS s_scaled,
               CAST(floor(0.7213 / (1.0 + 1.079 / 256.0) * 65536.0
@@ -181,13 +120,37 @@ object MonitorQueries {
                         CAST('0x' || substr(h, 3, 12) AS BIGINT) AS w
                  FROM (SELECT md5(CAST($idExpr AS VARCHAR)) AS h FROM $src))
                GROUP BY 1))"""
-      s"""${sketch("orders", "o_custkey", "o_custkey")}
+        s"""${sketch("orders", "o_custkey", "o_custkey")}
          UNION ALL
          ${sketch("customer", "c_nationkey", "c_nationkey")}
          ORDER BY domain"""
-    },
+      }),
 
-    "q_eng_cusum_alarm" ->
+    // CUSUM changepoint alarm on daily revenue, zero-slack mean-shift
+    // form. The sequential recurrence S_t = max(0, S_{t−1} + (x_t − μ))
+    // is NOT computed sequentially: with P_t = Σ_{i≤t}(x_i·n − S) (mean
+    // cleared by cross-multiplication — exact integers, no float mean),
+    // S_t·n = P_t − min(0, min_{k≤t} P_k), two cumulative windows over
+    // the BOUNDED day domain (~2.4k rows; the fact-scale work is the one
+    // daily aggregate). Top-5 alarm days, fully tie-broken. cusum_scaled
+    // ≤ n·Σ|x| ≲ 6e16 at sf100 — int64-safe.
+    Q("q_eng_cusum_alarm", (s, d) => {
+      val daily = dailyRevenue(s, d)
+      val tot = daily.agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
+      // bounded day domain: ~2.4k rows per the fixture's fixed calendar
+      // span, constant in corpus size — the global window is keys-sized
+      val w = Window.orderBy(col("day"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      daily.crossJoin(broadcast(tot))
+        .withColumn("dev", wide(col("x")) * wide(col("n")) - wide(col("sx")))
+        .withColumn("p", sum(col("dev")).over(w))
+        .withColumn("minp",
+          least(lit(0L).cast("decimal(38,0)"), min(col("p")).over(w)))
+        .select(col("day").cast("string").as("day"), col("x"),
+          (col("p") - col("minp")).cast("long").as("cusum_scaled"))
+        .orderBy(col("cusum_scaled").desc, col("day"))
+        .limit(5)
+    },
       """WITH daily AS (
            SELECT CAST(o_orderdate AS DATE) AS day,
                   CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
@@ -205,9 +168,39 @@ object MonitorQueries {
                    AS BIGINT) AS cusum_scaled
                FROM p)
          SELECT CAST(day AS VARCHAR) AS day, x, cusum_scaled FROM c
-         ORDER BY cusum_scaled DESC, day LIMIT 5""",
+         ORDER BY cusum_scaled DESC, day LIMIT 5"""),
 
-    "q_eng_hll_by_type" ->
+    // the HLL sketch ON the gate as a real Catalyst aggregate: per-type
+    // distinct-user cardinalities through the SQL-registered
+    // TypedImperativeAggregate (graft_hll) — a FIXED 256-byte register
+    // buffer per group, partial-aggregated map-side and merged as a
+    // bytewise max, so the exchange moves 256 bytes per group regardless
+    // of input size. The oracle recomputes the identical register math
+    // per group, so the aggregate's update/merge/eval path is
+    // hash-compared cross-engine, not just spec-tested (the KMV
+    // discipline, q_eng_kmv_agg).
+    Q("q_eng_hll_by_type", (s, d) => {
+      graft.functions.GraftFunctions.register(s)
+      Tables.events(s, d).createOrReplaceTempView("hll_events")
+      s.sql(
+        // every literal CAST AS DOUBLE: Spark SQL parses bare decimal
+        // literals as DECIMAL, whose mixed arithmetic rounds differently
+        // from the pure-double tree the Column API / DuckDB evaluate
+        s"""SELECT event_type, sk.v_zero AS v_zero, sk.s_scaled AS s_scaled,
+                  CAST(floor(CAST(0.7213 AS DOUBLE)
+                       / (CAST(1.0 AS DOUBLE)
+                          + CAST(1.079 AS DOUBLE) / CAST(256.0 AS DOUBLE))
+                       * CAST(65536.0 AS DOUBLE)
+                       * CAST($HllScale AS DOUBLE)
+                       / CAST(sk.s_scaled AS DOUBLE)
+                       * CAST(1000000.0 AS DOUBLE)
+                       + CAST(0.5 AS DOUBLE)) AS BIGINT) AS raw_est_micro,
+                  n_exact
+           FROM (SELECT event_type, graft_hll(user_id) AS sk,
+                        CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact
+                 FROM hll_events GROUP BY event_type)
+           ORDER BY event_type""")
+    },
       s"""WITH b AS (
            SELECT event_type,
                   CAST('0x' || substr(h, 1, 2) AS BIGINT) AS reg,
@@ -232,6 +225,6 @@ object MonitorQueries {
                      * 1000000.0 + 0.5) AS BIGINT) AS raw_est_micro,
                 n_exact
          FROM a JOIN e ON e.event_type = a.event_type
-         ORDER BY a.event_type"""
+         ORDER BY a.event_type""")
   )
 }

@@ -43,210 +43,6 @@ object MultimodalQueries {
         col("ida"), col("idb"), maxSteps = ClusterSteps)
     }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // typed mapPartitions decode (stub codec) → per-item features
-    "q_mm_decode_features" -> ((s, d) =>
-      Multimodal.decodeImageFeatures(Multimodal.asRecords(media(s, d)))
-        .toDF().orderBy("media_id")),
-
-    // declarative 1-fps frame sampling with deterministic frame keys
-    "q_mm_frame_sample" -> ((s, d) =>
-      Multimodal.sampleFrames(media(s, d), 8).orderBy("media_id", "frame_idx")),
-
-    // metadata-level aspect-preserving resize
-    "q_mm_resize_meta" -> ((s, d) =>
-      Multimodal.resizeMeta(media(s, d), 64).orderBy("media_id")),
-
-    // declarative 1s audio analysis windows with sample offsets
-    "q_mm_audio_windows" -> ((s, d) =>
-      Multimodal.audioWindows(media(s, d), 1000)
-        .orderBy("media_id", "window_idx")),
-
-    // declarative ViT-style 2×2 patch sums over the 4×4 grayscale pixels
-    "q_mm_patches" -> ((s, d) =>
-      Multimodal.patchSums(media(s, d))
-        .orderBy("media_id", "patch_idx")),
-
-    // 16-bit threshold-at-mean perceptual hash per image (integral compare
-    // px·16 > total — no division edge)
-    "q_mm_phash" -> ((s, d) =>
-      Multimodal.phash(media(s, d)).orderBy("media_id")),
-
-    // near-dup image pairs: nibble-banded candidates + exact Hamming ≤ 3
-    // verify (full recall by pigeonhole; oracle checks ALL pairs — set
-    // equality proves the banding lost nothing)
-    "q_mm_phash_pairs" -> ((s, d) =>
-      Multimodal.phashPairs(Multimodal.phash(media(s, d)), 3)
-        .orderBy("ida", "idb")),
-
-    // flip-duplicate candidates: original pHash banded against the
-    // MIRRORED-grid pHash — catches horizontally flipped copies a plain
-    // perceptual hash misses; same nibble banding + exact Hamming verify,
-    // all-pairs oracle proves recall on the cross table too
-    "q_mm_phash_mirror_pairs" -> ((s, d) =>
-      Multimodal.phashPairsAcross(
-          Multimodal.phash(media(s, d)),
-          Multimodal.phashMirrored(media(s, d)), 3)
-        .orderBy("ida", "idb")),
-
-    // tonal-diversity entropy per image: 4-level histogram of the decoded
-    // pixels, H in integer micro-nats — flat/posterized images score low,
-    // the complement of the exposure clip audit. ln runs over the fixed
-    // 16-value input set {ln(16/c)} (audited boundary margins), then
-    // everything is integer. Map-side level extraction (shiftright), one
-    // (media, level) aggregate
-    "q_mm_image_entropy" -> ((s, d) => {
-      def px(i: Int) =
-        conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
-      media(s, d).where(col("meta.media_type") === "image")
-        .select(col("media_id"), explode(array(
-          (0 until 16).map(i => shiftright(px(i), 6)): _*)).as("lvl"))
-        .groupBy(col("media_id"), col("lvl")).agg(count(lit(1)).as("c"))
-        .withColumn("term", col("c") *
-          floor(log(lit(16.0) / col("c").cast("double")) * 1000000.0 + 0.5)
-            .cast("long"))
-        .groupBy(col("media_id"))
-        .agg(expr("sum(term) DIV 16").as("h_micro"),
-          count(lit(1)).as("n_levels"))
-        .orderBy("media_id")
-    }),
-
-    // audio near-dup pairs: delta-sign (Haitsma–Kalker-style) fingerprints
-    // matched at Hamming ≤ 3 through the SAME nibble banding as the image
-    // path — one banding operator serves both modalities; the all-pairs
-    // oracle again proves full recall
-    "q_mm_audio_fp_pairs" -> ((s, d) =>
-      Multimodal.phashPairs(Multimodal.audioFingerprint(media(s, d)), 3)
-        .orderBy("ida", "idb")),
-
-    // near-dup image clusters: connected components over the verified
-    // phash pair graph — "keep one per cluster" for the image modality,
-    // reusing the text-dedup min-label propagation, bounded at
-    // ClusterSteps rounds (oracle = the identical bounded-round chain)
-    "q_mm_phash_clusters" -> ((s, d) =>
-      phashClusterTable(s, d)
-        .select(col("doc_id").as("media_id"), col("cluster_id"))
-        .orderBy("media_id"))
-        ,
-
-    // cross-modal consistency join (r7 ask #7): text near-dup clusters
-    // (MinHash chain) ⋈ image near-dup clusters (pHash chain) on
-    // doc_id = media_id — per TEXT cluster, how many members carry an
-    // image-cluster assignment and how many DISTINCT image clusters they
-    // span. Text-dup docs whose images scatter across many image
-    // clusters are the mislabeled/mismatched-media signal a multimodal
-    // curation pipeline filters on. Both cluster tables are memoized;
-    // the join is a plain equi-join on the id, aggregates on the
-    // cluster key — no new shuffle shape at scale.
-    "q_mm_crossmodal_clusters" -> ((s, d) => {
-      val txt = DedupQueries.textClusterTable(s, d)
-        .select(col("cluster_id").as("text_cluster"), col("doc_id"))
-      val img = phashClusterTable(s, d)
-        .select(col("doc_id").as("media_id"),
-          col("cluster_id").as("img_cluster"))
-      txt.join(img, col("doc_id") === col("media_id"), "left")
-        .groupBy(col("text_cluster"))
-        .agg(count(lit(1)).as("n_docs"),
-          count(col("img_cluster")).as("n_imaged"),
-          countDistinct(col("img_cluster")).as("n_img_clusters"))
-        .orderBy("text_cluster")
-    }),
-
-    // scene-change boundaries: lag window over per-video frame signature
-    // sequences, 60-bit hamming delta over threshold → boundary
-    "q_mm_scene_changes" -> ((s, d) =>
-      Multimodal.sceneChanges(media(s, d), 8, threshold = 25)
-        .orderBy("media_id", "boundary_frame")),
-
-    // aspect-ratio bucketing — the multimodal-trainer batching concern
-    // (same-shape images share a batch): 0.5-wide integer ratio classes,
-    // one hash aggregate over metadata only (no payload decode)
-    "q_mm_aspect_buckets" -> ((s, d) =>
-      media(s, d).where(col("meta.media_type") === "image")
-        .select(col("media_id"),
-          call_function("div",
-            col("meta.width_px").cast("long") * 100L,
-            col("meta.height_px").cast("long")).as("ratio_centi"))
-        .withColumn("bucket", call_function("div", col("ratio_centi"), lit(50L)))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n_images"),
-          min("ratio_centi").as("min_ratio_centi"),
-          max("ratio_centi").as("max_ratio_centi"))
-        .orderBy("bucket")),
-
-    // exposure audit: clip counts + dynamic range per image, curation
-    // flag when ≥ half the pixels clip — metadata-cheap pre-filter ahead
-    // of feature extraction
-    "q_mm_exposure" -> ((s, d) =>
-      Multimodal.exposure(media(s, d), lo = 64, hi = 192)
-        .orderBy("media_id")),
-
-    // silence-run detection (gaps-and-islands over the sample stream):
-    // consecutive below-threshold samples group into runs via the
-    // pos − row_number() trick — one window per audio keyed on media_id,
-    // no self-join, runs of any length in a single pass. The curation
-    // signal: clips that are mostly silence get dropped before decode
-    "q_mm_audio_silence" -> ((s, d) => {
-      def px(i: Int) =
-        conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("media_id").orderBy("pos")
-      val samples = media(s, d).where(col("meta.media_type") === "audio")
-        .select(col("media_id"),
-          posexplode(array((0 until 16).map(px): _*)).as(Seq("pos", "amp")))
-      val runs = samples.where(col("amp") < 64)
-        .withColumn("grp", col("pos") - row_number().over(w))
-        .groupBy(col("media_id"), col("grp"))
-        .agg(count(lit(1)).as("run_len"))
-      runs.groupBy("media_id")
-        .agg(count(lit(1)).as("n_runs"),
-          max("run_len").as("longest_run"),
-          sum("run_len").as("n_silent"))
-        .orderBy("media_id")
-    }),
-
-    // letterbox detection: near-constant top/bottom pixel rows (the
-    // black-bar artifact that wastes training pixels). Row dynamic range
-    // from greatest/least over the decoded row bytes — map-side integer
-    // expressions, one scan, no aggregation
-    "q_mm_letterbox" -> ((s, d) => {
-      def px(i: Int) =
-        conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
-      def rowRange(r: Int) = {
-        val b = (0 to 3).map(c => px(4 * r + c))
-        greatest(b: _*) - least(b: _*)
-      }
-      media(s, d).where(col("meta.media_type") === "image")
-        .select(col("media_id"), rowRange(0).as("top_range"),
-          rowRange(3).as("bottom_range"))
-        .withColumn("letterboxed",
-          when(col("top_range") < 32 || col("bottom_range") < 32, lit("bar"))
-            .otherwise(lit("clean")))
-        .orderBy("media_id")
-    }),
-
-    // focus/blur metric: Laplacian energy over the 4×4 pixel grid — the
-    // variance-of-Laplacian sharpness test at the fixture's grid size.
-    // The 4-neighbor Laplacian at each inner cell is exact integer
-    // arithmetic on the decoded bytes (map-side expressions only: no
-    // shuffle, no UDF), so the blur flag is bitwise across engines
-    "q_mm_blur_energy" -> ((s, d) => {
-      def px(i: Int) =
-        conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
-      val terms = for { r <- 1 to 2; c <- 1 to 2 } yield {
-        val l = px(4 * r + c) * 4 - px(4 * (r - 1) + c) - px(4 * (r + 1) + c) -
-          px(4 * r + c - 1) - px(4 * r + c + 1)
-        l * l
-      }
-      media(s, d).where(col("meta.media_type") === "image")
-        .select(col("media_id"), terms.reduce(_ + _).as("lap_energy"))
-        .withColumn("focus",
-          when(col("lap_energy") < 150000L, lit("blurry"))
-            .otherwise(lit("sharp")))
-        .orderBy("media_id")
-    })
-  )
-
   /** payload bytes as BIGINTs, parsed from the md5 hex (payload = unhex(md5)). */
   private val bytesCte =
     """WITH m AS (
@@ -299,8 +95,11 @@ object MultimodalQueries {
     (base +: rs).mkString(",\n          ")
   }
 
-  val oracleSql: Map[String, String] = Map(
-    "q_mm_decode_features" ->
+  val registry: Seq[Q] = Seq(
+    // typed mapPartitions decode (stub codec) → per-item features
+    Q("q_mm_decode_features", (s, d) =>
+      Multimodal.decodeImageFeatures(Multimodal.asRecords(media(s, d)))
+        .toDF().orderBy("media_id"),
       s"""$bytesCte,
           b AS (
             SELECT media_id,
@@ -316,9 +115,11 @@ object MultimodalQueries {
                      i -> CASE WHEN bytes[i+1] > 127 THEN 1::BIGINT << i
                                ELSE 0::BIGINT END)),
                    (a, x) -> a + x) AS phash16
-          FROM b ORDER BY media_id""",
+          FROM b ORDER BY media_id"""),
 
-    "q_mm_frame_sample" ->
+    // declarative 1-fps frame sampling with deterministic frame keys
+    Q("q_mm_frame_sample", (s, d) =>
+      Multimodal.sampleFrames(media(s, d), 8).orderBy("media_id", "frame_idx"),
       s"""$bytesCte,
           v AS (SELECT media_id, h, duration_ms FROM m WHERE media_type = 'video'),
           f AS (
@@ -328,18 +129,23 @@ object MultimodalQueries {
             FROM v)
           SELECT media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
                  md5(h || ':' || CAST(frame_idx AS VARCHAR)) AS frame_key
-          FROM f ORDER BY media_id, frame_idx""",
+          FROM f ORDER BY media_id, frame_idx"""),
 
-    "q_mm_resize_meta" ->
+    // metadata-level aspect-preserving resize
+    Q("q_mm_resize_meta", (s, d) =>
+      Multimodal.resizeMeta(media(s, d), 64).orderBy("media_id"),
       s"""$bytesCte
           SELECT media_id, width_px, height_px,
                  CAST(64 AS BIGINT) AS new_width_px,
                  greatest(CAST(1 AS BIGINT),
                    CAST(floor(CAST(height_px * 64 AS DOUBLE) / CAST(width_px AS DOUBLE))
                      AS BIGINT)) AS new_height_px
-          FROM m WHERE media_type = 'image' ORDER BY media_id""",
+          FROM m WHERE media_type = 'image' ORDER BY media_id"""),
 
-    "q_mm_audio_windows" ->
+    // declarative 1s audio analysis windows with sample offsets
+    Q("q_mm_audio_windows", (s, d) =>
+      Multimodal.audioWindows(media(s, d), 1000)
+        .orderBy("media_id", "window_idx"),
       s"""$bytesCte,
           a AS (SELECT media_id, duration_ms FROM m WHERE media_type = 'audio'),
           w AS (
@@ -351,9 +157,12 @@ object MultimodalQueries {
           SELECT media_id, CAST(window_idx AS BIGINT) AS window_idx,
                  CAST(window_idx * 1000 AS BIGINT) AS start_ms,
                  CAST(floor(window_idx * 1000 / 1000.0 * 16000.0) AS BIGINT) AS start_sample
-          FROM w ORDER BY media_id, window_idx""",
+          FROM w ORDER BY media_id, window_idx"""),
 
-    "q_mm_patches" ->
+    // declarative ViT-style 2×2 patch sums over the 4×4 grayscale pixels
+    Q("q_mm_patches", (s, d) =>
+      Multimodal.patchSums(media(s, d))
+        .orderBy("media_id", "patch_idx"),
       s"""$bytesCte,
           b AS (
             SELECT media_id,
@@ -369,9 +178,12 @@ object MultimodalQueries {
             FROM b, range(0, 4) t(pi))
           SELECT media_id, CAST(pi AS BIGINT) AS patch_idx,
                  CAST(psum AS BIGINT) AS patch_sum
-          FROM p ORDER BY media_id, patch_idx""",
+          FROM p ORDER BY media_id, patch_idx"""),
 
-    "q_mm_phash" ->
+    // 16-bit threshold-at-mean perceptual hash per image (integral compare
+    // px·16 > total — no division edge)
+    Q("q_mm_phash", (s, d) =>
+      Multimodal.phash(media(s, d)).orderBy("media_id"),
       s"""$bytesCte,
           b AS (
             SELECT media_id,
@@ -387,9 +199,14 @@ object MultimodalQueries {
                    [CASE WHEN bytes[i+1] * 16 > total THEN (1::BIGINT << i)
                          ELSE 0::BIGINT END for i in range(0, 16)]),
                    (a, b) -> a + b) AS BIGINT) AS phash
-          FROM t ORDER BY media_id""",
+          FROM t ORDER BY media_id"""),
 
-    "q_mm_phash_pairs" ->
+    // near-dup image pairs: nibble-banded candidates + exact Hamming ≤ 3
+    // verify (full recall by pigeonhole; oracle checks ALL pairs — set
+    // equality proves the banding lost nothing)
+    Q("q_mm_phash_pairs", (s, d) =>
+      Multimodal.phashPairs(Multimodal.phash(media(s, d)), 3)
+        .orderBy("ida", "idb"),
       s"""$bytesCte,
           b AS (
             SELECT media_id,
@@ -411,9 +228,17 @@ object MultimodalQueries {
                  CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS ham
           FROM ph a JOIN ph b ON a.media_id < b.media_id
           WHERE bit_count(xor(a.phash, b.phash)) <= 3
-          ORDER BY ida, idb""",
+          ORDER BY ida, idb"""),
 
-    "q_mm_phash_mirror_pairs" ->
+    // flip-duplicate candidates: original pHash banded against the
+    // MIRRORED-grid pHash — catches horizontally flipped copies a plain
+    // perceptual hash misses; same nibble banding + exact Hamming verify,
+    // all-pairs oracle proves recall on the cross table too
+    Q("q_mm_phash_mirror_pairs", (s, d) =>
+      Multimodal.phashPairsAcross(
+          Multimodal.phash(media(s, d)),
+          Multimodal.phashMirrored(media(s, d)), 3)
+        .orderBy("ida", "idb"),
       s"""$bytesCte,
           b AS (
             SELECT media_id,
@@ -443,9 +268,29 @@ object MultimodalQueries {
                  CAST(bit_count(xor(a.phash, b.mhash)) AS BIGINT) AS ham
           FROM ph a JOIN mi b ON a.media_id < b.media_id
           WHERE bit_count(xor(a.phash, b.mhash)) <= 3
-          ORDER BY ida, idb""",
+          ORDER BY ida, idb"""),
 
-    "q_mm_image_entropy" ->
+    // tonal-diversity entropy per image: 4-level histogram of the decoded
+    // pixels, H in integer micro-nats — flat/posterized images score low,
+    // the complement of the exposure clip audit. ln runs over the fixed
+    // 16-value input set {ln(16/c)} (audited boundary margins), then
+    // everything is integer. Map-side level extraction (shiftright), one
+    // (media, level) aggregate
+    Q("q_mm_image_entropy", (s, d) => {
+      def px(i: Int) =
+        conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
+      media(s, d).where(col("meta.media_type") === "image")
+        .select(col("media_id"), explode(array(
+          (0 until 16).map(i => shiftright(px(i), 6)): _*)).as("lvl"))
+        .groupBy(col("media_id"), col("lvl")).agg(count(lit(1)).as("c"))
+        .withColumn("term", col("c") *
+          floor(log(lit(16.0) / col("c").cast("double")) * 1000000.0 + 0.5)
+            .cast("long"))
+        .groupBy(col("media_id"))
+        .agg(expr("sum(term) DIV 16").as("h_micro"),
+          count(lit(1)).as("n_levels"))
+        .orderBy("media_id")
+    },
       s"""$bytesCte,
           b AS (
             SELECT media_id,
@@ -462,9 +307,15 @@ object MultimodalQueries {
             FROM c)
           SELECT media_id, CAST(sum(term) // 16 AS BIGINT) AS h_micro,
                  CAST(count(*) AS BIGINT) AS n_levels
-          FROM tm GROUP BY 1 ORDER BY media_id""",
+          FROM tm GROUP BY 1 ORDER BY media_id"""),
 
-    "q_mm_audio_fp_pairs" ->
+    // audio near-dup pairs: delta-sign (Haitsma–Kalker-style) fingerprints
+    // matched at Hamming ≤ 3 through the SAME nibble banding as the image
+    // path — one banding operator serves both modalities; the all-pairs
+    // oracle again proves full recall
+    Q("q_mm_audio_fp_pairs", (s, d) =>
+      Multimodal.phashPairs(Multimodal.audioFingerprint(media(s, d)), 3)
+        .orderBy("ida", "idb"),
       s"""$bytesCte,
           b AS (
             SELECT media_id,
@@ -482,18 +333,25 @@ object MultimodalQueries {
                  CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS ham
           FROM fp a JOIN fp b ON a.media_id < b.media_id
           WHERE bit_count(xor(a.phash, b.phash)) <= 3
-          ORDER BY ida, idb""",
+          ORDER BY ida, idb"""),
 
-    // The propagation runs over DISTINCT PHASH VALUES, not images: images
-    // with equal hashes are one node (Hamming 0) whose label seed is the
-    // min media_id — provably the same per-round labels as the engine's
-    // image-level propagation (after round 1 every image of a value
-    // carries min(minid over N(v) ∪ {v}); induction in [[minLabelCtes]]'
-    // Scaladoc anchor at phashClusterTable). Bounded at the engine's
-    // ClusterSteps round budget, replacing the retired recursive reach
-    // (quadratic in component size — infeasible on sf1mut's saturated
-    // one-component domain, r9 verdict #4).
-    "q_mm_phash_clusters" ->
+    // near-dup image clusters: connected components over the verified
+    // phash pair graph — "keep one per cluster" for the image modality,
+    // reusing the text-dedup min-label propagation, bounded at
+    // ClusterSteps rounds (oracle = the identical bounded-round chain)
+    Q("q_mm_phash_clusters", (s, d) =>
+      phashClusterTable(s, d)
+        .select(col("doc_id").as("media_id"), col("cluster_id"))
+        .orderBy("media_id"),
+      // The propagation runs over DISTINCT PHASH VALUES, not images: images
+      // with equal hashes are one node (Hamming 0) whose label seed is the
+      // min media_id — provably the same per-round labels as the engine's
+      // image-level propagation (after round 1 every image of a value
+      // carries min(minid over N(v) ∪ {v}); induction in [[minLabelCtes]]'
+      // Scaladoc anchor at phashClusterTable). Bounded at the engine's
+      // ClusterSteps round budget, replacing the retired recursive reach
+      // (quadratic in component size — infeasible on sf1mut's saturated
+      // one-component domain, r9 verdict #4).
       s"""$bytesCte,
           b AS (
             SELECT media_id,
@@ -517,133 +375,34 @@ object MultimodalQueries {
           ${minLabelCtes("", ClusterSteps)}
           SELECT ph.media_id, l$ClusterSteps.label AS cluster_id
           FROM ph JOIN l$ClusterSteps ON l$ClusterSteps.id = ph.phash
-          ORDER BY 1""",
+          ORDER BY 1"""),
 
-    "q_mm_scene_changes" ->
-      s"""$bytesCte,
-          v AS (SELECT media_id, h, duration_ms FROM m WHERE media_type = 'video'),
-          f AS (
-            SELECT media_id, h,
-                   unnest(range(0, least(CAST(floor(duration_ms / 1000.0) AS BIGINT), 7) + 1))
-                     AS frame_idx
-            FROM v),
-          k AS (SELECT media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
-                       CAST('0x' || substr(md5(h || ':' || CAST(frame_idx AS VARCHAR)), 1, 15)
-                         AS BIGINT) AS sig
-                FROM f),
-          l AS (SELECT media_id, frame_idx, sig,
-                       lag(sig, 1) OVER (PARTITION BY media_id ORDER BY frame_idx) AS prev_sig
-                FROM k)
-          SELECT media_id, frame_idx AS boundary_frame,
-                 CAST(bit_count(xor(sig, prev_sig)) AS BIGINT) AS delta_bits
-          FROM l
-          WHERE prev_sig IS NOT NULL AND bit_count(xor(sig, prev_sig)) > 25
-          ORDER BY media_id, boundary_frame""",
-
-    "q_mm_aspect_buckets" ->
-      s"""$bytesCte,
-          r AS (SELECT media_id, (width_px * 100) // height_px AS ratio_centi
-                FROM m WHERE media_type = 'image')
-          SELECT ratio_centi // 50 AS bucket,
-                 CAST(count(*) AS BIGINT) AS n_images,
-                 CAST(min(ratio_centi) AS BIGINT) AS min_ratio_centi,
-                 CAST(max(ratio_centi) AS BIGINT) AS max_ratio_centi
-          FROM r GROUP BY 1 ORDER BY bucket""",
-
-    "q_mm_exposure" ->
-      s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'image'),
-          e AS (
-            SELECT media_id,
-                   CAST(len(list_filter(bytes, x -> x < 64)) AS BIGINT) AS n_dark,
-                   CAST(len(list_filter(bytes, x -> x >= 192)) AS BIGINT) AS n_bright,
-                   CAST(list_aggregate(bytes, 'max')
-                        - list_aggregate(bytes, 'min') AS BIGINT) AS dyn_range
-            FROM b)
-          SELECT media_id, n_dark, n_bright, dyn_range,
-                 CASE WHEN n_dark >= 8 THEN 'under'
-                      WHEN n_bright >= 8 THEN 'over'
-                      ELSE 'ok' END AS exposure
-          FROM e ORDER BY media_id""",
-
-    "q_mm_audio_silence" ->
-      s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'audio'),
-          sm AS (
-            SELECT media_id, i AS pos, bytes[i + 1] AS amp
-            FROM b, range(0, 16) t(i)),
-          sil AS (
-            SELECT media_id, pos,
-                   pos - row_number() OVER (PARTITION BY media_id
-                                            ORDER BY pos) AS grp
-            FROM sm WHERE amp < 64),
-          runs AS (
-            SELECT media_id, grp, CAST(count(*) AS BIGINT) AS run_len
-            FROM sil GROUP BY 1, 2)
-          SELECT media_id, CAST(count(*) AS BIGINT) AS n_runs,
-                 CAST(max(run_len) AS BIGINT) AS longest_run,
-                 CAST(sum(run_len) AS BIGINT) AS n_silent
-          FROM runs GROUP BY 1 ORDER BY media_id""",
-
-    "q_mm_letterbox" ->
-      s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'image'),
-          r AS (
-            SELECT media_id,
-                   CAST(greatest(bytes[1], bytes[2], bytes[3], bytes[4])
-                      - least(bytes[1], bytes[2], bytes[3], bytes[4])
-                     AS BIGINT) AS top_range,
-                   CAST(greatest(bytes[13], bytes[14], bytes[15], bytes[16])
-                      - least(bytes[13], bytes[14], bytes[15], bytes[16])
-                     AS BIGINT) AS bottom_range
-            FROM b)
-          SELECT media_id, top_range, bottom_range,
-                 CASE WHEN top_range < 32 OR bottom_range < 32 THEN 'bar'
-                      ELSE 'clean' END AS letterboxed
-          FROM r ORDER BY media_id""",
-
-    "q_mm_blur_energy" ->
-      s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'image'),
-          l AS (
-            SELECT media_id,
-                   CAST(
-                     (4*bytes[6]  - bytes[2] - bytes[10] - bytes[5]  - bytes[7])
-                   * (4*bytes[6]  - bytes[2] - bytes[10] - bytes[5]  - bytes[7])
-                   + (4*bytes[7]  - bytes[3] - bytes[11] - bytes[6]  - bytes[8])
-                   * (4*bytes[7]  - bytes[3] - bytes[11] - bytes[6]  - bytes[8])
-                   + (4*bytes[10] - bytes[6] - bytes[14] - bytes[9]  - bytes[11])
-                   * (4*bytes[10] - bytes[6] - bytes[14] - bytes[9]  - bytes[11])
-                   + (4*bytes[11] - bytes[7] - bytes[15] - bytes[10] - bytes[12])
-                   * (4*bytes[11] - bytes[7] - bytes[15] - bytes[10] - bytes[12])
-                   AS BIGINT) AS lap_energy
-            FROM b)
-          SELECT media_id, lap_energy,
-                 CASE WHEN lap_energy < 150000 THEN 'blurry'
-                      ELSE 'sharp' END AS focus
-          FROM l ORDER BY media_id""",
-
-    // composed oracle: DedupQueries' text-cluster recursive chain
-    // (`cl(doc_id, cluster_id)`) + an i-prefixed replay of the
-    // bounded-round image-cluster chain (prefixed to dodge the text
-    // chain's CTE names), joined exactly like the Spark side.
-    "q_mm_crossmodal_clusters" ->
+    // cross-modal consistency join (r7 ask #7): text near-dup clusters
+    // (MinHash chain) ⋈ image near-dup clusters (pHash chain) on
+    // doc_id = media_id — per TEXT cluster, how many members carry an
+    // image-cluster assignment and how many DISTINCT image clusters they
+    // span. Text-dup docs whose images scatter across many image
+    // clusters are the mislabeled/mismatched-media signal a multimodal
+    // curation pipeline filters on. Both cluster tables are memoized;
+    // the join is a plain equi-join on the id, aggregates on the
+    // cluster key — no new shuffle shape at scale.
+    Q("q_mm_crossmodal_clusters", (s, d) => {
+      val txt = DedupQueries.textClusterTable(s, d)
+        .select(col("cluster_id").as("text_cluster"), col("doc_id"))
+      val img = phashClusterTable(s, d)
+        .select(col("doc_id").as("media_id"),
+          col("cluster_id").as("img_cluster"))
+      txt.join(img, col("doc_id") === col("media_id"), "left")
+        .groupBy(col("text_cluster"))
+        .agg(count(lit(1)).as("n_docs"),
+          count(col("img_cluster")).as("n_imaged"),
+          countDistinct(col("img_cluster")).as("n_img_clusters"))
+        .orderBy("text_cluster")
+    },
+      // composed oracle: DedupQueries' text-cluster recursive chain
+      // (`cl(doc_id, cluster_id)`) + an i-prefixed replay of the
+      // bounded-round image-cluster chain (prefixed to dodge the text
+      // chain's CTE names), joined exactly like the Spark side.
       s"""${DedupQueries.clustersCte},
           mm AS (
             SELECT doc_id AS media_id, md5(text) AS h,
@@ -679,6 +438,208 @@ object MultimodalQueries {
           SELECT text_cluster, CAST(count(*) AS BIGINT) AS n_docs,
                  CAST(count(img_cluster) AS BIGINT) AS n_imaged,
                  CAST(count(DISTINCT img_cluster) AS BIGINT) AS n_img_clusters
-          FROM members GROUP BY 1 ORDER BY text_cluster"""
+          FROM members GROUP BY 1 ORDER BY text_cluster"""),
+
+    // scene-change boundaries: lag window over per-video frame signature
+    // sequences, 60-bit hamming delta over threshold → boundary
+    Q("q_mm_scene_changes", (s, d) =>
+      Multimodal.sceneChanges(media(s, d), 8, threshold = 25)
+        .orderBy("media_id", "boundary_frame"),
+      s"""$bytesCte,
+          v AS (SELECT media_id, h, duration_ms FROM m WHERE media_type = 'video'),
+          f AS (
+            SELECT media_id, h,
+                   unnest(range(0, least(CAST(floor(duration_ms / 1000.0) AS BIGINT), 7) + 1))
+                     AS frame_idx
+            FROM v),
+          k AS (SELECT media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
+                       CAST('0x' || substr(md5(h || ':' || CAST(frame_idx AS VARCHAR)), 1, 15)
+                         AS BIGINT) AS sig
+                FROM f),
+          l AS (SELECT media_id, frame_idx, sig,
+                       lag(sig, 1) OVER (PARTITION BY media_id ORDER BY frame_idx) AS prev_sig
+                FROM k)
+          SELECT media_id, frame_idx AS boundary_frame,
+                 CAST(bit_count(xor(sig, prev_sig)) AS BIGINT) AS delta_bits
+          FROM l
+          WHERE prev_sig IS NOT NULL AND bit_count(xor(sig, prev_sig)) > 25
+          ORDER BY media_id, boundary_frame"""),
+
+    // aspect-ratio bucketing — the multimodal-trainer batching concern
+    // (same-shape images share a batch): 0.5-wide integer ratio classes,
+    // one hash aggregate over metadata only (no payload decode)
+    Q("q_mm_aspect_buckets", (s, d) =>
+      media(s, d).where(col("meta.media_type") === "image")
+        .select(col("media_id"),
+          call_function("div",
+            col("meta.width_px").cast("long") * 100L,
+            col("meta.height_px").cast("long")).as("ratio_centi"))
+        .withColumn("bucket", call_function("div", col("ratio_centi"), lit(50L)))
+        .groupBy("bucket")
+        .agg(count(lit(1)).as("n_images"),
+          min("ratio_centi").as("min_ratio_centi"),
+          max("ratio_centi").as("max_ratio_centi"))
+        .orderBy("bucket"),
+      s"""$bytesCte,
+          r AS (SELECT media_id, (width_px * 100) // height_px AS ratio_centi
+                FROM m WHERE media_type = 'image')
+          SELECT ratio_centi // 50 AS bucket,
+                 CAST(count(*) AS BIGINT) AS n_images,
+                 CAST(min(ratio_centi) AS BIGINT) AS min_ratio_centi,
+                 CAST(max(ratio_centi) AS BIGINT) AS max_ratio_centi
+          FROM r GROUP BY 1 ORDER BY bucket"""),
+
+    // exposure audit: clip counts + dynamic range per image, curation
+    // flag when ≥ half the pixels clip — metadata-cheap pre-filter ahead
+    // of feature extraction
+    Q("q_mm_exposure", (s, d) =>
+      Multimodal.exposure(media(s, d), lo = 64, hi = 192)
+        .orderBy("media_id"),
+      s"""$bytesCte,
+          b AS (
+            SELECT media_id,
+                   list_transform(range(0, 16),
+                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
+            FROM m WHERE media_type = 'image'),
+          e AS (
+            SELECT media_id,
+                   CAST(len(list_filter(bytes, x -> x < 64)) AS BIGINT) AS n_dark,
+                   CAST(len(list_filter(bytes, x -> x >= 192)) AS BIGINT) AS n_bright,
+                   CAST(list_aggregate(bytes, 'max')
+                        - list_aggregate(bytes, 'min') AS BIGINT) AS dyn_range
+            FROM b)
+          SELECT media_id, n_dark, n_bright, dyn_range,
+                 CASE WHEN n_dark >= 8 THEN 'under'
+                      WHEN n_bright >= 8 THEN 'over'
+                      ELSE 'ok' END AS exposure
+          FROM e ORDER BY media_id"""),
+
+    // silence-run detection (gaps-and-islands over the sample stream):
+    // consecutive below-threshold samples group into runs via the
+    // pos − row_number() trick — one window per audio keyed on media_id,
+    // no self-join, runs of any length in a single pass. The curation
+    // signal: clips that are mostly silence get dropped before decode
+    Q("q_mm_audio_silence", (s, d) => {
+      def px(i: Int) =
+        conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("media_id").orderBy("pos")
+      val samples = media(s, d).where(col("meta.media_type") === "audio")
+        .select(col("media_id"),
+          posexplode(array((0 until 16).map(px): _*)).as(Seq("pos", "amp")))
+      val runs = samples.where(col("amp") < 64)
+        .withColumn("grp", col("pos") - row_number().over(w))
+        .groupBy(col("media_id"), col("grp"))
+        .agg(count(lit(1)).as("run_len"))
+      runs.groupBy("media_id")
+        .agg(count(lit(1)).as("n_runs"),
+          max("run_len").as("longest_run"),
+          sum("run_len").as("n_silent"))
+        .orderBy("media_id")
+    },
+      s"""$bytesCte,
+          b AS (
+            SELECT media_id,
+                   list_transform(range(0, 16),
+                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
+            FROM m WHERE media_type = 'audio'),
+          sm AS (
+            SELECT media_id, i AS pos, bytes[i + 1] AS amp
+            FROM b, range(0, 16) t(i)),
+          sil AS (
+            SELECT media_id, pos,
+                   pos - row_number() OVER (PARTITION BY media_id
+                                            ORDER BY pos) AS grp
+            FROM sm WHERE amp < 64),
+          runs AS (
+            SELECT media_id, grp, CAST(count(*) AS BIGINT) AS run_len
+            FROM sil GROUP BY 1, 2)
+          SELECT media_id, CAST(count(*) AS BIGINT) AS n_runs,
+                 CAST(max(run_len) AS BIGINT) AS longest_run,
+                 CAST(sum(run_len) AS BIGINT) AS n_silent
+          FROM runs GROUP BY 1 ORDER BY media_id"""),
+
+    // letterbox detection: near-constant top/bottom pixel rows (the
+    // black-bar artifact that wastes training pixels). Row dynamic range
+    // from greatest/least over the decoded row bytes — map-side integer
+    // expressions, one scan, no aggregation
+    Q("q_mm_letterbox", (s, d) => {
+      def px(i: Int) =
+        conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
+      def rowRange(r: Int) = {
+        val b = (0 to 3).map(c => px(4 * r + c))
+        greatest(b: _*) - least(b: _*)
+      }
+      media(s, d).where(col("meta.media_type") === "image")
+        .select(col("media_id"), rowRange(0).as("top_range"),
+          rowRange(3).as("bottom_range"))
+        .withColumn("letterboxed",
+          when(col("top_range") < 32 || col("bottom_range") < 32, lit("bar"))
+            .otherwise(lit("clean")))
+        .orderBy("media_id")
+    },
+      s"""$bytesCte,
+          b AS (
+            SELECT media_id,
+                   list_transform(range(0, 16),
+                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
+            FROM m WHERE media_type = 'image'),
+          r AS (
+            SELECT media_id,
+                   CAST(greatest(bytes[1], bytes[2], bytes[3], bytes[4])
+                      - least(bytes[1], bytes[2], bytes[3], bytes[4])
+                     AS BIGINT) AS top_range,
+                   CAST(greatest(bytes[13], bytes[14], bytes[15], bytes[16])
+                      - least(bytes[13], bytes[14], bytes[15], bytes[16])
+                     AS BIGINT) AS bottom_range
+            FROM b)
+          SELECT media_id, top_range, bottom_range,
+                 CASE WHEN top_range < 32 OR bottom_range < 32 THEN 'bar'
+                      ELSE 'clean' END AS letterboxed
+          FROM r ORDER BY media_id"""),
+
+    // focus/blur metric: Laplacian energy over the 4×4 pixel grid — the
+    // variance-of-Laplacian sharpness test at the fixture's grid size.
+    // The 4-neighbor Laplacian at each inner cell is exact integer
+    // arithmetic on the decoded bytes (map-side expressions only: no
+    // shuffle, no UDF), so the blur flag is bitwise across engines
+    Q("q_mm_blur_energy", (s, d) => {
+      def px(i: Int) =
+        conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
+      val terms = for { r <- 1 to 2; c <- 1 to 2 } yield {
+        val l = px(4 * r + c) * 4 - px(4 * (r - 1) + c) - px(4 * (r + 1) + c) -
+          px(4 * r + c - 1) - px(4 * r + c + 1)
+        l * l
+      }
+      media(s, d).where(col("meta.media_type") === "image")
+        .select(col("media_id"), terms.reduce(_ + _).as("lap_energy"))
+        .withColumn("focus",
+          when(col("lap_energy") < 150000L, lit("blurry"))
+            .otherwise(lit("sharp")))
+        .orderBy("media_id")
+    },
+      s"""$bytesCte,
+          b AS (
+            SELECT media_id,
+                   list_transform(range(0, 16),
+                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
+            FROM m WHERE media_type = 'image'),
+          l AS (
+            SELECT media_id,
+                   CAST(
+                     (4*bytes[6]  - bytes[2] - bytes[10] - bytes[5]  - bytes[7])
+                   * (4*bytes[6]  - bytes[2] - bytes[10] - bytes[5]  - bytes[7])
+                   + (4*bytes[7]  - bytes[3] - bytes[11] - bytes[6]  - bytes[8])
+                   * (4*bytes[7]  - bytes[3] - bytes[11] - bytes[6]  - bytes[8])
+                   + (4*bytes[10] - bytes[6] - bytes[14] - bytes[9]  - bytes[11])
+                   * (4*bytes[10] - bytes[6] - bytes[14] - bytes[9]  - bytes[11])
+                   + (4*bytes[11] - bytes[7] - bytes[15] - bytes[10] - bytes[12])
+                   * (4*bytes[11] - bytes[7] - bytes[15] - bytes[10] - bytes[12])
+                   AS BIGINT) AS lap_energy
+            FROM b)
+          SELECT media_id, lap_energy,
+                 CASE WHEN lap_energy < 150000 THEN 'blurry'
+                      ELSE 'sharp' END AS focus
+          FROM l ORDER BY media_id""")
   )
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object PipelineQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val registry: Seq[Q] = Seq(
 
     // documents → DSL filter → exact dedup (keep-first) → leakage-safe
     // split → deterministic epoch shuffle → 512-token packing → manifest.
@@ -28,7 +28,7 @@ object PipelineQueries {
     // prefix sum (range partition + per-partition offsets — no global
     // window); the manifest aggregate is one hash exchange on bin. Nothing
     // in the chain collects to the driver or sorts globally.
-    "q_pipeline_end_to_end" -> ((s, d) => {
+    Q("q_pipeline_end_to_end", (s, d) => {
       // convert: the fixture IS the converted table (TSV→typed conversion
       // is gated by S6-S8 rows); project the pipeline's working columns
       val raw = Tables.documents(s, d)
@@ -70,14 +70,9 @@ object PipelineQueries {
             x => x.getField("doc_id").cast("string")), ","))
             .as("manifest_md5"))
         .orderBy("bin")
-    })
-  )
-
-  val oracleSql: Map[String, String] = Map(
-
-    // full-chain replay: filter → fingerprint dedup → split → epoch key →
-    // running-window packing → manifest, stage for stage
-    "q_pipeline_end_to_end" ->
+    },
+      // full-chain replay: filter → fingerprint dedup → split → epoch key →
+      // running-window packing → manifest, stage for stage
       """WITH f AS (
            SELECT doc_id, text FROM documents
            WHERE lang IN ('en', 'de') AND n_chars BETWEEN 100 AND 5000),
@@ -114,6 +109,6 @@ object PipelineQueries {
                 CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
                 md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY okey))
                   AS manifest_md5
-         FROM b GROUP BY 1 ORDER BY bin"""
+         FROM b GROUP BY 1 ORDER BY bin""")
   )
 }

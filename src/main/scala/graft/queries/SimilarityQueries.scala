@@ -123,665 +123,6 @@ object SimilarityQueries {
   private[queries] def lshCandCte: String =
     lshCandCteFor(LshSeed, LshBands, LshWidth, LshMaxBucket, radius = 1)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // exact brute-force cosine top-5: broadcast query set × corpus scan
-    "q_sim_topk_brute" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Similarity.bruteForceTopK(
-        emb.where(col("vec_id") < QuerySetMax), emb, 5)
-        .orderBy("qid", "rank")
-    }),
-
-    // leave-one-out 5-NN classifier evaluation over the labeled
-    // embeddings: majority vote among the 5 nearest (self excluded by
-    // construction), deterministic tie-break (count DESC, label ASC),
-    // per-class accuracy. The eval stratum is BOUNDED (vec_id < 2000 —
-    // the full corpus at sf≤0.1, a fixed 400-query sample beyond), so the
-    // brute-force pass stays O(corpus), not O(corpus²/25): an unbounded
-    // %5 slice measured 111x time at 10x data in the sf1 bench. The
-    // 100 TB path swaps in the LSH/IVF candidate stage exactly as
-    // q_sim_recall_eval measures
-    "q_sim_knn_eval" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val labels = emb.select(col("vec_id"), col("label"))
-      val nn = Similarity.bruteForceTopK(
-        emb.where(col("vec_id") % 5 === 0 && col("vec_id") < 2000), emb, 5)
-      val votes = nn
-        .join(labels.select(col("vec_id").as("nid"),
-          col("label").as("nlabel")), "nid")
-        .groupBy(col("qid"), col("nlabel")).agg(count(lit(1)).as("votes"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("votes").desc, col("nlabel"))
-      val pred = votes.withColumn("rk", row_number().over(w))
-        .where(col("rk") === 1)
-        .select(col("qid"), col("nlabel").as("pred"))
-      pred
-        .join(labels.select(col("vec_id").as("qid"),
-          col("label").as("truth")), "qid")
-        .groupBy(col("truth"))
-        .agg(count(lit(1)).as("n_eval"),
-          count(when(col("pred") === col("truth"), 1)).as("n_correct"))
-        .orderBy("truth")
-    }),
-
-    // k-center (farthest-point) coreset selection: start from the lowest
-    // id, repeatedly add the vector MOST DISSIMILAR to the selected set
-    // (argmin of running max-cos, ties → lowest id) — the greedy
-    // 2-approximation for diverse subset selection, the curation
-    // primitive for "cover the embedding space with k exemplars".
-    // 4 unrolled rounds; each is one broadcast of the new center + a
-    // corpus-parallel greatest() update of the running max-cos and one
-    // struct-min aggregate — no pairwise matrix, O(k·corpus) total
-    "q_sim_kcenter" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select(col("vec_id"),
-          col("embedding").cast("array<double>").as("v"))
-        .withColumn("nn", Similarity.l2norm(col("v")))
-      val first = e.orderBy("vec_id").limit(1)
-      def asCenter(df: DataFrame): DataFrame =
-        df.select(col("vec_id").as("sid"), col("v").as("sv"),
-          col("nn").as("sn"))
-      var scored = e.withColumn("maxcos", lit(-2.0))
-      var center = asCenter(first)
-      var out = first.select(col("vec_id"), lit(1L).as("pick"),
-        lit(-2.0).as("score"))
-      for (i <- 2 to 5) {
-        scored = scored.crossJoin(broadcast(center))
-          .withColumn("maxcos", greatest(col("maxcos"),
-            Similarity.dot(col("v"), col("sv")) / (col("nn") * col("sn"))))
-          .where(col("vec_id") =!= col("sid"))
-          .drop("sid", "sv", "sn")
-        val pick = scored
-          .agg(min(struct(col("maxcos"), col("vec_id"))).as("p"))
-          .select(col("p.vec_id").as("vec_id"), col("p.maxcos").as("score"))
-        center = asCenter(pick.join(e, "vec_id"))
-        out = out.unionByName(pick.select(col("vec_id"),
-          lit(i.toLong).as("pick"), col("score")))
-      }
-      out.select("pick", "vec_id", "score").orderBy("pick")
-    }),
-
-    // MMR diversified re-rank: greedy maximal-marginal-relevance over
-    // each query's brute-force top-10 — score = λ·cos − (1−λ)·max sim to
-    // the already-selected set (λ = 0.5), 3 unrolled selection steps
-    // (each: one rank window on the tiny per-query candidate table).
-    // The pairwise candidate sims are ≤ 10×10 per query, computed with
-    // the same bitwise cosine kernel, so every score is an identical
-    // IEEE tree in both engines — the oracle unrolls the same 3 steps
-    "q_sim_mmr_rerank" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val cand = Similarity.bruteForceTopK(
-          emb.where(col("vec_id") < QuerySetMax), emb, 10)
-        .select(col("qid"), col("nid"), col("cos"))
-      val v = emb.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("vv"))
-        .withColumn("nn", Similarity.l2norm(col("vv")))
-      val sims = cand.select(col("qid"), col("nid").as("na"))
-        .join(cand.select(col("qid"), col("nid").as("nb")), "qid")
-        .where(col("na") =!= col("nb"))
-        .join(v.select(col("vec_id").as("na"), col("vv").as("va"),
-          col("nn").as("norma")), "na")
-        .join(v.select(col("vec_id").as("nb"), col("vv").as("vb"),
-          col("nn").as("normb")), "nb")
-        .withColumn("sim",
-          Similarity.dot(col("va"), col("vb")) / (col("norma") * col("normb")))
-        .select("qid", "na", "nb", "sim")
-      def top1(df: DataFrame, score: Column): DataFrame =
-        df.withColumn("rk", row_number().over(
-            Window.partitionBy(col("qid")).orderBy(score.desc, col("nid"))))
-          .where(col("rk") === 1)
-      val s1 = top1(cand, col("cos"))
-        .select(col("qid"), col("nid").as("s1"),
-          (lit(0.5) * col("cos")).as("score1"))
-      val st2 = cand.join(s1, "qid").where(col("nid") =!= col("s1"))
-        .join(sims.select(col("qid"), col("na").as("nid"),
-          col("nb").as("s1"), col("sim").as("sim1")), Seq("qid", "nid", "s1"))
-        .withColumn("score", lit(0.5) * col("cos") - lit(0.5) * col("sim1"))
-      val s2 = top1(st2, col("score"))
-        .select(col("qid"), col("nid").as("s2"), col("score").as("score2"))
-      val st3 = cand.join(s1.select("qid", "s1"), "qid")
-        .join(s2.select(col("qid"), col("s2")), "qid")
-        .where(col("nid") =!= col("s1") && col("nid") =!= col("s2"))
-        .join(sims.select(col("qid"), col("na").as("nid"),
-          col("nb").as("s1"), col("sim").as("sim1")), Seq("qid", "nid", "s1"))
-        .join(sims.select(col("qid"), col("na").as("nid"),
-          col("nb").as("s2"), col("sim").as("sim2")), Seq("qid", "nid", "s2"))
-        .withColumn("score",
-          lit(0.5) * col("cos") - lit(0.5) * greatest(col("sim1"), col("sim2")))
-      val s3 = top1(st3, col("score"))
-        .select(col("qid"), col("nid").as("s3"), col("score").as("score3"))
-      s1.select(col("qid"), lit(1L).as("pick"), col("s1").as("nid"),
-          col("score1").as("score"))
-        .unionByName(s2.select(col("qid"), lit(2L).as("pick"),
-          col("s2").as("nid"), col("score2").as("score")))
-        .unionByName(s3.select(col("qid"), lit(3L).as("pick"),
-          col("s3").as("nid"), col("score3").as("score")))
-        .orderBy("qid", "pick")
-    }),
-
-    // reciprocal-rank fusion of the lexical (BM25) and vector (cosine)
-    // retrieval lists for the same query set — the standard hybrid-search
-    // merge. Ranks fuse as exact integer micro-units
-    // (10⁶ DIV (60 + rank)), so the fused ordering is engine-independent;
-    // a doc on only one list contributes 0 from the other (full outer
-    // join). Both inputs are per-query top-5 tables — tiny — so the
-    // fusion itself is a few-hundred-row join re-ranked by one window
-    "q_sim_rrf_fusion" -> ((s, d) => {
-      val docsT = Tables.documents(s, d)
-      val lex = graft.text.Bm25.topK(docsT, col("doc_id"), col("text"),
-          docsT.where(col("doc_id") < QuerySetMax), col("doc_id"), col("text"),
-          k = 5, maxDfPermille = 300)
-        .select(col("qid"), col("nid"), col("rank").as("r_lex"))
-      val emb = Tables.embeddings(s, d)
-      val vec = Similarity.bruteForceTopK(
-          emb.where(col("vec_id") < QuerySetMax), emb, 5)
-        .select(col("qid"), col("nid"), col("rank").as("r_vec"))
-      val fused = lex.join(vec, Seq("qid", "nid"), "full_outer")
-        .withColumn("rrf_micro",
-          coalesce(expr("1000000 DIV (60 + r_lex)"), lit(0L)) +
-            coalesce(expr("1000000 DIV (60 + r_vec)"), lit(0L)))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("rrf_micro").desc, col("nid"))
-      fused.withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= 5)
-        .select("qid", "nid", "rank", "rrf_micro")
-        .orderBy("qid", "rank")
-    }),
-
-    // ANN variant: per-query top-3 restricted to sign-LSH band candidates —
-    // the 100 TB path (bucket equi-join instead of full scan per query)
-    "q_sim_ann_topk" -> ((s, d) => {
-      val pairs = lshPairTable(s, d)
-      val directed = pairs.select(col("va").as("qid"), col("vb").as("nid"), col("cos"))
-        .unionByName(pairs.select(col("vb").as("qid"), col("va").as("nid"), col("cos")))
-      val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-      directed.where(col("qid") < QuerySetMax)
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= 3)
-        .select("qid", "nid", "rank", "cos")
-        .orderBy("qid", "rank")
-    }),
-
-    // IVF variant: broadcast coarse-quantizer assignment, then single-probe
-    // search restricted to the query's cell
-    "q_sim_ivf_topk" -> ((s, d) =>
-      Similarity.ivfTopK(Tables.embeddings(s, d),
-        nCentroids = 8, queryMaxId = QuerySetMax, k = 3)
-        .orderBy("qid", "rank")),
-
-    // multi-probe IVF (nprobe = 2): queries search their two nearest cells
-    // — the standard fix for single-probe's recall cliff at Voronoi edges
-    "q_sim_ivf_probes" -> ((s, d) =>
-      Similarity.ivfTopKProbes(Tables.embeddings(s, d),
-        nCentroids = 8, queryMaxId = QuerySetMax, k = 3, nprobe = 2)
-        .orderBy("qid", "rank")),
-
-    // clustering quality readout: per-cell mean of the centroid-based
-    // silhouette (squared-distance form, per-point micro-quantized at the
-    // leaf — Similarity.silhouetteByCell), over the same 2-iteration
-    // trained k-means as q_sim_ivf_kmeans. The "are the IVF cells
-    // actually separated" audit that decides whether the coarse quantizer
-    // needs more centroids before scaling the index out. Integer mean:
-    // no float sum ever crosses a partition boundary.
-    "q_sim_silhouette" -> ((s, d) =>
-      Similarity.silhouetteByCell(Tables.embeddings(s, d), k = 8, iters = 2)
-        .groupBy("cell")
-        .agg(count(lit(1)).as("n_points"), sum(col("s_micro")).as("sum_s_micro"))
-        .withColumn("mean_sil_micro", expr("sum_s_micro DIV n_points"))
-        .orderBy("cell")),
-
-    // Adjusted Rand Index between the trained k-means cells and the
-    // ground-truth label column — the external clustering-agreement score
-    // ("did unsupervised cells recover the labels?") run before trusting
-    // cluster ids as pseudo-labels. One cell⋈label join lands the bounded
-    // k×L contingency table; everything after is row-bounded integer
-    // algebra. All pair counts stay in "2·C(x,2) = x(x−1)" units so no /2
-    // ever truncates; the expected-index term E = sum_a2·sum_b2/pairs2 is
-    // ~n² of a product of two ~n² sums — n⁴ would overflow DECIMAL(38)
-    // past n ≈ 3e9 — so it divides in TWO truncating steps (e_ppm =
-    // ⌊sum_a2·1e6/pairs2⌋ ≤ 1e6, then e2 = ⌊2·sum_b2·e_ppm/1e6⌋ kept in
-    // DECIMAL(38)): the two-step truncation is the cross-engine contract,
-    // mirrored verbatim in the oracle (same discipline as q_eng_fdr_bh's
-    // dev² avoidance). ARI = (2·sum_idx2 − e2)/(sum_a2 + sum_b2 − e2),
-    // signed-truncated to ppm (legitimately negative for worse-than-chance
-    // agreement).
-    "q_sim_ari" -> ((s, d) =>
-      ariFromContingency(
-        kmeansTable(s, d).select(col("id"), col("cell"))
-          .join(Tables.embeddings(s, d)
-            .select(col("vec_id"), col("label").cast("long").as("lab")),
-            col("id") === col("vec_id"))
-          .groupBy(col("cell"), col("lab"))
-          .agg(count(lit(1)).as("nij")))),
-
-    // Davies–Bouldin cluster-validity readout (squared-distance form, the
-    // companion to q_sim_silhouette): per-cell scatter s²_i = mean squared
-    // distance to the trained centroid, micro-quantized PER POINT at the
-    // leaf (integer sums — never an order-sensitive float sum crosses a
-    // partition boundary), and R_i = max_{j≠i} (s²_i + s²_j)/d²(c_i, c_j)
-    // over the k² = 64 BOUNDED centroid-pair grid (micro units cancel in
-    // the ppm ratio; coincident-centroid pairs — d² = 0 — are excluded,
-    // they cannot occur for a converged non-degenerate quantizer). High
-    // R = that cell overlaps a neighbor → the coarse quantizer needs more
-    // centroids before the IVF index scales out. One corpus-sized
-    // aggregate over the memoized assignment; everything else broadcast.
-    "q_sim_davies_bouldin" -> ((s, d) => {
-      // localCheckpoint: the 8-row scatter table joins against itself
-      val sc = kmeansTable(s, d)
-        .select(col("cell"),
-          floor(col("dist2") * 1e6 + lit(0.5)).cast("long").as("d2m"))
-        .groupBy(col("cell"))
-        .agg(count(lit(1)).as("n_points"), sum(col("d2m")).as("s2sum"))
-        .withColumn("s2_micro", expr("s2sum DIV n_points"))
-        .localCheckpoint()
-      val cents = Similarity.kmeansCentroids(Tables.embeddings(s, d),
-        k = 8, iters = 2)
-      val sep = cents.select(col("cid").as("i"), col("cv").as("vi"))
-        .join(broadcast(cents.select(col("cid").as("j"), col("cv").as("vj"))),
-          col("i") =!= col("j"))
-        .select(col("i"), col("j"),
-          floor((Similarity.dot(col("vi"), col("vi")) -
-            lit(2.0) * Similarity.dot(col("vi"), col("vj")) +
-            Similarity.dot(col("vj"), col("vj"))) * 1e6 + lit(0.5))
-            .cast("long").as("sepm"))
-        .where(col("sepm") > 0L)
-      sc.select(col("cell").as("i"), col("n_points"), col("s2_micro"))
-        .join(broadcast(sc.select(col("cell").as("j"),
-          col("s2_micro").as("sj"))), col("i") =!= col("j"))
-        .join(broadcast(sep), Seq("i", "j"))
-        .groupBy(col("i"), col("n_points"), col("s2_micro"))
-        .agg(max(mulDivWide(col("s2_micro") + col("sj"), lit(1000000L),
-          col("sepm"))).as("r_max_ppm"))
-        .select(col("i").as("cell"), col("n_points"), col("s2_micro"),
-          col("r_max_ppm"))
-        .orderBy(col("cell"))
-    }),
-
-    // trained IVF: 2 Lloyd iterations (exact integer-microunit centroid
-    // sums → partition-order-independent AND bitwise cross-engine), then
-    // nearest-centroid assignment (cached — q_sim_cell_sample shares it)
-    "q_sim_ivf_kmeans" -> ((s, d) =>
-      kmeansTable(s, d)
-        .select(col("id").as("vec_id"), col("cell"), col("dist2"))
-        .orderBy("vec_id")),
-
-    // diversity (coverage) sampling: exact-5 per trained k-means cell in
-    // content-hash order — the cell-stratified stand-in for k-center
-    // selection (greedy k-center is inherently sequential; per-cell quotas
-    // keep every region of embedding space represented and scale as one
-    // window over the cell partitioning)
-    "q_sim_cell_sample" -> ((s, d) => {
-      val w = Window.partitionBy(col("cell"))
-        .orderBy(md5(col("id").cast("string")), col("id"))
-      kmeansTable(s, d)
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .where(col("rn") <= 5)
-        .select(col("cell"), col("rn"), col("id").as("vec_id"))
-        .orderBy("cell", "rn")
-    }),
-
-    // unit normalization: scalar probes of the normalized array plus its
-    // recomputed norm (exercises every element bitwise)
-    "q_sim_normalize" -> ((s, d) => {
-      val v = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val n = Similarity.normalize(col("v"))
-      v.select(col("vec_id"),
-          element_at(n, 1).as("n1"),
-          element_at(n, 33).as("n33"),
-          Similarity.l2norm(n).as("renorm"))
-        .orderBy("vec_id")
-    }),
-
-    // retrieval-quality evaluation: per-query hit count of single-probe
-    // IVF against the EXACT brute-force top-3 — the "measure, don't
-    // guess" harness every ANN deployment needs (recall@k = n_hit / k);
-    // both arms are existing operators, the join is pairs-level equality
-    "q_sim_recall_eval" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val ivf = Similarity.ivfTopK(emb, nCentroids = 8,
-        queryMaxId = QuerySetMax, k = 3).select(col("qid"), col("nid"))
-      val bf = Similarity.bruteForceTopK(
-        emb.where(col("vec_id") < QuerySetMax), emb, 3)
-        .select(col("qid"), col("nid"))
-      val hits = bf.join(ivf, Seq("qid", "nid"))
-        .groupBy("qid").agg(count(lit(1)).as("n_hit"))
-      bf.select("qid").distinct()
-        .join(hits, Seq("qid"), "left").na.fill(0L, Seq("n_hit"))
-        .orderBy("qid")
-    }),
-
-    // per-dimension min-max feature scaling to [0, 1e6] — integer-exact:
-    // elements quantize to micro-units at the leaf, the per-dim min/max
-    // table (64 rows) broadcasts, and the rescale is one integer floor
-    // division, so there is no float surface in the cross-engine contract
-    "q_sim_minmax_scale" -> ((s, d) => {
-      val x = Tables.embeddings(s, d)
-        .select(col("vec_id"),
-          posexplode(col("embedding").cast("array<double>")).as(Seq("d", "x")))
-        .withColumn("xm", floor(col("x") * 1000000d + 0.5))
-      val st = x.groupBy("d").agg(min("xm").as("mn"), max("xm").as("mx"))
-      x.join(broadcast(st), "d")
-        .withColumn("sc", when(col("mx") === col("mn"), 0L)
-          .otherwise(call_function("div",
-            (col("xm") - col("mn")) * 1000000L, col("mx") - col("mn"))))
-        .groupBy("vec_id")
-        .agg(sum("sc").cast("long").as("ssum"),
-          max(when(col("d") === 0, col("sc"))).cast("long").as("s1"),
-          max(when(col("d") === 32, col("sc"))).cast("long").as("s33"))
-        .orderBy("vec_id")
-    }),
-
-    // symmetric int8 quantization (scale = max |x|, floor(x+0.5) round)
-    "q_sim_quantize" -> ((s, d) => {
-      val v = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val qz = Similarity.quantizeInt8(col("v"))
-      v.select(col("vec_id"), qz.as("qz"))
-        .select(col("vec_id"),
-          col("qz.scale").as("scale"),
-          element_at(col("qz.q"), 1).as("q1"),
-          element_at(col("qz.q"), 33).as("q33"),
-          aggregate(col("qz.q"), lit(0L), (acc, x) => acc + x).as("qsum"))
-        .orderBy("vec_id")
-    }),
-
-    // majority label propagation (2 synchronized rounds) over the sign-LSH
-    // near-dup graph: integer votes, ties to the smallest label — the
-    // semi-supervised labeling pass, exactly reproducible
-    "q_sim_label_prop" -> ((s, d) => {
-      val pairs = lshPairTable(s, d).where(col("cos") >= 0.4)
-      val edges = pairs.select(col("va").as("src"), col("vb").as("dst"))
-        .unionByName(pairs.select(col("vb").as("src"), col("va").as("dst")))
-      graft.operators.LabelPropagation.propagate(
-          Tables.embeddings(s, d), col("vec_id"), col("label"),
-          edges, col("src"), col("dst"), iters = 2)
-        .orderBy("id")
-    }),
-
-    // grid-density clustering (the scalable DBSCAN shape): quantize the
-    // first two embedding dims into cells (floor(v·40) in plain IEEE
-    // double — exact cross-engine), call cells with ≥ 4 points CORE, and
-    // union 8-adjacent core cells into clusters via the star-components
-    // algorithm. Everything after the one fact-sized cell aggregate runs
-    // on the CELL table, which is bounded by the grid resolution — not the
-    // corpus: the classic ε-neighborhood pair join that makes naive DBSCAN
-    // quadratic never touches point-level data. Points in non-core cells
-    // are noise and drop out (the inner cells join). Cluster id = min cell
-    // code, deterministic; the oracle replays it as a recursive min-label
-    // closure over the same adjacency.
-    "q_sim_dbscan_grid" -> ((s, d) => {
-      // labeled core-cell table memoized per (session, sf): the star-
-      // components loop is eager, so without the memo every invocation
-      // re-ran the full iterative closure (the embedClusterTable pattern)
-      val labeled = QueryCaches.memo(s, d, "dbscan_grid_cells") {
-        val pts = Tables.embeddings(s, d).select(col("vec_id"),
-          floor(element_at(col("embedding"), 1).cast("double") * 40)
-            .cast("long").as("cx"),
-          floor(element_at(col("embedding"), 2).cast("double") * 40)
-            .cast("long").as("cy"))
-        val cells = pts.groupBy(col("cx"), col("cy"))
-          .agg(count(lit(1)).as("n"))
-        // cell code packs (cx, cy) into one long with a 2^21 stride —
-        // injective for |cx|,|cy| < 2^20 (embedding dims within ±26214 at
-        // this 40× quantization; the old *1000 stride collided beyond
-        // ±12.5 and a collision would merge distant cells identically in
-        // engine AND oracle, invisible to the gate). Max code ≈ 2^42.
-        val core = cells.where(col("n") >= 4)
-          .withColumn("cell",
-            (col("cx") + 1048576L) * 2097152L + col("cy") + 1048576L)
-        val edges = core.as("a").join(core.as("b"),
-            abs(col("a.cx") - col("b.cx")) <= 1 &&
-              abs(col("a.cy") - col("b.cy")) <= 1 &&
-              col("a.cell") < col("b.cell"))
-          .select(col("a.cell").as("ca"), col("b.cell").as("cb"))
-        val comp = graft.operators.StarComponents
-          .components(edges, col("ca"), col("cb"))
-          .withColumnRenamed("doc_id", "cell")
-        core.join(comp, Seq("cell"), "left")
-          .withColumn("cluster", coalesce(col("cluster_id"), col("cell")))
-      }
-      labeled
-        .groupBy(col("cluster"))
-        .agg(count(lit(1)).as("n_cells"), sum(col("n")).as("n_points"))
-        .orderBy("cluster")
-    }),
-
-    // hard-negative mining: top-3 most-similar DIFFERENT-label items per
-    // query — the contrastive-training counterpart of ANN search
-    "q_sim_hard_negatives" -> ((s, d) =>
-      Similarity.hardNegatives(Tables.embeddings(s, d),
-        queryMaxId = QuerySetMax, k = 3)
-        .orderBy("qid", "rank")),
-
-    // product quantization: 8 subspaces × 8 dims, 16-centroid codebooks,
-    // ADC top-3 per query — corpus held as codes, queries exact, distance
-    // = sum of broadcast table lookups. Elements quantize to integer
-    // micro-units at the leaf (audited site), so every distance is pure
-    // integer arithmetic — no cross-engine float surface at all
-    "q_sim_pq_adc" -> ((s, d) =>
-      graft.similarity.ProductQuantization.adcTopK(
-        Tables.embeddings(s, d), col("vec_id"), col("embedding"),
-        queryMaxId = QuerySetMax, m = 8, subDim = 8, ksub = 16, k = 3)
-        .orderBy("qid", "rank")),
-
-    // IVF-PQ: coarse cells (nprobe = 2) restrict candidates, PQ codes
-    // supply the distances — the FAISS IndexIVFPQ composition, fully
-    // integer past the audited leaf quantization
-    "q_sim_ivfpq_topk" -> ((s, d) =>
-      graft.similarity.ProductQuantization.ivfPqTopK(
-        Tables.embeddings(s, d), col("vec_id"), col("embedding"),
-        nCells = 8, nprobe = 2, queryMaxId = QuerySetMax,
-        m = 8, subDim = 8, ksub = 16, k = 3)
-        .orderBy("qid", "rank")),
-
-    // seeded Rademacher random projection 64 → 8 dims (JL sketch)
-    "q_sim_rproj" -> ((s, d) => {
-      val v = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val p = Similarity.randomProjection(col("v"), seed = 7L, outDims = 8, dims = 64)
-      v.select(col("vec_id"),
-          element_at(p, 1).as("p1"),
-          element_at(p, 8).as("p8"))
-        .orderBy("vec_id")
-    }),
-
-    // Matryoshka-style truncation evaluation: recall@5 of the 8-dim
-    // PREFIX against the full 64-dim brute-force neighbors, per query —
-    // the measurement behind "how many dims can retrieval afford to
-    // drop". Both arms are the same broadcast-queries × corpus kernel on
-    // different widths; the overlap join is neighbor-set sized
-    "q_sim_matryoshka" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val q = emb.where(col("vec_id") < QuerySetMax)
-      val full = Similarity.bruteForceTopK(q, emb, 5).select("qid", "nid")
-      def trunc8(df: DataFrame) =
-        df.select(col("vec_id"), slice(col("embedding"), 1, 8).as("embedding"))
-      val short = Similarity.bruteForceTopK(trunc8(q), trunc8(emb), 5)
-        .select("qid", "nid")
-      val hits = full.join(short, Seq("qid", "nid"), "left_semi")
-        .groupBy("qid").agg(count(lit(1)).as("h"))
-      q.select(col("vec_id").as("qid")).join(hits, Seq("qid"), "left")
-        .select(col("qid"), coalesce(col("h"), lit(0L)).as("recall5_hits"))
-        .orderBy("qid")
-    }),
-
-    // IVF index-health diagnostic: per-cell population share and the
-    // max·cells/total imbalance ratio — the skew report that decides
-    // whether the coarse quantizer needs retraining (a hot cell turns
-    // single-probe search into a near-scan). Cell counts are one
-    // aggregate over the assignment; everything downstream is
-    // cells-sized and broadcast
-    "q_sim_ivf_balance" -> ((s, d) => {
-      val cells = Similarity.ivfAssign(Tables.embeddings(s, d), 8)
-        .groupBy("cell").agg(count(lit(1)).as("n"))
-      val stats = cells.agg(sum("n").as("tot"), max("n").as("mx"),
-        count(lit(1)).as("nc"))
-      cells.crossJoin(broadcast(stats))
-        .select(col("cell"), col("n"),
-          expr("n * 1000000 DIV tot").as("share_ppm"),
-          expr("mx * nc * 1000000 DIV tot").as("imbalance_ppm"))
-        .orderBy("cell")
-    }),
-
-    // embedding-distribution drift: PSI over the trained k-means cell
-    // populations of two corpus halves (even/odd ids as the before/after
-    // stand-in) — the retraining trigger for vector indexes: when new
-    // data stops landing where the quantizer expects, the cell shares
-    // move. Same integer pico-unit PSI contract as q_eng_psi_drift;
-    // reuses the memoized k-means assignment, so the only new work is
-    // one cells-sized aggregate
-    "q_sim_embed_drift" -> ((s, d) => {
-      val cells = kmeansTable(s, d).select(col("id"), col("cell"))
-        .groupBy("cell").agg(
-          count(when(col("id") % 2 === 0, 1)).as("na"),
-          count(when(col("id") % 2 =!= 0, 1)).as("nb"))
-      val tots = cells.agg(sum("na").as("ta"), sum("nb").as("tb"),
-        count(lit(1)).as("nc"))
-      cells.crossJoin(broadcast(tots))
-        .select(col("cell"), col("na"), col("nb"),
-          expr("(na + 1) * 1000000 DIV (ta + nc)").as("sa_ppm"),
-          expr("(nb + 1) * 1000000 DIV (tb + nc)").as("sb_ppm"),
-          floor(log(((col("na") + 1) * (col("tb") + col("nc"))).cast("double") /
-            ((col("nb") + 1) * (col("ta") + col("nc"))).cast("double"))
-            * 1000000.0 + 0.5).cast("long").as("ln_micro"))
-        .withColumn("psi_pico",
-          (col("sa_ppm") - col("sb_ppm")) * col("ln_micro"))
-        .orderBy("cell")
-    }),
-
-    // PQ quantization-distortion report: per-subspace min-centroid error
-    // stats in exact micro² units — the index-quality complement of
-    // q_sim_pq_adc (a subspace with outsized distortion needs more
-    // centroids or a rotation). One argmin aggregate over the same
-    // broadcast-codebook distance table the encoder builds
-    "q_sim_pq_distortion" -> ((s, d) =>
-      graft.similarity.ProductQuantization.distortion(
-        Tables.embeddings(s, d), col("vec_id"), col("embedding"),
-        m = 8, subDim = 8, ksub = 16)),
-
-    // hubness diagnostic: in-degree distribution of the exact 5-NN graph
-    // on a fixed 200-vector sub-corpus — high-dimensional embedding
-    // spaces grow "hub" points that appear in everyone's neighbor list
-    // and poison retrieval; a heavy in-degree tail is the symptom. The
-    // sub-corpus keeps the all-pairs kernel a fixed-size diagnostic at
-    // any data scale (hubness is a property of the space, not the count)
-    "q_sim_hubness" -> ((s, d) => {
-      val sub = Tables.embeddings(s, d).where(col("vec_id") < 200)
-      val indeg = Similarity.bruteForceTopK(sub, sub, 5)
-        .groupBy(col("nid")).agg(count(lit(1)).as("ind"))
-      sub.select(col("vec_id").as("nid")).join(indeg, Seq("nid"), "left")
-        .select(coalesce(col("ind"), lit(0L)).as("in_degree"))
-        .groupBy("in_degree").agg(count(lit(1)).as("n_vectors"))
-        .orderBy("in_degree")
-    }),
-
-    // top principal direction via integer power iteration — the PCA
-    // component behind embedding whitening/debiasing, computed with the
-    // PageRank discipline: quantize at every step, so the iteration is
-    // pure long arithmetic and bitwise cross-engine. Per round: one
-    // corpus pass for the row scores s = Qv (rescaled sign·(|s| div 1e6)
-    // — signed division goes through |·| so truncation == floor), one
-    // dimension aggregate u = Qᵀs, then max-normalization back to micro
-    // units. Three unrolled rounds; output the 8 heaviest dims
-    "q_sim_pca_power" -> ((s, d) => {
-      val q = Tables.embeddings(s, d).select(col("vec_id"),
-        transform(col("embedding").cast("array<double>"),
-          x => floor(x * lit(1000000.0) + lit(0.5)).cast("long")).as("q"))
-      val dims = 64
-      // v as a 64-row (dim, w) frame; v0 = all ones in micro units
-      var v = s.range(0, dims).select(col("id").cast("int").as("dim"),
-        lit(1000000L).as("w"))
-      for (_ <- 1 to 3) {
-        val score = q
-          .select(col("vec_id"), posexplode(col("q")).as(Seq("dim", "qe")))
-          .join(broadcast(v), "dim")
-          .groupBy("vec_id").agg(sum(col("qe") * col("w")).as("sraw"))
-          .select(col("vec_id"),
-            (signum(col("sraw")).cast("long") *
-              expr("abs(sraw) DIV 1000000")).as("sc"))
-        val u = q
-          .select(col("vec_id"), posexplode(col("q")).as(Seq("dim", "qe")))
-          .join(score, "vec_id")
-          .groupBy("dim").agg(sum(col("qe") * col("sc")).as("u"))
-        val mx = u.agg(max(abs(col("u"))).as("m"))
-        // normalize as |u| div (m div 1e6) — the multiply-first form
-        // overflows a long at corpus scale; the divide-first form keeps
-        // every operand bounded and both engines share the exact formula
-        v = u.crossJoin(broadcast(mx))
-          .select(col("dim"),
-            (signum(col("u")).cast("long") *
-              expr("abs(u) DIV greatest(1L, m DIV 1000000)")).as("w"))
-      }
-      v.select(col("dim").cast("long").as("dim"), col("w").as("weight_micro"))
-        .orderBy(abs(col("weight_micro")).desc, col("dim"))
-        .limit(8)
-    }),
-
-    // embedding label-separation eval: mean cosine within vs across
-    // labels on the fixed 200-vector sub-corpus — the supervised
-    // embedding-quality read-out (a good encoder pulls same-label pairs
-    // together; separation ≈ 0 means the labels are invisible to the
-    // geometry). Pair cosines quantize at the leaf (micro units, same
-    // audited discipline as the SemDeDup pairs), so the means are exact
-    // integer division
-    "q_sim_label_separation" -> ((s, d) => {
-      val sub = Tables.embeddings(s, d).where(col("vec_id") < 200)
-        .select(col("vec_id"), col("embedding"), col("label"))
-      val pairs = Similarity.bruteForceTopK(sub, sub, 199)
-        .where(col("qid") < col("nid"))
-      val labels = sub.select(col("vec_id"), col("label"))
-      pairs
-        .join(labels.select(col("vec_id").as("qid"),
-          col("label").as("la")), "qid")
-        .join(labels.select(col("vec_id").as("nid"),
-          col("label").as("lb")), "nid")
-        .select(when(col("la") === col("lb"), lit("same"))
-            .otherwise(lit("diff")).as("pair_kind"),
-          // shift by +1e6 (cos ≥ −1) so the mean's integer division has
-          // a non-negative numerator: Spark's truncating DIV and
-          // DuckDB's flooring // agree only above zero
-          (floor(col("cos") * 1000000.0 + 0.5).cast("long") + 1000000L)
-            .as("cms"))
-        .groupBy("pair_kind")
-        .agg(count(lit(1)).as("n_pairs"),
-          expr("sum(cms) DIV count(1) - 1000000").as("mean_cos_micro"))
-        .orderBy("pair_kind")
-    }),
-
-    // IVF scan-cost report: candidates each query actually examines
-    // (its cell's population minus itself) vs the brute-force corpus —
-    // the speedup the index buys, per query, in exact ppm. Cell sizes
-    // broadcast; no scoring work at all
-    // embedding norm histogram: the norm-collapse / outlier screen (a
-    // healthy encoder yields a tight norm band; a spike at zero or a fat
-    // tail flags dead units or exploding examples). Norm² in exact
-    // integer micro² via leaf quantization — the same audited trick as
-    // PQ — so the buckets are bitwise. One map + vocabulary-sized rollup
-    "q_sim_norm_hist" -> ((s, d) => {
-      val q2 = aggregate(
-        transform(col("embedding").cast("array<double>"),
-          x => floor(x * lit(1000000.0) + lit(0.5)).cast("long")),
-        lit(0L), (acc, x) => acc + x * x)
-      Tables.embeddings(s, d)
-        .select(q2.as("nq2"))
-        .select(expr("nq2 DIV 100000000000").as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).as("n_vectors"))
-        .orderBy("bucket")
-    }),
-
-    "q_sim_ivf_cost" -> ((s, d) => {
-      val assigned = Similarity.ivfAssign(Tables.embeddings(s, d), 8)
-      val sizes = assigned.groupBy("cell").agg(count(lit(1)).as("csize"))
-      val n = assigned.agg(count(lit(1)).as("n"))
-      assigned.where(col("id") < QuerySetMax).select("id", "cell")
-        .join(broadcast(sizes), "cell").crossJoin(broadcast(n))
-        .select(col("id").as("qid"), col("cell"),
-          (col("csize") - 1).as("n_candidates"),
-          expr("(csize - 1) * 1000000 DIV (n - 1)").as("scan_ratio_ppm"))
-        .orderBy("qid")
-    })
-  )
-
   // list_dot_product is a sequential left-to-right IEEE loop — probed
   // bitwise-identical to the list_reduce left fold on 2000 adversarial
   // mixed-magnitude vectors, and ~20× faster (no per-element lambda)
@@ -858,8 +199,14 @@ object SimilarityQueries {
        / (sqrt(list_dot_product(x.v[1:8], x.v[1:8]))
         * sqrt(list_dot_product(y.v[1:8], y.v[1:8])))"""
 
-  val oracleSql: Map[String, String] = Map(
-    "q_sim_topk_brute" ->
+  val registry: Seq[Q] = Seq(
+    // exact brute-force cosine top-5: broadcast query set × corpus scan
+    Q("q_sim_topk_brute", (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      Similarity.bruteForceTopK(
+        emb.where(col("vec_id") < QuerySetMax), emb, 5)
+        .orderBy("qid", "rank")
+    },
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           scored AS (
             SELECT x.vec_id AS qid, y.vec_id AS nid, $cosSql AS cos
@@ -869,9 +216,39 @@ object SimilarityQueries {
             SELECT qid, nid, cos,
                    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS BIGINT) AS rank
             FROM scored)
-          SELECT qid, nid, rank, cos FROM r WHERE rank <= 5 ORDER BY qid, rank""",
+          SELECT qid, nid, rank, cos FROM r WHERE rank <= 5 ORDER BY qid, rank"""),
 
-    "q_sim_knn_eval" ->
+    // leave-one-out 5-NN classifier evaluation over the labeled
+    // embeddings: majority vote among the 5 nearest (self excluded by
+    // construction), deterministic tie-break (count DESC, label ASC),
+    // per-class accuracy. The eval stratum is BOUNDED (vec_id < 2000 —
+    // the full corpus at sf≤0.1, a fixed 400-query sample beyond), so the
+    // brute-force pass stays O(corpus), not O(corpus²/25): an unbounded
+    // %5 slice measured 111x time at 10x data in the sf1 bench. The
+    // 100 TB path swaps in the LSH/IVF candidate stage exactly as
+    // q_sim_recall_eval measures
+    Q("q_sim_knn_eval", (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      val labels = emb.select(col("vec_id"), col("label"))
+      val nn = Similarity.bruteForceTopK(
+        emb.where(col("vec_id") % 5 === 0 && col("vec_id") < 2000), emb, 5)
+      val votes = nn
+        .join(labels.select(col("vec_id").as("nid"),
+          col("label").as("nlabel")), "nid")
+        .groupBy(col("qid"), col("nlabel")).agg(count(lit(1)).as("votes"))
+      val w = Window.partitionBy(col("qid"))
+        .orderBy(col("votes").desc, col("nlabel"))
+      val pred = votes.withColumn("rk", row_number().over(w))
+        .where(col("rk") === 1)
+        .select(col("qid"), col("nlabel").as("pred"))
+      pred
+        .join(labels.select(col("vec_id").as("qid"),
+          col("label").as("truth")), "qid")
+        .groupBy(col("truth"))
+        .agg(count(lit(1)).as("n_eval"),
+          count(when(col("pred") === col("truth"), 1)).as("n_correct"))
+        .orderBy("truth")
+    },
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           l AS (SELECT vec_id, label FROM embeddings),
           scored AS (
@@ -898,9 +275,43 @@ object SimilarityQueries {
                  CAST(count(CASE WHEN pred.pred = l.label THEN 1 END) AS BIGINT)
                    AS n_correct
           FROM pred JOIN l ON l.vec_id = pred.qid
-          GROUP BY 1 ORDER BY truth""",
+          GROUP BY 1 ORDER BY truth"""),
 
-    "q_sim_kcenter" ->
+    // k-center (farthest-point) coreset selection: start from the lowest
+    // id, repeatedly add the vector MOST DISSIMILAR to the selected set
+    // (argmin of running max-cos, ties → lowest id) — the greedy
+    // 2-approximation for diverse subset selection, the curation
+    // primitive for "cover the embedding space with k exemplars".
+    // 4 unrolled rounds; each is one broadcast of the new center + a
+    // corpus-parallel greatest() update of the running max-cos and one
+    // struct-min aggregate — no pairwise matrix, O(k·corpus) total
+    Q("q_sim_kcenter", (s, d) => {
+      val e = Tables.embeddings(s, d).select(col("vec_id"),
+          col("embedding").cast("array<double>").as("v"))
+        .withColumn("nn", Similarity.l2norm(col("v")))
+      val first = e.orderBy("vec_id").limit(1)
+      def asCenter(df: DataFrame): DataFrame =
+        df.select(col("vec_id").as("sid"), col("v").as("sv"),
+          col("nn").as("sn"))
+      var scored = e.withColumn("maxcos", lit(-2.0))
+      var center = asCenter(first)
+      var out = first.select(col("vec_id"), lit(1L).as("pick"),
+        lit(-2.0).as("score"))
+      for (i <- 2 to 5) {
+        scored = scored.crossJoin(broadcast(center))
+          .withColumn("maxcos", greatest(col("maxcos"),
+            Similarity.dot(col("v"), col("sv")) / (col("nn") * col("sn"))))
+          .where(col("vec_id") =!= col("sid"))
+          .drop("sid", "sv", "sn")
+        val pick = scored
+          .agg(min(struct(col("maxcos"), col("vec_id"))).as("p"))
+          .select(col("p.vec_id").as("vec_id"), col("p.maxcos").as("score"))
+        center = asCenter(pick.join(e, "vec_id"))
+        out = out.unionByName(pick.select(col("vec_id"),
+          lit(i.toLong).as("pick"), col("score")))
+      }
+      out.select("pick", "vec_id", "score").orderBy("pick")
+    },
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           s1 AS (SELECT * FROM e WHERE vec_id = (SELECT min(vec_id) FROM e)),
           m1 AS (SELECT x.vec_id, greatest(-2.0, $cosSql) AS maxcos
@@ -926,9 +337,65 @@ object SimilarityQueries {
           UNION ALL SELECT CAST(3 AS BIGINT), vec_id, maxcos FROM p3
           UNION ALL SELECT CAST(4 AS BIGINT), vec_id, maxcos FROM p4
           UNION ALL SELECT CAST(5 AS BIGINT), vec_id, maxcos FROM p5
-          ORDER BY pick""",
+          ORDER BY pick"""),
 
-    "q_sim_mmr_rerank" ->
+    // MMR diversified re-rank: greedy maximal-marginal-relevance over
+    // each query's brute-force top-10 — score = λ·cos − (1−λ)·max sim to
+    // the already-selected set (λ = 0.5), 3 unrolled selection steps
+    // (each: one rank window on the tiny per-query candidate table).
+    // The pairwise candidate sims are ≤ 10×10 per query, computed with
+    // the same bitwise cosine kernel, so every score is an identical
+    // IEEE tree in both engines — the oracle unrolls the same 3 steps
+    Q("q_sim_mmr_rerank", (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      val cand = Similarity.bruteForceTopK(
+          emb.where(col("vec_id") < QuerySetMax), emb, 10)
+        .select(col("qid"), col("nid"), col("cos"))
+      val v = emb.select(col("vec_id"),
+          col("embedding").cast("array<double>").as("vv"))
+        .withColumn("nn", Similarity.l2norm(col("vv")))
+      val sims = cand.select(col("qid"), col("nid").as("na"))
+        .join(cand.select(col("qid"), col("nid").as("nb")), "qid")
+        .where(col("na") =!= col("nb"))
+        .join(v.select(col("vec_id").as("na"), col("vv").as("va"),
+          col("nn").as("norma")), "na")
+        .join(v.select(col("vec_id").as("nb"), col("vv").as("vb"),
+          col("nn").as("normb")), "nb")
+        .withColumn("sim",
+          Similarity.dot(col("va"), col("vb")) / (col("norma") * col("normb")))
+        .select("qid", "na", "nb", "sim")
+      def top1(df: DataFrame, score: Column): DataFrame =
+        df.withColumn("rk", row_number().over(
+            Window.partitionBy(col("qid")).orderBy(score.desc, col("nid"))))
+          .where(col("rk") === 1)
+      val s1 = top1(cand, col("cos"))
+        .select(col("qid"), col("nid").as("s1"),
+          (lit(0.5) * col("cos")).as("score1"))
+      val st2 = cand.join(s1, "qid").where(col("nid") =!= col("s1"))
+        .join(sims.select(col("qid"), col("na").as("nid"),
+          col("nb").as("s1"), col("sim").as("sim1")), Seq("qid", "nid", "s1"))
+        .withColumn("score", lit(0.5) * col("cos") - lit(0.5) * col("sim1"))
+      val s2 = top1(st2, col("score"))
+        .select(col("qid"), col("nid").as("s2"), col("score").as("score2"))
+      val st3 = cand.join(s1.select("qid", "s1"), "qid")
+        .join(s2.select(col("qid"), col("s2")), "qid")
+        .where(col("nid") =!= col("s1") && col("nid") =!= col("s2"))
+        .join(sims.select(col("qid"), col("na").as("nid"),
+          col("nb").as("s1"), col("sim").as("sim1")), Seq("qid", "nid", "s1"))
+        .join(sims.select(col("qid"), col("na").as("nid"),
+          col("nb").as("s2"), col("sim").as("sim2")), Seq("qid", "nid", "s2"))
+        .withColumn("score",
+          lit(0.5) * col("cos") - lit(0.5) * greatest(col("sim1"), col("sim2")))
+      val s3 = top1(st3, col("score"))
+        .select(col("qid"), col("nid").as("s3"), col("score").as("score3"))
+      s1.select(col("qid"), lit(1L).as("pick"), col("s1").as("nid"),
+          col("score1").as("score"))
+        .unionByName(s2.select(col("qid"), lit(2L).as("pick"),
+          col("s2").as("nid"), col("score2").as("score")))
+        .unionByName(s3.select(col("qid"), lit(3L).as("pick"),
+          col("s3").as("nid"), col("score3").as("score")))
+        .orderBy("qid", "pick")
+    },
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           scored AS (
             SELECT x.vec_id AS qid, y.vec_id AS nid, $cosSql AS cos
@@ -977,12 +444,39 @@ object SimilarityQueries {
           SELECT qid, CAST(2 AS BIGINT), s2, score2 FROM s2
           UNION ALL
           SELECT qid, CAST(3 AS BIGINT), s3, score3 FROM s3
-          ORDER BY qid, pick""",
+          ORDER BY qid, pick"""),
 
-    // lexical rank CTE shared verbatim with q_text_bm25 (TextQueries),
-    // vector rank CTE shared with q_sim_topk_brute — the fusion oracle
-    // can only drift if one of those does
-    "q_sim_rrf_fusion" ->
+    // reciprocal-rank fusion of the lexical (BM25) and vector (cosine)
+    // retrieval lists for the same query set — the standard hybrid-search
+    // merge. Ranks fuse as exact integer micro-units
+    // (10⁶ DIV (60 + rank)), so the fused ordering is engine-independent;
+    // a doc on only one list contributes 0 from the other (full outer
+    // join). Both inputs are per-query top-5 tables — tiny — so the
+    // fusion itself is a few-hundred-row join re-ranked by one window
+    Q("q_sim_rrf_fusion", (s, d) => {
+      val docsT = Tables.documents(s, d)
+      val lex = graft.text.Bm25.topK(docsT, col("doc_id"), col("text"),
+          docsT.where(col("doc_id") < QuerySetMax), col("doc_id"), col("text"),
+          k = 5, maxDfPermille = 300)
+        .select(col("qid"), col("nid"), col("rank").as("r_lex"))
+      val emb = Tables.embeddings(s, d)
+      val vec = Similarity.bruteForceTopK(
+          emb.where(col("vec_id") < QuerySetMax), emb, 5)
+        .select(col("qid"), col("nid"), col("rank").as("r_vec"))
+      val fused = lex.join(vec, Seq("qid", "nid"), "full_outer")
+        .withColumn("rrf_micro",
+          coalesce(expr("1000000 DIV (60 + r_lex)"), lit(0L)) +
+            coalesce(expr("1000000 DIV (60 + r_vec)"), lit(0L)))
+      val w = Window.partitionBy(col("qid"))
+        .orderBy(col("rrf_micro").desc, col("nid"))
+      fused.withColumn("rank", row_number().over(w).cast("long"))
+        .where(col("rank") <= 5)
+        .select("qid", "nid", "rank", "rrf_micro")
+        .orderBy("qid", "rank")
+    },
+      // lexical rank CTE shared verbatim with q_text_bm25 (TextQueries),
+      // vector rank CTE shared with q_sim_topk_brute — the fusion oracle
+      // can only drift if one of those does
       s"""WITH ${TextQueries.bm25RankCte()},
           e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           scored AS (
@@ -1009,9 +503,21 @@ object SimilarityQueries {
                      ORDER BY rrf_micro DESC, nid) AS BIGINT) AS rank
             FROM f)
           SELECT qid, nid, rank, rrf_micro FROM rr WHERE rank <= 5
-          ORDER BY qid, rank""",
+          ORDER BY qid, rank"""),
 
-    "q_sim_ann_topk" ->
+    // ANN variant: per-query top-3 restricted to sign-LSH band candidates —
+    // the 100 TB path (bucket equi-join instead of full scan per query)
+    Q("q_sim_ann_topk", (s, d) => {
+      val pairs = lshPairTable(s, d)
+      val directed = pairs.select(col("va").as("qid"), col("vb").as("nid"), col("cos"))
+        .unionByName(pairs.select(col("vb").as("qid"), col("va").as("nid"), col("cos")))
+      val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
+      directed.where(col("qid") < QuerySetMax)
+        .withColumn("rank", row_number().over(w).cast("long"))
+        .where(col("rank") <= 3)
+        .select("qid", "nid", "rank", "cos")
+        .orderBy("qid", "rank")
+    },
       s"""WITH $lshCandCte,
           cos AS (
             SELECT va, vb, $cosSql AS cos
@@ -1024,41 +530,126 @@ object SimilarityQueries {
             SELECT qid, nid, cos,
                    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS BIGINT) AS rank
             FROM directed WHERE qid < $QuerySetMax)
-          SELECT qid, nid, rank, cos FROM r WHERE rank <= 3 ORDER BY qid, rank""",
+          SELECT qid, nid, rank, cos FROM r WHERE rank <= 3 ORDER BY qid, rank"""),
 
-    "q_sim_ivf_kmeans" ->
-      s"""WITH $kmeansCtes
-          SELECT id AS vec_id, cid AS cell, dist2 FROM af ORDER BY vec_id""",
+    // IVF variant: broadcast coarse-quantizer assignment, then single-probe
+    // search restricted to the query's cell
+    Q("q_sim_ivf_topk", (s, d) =>
+      Similarity.ivfTopK(Tables.embeddings(s, d),
+        nCentroids = 8, queryMaxId = QuerySetMax, k = 3)
+        .orderBy("qid", "rank"),
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+          cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
+          scored AS (
+            SELECT e.vec_id AS id, e.v, cid,
+                   ${dotSql("v", "cv")} AS score
+            FROM e CROSS JOIN cents),
+          assigned AS (
+            SELECT id, v, cid AS cell
+            FROM (SELECT id, v, cid,
+                         row_number() OVER (PARTITION BY id ORDER BY score DESC, cid) AS rn
+                  FROM scored)
+            WHERE rn = 1),
+          q AS (SELECT id AS qid, v AS qv, cell FROM assigned WHERE id < $QuerySetMax),
+          c AS (SELECT id AS nid, v AS nv, cell FROM assigned),
+          cos AS (
+            SELECT qid, nid,
+                   ${dotSql("qv", "nv")}
+                     / (sqrt(${dotSql("qv", "qv")}) * sqrt(${dotSql("nv", "nv")})) AS cos
+            FROM q JOIN c USING (cell) WHERE qid != nid),
+          r AS (
+            SELECT qid, nid, cos,
+                   CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS BIGINT) AS rank
+            FROM cos)
+          SELECT qid, nid, rank, cos FROM r WHERE rank <= 3 ORDER BY qid, rank"""),
 
-    // per-point micro-quantized scatter + bounded centroid-pair grid;
-    // dist² parenthesization matches the Spark side's IEEE order
-    "q_sim_davies_bouldin" ->
+    // multi-probe IVF (nprobe = 2): queries search their two nearest cells
+    // — the standard fix for single-probe's recall cliff at Voronoi edges
+    Q("q_sim_ivf_probes", (s, d) =>
+      Similarity.ivfTopKProbes(Tables.embeddings(s, d),
+        nCentroids = 8, queryMaxId = QuerySetMax, k = 3, nprobe = 2)
+        .orderBy("qid", "rank"),
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+          cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
+          ranked AS (
+            SELECT id, v, cid,
+                   row_number() OVER (PARTITION BY id ORDER BY score DESC, cid) AS rn
+            FROM (SELECT e.vec_id AS id, e.v, cid,
+                         ${dotSql("v", "cv")} AS score
+                  FROM e CROSS JOIN cents)),
+          c AS (SELECT id AS nid, v AS nv, cid AS cell FROM ranked WHERE rn = 1),
+          q AS (SELECT id AS qid, v AS qv, cid AS cell FROM ranked
+                WHERE rn <= 2 AND id < $QuerySetMax),
+          cos AS (
+            SELECT qid, nid,
+                   ${dotSql("qv", "nv")}
+                     / (sqrt(${dotSql("qv", "qv")}) * sqrt(${dotSql("nv", "nv")})) AS cos
+            FROM q JOIN c USING (cell) WHERE qid != nid),
+          r AS (
+            SELECT qid, nid, cos,
+                   CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS BIGINT) AS rank
+            FROM cos)
+          SELECT qid, nid, rank, cos FROM r WHERE rank <= 3 ORDER BY qid, rank"""),
+
+    // clustering quality readout: per-cell mean of the centroid-based
+    // silhouette (squared-distance form, per-point micro-quantized at the
+    // leaf — Similarity.silhouetteByCell), over the same 2-iteration
+    // trained k-means as q_sim_ivf_kmeans. The "are the IVF cells
+    // actually separated" audit that decides whether the coarse quantizer
+    // needs more centroids before scaling the index out. Integer mean:
+    // no float sum ever crosses a partition boundary.
+    Q("q_sim_silhouette", (s, d) =>
+      Similarity.silhouetteByCell(Tables.embeddings(s, d), k = 8, iters = 2)
+        .groupBy("cell")
+        .agg(count(lit(1)).as("n_points"), sum(col("s_micro")).as("sum_s_micro"))
+        .withColumn("mean_sil_micro", expr("sum_s_micro DIV n_points"))
+        .orderBy("cell"),
       s"""WITH $kmeansCtes,
-          dbsc AS (SELECT cid AS cell, CAST(count(*) AS BIGINT) AS n_points,
-                          CAST(sum(CAST(floor(dist2 * 1000000.0 + 0.5)
-                            AS BIGINT)) AS BIGINT) AS s2sum
-                   FROM af GROUP BY 1),
-          dbs2 AS (SELECT cell, n_points, s2sum // n_points AS s2_micro
-                   FROM dbsc),
-          dbsep AS (SELECT a.cid AS i, b.cid AS j,
-                           CAST(floor(((${dotSql("a.cv", "a.cv")}
-                             - 2.0 * ${dotSql("a.cv", "b.cv")})
-                             + ${dotSql("b.cv", "b.cv")}) * 1000000.0 + 0.5)
-                             AS BIGINT) AS sepm
-                    FROM c2 a JOIN c2 b ON a.cid != b.cid),
-          dbr AS (SELECT x.cell, x.n_points, x.s2_micro,
-                         CAST(max((x.s2_micro + y.s2_micro) * 1000000
-                                  // dbsep.sepm) AS BIGINT) AS r_max_ppm
-                  FROM dbs2 x JOIN dbs2 y ON x.cell != y.cell
-                  JOIN dbsep ON dbsep.i = x.cell AND dbsep.j = y.cell
-                  WHERE dbsep.sepm > 0
-                  GROUP BY 1, 2, 3)
-          SELECT cell, n_points, s2_micro, r_max_ppm
-          FROM dbr ORDER BY cell""",
+          t2 AS (SELECT id, cid, dist2,
+                   row_number() OVER (PARTITION BY id
+                                      ORDER BY dist2, cid) AS rn
+                 FROM sf),
+          per AS (SELECT id,
+                    min(CASE WHEN rn = 1 THEN cid END) AS cell,
+                    min(CASE WHEN rn = 1 THEN dist2 END) AS a2,
+                    min(CASE WHEN rn = 2 THEN dist2 END) AS b2
+                  FROM t2 WHERE rn <= 2 GROUP BY id),
+          sil AS (SELECT id, cell,
+                    CASE WHEN greatest(a2, b2) <= 0.0 THEN 0
+                         ELSE CAST(floor((b2 - a2) / greatest(a2, b2)
+                                * 1000000.0 + 0.5) AS BIGINT)
+                    END AS s_micro
+                  FROM per)
+          SELECT cell, CAST(count(*) AS BIGINT) AS n_points,
+                 CAST(sum(s_micro) AS BIGINT) AS sum_s_micro,
+                 CAST(sum(s_micro) // count(*) AS BIGINT) AS mean_sil_micro
+          FROM sil GROUP BY cell ORDER BY cell"""),
 
-    // two-step truncating expected-index division mirrored verbatim
-    // (HUGEINT `//` truncates toward zero — matches mulDivWideSigned)
-    "q_sim_ari" ->
+    // Adjusted Rand Index between the trained k-means cells and the
+    // ground-truth label column — the external clustering-agreement score
+    // ("did unsupervised cells recover the labels?") run before trusting
+    // cluster ids as pseudo-labels. One cell⋈label join lands the bounded
+    // k×L contingency table; everything after is row-bounded integer
+    // algebra. All pair counts stay in "2·C(x,2) = x(x−1)" units so no /2
+    // ever truncates; the expected-index term E = sum_a2·sum_b2/pairs2 is
+    // ~n² of a product of two ~n² sums — n⁴ would overflow DECIMAL(38)
+    // past n ≈ 3e9 — so it divides in TWO truncating steps (e_ppm =
+    // ⌊sum_a2·1e6/pairs2⌋ ≤ 1e6, then e2 = ⌊2·sum_b2·e_ppm/1e6⌋ kept in
+    // DECIMAL(38)): the two-step truncation is the cross-engine contract,
+    // mirrored verbatim in the oracle (same discipline as q_eng_fdr_bh's
+    // dev² avoidance). ARI = (2·sum_idx2 − e2)/(sum_a2 + sum_b2 − e2),
+    // signed-truncated to ppm (legitimately negative for worse-than-chance
+    // agreement).
+    Q("q_sim_ari", (s, d) =>
+      ariFromContingency(
+        kmeansTable(s, d).select(col("id"), col("cell"))
+          .join(Tables.embeddings(s, d)
+            .select(col("vec_id"), col("label").cast("long").as("lab")),
+            col("id") === col("vec_id"))
+          .groupBy(col("cell"), col("lab"))
+          .agg(count(lit(1)).as("nij"))),
+      // two-step truncating expected-index division mirrored verbatim
+      // (HUGEINT `//` truncates toward zero — matches mulDivWideSigned)
       s"""WITH $kmeansCtes,
           lab AS (SELECT vec_id, CAST(label AS BIGINT) AS lb FROM embeddings),
           ctg AS (SELECT af.cid AS cell, lb,
@@ -1087,40 +678,119 @@ object SimilarityQueries {
                       ELSE CAST((2 * sum_idx2 - e2) * 1000000
                                 // (sum_a2 + sum_b2 - e2) AS BIGINT)
                  END AS ari_ppm
-          FROM h""",
+          FROM h"""),
 
-    "q_sim_silhouette" ->
+    // Davies–Bouldin cluster-validity readout (squared-distance form, the
+    // companion to q_sim_silhouette): per-cell scatter s²_i = mean squared
+    // distance to the trained centroid, micro-quantized PER POINT at the
+    // leaf (integer sums — never an order-sensitive float sum crosses a
+    // partition boundary), and R_i = max_{j≠i} (s²_i + s²_j)/d²(c_i, c_j)
+    // over the k² = 64 BOUNDED centroid-pair grid (micro units cancel in
+    // the ppm ratio; coincident-centroid pairs — d² = 0 — are excluded,
+    // they cannot occur for a converged non-degenerate quantizer). High
+    // R = that cell overlaps a neighbor → the coarse quantizer needs more
+    // centroids before the IVF index scales out. One corpus-sized
+    // aggregate over the memoized assignment; everything else broadcast.
+    Q("q_sim_davies_bouldin", (s, d) => {
+      // localCheckpoint: the 8-row scatter table joins against itself
+      val sc = kmeansTable(s, d)
+        .select(col("cell"),
+          floor(col("dist2") * 1e6 + lit(0.5)).cast("long").as("d2m"))
+        .groupBy(col("cell"))
+        .agg(count(lit(1)).as("n_points"), sum(col("d2m")).as("s2sum"))
+        .withColumn("s2_micro", expr("s2sum DIV n_points"))
+        .localCheckpoint()
+      val cents = Similarity.kmeansCentroids(Tables.embeddings(s, d),
+        k = 8, iters = 2)
+      val sep = cents.select(col("cid").as("i"), col("cv").as("vi"))
+        .join(broadcast(cents.select(col("cid").as("j"), col("cv").as("vj"))),
+          col("i") =!= col("j"))
+        .select(col("i"), col("j"),
+          floor((Similarity.dot(col("vi"), col("vi")) -
+            lit(2.0) * Similarity.dot(col("vi"), col("vj")) +
+            Similarity.dot(col("vj"), col("vj"))) * 1e6 + lit(0.5))
+            .cast("long").as("sepm"))
+        .where(col("sepm") > 0L)
+      sc.select(col("cell").as("i"), col("n_points"), col("s2_micro"))
+        .join(broadcast(sc.select(col("cell").as("j"),
+          col("s2_micro").as("sj"))), col("i") =!= col("j"))
+        .join(broadcast(sep), Seq("i", "j"))
+        .groupBy(col("i"), col("n_points"), col("s2_micro"))
+        .agg(max(mulDivWide(col("s2_micro") + col("sj"), lit(1000000L),
+          col("sepm"))).as("r_max_ppm"))
+        .select(col("i").as("cell"), col("n_points"), col("s2_micro"),
+          col("r_max_ppm"))
+        .orderBy(col("cell"))
+    },
+      // per-point micro-quantized scatter + bounded centroid-pair grid;
+      // dist² parenthesization matches the Spark side's IEEE order
       s"""WITH $kmeansCtes,
-          t2 AS (SELECT id, cid, dist2,
-                   row_number() OVER (PARTITION BY id
-                                      ORDER BY dist2, cid) AS rn
-                 FROM sf),
-          per AS (SELECT id,
-                    min(CASE WHEN rn = 1 THEN cid END) AS cell,
-                    min(CASE WHEN rn = 1 THEN dist2 END) AS a2,
-                    min(CASE WHEN rn = 2 THEN dist2 END) AS b2
-                  FROM t2 WHERE rn <= 2 GROUP BY id),
-          sil AS (SELECT id, cell,
-                    CASE WHEN greatest(a2, b2) <= 0.0 THEN 0
-                         ELSE CAST(floor((b2 - a2) / greatest(a2, b2)
-                                * 1000000.0 + 0.5) AS BIGINT)
-                    END AS s_micro
-                  FROM per)
-          SELECT cell, CAST(count(*) AS BIGINT) AS n_points,
-                 CAST(sum(s_micro) AS BIGINT) AS sum_s_micro,
-                 CAST(sum(s_micro) // count(*) AS BIGINT) AS mean_sil_micro
-          FROM sil GROUP BY cell ORDER BY cell""",
+          dbsc AS (SELECT cid AS cell, CAST(count(*) AS BIGINT) AS n_points,
+                          CAST(sum(CAST(floor(dist2 * 1000000.0 + 0.5)
+                            AS BIGINT)) AS BIGINT) AS s2sum
+                   FROM af GROUP BY 1),
+          dbs2 AS (SELECT cell, n_points, s2sum // n_points AS s2_micro
+                   FROM dbsc),
+          dbsep AS (SELECT a.cid AS i, b.cid AS j,
+                           CAST(floor(((${dotSql("a.cv", "a.cv")}
+                             - 2.0 * ${dotSql("a.cv", "b.cv")})
+                             + ${dotSql("b.cv", "b.cv")}) * 1000000.0 + 0.5)
+                             AS BIGINT) AS sepm
+                    FROM c2 a JOIN c2 b ON a.cid != b.cid),
+          dbr AS (SELECT x.cell, x.n_points, x.s2_micro,
+                         CAST(max((x.s2_micro + y.s2_micro) * 1000000
+                                  // dbsep.sepm) AS BIGINT) AS r_max_ppm
+                  FROM dbs2 x JOIN dbs2 y ON x.cell != y.cell
+                  JOIN dbsep ON dbsep.i = x.cell AND dbsep.j = y.cell
+                  WHERE dbsep.sepm > 0
+                  GROUP BY 1, 2, 3)
+          SELECT cell, n_points, s2_micro, r_max_ppm
+          FROM dbr ORDER BY cell"""),
 
-    "q_sim_cell_sample" ->
+    // trained IVF: 2 Lloyd iterations (exact integer-microunit centroid
+    // sums → partition-order-independent AND bitwise cross-engine), then
+    // nearest-centroid assignment (cached — q_sim_cell_sample shares it)
+    Q("q_sim_ivf_kmeans", (s, d) =>
+      kmeansTable(s, d)
+        .select(col("id").as("vec_id"), col("cell"), col("dist2"))
+        .orderBy("vec_id"),
+      s"""WITH $kmeansCtes
+          SELECT id AS vec_id, cid AS cell, dist2 FROM af ORDER BY vec_id"""),
+
+    // diversity (coverage) sampling: exact-5 per trained k-means cell in
+    // content-hash order — the cell-stratified stand-in for k-center
+    // selection (greedy k-center is inherently sequential; per-cell quotas
+    // keep every region of embedding space represented and scale as one
+    // window over the cell partitioning)
+    Q("q_sim_cell_sample", (s, d) => {
+      val w = Window.partitionBy(col("cell"))
+        .orderBy(md5(col("id").cast("string")), col("id"))
+      kmeansTable(s, d)
+        .withColumn("rn", row_number().over(w).cast("long"))
+        .where(col("rn") <= 5)
+        .select(col("cell"), col("rn"), col("id").as("vec_id"))
+        .orderBy("cell", "rn")
+    },
       s"""WITH $kmeansCtes,
           r AS (SELECT id, cid,
                        CAST(row_number() OVER (PARTITION BY cid
                          ORDER BY md5(CAST(id AS VARCHAR)), id) AS BIGINT) AS rn
                 FROM af)
           SELECT cid AS cell, rn, id AS vec_id FROM r WHERE rn <= 5
-          ORDER BY cell, rn""",
+          ORDER BY cell, rn"""),
 
-    "q_sim_normalize" ->
+    // unit normalization: scalar probes of the normalized array plus its
+    // recomputed norm (exercises every element bitwise)
+    Q("q_sim_normalize", (s, d) => {
+      val v = Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val n = Similarity.normalize(col("v"))
+      v.select(col("vec_id"),
+          element_at(n, 1).as("n1"),
+          element_at(n, 33).as("n33"),
+          Similarity.l2norm(n).as("renorm"))
+        .orderBy("vec_id")
+    },
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           n AS (SELECT vec_id, v,
                        sqrt(${dotSql("v", "v")}) AS nrm
@@ -1132,9 +802,25 @@ object SimilarityQueries {
                  un[1] AS n1,
                  un[33] AS n33,
                  sqrt(${dotSql("un", "un")}) AS renorm
-          FROM u ORDER BY vec_id""",
+          FROM u ORDER BY vec_id"""),
 
-    "q_sim_recall_eval" ->
+    // retrieval-quality evaluation: per-query hit count of single-probe
+    // IVF against the EXACT brute-force top-3 — the "measure, don't
+    // guess" harness every ANN deployment needs (recall@k = n_hit / k);
+    // both arms are existing operators, the join is pairs-level equality
+    Q("q_sim_recall_eval", (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      val ivf = Similarity.ivfTopK(emb, nCentroids = 8,
+        queryMaxId = QuerySetMax, k = 3).select(col("qid"), col("nid"))
+      val bf = Similarity.bruteForceTopK(
+        emb.where(col("vec_id") < QuerySetMax), emb, 3)
+        .select(col("qid"), col("nid"))
+      val hits = bf.join(ivf, Seq("qid", "nid"))
+        .groupBy("qid").agg(count(lit(1)).as("n_hit"))
+      bf.select("qid").distinct()
+        .join(hits, Seq("qid"), "left").na.fill(0L, Seq("n_hit"))
+        .orderBy("qid")
+    },
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
           scored AS (
@@ -1170,9 +856,28 @@ object SimilarityQueries {
           h AS (SELECT b3.qid, b3.nid FROM b3 JOIN i3 USING (qid, nid))
           SELECT b.qid, CAST(count(h.nid) AS BIGINT) AS n_hit
           FROM (SELECT DISTINCT qid FROM b3) b LEFT JOIN h USING (qid)
-          GROUP BY b.qid ORDER BY b.qid""",
+          GROUP BY b.qid ORDER BY b.qid"""),
 
-    "q_sim_minmax_scale" ->
+    // per-dimension min-max feature scaling to [0, 1e6] — integer-exact:
+    // elements quantize to micro-units at the leaf, the per-dim min/max
+    // table (64 rows) broadcasts, and the rescale is one integer floor
+    // division, so there is no float surface in the cross-engine contract
+    Q("q_sim_minmax_scale", (s, d) => {
+      val x = Tables.embeddings(s, d)
+        .select(col("vec_id"),
+          posexplode(col("embedding").cast("array<double>")).as(Seq("d", "x")))
+        .withColumn("xm", floor(col("x") * 1000000d + 0.5))
+      val st = x.groupBy("d").agg(min("xm").as("mn"), max("xm").as("mx"))
+      x.join(broadcast(st), "d")
+        .withColumn("sc", when(col("mx") === col("mn"), 0L)
+          .otherwise(call_function("div",
+            (col("xm") - col("mn")) * 1000000L, col("mx") - col("mn"))))
+        .groupBy("vec_id")
+        .agg(sum("sc").cast("long").as("ssum"),
+          max(when(col("d") === 0, col("sc"))).cast("long").as("s1"),
+          max(when(col("d") === 32, col("sc"))).cast("long").as("s33"))
+        .orderBy("vec_id")
+    },
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          x AS (SELECT vec_id, d, CAST(floor(v[d+1] * 1000000 + 0.5) AS BIGINT) AS xm
                FROM e, range(0, 64) r(d)),
@@ -1184,9 +889,21 @@ object SimilarityQueries {
          SELECT vec_id, CAST(sum(s) AS BIGINT) AS ssum,
                 CAST(max(CASE WHEN d = 0 THEN s END) AS BIGINT) AS s1,
                 CAST(max(CASE WHEN d = 32 THEN s END) AS BIGINT) AS s33
-         FROM sc GROUP BY vec_id ORDER BY vec_id""",
+         FROM sc GROUP BY vec_id ORDER BY vec_id"""),
 
-    "q_sim_quantize" ->
+    // symmetric int8 quantization (scale = max |x|, floor(x+0.5) round)
+    Q("q_sim_quantize", (s, d) => {
+      val v = Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val qz = Similarity.quantizeInt8(col("v"))
+      v.select(col("vec_id"), qz.as("qz"))
+        .select(col("vec_id"),
+          col("qz.scale").as("scale"),
+          element_at(col("qz.q"), 1).as("q1"),
+          element_at(col("qz.q"), 33).as("q33"),
+          aggregate(col("qz.q"), lit(0L), (acc, x) => acc + x).as("qsum"))
+        .orderBy("vec_id")
+    },
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          s AS (SELECT vec_id, v,
                       list_max(list_transform(v, x -> abs(x))) AS scale
@@ -1202,25 +919,23 @@ object SimilarityQueries {
                 qv[33] AS q33,
                 list_reduce(list_prepend(0::BIGINT, list_transform(qv, x -> CAST(x AS BIGINT))),
                   (a, b) -> a + b) AS qsum
-         FROM q ORDER BY vec_id""",
+         FROM q ORDER BY vec_id"""),
 
-    "q_sim_rproj" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         pl AS (SELECT j,
-                  [CASE WHEN substr(md5('7:0:' || j || ':' || d), 1, 1) <= '7'
-                        THEN 1.0 ELSE -1.0 END for d in range(0, 64)] AS r
-                FROM range(0, 8) tj(j)),
-         p AS (SELECT e.vec_id, pl.j,
-                 list_dot_product(e.v, pl.r) AS pv
-               FROM e, pl)
-         SELECT vec_id,
-                max(CASE WHEN j = 0 THEN pv END) AS p1,
-                max(CASE WHEN j = 7 THEN pv END) AS p8
-         FROM p GROUP BY vec_id ORDER BY vec_id""",
-
-    "q_sim_label_prop" -> {
-      def round(k: Int, prev: String) =
-        s"""v$k AS (SELECT ed.dst AS id, l.label FROM ed JOIN $prev l ON ed.src = l.id
+    // majority label propagation (2 synchronized rounds) over the sign-LSH
+    // near-dup graph: integer votes, ties to the smallest label — the
+    // semi-supervised labeling pass, exactly reproducible
+    Q("q_sim_label_prop", (s, d) => {
+      val pairs = lshPairTable(s, d).where(col("cos") >= 0.4)
+      val edges = pairs.select(col("va").as("src"), col("vb").as("dst"))
+        .unionByName(pairs.select(col("vb").as("src"), col("va").as("dst")))
+      graft.operators.LabelPropagation.propagate(
+          Tables.embeddings(s, d), col("vec_id"), col("label"),
+          edges, col("src"), col("dst"), iters = 2)
+        .orderBy("id")
+    },
+      {
+        def round(k: Int, prev: String) =
+          s"""v$k AS (SELECT ed.dst AS id, l.label FROM ed JOIN $prev l ON ed.src = l.id
                     UNION ALL SELECT id, label FROM $prev),
             c$k AS (SELECT id, label, count(*) AS cnt FROM v$k GROUP BY 1, 2),
             l$k AS (SELECT id, label FROM (
@@ -1228,7 +943,7 @@ object SimilarityQueries {
                              row_number() OVER (PARTITION BY id
                                ORDER BY cnt DESC, label) AS rn
                       FROM c$k) WHERE rn = 1)"""
-      s"""WITH $lshCandCte,
+        s"""WITH $lshCandCte,
           cosp AS (
             SELECT va, vb, $cosSql AS cos
             FROM cand JOIN e x ON x.vec_id = va JOIN e y ON y.vec_id = vb),
@@ -1239,12 +954,58 @@ object SimilarityQueries {
           ${round(1, "l0")},
           ${round(2, "l1")}
           SELECT id, label FROM l2 ORDER BY id"""
-    },
+      }),
 
-    // recursive min-label closure over the same core-cell adjacency; the
-    // double cast before ·40 keeps the quantization in IEEE double on both
-    // engines (DuckDB would otherwise multiply in single-precision FLOAT)
-    "q_sim_dbscan_grid" ->
+    // grid-density clustering (the scalable DBSCAN shape): quantize the
+    // first two embedding dims into cells (floor(v·40) in plain IEEE
+    // double — exact cross-engine), call cells with ≥ 4 points CORE, and
+    // union 8-adjacent core cells into clusters via the star-components
+    // algorithm. Everything after the one fact-sized cell aggregate runs
+    // on the CELL table, which is bounded by the grid resolution — not the
+    // corpus: the classic ε-neighborhood pair join that makes naive DBSCAN
+    // quadratic never touches point-level data. Points in non-core cells
+    // are noise and drop out (the inner cells join). Cluster id = min cell
+    // code, deterministic; the oracle replays it as a recursive min-label
+    // closure over the same adjacency.
+    Q("q_sim_dbscan_grid", (s, d) => {
+      // labeled core-cell table memoized per (session, sf): the star-
+      // components loop is eager, so without the memo every invocation
+      // re-ran the full iterative closure (the embedClusterTable pattern)
+      val labeled = QueryCaches.memo(s, d, "dbscan_grid_cells") {
+        val pts = Tables.embeddings(s, d).select(col("vec_id"),
+          floor(element_at(col("embedding"), 1).cast("double") * 40)
+            .cast("long").as("cx"),
+          floor(element_at(col("embedding"), 2).cast("double") * 40)
+            .cast("long").as("cy"))
+        val cells = pts.groupBy(col("cx"), col("cy"))
+          .agg(count(lit(1)).as("n"))
+        // cell code packs (cx, cy) into one long with a 2^21 stride —
+        // injective for |cx|,|cy| < 2^20 (embedding dims within ±26214 at
+        // this 40× quantization; the old *1000 stride collided beyond
+        // ±12.5 and a collision would merge distant cells identically in
+        // engine AND oracle, invisible to the gate). Max code ≈ 2^42.
+        val core = cells.where(col("n") >= 4)
+          .withColumn("cell",
+            (col("cx") + 1048576L) * 2097152L + col("cy") + 1048576L)
+        val edges = core.as("a").join(core.as("b"),
+            abs(col("a.cx") - col("b.cx")) <= 1 &&
+              abs(col("a.cy") - col("b.cy")) <= 1 &&
+              col("a.cell") < col("b.cell"))
+          .select(col("a.cell").as("ca"), col("b.cell").as("cb"))
+        val comp = graft.operators.StarComponents
+          .components(edges, col("ca"), col("cb"))
+          .withColumnRenamed("doc_id", "cell")
+        core.join(comp, Seq("cell"), "left")
+          .withColumn("cluster", coalesce(col("cluster_id"), col("cell")))
+      }
+      labeled
+        .groupBy(col("cluster"))
+        .agg(count(lit(1)).as("n_cells"), sum(col("n")).as("n_points"))
+        .orderBy("cluster")
+    },
+      // recursive min-label closure over the same core-cell adjacency; the
+      // double cast before ·40 keeps the quantization in IEEE double on both
+      // engines (DuckDB would otherwise multiply in single-precision FLOAT)
       """WITH RECURSIVE pts AS (
            SELECT vec_id,
                   CAST(floor(CAST(embedding[1] AS DOUBLE) * 40) AS BIGINT)
@@ -1274,9 +1035,14 @@ object SimilarityQueries {
                 CAST(count(*) AS BIGINT) AS n_cells,
                 CAST(sum(core.n) AS BIGINT) AS n_points
          FROM core LEFT JOIN cl ON cl.cell = core.cell
-         GROUP BY 1 ORDER BY cluster""",
+         GROUP BY 1 ORDER BY cluster"""),
 
-    "q_sim_hard_negatives" ->
+    // hard-negative mining: top-3 most-similar DIFFERENT-label items per
+    // query — the contrastive-training counterpart of ANN search
+    Q("q_sim_hard_negatives", (s, d) =>
+      Similarity.hardNegatives(Tables.embeddings(s, d),
+        queryMaxId = QuerySetMax, k = 3)
+        .orderBy("qid", "rank"),
       s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
           scored AS (
             SELECT x.vec_id AS qid, x.label AS qlabel,
@@ -1288,9 +1054,18 @@ object SimilarityQueries {
                    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS BIGINT) AS rank
             FROM scored)
           SELECT qid, qlabel, nid, nlabel, rank, cos FROM r WHERE rank <= 3
-          ORDER BY qid, rank""",
+          ORDER BY qid, rank"""),
 
-    "q_sim_pq_adc" ->
+    // product quantization: 8 subspaces × 8 dims, 16-centroid codebooks,
+    // ADC top-3 per query — corpus held as codes, queries exact, distance
+    // = sum of broadcast table lookups. Elements quantize to integer
+    // micro-units at the leaf (audited site), so every distance is pure
+    // integer arithmetic — no cross-engine float surface at all
+    Q("q_sim_pq_adc", (s, d) =>
+      graft.similarity.ProductQuantization.adcTopK(
+        Tables.embeddings(s, d), col("vec_id"), col("embedding"),
+        queryMaxId = QuerySetMax, m = 8, subDim = 8, ksub = 16, k = 3)
+        .orderBy("qid", "rank"),
       s"""WITH $pqCtes,
          adc AS (
            SELECT dt.qid, c.id AS nid, CAST(sum(dt.d2q) AS BIGINT) AS adist_micro2
@@ -1301,9 +1076,17 @@ object SimilarityQueries {
                         ORDER BY adist_micro2, nid) AS BIGINT) AS rank
                FROM adc)
          SELECT qid, nid, rank, adist_micro2 FROM r WHERE rank <= 3
-         ORDER BY qid, rank""",
+         ORDER BY qid, rank"""),
 
-    "q_sim_ivfpq_topk" ->
+    // IVF-PQ: coarse cells (nprobe = 2) restrict candidates, PQ codes
+    // supply the distances — the FAISS IndexIVFPQ composition, fully
+    // integer past the audited leaf quantization
+    Q("q_sim_ivfpq_topk", (s, d) =>
+      graft.similarity.ProductQuantization.ivfPqTopK(
+        Tables.embeddings(s, d), col("vec_id"), col("embedding"),
+        nCells = 8, nprobe = 2, queryMaxId = QuerySetMax,
+        m = 8, subDim = 8, ksub = 16, k = 3)
+        .orderBy("qid", "rank"),
       s"""WITH $pqCtes,
          er AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          cents AS (SELECT vec_id AS ccid, v AS cv FROM er WHERE vec_id < 8),
@@ -1328,58 +1111,50 @@ object SimilarityQueries {
                         ORDER BY adist_micro2, nid) AS BIGINT) AS rank
                FROM adc)
          SELECT qid, nid, rank, adist_micro2 FROM r WHERE rank <= 3
-         ORDER BY qid, rank""",
+         ORDER BY qid, rank"""),
 
-    "q_sim_ivf_probes" ->
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-          ranked AS (
-            SELECT id, v, cid,
-                   row_number() OVER (PARTITION BY id ORDER BY score DESC, cid) AS rn
-            FROM (SELECT e.vec_id AS id, e.v, cid,
-                         ${dotSql("v", "cv")} AS score
-                  FROM e CROSS JOIN cents)),
-          c AS (SELECT id AS nid, v AS nv, cid AS cell FROM ranked WHERE rn = 1),
-          q AS (SELECT id AS qid, v AS qv, cid AS cell FROM ranked
-                WHERE rn <= 2 AND id < $QuerySetMax),
-          cos AS (
-            SELECT qid, nid,
-                   ${dotSql("qv", "nv")}
-                     / (sqrt(${dotSql("qv", "qv")}) * sqrt(${dotSql("nv", "nv")})) AS cos
-            FROM q JOIN c USING (cell) WHERE qid != nid),
-          r AS (
-            SELECT qid, nid, cos,
-                   CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS BIGINT) AS rank
-            FROM cos)
-          SELECT qid, nid, rank, cos FROM r WHERE rank <= 3 ORDER BY qid, rank""",
+    // seeded Rademacher random projection 64 → 8 dims (JL sketch)
+    Q("q_sim_rproj", (s, d) => {
+      val v = Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val p = Similarity.randomProjection(col("v"), seed = 7L, outDims = 8, dims = 64)
+      v.select(col("vec_id"),
+          element_at(p, 1).as("p1"),
+          element_at(p, 8).as("p8"))
+        .orderBy("vec_id")
+    },
+      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         pl AS (SELECT j,
+                  [CASE WHEN substr(md5('7:0:' || j || ':' || d), 1, 1) <= '7'
+                        THEN 1.0 ELSE -1.0 END for d in range(0, 64)] AS r
+                FROM range(0, 8) tj(j)),
+         p AS (SELECT e.vec_id, pl.j,
+                 list_dot_product(e.v, pl.r) AS pv
+               FROM e, pl)
+         SELECT vec_id,
+                max(CASE WHEN j = 0 THEN pv END) AS p1,
+                max(CASE WHEN j = 7 THEN pv END) AS p8
+         FROM p GROUP BY vec_id ORDER BY vec_id"""),
 
-    "q_sim_ivf_topk" ->
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-          scored AS (
-            SELECT e.vec_id AS id, e.v, cid,
-                   ${dotSql("v", "cv")} AS score
-            FROM e CROSS JOIN cents),
-          assigned AS (
-            SELECT id, v, cid AS cell
-            FROM (SELECT id, v, cid,
-                         row_number() OVER (PARTITION BY id ORDER BY score DESC, cid) AS rn
-                  FROM scored)
-            WHERE rn = 1),
-          q AS (SELECT id AS qid, v AS qv, cell FROM assigned WHERE id < $QuerySetMax),
-          c AS (SELECT id AS nid, v AS nv, cell FROM assigned),
-          cos AS (
-            SELECT qid, nid,
-                   ${dotSql("qv", "nv")}
-                     / (sqrt(${dotSql("qv", "qv")}) * sqrt(${dotSql("nv", "nv")})) AS cos
-            FROM q JOIN c USING (cell) WHERE qid != nid),
-          r AS (
-            SELECT qid, nid, cos,
-                   CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS BIGINT) AS rank
-            FROM cos)
-          SELECT qid, nid, rank, cos FROM r WHERE rank <= 3 ORDER BY qid, rank""",
-
-    "q_sim_matryoshka" ->
+    // Matryoshka-style truncation evaluation: recall@5 of the 8-dim
+    // PREFIX against the full 64-dim brute-force neighbors, per query —
+    // the measurement behind "how many dims can retrieval afford to
+    // drop". Both arms are the same broadcast-queries × corpus kernel on
+    // different widths; the overlap join is neighbor-set sized
+    Q("q_sim_matryoshka", (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      val q = emb.where(col("vec_id") < QuerySetMax)
+      val full = Similarity.bruteForceTopK(q, emb, 5).select("qid", "nid")
+      def trunc8(df: DataFrame) =
+        df.select(col("vec_id"), slice(col("embedding"), 1, 8).as("embedding"))
+      val short = Similarity.bruteForceTopK(trunc8(q), trunc8(emb), 5)
+        .select("qid", "nid")
+      val hits = full.join(short, Seq("qid", "nid"), "left_semi")
+        .groupBy("qid").agg(count(lit(1)).as("h"))
+      q.select(col("vec_id").as("qid")).join(hits, Seq("qid"), "left")
+        .select(col("qid"), coalesce(col("h"), lit(0L)).as("recall5_hits"))
+        .orderBy("qid")
+    },
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           fs AS (
             SELECT x.vec_id AS qid, y.vec_id AS nid, $cosSql AS cos
@@ -1401,9 +1176,25 @@ object SimilarityQueries {
                  CAST(COALESCE(hits.h, 0) AS BIGINT) AS recall5_hits
           FROM embeddings q LEFT JOIN hits ON hits.qid = q.vec_id
           WHERE q.vec_id < $QuerySetMax
-          ORDER BY qid""",
+          ORDER BY qid"""),
 
-    "q_sim_ivf_balance" ->
+    // IVF index-health diagnostic: per-cell population share and the
+    // max·cells/total imbalance ratio — the skew report that decides
+    // whether the coarse quantizer needs retraining (a hot cell turns
+    // single-probe search into a near-scan). Cell counts are one
+    // aggregate over the assignment; everything downstream is
+    // cells-sized and broadcast
+    Q("q_sim_ivf_balance", (s, d) => {
+      val cells = Similarity.ivfAssign(Tables.embeddings(s, d), 8)
+        .groupBy("cell").agg(count(lit(1)).as("n"))
+      val stats = cells.agg(sum("n").as("tot"), max("n").as("mx"),
+        count(lit(1)).as("nc"))
+      cells.crossJoin(broadcast(stats))
+        .select(col("cell"), col("n"),
+          expr("n * 1000000 DIV tot").as("share_ppm"),
+          expr("mx * nc * 1000000 DIV tot").as("imbalance_ppm"))
+        .orderBy("cell")
+    },
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
           scored AS (
@@ -1424,9 +1215,33 @@ object SimilarityQueries {
                  FROM cells)
           SELECT cell, n, CAST(n * 1000000 // tot AS BIGINT) AS share_ppm,
                  CAST(mx * nc * 1000000 // tot AS BIGINT) AS imbalance_ppm
-          FROM cells, st ORDER BY cell""",
+          FROM cells, st ORDER BY cell"""),
 
-    "q_sim_embed_drift" ->
+    // embedding-distribution drift: PSI over the trained k-means cell
+    // populations of two corpus halves (even/odd ids as the before/after
+    // stand-in) — the retraining trigger for vector indexes: when new
+    // data stops landing where the quantizer expects, the cell shares
+    // move. Same integer pico-unit PSI contract as q_eng_psi_drift;
+    // reuses the memoized k-means assignment, so the only new work is
+    // one cells-sized aggregate
+    Q("q_sim_embed_drift", (s, d) => {
+      val cells = kmeansTable(s, d).select(col("id"), col("cell"))
+        .groupBy("cell").agg(
+          count(when(col("id") % 2 === 0, 1)).as("na"),
+          count(when(col("id") % 2 =!= 0, 1)).as("nb"))
+      val tots = cells.agg(sum("na").as("ta"), sum("nb").as("tb"),
+        count(lit(1)).as("nc"))
+      cells.crossJoin(broadcast(tots))
+        .select(col("cell"), col("na"), col("nb"),
+          expr("(na + 1) * 1000000 DIV (ta + nc)").as("sa_ppm"),
+          expr("(nb + 1) * 1000000 DIV (tb + nc)").as("sb_ppm"),
+          floor(log(((col("na") + 1) * (col("tb") + col("nc"))).cast("double") /
+            ((col("nb") + 1) * (col("ta") + col("nc"))).cast("double"))
+            * 1000000.0 + 0.5).cast("long").as("ln_micro"))
+        .withColumn("psi_pico",
+          (col("sa_ppm") - col("sb_ppm")) * col("ln_micro"))
+        .orderBy("cell")
+    },
       s"""WITH $kmeansCtes,
           cells AS (
             SELECT cid AS cell,
@@ -1447,17 +1262,39 @@ object SimilarityQueries {
             FROM cells, tots)
           SELECT cell, na, nb, sa_ppm, sb_ppm, ln_micro,
                  CAST((sa_ppm - sb_ppm) * ln_micro AS BIGINT) AS psi_pico
-          FROM t ORDER BY cell""",
+          FROM t ORDER BY cell"""),
 
-    "q_sim_pq_distortion" ->
+    // PQ quantization-distortion report: per-subspace min-centroid error
+    // stats in exact micro² units — the index-quality complement of
+    // q_sim_pq_adc (a subspace with outsized distortion needs more
+    // centroids or a rotation). One argmin aggregate over the same
+    // broadcast-codebook distance table the encoder builds
+    Q("q_sim_pq_distortion", (s, d) =>
+      graft.similarity.ProductQuantization.distortion(
+        Tables.embeddings(s, d), col("vec_id"), col("embedding"),
+        m = 8, subDim = 8, ksub = 16),
       s"""WITH $pqCtes,
           mn AS (SELECT id, m, min(d2q) AS d2q FROM d GROUP BY 1, 2)
           SELECT CAST(m AS BIGINT) AS m, CAST(count(*) AS BIGINT) AS n,
                  CAST(sum(d2q) // count(*) AS BIGINT) AS avg_d2q_micro2,
                  CAST(max(d2q) AS BIGINT) AS max_d2q_micro2
-          FROM mn GROUP BY m ORDER BY m""",
+          FROM mn GROUP BY m ORDER BY m"""),
 
-    "q_sim_hubness" ->
+    // hubness diagnostic: in-degree distribution of the exact 5-NN graph
+    // on a fixed 200-vector sub-corpus — high-dimensional embedding
+    // spaces grow "hub" points that appear in everyone's neighbor list
+    // and poison retrieval; a heavy in-degree tail is the symptom. The
+    // sub-corpus keeps the all-pairs kernel a fixed-size diagnostic at
+    // any data scale (hubness is a property of the space, not the count)
+    Q("q_sim_hubness", (s, d) => {
+      val sub = Tables.embeddings(s, d).where(col("vec_id") < 200)
+      val indeg = Similarity.bruteForceTopK(sub, sub, 5)
+        .groupBy(col("nid")).agg(count(lit(1)).as("ind"))
+      sub.select(col("vec_id").as("nid")).join(indeg, Seq("nid"), "left")
+        .select(coalesce(col("ind"), lit(0L)).as("in_degree"))
+        .groupBy("in_degree").agg(count(lit(1)).as("n_vectors"))
+        .orderBy("in_degree")
+    },
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
                      FROM embeddings WHERE vec_id < 200),
           scored AS (
@@ -1472,22 +1309,52 @@ object SimilarityQueries {
           SELECT CAST(COALESCE(ind.ind, 0) AS BIGINT) AS in_degree,
                  CAST(count(*) AS BIGINT) AS n_vectors
           FROM e LEFT JOIN ind ON e.vec_id = ind.nid
-          GROUP BY 1 ORDER BY in_degree""",
+          GROUP BY 1 ORDER BY in_degree"""),
 
-    "q_sim_norm_hist" ->
-      """WITH q AS (
-           SELECT list_reduce(list_prepend(0::BIGINT,
-                    list_transform(embedding::DOUBLE[],
-                      x -> CAST(floor(x * 1000000.0 + 0.5) AS BIGINT))),
-                    (acc, x) -> acc + x * x) AS nq2
-           FROM embeddings)
-         SELECT CAST(nq2 // 100000000000 AS BIGINT) AS bucket,
-                CAST(count(*) AS BIGINT) AS n_vectors
-         FROM q GROUP BY 1 ORDER BY bucket""",
-
-    "q_sim_pca_power" -> {
-      def iter(k: Int, prev: String) =
-        s"""s$k AS (
+    // top principal direction via integer power iteration — the PCA
+    // component behind embedding whitening/debiasing, computed with the
+    // PageRank discipline: quantize at every step, so the iteration is
+    // pure long arithmetic and bitwise cross-engine. Per round: one
+    // corpus pass for the row scores s = Qv (rescaled sign·(|s| div 1e6)
+    // — signed division goes through |·| so truncation == floor), one
+    // dimension aggregate u = Qᵀs, then max-normalization back to micro
+    // units. Three unrolled rounds; output the 8 heaviest dims
+    Q("q_sim_pca_power", (s, d) => {
+      val q = Tables.embeddings(s, d).select(col("vec_id"),
+        transform(col("embedding").cast("array<double>"),
+          x => floor(x * lit(1000000.0) + lit(0.5)).cast("long")).as("q"))
+      val dims = 64
+      // v as a 64-row (dim, w) frame; v0 = all ones in micro units
+      var v = s.range(0, dims).select(col("id").cast("int").as("dim"),
+        lit(1000000L).as("w"))
+      for (_ <- 1 to 3) {
+        val score = q
+          .select(col("vec_id"), posexplode(col("q")).as(Seq("dim", "qe")))
+          .join(broadcast(v), "dim")
+          .groupBy("vec_id").agg(sum(col("qe") * col("w")).as("sraw"))
+          .select(col("vec_id"),
+            (signum(col("sraw")).cast("long") *
+              expr("abs(sraw) DIV 1000000")).as("sc"))
+        val u = q
+          .select(col("vec_id"), posexplode(col("q")).as(Seq("dim", "qe")))
+          .join(score, "vec_id")
+          .groupBy("dim").agg(sum(col("qe") * col("sc")).as("u"))
+        val mx = u.agg(max(abs(col("u"))).as("m"))
+        // normalize as |u| div (m div 1e6) — the multiply-first form
+        // overflows a long at corpus scale; the divide-first form keeps
+        // every operand bounded and both engines share the exact formula
+        v = u.crossJoin(broadcast(mx))
+          .select(col("dim"),
+            (signum(col("u")).cast("long") *
+              expr("abs(u) DIV greatest(1L, m DIV 1000000)")).as("w"))
+      }
+      v.select(col("dim").cast("long").as("dim"), col("w").as("weight_micro"))
+        .orderBy(abs(col("weight_micro")).desc, col("dim"))
+        .limit(8)
+    },
+      {
+        def iter(k: Int, prev: String) =
+          s"""s$k AS (
               SELECT vec_id,
                      CASE WHEN s >= 0 THEN s // 1000000
                           ELSE -((-s) // 1000000) END AS sc
@@ -1502,7 +1369,7 @@ object SimilarityQueries {
                                 ELSE -((-u) // greatest(1, m // 1000000))
                            END AS w
                     FROM u$k, m$k)"""
-      s"""WITH e AS (
+        s"""WITH e AS (
             SELECT vec_id,
                    list_transform(embedding::DOUBLE[],
                      x -> CAST(floor(x * 1000000.0 + 0.5) AS BIGINT)) AS q
@@ -1516,9 +1383,38 @@ object SimilarityQueries {
           ${iter(3, "v2")}
           SELECT CAST(dim AS BIGINT) AS dim, CAST(w AS BIGINT) AS weight_micro
           FROM v3 ORDER BY abs(w) DESC, dim LIMIT 8"""
-    },
+      }),
 
-    "q_sim_label_separation" ->
+    // embedding label-separation eval: mean cosine within vs across
+    // labels on the fixed 200-vector sub-corpus — the supervised
+    // embedding-quality read-out (a good encoder pulls same-label pairs
+    // together; separation ≈ 0 means the labels are invisible to the
+    // geometry). Pair cosines quantize at the leaf (micro units, same
+    // audited discipline as the SemDeDup pairs), so the means are exact
+    // integer division
+    Q("q_sim_label_separation", (s, d) => {
+      val sub = Tables.embeddings(s, d).where(col("vec_id") < 200)
+        .select(col("vec_id"), col("embedding"), col("label"))
+      val pairs = Similarity.bruteForceTopK(sub, sub, 199)
+        .where(col("qid") < col("nid"))
+      val labels = sub.select(col("vec_id"), col("label"))
+      pairs
+        .join(labels.select(col("vec_id").as("qid"),
+          col("label").as("la")), "qid")
+        .join(labels.select(col("vec_id").as("nid"),
+          col("label").as("lb")), "nid")
+        .select(when(col("la") === col("lb"), lit("same"))
+            .otherwise(lit("diff")).as("pair_kind"),
+          // shift by +1e6 (cos ≥ −1) so the mean's integer division has
+          // a non-negative numerator: Spark's truncating DIV and
+          // DuckDB's flooring // agree only above zero
+          (floor(col("cos") * 1000000.0 + 0.5).cast("long") + 1000000L)
+            .as("cms"))
+        .groupBy("pair_kind")
+        .agg(count(lit(1)).as("n_pairs"),
+          expr("sum(cms) DIV count(1) - 1000000").as("mean_cos_micro"))
+        .orderBy("pair_kind")
+    },
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label
                      FROM embeddings WHERE vec_id < 200),
           p AS (
@@ -1530,9 +1426,49 @@ object SimilarityQueries {
           SELECT pair_kind, CAST(count(*) AS BIGINT) AS n_pairs,
                  CAST(CAST(sum(cms) AS BIGINT) // count(*) - 1000000
                    AS BIGINT) AS mean_cos_micro
-          FROM p GROUP BY 1 ORDER BY pair_kind""",
+          FROM p GROUP BY 1 ORDER BY pair_kind"""),
 
-    "q_sim_ivf_cost" ->
+    // IVF scan-cost report: candidates each query actually examines
+    // (its cell's population minus itself) vs the brute-force corpus —
+    // the speedup the index buys, per query, in exact ppm. Cell sizes
+    // broadcast; no scoring work at all
+    // embedding norm histogram: the norm-collapse / outlier screen (a
+    // healthy encoder yields a tight norm band; a spike at zero or a fat
+    // tail flags dead units or exploding examples). Norm² in exact
+    // integer micro² via leaf quantization — the same audited trick as
+    // PQ — so the buckets are bitwise. One map + vocabulary-sized rollup
+    Q("q_sim_norm_hist", (s, d) => {
+      val q2 = aggregate(
+        transform(col("embedding").cast("array<double>"),
+          x => floor(x * lit(1000000.0) + lit(0.5)).cast("long")),
+        lit(0L), (acc, x) => acc + x * x)
+      Tables.embeddings(s, d)
+        .select(q2.as("nq2"))
+        .select(expr("nq2 DIV 100000000000").as("bucket"))
+        .groupBy("bucket").agg(count(lit(1)).as("n_vectors"))
+        .orderBy("bucket")
+    },
+      """WITH q AS (
+           SELECT list_reduce(list_prepend(0::BIGINT,
+                    list_transform(embedding::DOUBLE[],
+                      x -> CAST(floor(x * 1000000.0 + 0.5) AS BIGINT))),
+                    (acc, x) -> acc + x * x) AS nq2
+           FROM embeddings)
+         SELECT CAST(nq2 // 100000000000 AS BIGINT) AS bucket,
+                CAST(count(*) AS BIGINT) AS n_vectors
+         FROM q GROUP BY 1 ORDER BY bucket"""),
+
+    Q("q_sim_ivf_cost", (s, d) => {
+      val assigned = Similarity.ivfAssign(Tables.embeddings(s, d), 8)
+      val sizes = assigned.groupBy("cell").agg(count(lit(1)).as("csize"))
+      val n = assigned.agg(count(lit(1)).as("n"))
+      assigned.where(col("id") < QuerySetMax).select("id", "cell")
+        .join(broadcast(sizes), "cell").crossJoin(broadcast(n))
+        .select(col("id").as("qid"), col("cell"),
+          (col("csize") - 1).as("n_candidates"),
+          expr("(csize - 1) * 1000000 DIV (n - 1)").as("scan_ratio_ppm"))
+        .orderBy("qid")
+    },
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
           scored AS (
@@ -1553,6 +1489,6 @@ object SimilarityQueries {
                  CAST((csize - 1) * 1000000 // (n - 1) AS BIGINT)
                    AS scan_ratio_ppm
           FROM assigned JOIN sizes USING (cell), n
-          WHERE id < $QuerySetMax ORDER BY qid"""
+          WHERE id < $QuerySetMax ORDER BY qid""")
   )
 }

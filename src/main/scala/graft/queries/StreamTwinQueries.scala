@@ -223,7 +223,7 @@ object StreamTwinQueries {
   // 30 min attribution window (view → click), exact micros.
   private val LagUs = 1800L * 1000000L
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val registry: Seq[Q] = Seq(
 
     // Gap-based session assembly: the batch twin of the
     // flatMapGroupsWithState sessionizer. Plan shape: ONE hash exchange on
@@ -234,7 +234,7 @@ object StreamTwinQueries {
     // distinct users (millions at 100 TB), state never materializes —
     // unlike the stream, which holds one open-session record per active
     // user and evicts on watermark.
-    "q_stream_sessionize" -> ((s, d) => {
+    Q("q_stream_sessionize", (s, d) => {
       val ev = Tables.events(s, d)
         .select(col("user_id"), col("ts"), col("event_id"))
       val sess = graft.operators.Sessions.sessionize(
@@ -244,120 +244,7 @@ object StreamTwinQueries {
           max(unix_micros(col("ts"))).as("end_us"),
           count(lit(1)).as("n_events"))
         .orderBy(col("user_id"), col("session_idx"))
-    }),
-
-    // Interval-join attribution (view → click within 30 min, same user),
-    // via the streaming operator's own leftOuterIntervalJoin — on batch
-    // inputs the identical range-predicated left equi-join Spark executes
-    // per micro-batch, minus the watermark state eviction the range
-    // condition exists to enable. Aggregated per user so the output is
-    // |users|-bounded while the JOIN itself still runs at event scale.
-    // Scale: equi-join on user_id (one shuffle each side); the time-range
-    // predicate evaluates post-probe — never a cross product.
-    "q_stream_interval_join" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val views = ev.where(col("event_type") === "view")
-        .select(col("user_id"), col("ts").as("v_ts"),
-          col("event_id").as("v_id"))
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("c_ts"),
-          col("event_id").as("c_id"))
-      val j = graft.streaming.StreamJoin.leftOuterIntervalJoin(
-        views, clicks, "user_id", "v_ts", "c_ts", maxLagMs = LagUs / 1000L)
-      j.groupBy(col("user_id"))
-        .agg(countDistinct(col("v_id")).as("n_views"),
-          countDistinct(when(col("c_id").isNotNull, col("v_id")))
-            .as("n_attributed"),
-          sum(when(col("c_id").isNotNull, 1L).otherwise(0L)).as("n_pairs"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Token-bucket rate limiting (ingestion quotas): the batch twin runs
-    // the IDENTICAL per-key fold the flatMapGroupsWithState operator runs
-    // (one shared foldBucket — capacity 2, refill 1 token/day, event-time
-    // refill so replay is deterministic), via the funnel/detectBatch
-    // recipe: one hash exchange on the key, MapGroups, per-group state =
-    // one bucket record. Aggregated per user; admitted_id_sum pins WHICH
-    // events were admitted, not just how many. All arithmetic is
-    // fixed-order IEEE doubles (no libm) so the oracle's recursive-CTE
-    // replay is bitwise.
-    "q_stream_rate_limit" -> ((s, d) => {
-      import s.implicits._
-      val ev = Tables.events(s, d)
-        .select(col("user_id").cast("string").as("key"), col("ts"),
-          col("event_id").as("payload"))
-        .as[graft.streaming.RateEvent]
-      graft.streaming.RateLimit
-        .admitBatch(ev, capacity = 2.0, ratePerSec = 1.0 / 86400.0)
-        .toDF()
-        .groupBy(col("key").cast("long").as("user_id"))
-        .agg(sum(when(col("admitted"), 1L).otherwise(0L)).as("n_admitted"),
-          sum(when(!col("admitted"), 1L).otherwise(0L)).as("n_rejected"),
-          sum(when(col("admitted"), col("payload"))).as("admitted_id_sum"))
-        .orderBy("user_id")
-    }),
-
-    // Watermarked tumbling-window counts — the SAME function the stream
-    // runs (withWatermark is a no-op on batch input), 6 h windows aligned
-    // to the epoch. One partial-aggregated hash exchange on
-    // (window, event_type); the streaming run holds one count per open
-    // window per type, watermark-evicted.
-    "q_stream_windowed_counts" -> ((s, d) =>
-      graft.streaming.Incremental.windowedEventCounts(
-          Tables.events(s, d), windowLen = "6 hours", watermarkDelay = "1 hour")
-        .select(unix_micros(col("window_start")).as("wstart_us"),
-          col("event_type"), col("n_events"))
-        .orderBy("wstart_us", "event_type")),
-
-    // The streaming EXECUTION gate (not a twin): runStreamExec drives a
-    // real checkpointed StreamingQuery — 4 micro-batches over time-ranged
-    // files, complete-mode windowed state accumulated across them,
-    // foreachBatch parquet sink — and this row reads the sink back. The
-    // oracle is the plain windowed GROUP BY: equality proves the
-    // micro-batch execution path (source backlog planning, cross-batch
-    // state merge, sink commit) computes the batch answer.
-    "q_stream_exec_windowed" -> ((s, d) =>
-      s.read.parquet(runStreamExec(s, d))
-        .orderBy("wstart_us", "event_type")),
-
-    // The state-EVICTION gate (r12 verdict #1): runStreamExecAppend
-    // drives the same 4-micro-batch run through watermark + append mode;
-    // the sink accumulates each window exactly once, when the watermark
-    // finalizes it, and the oracle is the batch GROUP BY restricted to
-    // windows below the final watermark (max ts − 1 h, ms-truncated).
-    // Equality proves the production streaming shape — bounded state,
-    // monotone emission, watermark eviction — computes the right answer;
-    // StreamExecGateSpec additionally pins that state rows were REMOVED
-    // from the store and the unfinalized tail was withheld.
-    "q_stream_exec_append" -> ((s, d) =>
-      s.read.parquet(runStreamExecAppend(s, d))
-        .orderBy("wstart_us", "event_type")),
-
-    // Last-writer-wins upsert readout: Upsert.keepLatest — the EXACT
-    // reduction the streaming foreachBatch sink applies when merging each
-    // micro-batch into the keyed table (idempotent under batch replay by
-    // construction: re-merging the same rows re-picks the same winner).
-    // value quantized to exact integer cents at the leaf (gate discipline).
-    // Scale: one hash exchange on the key, per-key top-1 via row_number —
-    // no global sort, state lives in the table.
-    "q_stream_upsert_latest" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"), col("value"))
-      graft.streaming.Upsert.keepLatest(ev, "user_id", "ts", "event_id")
-        .select(col("user_id"),
-          unix_micros(col("ts")).as("last_us"),
-          col("event_id").as("last_event_id"),
-          col("event_type").as("last_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long")
-            .as("last_value_cents"))
-        .orderBy(col("user_id"))
-    })
-  )
-
-  val oracleSql: Map[String, String] = Map(
-
-    "q_stream_sessionize" ->
+    },
       s"""WITH ev AS (
            SELECT user_id, epoch_us(ts) AS us, event_id FROM events),
          lagd AS (
@@ -379,9 +266,33 @@ object StreamTwinQueries {
                 CAST(max(us) AS BIGINT) AS end_us,
                 CAST(count(*) AS BIGINT) AS n_events
          FROM sess GROUP BY user_id, session_idx
-         ORDER BY user_id, session_idx""",
+         ORDER BY user_id, session_idx"""),
 
-    "q_stream_interval_join" ->
+    // Interval-join attribution (view → click within 30 min, same user),
+    // via the streaming operator's own leftOuterIntervalJoin — on batch
+    // inputs the identical range-predicated left equi-join Spark executes
+    // per micro-batch, minus the watermark state eviction the range
+    // condition exists to enable. Aggregated per user so the output is
+    // |users|-bounded while the JOIN itself still runs at event scale.
+    // Scale: equi-join on user_id (one shuffle each side); the time-range
+    // predicate evaluates post-probe — never a cross product.
+    Q("q_stream_interval_join", (s, d) => {
+      val ev = Tables.events(s, d)
+      val views = ev.where(col("event_type") === "view")
+        .select(col("user_id"), col("ts").as("v_ts"),
+          col("event_id").as("v_id"))
+      val clicks = ev.where(col("event_type") === "click")
+        .select(col("user_id"), col("ts").as("c_ts"),
+          col("event_id").as("c_id"))
+      val j = graft.streaming.StreamJoin.leftOuterIntervalJoin(
+        views, clicks, "user_id", "v_ts", "c_ts", maxLagMs = LagUs / 1000L)
+      j.groupBy(col("user_id"))
+        .agg(countDistinct(col("v_id")).as("n_views"),
+          countDistinct(when(col("c_id").isNotNull, col("v_id")))
+            .as("n_attributed"),
+          sum(when(col("c_id").isNotNull, 1L).otherwise(0L)).as("n_pairs"))
+        .orderBy(col("user_id"))
+    },
       s"""WITH v AS (
            SELECT user_id, epoch_us(ts) AS vus, event_id AS v_id
            FROM events WHERE event_type = 'view'),
@@ -400,20 +311,44 @@ object StreamTwinQueries {
                   AS n_attributed,
                 CAST(sum(CASE WHEN c_id IS NOT NULL THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_pairs
-         FROM j GROUP BY user_id ORDER BY user_id""",
+         FROM j GROUP BY user_id ORDER BY user_id"""),
 
-    // recursive-CTE replay of RateLimit.foldBucket: one recursion step per
-    // (user, event index); tokens carried as DOUBLE through the identical
-    // fixed-order IEEE tree (every literal CAST AS DOUBLE — bare decimal
-    // literals are DECIMAL in both engines' SQL and would round
-    // differently from the Scala double tree)
-    "q_stream_rate_limit" -> {
-      val cap = "CAST(2.0 AS DOUBLE)"
-      val rate = "(CAST(1.0 AS DOUBLE) / CAST(86400.0 AS DOUBLE))"
-      val refilled = s"CASE WHEN s.last_ms IS NULL THEN $cap " +
-        s"ELSE least($cap, s.tokens + " +
-        s"(CAST(greatest(e.t - s.last_ms, 0) AS DOUBLE) / CAST(1000.0 AS DOUBLE)) * $rate) END"
-      s"""WITH RECURSIVE ev AS (
+    // Token-bucket rate limiting (ingestion quotas): the batch twin runs
+    // the IDENTICAL per-key fold the flatMapGroupsWithState operator runs
+    // (one shared foldBucket — capacity 2, refill 1 token/day, event-time
+    // refill so replay is deterministic), via the funnel/detectBatch
+    // recipe: one hash exchange on the key, MapGroups, per-group state =
+    // one bucket record. Aggregated per user; admitted_id_sum pins WHICH
+    // events were admitted, not just how many. All arithmetic is
+    // fixed-order IEEE doubles (no libm) so the oracle's recursive-CTE
+    // replay is bitwise.
+    Q("q_stream_rate_limit", (s, d) => {
+      import s.implicits._
+      val ev = Tables.events(s, d)
+        .select(col("user_id").cast("string").as("key"), col("ts"),
+          col("event_id").as("payload"))
+        .as[graft.streaming.RateEvent]
+      graft.streaming.RateLimit
+        .admitBatch(ev, capacity = 2.0, ratePerSec = 1.0 / 86400.0)
+        .toDF()
+        .groupBy(col("key").cast("long").as("user_id"))
+        .agg(sum(when(col("admitted"), 1L).otherwise(0L)).as("n_admitted"),
+          sum(when(!col("admitted"), 1L).otherwise(0L)).as("n_rejected"),
+          sum(when(col("admitted"), col("payload"))).as("admitted_id_sum"))
+        .orderBy("user_id")
+    },
+      // recursive-CTE replay of RateLimit.foldBucket: one recursion step per
+      // (user, event index); tokens carried as DOUBLE through the identical
+      // fixed-order IEEE tree (every literal CAST AS DOUBLE — bare decimal
+      // literals are DECIMAL in both engines' SQL and would round
+      // differently from the Scala double tree)
+      {
+        val cap = "CAST(2.0 AS DOUBLE)"
+        val rate = "(CAST(1.0 AS DOUBLE) / CAST(86400.0 AS DOUBLE))"
+        val refilled = s"CASE WHEN s.last_ms IS NULL THEN $cap " +
+          s"ELSE least($cap, s.tokens + " +
+          s"(CAST(greatest(e.t - s.last_ms, 0) AS DOUBLE) / CAST(1000.0 AS DOUBLE)) * $rate) END"
+        s"""WITH RECURSIVE ev AS (
            SELECT CAST(user_id AS VARCHAR) AS key, epoch_ms(ts) AS t,
                   event_id AS payload,
                   CAST(row_number() OVER (PARTITION BY user_id
@@ -443,24 +378,54 @@ object StreamTwinQueries {
                   AS admitted_id_sum
          FROM step WHERE payload IS NOT NULL
          GROUP BY 1 ORDER BY user_id"""
-    },
+      }),
 
-    "q_stream_windowed_counts" ->
+    // Watermarked tumbling-window counts — the SAME function the stream
+    // runs (withWatermark is a no-op on batch input), 6 h windows aligned
+    // to the epoch. One partial-aggregated hash exchange on
+    // (window, event_type); the streaming run holds one count per open
+    // window per type, watermark-evicted.
+    Q("q_stream_windowed_counts", (s, d) =>
+      graft.streaming.Incremental.windowedEventCounts(
+          Tables.events(s, d), windowLen = "6 hours", watermarkDelay = "1 hour")
+        .select(unix_micros(col("window_start")).as("wstart_us"),
+          col("event_type"), col("n_events"))
+        .orderBy("wstart_us", "event_type"),
       """SELECT (epoch_us(ts) // 21600000000) * 21600000000 AS wstart_us,
                 event_type, CAST(count(*) AS BIGINT) AS n_events
-         FROM events GROUP BY 1, 2 ORDER BY wstart_us, event_type""",
+         FROM events GROUP BY 1, 2 ORDER BY wstart_us, event_type"""),
 
-    // identical readout: the streaming execution must land exactly the
-    // batch windowed counts (no watermark → no split-dependent drops)
-    "q_stream_exec_windowed" ->
+    // The streaming EXECUTION gate (not a twin): runStreamExec drives a
+    // real checkpointed StreamingQuery — 4 micro-batches over time-ranged
+    // files, complete-mode windowed state accumulated across them,
+    // foreachBatch parquet sink — and this row reads the sink back. The
+    // oracle is the plain windowed GROUP BY: equality proves the
+    // micro-batch execution path (source backlog planning, cross-batch
+    // state merge, sink commit) computes the batch answer.
+    Q("q_stream_exec_windowed", (s, d) =>
+      s.read.parquet(runStreamExec(s, d))
+        .orderBy("wstart_us", "event_type"),
+      // identical readout: the streaming execution must land exactly the
+      // batch windowed counts (no watermark → no split-dependent drops)
       """SELECT (epoch_us(ts) // 21600000000) * 21600000000 AS wstart_us,
                 event_type, CAST(count(*) AS BIGINT) AS n_events
-         FROM events GROUP BY 1, 2 ORDER BY wstart_us, event_type""",
+         FROM events GROUP BY 1, 2 ORDER BY wstart_us, event_type"""),
 
-    // append-mode replay: only windows FINALIZED by the final watermark
-    // (max event time, ms-truncated, minus the 1 h delay — Spark evicts
-    // window.end <= watermark, micros vs ms*1000) may appear in the sink
-    "q_stream_exec_append" ->
+    // The state-EVICTION gate (r12 verdict #1): runStreamExecAppend
+    // drives the same 4-micro-batch run through watermark + append mode;
+    // the sink accumulates each window exactly once, when the watermark
+    // finalizes it, and the oracle is the batch GROUP BY restricted to
+    // windows below the final watermark (max ts − 1 h, ms-truncated).
+    // Equality proves the production streaming shape — bounded state,
+    // monotone emission, watermark eviction — computes the right answer;
+    // StreamExecGateSpec additionally pins that state rows were REMOVED
+    // from the store and the unfinalized tail was withheld.
+    Q("q_stream_exec_append", (s, d) =>
+      s.read.parquet(runStreamExecAppend(s, d))
+        .orderBy("wstart_us", "event_type"),
+      // append-mode replay: only windows FINALIZED by the final watermark
+      // (max event time, ms-truncated, minus the 1 h delay — Spark evicts
+      // window.end <= watermark, micros vs ms*1000) may appear in the sink
       """WITH wm AS (
            SELECT (max(epoch_us(ts)) // 1000 - 3600000) * 1000 AS wm_us
            FROM events)
@@ -470,9 +435,28 @@ object StreamTwinQueries {
          WHERE (epoch_us(ts) // 21600000000) * 21600000000 + 21600000000
                  <= wm.wm_us
          GROUP BY 1, 2
-         ORDER BY wstart_us, event_type""",
+         ORDER BY wstart_us, event_type"""),
 
-    "q_stream_upsert_latest" ->
+    // Last-writer-wins upsert readout: Upsert.keepLatest — the EXACT
+    // reduction the streaming foreachBatch sink applies when merging each
+    // micro-batch into the keyed table (idempotent under batch replay by
+    // construction: re-merging the same rows re-picks the same winner).
+    // value quantized to exact integer cents at the leaf (gate discipline).
+    // Scale: one hash exchange on the key, per-key top-1 via row_number —
+    // no global sort, state lives in the table.
+    Q("q_stream_upsert_latest", (s, d) => {
+      val ev = Tables.events(s, d)
+        .select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"), col("value"))
+      graft.streaming.Upsert.keepLatest(ev, "user_id", "ts", "event_id")
+        .select(col("user_id"),
+          unix_micros(col("ts")).as("last_us"),
+          col("event_id").as("last_event_id"),
+          col("event_type").as("last_type"),
+          floor(col("value") * 100 + lit(0.5)).cast("long")
+            .as("last_value_cents"))
+        .orderBy(col("user_id"))
+    },
       """WITH r AS (
            SELECT user_id, epoch_us(ts) AS last_us, event_id, event_type,
                   value,
@@ -483,6 +467,6 @@ object StreamTwinQueries {
                 CAST(event_id AS BIGINT) AS last_event_id,
                 event_type AS last_type,
                 CAST(floor(value * 100 + 0.5) AS BIGINT) AS last_value_cents
-         FROM r WHERE rn = 1 ORDER BY user_id"""
+         FROM r WHERE rn = 1 ORDER BY user_id""")
   )
 }

@@ -173,1343 +173,6 @@ object TextQueries {
                         ORDER BY score_micro DESC, nid) AS BIGINT) AS rank
                FROM ag)"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // whitespace + BPE-ish token counting
-    "q_text_tokens" -> ((s, d) =>
-      docs(s, d).select(
-        col("doc_id"),
-        tokenCount(col("text")).cast("long").as("n_ws_tokens"),
-        bpeTokenCount(col("text")).cast("long").as("n_bpe_tokens"),
-        length(col("text")).cast("long").as("len_chars"))
-        .orderBy("doc_id")),
-
-    // quality scoring: stopword/punct ratios + combined [0,1] score
-    "q_text_quality" -> ((s, d) =>
-      docs(s, d).select(
-        col("doc_id"),
-        stopwordCount(col("text")).cast("long").as("n_stop"),
-        punctCount(col("text")).cast("long").as("n_punct"),
-        qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")),
-
-    // Flesch-style readability in exact integer micros: sentence count
-    // from terminator runs, whitespace words, vowel-group syllable proxy,
-    // then 206.835 − 1.015·(w/s) − 84.6·(syll/w) with each ratio as a
-    // defined integer division (guarded at 1) — a map-only curation
-    // signal, bitwise across engines
-    "q_text_readability" -> ((s, d) =>
-      docs(s, d).select(
-        col("doc_id"),
-        sentenceCount(col("text")).cast("long").as("n_sents"),
-        tokenCount(col("text")).cast("long").as("n_words"),
-        vowelGroupCount(col("text")).cast("long").as("n_syll"))
-        .withColumn("flesch_micro",
-          lit(206835000L)
-            - call_function("div", lit(1015000L) * col("n_words"),
-              greatest(lit(1L), col("n_sents")))
-            - call_function("div", lit(84600000L) * col("n_syll"),
-              greatest(lit(1L), col("n_words"))))
-        .orderBy("doc_id")),
-
-    // language-ID heuristic vs the fixture's labeled lang
-    // classifier evaluation: confusion matrix of the langid heuristic
-    // against the fixture's ground-truth label — the quality-measurement
-    // loop every heuristic filter needs
-    "q_text_langid_eval" -> ((s, d) =>
-      // staged scores (one filter() eval per profile per row; values
-      // identical to the inline langId) — opt r13, guide §4
-      withLangId(docs(s, d), col("text"), "lang_pred")
-        .select(col("lang"), col("lang_pred"))
-        .groupBy("lang", "lang_pred").agg(count(lit(1)).as("n"))
-        .orderBy("lang", "lang_pred")),
-
-    "q_text_langid" -> ((s, d) =>
-      withLangId(docs(s, d), col("text"), "lang_pred")
-        .select(col("doc_id"), col("lang"), col("lang_pred"))
-        .orderBy("doc_id")),
-
-    // md5 + polynomial rolling-hash fingerprints
-    "q_text_fingerprint" -> ((s, d) =>
-      docs(s, d).select(
-        col("doc_id"),
-        fingerprintMd5(col("text")).as("fp_md5"),
-        fingerprintRolling(col("text")).as("fp_roll"))
-        .orderBy("doc_id")),
-
-    // PII scrub: masked text + per-kind match counts (fixture text has no
-    // PII, so redaction must be the identity — the counts prove it ran)
-    "q_text_redact" -> ((s, d) =>
-      docs(s, d).withColumn("pii", piiCounts(col("text")))
-        .select(
-          col("doc_id"),
-          md5(redactPii(col("text"))).as("redacted_md5"),
-          col("pii.n_email").as("n_email"),
-          col("pii.n_url").as("n_url"),
-          col("pii.n_phone").as("n_phone"))
-        .orderBy("doc_id")),
-
-    // long-document chunking: 32-token windows, stride 24 (8-token overlap)
-    "q_text_chunks" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
-        posexplode(chunkTokens(col("text"), 32, 24)).as(Seq("chunk_idx", "chunk")))
-        .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
-          md5(col("chunk")).as("chunk_md5"),
-          size(split(col("chunk"), " ")).cast("long").as("n_chunk_tokens"))
-        .orderBy("doc_id", "chunk_idx")),
-
-    // content-stable train/val split: md5 bucket < 95 → train; the split
-    // never moves an example across runs or partitionings
-    "q_text_split" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
-        splitBucket(col("doc_id")).as("bucket"))
-        .withColumn("split", when(col("bucket") < 95, lit("train")).otherwise(lit("val")))
-        .orderBy("doc_id")),
-
-    // end-to-end corpus curation funnel, per source: quality gate →
-    // langid-vs-label gate → exact-dedup keep (min doc_id per
-    // fingerprint) — the composed pipeline a curation run actually
-    // executes, verified as one query
-    // budget-constrained corpus selection — the capstone composition of
-    // three subsystems: MinHash near-dup clusters (one representative per
-    // cluster: best quality, doc_id tie-break — per-key window state),
-    // the quality score, and a token budget (60% of the representatives'
-    // total). Global selection order = (quality desc, doc_id) through
-    // StableIds.rankAndCumSums — the running token sum never funnels
-    // through one window partition. The "which docs make the training
-    // cut" decision a curation pipeline executes after dedup + scoring.
-    "q_text_budget_select" -> ((s, d) => {
-      import graft.operators.StableIds
-      val q = docs(s, d).select(col("doc_id"),
-        qualityScore(col("text")).as("quality"),
-        tokenCount(col("text")).cast("long").as("n_tokens"))
-      val withCl = q
-        .join(DedupQueries.textClusterTable(s, d), Seq("doc_id"), "left")
-        .withColumn("cl", coalesce(col("cluster_id"), col("doc_id")))
-      val w = Window.partitionBy(col("cl"))
-        .orderBy(col("quality").desc, col("doc_id"))
-      val reps = withCl.withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select(col("doc_id"), col("quality"), col("n_tokens"))
-      val ranked = StableIds.rankAndCumSums(reps,
-        Seq(-col("quality"), col("doc_id")),
-        Seq("n_tokens" -> "cum_tokens"))
-      val budget = reps.agg(
-        mulDivWide(sum(col("n_tokens")), lit(3L), lit(5L)).as("budget"))
-      ranked.crossJoin(broadcast(budget))
-        .where(col("cum_tokens") <= col("budget"))
-        .select(col("doc_id"), col("n_tokens"), col("cum_tokens"),
-          col("budget"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_text_curate" -> ((s, d) => {
-      val base = withLangId(
-        docs(s, d)
-          .select(col("doc_id"), col("source"), col("lang"), col("n_chars"), col("text"))
-          .withColumn("quality", qualityScore(col("text"))),
-        col("text"), "pred") // staged scores — opt r13, guide §4
-      val surv = base.where(col("quality") >= 0.5 && col("pred") === col("lang"))
-        .withColumn("fp", fingerprintMd5(col("text")))
-      val kept = surv.withColumn("keep",
-          min(col("doc_id")).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("fp"))))
-        .where(col("doc_id") === col("keep"))
-      base.groupBy(col("source")).agg(
-          count(lit(1)).as("n_total"),
-          count(when(col("quality") >= 0.5, 1)).as("n_quality"),
-          count(when(col("quality") >= 0.5 && col("pred") === col("lang"), 1)).as("n_lang"))
-        .join(kept.groupBy(col("source")).agg(
-          count(lit(1)).as("n_kept"), sum(col("n_chars")).as("kept_chars")),
-          Seq("source"), "left")
-        .na.fill(0L, Seq("n_kept", "kept_chars"))
-        .orderBy("source")
-    }),
-
-    // contiguous sequence packing: 256-token bins in doc_id order via the
-    // distributed two-phase prefix sum (no single-partition window) —
-    // exact-mirrored by the oracle's running-window formulation. Token
-    // counts use the proven q_text_tokens formula on raw text (whitespace
-    // token count is invariant under normalization, and the r3 driver gate
-    // showed the oracle's regexp_replace-then-split combination is the one
-    // tokenization shape no passing query exercises — keep both sides on
-    // the exercised path).
-    "q_text_packing" -> ((s, d) => {
-      val withN = docs(s, d).select(col("doc_id"),
-        tokenCount(col("text")).cast("long").as("n_tokens"))
-      graft.operators.Packing.packByBudget(withN, col("doc_id"),
-          col("n_tokens"), budget = 256L)
-        .select("doc_id", "n_tokens", "bin")
-        .orderBy("doc_id")
-    }),
-
-    // end-of-pipeline sequence assembly: concatenate each packed bin's
-    // documents (doc_id order, newline-joined) into the actual training
-    // sequence — emitted as md5 + stats so the oracle verifies the exact
-    // assembled bytes without shipping them. In-bin order is made
-    // deterministic by sorting the collected (doc_id, text) structs
-    "q_text_pack_assemble" -> ((s, d) => {
-      val withN = docs(s, d).select(col("doc_id"), col("text"),
-        tokenCount(col("text")).cast("long").as("n_tokens"))
-      graft.operators.Packing.packByBudget(withN, col("doc_id"),
-          col("n_tokens"), budget = 256L)
-        .groupBy("bin")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("total_tokens"),
-          md5(array_join(transform(
-            array_sort(collect_list(struct(col("doc_id"), col("text")))),
-            e => e.getField("text")), "\n")).as("seq_md5"))
-        .orderBy("bin")
-    }),
-
-    // tokenizer-aware pack-and-shuffle EPOCH ASSEMBLER (r7 ask #7): the
-    // full pretraining batch-assembly composition in one operator chain —
-    //   1. leakage-free split on the CONTENT group (split bucket keyed on
-    //      md5(text), so byte-identical docs land in one split),
-    //   2. per-epoch deterministic shuffle: order key = md5("epoch<e>:" ||
-    //      doc_id) ++ zero-padded doc_id (the pad makes the key unique, so
-    //      the layout is total-order deterministic — no RNG state, any
-    //      executor count replays it),
-    //   3. Packing.packByBudget lays the shuffled stream into 512-token
-    //      bins (range-partitioned prefix sums — no global window),
-    //   4. manifest row per (epoch, bin): doc count, token mass, and the
-    //      md5 of the doc_id sequence in pack order — the artifact a
-    //      trainer consumes and the oracle verifies byte-for-byte.
-    "q_text_epoch_manifest" -> ((s, d) => {
-      val base = docs(s, d).select(col("doc_id"),
-          tokenCount(col("text")).cast("long").as("n_tokens"),
-          graft.text.TextFunctions.splitBucket(md5(col("text"))).as("bucket"))
-        .where(col("bucket") < 80)
-        .drop("bucket")
-      val perEpoch = (0L to 1L).map { e =>
-        val keyed = base.withColumn("okey",
-          concat(md5(concat(lit(s"epoch$e:"), col("doc_id").cast("string"))),
-            lpad(col("doc_id").cast("string"), 12, "0")))
-        graft.operators.Packing.packByBudget(keyed, col("okey"),
-            col("n_tokens"), budget = 512L)
-          .groupBy(col("bin"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_tokens")).as("total_tokens"),
-            md5(array_join(transform(
-              array_sort(collect_list(struct(col("okey"), col("doc_id")))),
-              x => x.getField("doc_id").cast("string")), ","))
-              .as("manifest_md5"))
-          .withColumn("epoch", lit(e))
-      }
-      perEpoch.reduce(_ unionByName _)
-        .select("epoch", "bin", "n_docs", "total_tokens", "manifest_md5")
-        .orderBy("epoch", "bin")
-    }),
-
-    // term burstiness (Church–Gale): variance-to-mean ratio of per-doc
-    // counts over ALL docs (zeros included via the closed form
-    // (N·Σc² − (Σc)²)/(N·Σc)) — bursty terms concentrate in few docs,
-    // uniform terms spread evenly; the signal separating topical terms
-    // from function words. Exact integer ppm; one (tok, doc) aggregate
-    // then vocab-sized arithmetic
-    "q_text_burstiness" -> ((s, d) => {
-      val perDoc = postings(s, d).groupBy(col("tok"), col("doc_id"))
-        .agg(count(lit(1)).as("c"))
-      val nDocs = docs(s, d).agg(count(lit(1)).as("nd"))
-      perDoc.groupBy(col("tok"))
-        .agg(sum(col("c")).as("sc"), sum(col("c") * col("c")).as("sc2"),
-          count(lit(1)).as("n_docs_with"))
-        .crossJoin(broadcast(nDocs))
-        // sc/sc2 are token-count sums; nd·sc2 and sc² are their squares —
-        // products built wide, numerator ≥ 0 by Cauchy–Schwarz
-        .select(col("tok"), col("n_docs_with"), col("sc").as("total"),
-          mulDivWide(wide(col("nd")) * wide(col("sc2"))
-              - wide(col("sc")) * wide(col("sc")),
-            lit(1000000L), wide(col("nd")) * wide(col("sc"))).as("vmr_ppm"))
-        .orderBy(col("total").desc, col("tok"))
-        .limit(20)
-    }),
-
-    // shard-boundary stitch detection: doc A's last m tokens equal doc
-    // B's first m — the signature of a document split across shard
-    // boundaries, found as one md5 equi-join of a suffix-hash table
-    // against a prefix-hash table (no text comparison crosses the wire).
-    // m is corpus-tuned: 3 on the random synthetic fixture; real split
-    // corpora use 32+ where a match is near-certain evidence
-    "q_text_stitch_pairs" -> ((s, d) => {
-      val t = docs(s, d)
-        .select(col("doc_id"), tokens(lower(col("text"))).as("toks"))
-        .where(size(col("toks")) >= 3)
-      val pre = t.select(col("doc_id").as("idb"),
-        md5(concat_ws(" ", slice(col("toks"), lit(1), lit(3)))).as("h"))
-      val suf = t.select(col("doc_id").as("ida"),
-        md5(concat_ws(" ", slice(col("toks"), lit(-3), lit(3)))).as("h"))
-      suf.join(pre, "h")
-        .where(col("ida") =!= col("idb"))
-        .select(col("ida"), col("idb"))
-        .orderBy("ida", "idb")
-    }),
-
-    // interpolated Kneser–Ney bigram LM with discount d = 3/4, as EXACT
-    // integer rationals: P(w|v) = max(c(v,w)−d,0)/c(v) + λ(v)·P_cont(w)
-    // over the common denominator 4·c(v)·N gives numerator
-    // max(4c−3,0)·N + 3·N₁₊(v·)·N₁₊(·w) — pure 64-bit integers, so the
-    // smoothed probabilities (ppm) are engine-exact with no ln/float
-    // surface at all. Top-3 continuations per context; the aggregates
-    // are one bigram shuffle plus joins on vocabulary-sized tables
-    "q_text_kn_lm" -> ((s, d) => {
-      val t = docs(s, d).select(tokens(lower(col("text"))).as("toks"))
-      val pairs = t.select(explode(
-          when(size(col("toks")) < 2,
-            array().cast("array<struct<ctx:string,nxt:string>>"))
-          .otherwise(transform(sequence(lit(0), size(col("toks")) - 2),
-            i => struct(element_at(col("toks"), i + 1).as("ctx"),
-              element_at(col("toks"), i + 2).as("nxt"))))).as("p"))
-        .select(col("p.ctx").as("ctx"), col("p.nxt").as("nxt"))
-      val big = pairs.groupBy(col("ctx"), col("nxt"))
-        .agg(count(lit(1)).as("cvw"))
-      val cv = pairs.groupBy(col("ctx")).agg(count(lit(1)).as("cv"))
-      val n1v = big.groupBy(col("ctx")).agg(count(lit(1)).as("n1v"))
-      val n1w = big.groupBy(col("nxt")).agg(count(lit(1)).as("n1w"))
-      val nn = big.agg(count(lit(1)).as("nn"))
-      val scored = big
-        .join(cv, "ctx").join(n1v, "ctx").join(n1w, "nxt")
-        .crossJoin(broadcast(nn))
-        .withColumn("p_kn_ppm", expr(
-          "(greatest(4 * cvw - 3, 0) * nn + 3 * n1v * n1w) * 1000000" +
-            " DIV (4 * cv * nn)"))
-      val w = Window.partitionBy(col("ctx"))
-        .orderBy(col("p_kn_ppm").desc, col("nxt"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= 3)
-        .select("ctx", "rank", "nxt", "cvw", "p_kn_ppm")
-        .orderBy("ctx", "rank")
-    }),
-
-    // vocabulary coverage curve: cumulative token mass of the top-k
-    // vocabulary, per rank — the Zipf audit that sizes a tokenizer
-    // vocabulary ("k tokens cover X% of the corpus"). The raw-token
-    // vocabulary is UNBOUNDED at corpus scale (whitespace tokens, not a
-    // fixed vocab), so rank + running sum come from the StableIds two-phase
-    // prefix scan (range-partition → per-partition offsets → map-side
-    // scan), not a global-ORDER-BY window. Integer ppm coverage
-    "q_text_vocab_coverage" -> ((s, d) => {
-      val cnts = postings(s, d).groupBy(col("tok"))
-        .agg(count(lit(1)).as("c"))
-      val tot = cnts.agg(sum(col("c")).as("t"))
-      graft.operators.StableIds.rankAndCumSum(cnts,
-          Seq(col("c").desc, col("tok")), "c", "rank", "cum")
-        .crossJoin(broadcast(tot))
-        .select(col("rank"), col("tok"), col("c"),
-          // cum is a token-count sum — wide path past ~9.2e12 tokens
-          ppmWide(col("cum"), col("t")).as("coverage_ppm"))
-        .orderBy("rank")
-    }),
-
-    // temperature-scaled mixing weights (α = 0.5): sample sources ∝
-    // √tokens — the standard rebalance that upweights small sources
-    // without letting the biggest dominate. √ is IEEE-correctly-rounded
-    // (bit-identical across engines); it is quantized to integer micro
-    // units AT THE LEAF (audited site, QuantBoundarySpec) so the shares
-    // and epoch factors are pure integer arithmetic. One aggregate over
-    // documents; everything else on the sources-sized table
-    // Waterfilling mixture allocation under availability caps — the
-    // budgeting step temperature/sqrt weighting cannot do: given a token
-    // budget B = ⌊0.9·total⌋ and per-source available tokens cap_i, find
-    // the level L with Σ min(cap_i, L) = B; sources below L are taken
-    // whole ("saturated" — their data is scarcer than the mixture wants),
-    // the rest contribute exactly ⌊L⌋. Closed form over the BOUNDED
-    // sources domain (one corpus-sized token aggregate, then an
-    // ≤m-row window): ascending caps, saturated iff
-    // c_k·(m−k) ≤ B − S_k (the prefix property is exact — f(k) is
-    // non-increasing), L = (B − S_t) DIV (m − t). At sf0.01 the budget
-    // saturates exactly two sources, so BOTH branches gate. Floor-level
-    // semantics (Σalloc ≤ B by < m−t tokens) are the cross-engine
-    // contract; level = −1 flags the degenerate all-saturated case.
-    "q_text_mix_waterfill" -> ((s, d) =>
-      waterfill(
-        docs(s, d).groupBy(col("source"))
-          .agg(sum(tokenCount(col("text")).cast("long")).as("cap")))),
-
-    "q_text_mix_temperature" -> ((s, d) => {
-      val cnt = docs(s, d).groupBy(col("source"))
-        .agg(sum(tokenCount(col("text")).cast("long")).as("n_tokens"))
-      val scaled = cnt.withColumn("s_micro",
-        floor(sqrt(col("n_tokens").cast("double")) * 1000000.0 + 0.5)
-          .cast("long"))
-      val tot = scaled.agg(sum(col("s_micro")).as("ts"),
-        count(lit(1)).as("nsrc"))
-      scaled.crossJoin(broadcast(tot))
-        // s_micro is a √tokens micro-sum — wide path at the token scale;
-        // the epoch factor divides two ≤1e9 quantities, so IT stays int64
-        .withColumn("weight_ppm", ppmWide(col("s_micro"), col("ts")))
-        // repetition factor vs a uniform target share, in milli-epochs;
-        // greatest(1, …) guards a source whose share rounds below 1 ppm
-        // (Spark DIV yields NULL on /0, DuckDB // raises — the guard
-        // keeps the two engines identical on degenerate skew)
-        .select(col("source"), col("n_tokens"), col("weight_ppm"),
-          expr("(1000000 DIV nsrc) * 1000 DIV greatest(1L, weight_ppm)")
-            .as("epoch_milli"))
-        .orderBy("source")
-    }),
-
-    // pairwise source drift: total-variation distance between per-source
-    // unigram distributions in exact integer ppm — the mix-monitoring
-    // metric a corpus pipeline tracks across ingestion sources. One
-    // shuffle over the token instances; the dense (source × vocab) grid
-    // and the pair join run on tiny aggregate tables. Integer ppm
-    // per-token probabilities keep the whole metric float-free
-    "q_text_source_divergence" -> ((s, d) => {
-      val toks = docs(s, d).select(col("source"),
-        explode(tokens(lower(col("text")))).as("tok"))
-      val cnt = toks.groupBy(col("source"), col("tok"))
-        .agg(count(lit(1)).as("c"))
-      val tot = toks.groupBy(col("source")).agg(count(lit(1)).as("t"))
-      val grid = tot.select(col("source"), col("t"))
-        .crossJoin(toks.select(col("tok")).distinct())
-        .join(cnt, Seq("source", "tok"), "left")
-        .na.fill(0L, Seq("c"))
-        .select(col("source"), col("tok"),
-          // c is a token count (sum over rows) — wide path
-          ppmWide(col("c"), col("t")).as("ppm"))
-      grid.as("a").join(grid.as("b"),
-          col("a.tok") === col("b.tok") && col("a.source") < col("b.source"))
-        .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
-        .agg(sum(abs(col("a.ppm") - col("b.ppm"))).as("l1"))
-        .select(col("src_a"), col("src_b"), expr("l1 DIV 2").as("tv_ppm"))
-        .orderBy("src_a", "src_b")
-    }),
-
-    // Simpson diversity index per source: D = Σ nᵢ(nᵢ−1) / (N(N−1)) over
-    // the unigram distribution — the probability two random tokens
-    // coincide (the concentration dual of entropy; low D = diverse
-    // vocabulary). Exact integer ppb through the wide path — nᵢ² sums are
-    // unbounded. One token shuffle; per-source rollup is vocabulary-sized
-    "q_text_simpson" -> ((s, d) => {
-      val toks = docs(s, d).select(col("source"),
-        explode(tokens(lower(col("text")))).as("tok"))
-      toks.groupBy(col("source"), col("tok")).agg(count(lit(1)).as("c"))
-        .groupBy(col("source"))
-        .agg(sum(col("c")).as("n_tokens"), count(lit(1)).as("vocab"),
-          sum(wide(col("c")) * wide(col("c") - 1L)).as("num"))
-        .select(col("source"), col("n_tokens"), col("vocab"),
-          mulDivWide(col("num"), lit(1000000000L),
-            wide(col("n_tokens")) * wide(col("n_tokens") - 1L))
-            .as("simpson_ppb"))
-        .orderBy("source")
-    }),
-
-    // winnowing fingerprints (Schleimer et al., SIGMOD'03): hash every
-    // token 3-gram, keep the MIN hash of each 4-window of consecutive
-    // gram positions — guarantees any shared run of ≥ 6 tokens yields a
-    // shared fingerprint, at ~1/4 the fingerprint density of full
-    // shingling. Pairs sharing ≥ 5 selected fingerprints are the
-    // plagiarism/near-copy candidates. Per-doc windows (two window
-    // passes on one doc_id shuffle), then the df-capped pair join
-    // discipline of the dedup family
-    "q_text_winnow_pairs" -> ((s, d) => {
-      // fingerprints are consumed three times (df table + both self-join
-      // sides): materialize the two-window-pass derivation once; the hot
-      // set is tiny and broadcasts so the anti-join never shuffles the
-      // fingerprint table (opt r13, guide §2.4/§3.1)
-      val fps = graft.text.Winnowing.fingerprints(postings(s, d),
-        col("doc_id"), col("pos"), col("tok"), k = 3, w = 4)
-        .localCheckpoint()
-      // corpus-relative hot-fingerprint cap (0.2% of docs, floored at 8):
-      // the absolute df > 8 cut went vacuous at sf1 — every fingerprint's
-      // df ≥ 10 under the verbatim 10× fixture, so all were excluded
-      // (same class as the dedup MaxDf scale bug, same fix)
-      val n = docs(s, d).agg(count(lit(1)).as("n"))
-      // hot is a data-scaled aggregate (top ~0.2% of the fingerprint
-      // vocabulary): gate the anti-join's broadcast on its measured row
-      // count — shuffle_hash past the ceiling instead of riding a bare
-      // hint into the broadcast hard limit (opt r14, VERDICT r13 #2);
-      // the gate's count materializes the lazy checkpoint
-      val hot = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-        .crossJoin(broadcast(n))
-        .where(col("df") > greatest(lit(8L), expr("n DIV 500"))).select("fp")
-        .localCheckpoint(false)
-      val kept = fps.join(graft.util.BroadcastGate.counted(hot),
-        Seq("fp"), "left_anti")
-      kept.as("a").join(kept.as("b"),
-          col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"))
-        .agg(count(lit(1)).as("shared_fps"))
-        .where(col("shared_fps") >= 5)
-        .orderBy("ida", "idb")
-    }),
-
-    // content-defined chunking: a token ends a chunk when its md5-derived
-    // hash ≡ 0 (mod 16) — boundaries depend only on content, so an
-    // insertion resynchronizes within one expected chunk (the property
-    // fixed-size chunking lacks, and why CDC is the dedup granularity for
-    // drifting corpora). Expected chunk length = 16 tokens. Chunk ids are
-    // an exclusive running boundary count per doc (window over the
-    // doc_id shuffle — parallel across docs); chunks emit count + md5 so
-    // the oracle verifies exact assembled content
-    "q_text_cdc_chunks" -> ((s, d) => {
-      val w = Window.partitionBy("doc_id").orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      postings(s, d)
-        .withColumn("b",
-          (pmod(conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long"),
-            lit(16L)) === 0).cast("long"))
-        .withColumn("chunk_id", coalesce(sum(col("b")).over(w), lit(0L)))
-        .groupBy(col("doc_id"), col("chunk_id"))
-        .agg(count(lit(1)).as("n_tokens"),
-          md5(array_join(transform(
-            array_sort(collect_list(struct(col("pos"), col("tok")))),
-            e => e.getField("tok")), " ")).as("chunk_md5"))
-        .orderBy("doc_id", "chunk_id")
-    }),
-
-    // chunk-level dedup: fingerprint every training chunk and keep the
-    // lowest (doc, idx) occurrence per duplicate group — the dedup
-    // granularity that actually matters for an LLM mix (boilerplate
-    // paragraphs recur across otherwise-distinct documents). Composite
-    // numeric keep_key = doc_id*1e6 + chunk_idx is the deterministic
-    // cross-engine "first wins" tiebreak.
-    "q_text_chunk_dedup" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
-          posexplode(chunkTokens(col("text"), 32, 24)).as(Seq("chunk_idx", "chunk")))
-        .groupBy(md5(col("chunk")).as("chunk_md5"))
-        .agg(count(lit(1)).as("n_copies"),
-          countDistinct(col("doc_id")).as("n_docs"),
-          min(col("doc_id") * 1000000 + col("chunk_idx")).as("keep_key"))
-        .where(col("n_copies") > 1)
-        .orderBy("chunk_md5")),
-
-    // benchmark decontamination: corpus docs sharing any token 3-gram with
-    // the eval slice (doc_id % 41 = 0). Eval n-grams broadcast; the corpus
-    // side never shuffles before the per-doc aggregation. Both slices come
-    // from ONE table, so the n-gram projection is built once and cached
-    // (QueryCaches) instead of tokenizing the documents per side
-    "q_text_decontaminate" -> ((s, d) => {
-      val ng = QueryCaches.memo(s, d, "decontam_ngrams") {
-        graft.text.Decontaminate.ngramTable(
-          docs(s, d), col("doc_id"), col("text"), n = 3)
-      }
-      graft.text.Decontaminate.contaminationOnNgrams(
-          ng.where(col("doc_id") % 41 =!= 0),
-          ng.where(col("doc_id") % 41 === 0)
-            .withColumnRenamed("doc_id", "__eval_id"))
-        .orderBy("doc_id")
-    }),
-
-    // do the cheap heuristic and the LM signal agree? Pearson correlation
-    // between the quality score and per-token surprisal across the
-    // corpus — the meta-evaluation that decides whether a fast filter
-    // can stand in for an expensive one. Both signals quantize to
-    // integers (identical expression trees → identical doubles → safe
-    // floors), the moments accumulate exactly, and the correlation is
-    // one fixed-shape IEEE expression over those sums
-    "q_text_signal_corr" -> ((s, d) => {
-      val q = docs(s, d).select(col("doc_id"),
-        floor(qualityScore(col("text")) * 1000000.0 + 0.5).cast("long")
-          .as("x"))
-      val sur = graft.text.UnigramLm.surprisal(docs(s, d), col("doc_id"),
-        col("text"))
-        .select(col("doc_id"),
-          expr("surprisal_micro DIV greatest(1L, n_tokens)").as("y"))
-      q.join(sur, "doc_id")
-        .agg(count(lit(1)).as("n"),
-          sum(col("x").cast("decimal(38,0)")).cast("double").as("sx"),
-          sum(col("y").cast("decimal(38,0)")).cast("double").as("sy"),
-          sum((col("x") * col("x")).cast("decimal(38,0)")).cast("double").as("sxx"),
-          sum((col("y") * col("y")).cast("decimal(38,0)")).cast("double").as("syy"),
-          sum((col("x") * col("y")).cast("decimal(38,0)")).cast("double").as("sxy"))
-        .select(col("n"),
-          ((col("n").cast("double") * col("sxy") - col("sx") * col("sy")) /
-            (sqrt(col("n").cast("double") * col("sxx") - col("sx") * col("sx")) *
-              sqrt(col("n").cast("double") * col("syy") - col("sy") * col("sy"))))
-            .as("pearson_r"))
-    }),
-
-    // contamination incidence by source — the rollup that tells you
-    // WHICH ingestion feed is leaking eval data (per-doc verdicts exist
-    // in q_text_decontaminate; operations needs the source-level rate).
-    // Reuses the memoized n-gram projection; docs with zero hits count
-    // through the left join
-    "q_text_contamination_by_source" -> ((s, d) => {
-      val ng = QueryCaches.memo(s, d, "decontam_ngrams") {
-        graft.text.Decontaminate.ngramTable(
-          docs(s, d), col("doc_id"), col("text"), n = 3)
-      }
-      val hits = graft.text.Decontaminate.contaminationOnNgrams(
-        ng.where(col("doc_id") % 41 =!= 0),
-        ng.where(col("doc_id") % 41 === 0)
-          .withColumnRenamed("doc_id", "__eval_id"))
-        .select(col("doc_id"), lit(1L).as("hit"))
-      docs(s, d).where(col("doc_id") % 41 =!= 0)
-        .select(col("doc_id"), col("source"))
-        .join(hits, Seq("doc_id"), "left")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          count(col("hit")).as("n_contaminated"))
-        .withColumn("rate_ppm",
-          expr("n_contaminated * 1000000 DIV n_docs"))
-        .orderBy("source")
-    }),
-
-    // chunk-level novelty vs an already-ingested reference corpus
-    // (src0/src1): anti-join on chunk fingerprint — per source, how many
-    // training chunks are genuinely new
-    "q_dedup_novelty" -> ((s, d) => {
-      val chunks = docs(s, d)
-        .select(col("doc_id"), col("source"),
-          explode(chunkTokens(col("text"), 32, 24)).as("chunk"))
-        .select(col("doc_id"), col("source"), md5(col("chunk")).as("cmd5"))
-      val refSrc = Seq("src0", "src1")
-      val ref = chunks.where(col("source").isin(refSrc: _*))
-      val rest = chunks.where(!col("source").isin(refSrc: _*))
-      val novel = graft.dedup.Dedup.novelAgainst(rest, ref, "cmd5")
-      rest.groupBy("source").agg(count(lit(1)).as("n_chunks"))
-        .join(novel.groupBy("source").agg(count(lit(1)).as("n_novel")),
-          Seq("source"), "left")
-        .na.fill(0L, Seq("n_novel"))
-        .orderBy("source")
-    }),
-
-    // Gopher-style repetition signals: duplicate-token fraction, most
-    // frequent bigram and its share, mean token length — the repetition
-    // filters a pretraining pipeline runs per document
-    "q_text_gopher" -> ((s, d) => {
-      val base = docs(s, d).select(col("doc_id"),
-        tokens(lower(col("text"))).as("toks"))
-        .select(col("doc_id"),
-          size(col("toks")).cast("long").as("n_tokens"),
-          size(array_distinct(col("toks"))).cast("long").as("n_distinct"),
-          aggregate(col("toks"), lit(0L), (acc, t) => acc + length(t)).as("char_sum"),
-          col("toks"))
-      val bg = base.select(col("doc_id"), col("n_tokens"),
-          explode(when(size(col("toks")) < 2, array().cast("array<string>"))
-            .otherwise(transform(sequence(lit(0), size(col("toks")) - 2),
-              i => concat_ws(" ", element_at(col("toks"), i + 1),
-                element_at(col("toks"), i + 2))))).as("bg"))
-        .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("cnt"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("cnt").desc, col("bg"))
-      val top = bg.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-        .select(col("doc_id"), col("bg").as("top_bigram"), col("cnt").as("top_cnt"))
-      base.join(top, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_tokens"),
-          ((col("n_tokens") - col("n_distinct")).cast("double") /
-            greatest(col("n_tokens"), lit(1L)).cast("double")).as("dup_token_frac"),
-          col("char_sum").cast("double")
-            ./(greatest(col("n_tokens"), lit(1L)).cast("double")).as("mean_tok_len"),
-          col("top_bigram"),
-          (col("top_cnt").cast("double") /
-            greatest(col("n_tokens") - 1, lit(1L)).cast("double")).as("top_bigram_frac"))
-        .orderBy("doc_id")
-    }),
-
-    // BM25 sparse retrieval: first 10 docs as query bags, top-5 corpus
-    // matches each, stop-terms cut at df > 30% of the corpus. The idf is
-    // the only float (one audited ln per distinct df, quantized to integer
-    // micro-units); every other score factor is an exact integer rational,
-    // so no engine-version float drift can flip a score
-    "q_text_bm25" -> ((s, d) => {
-      val all = docs(s, d)
-      // query bag: the 10 lowest-id docs carrying ≥1 informative
-      // (sub-30%-df) term. A fixed first-10 bag is fixture luck — on the
-      // 31-token vocabulary only one term clears the stop cut, and no
-      // low-id doc carries it at sf0.1/sf1, which made this gate row
-      // silently vacuous there (caught by the sf1 VACUOUS status).
-      val n = all.agg(count(lit(1)).as("n"))
-      val docTok = postings(s, d).select(col("doc_id"), col("tok")).distinct()
-      val nonstop = docTok.groupBy("tok").agg(count(lit(1)).as("df"))
-        .crossJoin(broadcast(n))
-        .where(col("df") * 1000 <= col("n") * 300).select("tok")
-      val qids = docTok.join(broadcast(nonstop), "tok")
-        .select("doc_id").distinct().orderBy("doc_id").limit(10)
-      graft.text.Bm25.topK(all, col("doc_id"), col("text"),
-          all.join(broadcast(qids), "doc_id"), col("doc_id"), col("text"),
-          k = 5, maxDfPermille = 300)
-        .orderBy("qid", "rank")
-    }),
-
-    // retrieval-quality eval: graded nDCG@10 + MRR over the BM25 ranking
-    // (the metric pair every retrieval stack reports). Ground truth is
-    // deterministic metadata relevance — same source+lang = 3, same
-    // source = 2, same lang = 1 — and IDCG is the LOCAL ideal (the
-    // retrieved list reordered by grade), the standard library behavior
-    // when corpus-wide truth is unknown. The 10 discount values
-    // 1/log2(rank+1) quantize to micro at the leaf (rank ≤ 10 — a
-    // 10-value domain), so DCG/IDCG are exact integer sums and nDCG is
-    // one ppm integer division. MRR counts source-grade hits (grade ≥ 2)
-    "q_text_retrieval_eval" -> ((s, d) => {
-      val all = docs(s, d)
-      val n = all.agg(count(lit(1)).as("n"))
-      val docTok = postings(s, d).select(col("doc_id"), col("tok")).distinct()
-      val nonstop = docTok.groupBy("tok").agg(count(lit(1)).as("df"))
-        .crossJoin(broadcast(n))
-        .where(col("df") * 1000 <= col("n") * 300).select("tok")
-      val qids = docTok.join(broadcast(nonstop), "tok")
-        .select("doc_id").distinct().orderBy("doc_id").limit(10)
-      val ranked = graft.text.Bm25.topK(all, col("doc_id"), col("text"),
-        all.join(broadcast(qids), "doc_id"), col("doc_id"), col("text"),
-        k = 10, maxDfPermille = 300)
-      val meta = all.select(col("doc_id"), col("source"), col("lang"))
-      def disc(r: org.apache.spark.sql.Column) =
-        floor(log(lit(2.0)) / log((r + lit(1L)).cast("double"))
-          * lit(1000000.0) + lit(0.5)).cast("long")
-      val iw = Window.partitionBy(col("qid"))
-        .orderBy(col("gain").desc, col("nid"))
-      ranked
-        .join(meta.select(col("doc_id").as("qid"), col("source").as("qsrc"),
-          col("lang").as("qlang")), "qid")
-        .join(meta.select(col("doc_id").as("nid"), col("source").as("nsrc"),
-          col("lang").as("nlang")), "nid")
-        .withColumn("grade",
-          when(col("qsrc") === col("nsrc") && col("qlang") === col("nlang"),
-            3L).when(col("qsrc") === col("nsrc"), 2L)
-            .when(col("qlang") === col("nlang"), 1L).otherwise(0L))
-        .withColumn("gain",
-          when(col("grade") === 3L, 7L).when(col("grade") === 2L, 3L)
-            .when(col("grade") === 1L, 1L).otherwise(0L))
-        .withColumn("irank", row_number().over(iw).cast("long"))
-        .withColumn("dcg_term", col("gain") * disc(col("rank")))
-        .withColumn("idcg_term", col("gain") * disc(col("irank")))
-        .groupBy("qid")
-        .agg(count(lit(1)).as("n_ranked"),
-          sum("dcg_term").as("dcg_micro"),
-          sum("idcg_term").as("idcg_micro"),
-          coalesce(min(when(col("grade") >= 2L, col("rank"))), lit(0L))
-            .as("first_rel_rank"))
-        .withColumn("ndcg_ppm",
-          when(col("idcg_micro") > 0L,
-            expr("dcg_micro * 1000000 DIV idcg_micro")).otherwise(0L))
-        .withColumn("rr_ppm",
-          when(col("first_rel_rank") > 0L,
-            expr("1000000 DIV first_rel_rank")).otherwise(0L))
-        .orderBy("qid")
-    }),
-
-    // bigram next-token statistics: top-3 continuations per context token
-    // — the corpus-level conditional distribution a tokenizer/LM data
-    // audit inspects (and the n-gram LM building block)
-    "q_text_ngram_lm" -> ((s, d) => {
-      val t = docs(s, d).select(tokens(lower(col("text"))).as("toks"))
-      val pairs = t.select(explode(
-          when(size(col("toks")) < 2,
-            array().cast("array<struct<ctx:string,nxt:string>>"))
-          .otherwise(transform(sequence(lit(0), size(col("toks")) - 2),
-            i => struct(element_at(col("toks"), i + 1).as("ctx"),
-              element_at(col("toks"), i + 2).as("nxt"))))).as("p"))
-        .select(col("p.ctx").as("ctx"), col("p.nxt").as("nxt"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("ctx")).orderBy(col("cnt").desc, col("nxt"))
-      pairs.groupBy("ctx", "nxt").agg(count(lit(1)).as("cnt"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= 3)
-        .orderBy("ctx", "rank")
-    }),
-
-    // unigram-LM surprisal (perplexity-proxy quality filter): per-token
-    // −ln p(t) in integer micro-nats summed per doc — order-independent
-    "q_text_surprisal" -> ((s, d) =>
-      graft.text.UnigramLm.surprisal(docs(s, d), col("doc_id"), col("text"))
-        .orderBy("doc_id")),
-
-    // word2vec-style negative-sampling table: weights ∝ count^0.75 (the
-    // unigram smoothing that keeps frequent words from dominating the
-    // contrastive draw). pow quantizes at the leaf per distinct count (a
-    // vocabulary-sized input set — same audit argument as the √ mix
-    // weights) and shares normalize by exact integer division
-    "q_text_neg_sampling" -> ((s, d) => {
-      val cnt = postings(s, d).groupBy("tok").agg(count(lit(1)).as("c"))
-      val w = cnt.withColumn("w_micro",
-        floor(pow(col("c").cast("double"), 0.75) * 1000000.0 + 0.5)
-          .cast("long"))
-      w.crossJoin(broadcast(w.agg(sum("w_micro").as("tw"))))
-        .select(col("tok"), col("c"), col("w_micro"),
-          // w_micro ~ 1e6·c^0.75 — a count-derived micro sum; wide path
-          ppmWide(col("w_micro"), col("tw")).as("draw_ppm"))
-        .orderBy(col("draw_ppm").desc, col("tok"))
-        .limit(20)
-    }),
-
-    // tokenizer fertility: BPE-ish tokens per whitespace word, by
-    // language — the compute-cost metric behind tokenizer choice (a
-    // language with fertility 2× pays 2× the sequence length for the
-    // same text). Exact integer ppm over the summed counts
-    "q_text_fertility" -> ((s, d) =>
-      docs(s, d).groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(tokenCount(col("text")).cast("long")).as("ws_tokens"),
-          sum(bpeTokenCount(col("text")).cast("long")).as("bpe_tokens"))
-        .withColumn("fertility_ppm",
-          expr("bpe_tokens * 1000000 DIV ws_tokens"))
-        .orderBy("lang")),
-
-    // source vocabulary-overlap matrix: pairwise Jaccard of the sources'
-    // vocabularies — the corpus-relatedness map (which sources are
-    // near-copies, which bring genuinely new words). One inverted join
-    // on the term (the same candidate shape as the dedup family), pair
-    // counts + degrees, exact ppm
-    "q_text_vocab_overlap" -> ((s, d) => {
-      val sv = postings(s, d)
-        .join(docs(s, d).select(col("doc_id"), col("source")), "doc_id")
-        .select(col("source"), col("tok")).distinct()
-      val deg = sv.groupBy("source").agg(count(lit(1)).as("v"))
-      val pairs = sv.as("a").join(sv.as("b"),
-          col("a.tok") === col("b.tok") && col("a.source") < col("b.source"))
-        .groupBy(col("a.source").as("sa"), col("b.source").as("sb"))
-        .agg(count(lit(1)).as("common"))
-      pairs
-        .join(deg.select(col("source").as("sa"), col("v").as("va")), "sa")
-        .join(deg.select(col("source").as("sb"), col("v").as("vb")), "sb")
-        .select(col("sa"), col("sb"), col("common"),
-          expr("common * 1000000 DIV (va + vb - common)").as("jaccard_ppm"))
-        .orderBy(col("jaccard_ppm").desc, col("sa"), col("sb"))
-        .limit(20)
-    }),
-
-    // corpus-level LM quality: mean per-token surprisal by source (the
-    // perplexity proxy rolled up to the mixture-weighting granularity) —
-    // integer micro-nats per token via one exact division over the
-    // summed doc surprisals
-    "q_text_ppl_by_source" -> ((s, d) =>
-      graft.text.UnigramLm.surprisal(docs(s, d), col("doc_id"), col("text"))
-        .join(docs(s, d).select(col("doc_id"), col("source")), "doc_id")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
-          expr("sum(surprisal_micro) DIV sum(n_tokens)")
-            .as("avg_surprisal_micro"))
-        .orderBy("source")),
-
-    // DSIR data selection (Xie et al. 2023): importance-resample the raw
-    // corpus toward a target distribution (here the `en` stratum stands
-    // in for the trusted corpus) via hashed-ngram log-likelihood-ratio
-    // weights — top-k selection with deterministic (weight, doc_id)
-    // tiebreaks. The lr table is 4096 broadcast rows at ANY corpus size;
-    // scoring is one map-side join + per-doc integer sum (graft.text.Dsir)
-    "q_text_dsir_select" -> ((s, d) => {
-      val w = dsirWeights(s, d)
-      w.join(docs(s, d).select("doc_id", "source", "lang"), "doc_id")
-        .select(col("doc_id"), col("source"), col("lang"),
-          col("n_feats"), col("weight_micro"))
-        .orderBy(col("weight_micro").desc, col("doc_id"))
-        .limit(100)
-    }),
-
-    // The documented web-scale DSIR degradation, ON the gate: the same
-    // selection computed through Dsir.weights' SHUFFLE branch
-    // (broadcastCeiling below B forces the hinted shuffle-hash scoring
-    // join — the plan a B = 2^28+ web-scale run uses when the lr table
-    // outgrows a broadcast). Values are branch-invariant by
-    // construction (DsirSpec pins bit-equality and the plan
-    // difference); hash-equality with the SAME oracle as
-    // q_text_dsir_select makes the degradation path continuously
-    // oracle-gated, not just spec'd. Not memoized with the broadcast
-    // row on purpose — sharing the memo would gate one branch twice.
-    "q_text_dsir_select_shuffle" -> ((s, d) => {
-      val w = QueryCaches.memo(s, d, "dsir_weights_shuffle") {
-        graft.text.Dsir.weights(docs(s, d), col("doc_id"), col("text"),
-          col("lang") === "en", buckets = 4096, broadcastCeiling = 1024)
-      }
-      w.join(docs(s, d).select("doc_id", "source", "lang"), "doc_id")
-        .select(col("doc_id"), col("source"), col("lang"),
-          col("n_feats"), col("weight_micro"))
-        .orderBy(col("weight_micro").desc, col("doc_id"))
-        .limit(100)
-    }),
-
-    // DSIR distribution shift: what the selector thinks of each source —
-    // per-source feature mass and summed importance weight (negative =
-    // the source reads unlike the target). Sum + count, no division, so
-    // the row is exact-integer; zero-token docs join as 0-weight
-    "q_text_dsir_shift" -> ((s, d) =>
-      docs(s, d).select("doc_id", "source")
-        .join(dsirWeights(s, d), Seq("doc_id"), "left")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(coalesce(col("n_feats"), lit(0L))).as("feat_count"),
-          sum(coalesce(col("weight_micro"), lit(0L))).as("weight_sum_micro"))
-        .orderBy("source")),
-
-    // DSIR resampling step — Gumbel-top-k: sampling k docs WITHOUT
-    // replacement with probability ∝ w(x) is exactly "top-k by
-    // log w(x) + Gumbel noise" (the Gumbel-max trick the DSIR paper
-    // uses), which distributes as one TakeOrdered — no sequential draws,
-    // no rejection loop. Noise is md5-derived (u=(h+1)/(2^52+1), key =
-    // weight_micro + floor(−ln(−ln u)·1e6 + 0.5)) so the "random" sample
-    // is bitwise reproducible cross-engine and across reruns/layouts
-    "q_text_dsir_gumbel" -> ((s, d) => {
-      val h = conv(substring(md5(concat(lit("gumbel:"),
-        col("doc_id").cast("string"))), 1, 13), 16, 10).cast("long")
-      val u = (h + 1L).cast("double") / lit(4503599627370497.0) // 2^52+1
-      dsirWeights(s, d)
-        .join(docs(s, d).select("doc_id", "source"), "doc_id")
-        .withColumn("gumbel_micro",
-          floor(-log(-log(u)) * lit(1000000.0) + lit(0.5)).cast("long"))
-        .withColumn("key_micro", col("weight_micro") + col("gumbel_micro"))
-        .select("doc_id", "source", "weight_micro", "gumbel_micro",
-          "key_micro")
-        .orderBy(col("key_micro").desc, col("doc_id"))
-        .limit(50)
-    }),
-
-    // fuzzy vocabulary linking: edit-distance ≤ 2 word pairs via FastSS
-    // deletion-neighborhood blocking + exact levenshtein verify. The
-    // oracle computes ALL pairs — set equality proves the blocking's
-    // full-recall theorem held
-    "q_text_fuzzy_join" -> ((s, d) => {
-      val vocab = docs(s, d)
-        .select(explode(tokens(lower(col("text")))).as("w")).distinct()
-      graft.text.FuzzyJoin.editDistancePairs2(vocab, col("w"))
-        .orderBy("wa", "wb")
-    }),
-
-    // exact corpus length quantiles WITHOUT a global sort: aggregate to a
-    // count-per-value histogram (domain-bounded — distinct token counts,
-    // not rows), one running sum over the tiny ordered domain, then pick
-    // the smallest value whose cumulative count reaches ceil(q·N)
-    // (percentile_disc). The scale pattern for exact order statistics
-    // over 100 TB: rows aggregate map-side; only the value domain sorts
-    "q_text_len_quantiles" -> ((s, d) => {
-      val n = docs(s, d).select(tokenCount(col("text")).cast("long").as("v"))
-      val hist = n.groupBy("v").agg(count(lit(1)).as("cnt"))
-      val w = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      def pick(q: Double, name: String) =
-        min(when(col("cum") >= ceil(col("total") * lit(q)).cast("long"),
-          col("v"))).as(name)
-      hist.withColumn("cum", sum(col("cnt")).over(w))
-        .crossJoin(broadcast(n.agg(count(lit(1)).as("total"))))
-        .agg(pick(0.1, "p10"), pick(0.5, "p50"),
-          pick(0.9, "p90"), pick(0.99, "p99"))
-    }),
-
-    // count-min sketch: 4×1024 integer-counter sketch of the token
-    // stream, point estimates for the 20 most frequent tokens next to
-    // their true counts — md5-derived buckets and exact counters make
-    // the sketch itself bitwise cross-engine, not just within ε
-    "q_text_countmin" -> ((s, d) => {
-      val toks = docs(s, d).select(explode(tokens(lower(col("text")))).as("tok"))
-      val sk = graft.operators.CountMin.sketch(toks, col("tok"), d = 4, w = 1024)
-      val truth = toks.groupBy("tok").agg(count(lit(1)).as("true_cnt"))
-        .orderBy(col("true_cnt").desc, col("tok")).limit(20)
-      val est = graft.operators.CountMin.estimate(
-        sk, truth.select(col("tok")), col("tok"), d = 4, w = 1024)
-      truth.join(est.withColumnRenamed("v", "tok"), "tok")
-        .select("tok", "true_cnt", "est")
-        .orderBy(col("true_cnt").desc, col("tok"))
-    }),
-
-    // exact heavy hitters over token bigrams via mergeable Misra–Gries +
-    // candidate recount (operators/HeavyHitters): bounded O(capacity)
-    // state per task in pass 1, broadcast-semi-join recount in pass 2 —
-    // output provably identical to the oracle's plain groupBy + HAVING
-    // (capacity >= k recall guarantee). Bigrams derive map-side from the
-    // token array (zip_with over two slices — no positional self-join)
-    "q_text_heavy_hitters" -> ((s, d) => {
-      val toks = tokens(lower(col("text")))
-      val bigrams = docs(s, d).select(
-        explode(when(size(toks) >= 2,
-            zip_with(slice(toks, lit(1), size(toks) - 1), slice(toks, lit(2), size(toks) - 1),
-              (a, b) => concat_ws(" ", a, b)))
-          .otherwise(array().cast("array<string>"))).as("bg"))
-      graft.operators.HeavyHitters.exact(bigrams, col("bg"), k = 900, capacity = 1024)
-    }),
-
-    // tokenizer-vocabulary coverage: per doc, the fraction of tokens
-    // outside the corpus top-100 vocabulary (OOV rate) — the coverage
-    // audit run when sizing a vocabulary. The vocab is tiny and
-    // BROADCAST; empty docs contribute no rows (no token instances)
-    "q_text_oov_rate" -> ((s, d) => {
-      val toks = docs(s, d).select(col("doc_id"),
-        explode(tokens(lower(col("text")))).as("tok"))
-      val vocab = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("tok")).limit(100)
-        .select(col("tok"), lit(1).as("__in"))
-      toks.join(broadcast(vocab), Seq("tok"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"),
-          count(when(col("__in").isNull, 1)).as("n_oov"))
-        .withColumn("oov_frac", col("n_oov").cast("double") /
-          greatest(col("n_tokens"), lit(1L)).cast("double"))
-        .orderBy("doc_id")
-    }),
-
-    // inter-document repetition: per doc, the fraction of its distinct
-    // token 3-grams that occur in at least one OTHER document — the
-    // RefinedWeb/Gopher-style duplicated-n-gram signal at corpus scope.
-    // Plan shape: most n-grams are unique, so instead of joining every
-    // (doc, ng) row against the full df table, only the (small) set of
-    // n-grams with df ≥ 2 joins back — broadcastable, the "hot set"
-    // pattern that keeps the corpus side map-side at 100 TB
-    "q_text_dup_ngrams" -> ((s, d) => {
-      // consumed by three branches (df set, per-doc totals, dup join) —
-      // materialize the tokenize+ngram+md5 explode once instead of
-      // re-deriving it per branch (opt r13, guide §2.4)
-      val g = docs(s, d).select(col("doc_id"),
-          explode(array_distinct(tokenNgrams(col("text"), 3))).as("ng"))
-        .withColumn("ng", md5(col("ng")))
-        .localCheckpoint()
-      val dupSet = g.groupBy("ng").agg(count(lit(1)).as("ndocs"))
-        .where(col("ndocs") >= 2).select("ng")
-      val counts = g.groupBy("doc_id").agg(count(lit(1)).as("n_ngrams"))
-      val dup = g.join(broadcast(dupSet), "ng")
-        .groupBy("doc_id").agg(count(lit(1)).as("n_dup"))
-      counts.join(dup, Seq("doc_id"), "left")
-        .na.fill(0L, Seq("n_dup"))
-        .withColumn("dup_frac", col("n_dup").cast("double") /
-          greatest(col("n_ngrams"), lit(1L)).cast("double"))
-        .orderBy("doc_id")
-    }),
-
-    // distributed BPE-trainer step: adjacent-symbol pair statistics over
-    // the word VOCABULARY weighted by word frequency — the argmax pair is
-    // the next BPE merge. Plan shape is the one that scales: corpus scan →
-    // word-count aggregation (map-side combine, one shuffle), then the
-    // char-pair explode runs over the vocabulary (thousands of rows), never
-    // over the corpus
-    "q_text_bpe_merges" -> ((s, d) => {
-      val words = docs(s, d)
-        .select(explode(tokens(lower(col("text")))).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("wc"))
-      // split(w, "") keeps a trailing "" (Java Pattern.split) that DuckDB's
-      // string_split drops — filter empties, as fingerprintRolling does
-      val chars = words.withColumn("cs",
-        filter(split(col("w"), ""), c => c =!= lit("")))
-      chars.select(col("wc"), explode(
-          when(size(col("cs")) < 2, array().cast("array<string>"))
-            .otherwise(transform(sequence(lit(0), size(col("cs")) - 2),
-              i => concat(element_at(col("cs"), i + 1), lit(" "),
-                element_at(col("cs"), i + 2))))).as("pair"))
-        .groupBy("pair").agg(sum(col("wc")).as("n_occ"))
-        .orderBy(col("n_occ").desc, col("pair"))
-        .limit(20)
-    }),
-
-    // temperature-based mixture reweighting (α = 0.5, the standard
-    // up-weight-the-tail exponent): per-source doc counts → weight n^α →
-    // share of the training mix. The cross-source weight total folds in
-    // SOURCE ORDER over a sorted array — a groupBy sum of doubles would be
-    // partition-order-dependent; this is the aggregate-level analogue of
-    // the project's fixed-order IEEE fold rule
-    "q_text_mix_weights" -> ((s, d) => {
-      val counts = docs(s, d).groupBy("source").agg(count(lit(1)).as("n_docs"))
-      counts
-        .agg(array_sort(collect_list(struct(col("source"), col("n_docs")))).as("a"))
-        .select(explode(col("a")).as("e"),
-          aggregate(col("a"), lit(0.0),
-            (acc, x) => acc + sqrt(x.getField("n_docs").cast("double"))).as("total"))
-        .select(col("e.source").as("source"), col("e.n_docs").as("n_docs"),
-          (sqrt(col("e.n_docs").cast("double")) / col("total")).as("share"))
-        .orderBy("source")
-    }),
-
-    // RAKE keyword extraction: stopword runs delimit candidate phrases
-    // (island ids from one per-doc prefix-sum window over the token
-    // stream), word degree/frequency stats aggregate globally, and each
-    // phrase scores the sum of its members' exact milli deg/freq ratios.
-    // Everything is exploded-token joins + aggregations — no per-doc
-    // driver logic — and the only windows are per-doc position scans
-    "q_text_rake" -> ((s, d) => {
-      val toks = docs(s, d)
-        .select(col("doc_id"), posexplode(tokens(normalized(col("text")))))
-        .withColumnRenamed("col", "w")
-      val wDoc = Window.partitionBy("doc_id").orderBy("pos")
-      val marked = toks
-        .withColumn("is_stop",
-          col("w").isInCollection(Stopwords).cast("int"))
-        .withColumn("island", sum(col("is_stop")).over(wDoc))
-      val pw = marked.where(col("is_stop") === 0)
-        .select(col("doc_id"), col("island"), col("pos"), col("w"))
-      val phrases = pw
-        .groupBy(col("doc_id"), col("island"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("w")))).as("a"))
-        .select(col("doc_id"), col("island"),
-          transform(col("a"), x => x.getField("w")).as("ws"))
-        .withColumn("phrase", array_join(col("ws"), " "))
-        .withColumn("plen", size(col("ws")).cast("long"))
-      val stats = phrases.select(explode(col("ws")).as("w"), col("plen"))
-        .groupBy("w")
-        .agg(count(lit(1)).as("freq"), sum(col("plen")).as("deg"))
-        .withColumn("score_milli",
-          call_function("div", col("deg") * 1000L, col("freq")))
-      phrases
-        .select(col("doc_id"), col("island"), col("phrase"), col("plen"),
-          explode(col("ws")).as("w"))
-        .join(stats.select(col("w"), col("score_milli")), "w")
-        .groupBy(col("doc_id"), col("island"), col("phrase"), col("plen"))
-        .agg(sum(col("score_milli")).as("pscore"))
-        .groupBy(col("phrase"))
-        .agg(min(col("plen")).as("n_words"), min(col("pscore")).as("score_milli"),
-          count(lit(1)).as("n_occ"))
-        .orderBy(col("score_milli").desc, col("phrase"))
-        .limit(20)
-    }),
-
-    // corpus document frequency: tokens by number of documents containing
-    // them, top 20 (deterministic tiebreak on the token)
-    "q_text_docfreq" -> ((s, d) => {
-      val toks = docs(s, d).select(col("doc_id"),
-        explode(array_distinct(tokens(lower(col("text"))))).as("tok"))
-      toks.groupBy("tok").agg(countDistinct("doc_id").as("df"))
-        .orderBy(col("df").desc, col("tok"))
-        .limit(20)
-    }),
-
-    // exact phrase search over the positional inverted index: per-term
-    // postings pre-filtered by literal (pushdown), pos-adjacency equi-joins
-    "q_text_phrase" -> ((s, d) =>
-      graft.text.InvertedIndex.phraseMatches(
-          postings(s, d).withColumnRenamed("tok", "term"), Seq("fast", "table"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).cast("long").as("n_hits"),
-          min("pos").cast("long").as("first_pos"))
-        .orderBy("doc_id")),
-
-    // corpus-duplicated trigram span removal: tokens covered by any 3-gram
-    // occurring >1 time anywhere are dropped, survivors reassembled
-    "q_text_span_removal" -> ((s, d) =>
-      graft.text.SpanDedup.removeDuplicatedSpansFromTokens(postings(s, d), n = 3)
-        .orderBy("doc_id")),
-
-    // per-document top-3 TF-IDF terms, integer-exact: idf quantized to
-    // micro-units per DISTINCT df (the audited-transcendental trick from
-    // BM25), score = tf · idf_micro — pure integer product, no division
-    "q_text_tfidf" -> ((s, d) => {
-      val tf = postings(s, d)
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      val nDocs = docs(s, d).agg(count(lit(1)).as("n"))
-      val idf = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-        .crossJoin(nDocs) // 1-row broadcast
-        .withColumn("idf_micro",
-          floor(log((col("n") + lit(1.0)) / (col("df") + lit(1.0)))
-            * 1000000.0 + 0.5).cast("long"))
-        .select("tok", "idf_micro")
-      val w = Window.partitionBy("doc_id")
-        .orderBy(col("score_micro").desc, col("tok"))
-      tf.join(idf, "tok")
-        .withColumn("score_micro", col("tf") * col("idf_micro"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= 3)
-        .select("doc_id", "rank", "tok", "score_micro")
-        .orderBy("doc_id", "rank")
-    }),
-
-    // word2vec-style skip-gram pair statistics (forward window ±0/+1/+2 —
-    // symmetric pairs would just double every count): lead windows over
-    // one doc_id exchange, one hash aggregate, top-20
-    "q_text_skipgrams" -> ((s, d) => {
-      val w = Window.partitionBy("doc_id").orderBy("pos")
-      val toks = postings(s, d).withColumnRenamed("tok", "center")
-      // both leads share one WindowSpec → a single Window operator over
-      // one doc_id exchange; the offset union is a post-window explode,
-      // not a second scan
-      val pairs = toks
-        .withColumn("c1", lead(col("center"), 1).over(w))
-        .withColumn("c2", lead(col("center"), 2).over(w))
-        .select(col("center"), explode(array(col("c1"), col("c2"))).as("context"))
-        .where(col("context").isNotNull)
-      pairs.groupBy("center", "context").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("center"), col("context"))
-        .limit(20)
-    }),
-
-    // hashing-trick document vectorizer (the text→vector bridge): tokens
-    // hash into 16 md5 buckets, per-doc bucket counts form the sparse
-    // feature vector; emitted as a dense ordered fingerprint + summary
-    // stats so the contract stays integer/string-exact
-    "q_text_hash_vectors" -> ((s, d) => {
-      val bucketed = postings(s, d)
-        .withColumn("b",
-          pmod(conv(substring(md5(col("tok")), 1, 4), 16, 10).cast("long"), lit(16L)))
-        .groupBy("doc_id", "b").agg(count(lit(1)).as("c"))
-      // dense 16-slot vector per doc (zeros included) via an ordered
-      // collected struct list — no pivot (16 fixed slots, array algebra)
-      bucketed.groupBy("doc_id")
-        .agg(collect_list(struct(col("b"), col("c"))).as("bc"))
-        .select(col("doc_id"),
-          transform(sequence(lit(0L), lit(15L)), i =>
-            coalesce(
-              element_at(map_from_entries(col("bc")), i), lit(0L))).as("v"))
-        .select(col("doc_id"),
-          size(filter(col("v"), x => x > 0L)).cast("long").as("nnz"),
-          aggregate(col("v"), lit(0L), (a, x) => a + x).as("total"),
-          md5(array_join(transform(col("v"), _.cast("string")), ",")).as("vec_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // PMI-ranked bigram collocations — the phrase-mining signal:
-    // pmi = ln( (c_xy/T) / ((c_x/N)·(c_y/N)) ), computed on integer
-    // counts with ONE leaf-quantized ln per qualifying bigram (count
-    // floor 5 bounds the audited input set); top-20 deterministic
-    "q_text_collocations" -> ((s, d) => {
-      val w = Window.partitionBy("doc_id").orderBy("pos")
-      val uni = postings(s, d).groupBy("tok").agg(count(lit(1)).as("cx"))
-      val nTok = postings(s, d).agg(count(lit(1)).as("n"))
-      val bi = postings(s, d)
-        .withColumn("w2", lead(col("tok"), 1).over(w))
-        .where(col("w2").isNotNull)
-        .select(col("tok").as("w1"), col("w2"))
-        .groupBy("w1", "w2").agg(count(lit(1)).as("cxy"))
-        .where(col("cxy") >= 5)
-      val tBi = postings(s, d)
-        .withColumn("w2", lead(col("tok"), 1).over(w))
-        .where(col("w2").isNotNull)
-        .agg(count(lit(1)).as("t"))
-      bi
-        .join(uni.select(col("tok").as("w1"), col("cx").as("c1")), "w1")
-        .join(uni.select(col("tok").as("w2"), col("cx").as("c2")), "w2")
-        .crossJoin(nTok).crossJoin(tBi)
-        .withColumn("pmi_micro",
-          floor(log((col("cxy").cast("double") * col("n") * col("n")) /
-            (col("t").cast("double") * col("c1") * col("c2")))
-            * 1000000.0 + 0.5).cast("long"))
-        .select(col("w1"), col("w2"), col("cxy").as("n_xy"), col("pmi_micro"))
-        .orderBy(col("pmi_micro").desc, col("w1"), col("w2"))
-        .limit(20)
-    }),
-
-    // per-document unigram entropy in micro-nats — the repetitiveness /
-    // diversity quality signal. Integer-exact contract: each distinct
-    // (doc_len, count) ratio's ln is quantized at the leaf (audited
-    // transcendental site), then H = Σ c·ln(dl/c)_micro ÷ dl is all
-    // integer arithmetic
-    "q_text_entropy" -> ((s, d) => {
-      val cnt = postings(s, d)
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
-      val dl = cnt.groupBy("doc_id").agg(sum("c").as("dl"))
-      cnt.join(dl, "doc_id")
-        .withColumn("t", floor(log(col("dl").cast("double") / col("c").cast("double"))
-          * 1000000.0 + 0.5).cast("long"))
-        .groupBy("doc_id")
-        .agg(call_function("div", sum(col("c") * col("t")), max(col("dl")))
-          .as("entropy_micro"),
-          max(col("dl")).as("dl"))
-        .orderBy("doc_id")
-    }),
-
-    // Zipf rank-frequency fit per source: OLS slope of ln(freq) on
-    // ln(rank) over the source's term table (slope ≈ −1 for natural
-    // text — a corpus-health diagnostic that flags synthetic or
-    // boilerplate-heavy sources). ln is quantized at the leaf per
-    // distinct rank/frequency (both small-integer domains — audited
-    // sites), the OLS moments accumulate as exact integers (DECIMAL(38)
-    // headroom for web-scale vocabularies), and the slope is the same
-    // fixed-shape IEEE expression over those exact sums on both engines
-    "q_text_zipf_slope" -> ((s, d) => {
-      val tf = postings(s, d)
-        .join(docs(s, d).select(col("doc_id"), col("source")), "doc_id")
-        .groupBy("source", "tok").agg(count(lit(1)).as("f"))
-      val w = Window.partitionBy("source").orderBy(col("f").desc, col("tok"))
-      val xy = tf.withColumn("rk", row_number().over(w).cast("long"))
-        .select(col("source"),
-          floor(log(col("rk").cast("double")) * 1000000.0 + 0.5)
-            .cast("long").as("x"),
-          floor(log(col("f").cast("double")) * 1000000.0 + 0.5)
-            .cast("long").as("y"))
-      xy.groupBy("source").agg(
-          count(lit(1)).as("n"),
-          sum(col("x").cast("decimal(38,0)")).cast("double").as("sx"),
-          sum(col("y").cast("decimal(38,0)")).cast("double").as("sy"),
-          sum((col("x") * col("x")).cast("decimal(38,0)")).cast("double").as("sxx"),
-          sum((col("x") * col("y")).cast("decimal(38,0)")).cast("double").as("sxy"))
-        .select(col("source"), col("n"),
-          ((col("n").cast("double") * col("sxy") - col("sx") * col("sy")) /
-            (col("n").cast("double") * col("sxx") - col("sx") * col("sx")))
-            .as("zipf_slope"))
-        .orderBy("source")
-    }),
-
-    // boilerplate opening detection: shared 3-token document prefixes —
-    // the template-header signal (scraped pages opening with the same
-    // navigation/disclaimer text). One projection + vocabulary-sized
-    // histogram; the prefix complements the stitch (suffix↔prefix) and
-    // span-removal operators
-    "q_text_boilerplate_prefix" -> ((s, d) =>
-      docs(s, d).select(concat_ws(" ",
-          slice(tokens(lower(col("text"))), 1, 3)).as("prefix"))
-        .groupBy("prefix").agg(count(lit(1)).as("n_docs"))
-        .where(col("n_docs") >= 2)
-        .orderBy(col("n_docs").desc, col("prefix"))
-        .limit(20)),
-
-    // vocabulary richness: hapax legomena rate per source — the share of
-    // a source's vocabulary seen exactly once. Boilerplate-heavy or
-    // templated sources show depressed hapax rates; natural text sits
-    // near half its vocabulary. One term-frequency aggregate, then a
-    // sources-sized rollup
-    "q_text_hapax" -> ((s, d) =>
-      postings(s, d)
-        .join(docs(s, d).select(col("doc_id"), col("source")), "doc_id")
-        .groupBy("source", "tok").agg(count(lit(1)).as("f"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("vocab"),
-          count(when(col("f") === 1, 1)).as("hapax"))
-        .withColumn("hapax_ppm", expr("hapax * 1000000 DIV vocab"))
-        .orderBy("source")),
-
-    // TextRank keyword extraction: PageRank over the word co-occurrence
-    // graph (adjacent-token pairs, undirected). Reuses the integer
-    // PageRank operator — ranks in 1e-12 units, bitwise across engines —
-    // so the oracle is the same unrolled recurrence over string nodes.
-    // Graph build is one self-join of the shared postings projection on
-    // (doc, pos+1); vertices are vocabulary-sized, so the per-iteration
-    // rank table broadcasts and each iteration costs one exchange
-    "q_text_textrank" -> ((s, d) => {
-      // the co-occurrence edge table is referenced by every PageRank
-      // iteration (nodes, degrees, and the per-iteration contribution
-      // join) — memoize it, or each reference re-runs the postings
-      // self-join (measured 3.7 s → ~1 s at sf0.1)
-      val edges = QueryCaches.memo(s, d, "textrank_edges") {
-        val p = postings(s, d)
-        val adj = p.as("a").join(p.as("b"),
-            col("a.doc_id") === col("b.doc_id") &&
-              col("b.pos") === col("a.pos") + 1 &&
-              col("a.tok") =!= col("b.tok"))
-          .select(col("a.tok").as("u"), col("b.tok").as("v"))
-        adj.select(col("u").as("src"), col("v").as("dst"))
-          .unionByName(adj.select(col("v").as("src"), col("u").as("dst")))
-          .distinct()
-      }
-      graft.operators.PageRank.integerPageRank(edges, col("src"), col("dst"),
-          iters = 3, broadcastRanks = true)
-        .orderBy(col("pr").desc, col("node")).limit(25)
-    }),
-
-    // type-token ratio (lexical diversity) per document — the corpus
-    // curation signal between quality (surface ratios) and vocab metrics
-    // (corpus level). Pure per-row Column algebra over the shared
-    // whitespace tokenizer: no shuffle at all except the output sort;
-    // ratio in exact ppm (WideDiv discipline)
-    "q_text_ttr" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"), tokens(lower(col("text"))).as("toks"))
-        .select(col("doc_id"),
-          size(col("toks")).cast("long").as("n_tokens"),
-          size(array_distinct(col("toks"))).cast("long").as("n_types"))
-        .withColumn("ttr_ppm", when(col("n_tokens") === 0, lit(0L))
-          .otherwise(ppmWide(col("n_types"), col("n_tokens"))))
-        .orderBy("doc_id")),
-
-    // Heaps'-law vocabulary growth curve: cumulative token count vs
-    // cumulative distinct-type count at 10 corpus-order checkpoints
-    // (doc_id deciles). The "will the vocabulary saturate" projection a
-    // tokenizer-budget decision reads. Scalable shape: NO cumulative
-    // distinct-counting pass — each type contributes exactly once at the
-    // decile of its FIRST occurrence (min bucket per token, one
-    // vocabulary-sized aggregate), so cum_types is a running sum over the
-    // 10-row bucket domain (bounded window, documented), and cum_tokens a
-    // second. The postings explode is the only corpus-sized work (shared
-    // memoized postings table).
-    "q_text_heaps" -> ((s, d) => {
-      val mx = docs(s, d).agg(max(col("doc_id")).as("mx"))
-      val b = postings(s, d).crossJoin(broadcast(mx))
-        .select(expr("doc_id * 10 DIV (mx + 1)").as("bucket"), col("tok"))
-      val tokCnt = b.groupBy("bucket").agg(count(lit(1)).as("n_toks"))
-      val newTypes = b.groupBy("tok").agg(min(col("bucket")).as("fb"))
-        .groupBy(col("fb").as("bucket")).agg(count(lit(1)).as("n_new"))
-      // ≤ 10-row domain: the running sums are keys-sized by construction
-      val w = org.apache.spark.sql.expressions.Window.orderBy("bucket")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      tokCnt.join(newTypes, Seq("bucket"), "left")
-        .na.fill(0L, Seq("n_new"))
-        .select(col("bucket"), sum(col("n_toks")).over(w).as("cum_tokens"),
-          sum(col("n_new")).over(w).as("cum_types"))
-        .orderBy("bucket")
-    })
-  )
-
   /** DuckDB-side score expression for one language profile. */
   private def sqlLangScore(words: Seq[String]): String = {
     val list = words.map(w => s"'$w'").mkString("[", ", ", "]")
@@ -1541,80 +204,31 @@ object TextQueries {
             WHEN s_fr > 0 THEN 'fr'
             ELSE 'und' END"""
 
-  val oracleSql: Map[String, String] = Map(
-    "q_text_tokens" ->
+  val registry: Seq[Q] = Seq(
+    // whitespace + BPE-ish token counting
+    Q("q_text_tokens", (s, d) =>
+      docs(s, d).select(
+        col("doc_id"),
+        tokenCount(col("text")).cast("long").as("n_ws_tokens"),
+        bpeTokenCount(col("text")).cast("long").as("n_bpe_tokens"),
+        length(col("text")).cast("long").as("len_chars"))
+        .orderBy("doc_id"),
       """SELECT doc_id,
                 CASE WHEN length(trim(text)) = 0 THEN 0
                      ELSE len(string_split_regex(trim(text), '\s+')) END AS n_ws_tokens,
                 len(regexp_extract_all(text,
                     '''(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s'']+')) AS n_bpe_tokens,
                 length(text) AS len_chars
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id"""),
 
-    "q_text_readability" ->
-      """WITH f AS (
-           SELECT doc_id,
-                  CAST(len(list_filter(string_split_regex(text, '[.!?]+'),
-                       s -> length(trim(s)) > 0)) AS BIGINT) AS n_sents,
-                  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                       ELSE len(string_split_regex(trim(text), '\s+'))
-                       END AS BIGINT) AS n_words,
-                  CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-                    AS BIGINT) AS n_syll
-           FROM documents)
-         SELECT doc_id, n_sents, n_words, n_syll,
-                206835000 - (1015000 * n_words) // greatest(1, n_sents)
-                          - (84600000 * n_syll) // greatest(1, n_words)
-                  AS flesch_micro
-         FROM f ORDER BY doc_id""",
-
-    // positional unnest (unnest + generate_subscripts expand in lockstep)
-    // mirrors posexplode; the island window and the deg/freq stats follow
-    // the Spark plan exactly
-    "q_text_rake" ->
-      """WITH n AS (
-           SELECT doc_id,
-                  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
-           FROM documents),
-         t AS (SELECT doc_id,
-                      CASE WHEN length(nt) = 0 THEN []::VARCHAR[]
-                           ELSE string_split_regex(nt, '\s+') END AS toks
-               FROM n),
-         x AS (SELECT doc_id, unnest(toks) AS w,
-                      generate_subscripts(toks, 1) - 1 AS pos
-               FROM t),
-         m AS (SELECT doc_id, w, pos,
-                      CASE WHEN list_contains(
-                             ['the','a','an','and','or','of','to','in','is','it'], w)
-                           THEN 1 ELSE 0 END AS is_stop
-               FROM x),
-         i AS (SELECT doc_id, w, pos, is_stop,
-                      sum(is_stop) OVER (PARTITION BY doc_id ORDER BY pos)
-                        AS island
-               FROM m),
-         pw AS (SELECT doc_id, island, pos, w FROM i WHERE is_stop = 0),
-         ph AS (SELECT doc_id, island,
-                       string_agg(w, ' ' ORDER BY pos) AS phrase,
-                       CAST(count(*) AS BIGINT) AS plen
-                FROM pw GROUP BY 1, 2),
-         mem AS (SELECT pw.w, ph.plen, pw.doc_id, pw.island, ph.phrase
-                 FROM pw JOIN ph USING (doc_id, island)),
-         st AS (SELECT w, CAST(count(*) AS BIGINT) AS freq,
-                       CAST(sum(plen) AS BIGINT) AS deg
-                FROM mem GROUP BY 1),
-         sc AS (SELECT w, deg * 1000 // freq AS score_milli FROM st),
-         ps AS (SELECT mem.doc_id, mem.island, mem.phrase, mem.plen,
-                       CAST(sum(sc.score_milli) AS BIGINT) AS pscore
-                FROM mem JOIN sc USING (w)
-                GROUP BY 1, 2, 3, 4),
-         agg AS (SELECT phrase, CAST(min(plen) AS BIGINT) AS n_words,
-                        CAST(min(pscore) AS BIGINT) AS score_milli,
-                        CAST(count(*) AS BIGINT) AS n_occ
-                 FROM ps GROUP BY 1)
-         SELECT phrase, n_words, score_milli, n_occ
-         FROM agg ORDER BY score_milli DESC, phrase LIMIT 20""",
-
-    "q_text_quality" ->
+    // quality scoring: stopword/punct ratios + combined [0,1] score
+    Q("q_text_quality", (s, d) =>
+      docs(s, d).select(
+        col("doc_id"),
+        stopwordCount(col("text")).cast("long").as("n_stop"),
+        punctCount(col("text")).cast("long").as("n_punct"),
+        qualityScore(col("text")).as("quality"))
+        .orderBy("doc_id"),
       """WITH t AS (
            SELECT doc_id,
                   CAST(length(text) AS DOUBLE) AS chars,
@@ -1630,22 +244,98 @@ object TextQueries {
                 0.4 * least(1.0, chars / 500.0)
               + 0.3 * least(1.0, 4.0 * (CAST(n_stop AS DOUBLE) / greatest(toks, 1.0)))
               + 0.3 * (1.0 - least(1.0, 10.0 * (CAST(n_punct AS DOUBLE) / greatest(chars, 1.0)))) AS quality
-         FROM t ORDER BY doc_id""",
+         FROM t ORDER BY doc_id"""),
 
-    "q_text_langid" ->
-      s"""$sqlLangidCtes
-          SELECT doc_id, lang, $sqlLangPred AS lang_pred
-          FROM s ORDER BY doc_id""",
+    // Flesch-style readability in exact integer micros: sentence count
+    // from terminator runs, whitespace words, vowel-group syllable proxy,
+    // then 206.835 − 1.015·(w/s) − 84.6·(syll/w) with each ratio as a
+    // defined integer division (guarded at 1) — a map-only curation
+    // signal, bitwise across engines
+    Q("q_text_readability", (s, d) =>
+      docs(s, d).select(
+        col("doc_id"),
+        sentenceCount(col("text")).cast("long").as("n_sents"),
+        tokenCount(col("text")).cast("long").as("n_words"),
+        vowelGroupCount(col("text")).cast("long").as("n_syll"))
+        .withColumn("flesch_micro",
+          lit(206835000L)
+            - call_function("div", lit(1015000L) * col("n_words"),
+              greatest(lit(1L), col("n_sents")))
+            - call_function("div", lit(84600000L) * col("n_syll"),
+              greatest(lit(1L), col("n_words"))))
+        .orderBy("doc_id"),
+      """WITH f AS (
+           SELECT doc_id,
+                  CAST(len(list_filter(string_split_regex(text, '[.!?]+'),
+                       s -> length(trim(s)) > 0)) AS BIGINT) AS n_sents,
+                  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
+                       ELSE len(string_split_regex(trim(text), '\s+'))
+                       END AS BIGINT) AS n_words,
+                  CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
+                    AS BIGINT) AS n_syll
+           FROM documents)
+         SELECT doc_id, n_sents, n_words, n_syll,
+                206835000 - (1015000 * n_words) // greatest(1, n_sents)
+                          - (84600000 * n_syll) // greatest(1, n_words)
+                  AS flesch_micro
+         FROM f ORDER BY doc_id"""),
 
-    // confusion matrix of the langid heuristic against the fixture's
-    // ground-truth label — same prediction CTEs as q_text_langid
-    "q_text_langid_eval" ->
+    // language-ID heuristic vs the fixture's labeled lang
+    // classifier evaluation: confusion matrix of the langid heuristic
+    // against the fixture's ground-truth label — the quality-measurement
+    // loop every heuristic filter needs
+    Q("q_text_langid_eval", (s, d) =>
+      // staged scores (one filter() eval per profile per row; values
+      // identical to the inline langId) — opt r13, guide §4
+      withLangId(docs(s, d), col("text"), "lang_pred")
+        .select(col("lang"), col("lang_pred"))
+        .groupBy("lang", "lang_pred").agg(count(lit(1)).as("n"))
+        .orderBy("lang", "lang_pred"),
+      // confusion matrix of the langid heuristic against the fixture's
+      // ground-truth label — same prediction CTEs as q_text_langid
       s"""$sqlLangidCtes,
           p AS (SELECT lang, $sqlLangPred AS lang_pred FROM s)
           SELECT lang, lang_pred, CAST(count(*) AS BIGINT) AS n
-          FROM p GROUP BY 1, 2 ORDER BY lang, lang_pred""",
+          FROM p GROUP BY 1, 2 ORDER BY lang, lang_pred"""),
 
-    "q_text_redact" ->
+    Q("q_text_langid", (s, d) =>
+      withLangId(docs(s, d), col("text"), "lang_pred")
+        .select(col("doc_id"), col("lang"), col("lang_pred"))
+        .orderBy("doc_id"),
+      s"""$sqlLangidCtes
+          SELECT doc_id, lang, $sqlLangPred AS lang_pred
+          FROM s ORDER BY doc_id"""),
+
+    // md5 + polynomial rolling-hash fingerprints
+    Q("q_text_fingerprint", (s, d) =>
+      docs(s, d).select(
+        col("doc_id"),
+        fingerprintMd5(col("text")).as("fp_md5"),
+        fingerprintRolling(col("text")).as("fp_roll"))
+        .orderBy("doc_id"),
+      """WITH n AS (
+           SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
+           FROM documents)
+         SELECT doc_id, md5(norm) AS fp_md5,
+                CASE WHEN length(norm) = 0 THEN 0
+                     ELSE list_reduce(
+                            list_prepend(CAST(0 AS BIGINT),
+                              list_transform(string_split(norm, ''),
+                                ch -> CAST(ord(ch) AS BIGINT))),
+                            (a, b) -> (a * 31 + b) % 1000000007) END AS fp_roll
+         FROM n ORDER BY doc_id"""),
+
+    // PII scrub: masked text + per-kind match counts (fixture text has no
+    // PII, so redaction must be the identity — the counts prove it ran)
+    Q("q_text_redact", (s, d) =>
+      docs(s, d).withColumn("pii", piiCounts(col("text")))
+        .select(
+          col("doc_id"),
+          md5(redactPii(col("text"))).as("redacted_md5"),
+          col("pii.n_email").as("n_email"),
+          col("pii.n_url").as("n_url"),
+          col("pii.n_phone").as("n_phone"))
+        .orderBy("doc_id"),
       """SELECT doc_id,
                 md5(regexp_replace(
                       regexp_replace(
@@ -1659,9 +349,16 @@ object TextQueries {
                 len(regexp_extract_all(text, 'https?://[^\s]+')) AS n_url,
                 len(regexp_extract_all(text,
                     '\+?[0-9]{1,3}[-. ]?\(?[0-9]{3}\)?[-. ]?[0-9]{3}[-. ]?[0-9]{4}')) AS n_phone
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id"""),
 
-    "q_text_chunks" ->
+    // long-document chunking: 32-token windows, stride 24 (8-token overlap)
+    Q("q_text_chunks", (s, d) =>
+      docs(s, d).select(col("doc_id"),
+        posexplode(chunkTokens(col("text"), 32, 24)).as(Seq("chunk_idx", "chunk")))
+        .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
+          md5(col("chunk")).as("chunk_md5"),
+          size(split(col("chunk"), " ")).cast("long").as("n_chunk_tokens"))
+        .orderBy("doc_id", "chunk_idx"),
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
@@ -1681,9 +378,58 @@ object TextQueries {
          SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
                 md5(chunk) AS chunk_md5,
                 CAST(len(string_split(chunk, ' ')) AS BIGINT) AS n_chunk_tokens
-         FROM ch ORDER BY doc_id, chunk_idx""",
+         FROM ch ORDER BY doc_id, chunk_idx"""),
 
-    "q_text_budget_select" ->
+    // content-stable train/val split: md5 bucket < 95 → train; the split
+    // never moves an example across runs or partitionings
+    Q("q_text_split", (s, d) =>
+      docs(s, d).select(col("doc_id"),
+        splitBucket(col("doc_id")).as("bucket"))
+        .withColumn("split", when(col("bucket") < 95, lit("train")).otherwise(lit("val")))
+        .orderBy("doc_id"),
+      """SELECT doc_id,
+                CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS BIGINT) % 100
+                  AS bucket,
+                CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS BIGINT) % 100 < 95
+                     THEN 'train' ELSE 'val' END AS split
+         FROM documents ORDER BY doc_id"""),
+
+    // end-to-end corpus curation funnel, per source: quality gate →
+    // langid-vs-label gate → exact-dedup keep (min doc_id per
+    // fingerprint) — the composed pipeline a curation run actually
+    // executes, verified as one query
+    // budget-constrained corpus selection — the capstone composition of
+    // three subsystems: MinHash near-dup clusters (one representative per
+    // cluster: best quality, doc_id tie-break — per-key window state),
+    // the quality score, and a token budget (60% of the representatives'
+    // total). Global selection order = (quality desc, doc_id) through
+    // StableIds.rankAndCumSums — the running token sum never funnels
+    // through one window partition. The "which docs make the training
+    // cut" decision a curation pipeline executes after dedup + scoring.
+    Q("q_text_budget_select", (s, d) => {
+      import graft.operators.StableIds
+      val q = docs(s, d).select(col("doc_id"),
+        qualityScore(col("text")).as("quality"),
+        tokenCount(col("text")).cast("long").as("n_tokens"))
+      val withCl = q
+        .join(DedupQueries.textClusterTable(s, d), Seq("doc_id"), "left")
+        .withColumn("cl", coalesce(col("cluster_id"), col("doc_id")))
+      val w = Window.partitionBy(col("cl"))
+        .orderBy(col("quality").desc, col("doc_id"))
+      val reps = withCl.withColumn("rn", row_number().over(w))
+        .where(col("rn") === 1)
+        .select(col("doc_id"), col("quality"), col("n_tokens"))
+      val ranked = StableIds.rankAndCumSums(reps,
+        Seq(-col("quality"), col("doc_id")),
+        Seq("n_tokens" -> "cum_tokens"))
+      val budget = reps.agg(
+        mulDivWide(sum(col("n_tokens")), lit(3L), lit(5L)).as("budget"))
+      ranked.crossJoin(broadcast(budget))
+        .where(col("cum_tokens") <= col("budget"))
+        .select(col("doc_id"), col("n_tokens"), col("cum_tokens"),
+          col("budget"))
+        .orderBy(col("doc_id"))
+    },
       s"""${DedupQueries.clustersCte},
           qd AS (
             SELECT doc_id,
@@ -1714,9 +460,30 @@ object TextQueries {
                     AS BIGINT) AS cum_tokens
                 FROM reps)
           SELECT doc_id, n_tokens, cum_tokens, bt.budget
-          FROM r, bt WHERE cum_tokens <= bt.budget ORDER BY doc_id""",
+          FROM r, bt WHERE cum_tokens <= bt.budget ORDER BY doc_id"""),
 
-    "q_text_curate" ->
+    Q("q_text_curate", (s, d) => {
+      val base = withLangId(
+        docs(s, d)
+          .select(col("doc_id"), col("source"), col("lang"), col("n_chars"), col("text"))
+          .withColumn("quality", qualityScore(col("text"))),
+        col("text"), "pred") // staged scores — opt r13, guide §4
+      val surv = base.where(col("quality") >= 0.5 && col("pred") === col("lang"))
+        .withColumn("fp", fingerprintMd5(col("text")))
+      val kept = surv.withColumn("keep",
+          min(col("doc_id")).over(org.apache.spark.sql.expressions.Window
+            .partitionBy(col("fp"))))
+        .where(col("doc_id") === col("keep"))
+      base.groupBy(col("source")).agg(
+          count(lit(1)).as("n_total"),
+          count(when(col("quality") >= 0.5, 1)).as("n_quality"),
+          count(when(col("quality") >= 0.5 && col("pred") === col("lang"), 1)).as("n_lang"))
+        .join(kept.groupBy(col("source")).agg(
+          count(lit(1)).as("n_kept"), sum(col("n_chars")).as("kept_chars")),
+          Seq("source"), "left")
+        .na.fill(0L, Seq("n_kept", "kept_chars"))
+        .orderBy("source")
+    },
       s"""WITH t AS (
             SELECT doc_id, source, lang, n_chars, text,
                    CAST(length(text) AS DOUBLE) AS chars,
@@ -1769,9 +536,24 @@ object TextQueries {
           SELECT funnel.source, n_total, n_quality, n_lang,
                  coalesce(n_kept, 0) AS n_kept, coalesce(kept_chars, 0) AS kept_chars
           FROM funnel LEFT JOIN ka ON funnel.source = ka.source
-          ORDER BY funnel.source""",
+          ORDER BY funnel.source"""),
 
-    "q_text_packing" ->
+    // contiguous sequence packing: 256-token bins in doc_id order via the
+    // distributed two-phase prefix sum (no single-partition window) —
+    // exact-mirrored by the oracle's running-window formulation. Token
+    // counts use the proven q_text_tokens formula on raw text (whitespace
+    // token count is invariant under normalization, and the r3 driver gate
+    // showed the oracle's regexp_replace-then-split combination is the one
+    // tokenization shape no passing query exercises — keep both sides on
+    // the exercised path).
+    Q("q_text_packing", (s, d) => {
+      val withN = docs(s, d).select(col("doc_id"),
+        tokenCount(col("text")).cast("long").as("n_tokens"))
+      graft.operators.Packing.packByBudget(withN, col("doc_id"),
+          col("n_tokens"), budget = 256L)
+        .select("doc_id", "n_tokens", "bin")
+        .orderBy("doc_id")
+    },
       """WITH n AS (
            SELECT doc_id,
                   CASE WHEN length(trim(text)) = 0 THEN 0
@@ -1784,9 +566,26 @@ object TextQueries {
                     (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pfx
            FROM n)
          SELECT doc_id, n_tokens, CAST(pfx // 256 AS BIGINT) AS bin
-         FROM p ORDER BY doc_id""",
+         FROM p ORDER BY doc_id"""),
 
-    "q_text_pack_assemble" ->
+    // end-of-pipeline sequence assembly: concatenate each packed bin's
+    // documents (doc_id order, newline-joined) into the actual training
+    // sequence — emitted as md5 + stats so the oracle verifies the exact
+    // assembled bytes without shipping them. In-bin order is made
+    // deterministic by sorting the collected (doc_id, text) structs
+    Q("q_text_pack_assemble", (s, d) => {
+      val withN = docs(s, d).select(col("doc_id"), col("text"),
+        tokenCount(col("text")).cast("long").as("n_tokens"))
+      graft.operators.Packing.packByBudget(withN, col("doc_id"),
+          col("n_tokens"), budget = 256L)
+        .groupBy("bin")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_tokens")).as("total_tokens"),
+          md5(array_join(transform(
+            array_sort(collect_list(struct(col("doc_id"), col("text")))),
+            e => e.getField("text")), "\n")).as("seq_md5"))
+        .orderBy("bin")
+    },
       """WITH n AS (
            SELECT doc_id, text,
                   CASE WHEN length(trim(text)) = 0 THEN 0
@@ -1802,9 +601,46 @@ object TextQueries {
          SELECT bin, CAST(count(*) AS BIGINT) AS n_docs,
                 CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
                 md5(string_agg(text, chr(10) ORDER BY doc_id)) AS seq_md5
-         FROM b GROUP BY 1 ORDER BY bin""",
+         FROM b GROUP BY 1 ORDER BY bin"""),
 
-    "q_text_epoch_manifest" ->
+    // tokenizer-aware pack-and-shuffle EPOCH ASSEMBLER (r7 ask #7): the
+    // full pretraining batch-assembly composition in one operator chain —
+    //   1. leakage-free split on the CONTENT group (split bucket keyed on
+    //      md5(text), so byte-identical docs land in one split),
+    //   2. per-epoch deterministic shuffle: order key = md5("epoch<e>:" ||
+    //      doc_id) ++ zero-padded doc_id (the pad makes the key unique, so
+    //      the layout is total-order deterministic — no RNG state, any
+    //      executor count replays it),
+    //   3. Packing.packByBudget lays the shuffled stream into 512-token
+    //      bins (range-partitioned prefix sums — no global window),
+    //   4. manifest row per (epoch, bin): doc count, token mass, and the
+    //      md5 of the doc_id sequence in pack order — the artifact a
+    //      trainer consumes and the oracle verifies byte-for-byte.
+    Q("q_text_epoch_manifest", (s, d) => {
+      val base = docs(s, d).select(col("doc_id"),
+          tokenCount(col("text")).cast("long").as("n_tokens"),
+          graft.text.TextFunctions.splitBucket(md5(col("text"))).as("bucket"))
+        .where(col("bucket") < 80)
+        .drop("bucket")
+      val perEpoch = (0L to 1L).map { e =>
+        val keyed = base.withColumn("okey",
+          concat(md5(concat(lit(s"epoch$e:"), col("doc_id").cast("string"))),
+            lpad(col("doc_id").cast("string"), 12, "0")))
+        graft.operators.Packing.packByBudget(keyed, col("okey"),
+            col("n_tokens"), budget = 512L)
+          .groupBy(col("bin"))
+          .agg(count(lit(1)).as("n_docs"),
+            sum(col("n_tokens")).as("total_tokens"),
+            md5(array_join(transform(
+              array_sort(collect_list(struct(col("okey"), col("doc_id")))),
+              x => x.getField("doc_id").cast("string")), ","))
+              .as("manifest_md5"))
+          .withColumn("epoch", lit(e))
+      }
+      perEpoch.reduce(_ unionByName _)
+        .select("epoch", "bin", "n_docs", "total_tokens", "manifest_md5")
+        .orderBy("epoch", "bin")
+    },
       """WITH base AS (
            SELECT doc_id,
                   CAST(CASE WHEN length(trim(text)) = 0 THEN 0
@@ -1834,9 +670,31 @@ object TextQueries {
                 CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
                 md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY okey))
                   AS manifest_md5
-         FROM b GROUP BY 1, 2 ORDER BY epoch, bin""",
+         FROM b GROUP BY 1, 2 ORDER BY epoch, bin"""),
 
-    "q_text_burstiness" ->
+    // term burstiness (Church–Gale): variance-to-mean ratio of per-doc
+    // counts over ALL docs (zeros included via the closed form
+    // (N·Σc² − (Σc)²)/(N·Σc)) — bursty terms concentrate in few docs,
+    // uniform terms spread evenly; the signal separating topical terms
+    // from function words. Exact integer ppm; one (tok, doc) aggregate
+    // then vocab-sized arithmetic
+    Q("q_text_burstiness", (s, d) => {
+      val perDoc = postings(s, d).groupBy(col("tok"), col("doc_id"))
+        .agg(count(lit(1)).as("c"))
+      val nDocs = docs(s, d).agg(count(lit(1)).as("nd"))
+      perDoc.groupBy(col("tok"))
+        .agg(sum(col("c")).as("sc"), sum(col("c") * col("c")).as("sc2"),
+          count(lit(1)).as("n_docs_with"))
+        .crossJoin(broadcast(nDocs))
+        // sc/sc2 are token-count sums; nd·sc2 and sc² are their squares —
+        // products built wide, numerator ≥ 0 by Cauchy–Schwarz
+        .select(col("tok"), col("n_docs_with"), col("sc").as("total"),
+          mulDivWide(wide(col("nd")) * wide(col("sc2"))
+              - wide(col("sc")) * wide(col("sc")),
+            lit(1000000L), wide(col("nd")) * wide(col("sc"))).as("vmr_ppm"))
+        .orderBy(col("total").desc, col("tok"))
+        .limit(20)
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -1855,9 +713,27 @@ object TextQueries {
                      * 1000000 // (CAST(nd.nd AS HUGEINT) * sc)
                   AS BIGINT) AS vmr_ppm
          FROM st, nd
-         ORDER BY total DESC, tok LIMIT 20""",
+         ORDER BY total DESC, tok LIMIT 20"""),
 
-    "q_text_stitch_pairs" ->
+    // shard-boundary stitch detection: doc A's last m tokens equal doc
+    // B's first m — the signature of a document split across shard
+    // boundaries, found as one md5 equi-join of a suffix-hash table
+    // against a prefix-hash table (no text comparison crosses the wire).
+    // m is corpus-tuned: 3 on the random synthetic fixture; real split
+    // corpora use 32+ where a match is near-certain evidence
+    Q("q_text_stitch_pairs", (s, d) => {
+      val t = docs(s, d)
+        .select(col("doc_id"), tokens(lower(col("text"))).as("toks"))
+        .where(size(col("toks")) >= 3)
+      val pre = t.select(col("doc_id").as("idb"),
+        md5(concat_ws(" ", slice(col("toks"), lit(1), lit(3)))).as("h"))
+      val suf = t.select(col("doc_id").as("ida"),
+        md5(concat_ws(" ", slice(col("toks"), lit(-3), lit(3)))).as("h"))
+      suf.join(pre, "h")
+        .where(col("ida") =!= col("idb"))
+        .select(col("ida"), col("idb"))
+        .orderBy("ida", "idb")
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -1871,9 +747,43 @@ object TextQueries {
                         md5(array_to_string(toks[len(toks)-2:len(toks)], ' ')) AS h
                  FROM f)
          SELECT ida, idb FROM suf JOIN pre USING (h)
-         WHERE ida != idb ORDER BY ida, idb""",
+         WHERE ida != idb ORDER BY ida, idb"""),
 
-    "q_text_kn_lm" ->
+    // interpolated Kneser–Ney bigram LM with discount d = 3/4, as EXACT
+    // integer rationals: P(w|v) = max(c(v,w)−d,0)/c(v) + λ(v)·P_cont(w)
+    // over the common denominator 4·c(v)·N gives numerator
+    // max(4c−3,0)·N + 3·N₁₊(v·)·N₁₊(·w) — pure 64-bit integers, so the
+    // smoothed probabilities (ppm) are engine-exact with no ln/float
+    // surface at all. Top-3 continuations per context; the aggregates
+    // are one bigram shuffle plus joins on vocabulary-sized tables
+    Q("q_text_kn_lm", (s, d) => {
+      val t = docs(s, d).select(tokens(lower(col("text"))).as("toks"))
+      val pairs = t.select(explode(
+          when(size(col("toks")) < 2,
+            array().cast("array<struct<ctx:string,nxt:string>>"))
+          .otherwise(transform(sequence(lit(0), size(col("toks")) - 2),
+            i => struct(element_at(col("toks"), i + 1).as("ctx"),
+              element_at(col("toks"), i + 2).as("nxt"))))).as("p"))
+        .select(col("p.ctx").as("ctx"), col("p.nxt").as("nxt"))
+      val big = pairs.groupBy(col("ctx"), col("nxt"))
+        .agg(count(lit(1)).as("cvw"))
+      val cv = pairs.groupBy(col("ctx")).agg(count(lit(1)).as("cv"))
+      val n1v = big.groupBy(col("ctx")).agg(count(lit(1)).as("n1v"))
+      val n1w = big.groupBy(col("nxt")).agg(count(lit(1)).as("n1w"))
+      val nn = big.agg(count(lit(1)).as("nn"))
+      val scored = big
+        .join(cv, "ctx").join(n1v, "ctx").join(n1w, "nxt")
+        .crossJoin(broadcast(nn))
+        .withColumn("p_kn_ppm", expr(
+          "(greatest(4 * cvw - 3, 0) * nn + 3 * n1v * n1w) * 1000000" +
+            " DIV (4 * cv * nn)"))
+      val w = Window.partitionBy(col("ctx"))
+        .orderBy(col("p_kn_ppm").desc, col("nxt"))
+      scored.withColumn("rank", row_number().over(w).cast("long"))
+        .where(col("rank") <= 3)
+        .select("ctx", "rank", "nxt", "cvw", "p_kn_ppm")
+        .orderBy("ctx", "rank")
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -1909,9 +819,27 @@ object TextQueries {
                     ORDER BY p_kn_ppm DESC, nxt) AS BIGINT) AS rank
            FROM sc)
          SELECT ctx, rank, nxt, cvw, p_kn_ppm FROM r WHERE rank <= 3
-         ORDER BY ctx, rank""",
+         ORDER BY ctx, rank"""),
 
-    "q_text_vocab_coverage" ->
+    // vocabulary coverage curve: cumulative token mass of the top-k
+    // vocabulary, per rank — the Zipf audit that sizes a tokenizer
+    // vocabulary ("k tokens cover X% of the corpus"). The raw-token
+    // vocabulary is UNBOUNDED at corpus scale (whitespace tokens, not a
+    // fixed vocab), so rank + running sum come from the StableIds two-phase
+    // prefix scan (range-partition → per-partition offsets → map-side
+    // scan), not a global-ORDER-BY window. Integer ppm coverage
+    Q("q_text_vocab_coverage", (s, d) => {
+      val cnts = postings(s, d).groupBy(col("tok"))
+        .agg(count(lit(1)).as("c"))
+      val tot = cnts.agg(sum(col("c")).as("t"))
+      graft.operators.StableIds.rankAndCumSum(cnts,
+          Seq(col("c").desc, col("tok")), "c", "rank", "cum")
+        .crossJoin(broadcast(tot))
+        .select(col("rank"), col("tok"), col("c"),
+          // cum is a token-count sum — wide path past ~9.2e12 tokens
+          ppmWide(col("cum"), col("t")).as("coverage_ppm"))
+        .orderBy("rank")
+    },
       """WITH t AS (
            SELECT CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
                        ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
@@ -1929,12 +857,35 @@ object TextQueries {
          SELECT rank, tok, c,
                 CAST(CAST(cum AS HUGEINT) * 1000000 // CAST(t AS HUGEINT)
                   AS BIGINT) AS coverage_ppm
-         FROM r, tt ORDER BY rank""",
+         FROM r, tt ORDER BY rank"""),
 
-    // ascending-caps prefix saturation + floor level, mirrored verbatim;
-    // the all-saturated −1 branch is unreachable at bNum/bDen = 9/10
-    // (sat_m would need B ≥ Σcap) but mirrored for formula parity
-    "q_text_mix_waterfill" ->
+    // temperature-scaled mixing weights (α = 0.5): sample sources ∝
+    // √tokens — the standard rebalance that upweights small sources
+    // without letting the biggest dominate. √ is IEEE-correctly-rounded
+    // (bit-identical across engines); it is quantized to integer micro
+    // units AT THE LEAF (audited site, QuantBoundarySpec) so the shares
+    // and epoch factors are pure integer arithmetic. One aggregate over
+    // documents; everything else on the sources-sized table
+    // Waterfilling mixture allocation under availability caps — the
+    // budgeting step temperature/sqrt weighting cannot do: given a token
+    // budget B = ⌊0.9·total⌋ and per-source available tokens cap_i, find
+    // the level L with Σ min(cap_i, L) = B; sources below L are taken
+    // whole ("saturated" — their data is scarcer than the mixture wants),
+    // the rest contribute exactly ⌊L⌋. Closed form over the BOUNDED
+    // sources domain (one corpus-sized token aggregate, then an
+    // ≤m-row window): ascending caps, saturated iff
+    // c_k·(m−k) ≤ B − S_k (the prefix property is exact — f(k) is
+    // non-increasing), L = (B − S_t) DIV (m − t). At sf0.01 the budget
+    // saturates exactly two sources, so BOTH branches gate. Floor-level
+    // semantics (Σalloc ≤ B by < m−t tokens) are the cross-engine
+    // contract; level = −1 flags the degenerate all-saturated case.
+    Q("q_text_mix_waterfill", (s, d) =>
+      waterfill(
+        docs(s, d).groupBy(col("source"))
+          .agg(sum(tokenCount(col("text")).cast("long")).as("cap"))),
+      // ascending-caps prefix saturation + floor level, mirrored verbatim;
+      // the all-saturated −1 branch is unreachable at bNum/bDen = 9/10
+      // (sat_m would need B ≥ Σcap) but mirrored for formula parity
       """WITH t AS (
            SELECT source,
                   CASE WHEN length(trim(text)) = 0 THEN 0
@@ -1967,9 +918,29 @@ object TextQueries {
                 CAST(sat AS BIGINT) AS saturated,
                 CAST(CASE WHEN t = m THEN -1
                           ELSE (b - st0) // (m - t) END AS BIGINT) AS level
-         FROM fl, tt ORDER BY source""",
+         FROM fl, tt ORDER BY source"""),
 
-    "q_text_mix_temperature" ->
+    Q("q_text_mix_temperature", (s, d) => {
+      val cnt = docs(s, d).groupBy(col("source"))
+        .agg(sum(tokenCount(col("text")).cast("long")).as("n_tokens"))
+      val scaled = cnt.withColumn("s_micro",
+        floor(sqrt(col("n_tokens").cast("double")) * 1000000.0 + 0.5)
+          .cast("long"))
+      val tot = scaled.agg(sum(col("s_micro")).as("ts"),
+        count(lit(1)).as("nsrc"))
+      scaled.crossJoin(broadcast(tot))
+        // s_micro is a √tokens micro-sum — wide path at the token scale;
+        // the epoch factor divides two ≤1e9 quantities, so IT stays int64
+        .withColumn("weight_ppm", ppmWide(col("s_micro"), col("ts")))
+        // repetition factor vs a uniform target share, in milli-epochs;
+        // greatest(1, …) guards a source whose share rounds below 1 ppm
+        // (Spark DIV yields NULL on /0, DuckDB // raises — the guard
+        // keeps the two engines identical on degenerate skew)
+        .select(col("source"), col("n_tokens"), col("weight_ppm"),
+          expr("(1000000 DIV nsrc) * 1000 DIV greatest(1L, weight_ppm)")
+            .as("epoch_milli"))
+        .orderBy("source")
+    },
       """WITH t AS (
            SELECT source,
                   CASE WHEN length(trim(text)) = 0 THEN 0
@@ -1992,9 +963,34 @@ object TextQueries {
                      // greatest(1, CAST(s_micro AS HUGEINT) * 1000000
                                     // CAST(ts AS HUGEINT))
                   AS BIGINT) AS epoch_milli
-         FROM sc, tt ORDER BY source""",
+         FROM sc, tt ORDER BY source"""),
 
-    "q_text_source_divergence" ->
+    // pairwise source drift: total-variation distance between per-source
+    // unigram distributions in exact integer ppm — the mix-monitoring
+    // metric a corpus pipeline tracks across ingestion sources. One
+    // shuffle over the token instances; the dense (source × vocab) grid
+    // and the pair join run on tiny aggregate tables. Integer ppm
+    // per-token probabilities keep the whole metric float-free
+    Q("q_text_source_divergence", (s, d) => {
+      val toks = docs(s, d).select(col("source"),
+        explode(tokens(lower(col("text")))).as("tok"))
+      val cnt = toks.groupBy(col("source"), col("tok"))
+        .agg(count(lit(1)).as("c"))
+      val tot = toks.groupBy(col("source")).agg(count(lit(1)).as("t"))
+      val grid = tot.select(col("source"), col("t"))
+        .crossJoin(toks.select(col("tok")).distinct())
+        .join(cnt, Seq("source", "tok"), "left")
+        .na.fill(0L, Seq("c"))
+        .select(col("source"), col("tok"),
+          // c is a token count (sum over rows) — wide path
+          ppmWide(col("c"), col("t")).as("ppm"))
+      grid.as("a").join(grid.as("b"),
+          col("a.tok") === col("b.tok") && col("a.source") < col("b.source"))
+        .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
+        .agg(sum(abs(col("a.ppm") - col("b.ppm"))).as("l1"))
+        .select(col("src_a"), col("src_b"), expr("l1 DIV 2").as("tv_ppm"))
+        .orderBy("src_a", "src_b")
+    },
       """WITH t AS (
            SELECT source,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2016,9 +1012,26 @@ object TextQueries {
                 CAST(sum(abs(a.ppm - b.ppm)) // 2 AS BIGINT) AS tv_ppm
          FROM grid a JOIN grid b
            ON a.tok = b.tok AND a.source < b.source
-         GROUP BY 1, 2 ORDER BY src_a, src_b""",
+         GROUP BY 1, 2 ORDER BY src_a, src_b"""),
 
-    "q_text_simpson" ->
+    // Simpson diversity index per source: D = Σ nᵢ(nᵢ−1) / (N(N−1)) over
+    // the unigram distribution — the probability two random tokens
+    // coincide (the concentration dual of entropy; low D = diverse
+    // vocabulary). Exact integer ppb through the wide path — nᵢ² sums are
+    // unbounded. One token shuffle; per-source rollup is vocabulary-sized
+    Q("q_text_simpson", (s, d) => {
+      val toks = docs(s, d).select(col("source"),
+        explode(tokens(lower(col("text")))).as("tok"))
+      toks.groupBy(col("source"), col("tok")).agg(count(lit(1)).as("c"))
+        .groupBy(col("source"))
+        .agg(sum(col("c")).as("n_tokens"), count(lit(1)).as("vocab"),
+          sum(wide(col("c")) * wide(col("c") - 1L)).as("num"))
+        .select(col("source"), col("n_tokens"), col("vocab"),
+          mulDivWide(col("num"), lit(1000000000L),
+            wide(col("n_tokens")) * wide(col("n_tokens") - 1L))
+            .as("simpson_ppb"))
+        .orderBy("source")
+    },
       s"""WITH t AS (
            SELECT source,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2038,9 +1051,47 @@ object TextQueries {
                      (CAST(n_tokens AS HUGEINT) *
                       CAST(n_tokens - 1 AS HUGEINT)) AS BIGINT)
                   AS simpson_ppb
-         FROM agg ORDER BY source""",
+         FROM agg ORDER BY source"""),
 
-    "q_text_winnow_pairs" ->
+    // winnowing fingerprints (Schleimer et al., SIGMOD'03): hash every
+    // token 3-gram, keep the MIN hash of each 4-window of consecutive
+    // gram positions — guarantees any shared run of ≥ 6 tokens yields a
+    // shared fingerprint, at ~1/4 the fingerprint density of full
+    // shingling. Pairs sharing ≥ 5 selected fingerprints are the
+    // plagiarism/near-copy candidates. Per-doc windows (two window
+    // passes on one doc_id shuffle), then the df-capped pair join
+    // discipline of the dedup family
+    Q("q_text_winnow_pairs", (s, d) => {
+      // fingerprints are consumed three times (df table + both self-join
+      // sides): materialize the two-window-pass derivation once; the hot
+      // set is tiny and broadcasts so the anti-join never shuffles the
+      // fingerprint table (opt r13, guide §2.4/§3.1)
+      val fps = graft.text.Winnowing.fingerprints(postings(s, d),
+        col("doc_id"), col("pos"), col("tok"), k = 3, w = 4)
+        .localCheckpoint()
+      // corpus-relative hot-fingerprint cap (0.2% of docs, floored at 8):
+      // the absolute df > 8 cut went vacuous at sf1 — every fingerprint's
+      // df ≥ 10 under the verbatim 10× fixture, so all were excluded
+      // (same class as the dedup MaxDf scale bug, same fix)
+      val n = docs(s, d).agg(count(lit(1)).as("n"))
+      // hot is a data-scaled aggregate (top ~0.2% of the fingerprint
+      // vocabulary): gate the anti-join's broadcast on its measured row
+      // count — shuffle_hash past the ceiling instead of riding a bare
+      // hint into the broadcast hard limit (opt r14, VERDICT r13 #2);
+      // the gate's count materializes the lazy checkpoint
+      val hot = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
+        .crossJoin(broadcast(n))
+        .where(col("df") > greatest(lit(8L), expr("n DIV 500"))).select("fp")
+        .localCheckpoint(false)
+      val kept = fps.join(graft.util.BroadcastGate.counted(hot),
+        Seq("fp"), "left_anti")
+      kept.as("a").join(kept.as("b"),
+          col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
+        .groupBy(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"))
+        .agg(count(lit(1)).as("shared_fps"))
+        .where(col("shared_fps") >= 5)
+        .orderBy("ida", "idb")
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2075,9 +1126,31 @@ object TextQueries {
                 CAST(count(*) AS BIGINT) AS shared_fps
          FROM kf a JOIN kf b ON a.fp = b.fp AND a.doc_id < b.doc_id
          GROUP BY 1, 2 HAVING count(*) >= 5
-         ORDER BY ida, idb""",
+         ORDER BY ida, idb"""),
 
-    "q_text_cdc_chunks" ->
+    // content-defined chunking: a token ends a chunk when its md5-derived
+    // hash ≡ 0 (mod 16) — boundaries depend only on content, so an
+    // insertion resynchronizes within one expected chunk (the property
+    // fixed-size chunking lacks, and why CDC is the dedup granularity for
+    // drifting corpora). Expected chunk length = 16 tokens. Chunk ids are
+    // an exclusive running boundary count per doc (window over the
+    // doc_id shuffle — parallel across docs); chunks emit count + md5 so
+    // the oracle verifies exact assembled content
+    Q("q_text_cdc_chunks", (s, d) => {
+      val w = Window.partitionBy("doc_id").orderBy("pos")
+        .rowsBetween(Window.unboundedPreceding, -1)
+      postings(s, d)
+        .withColumn("b",
+          (pmod(conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long"),
+            lit(16L)) === 0).cast("long"))
+        .withColumn("chunk_id", coalesce(sum(col("b")).over(w), lit(0L)))
+        .groupBy(col("doc_id"), col("chunk_id"))
+        .agg(count(lit(1)).as("n_tokens"),
+          md5(array_join(transform(
+            array_sort(collect_list(struct(col("pos"), col("tok")))),
+            e => e.getField("tok")), " ")).as("chunk_md5"))
+        .orderBy("doc_id", "chunk_id")
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2097,9 +1170,23 @@ object TextQueries {
                FROM f)
          SELECT doc_id, chunk_id, CAST(count(*) AS BIGINT) AS n_tokens,
                 md5(string_agg(tok, ' ' ORDER BY pos)) AS chunk_md5
-         FROM c GROUP BY 1, 2 ORDER BY doc_id, chunk_id""",
+         FROM c GROUP BY 1, 2 ORDER BY doc_id, chunk_id"""),
 
-    "q_text_chunk_dedup" ->
+    // chunk-level dedup: fingerprint every training chunk and keep the
+    // lowest (doc, idx) occurrence per duplicate group — the dedup
+    // granularity that actually matters for an LLM mix (boilerplate
+    // paragraphs recur across otherwise-distinct documents). Composite
+    // numeric keep_key = doc_id*1e6 + chunk_idx is the deterministic
+    // cross-engine "first wins" tiebreak.
+    Q("q_text_chunk_dedup", (s, d) =>
+      docs(s, d).select(col("doc_id"),
+          posexplode(chunkTokens(col("text"), 32, 24)).as(Seq("chunk_idx", "chunk")))
+        .groupBy(md5(col("chunk")).as("chunk_md5"))
+        .agg(count(lit(1)).as("n_copies"),
+          countDistinct(col("doc_id")).as("n_docs"),
+          min(col("doc_id") * 1000000 + col("chunk_idx")).as("keep_key"))
+        .where(col("n_copies") > 1)
+        .orderBy("chunk_md5"),
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
@@ -2122,17 +1209,24 @@ object TextQueries {
                 min(doc_id * 1000000 + chunk_idx) AS keep_key
          FROM ch GROUP BY 1
          HAVING count(*) > 1
-         ORDER BY chunk_md5""",
+         ORDER BY chunk_md5"""),
 
-    "q_text_split" ->
-      """SELECT doc_id,
-                CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS BIGINT) % 100
-                  AS bucket,
-                CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS BIGINT) % 100 < 95
-                     THEN 'train' ELSE 'val' END AS split
-         FROM documents ORDER BY doc_id""",
-
-    "q_text_decontaminate" ->
+    // benchmark decontamination: corpus docs sharing any token 3-gram with
+    // the eval slice (doc_id % 41 = 0). Eval n-grams broadcast; the corpus
+    // side never shuffles before the per-doc aggregation. Both slices come
+    // from ONE table, so the n-gram projection is built once and cached
+    // (QueryCaches) instead of tokenizing the documents per side
+    Q("q_text_decontaminate", (s, d) => {
+      val ng = QueryCaches.memo(s, d, "decontam_ngrams") {
+        graft.text.Decontaminate.ngramTable(
+          docs(s, d), col("doc_id"), col("text"), n = 3)
+      }
+      graft.text.Decontaminate.contaminationOnNgrams(
+          ng.where(col("doc_id") % 41 =!= 0),
+          ng.where(col("doc_id") % 41 === 0)
+            .withColumnRenamed("doc_id", "__eval_id"))
+        .orderBy("doc_id")
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
@@ -2148,9 +1242,36 @@ object TextQueries {
                 CAST(count(DISTINCT tr.ng) AS BIGINT) AS n_hits,
                 CAST(count(DISTINCT ev.eval_id) AS BIGINT) AS n_eval_docs
          FROM tr JOIN ev USING (ng)
-         GROUP BY 1 ORDER BY doc_id""",
+         GROUP BY 1 ORDER BY doc_id"""),
 
-    "q_text_signal_corr" ->
+    // do the cheap heuristic and the LM signal agree? Pearson correlation
+    // between the quality score and per-token surprisal across the
+    // corpus — the meta-evaluation that decides whether a fast filter
+    // can stand in for an expensive one. Both signals quantize to
+    // integers (identical expression trees → identical doubles → safe
+    // floors), the moments accumulate exactly, and the correlation is
+    // one fixed-shape IEEE expression over those sums
+    Q("q_text_signal_corr", (s, d) => {
+      val q = docs(s, d).select(col("doc_id"),
+        floor(qualityScore(col("text")) * 1000000.0 + 0.5).cast("long")
+          .as("x"))
+      val sur = graft.text.UnigramLm.surprisal(docs(s, d), col("doc_id"),
+        col("text"))
+        .select(col("doc_id"),
+          expr("surprisal_micro DIV greatest(1L, n_tokens)").as("y"))
+      q.join(sur, "doc_id")
+        .agg(count(lit(1)).as("n"),
+          sum(col("x").cast("decimal(38,0)")).cast("double").as("sx"),
+          sum(col("y").cast("decimal(38,0)")).cast("double").as("sy"),
+          sum((col("x") * col("x")).cast("decimal(38,0)")).cast("double").as("sxx"),
+          sum((col("y") * col("y")).cast("decimal(38,0)")).cast("double").as("syy"),
+          sum((col("x") * col("y")).cast("decimal(38,0)")).cast("double").as("sxy"))
+        .select(col("n"),
+          ((col("n").cast("double") * col("sxy") - col("sx") * col("sy")) /
+            (sqrt(col("n").cast("double") * col("sxx") - col("sx") * col("sx")) *
+              sqrt(col("n").cast("double") * col("syy") - col("sy") * col("sy"))))
+            .as("pearson_r"))
+    },
       """WITH t AS (
            SELECT doc_id,
                   CAST(length(text) AS DOUBLE) AS chars,
@@ -2195,9 +1316,33 @@ object TextQueries {
                 (CAST(n AS DOUBLE) * sxy - sx * sy)
                   / (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx)
                      * sqrt(CAST(n AS DOUBLE) * syy - sy * sy)) AS pearson_r
-         FROM m""",
+         FROM m"""),
 
-    "q_text_contamination_by_source" ->
+    // contamination incidence by source — the rollup that tells you
+    // WHICH ingestion feed is leaking eval data (per-doc verdicts exist
+    // in q_text_decontaminate; operations needs the source-level rate).
+    // Reuses the memoized n-gram projection; docs with zero hits count
+    // through the left join
+    Q("q_text_contamination_by_source", (s, d) => {
+      val ng = QueryCaches.memo(s, d, "decontam_ngrams") {
+        graft.text.Decontaminate.ngramTable(
+          docs(s, d), col("doc_id"), col("text"), n = 3)
+      }
+      val hits = graft.text.Decontaminate.contaminationOnNgrams(
+        ng.where(col("doc_id") % 41 =!= 0),
+        ng.where(col("doc_id") % 41 === 0)
+          .withColumnRenamed("doc_id", "__eval_id"))
+        .select(col("doc_id"), lit(1L).as("hit"))
+      docs(s, d).where(col("doc_id") % 41 =!= 0)
+        .select(col("doc_id"), col("source"))
+        .join(hits, Seq("doc_id"), "left")
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"),
+          count(col("hit")).as("n_contaminated"))
+        .withColumn("rate_ppm",
+          expr("n_contaminated * 1000000 DIV n_docs"))
+        .orderBy("source")
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
@@ -2219,9 +1364,26 @@ object TextQueries {
            GROUP BY 1)
          SELECT source, n_docs, n_contaminated,
                 CAST(n_contaminated * 1000000 // n_docs AS BIGINT) AS rate_ppm
-         FROM r ORDER BY source""",
+         FROM r ORDER BY source"""),
 
-    "q_dedup_novelty" ->
+    // chunk-level novelty vs an already-ingested reference corpus
+    // (src0/src1): anti-join on chunk fingerprint — per source, how many
+    // training chunks are genuinely new
+    Q("q_dedup_novelty", (s, d) => {
+      val chunks = docs(s, d)
+        .select(col("doc_id"), col("source"),
+          explode(chunkTokens(col("text"), 32, 24)).as("chunk"))
+        .select(col("doc_id"), col("source"), md5(col("chunk")).as("cmd5"))
+      val refSrc = Seq("src0", "src1")
+      val ref = chunks.where(col("source").isin(refSrc: _*))
+      val rest = chunks.where(!col("source").isin(refSrc: _*))
+      val novel = graft.dedup.Dedup.novelAgainst(rest, ref, "cmd5")
+      rest.groupBy("source").agg(count(lit(1)).as("n_chunks"))
+        .join(novel.groupBy("source").agg(count(lit(1)).as("n_novel")),
+          Seq("source"), "left")
+        .na.fill(0L, Seq("n_novel"))
+        .orderBy("source")
+    },
       """WITH t AS (
            SELECT doc_id, source,
                   CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
@@ -2241,9 +1403,40 @@ object TextQueries {
          SELECT source, CAST(count(*) AS BIGINT) AS n_chunks,
                 CAST(count(*) FILTER (cmd5 NOT IN (SELECT cmd5 FROM ref)) AS BIGINT)
                   AS n_novel
-         FROM rest GROUP BY 1 ORDER BY source""",
+         FROM rest GROUP BY 1 ORDER BY source"""),
 
-    "q_text_gopher" ->
+    // Gopher-style repetition signals: duplicate-token fraction, most
+    // frequent bigram and its share, mean token length — the repetition
+    // filters a pretraining pipeline runs per document
+    Q("q_text_gopher", (s, d) => {
+      val base = docs(s, d).select(col("doc_id"),
+        tokens(lower(col("text"))).as("toks"))
+        .select(col("doc_id"),
+          size(col("toks")).cast("long").as("n_tokens"),
+          size(array_distinct(col("toks"))).cast("long").as("n_distinct"),
+          aggregate(col("toks"), lit(0L), (acc, t) => acc + length(t)).as("char_sum"),
+          col("toks"))
+      val bg = base.select(col("doc_id"), col("n_tokens"),
+          explode(when(size(col("toks")) < 2, array().cast("array<string>"))
+            .otherwise(transform(sequence(lit(0), size(col("toks")) - 2),
+              i => concat_ws(" ", element_at(col("toks"), i + 1),
+                element_at(col("toks"), i + 2))))).as("bg"))
+        .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("cnt"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("doc_id")).orderBy(col("cnt").desc, col("bg"))
+      val top = bg.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
+        .select(col("doc_id"), col("bg").as("top_bigram"), col("cnt").as("top_cnt"))
+      base.join(top, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_tokens"),
+          ((col("n_tokens") - col("n_distinct")).cast("double") /
+            greatest(col("n_tokens"), lit(1L)).cast("double")).as("dup_token_frac"),
+          col("char_sum").cast("double")
+            ./(greatest(col("n_tokens"), lit(1L)).cast("double")).as("mean_tok_len"),
+          col("top_bigram"),
+          (col("top_cnt").cast("double") /
+            greatest(col("n_tokens") - 1, lit(1L)).cast("double")).as("top_bigram_frac"))
+        .orderBy("doc_id")
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
@@ -2274,9 +1467,32 @@ object TextQueries {
                 top_bigram,
                 CAST(top_cnt AS DOUBLE)
                   / CAST(greatest(n_tokens - 1, 1) AS DOUBLE) AS top_bigram_frac
-         FROM b LEFT JOIN top USING (doc_id) ORDER BY b.doc_id""",
+         FROM b LEFT JOIN top USING (doc_id) ORDER BY b.doc_id"""),
 
-    "q_text_bm25" ->
+    // BM25 sparse retrieval: first 10 docs as query bags, top-5 corpus
+    // matches each, stop-terms cut at df > 30% of the corpus. The idf is
+    // the only float (one audited ln per distinct df, quantized to integer
+    // micro-units); every other score factor is an exact integer rational,
+    // so no engine-version float drift can flip a score
+    Q("q_text_bm25", (s, d) => {
+      val all = docs(s, d)
+      // query bag: the 10 lowest-id docs carrying ≥1 informative
+      // (sub-30%-df) term. A fixed first-10 bag is fixture luck — on the
+      // 31-token vocabulary only one term clears the stop cut, and no
+      // low-id doc carries it at sf0.1/sf1, which made this gate row
+      // silently vacuous there (caught by the sf1 VACUOUS status).
+      val n = all.agg(count(lit(1)).as("n"))
+      val docTok = postings(s, d).select(col("doc_id"), col("tok")).distinct()
+      val nonstop = docTok.groupBy("tok").agg(count(lit(1)).as("df"))
+        .crossJoin(broadcast(n))
+        .where(col("df") * 1000 <= col("n") * 300).select("tok")
+      val qids = docTok.join(broadcast(nonstop), "tok")
+        .select("doc_id").distinct().orderBy("doc_id").limit(10)
+      graft.text.Bm25.topK(all, col("doc_id"), col("text"),
+          all.join(broadcast(qids), "doc_id"), col("doc_id"), col("text"),
+          k = 5, maxDfPermille = 300)
+        .orderBy("qid", "rank")
+    },
       s"""WITH ${bm25RankCte(qBag =
         """doc_id IN (
              SELECT nid FROM (
@@ -2284,9 +1500,64 @@ object TextQueries {
                WHERE dfi.df * 1000 <= dfi.n * 300)
              ORDER BY nid LIMIT 10)""")}
          SELECT qid, nid, rank, score_micro FROM lexr WHERE rank <= 5
-         ORDER BY qid, rank""",
+         ORDER BY qid, rank"""),
 
-    "q_text_retrieval_eval" ->
+    // retrieval-quality eval: graded nDCG@10 + MRR over the BM25 ranking
+    // (the metric pair every retrieval stack reports). Ground truth is
+    // deterministic metadata relevance — same source+lang = 3, same
+    // source = 2, same lang = 1 — and IDCG is the LOCAL ideal (the
+    // retrieved list reordered by grade), the standard library behavior
+    // when corpus-wide truth is unknown. The 10 discount values
+    // 1/log2(rank+1) quantize to micro at the leaf (rank ≤ 10 — a
+    // 10-value domain), so DCG/IDCG are exact integer sums and nDCG is
+    // one ppm integer division. MRR counts source-grade hits (grade ≥ 2)
+    Q("q_text_retrieval_eval", (s, d) => {
+      val all = docs(s, d)
+      val n = all.agg(count(lit(1)).as("n"))
+      val docTok = postings(s, d).select(col("doc_id"), col("tok")).distinct()
+      val nonstop = docTok.groupBy("tok").agg(count(lit(1)).as("df"))
+        .crossJoin(broadcast(n))
+        .where(col("df") * 1000 <= col("n") * 300).select("tok")
+      val qids = docTok.join(broadcast(nonstop), "tok")
+        .select("doc_id").distinct().orderBy("doc_id").limit(10)
+      val ranked = graft.text.Bm25.topK(all, col("doc_id"), col("text"),
+        all.join(broadcast(qids), "doc_id"), col("doc_id"), col("text"),
+        k = 10, maxDfPermille = 300)
+      val meta = all.select(col("doc_id"), col("source"), col("lang"))
+      def disc(r: org.apache.spark.sql.Column) =
+        floor(log(lit(2.0)) / log((r + lit(1L)).cast("double"))
+          * lit(1000000.0) + lit(0.5)).cast("long")
+      val iw = Window.partitionBy(col("qid"))
+        .orderBy(col("gain").desc, col("nid"))
+      ranked
+        .join(meta.select(col("doc_id").as("qid"), col("source").as("qsrc"),
+          col("lang").as("qlang")), "qid")
+        .join(meta.select(col("doc_id").as("nid"), col("source").as("nsrc"),
+          col("lang").as("nlang")), "nid")
+        .withColumn("grade",
+          when(col("qsrc") === col("nsrc") && col("qlang") === col("nlang"),
+            3L).when(col("qsrc") === col("nsrc"), 2L)
+            .when(col("qlang") === col("nlang"), 1L).otherwise(0L))
+        .withColumn("gain",
+          when(col("grade") === 3L, 7L).when(col("grade") === 2L, 3L)
+            .when(col("grade") === 1L, 1L).otherwise(0L))
+        .withColumn("irank", row_number().over(iw).cast("long"))
+        .withColumn("dcg_term", col("gain") * disc(col("rank")))
+        .withColumn("idcg_term", col("gain") * disc(col("irank")))
+        .groupBy("qid")
+        .agg(count(lit(1)).as("n_ranked"),
+          sum("dcg_term").as("dcg_micro"),
+          sum("idcg_term").as("idcg_micro"),
+          coalesce(min(when(col("grade") >= 2L, col("rank"))), lit(0L))
+            .as("first_rel_rank"))
+        .withColumn("ndcg_ppm",
+          when(col("idcg_micro") > 0L,
+            expr("dcg_micro * 1000000 DIV idcg_micro")).otherwise(0L))
+        .withColumn("rr_ppm",
+          when(col("first_rel_rank") > 0L,
+            expr("1000000 DIV first_rel_rank")).otherwise(0L))
+        .orderBy("qid")
+    },
       s"""WITH ${bm25RankCte(qBag =
         """doc_id IN (
              SELECT nid FROM (
@@ -2331,9 +1602,27 @@ object TextQueries {
                 CAST(CASE WHEN first_rel_rank > 0
                        THEN 1000000 // first_rel_rank
                        ELSE 0 END AS BIGINT) AS rr_ppm
-         FROM a ORDER BY qid""",
+         FROM a ORDER BY qid"""),
 
-    "q_text_ngram_lm" ->
+    // bigram next-token statistics: top-3 continuations per context token
+    // — the corpus-level conditional distribution a tokenizer/LM data
+    // audit inspects (and the n-gram LM building block)
+    Q("q_text_ngram_lm", (s, d) => {
+      val t = docs(s, d).select(tokens(lower(col("text"))).as("toks"))
+      val pairs = t.select(explode(
+          when(size(col("toks")) < 2,
+            array().cast("array<struct<ctx:string,nxt:string>>"))
+          .otherwise(transform(sequence(lit(0), size(col("toks")) - 2),
+            i => struct(element_at(col("toks"), i + 1).as("ctx"),
+              element_at(col("toks"), i + 2).as("nxt"))))).as("p"))
+        .select(col("p.ctx").as("ctx"), col("p.nxt").as("nxt"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("ctx")).orderBy(col("cnt").desc, col("nxt"))
+      pairs.groupBy("ctx", "nxt").agg(count(lit(1)).as("cnt"))
+        .withColumn("rank", row_number().over(w).cast("long"))
+        .where(col("rank") <= 3)
+        .orderBy("ctx", "rank")
+    },
       """WITH t AS (
            SELECT CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
                        ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
@@ -2348,9 +1637,13 @@ object TextQueries {
                         ORDER BY cnt DESC, nxt) AS BIGINT) AS rank
                FROM c)
          SELECT ctx, nxt, cnt, rank FROM r WHERE rank <= 3
-         ORDER BY ctx, rank""",
+         ORDER BY ctx, rank"""),
 
-    "q_text_surprisal" ->
+    // unigram-LM surprisal (perplexity-proxy quality filter): per-token
+    // −ln p(t) in integer micro-nats summed per doc — order-independent
+    Q("q_text_surprisal", (s, d) =>
+      graft.text.UnigramLm.surprisal(docs(s, d), col("doc_id"), col("text"))
+        .orderBy("doc_id"),
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
@@ -2363,9 +1656,25 @@ object TextQueries {
                 CAST(sum(CAST(floor(-ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE))
                        * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS surprisal_micro
          FROM x JOIN f USING (tok), tt
-         GROUP BY 1 ORDER BY doc_id""",
+         GROUP BY 1 ORDER BY doc_id"""),
 
-    "q_text_neg_sampling" ->
+    // word2vec-style negative-sampling table: weights ∝ count^0.75 (the
+    // unigram smoothing that keeps frequent words from dominating the
+    // contrastive draw). pow quantizes at the leaf per distinct count (a
+    // vocabulary-sized input set — same audit argument as the √ mix
+    // weights) and shares normalize by exact integer division
+    Q("q_text_neg_sampling", (s, d) => {
+      val cnt = postings(s, d).groupBy("tok").agg(count(lit(1)).as("c"))
+      val w = cnt.withColumn("w_micro",
+        floor(pow(col("c").cast("double"), 0.75) * 1000000.0 + 0.5)
+          .cast("long"))
+      w.crossJoin(broadcast(w.agg(sum("w_micro").as("tw"))))
+        .select(col("tok"), col("c"), col("w_micro"),
+          // w_micro ~ 1e6·c^0.75 — a count-derived micro sum; wide path
+          ppmWide(col("w_micro"), col("tw")).as("draw_ppm"))
+        .orderBy(col("draw_ppm").desc, col("tok"))
+        .limit(20)
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2382,9 +1691,20 @@ object TextQueries {
          SELECT tok, c, w_micro,
                 CAST(CAST(w_micro AS HUGEINT) * 1000000 // CAST(tw AS HUGEINT)
                   AS BIGINT) AS draw_ppm
-         FROM w, tw ORDER BY draw_ppm DESC, tok LIMIT 20""",
+         FROM w, tw ORDER BY draw_ppm DESC, tok LIMIT 20"""),
 
-    "q_text_fertility" ->
+    // tokenizer fertility: BPE-ish tokens per whitespace word, by
+    // language — the compute-cost metric behind tokenizer choice (a
+    // language with fertility 2× pays 2× the sequence length for the
+    // same text). Exact integer ppm over the summed counts
+    Q("q_text_fertility", (s, d) =>
+      docs(s, d).groupBy("lang")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(tokenCount(col("text")).cast("long")).as("ws_tokens"),
+          sum(bpeTokenCount(col("text")).cast("long")).as("bpe_tokens"))
+        .withColumn("fertility_ppm",
+          expr("bpe_tokens * 1000000 DIV ws_tokens"))
+        .orderBy("lang"),
       """WITH f AS (
            SELECT lang,
                   CAST(count(*) AS BIGINT) AS n_docs,
@@ -2398,9 +1718,30 @@ object TextQueries {
          SELECT lang, n_docs, ws_tokens, bpe_tokens,
                 CAST(bpe_tokens * 1000000 // ws_tokens AS BIGINT)
                   AS fertility_ppm
-         FROM f ORDER BY lang""",
+         FROM f ORDER BY lang"""),
 
-    "q_text_vocab_overlap" ->
+    // source vocabulary-overlap matrix: pairwise Jaccard of the sources'
+    // vocabularies — the corpus-relatedness map (which sources are
+    // near-copies, which bring genuinely new words). One inverted join
+    // on the term (the same candidate shape as the dedup family), pair
+    // counts + degrees, exact ppm
+    Q("q_text_vocab_overlap", (s, d) => {
+      val sv = postings(s, d)
+        .join(docs(s, d).select(col("doc_id"), col("source")), "doc_id")
+        .select(col("source"), col("tok")).distinct()
+      val deg = sv.groupBy("source").agg(count(lit(1)).as("v"))
+      val pairs = sv.as("a").join(sv.as("b"),
+          col("a.tok") === col("b.tok") && col("a.source") < col("b.source"))
+        .groupBy(col("a.source").as("sa"), col("b.source").as("sb"))
+        .agg(count(lit(1)).as("common"))
+      pairs
+        .join(deg.select(col("source").as("sa"), col("v").as("va")), "sa")
+        .join(deg.select(col("source").as("sb"), col("v").as("vb")), "sb")
+        .select(col("sa"), col("sb"), col("common"),
+          expr("common * 1000000 DIV (va + vb - common)").as("jaccard_ppm"))
+        .orderBy(col("jaccard_ppm").desc, col("sa"), col("sb"))
+        .limit(20)
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2423,9 +1764,20 @@ object TextQueries {
          FROM pairs
          JOIN deg da ON da.source = sa
          JOIN deg db ON db.source = sb
-         ORDER BY jaccard_ppm DESC, sa, sb LIMIT 20""",
+         ORDER BY jaccard_ppm DESC, sa, sb LIMIT 20"""),
 
-    "q_text_ppl_by_source" ->
+    // corpus-level LM quality: mean per-token surprisal by source (the
+    // perplexity proxy rolled up to the mixture-weighting granularity) —
+    // integer micro-nats per token via one exact division over the
+    // summed doc surprisals
+    Q("q_text_ppl_by_source", (s, d) =>
+      graft.text.UnigramLm.surprisal(docs(s, d), col("doc_id"), col("text"))
+        .join(docs(s, d).select(col("doc_id"), col("source")), "doc_id")
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
+          expr("sum(surprisal_micro) DIV sum(n_tokens)")
+            .as("avg_surprisal_micro"))
+        .orderBy("source"),
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
@@ -2445,34 +1797,102 @@ object TextQueries {
                 CAST(CAST(sum(sm) AS BIGINT) // CAST(sum(n_tokens) AS BIGINT)
                   AS BIGINT) AS avg_surprisal_micro
          FROM ds JOIN documents d USING (doc_id)
-         GROUP BY 1 ORDER BY source""",
+         GROUP BY 1 ORDER BY source"""),
 
-    "q_text_dsir_select" -> (dsirCte +
-      """
+    // DSIR data selection (Xie et al. 2023): importance-resample the raw
+    // corpus toward a target distribution (here the `en` stratum stands
+    // in for the trusted corpus) via hashed-ngram log-likelihood-ratio
+    // weights — top-k selection with deterministic (weight, doc_id)
+    // tiebreaks. The lr table is 4096 broadcast rows at ANY corpus size;
+    // scoring is one map-side join + per-doc integer sum (graft.text.Dsir)
+    Q("q_text_dsir_select", (s, d) => {
+      val w = dsirWeights(s, d)
+      w.join(docs(s, d).select("doc_id", "source", "lang"), "doc_id")
+        .select(col("doc_id"), col("source"), col("lang"),
+          col("n_feats"), col("weight_micro"))
+        .orderBy(col("weight_micro").desc, col("doc_id"))
+        .limit(100)
+    },
+      (dsirCte +
+        """
          SELECT w.doc_id, d.source, d.lang, n_feats, weight_micro
          FROM w JOIN documents d USING (doc_id)
-         ORDER BY weight_micro DESC, doc_id LIMIT 100"""),
+         ORDER BY weight_micro DESC, doc_id LIMIT 100""")),
 
-    // identical oracle text as q_text_dsir_select: the engine's two
-    // scoring-join branches are value-equal by construction, so ONE
-    // DuckDB replay gates both — each engine row hashed independently
-    "q_text_dsir_select_shuffle" -> (dsirCte +
-      """
+    // The documented web-scale DSIR degradation, ON the gate: the same
+    // selection computed through Dsir.weights' SHUFFLE branch
+    // (broadcastCeiling below B forces the hinted shuffle-hash scoring
+    // join — the plan a B = 2^28+ web-scale run uses when the lr table
+    // outgrows a broadcast). Values are branch-invariant by
+    // construction (DsirSpec pins bit-equality and the plan
+    // difference); hash-equality with the SAME oracle as
+    // q_text_dsir_select makes the degradation path continuously
+    // oracle-gated, not just spec'd. Not memoized with the broadcast
+    // row on purpose — sharing the memo would gate one branch twice.
+    Q("q_text_dsir_select_shuffle", (s, d) => {
+      val w = QueryCaches.memo(s, d, "dsir_weights_shuffle") {
+        graft.text.Dsir.weights(docs(s, d), col("doc_id"), col("text"),
+          col("lang") === "en", buckets = 4096, broadcastCeiling = 1024)
+      }
+      w.join(docs(s, d).select("doc_id", "source", "lang"), "doc_id")
+        .select(col("doc_id"), col("source"), col("lang"),
+          col("n_feats"), col("weight_micro"))
+        .orderBy(col("weight_micro").desc, col("doc_id"))
+        .limit(100)
+    },
+      // identical oracle text as q_text_dsir_select: the engine's two
+      // scoring-join branches are value-equal by construction, so ONE
+      // DuckDB replay gates both — each engine row hashed independently
+      (dsirCte +
+        """
          SELECT w.doc_id, d.source, d.lang, n_feats, weight_micro
          FROM w JOIN documents d USING (doc_id)
-         ORDER BY weight_micro DESC, doc_id LIMIT 100"""),
+         ORDER BY weight_micro DESC, doc_id LIMIT 100""")),
 
-    "q_text_dsir_shift" -> (dsirCte +
-      """
+    // DSIR distribution shift: what the selector thinks of each source —
+    // per-source feature mass and summed importance weight (negative =
+    // the source reads unlike the target). Sum + count, no division, so
+    // the row is exact-integer; zero-token docs join as 0-weight
+    Q("q_text_dsir_shift", (s, d) =>
+      docs(s, d).select("doc_id", "source")
+        .join(dsirWeights(s, d), Seq("doc_id"), "left")
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(coalesce(col("n_feats"), lit(0L))).as("feat_count"),
+          sum(coalesce(col("weight_micro"), lit(0L))).as("weight_sum_micro"))
+        .orderBy("source"),
+      (dsirCte +
+        """
          SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
                 CAST(sum(coalesce(n_feats, 0)) AS BIGINT) AS feat_count,
                 CAST(sum(coalesce(weight_micro, 0)) AS BIGINT)
                   AS weight_sum_micro
          FROM documents d LEFT JOIN w USING (doc_id)
-         GROUP BY 1 ORDER BY source"""),
+         GROUP BY 1 ORDER BY source""")),
 
-    "q_text_dsir_gumbel" -> (dsirCte +
-      """
+    // DSIR resampling step — Gumbel-top-k: sampling k docs WITHOUT
+    // replacement with probability ∝ w(x) is exactly "top-k by
+    // log w(x) + Gumbel noise" (the Gumbel-max trick the DSIR paper
+    // uses), which distributes as one TakeOrdered — no sequential draws,
+    // no rejection loop. Noise is md5-derived (u=(h+1)/(2^52+1), key =
+    // weight_micro + floor(−ln(−ln u)·1e6 + 0.5)) so the "random" sample
+    // is bitwise reproducible cross-engine and across reruns/layouts
+    Q("q_text_dsir_gumbel", (s, d) => {
+      val h = conv(substring(md5(concat(lit("gumbel:"),
+        col("doc_id").cast("string"))), 1, 13), 16, 10).cast("long")
+      val u = (h + 1L).cast("double") / lit(4503599627370497.0) // 2^52+1
+      dsirWeights(s, d)
+        .join(docs(s, d).select("doc_id", "source"), "doc_id")
+        .withColumn("gumbel_micro",
+          floor(-log(-log(u)) * lit(1000000.0) + lit(0.5)).cast("long"))
+        .withColumn("key_micro", col("weight_micro") + col("gumbel_micro"))
+        .select("doc_id", "source", "weight_micro", "gumbel_micro",
+          "key_micro")
+        .orderBy(col("key_micro").desc, col("doc_id"))
+        .limit(50)
+    },
+      (dsirCte +
+        """
          SELECT w.doc_id, d.source, weight_micro,
                 CAST(floor(-ln(-ln(
                     CAST(CAST('0x' || substr(md5('gumbel:' ||
@@ -2485,9 +1905,18 @@ object TextQueries {
                          + 1 AS DOUBLE) / 4503599627370497.0))
                   * 1000000.0 + 0.5) AS BIGINT) AS key_micro
          FROM w JOIN documents d USING (doc_id)
-         ORDER BY key_micro DESC, doc_id LIMIT 50"""),
+         ORDER BY key_micro DESC, doc_id LIMIT 50""")),
 
-    "q_text_fuzzy_join" ->
+    // fuzzy vocabulary linking: edit-distance ≤ 2 word pairs via FastSS
+    // deletion-neighborhood blocking + exact levenshtein verify. The
+    // oracle computes ALL pairs — set equality proves the blocking's
+    // full-recall theorem held
+    Q("q_text_fuzzy_join", (s, d) => {
+      val vocab = docs(s, d)
+        .select(explode(tokens(lower(col("text")))).as("w")).distinct()
+      graft.text.FuzzyJoin.editDistancePairs2(vocab, col("w"))
+        .orderBy("wa", "wb")
+    },
       """WITH v AS (
            SELECT DISTINCT unnest(
              CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
@@ -2497,9 +1926,27 @@ object TextQueries {
                 CAST(levenshtein(a.w, b.w) AS BIGINT) AS ed
          FROM v a JOIN v b ON a.w < b.w
          WHERE levenshtein(a.w, b.w) <= 2
-         ORDER BY wa, wb""",
+         ORDER BY wa, wb"""),
 
-    "q_text_len_quantiles" ->
+    // exact corpus length quantiles WITHOUT a global sort: aggregate to a
+    // count-per-value histogram (domain-bounded — distinct token counts,
+    // not rows), one running sum over the tiny ordered domain, then pick
+    // the smallest value whose cumulative count reaches ceil(q·N)
+    // (percentile_disc). The scale pattern for exact order statistics
+    // over 100 TB: rows aggregate map-side; only the value domain sorts
+    Q("q_text_len_quantiles", (s, d) => {
+      val n = docs(s, d).select(tokenCount(col("text")).cast("long").as("v"))
+      val hist = n.groupBy("v").agg(count(lit(1)).as("cnt"))
+      val w = Window.orderBy(col("v"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      def pick(q: Double, name: String) =
+        min(when(col("cum") >= ceil(col("total") * lit(q)).cast("long"),
+          col("v"))).as(name)
+      hist.withColumn("cum", sum(col("cnt")).over(w))
+        .crossJoin(broadcast(n.agg(count(lit(1)).as("total"))))
+        .agg(pick(0.1, "p10"), pick(0.5, "p50"),
+          pick(0.9, "p90"), pick(0.99, "p99"))
+    },
       """WITH n AS (
            SELECT CASE WHEN length(trim(text)) = 0 THEN CAST(0 AS BIGINT)
                        ELSE CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
@@ -2513,9 +1960,23 @@ object TextQueries {
                 min(CASE WHEN cum >= CAST(ceil(total * 0.5) AS BIGINT) THEN v END) AS p50,
                 min(CASE WHEN cum >= CAST(ceil(total * 0.9) AS BIGINT) THEN v END) AS p90,
                 min(CASE WHEN cum >= CAST(ceil(total * 0.99) AS BIGINT) THEN v END) AS p99
-         FROM c, t""",
+         FROM c, t"""),
 
-    "q_text_countmin" ->
+    // count-min sketch: 4×1024 integer-counter sketch of the token
+    // stream, point estimates for the 20 most frequent tokens next to
+    // their true counts — md5-derived buckets and exact counters make
+    // the sketch itself bitwise cross-engine, not just within ε
+    Q("q_text_countmin", (s, d) => {
+      val toks = docs(s, d).select(explode(tokens(lower(col("text")))).as("tok"))
+      val sk = graft.operators.CountMin.sketch(toks, col("tok"), d = 4, w = 1024)
+      val truth = toks.groupBy("tok").agg(count(lit(1)).as("true_cnt"))
+        .orderBy(col("true_cnt").desc, col("tok")).limit(20)
+      val est = graft.operators.CountMin.estimate(
+        sk, truth.select(col("tok")), col("tok"), d = 4, w = 1024)
+      truth.join(est.withColumnRenamed("v", "tok"), "tok")
+        .select("tok", "true_cnt", "est")
+        .orderBy(col("true_cnt").desc, col("tok"))
+    },
       """WITH t AS (
            SELECT CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
                        ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
@@ -2539,9 +2000,23 @@ object TextQueries {
                FROM probe LEFT JOIN sk USING (r, bucket) GROUP BY 1)
          SELECT truth.tok, true_cnt, est
          FROM truth JOIN e USING (tok)
-         ORDER BY true_cnt DESC, tok""",
+         ORDER BY true_cnt DESC, tok"""),
 
-    "q_text_heavy_hitters" ->
+    // exact heavy hitters over token bigrams via mergeable Misra–Gries +
+    // candidate recount (operators/HeavyHitters): bounded O(capacity)
+    // state per task in pass 1, broadcast-semi-join recount in pass 2 —
+    // output provably identical to the oracle's plain groupBy + HAVING
+    // (capacity >= k recall guarantee). Bigrams derive map-side from the
+    // token array (zip_with over two slices — no positional self-join)
+    Q("q_text_heavy_hitters", (s, d) => {
+      val toks = tokens(lower(col("text")))
+      val bigrams = docs(s, d).select(
+        explode(when(size(toks) >= 2,
+            zip_with(slice(toks, lit(1), size(toks) - 1), slice(toks, lit(2), size(toks) - 1),
+              (a, b) => concat_ws(" ", a, b)))
+          .otherwise(array().cast("array<string>"))).as("bg"))
+      graft.operators.HeavyHitters.exact(bigrams, col("bg"), k = 900, capacity = 1024)
+    },
       """WITH t AS (
            SELECT CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
                        ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
@@ -2554,9 +2029,26 @@ object TextQueries {
          SELECT v, CAST(count(*) AS BIGINT) AS cnt
          FROM b GROUP BY 1
          HAVING count(*) * 900 > (SELECT n_total FROM n)
-         ORDER BY cnt DESC, v""",
+         ORDER BY cnt DESC, v"""),
 
-    "q_text_oov_rate" ->
+    // tokenizer-vocabulary coverage: per doc, the fraction of tokens
+    // outside the corpus top-100 vocabulary (OOV rate) — the coverage
+    // audit run when sizing a vocabulary. The vocab is tiny and
+    // BROADCAST; empty docs contribute no rows (no token instances)
+    Q("q_text_oov_rate", (s, d) => {
+      val toks = docs(s, d).select(col("doc_id"),
+        explode(tokens(lower(col("text")))).as("tok"))
+      val vocab = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
+        .orderBy(col("cnt").desc, col("tok")).limit(100)
+        .select(col("tok"), lit(1).as("__in"))
+      toks.join(broadcast(vocab), Seq("tok"), "left")
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_tokens"),
+          count(when(col("__in").isNull, 1)).as("n_oov"))
+        .withColumn("oov_frac", col("n_oov").cast("double") /
+          greatest(col("n_tokens"), lit(1L)).cast("double"))
+        .orderBy("doc_id")
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
@@ -2572,9 +2064,34 @@ object TextQueries {
                 CAST(count(CASE WHEN inv IS NULL THEN 1 END) AS BIGINT) AS n_oov,
                 CAST(count(CASE WHEN inv IS NULL THEN 1 END) AS DOUBLE)
                   / CAST(greatest(count(*), 1) AS DOUBLE) AS oov_frac
-         FROM j GROUP BY 1 ORDER BY doc_id""",
+         FROM j GROUP BY 1 ORDER BY doc_id"""),
 
-    "q_text_dup_ngrams" ->
+    // inter-document repetition: per doc, the fraction of its distinct
+    // token 3-grams that occur in at least one OTHER document — the
+    // RefinedWeb/Gopher-style duplicated-n-gram signal at corpus scope.
+    // Plan shape: most n-grams are unique, so instead of joining every
+    // (doc, ng) row against the full df table, only the (small) set of
+    // n-grams with df ≥ 2 joins back — broadcastable, the "hot set"
+    // pattern that keeps the corpus side map-side at 100 TB
+    Q("q_text_dup_ngrams", (s, d) => {
+      // consumed by three branches (df set, per-doc totals, dup join) —
+      // materialize the tokenize+ngram+md5 explode once instead of
+      // re-deriving it per branch (opt r13, guide §2.4)
+      val g = docs(s, d).select(col("doc_id"),
+          explode(array_distinct(tokenNgrams(col("text"), 3))).as("ng"))
+        .withColumn("ng", md5(col("ng")))
+        .localCheckpoint()
+      val dupSet = g.groupBy("ng").agg(count(lit(1)).as("ndocs"))
+        .where(col("ndocs") >= 2).select("ng")
+      val counts = g.groupBy("doc_id").agg(count(lit(1)).as("n_ngrams"))
+      val dup = g.join(broadcast(dupSet), "ng")
+        .groupBy("doc_id").agg(count(lit(1)).as("n_dup"))
+      counts.join(dup, Seq("doc_id"), "left")
+        .na.fill(0L, Seq("n_dup"))
+        .withColumn("dup_frac", col("n_dup").cast("double") /
+          greatest(col("n_ngrams"), lit(1L)).cast("double"))
+        .orderBy("doc_id")
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
@@ -2590,9 +2107,31 @@ object TextQueries {
                 CAST(count(CASE WHEN ndocs >= 2 THEN 1 END) AS DOUBLE)
                   / CAST(greatest(count(*), 1) AS DOUBLE) AS dup_frac
          FROM g JOIN d USING (ng)
-         GROUP BY 1 ORDER BY doc_id""",
+         GROUP BY 1 ORDER BY doc_id"""),
 
-    "q_text_bpe_merges" ->
+    // distributed BPE-trainer step: adjacent-symbol pair statistics over
+    // the word VOCABULARY weighted by word frequency — the argmax pair is
+    // the next BPE merge. Plan shape is the one that scales: corpus scan →
+    // word-count aggregation (map-side combine, one shuffle), then the
+    // char-pair explode runs over the vocabulary (thousands of rows), never
+    // over the corpus
+    Q("q_text_bpe_merges", (s, d) => {
+      val words = docs(s, d)
+        .select(explode(tokens(lower(col("text")))).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("wc"))
+      // split(w, "") keeps a trailing "" (Java Pattern.split) that DuckDB's
+      // string_split drops — filter empties, as fingerprintRolling does
+      val chars = words.withColumn("cs",
+        filter(split(col("w"), ""), c => c =!= lit("")))
+      chars.select(col("wc"), explode(
+          when(size(col("cs")) < 2, array().cast("array<string>"))
+            .otherwise(transform(sequence(lit(0), size(col("cs")) - 2),
+              i => concat(element_at(col("cs"), i + 1), lit(" "),
+                element_at(col("cs"), i + 2))))).as("pair"))
+        .groupBy("pair").agg(sum(col("wc")).as("n_occ"))
+        .orderBy(col("n_occ").desc, col("pair"))
+        .limit(20)
+    },
       """WITH t AS (
            SELECT CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
                        ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
@@ -2603,9 +2142,25 @@ object TextQueries {
          p AS (SELECT wc, cs[i+1] || ' ' || cs[i+2] AS pair
                FROM cs, lateral unnest(range(0, greatest(len(cs) - 1, 0))) u(i))
          SELECT pair, CAST(sum(wc) AS BIGINT) AS n_occ
-         FROM p GROUP BY 1 ORDER BY n_occ DESC, pair LIMIT 20""",
+         FROM p GROUP BY 1 ORDER BY n_occ DESC, pair LIMIT 20"""),
 
-    "q_text_mix_weights" ->
+    // temperature-based mixture reweighting (α = 0.5, the standard
+    // up-weight-the-tail exponent): per-source doc counts → weight n^α →
+    // share of the training mix. The cross-source weight total folds in
+    // SOURCE ORDER over a sorted array — a groupBy sum of doubles would be
+    // partition-order-dependent; this is the aggregate-level analogue of
+    // the project's fixed-order IEEE fold rule
+    Q("q_text_mix_weights", (s, d) => {
+      val counts = docs(s, d).groupBy("source").agg(count(lit(1)).as("n_docs"))
+      counts
+        .agg(array_sort(collect_list(struct(col("source"), col("n_docs")))).as("a"))
+        .select(explode(col("a")).as("e"),
+          aggregate(col("a"), lit(0.0),
+            (acc, x) => acc + sqrt(x.getField("n_docs").cast("double"))).as("total"))
+        .select(col("e.source").as("source"), col("e.n_docs").as("n_docs"),
+          (sqrt(col("e.n_docs").cast("double")) / col("total")).as("share"))
+        .orderBy("source")
+    },
       """WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
                     FROM documents GROUP BY 1),
          t AS (SELECT list_reduce(list_prepend(0.0,
@@ -2613,9 +2168,103 @@ object TextQueries {
                    x -> sqrt(x))),
                  (p, q) -> p + q) AS total FROM c)
          SELECT source, n_docs, sqrt(CAST(n_docs AS DOUBLE)) / t.total AS share
-         FROM c, t ORDER BY source""",
+         FROM c, t ORDER BY source"""),
 
-    "q_text_docfreq" ->
+    // RAKE keyword extraction: stopword runs delimit candidate phrases
+    // (island ids from one per-doc prefix-sum window over the token
+    // stream), word degree/frequency stats aggregate globally, and each
+    // phrase scores the sum of its members' exact milli deg/freq ratios.
+    // Everything is exploded-token joins + aggregations — no per-doc
+    // driver logic — and the only windows are per-doc position scans
+    Q("q_text_rake", (s, d) => {
+      val toks = docs(s, d)
+        .select(col("doc_id"), posexplode(tokens(normalized(col("text")))))
+        .withColumnRenamed("col", "w")
+      val wDoc = Window.partitionBy("doc_id").orderBy("pos")
+      val marked = toks
+        .withColumn("is_stop",
+          col("w").isInCollection(Stopwords).cast("int"))
+        .withColumn("island", sum(col("is_stop")).over(wDoc))
+      val pw = marked.where(col("is_stop") === 0)
+        .select(col("doc_id"), col("island"), col("pos"), col("w"))
+      val phrases = pw
+        .groupBy(col("doc_id"), col("island"))
+        .agg(array_sort(collect_list(struct(col("pos"), col("w")))).as("a"))
+        .select(col("doc_id"), col("island"),
+          transform(col("a"), x => x.getField("w")).as("ws"))
+        .withColumn("phrase", array_join(col("ws"), " "))
+        .withColumn("plen", size(col("ws")).cast("long"))
+      val stats = phrases.select(explode(col("ws")).as("w"), col("plen"))
+        .groupBy("w")
+        .agg(count(lit(1)).as("freq"), sum(col("plen")).as("deg"))
+        .withColumn("score_milli",
+          call_function("div", col("deg") * 1000L, col("freq")))
+      phrases
+        .select(col("doc_id"), col("island"), col("phrase"), col("plen"),
+          explode(col("ws")).as("w"))
+        .join(stats.select(col("w"), col("score_milli")), "w")
+        .groupBy(col("doc_id"), col("island"), col("phrase"), col("plen"))
+        .agg(sum(col("score_milli")).as("pscore"))
+        .groupBy(col("phrase"))
+        .agg(min(col("plen")).as("n_words"), min(col("pscore")).as("score_milli"),
+          count(lit(1)).as("n_occ"))
+        .orderBy(col("score_milli").desc, col("phrase"))
+        .limit(20)
+    },
+      // positional unnest (unnest + generate_subscripts expand in lockstep)
+      // mirrors posexplode; the island window and the deg/freq stats follow
+      // the Spark plan exactly
+      """WITH n AS (
+           SELECT doc_id,
+                  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+           FROM documents),
+         t AS (SELECT doc_id,
+                      CASE WHEN length(nt) = 0 THEN []::VARCHAR[]
+                           ELSE string_split_regex(nt, '\s+') END AS toks
+               FROM n),
+         x AS (SELECT doc_id, unnest(toks) AS w,
+                      generate_subscripts(toks, 1) - 1 AS pos
+               FROM t),
+         m AS (SELECT doc_id, w, pos,
+                      CASE WHEN list_contains(
+                             ['the','a','an','and','or','of','to','in','is','it'], w)
+                           THEN 1 ELSE 0 END AS is_stop
+               FROM x),
+         i AS (SELECT doc_id, w, pos, is_stop,
+                      sum(is_stop) OVER (PARTITION BY doc_id ORDER BY pos)
+                        AS island
+               FROM m),
+         pw AS (SELECT doc_id, island, pos, w FROM i WHERE is_stop = 0),
+         ph AS (SELECT doc_id, island,
+                       string_agg(w, ' ' ORDER BY pos) AS phrase,
+                       CAST(count(*) AS BIGINT) AS plen
+                FROM pw GROUP BY 1, 2),
+         mem AS (SELECT pw.w, ph.plen, pw.doc_id, pw.island, ph.phrase
+                 FROM pw JOIN ph USING (doc_id, island)),
+         st AS (SELECT w, CAST(count(*) AS BIGINT) AS freq,
+                       CAST(sum(plen) AS BIGINT) AS deg
+                FROM mem GROUP BY 1),
+         sc AS (SELECT w, deg * 1000 // freq AS score_milli FROM st),
+         ps AS (SELECT mem.doc_id, mem.island, mem.phrase, mem.plen,
+                       CAST(sum(sc.score_milli) AS BIGINT) AS pscore
+                FROM mem JOIN sc USING (w)
+                GROUP BY 1, 2, 3, 4),
+         agg AS (SELECT phrase, CAST(min(plen) AS BIGINT) AS n_words,
+                        CAST(min(pscore) AS BIGINT) AS score_milli,
+                        CAST(count(*) AS BIGINT) AS n_occ
+                 FROM ps GROUP BY 1)
+         SELECT phrase, n_words, score_milli, n_occ
+         FROM agg ORDER BY score_milli DESC, phrase LIMIT 20"""),
+
+    // corpus document frequency: tokens by number of documents containing
+    // them, top 20 (deterministic tiebreak on the token)
+    Q("q_text_docfreq", (s, d) => {
+      val toks = docs(s, d).select(col("doc_id"),
+        explode(array_distinct(tokens(lower(col("text"))))).as("tok"))
+      toks.groupBy("tok").agg(countDistinct("doc_id").as("df"))
+        .orderBy(col("df").desc, col("tok"))
+        .limit(20)
+    },
       """WITH t AS (
            SELECT doc_id,
                   unnest(list_distinct(
@@ -2623,24 +2272,19 @@ object TextQueries {
                          ELSE string_split_regex(trim(lower(text)), '\s+') END)) AS tok
            FROM documents)
          SELECT tok, count(DISTINCT doc_id) AS df
-         FROM t GROUP BY tok ORDER BY df DESC, tok LIMIT 20""",
+         FROM t GROUP BY tok ORDER BY df DESC, tok LIMIT 20"""),
 
-    "q_text_fingerprint" ->
-      """WITH n AS (
-           SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
-           FROM documents)
-         SELECT doc_id, md5(norm) AS fp_md5,
-                CASE WHEN length(norm) = 0 THEN 0
-                     ELSE list_reduce(
-                            list_prepend(CAST(0 AS BIGINT),
-                              list_transform(string_split(norm, ''),
-                                ch -> CAST(ord(ch) AS BIGINT))),
-                            (a, b) -> (a * 31 + b) % 1000000007) END AS fp_roll
-         FROM n ORDER BY doc_id""",
-
-    // positional unnest: generate_subscripts expands in lockstep with
-    // unnest (1-based → pos-1 matches Spark's 0-based posexplode)
-    "q_text_phrase" ->
+    // exact phrase search over the positional inverted index: per-term
+    // postings pre-filtered by literal (pushdown), pos-adjacency equi-joins
+    Q("q_text_phrase", (s, d) =>
+      graft.text.InvertedIndex.phraseMatches(
+          postings(s, d).withColumnRenamed("tok", "term"), Seq("fast", "table"))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).cast("long").as("n_hits"),
+          min("pos").cast("long").as("first_pos"))
+        .orderBy("doc_id"),
+      // positional unnest: generate_subscripts expands in lockstep with
+      // unnest (1-based → pos-1 matches Spark's 0-based posexplode)
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2656,9 +2300,13 @@ object TextQueries {
          FROM tok a JOIN tok b
            ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
          WHERE a.term = 'fast' AND b.term = 'table'
-         GROUP BY a.doc_id ORDER BY a.doc_id""",
+         GROUP BY a.doc_id ORDER BY a.doc_id"""),
 
-    "q_text_span_removal" ->
+    // corpus-duplicated trigram span removal: tokens covered by any 3-gram
+    // occurring >1 time anywhere are dropped, survivors reassembled
+    Q("q_text_span_removal", (s, d) =>
+      graft.text.SpanDedup.removeDuplicatedSpansFromTokens(postings(s, d), n = 3)
+        .orderBy("doc_id"),
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2691,9 +2339,30 @@ object TextQueries {
          SELECT alld.doc_id AS doc_id,
                 CAST(COALESCE(agg.n_kept, 0) AS BIGINT) AS n_kept,
                 COALESCE(agg.kept_md5, md5('')) AS kept_md5
-         FROM alld LEFT JOIN agg USING (doc_id) ORDER BY doc_id""",
+         FROM alld LEFT JOIN agg USING (doc_id) ORDER BY doc_id"""),
 
-    "q_text_tfidf" ->
+    // per-document top-3 TF-IDF terms, integer-exact: idf quantized to
+    // micro-units per DISTINCT df (the audited-transcendental trick from
+    // BM25), score = tf · idf_micro — pure integer product, no division
+    Q("q_text_tfidf", (s, d) => {
+      val tf = postings(s, d)
+        .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
+      val nDocs = docs(s, d).agg(count(lit(1)).as("n"))
+      val idf = tf.groupBy("tok").agg(count(lit(1)).as("df"))
+        .crossJoin(nDocs) // 1-row broadcast
+        .withColumn("idf_micro",
+          floor(log((col("n") + lit(1.0)) / (col("df") + lit(1.0)))
+            * 1000000.0 + 0.5).cast("long"))
+        .select("tok", "idf_micro")
+      val w = Window.partitionBy("doc_id")
+        .orderBy(col("score_micro").desc, col("tok"))
+      tf.join(idf, "tok")
+        .withColumn("score_micro", col("tf") * col("idf_micro"))
+        .withColumn("rank", row_number().over(w).cast("long"))
+        .where(col("rank") <= 3)
+        .select("doc_id", "rank", "tok", "score_micro")
+        .orderBy("doc_id", "rank")
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2716,9 +2385,26 @@ object TextQueries {
                         ORDER BY score_micro DESC, tok) AS BIGINT) AS rank
                FROM sc)
          SELECT doc_id, rank, tok, score_micro FROM r
-         WHERE rank <= 3 ORDER BY doc_id, rank""",
+         WHERE rank <= 3 ORDER BY doc_id, rank"""),
 
-    "q_text_skipgrams" ->
+    // word2vec-style skip-gram pair statistics (forward window ±0/+1/+2 —
+    // symmetric pairs would just double every count): lead windows over
+    // one doc_id exchange, one hash aggregate, top-20
+    Q("q_text_skipgrams", (s, d) => {
+      val w = Window.partitionBy("doc_id").orderBy("pos")
+      val toks = postings(s, d).withColumnRenamed("tok", "center")
+      // both leads share one WindowSpec → a single Window operator over
+      // one doc_id exchange; the offset union is a post-window explode,
+      // not a second scan
+      val pairs = toks
+        .withColumn("c1", lead(col("center"), 1).over(w))
+        .withColumn("c2", lead(col("center"), 2).over(w))
+        .select(col("center"), explode(array(col("c1"), col("c2"))).as("context"))
+        .where(col("context").isNotNull)
+      pairs.groupBy("center", "context").agg(count(lit(1)).as("cnt"))
+        .orderBy(col("cnt").desc, col("center"), col("context"))
+        .limit(20)
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2738,9 +2424,31 @@ object TextQueries {
          SELECT center, context, CAST(count(*) AS BIGINT) AS cnt
          FROM pairs WHERE context IS NOT NULL
          GROUP BY 1, 2
-         ORDER BY cnt DESC, center, context LIMIT 20""",
+         ORDER BY cnt DESC, center, context LIMIT 20"""),
 
-    "q_text_hash_vectors" ->
+    // hashing-trick document vectorizer (the text→vector bridge): tokens
+    // hash into 16 md5 buckets, per-doc bucket counts form the sparse
+    // feature vector; emitted as a dense ordered fingerprint + summary
+    // stats so the contract stays integer/string-exact
+    Q("q_text_hash_vectors", (s, d) => {
+      val bucketed = postings(s, d)
+        .withColumn("b",
+          pmod(conv(substring(md5(col("tok")), 1, 4), 16, 10).cast("long"), lit(16L)))
+        .groupBy("doc_id", "b").agg(count(lit(1)).as("c"))
+      // dense 16-slot vector per doc (zeros included) via an ordered
+      // collected struct list — no pivot (16 fixed slots, array algebra)
+      bucketed.groupBy("doc_id")
+        .agg(collect_list(struct(col("b"), col("c"))).as("bc"))
+        .select(col("doc_id"),
+          transform(sequence(lit(0L), lit(15L)), i =>
+            coalesce(
+              element_at(map_from_entries(col("bc")), i), lit(0L))).as("v"))
+        .select(col("doc_id"),
+          size(filter(col("v"), x => x > 0L)).cast("long").as("nnz"),
+          aggregate(col("v"), lit(0L), (a, x) => a + x).as("total"),
+          md5(array_join(transform(col("v"), _.cast("string")), ",")).as("vec_md5"))
+        .orderBy("doc_id")
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2760,9 +2468,38 @@ object TextQueries {
                 CAST(count(*) FILTER (c > 0) AS BIGINT) AS nnz,
                 CAST(sum(c) AS BIGINT) AS total,
                 md5(string_agg(CAST(c AS VARCHAR), ',' ORDER BY b)) AS vec_md5
-         FROM dense GROUP BY doc_id ORDER BY doc_id""",
+         FROM dense GROUP BY doc_id ORDER BY doc_id"""),
 
-    "q_text_collocations" ->
+    // PMI-ranked bigram collocations — the phrase-mining signal:
+    // pmi = ln( (c_xy/T) / ((c_x/N)·(c_y/N)) ), computed on integer
+    // counts with ONE leaf-quantized ln per qualifying bigram (count
+    // floor 5 bounds the audited input set); top-20 deterministic
+    Q("q_text_collocations", (s, d) => {
+      val w = Window.partitionBy("doc_id").orderBy("pos")
+      val uni = postings(s, d).groupBy("tok").agg(count(lit(1)).as("cx"))
+      val nTok = postings(s, d).agg(count(lit(1)).as("n"))
+      val bi = postings(s, d)
+        .withColumn("w2", lead(col("tok"), 1).over(w))
+        .where(col("w2").isNotNull)
+        .select(col("tok").as("w1"), col("w2"))
+        .groupBy("w1", "w2").agg(count(lit(1)).as("cxy"))
+        .where(col("cxy") >= 5)
+      val tBi = postings(s, d)
+        .withColumn("w2", lead(col("tok"), 1).over(w))
+        .where(col("w2").isNotNull)
+        .agg(count(lit(1)).as("t"))
+      bi
+        .join(uni.select(col("tok").as("w1"), col("cx").as("c1")), "w1")
+        .join(uni.select(col("tok").as("w2"), col("cx").as("c2")), "w2")
+        .crossJoin(nTok).crossJoin(tBi)
+        .withColumn("pmi_micro",
+          floor(log((col("cxy").cast("double") * col("n") * col("n")) /
+            (col("t").cast("double") * col("c1") * col("c2")))
+            * 1000000.0 + 0.5).cast("long"))
+        .select(col("w1"), col("w2"), col("cxy").as("n_xy"), col("pmi_micro"))
+        .orderBy(col("pmi_micro").desc, col("w1"), col("w2"))
+        .limit(20)
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2789,9 +2526,26 @@ object TextQueries {
          FROM bi
          JOIN uni u1 ON u1.tok = w1
          JOIN uni u2 ON u2.tok = w2, nt, tb
-         ORDER BY pmi_micro DESC, w1, w2 LIMIT 20""",
+         ORDER BY pmi_micro DESC, w1, w2 LIMIT 20"""),
 
-    "q_text_entropy" ->
+    // per-document unigram entropy in micro-nats — the repetitiveness /
+    // diversity quality signal. Integer-exact contract: each distinct
+    // (doc_len, count) ratio's ln is quantized at the leaf (audited
+    // transcendental site), then H = Σ c·ln(dl/c)_micro ÷ dl is all
+    // integer arithmetic
+    Q("q_text_entropy", (s, d) => {
+      val cnt = postings(s, d)
+        .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
+      val dl = cnt.groupBy("doc_id").agg(sum("c").as("dl"))
+      cnt.join(dl, "doc_id")
+        .withColumn("t", floor(log(col("dl").cast("double") / col("c").cast("double"))
+          * 1000000.0 + 0.5).cast("long"))
+        .groupBy("doc_id")
+        .agg(call_function("div", sum(col("c") * col("t")), max(col("dl")))
+          .as("entropy_micro"),
+          max(col("dl")).as("dl"))
+        .orderBy("doc_id")
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2811,9 +2565,39 @@ object TextQueries {
                 CAST(CAST(sum(c * t) AS BIGINT) // max(dl) AS BIGINT)
                   AS entropy_micro,
                 CAST(max(dl) AS BIGINT) AS dl
-         FROM term GROUP BY doc_id ORDER BY doc_id""",
+         FROM term GROUP BY doc_id ORDER BY doc_id"""),
 
-    "q_text_zipf_slope" ->
+    // Zipf rank-frequency fit per source: OLS slope of ln(freq) on
+    // ln(rank) over the source's term table (slope ≈ −1 for natural
+    // text — a corpus-health diagnostic that flags synthetic or
+    // boilerplate-heavy sources). ln is quantized at the leaf per
+    // distinct rank/frequency (both small-integer domains — audited
+    // sites), the OLS moments accumulate as exact integers (DECIMAL(38)
+    // headroom for web-scale vocabularies), and the slope is the same
+    // fixed-shape IEEE expression over those exact sums on both engines
+    Q("q_text_zipf_slope", (s, d) => {
+      val tf = postings(s, d)
+        .join(docs(s, d).select(col("doc_id"), col("source")), "doc_id")
+        .groupBy("source", "tok").agg(count(lit(1)).as("f"))
+      val w = Window.partitionBy("source").orderBy(col("f").desc, col("tok"))
+      val xy = tf.withColumn("rk", row_number().over(w).cast("long"))
+        .select(col("source"),
+          floor(log(col("rk").cast("double")) * 1000000.0 + 0.5)
+            .cast("long").as("x"),
+          floor(log(col("f").cast("double")) * 1000000.0 + 0.5)
+            .cast("long").as("y"))
+      xy.groupBy("source").agg(
+          count(lit(1)).as("n"),
+          sum(col("x").cast("decimal(38,0)")).cast("double").as("sx"),
+          sum(col("y").cast("decimal(38,0)")).cast("double").as("sy"),
+          sum((col("x") * col("x")).cast("decimal(38,0)")).cast("double").as("sxx"),
+          sum((col("x") * col("y")).cast("decimal(38,0)")).cast("double").as("sxy"))
+        .select(col("source"), col("n"),
+          ((col("n").cast("double") * col("sxy") - col("sx") * col("sy")) /
+            (col("n").cast("double") * col("sxx") - col("sx") * col("sx")))
+            .as("zipf_slope"))
+        .orderBy("source")
+    },
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2841,9 +2625,20 @@ object TextQueries {
          SELECT source, n,
                 (CAST(n AS DOUBLE) * sxy - sx * sy)
                   / (CAST(n AS DOUBLE) * sxx - sx * sx) AS zipf_slope
-         FROM m ORDER BY source""",
+         FROM m ORDER BY source"""),
 
-    "q_text_boilerplate_prefix" ->
+    // boilerplate opening detection: shared 3-token document prefixes —
+    // the template-header signal (scraped pages opening with the same
+    // navigation/disclaimer text). One projection + vocabulary-sized
+    // histogram; the prefix complements the stitch (suffix↔prefix) and
+    // span-removal operators
+    Q("q_text_boilerplate_prefix", (s, d) =>
+      docs(s, d).select(concat_ws(" ",
+          slice(tokens(lower(col("text"))), 1, 3)).as("prefix"))
+        .groupBy("prefix").agg(count(lit(1)).as("n_docs"))
+        .where(col("n_docs") >= 2)
+        .orderBy(col("n_docs").desc, col("prefix"))
+        .limit(20),
       """WITH t AS (
            SELECT CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
                        ELSE string_split_regex(trim(lower(text)), '\s+') END
@@ -2852,9 +2647,22 @@ object TextQueries {
          SELECT array_to_string(toks[1:3], ' ') AS prefix,
                 CAST(count(*) AS BIGINT) AS n_docs
          FROM t GROUP BY 1 HAVING count(*) >= 2
-         ORDER BY n_docs DESC, prefix LIMIT 20""",
+         ORDER BY n_docs DESC, prefix LIMIT 20"""),
 
-    "q_text_hapax" ->
+    // vocabulary richness: hapax legomena rate per source — the share of
+    // a source's vocabulary seen exactly once. Boilerplate-heavy or
+    // templated sources show depressed hapax rates; natural text sits
+    // near half its vocabulary. One term-frequency aggregate, then a
+    // sources-sized rollup
+    Q("q_text_hapax", (s, d) =>
+      postings(s, d)
+        .join(docs(s, d).select(col("doc_id"), col("source")), "doc_id")
+        .groupBy("source", "tok").agg(count(lit(1)).as("f"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("vocab"),
+          count(when(col("f") === 1, 1)).as("hapax"))
+        .withColumn("hapax_ppm", expr("hapax * 1000000 DIV vocab"))
+        .orderBy("source"),
       """WITH t AS (
            SELECT doc_id,
                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
@@ -2870,11 +2678,38 @@ object TextQueries {
                FROM tf GROUP BY 1)
          SELECT source, vocab, hapax,
                 CAST(hapax * 1000000 // vocab AS BIGINT) AS hapax_ppm
-         FROM v ORDER BY source""",
+         FROM v ORDER BY source"""),
 
-    "q_text_textrank" -> {
-      def iter(k: Int, prev: String) =
-        s"""c$k AS (SELECT r.node, r.pr // d.deg AS c
+    // TextRank keyword extraction: PageRank over the word co-occurrence
+    // graph (adjacent-token pairs, undirected). Reuses the integer
+    // PageRank operator — ranks in 1e-12 units, bitwise across engines —
+    // so the oracle is the same unrolled recurrence over string nodes.
+    // Graph build is one self-join of the shared postings projection on
+    // (doc, pos+1); vertices are vocabulary-sized, so the per-iteration
+    // rank table broadcasts and each iteration costs one exchange
+    Q("q_text_textrank", (s, d) => {
+      // the co-occurrence edge table is referenced by every PageRank
+      // iteration (nodes, degrees, and the per-iteration contribution
+      // join) — memoize it, or each reference re-runs the postings
+      // self-join (measured 3.7 s → ~1 s at sf0.1)
+      val edges = QueryCaches.memo(s, d, "textrank_edges") {
+        val p = postings(s, d)
+        val adj = p.as("a").join(p.as("b"),
+            col("a.doc_id") === col("b.doc_id") &&
+              col("b.pos") === col("a.pos") + 1 &&
+              col("a.tok") =!= col("b.tok"))
+          .select(col("a.tok").as("u"), col("b.tok").as("v"))
+        adj.select(col("u").as("src"), col("v").as("dst"))
+          .unionByName(adj.select(col("v").as("src"), col("u").as("dst")))
+          .distinct()
+      }
+      graft.operators.PageRank.integerPageRank(edges, col("src"), col("dst"),
+          iters = 3, broadcastRanks = true)
+        .orderBy(col("pr").desc, col("node")).limit(25)
+    },
+      {
+        def iter(k: Int, prev: String) =
+          s"""c$k AS (SELECT r.node, r.pr // d.deg AS c
                     FROM $prev r JOIN deg d USING (node)),
             s$k AS (SELECT e.dst AS node, CAST(sum(c.c) AS BIGINT) AS s
                     FROM e JOIN c$k c ON e.src = c.node GROUP BY 1),
@@ -2882,7 +2717,7 @@ object TextQueries {
                            15 * (1000000000000 // n.n) // 100
                              + 85 * coalesce(s$k.s, 0) // 100 AS pr
                     FROM nodes LEFT JOIN s$k USING (node), n)"""
-      s"""WITH t AS (
+        s"""WITH t AS (
             SELECT doc_id,
                    CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
                         ELSE string_split_regex(trim(lower(text)), '\\s+') END
@@ -2907,9 +2742,22 @@ object TextQueries {
           ${iter(2, "r1")},
           ${iter(3, "r2")}
           SELECT node, pr FROM r3 ORDER BY pr DESC, node LIMIT 25"""
-    },
+      }),
 
-    "q_text_ttr" ->
+    // type-token ratio (lexical diversity) per document — the corpus
+    // curation signal between quality (surface ratios) and vocab metrics
+    // (corpus level). Pure per-row Column algebra over the shared
+    // whitespace tokenizer: no shuffle at all except the output sort;
+    // ratio in exact ppm (WideDiv discipline)
+    Q("q_text_ttr", (s, d) =>
+      docs(s, d)
+        .select(col("doc_id"), tokens(lower(col("text"))).as("toks"))
+        .select(col("doc_id"),
+          size(col("toks")).cast("long").as("n_tokens"),
+          size(array_distinct(col("toks"))).cast("long").as("n_types"))
+        .withColumn("ttr_ppm", when(col("n_tokens") === 0, lit(0L))
+          .otherwise(ppmWide(col("n_types"), col("n_tokens"))))
+        .orderBy("doc_id"),
       s"""WITH t AS (
            SELECT doc_id, $sqlToks AS toks FROM documents)
          SELECT doc_id,
@@ -2919,9 +2767,34 @@ object TextQueries {
                      ELSE CAST(CAST(len(list_distinct(toks)) AS HUGEINT)
                                * 1000000 // len(toks) AS BIGINT)
                 END AS ttr_ppm
-         FROM t ORDER BY doc_id""",
+         FROM t ORDER BY doc_id"""),
 
-    "q_text_heaps" ->
+    // Heaps'-law vocabulary growth curve: cumulative token count vs
+    // cumulative distinct-type count at 10 corpus-order checkpoints
+    // (doc_id deciles). The "will the vocabulary saturate" projection a
+    // tokenizer-budget decision reads. Scalable shape: NO cumulative
+    // distinct-counting pass — each type contributes exactly once at the
+    // decile of its FIRST occurrence (min bucket per token, one
+    // vocabulary-sized aggregate), so cum_types is a running sum over the
+    // 10-row bucket domain (bounded window, documented), and cum_tokens a
+    // second. The postings explode is the only corpus-sized work (shared
+    // memoized postings table).
+    Q("q_text_heaps", (s, d) => {
+      val mx = docs(s, d).agg(max(col("doc_id")).as("mx"))
+      val b = postings(s, d).crossJoin(broadcast(mx))
+        .select(expr("doc_id * 10 DIV (mx + 1)").as("bucket"), col("tok"))
+      val tokCnt = b.groupBy("bucket").agg(count(lit(1)).as("n_toks"))
+      val newTypes = b.groupBy("tok").agg(min(col("bucket")).as("fb"))
+        .groupBy(col("fb").as("bucket")).agg(count(lit(1)).as("n_new"))
+      // ≤ 10-row domain: the running sums are keys-sized by construction
+      val w = org.apache.spark.sql.expressions.Window.orderBy("bucket")
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+      tokCnt.join(newTypes, Seq("bucket"), "left")
+        .na.fill(0L, Seq("n_new"))
+        .select(col("bucket"), sum(col("n_toks")).over(w).as("cum_tokens"),
+          sum(col("n_new")).over(w).as("cum_types"))
+        .orderBy("bucket")
+    },
       s"""WITH t AS (
            SELECT doc_id, $sqlToks AS toks FROM documents),
          x AS (SELECT doc_id, unnest(toks) AS tok FROM t),
@@ -2940,6 +2813,6 @@ object TextQueries {
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                   AS BIGINT) AS cum_types
          FROM tb LEFT JOIN nb ON tb.bucket = nb.bucket
-         ORDER BY bucket"""
+         ORDER BY bucket""")
   )
 }

@@ -41,12 +41,4 @@ object InvertedIndex {
         .drop(s"d$i", s"p$i")
     }
   }
-
-  /** Per-document phrase hit counts (docs with ≥ 1 occurrence). */
-  def phraseCounts(docs: DataFrame, idCol: Column, textCol: Column,
-                   phrase: Seq[String]): DataFrame =
-    phraseMatches(postings(docs, idCol, textCol), phrase)
-      .groupBy("doc_id")
-      .agg(count(lit(1)).cast("long").as("n_hits"),
-        min("pos").cast("long").as("first_pos"))
 }

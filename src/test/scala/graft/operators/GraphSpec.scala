@@ -1,15 +1,16 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
 
+  // the path the triangle queries take: canonical edges → degree-ordered
+  // orientation → out-neighbor intersection count
   private def run(edges: Seq[(Long, Long)]): (Long, Long, Long) = {
-    val row = Graph
-      .triangleCount(edges.toDF("a", "b"), "a", "b")
-      .collect()
-      .head
+    val e = Graph.canonicalEdges(edges.toDF("a", "b"), "a", "b")
+    val row = Graph.countOriented(Graph.orient(e), e).collect().head
     (row.getLong(0), row.getLong(1), row.getLong(2))
   }
 
@@ -39,6 +40,15 @@ class GraphSpec extends SparkSpec {
   test("star graph centered on a hub counts zero despite high degree") {
     val star = (2L to 20L).map(i => (1L, i))
     assert(run(star) === ((20L, 19L, 0L)))
+  }
+
+  test("countOriented rejects non-integral node ids, naming the column") {
+    // a string id would cast to NULL and vanish from the adjacency lists,
+    // undercounting with no error
+    val e = Seq(("a", "b"), ("b", "c"), ("a", "c")).toDF("u", "v")
+    val dir = e.select(col("u").as("s"), col("v").as("t"), lit(0L).as("tk"))
+    val err = intercept[IllegalArgumentException](Graph.countOriented(dir, e))
+    assert(err.getMessage.contains("'s' has type string"), err.getMessage)
   }
 
   private def peel(edges: Seq[(Long, Long)], k: Int, rounds: Int): Map[Long, Long] =

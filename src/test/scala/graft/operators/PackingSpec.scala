@@ -78,4 +78,15 @@ class PackingSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       Packing.packByBudget(df.withColumn("bin", lit(1)), col("doc_id"), col("n"), 10L))
   }
+
+  test("a NULL token count fails the job, naming the column") {
+    // getLong reads a NULL as 0: unchecked, the row would pack as an empty
+    // document and the bins after it would come out silently wrong
+    val withNull = Seq((0L, Some(3L)), (1L, None), (2L, Some(4L)))
+      .toDF("doc_id", "n")
+    val err = intercept[Exception](
+      Packing.packByBudget(withNull, col("doc_id"), col("n"), 4L).collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("column 'n' holds a NULL")), err)
+  }
 }

@@ -20,15 +20,6 @@ class SkewSpec extends SparkSpec {
     }
   }
 
-  test("saltedSum equals plain sum on an integral column") {
-    val plain = ev.groupBy("event_type").agg(sum("user_id"))
-      .as[(String, Long)].collect().toMap
-    val salted = Skew.saltedSum(ev, col("event_type"), col("user_id"),
-      Seq(col("event_id")), 8)
-      .as[(String, Long)].collect().toMap
-    assert(salted == plain)
-  }
-
   test("saltedJoin is row-identical to the plain join on a skewed fixture") {
     // 90% of left rows share key 1 — the shape salting exists for
     val left = (1L to 1000L).map(i => (if (i <= 900) 1L else i, i))

@@ -104,4 +104,15 @@ class StableIdsSpec extends SparkSpec {
       .select("event_id", "m").as[(Long, Long)].collect().toSet
     assert(a == b)
   }
+
+  test("a NULL value fails rankAndCumSums and runningMaxes, naming the column") {
+    val df = Seq((1L, Some(2L)), (2L, None), (3L, Some(5L))).toDF("k", "v")
+    for (scan <- Seq(
+        () => StableIds.rankAndCumSums(df, Seq($"k"), Seq("v" -> "c")),
+        () => StableIds.runningMaxes(df, Seq($"k"), Seq("v" -> "m")))) {
+      val err = intercept[Exception](scan().collect())
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("column 'v' holds a NULL")), err)
+    }
+  }
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
-import graft.queries.EngineQueries
+import graft.{SparkEntry, SparkSpec}
 
 /** Plan-shape contract for the Q5-style star join: every dimension
   * broadcasts and the fact table never shuffles for a join — the only
@@ -9,7 +8,7 @@ import graft.queries.EngineQueries
 class StarJoinPlanSpec extends SparkSpec {
 
   test("q_eng_local_supplier: five broadcast joins, no sort-merge, one agg exchange") {
-    val df = EngineQueries.queries("q_eng_local_supplier")(spark, sf)
+    val df = SparkEntry.queries("q_eng_local_supplier")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("SortMergeJoin"), "no join may shuffle the fact table")
     val nBhj = "BroadcastHashJoin".r.findAllMatchIn(plan).size

@@ -1,10 +1,14 @@
 #!/usr/bin/env python3
-"""Local pre-validation of SparkEntry.queries vs DuckDB oracles.
+"""Local pre-validation of the query registry against its DuckDB twins.
 
-Mimics the driver's correctness gate: reads each query's parquet dump
-(produced by `sbt "runMain graft.Verify <sfDir> <outDir>"`), runs the
-matching oracle SQL in DuckDB over the same source tables, sorts columns by
-name, sorts rows, and compares values exactly.
+Mimics the driver's correctness gate. `sbt "runMain graft.Verify <sfDir>
+<outDir>"` writes each query's parquet dump plus oracle_sql.json, which
+holds the oracle twin of every registration (`SparkEntry.oracleSql`; each
+query file registers a query once, as `Q(name, body, oracle)`). This
+script runs each query's oracle SQL in DuckDB over the same source tables,
+sorts columns by name, sorts rows, and compares values exactly. A dump
+with no oracle_sql.json entry (only possible for an output directory left
+over from an older tree) falls back to `rows-only`: pass iff non-empty.
 
 Usage: python3 tools/check_oracle.py <sfDir> <outDir>
 """
