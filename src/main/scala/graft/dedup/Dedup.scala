@@ -67,6 +67,11 @@ object Dedup {
     array_distinct(transform(shingleCol,
       s => conv(substring(md5(s), 1, 15), 16, 10).cast("long")))
 
+  /** DuckDB oracle twin for [[shingleHashes]] over a shingle list. */
+  def sqlShingleHashes(shingles: String): String =
+    s"""list_distinct(list_transform($shingles,
+                     s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)))"""
+
   // ------------------------------------------------------ exact dedup
 
   /** Exact duplicate groups: one row per distinct fingerprint with the
@@ -93,6 +98,11 @@ object Dedup {
       struct(lit(b).as("band"),
         md5(concat((0 until r).map(j => element_at(sig, b * r + j + 1)): _*)).as("bh"))
     }: _*)
+
+  /** DuckDB oracle twin for [[lshBands]]' bucket hash: the md5 of band
+    * `b` (a SQL column, 0-based) of the 1-based signature list `sig`. */
+  def sqlLshBandHash(sig: String, r: Int): String =
+    (1 to r).map(j => s"$sig[$r*b+$j]").mkString("md5(", " || ", ")")
 
   /** Candidate pairs from LSH banding: ids sharing any (band, bucket).
     * The join key is the band hash — this is the operator's scale story:

@@ -1,7 +1,7 @@
 package graft.multimodal
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 
 /** Typed metadata travelling with every media payload. Field names are the
   * output column names (encoder binds by name). */
@@ -170,6 +170,18 @@ object Multimodal {
         floor(col("window_idx") * windowMs / 1000.0 *
           col("sample_rate_hz").cast("double")).cast("long").as("start_sample"))
 
+  /** Byte `i` (0 until 16) of the decoded payload as a long: the i-th
+    * hex pair of `payload_md5` (payload = unhex(md5)), the pixel or
+    * sample the declarative media operators read. */
+  def payloadByte(i: Int): Column =
+    conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
+
+  /** DuckDB oracle twin for [[payloadByte]]: all 16 payload bytes as a
+    * BIGINT list, parsed from the md5 hex `hex`. */
+  def sqlPayloadBytes(hex: String): String =
+    s"""list_transform(range(0, 16),
+                     i -> CAST('0x' || substr($hex, 2*i + 1, 2) AS BIGINT))"""
+
   /** ViT-style patch statistics over the 4×4 synthetic grayscale image:
     * 2×2 patches (4 per image) with integer pixel sums. Fully declarative
     * — the pixel-index → patch-index algebra runs in Catalyst over the
@@ -178,12 +190,10 @@ object Multimodal {
     * covers rows [2·(p/2), +2) × cols [2·(p%2), +2) of the row-major
     * grid. */
   def patchSums(media: DataFrame): DataFrame = {
-    def px(i: Int) =
-      conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
     val patches = array((0 until 4).map { p =>
       val (pr, pc) = (p / 2, p % 2)
       val sum = (for { dr <- 0 to 1; dc <- 0 to 1 }
-        yield px((2 * pr + dr) * 4 + 2 * pc + dc)).reduce(_ + _)
+        yield payloadByte((2 * pr + dr) * 4 + 2 * pc + dc)).reduce(_ + _)
       struct(lit(p.toLong).as("patch_idx"), sum.as("patch_sum"))
     }: _*)
     media.where(col("meta.media_type") === "image")
@@ -202,16 +212,27 @@ object Multimodal {
     * whose pixel patterns agree above/below their own means collide
     * regardless of global brightness — the invariance that makes pHash a
     * dedup key where raw-byte md5 is not. */
-  def phash(media: DataFrame): DataFrame = {
-    def px(i: Int) =
-      conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
-    val pixels = (0 until 16).map(px)
+  def phash(media: DataFrame): DataFrame =
+    meanThresholdHash(media, (0 until 16).map(payloadByte))
+
+  /** Per image, the threshold-at-mean hash of 16 pixels: bit i is set iff
+    * `pixels(i)`·16 > the pixel total. */
+  private def meanThresholdHash(media: DataFrame,
+                                pixels: Seq[Column]): DataFrame = {
     val total = pixels.reduce(_ + _)
     val bits = (0 until 16).map(i =>
       when(pixels(i) * 16 > total, lit(1L << i)).otherwise(lit(0L)))
     media.where(col("meta.media_type") === "image")
       .select(col("media_id"), bits.reduce(_ + _).as("phash"))
   }
+
+  /** DuckDB oracle twin for [[meanThresholdHash]] over the columns `bytes`
+    * and `total`, pixel i read as the SQL expression `px`. */
+  def sqlMeanThresholdHash(px: String = "bytes[i+1]"): String =
+    s"""CAST(list_reduce(list_prepend(0::BIGINT,
+                     [CASE WHEN $px * 16 > total THEN (1::BIGINT << i)
+                           ELSE 0::BIGINT END for i in range(0, 16)]),
+                     (a, b) -> a + b) AS BIGINT)"""
 
   /** Per-image exposure audit from the decoded pixel grid: counts of
     * pixels below `lo` (shadows) and at/above `hi` (highlights), the
@@ -220,9 +241,7 @@ object Multimodal {
     * algebra over the decoded bytes; the kind of filter a multimodal
     * curation funnel applies before expensive feature extraction. */
   def exposure(media: DataFrame, lo: Int, hi: Int): DataFrame = {
-    def px(i: Int) =
-      conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
-    val pixels = (0 until 16).map(px)
+    val pixels = (0 until 16).map(payloadByte)
     val nDark = pixels.map(p => when(p < lo, lit(1L)).otherwise(lit(0L))).reduce(_ + _)
     val nBright = pixels.map(p => when(p >= hi, lit(1L)).otherwise(lit(0L))).reduce(_ + _)
     media.where(col("meta.media_type") === "image")
@@ -268,17 +287,9 @@ object Multimodal {
     * image-dedup evasion a plain perceptual hash misses. Same
     * threshold-at-mean bit rule, so a mirrored copy's mirror-hash equals
     * the original's plain hash exactly. */
-  def phashMirrored(media: DataFrame): DataFrame = {
-    def px(i: Int) =
-      conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
-    def mirrored(i: Int) = px(4 * (i / 4) + (3 - i % 4))
-    val pixels = (0 until 16).map(mirrored)
-    val total = pixels.reduce(_ + _)
-    val bits = (0 until 16).map(i =>
-      when(pixels(i) * 16 > total, lit(1L << i)).otherwise(lit(0L)))
-    media.where(col("meta.media_type") === "image")
-      .select(col("media_id"), bits.reduce(_ + _).as("phash"))
-  }
+  def phashMirrored(media: DataFrame): DataFrame =
+    meanThresholdHash(media,
+      (0 until 16).map(i => payloadByte(4 * (i / 4) + (3 - i % 4))))
 
   /** Banded near-match between two signature tables (each (media_id,
     * phash)): same 1-of-4-nibble candidate rule as [[phashPairs]], exact
@@ -312,10 +323,8 @@ object Multimodal {
     * decode, same discipline as [[phash]]; band-joinable with
     * [[phashPairs]] (15 ≤ 16 bits, nibble banding unchanged). */
   def audioFingerprint(media: DataFrame): DataFrame = {
-    def e(i: Int) =
-      conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
     val bits = (0 until 15).map(i =>
-      when(e(i + 1) > e(i), lit(1L << i)).otherwise(lit(0L)))
+      when(payloadByte(i + 1) > payloadByte(i), lit(1L << i)).otherwise(lit(0L)))
     media.where(col("meta.media_type") === "audio")
       .select(col("media_id"), bits.reduce(_ + _).as("phash"))
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
@@ -92,8 +92,15 @@ object Graph {
         s"countOriented: node id column '$c' has type ${other.simpleString}; " +
           "ids must be integral (tinyint, smallint, int or bigint)")
     }
-    val adj = dir.groupBy(col("s"))
-      .agg(array_sort(collect_list(col("t").cast("long"))).as("nbrs"))
+    // a NULL id (a caller that bypasses canonicalEdges) would drop out the
+    // same silent way — collect_list skips a NULL `t`, the joins below a
+    // NULL `s` — so the adjacency aggregate, which reads every row, fails
+    // on one instead, naming the column (no extra job)
+    def nonNull(c: String): Column = when(col(c).isNull,
+      raise_error(lit(s"countOriented: NULL node id in column '$c'")))
+      .otherwise(col(c))
+    val adj = dir.groupBy(nonNull("s").as("s"))
+      .agg(array_sort(collect_list(nonNull("t").cast("long"))).as("nbrs"))
     val tri = dir
       .join(adj.select(col("s"), col("nbrs").as("na")), "s")
       .join(adj.select(col("s").as("t"), col("nbrs").as("nb")), "t")

@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.WideDiv.{mulDivWide, mulDivWideDec, ppmWide, sqlMulDiv, wide}
+import graft.queries.QueryBlocks.{dailyRevenue, moneySum, orderParts,
+  sqlDailyRevenue, sqlLangLengthSample, sqlMoneySum, sqlOrderParts}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -17,22 +19,13 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object AnalyticsQueries {
 
-  private def moneySum(c: Column): Column =
-    graft.functions.WideDiv.decSumToDouble(sum(c.cast("decimal(18,6)")))
-
-  private def sqlMoneySum(expr: String): String =
-    graft.functions.WideDiv.sqlDecSumToDouble(
-      s"sum(CAST($expr AS DECIMAL(18,6)))")
-
   /** Memoized weighted co-purchase graph (parts sharing ≥ 2 orders),
     * directed both ways: (src, dst, w) with w = co-occurrence count. The
     * BFS and shortest-path queries reference it once per hop — without
     * the cache every reference re-runs the lineitem self-join. */
   private def copurchaseEdges(s: SparkSession, d: String): DataFrame =
     QueryCaches.memo(s, d, "copurchase_edges") {
-      val op = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
+      val op = orderParts(s, d)
       val und = op.as("a")
         .join(op.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
         .groupBy(col("a.p").as("u"), col("b.p").as("v"))
@@ -83,7 +76,7 @@ object AnalyticsQueries {
 
   /** Shared SQL CTE chain for the same graph (mirrors [[copurchaseEdges]]). */
   private val copurchaseSql =
-    """op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+    s"""op AS ($sqlOrderParts),
        und AS MATERIALIZED (SELECT a.p AS u, b.p AS v, CAST(count(*) AS BIGINT) AS w
                FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
                GROUP BY 1, 2 HAVING count(*) >= 2),
@@ -892,21 +885,7 @@ object AnalyticsQueries {
     },
       // identical bottom-k-by-md5-priority sample per group, then the
       // aggregate's all-integer rank reads idx = (m-1)*p // 100 (0-based)
-      """WITH pr AS (
-           SELECT lang, doc_id, n_chars,
-                  CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)
-                    AS BIGINT) AS p
-           FROM documents),
-         s AS (SELECT lang, n_chars,
-                      row_number() OVER (PARTITION BY lang
-                                         ORDER BY p, doc_id) AS rk
-               FROM pr),
-         kk AS (SELECT lang, n_chars FROM s WHERE rk <= 256),
-         r AS (SELECT lang, n_chars,
-                      row_number() OVER (PARTITION BY lang
-                                         ORDER BY n_chars) AS rn,
-                      count(*) OVER (PARTITION BY lang) AS m
-               FROM kk)
+      s"""WITH ${sqlLangLengthSample("documents")}
          SELECT lang, CAST(max(m) AS BIGINT) AS n_sample,
                 CAST(max(CASE WHEN rn = (m-1)*10//100 + 1 THEN n_chars END)
                   AS BIGINT) AS q10,
@@ -955,21 +934,7 @@ object AnalyticsQueries {
     },
       // identical sample + rank reads as q_eng_sketch_quantiles, then the
       // exact-rank scoring join (count <= v, x1e6, truncating //)
-      """WITH pr AS (
-           SELECT lang, doc_id, n_chars,
-                  CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)
-                    AS BIGINT) AS p
-           FROM documents),
-         s AS (SELECT lang, n_chars,
-                      row_number() OVER (PARTITION BY lang
-                                         ORDER BY p, doc_id) AS rk
-               FROM pr),
-         kk AS (SELECT lang, n_chars FROM s WHERE rk <= 256),
-         r AS (SELECT lang, n_chars,
-                      row_number() OVER (PARTITION BY lang
-                                         ORDER BY n_chars) AS rn,
-                      count(*) OVER (PARTITION BY lang) AS m
-               FROM kk),
+      s"""WITH ${sqlLangLengthSample("documents")},
          sk AS (SELECT lang,
                        max(CASE WHEN rn = (m-1)*50//100 + 1 THEN n_chars END)
                          AS q50,
@@ -1275,9 +1240,7 @@ object AnalyticsQueries {
     // most likely level shift. One days-sized window after the daily
     // aggregate; the top-5 |CUSUM| days are the changepoint candidates
     Q("q_eng_cusum", (s, d) => {
-      val daily = Tables.orders(s, d)
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long")).as("x"))
+      val daily = dailyRevenue(s, d)
       val tot = daily.agg(sum("x").as("t"), count(lit(1)).as("n"))
       val w = Window.orderBy("day")
       daily.crossJoin(broadcast(tot))
@@ -1287,11 +1250,8 @@ object AnalyticsQueries {
         .orderBy(abs(col("cusum")).desc, col("day"))
         .limit(5)
     },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
-           FROM orders GROUP BY 1),
+      s"""WITH daily AS (
+           ${sqlDailyRevenue()}),
          tot AS (SELECT CAST(sum(x) AS BIGINT) AS t,
                         CAST(count(*) AS BIGINT) AS n
                  FROM daily),
@@ -1714,9 +1674,7 @@ object AnalyticsQueries {
     // feeds the 7 windows it belongs to), then the rank rule selects the
     // two middle values — integer cents, full windows only
     Q("q_eng_moving_median", (s, d) => {
-      val daily = Tables.orders(s, d)
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long")).as("x"))
+      val daily = dailyRevenue(s, d)
       val cov = daily.select(
         explode(sequence(col("day"), date_add(col("day"), 6))).as("wday"),
         col("day"), col("x"))
@@ -1732,11 +1690,8 @@ object AnalyticsQueries {
         .select(col("wday").cast("string").as("day"), col("median_cents2"))
         .orderBy("day")
     },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
-           FROM orders GROUP BY 1),
+      s"""WITH daily AS (
+           ${sqlDailyRevenue()}),
          cov AS (SELECT CAST(t.d2 AS DATE) AS wday, day, x
                  FROM daily, unnest(generate_series(CAST(day AS TIMESTAMP),
                           CAST(day AS TIMESTAMP) + INTERVAL 6 DAY,
@@ -2108,10 +2063,7 @@ object AnalyticsQueries {
     // corpus-sized work is the daily aggregate.
     Q("q_eng_acf", (s, d) => {
       import graft.functions.WideDiv.mulDivWideSigned
-      val daily = Tables.orders(s, d)
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
-          .as("x"))
+      val daily = dailyRevenue(s, d)
       val tot = daily.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
       val c = daily.crossJoin(broadcast(tot))
         .select(col("day"),
@@ -2131,11 +2083,8 @@ object AnalyticsQueries {
             .as("acf_ppm"))
         .orderBy("lag")
     },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
-           FROM orders GROUP BY 1),
+      s"""WITH daily AS (
+           ${sqlDailyRevenue()}),
          tot AS (SELECT CAST(count(*) AS HUGEINT) AS n,
                         CAST(sum(x) AS HUGEINT) AS sx FROM daily),
          c AS (SELECT day, n * x - sx AS c FROM daily, tot),
@@ -2225,10 +2174,7 @@ object AnalyticsQueries {
     // SF) — keys-sized, never corpus-sized.
     Q("q_eng_runs_test", (s, d) => {
       import graft.functions.WideDiv.mulDivWide
-      val daily = Tables.orders(s, d)
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
-          .as("x"))
+      val daily = dailyRevenue(s, d)
       // bounded-domain window: distinct order days, constant in corpus size
       val w = Window.orderBy("day")
       val sg = daily
@@ -2257,11 +2203,8 @@ object AnalyticsQueries {
               col("dd") * col("dd") * wide(col("p") + col("m") - 1),
               lit(1000000L), col("den"))).as("z2_micro"))
     },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
-           FROM orders GROUP BY 1),
+      s"""WITH daily AS (
+           ${sqlDailyRevenue()}),
          df AS (SELECT day, x - lag(x) OVER (ORDER BY day) AS dx FROM daily),
          sg AS (SELECT day, CASE WHEN dx > 0 THEN 1 ELSE -1 END AS sg
                 FROM df WHERE dx IS NOT NULL AND dx <> 0),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.WideDiv.{mulDivWide, ppmWide, sqlMulDiv, sqlPpm, wide}
+import graft.queries.QueryBlocks.sqlLangLengthSample
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -160,21 +161,7 @@ object DataQualityQueries {
       // NULL quantile) on exactly the incomplete corpora the n_nulls
       // column exists to flag (ADVICE r11). The exact aggregates in ex
       // keep counting ALL rows — n_nulls stays the completeness readout.
-      """WITH pr AS (
-           SELECT lang, doc_id, n_chars,
-                  CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)
-                    AS BIGINT) AS p
-           FROM documents WHERE n_chars IS NOT NULL),
-         s AS (SELECT lang, n_chars,
-                      row_number() OVER (PARTITION BY lang
-                                         ORDER BY p, doc_id) AS rk
-               FROM pr),
-         kk AS (SELECT lang, n_chars FROM s WHERE rk <= 256),
-         r AS (SELECT lang, n_chars,
-                      row_number() OVER (PARTITION BY lang
-                                         ORDER BY n_chars) AS rn,
-                      count(*) OVER (PARTITION BY lang) AS m
-               FROM kk),
+      s"""WITH ${sqlLangLengthSample("documents WHERE n_chars IS NOT NULL")},
          sk AS (SELECT lang,
                   CAST(max(CASE WHEN rn = (m-1)*25//100 + 1 THEN n_chars END)
                     AS BIGINT) AS q25,

@@ -2,7 +2,9 @@ package graft.queries
 
 import graft.Tables
 import graft.dedup.Dedup
+import graft.queries.QueryBlocks.sqlEmbeddings
 import graft.similarity.Similarity
+import graft.text.TextFunctions.{sqlNormalized, sqlTokens}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -64,8 +66,7 @@ object DedupQueries {
           .cast("long") % m === 0
       pairs.where(inSample(col("ida")) || inSample(col("idb")))
     }
-  // oracle twin (inlined at the three `keep` CTE sites):
-  //   HAVING count(*) <= greatest(8, (SELECT count(*) FROM documents) // 500)
+  // oracle twin: the `keep` CTE of [[dfCappedCandCte]]
   // metadata-cheap corpus count, cached per (session, dir) like QueryCaches
   private val countCache =
     scala.collection.concurrent.TrieMap.empty[(Int, String), Long]
@@ -90,6 +91,15 @@ object DedupQueries {
     QueryCaches.memo(s, d, "dedup_sig") {
       docs(s, d).select(col("doc_id"), Dedup.shingles(col("text"), NGRAM).as("shingles"))
         .withColumn("sig", Dedup.minhashSignature(col("shingles"), K))
+    }
+
+  /** Memoized 60-bit shingle-hash arrays `(doc_id, hs)`: the candidate
+    * stage and both verify joins of the jaccard, threshold-sweep,
+    * containment and prefix-filter queries reuse the hash arrays. */
+  private def dedupHashes(s: SparkSession, d: String): DataFrame =
+    QueryCaches.memo(s, d, "dedup_hashes") {
+      withSig(s, d)
+        .select(col("doc_id"), Dedup.shingleHashes(col("shingles")).as("hs"))
     }
 
   /** Cached SimHash signatures (shared by the _sig and _pairs queries). */
@@ -181,6 +191,40 @@ object DedupQueries {
       .orderBy("cluster_id")
   }
 
+  /** `edges` + recursive `reach(id, r)` over a pair CTE `p(va, vb)`: every
+    * node with each id it reaches — min(r) is the component label. Needs
+    * a `WITH RECURSIVE` chain. */
+  private val pairReachCtes =
+    """edges AS MATERIALIZED (SELECT va AS a, vb AS b FROM p
+                   UNION ALL SELECT vb, va FROM p),
+         reach AS (
+           SELECT DISTINCT a AS id, a AS r FROM edges
+           UNION
+           SELECT e2.a AS id, reach.r FROM edges e2 JOIN reach ON e2.b = reach.id)"""
+
+  /** DuckDB oracle twin for [[semdedupKeep]] over a verified pair CTE
+    * `p(va, vb, cos)`: components, per-member summed centrality, and the
+    * query's final SELECT of the kept member per cluster. */
+  private val semdedupKeepSql =
+    s"""$pairReachCtes,
+         cl AS (SELECT id AS vec_id, min(r) AS cluster_id FROM reach GROUP BY 1),
+         directed AS (SELECT va AS vec_id, cos FROM p
+                      UNION ALL SELECT vb, cos FROM p),
+         st AS (SELECT vec_id,
+                       CAST(sum(CAST(floor(cos * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT)
+                         AS centrality_micro
+                FROM directed GROUP BY 1),
+         m AS (SELECT cl.cluster_id, cl.vec_id, st.centrality_micro
+               FROM cl JOIN st USING (vec_id)),
+         rk AS (SELECT cluster_id, vec_id, centrality_micro,
+                       row_number() OVER (PARTITION BY cluster_id
+                         ORDER BY centrality_micro DESC, vec_id DESC) AS rn,
+                       count(*) OVER (PARTITION BY cluster_id) AS nm
+                FROM m)
+         SELECT cluster_id, CAST(nm AS BIGINT) AS n_members,
+                vec_id AS keep_id, centrality_micro AS keep_centrality_micro
+         FROM rk WHERE rn = 1 ORDER BY cluster_id"""
+
   /** Memoized connected components over the cosine near-dup graph —
     * q_dedup_embed_clusters and q_dedup_semdedup_keep run the identical
     * min-label propagation, so they share one materialization. */
@@ -196,12 +240,8 @@ object DedupQueries {
   /** Shared CTE prefix: normalized tokens + distinct 3-gram shingles,
     * mirroring TextFunctions.normalized/tokens + Dedup.shingles. */
   private val shCte =
-    """WITH n AS (
-         SELECT doc_id,
-                CASE WHEN length(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) = 0
-                     THEN []::VARCHAR[]
-                     ELSE string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), '\s+')
-                END AS toks
+    s"""WITH n AS (
+         SELECT doc_id, ${sqlTokens(sqlNormalized("text"))} AS toks
          FROM documents),
        sh AS (
          SELECT doc_id,
@@ -217,6 +257,39 @@ object DedupQueries {
                    s -> md5(CAST(k AS VARCHAR) || ':' || s))) for k in range(0, 8)] AS sig
          FROM sh)"""
 
+  /** LSH band buckets `bands(doc_id, b, bh)` over `sig`: the twin of
+    * Dedup.lshBands at BANDS bands of R rows. */
+  private val bandsCte =
+    s"""bands AS (
+          SELECT doc_id, b, ${Dedup.sqlLshBandHash("sig", R)} AS bh
+          FROM sig, range(0, $BANDS) t(b))"""
+
+  /** [[bandsCte]] + `cand(ida, idb)`: the pairs sharing any band bucket,
+    * the twin of Dedup.lshCandidates. */
+  private val minhashCandCte =
+    s"""$bandsCte,
+        cand AS (
+          SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
+          FROM bands a JOIN bands b
+            ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id)"""
+
+  /** `hsh(doc_id, hs)`: the twin of [[dedupHashes]]. */
+  private val hshCte =
+    s"""hsh AS (
+          SELECT doc_id, ${Dedup.sqlShingleHashes("shingles")} AS hs
+          FROM sh)"""
+
+  /** `cand(ida, idb)` through the df-capped inverted index over `hsh`: the
+    * twin of the candidate stage ngramJaccardPairs and containmentPairs run
+    * at [[maxDf]] (the `keep` cap is maxDf's formula). */
+  private val dfCappedCandCte =
+    """ex AS (SELECT doc_id, unnest(hs) AS h FROM hsh),
+          keep AS (SELECT h FROM ex GROUP BY h HAVING count(*) <= greatest(8, (SELECT count(*) FROM documents) // 500)),
+          kx AS (SELECT ex.doc_id, ex.h FROM ex JOIN keep USING (h)),
+          cand AS (
+            SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
+            FROM kx a JOIN kx b ON a.h = b.h AND a.doc_id < b.doc_id)"""
+
   /** Shared recursive chain: LSH candidates → Jaccard-verified pairs →
     * transitive closure → `cl(doc_id, cluster_id)` (min reachable id).
     * `private[queries]`: the cross-modal oracle (MultimodalQueries)
@@ -224,13 +297,7 @@ object DedupQueries {
   private[queries] val clustersCte =
     s"""${shCte.replaceFirst("WITH", "WITH RECURSIVE")},
         $sigCte,
-        bands AS (
-          SELECT doc_id, b, md5(sig[2*b+1] || sig[2*b+2]) AS bh
-          FROM sig, range(0, 4) t(b)),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
-          FROM bands a JOIN bands b
-            ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
+        $minhashCandCte,
         p AS (
           SELECT ida, idb
           FROM cand JOIN sh x ON x.doc_id = ida JOIN sh y ON y.doc_id = idb
@@ -268,7 +335,7 @@ object DedupQueries {
     // exact dedup: hash-groupBy on the canonical md5 fingerprint
     Q("q_dedup_exact", (s, d) =>
       Dedup.exactGroups(docs(s, d), col("doc_id"), col("text")).orderBy("keep_id"),
-      """WITH n AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
+      s"""WITH n AS (SELECT doc_id, ${sqlNormalized("text")} AS norm
                     FROM documents)
          SELECT md5(norm) AS fp, min(doc_id) AS keep_id, count(*) AS n_copies
          FROM n GROUP BY 1 ORDER BY keep_id"""),
@@ -278,13 +345,7 @@ object DedupQueries {
       minhashPairs(s, d).orderBy("ida", "idb"),
       s"""$shCte,
           $sigCte,
-          bands AS (
-            SELECT doc_id, b, md5(sig[2*b+1] || sig[2*b+2]) AS bh
-            FROM sig, range(0, 4) t(b)),
-          cand AS (
-            SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
-            FROM bands a JOIN bands b
-              ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
+          $minhashCandCte,
           j AS (
             SELECT ida, idb,
                    CAST(len(list_filter(range(0, 8),
@@ -310,27 +371,14 @@ object DedupQueries {
     // blow the self-join up to C(df, 2) pairs each; exact full-set Jaccard
     // verifies every candidate, so emitted values are unfiltered
     Q("q_dedup_ngram_jaccard", (s, d) => {
-      // cached: candidate stage + both verify joins reuse the hash arrays
-      val sh = QueryCaches.memo(s, d, "dedup_hashes") {
-        withSig(s, d)
-          .select(col("doc_id"), Dedup.shingleHashes(col("shingles")).as("hs"))
-      }
+      val sh = dedupHashes(s, d)
       Dedup.ngramJaccardPairs(sh, col("doc_id"), col("hs"),
           minJaccard = 0.8, maxDf = maxDf(s, d))
         .orderBy("ida", "idb")
     },
       s"""$shCte,
-          hsh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(shingles,
-                     s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT))) AS hs
-            FROM sh),
-          ex AS (SELECT doc_id, unnest(hs) AS h FROM hsh),
-          keep AS (SELECT h FROM ex GROUP BY h HAVING count(*) <= greatest(8, (SELECT count(*) FROM documents) // 500)),
-          kx AS (SELECT ex.doc_id, ex.h FROM ex JOIN keep USING (h)),
-          cand AS (
-            SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
-            FROM kx a JOIN kx b ON a.h = b.h AND a.doc_id < b.doc_id),
+          $hshCte,
+          $dfCappedCandCte,
           j AS (
             SELECT ida, idb,
                    CAST(len(list_intersect(x.hs, y.hs)) AS BIGINT) AS shared,
@@ -346,10 +394,7 @@ object DedupQueries {
     // the sweep run before committing a dedup threshold, riding the same
     // cached hash arrays and candidate chain as the jaccard query
     Q("q_dedup_threshold_sweep", (s, d) => {
-      val sh = QueryCaches.memo(s, d, "dedup_hashes") {
-        withSig(s, d)
-          .select(col("doc_id"), Dedup.shingleHashes(col("shingles")).as("hs"))
-      }
+      val sh = dedupHashes(s, d)
       val sizes = sh.select(col("doc_id"), size(col("hs")).cast("long").as("n"))
       Dedup.ngramJaccardPairs(sh, col("doc_id"), col("hs"),
           minJaccard = 0.5, maxDf = maxDf(s, d))
@@ -361,17 +406,8 @@ object DedupQueries {
         .orderBy("jac_decile")
     },
       s"""$shCte,
-          hsh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(shingles,
-                     s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT))) AS hs
-            FROM sh),
-          ex AS (SELECT doc_id, unnest(hs) AS h FROM hsh),
-          keep AS (SELECT h FROM ex GROUP BY h HAVING count(*) <= greatest(8, (SELECT count(*) FROM documents) // 500)),
-          kx AS (SELECT ex.doc_id, ex.h FROM ex JOIN keep USING (h)),
-          cand AS (
-            SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
-            FROM kx a JOIN kx b ON a.h = b.h AND a.doc_id < b.doc_id),
+          $hshCte,
+          $dfCappedCandCte,
           j AS (
             SELECT ida, idb,
                    CAST(len(list_intersect(x.hs, y.hs)) AS BIGINT) AS shared,
@@ -391,26 +427,14 @@ object DedupQueries {
     // containment ≈ 1 flags it. Shares the cached hash arrays and the
     // df-capped candidate index with the jaccard path
     Q("q_dedup_containment", (s, d) => {
-      val sh = QueryCaches.memo(s, d, "dedup_hashes") {
-        withSig(s, d)
-          .select(col("doc_id"), Dedup.shingleHashes(col("shingles")).as("hs"))
-      }
+      val sh = dedupHashes(s, d)
       Dedup.containmentPairs(sh, col("doc_id"), col("hs"),
           minContainment = 0.9, maxDf = maxDf(s, d))
         .orderBy("ida", "idb")
     },
       s"""$shCte,
-          hsh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(shingles,
-                     s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT))) AS hs
-            FROM sh),
-          ex AS (SELECT doc_id, unnest(hs) AS h FROM hsh),
-          keep AS (SELECT h FROM ex GROUP BY h HAVING count(*) <= greatest(8, (SELECT count(*) FROM documents) // 500)),
-          kx AS (SELECT ex.doc_id, ex.h FROM ex JOIN keep USING (h)),
-          cand AS (
-            SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
-            FROM kx a JOIN kx b ON a.h = b.h AND a.doc_id < b.doc_id),
+          $hshCte,
+          $dfCappedCandCte,
           c AS (
             SELECT ida, idb,
                    CAST(len(list_intersect(x.hs, y.hs)) AS BIGINT) AS shared,
@@ -437,10 +461,7 @@ object DedupQueries {
     // size stratum instead of skipping. Both engines derive the branch
     // and the modulus from count(*) — the maxDf pattern.
     Q("q_dedup_prefix_filter", (s, d) => {
-      val sh = QueryCaches.memo(s, d, "dedup_hashes") {
-        withSig(s, d)
-          .select(col("doc_id"), Dedup.shingleHashes(col("shingles")).as("hs"))
-      }
+      val sh = dedupHashes(s, d)
       val pairs =
         Dedup.prefixFilterPairs(sh, col("doc_id"), col("hs"), minJaccard = 0.8)
       prefixProofStratum(pairs, docCount(s, d), PrefixProofCap)
@@ -457,11 +478,7 @@ object DedupQueries {
       // post-filtered quadratic. least/greatest normalization makes the
       // one-sided join emit the identical undirected distinct pair set.
       s"""$shCte,
-          hsh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(shingles,
-                     s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT))) AS hs
-            FROM sh),
+          $hshCte,
           nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
           mm AS (SELECT n, CASE WHEN n // 250 = 0 THEN CAST(1 AS BIGINT)
                                 ELSE (1::BIGINT << (length(bin(n // 250)) - 1))
@@ -521,9 +538,7 @@ object DedupQueries {
       s"""WITH ${SimilarityQueries.lshCandCte},
          cos AS (
            SELECT va, vb,
-             list_dot_product(x.v, y.v)
-             / (sqrt(list_dot_product(x.v, x.v))
-              * sqrt(list_dot_product(y.v, y.v))) AS cos
+             ${Similarity.sqlCosine("x.v", "y.v")} AS cos
            FROM cand JOIN e x ON x.vec_id = va JOIN e y ON y.vec_id = vb)
          SELECT va, vb, cos FROM cos WHERE cos >= 0.4 ORDER BY va, vb"""),
 
@@ -538,17 +553,10 @@ object DedupQueries {
       s"""WITH RECURSIVE ${SimilarityQueries.lshCandCte},
          cosp AS (
            SELECT va, vb,
-             list_dot_product(x.v, y.v)
-             / (sqrt(list_dot_product(x.v, x.v))
-              * sqrt(list_dot_product(y.v, y.v))) AS cos
+             ${Similarity.sqlCosine("x.v", "y.v")} AS cos
            FROM cand JOIN e x ON x.vec_id = va JOIN e y ON y.vec_id = vb),
          p AS (SELECT va, vb FROM cosp WHERE cos >= 0.4),
-         edges AS MATERIALIZED (SELECT va AS a, vb AS b FROM p
-                   UNION ALL SELECT vb, va FROM p),
-         reach AS (
-           SELECT DISTINCT a AS id, a AS r FROM edges
-           UNION
-           SELECT e2.a AS id, reach.r FROM edges e2 JOIN reach ON e2.b = reach.id)
+         $pairReachCtes
          SELECT id AS vec_id, min(r) AS cluster_id
          FROM reach GROUP BY 1 ORDER BY 1"""),
 
@@ -570,9 +578,7 @@ object DedupQueries {
     },
       s"""$shCte,
           $sigCte,
-          bands AS (
-            SELECT doc_id, b, md5(sig[2*b+1] || sig[2*b+2]) AS bh
-            FROM sig, range(0, 4) t(b)),
+          $bandsCte,
           cand AS (
             SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
             FROM bands a JOIN bands b ON a.b = b.b AND a.bh = b.bh
@@ -623,38 +629,14 @@ object DedupQueries {
       // pair with cos >= 0.45, then the identical components/centrality/keep
       // replay — equality with the engine's radius-2-LSH-candidate result
       // is the losslessness proof (bound derivation at the engine query)
-      """WITH RECURSIVE
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH RECURSIVE
+         ${sqlEmbeddings()},
          exact AS MATERIALIZED (
            SELECT x.vec_id AS va, y.vec_id AS vb,
-             list_dot_product(x.v, y.v)
-             / (sqrt(list_dot_product(x.v, x.v))
-              * sqrt(list_dot_product(y.v, y.v))) AS cos
+             ${Similarity.sqlCosine("x.v", "y.v")} AS cos
            FROM e x JOIN e y ON x.vec_id < y.vec_id),
          p AS MATERIALIZED (SELECT va, vb, cos FROM exact WHERE cos >= 0.45),
-         edges AS MATERIALIZED (SELECT va AS a, vb AS b FROM p
-                   UNION ALL SELECT vb, va FROM p),
-         reach AS (
-           SELECT DISTINCT a AS id, a AS r FROM edges
-           UNION
-           SELECT e2.a AS id, reach.r FROM edges e2 JOIN reach ON e2.b = reach.id),
-         cl AS (SELECT id AS vec_id, min(r) AS cluster_id FROM reach GROUP BY 1),
-         directed AS (SELECT va AS vec_id, cos FROM p
-                      UNION ALL SELECT vb, cos FROM p),
-         st AS (SELECT vec_id,
-                       CAST(sum(CAST(floor(cos * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT)
-                         AS centrality_micro
-                FROM directed GROUP BY 1),
-         m AS (SELECT cl.cluster_id, cl.vec_id, st.centrality_micro
-               FROM cl JOIN st USING (vec_id)),
-         rk AS (SELECT cluster_id, vec_id, centrality_micro,
-                       row_number() OVER (PARTITION BY cluster_id
-                         ORDER BY centrality_micro DESC, vec_id DESC) AS rn,
-                       count(*) OVER (PARTITION BY cluster_id) AS nm
-                FROM m)
-         SELECT cluster_id, CAST(nm AS BIGINT) AS n_members,
-                vec_id AS keep_id, centrality_micro AS keep_centrality_micro
-         FROM rk WHERE rn = 1 ORDER BY cluster_id"""),
+         $semdedupKeepSql"""),
 
     // The same SemDeDup chain at the PRODUCTION geometry (w12 b32 radius
     // 2 — the operating point SCALING_sf1.md's round-10 A/B measured and
@@ -679,34 +661,10 @@ object DedupQueries {
              SimilarityQueries.LshMaxBucket, radius = 2)},
          cos AS (
            SELECT va, vb,
-             list_dot_product(x.v, y.v)
-             / (sqrt(list_dot_product(x.v, x.v))
-              * sqrt(list_dot_product(y.v, y.v))) AS cos
+             ${Similarity.sqlCosine("x.v", "y.v")} AS cos
            FROM cand JOIN e x ON x.vec_id = va JOIN e y ON y.vec_id = vb),
          p AS MATERIALIZED (SELECT va, vb, cos FROM cos WHERE cos >= 0.45),
-         edges AS MATERIALIZED (SELECT va AS a, vb AS b FROM p
-                   UNION ALL SELECT vb, va FROM p),
-         reach AS (
-           SELECT DISTINCT a AS id, a AS r FROM edges
-           UNION
-           SELECT e2.a AS id, reach.r FROM edges e2 JOIN reach ON e2.b = reach.id),
-         cl AS (SELECT id AS vec_id, min(r) AS cluster_id FROM reach GROUP BY 1),
-         directed AS (SELECT va AS vec_id, cos FROM p
-                      UNION ALL SELECT vb, cos FROM p),
-         st AS (SELECT vec_id,
-                       CAST(sum(CAST(floor(cos * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT)
-                         AS centrality_micro
-                FROM directed GROUP BY 1),
-         m AS (SELECT cl.cluster_id, cl.vec_id, st.centrality_micro
-               FROM cl JOIN st USING (vec_id)),
-         rk AS (SELECT cluster_id, vec_id, centrality_micro,
-                       row_number() OVER (PARTITION BY cluster_id
-                         ORDER BY centrality_micro DESC, vec_id DESC) AS rn,
-                       count(*) OVER (PARTITION BY cluster_id) AS nm
-                FROM m)
-         SELECT cluster_id, CAST(nm AS BIGINT) AS n_members,
-                vec_id AS keep_id, centrality_micro AS keep_centrality_micro
-         FROM rk WHERE rn = 1 ORDER BY cluster_id"""),
+         $semdedupKeepSql"""),
 
     // Semantic decontamination (r10 verdict #7): eval-set leakage by
     // near-PARAPHRASE — the gap n-gram-overlap decontamination
@@ -750,7 +708,7 @@ object DedupQueries {
       // fixed-size left side ⇒ Θ(k·n) at every SF; equality with the
       // radius-2-candidate engine result is the candidate-stage
       // losslessness proof at τ = 0.45 (bound at the engine query)
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
          nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
          mm AS (SELECT CASE WHEN n // 250 = 0 THEN CAST(1 AS BIGINT)
                             ELSE (1::BIGINT << (length(bin(n // 250)) - 1))
@@ -762,9 +720,7 @@ object DedupQueries {
                WHERE CAST('0x' || substr(md5('decon:' || vec_id), 1, 13) AS BIGINT)
                      % mm.m <> 0),
          j AS (SELECT b.vec_id AS bid, c.vec_id AS cid,
-                      list_dot_product(b.v, c.v)
-                      / (sqrt(list_dot_product(b.v, b.v))
-                       * sqrt(list_dot_product(c.v, c.v))) AS cos
+                      ${Similarity.sqlCosine("b.v", "c.v")} AS cos
                FROM b, c),
          h AS (SELECT cid, bid,
                       CAST(floor(cos * 1000000.0 + 0.5) AS BIGINT) AS cm
@@ -814,9 +770,7 @@ object DedupQueries {
       s"""WITH ${SimilarityQueries.lshCandCte},
          exact AS MATERIALIZED (
            SELECT x.vec_id AS va, y.vec_id AS vb,
-             list_dot_product(x.v, y.v)
-             / (sqrt(list_dot_product(x.v, x.v))
-              * sqrt(list_dot_product(y.v, y.v))) AS cos
+             ${Similarity.sqlCosine("x.v", "y.v")} AS cos
            FROM e x JOIN e y ON x.vec_id < y.vec_id),
          ex AS (SELECT va, vb, cos FROM exact WHERE cos >= 0.4),
          j AS (SELECT ex.cos,
@@ -907,9 +861,7 @@ object DedupQueries {
          q AS (SELECT vec_id, v FROM e, mm
                WHERE CAST('0x' || substr(md5('recall:' || vec_id), 1, 13) AS BIGINT) % mm.m = 0),
          ex AS (SELECT q.vec_id AS qa, y.vec_id AS vb,
-                  list_dot_product(q.v, y.v)
-                  / (sqrt(list_dot_product(q.v, q.v))
-                   * sqrt(list_dot_product(y.v, y.v))) AS cos
+                  ${Similarity.sqlCosine("q.v", "y.v")} AS cos
                 FROM q JOIN e y ON q.vec_id <> y.vec_id),
          exf AS (SELECT qa, vb, cos FROM ex WHERE cos >= 0.4),
          j AS (SELECT exf.cos,
@@ -970,34 +922,10 @@ object DedupQueries {
       s"""WITH RECURSIVE ${SimilarityQueries.lshCandCte},
          cosp AS (
            SELECT va, vb,
-             list_dot_product(x.v, y.v)
-             / (sqrt(list_dot_product(x.v, x.v))
-              * sqrt(list_dot_product(y.v, y.v))) AS cos
+             ${Similarity.sqlCosine("x.v", "y.v")} AS cos
            FROM cand JOIN e x ON x.vec_id = va JOIN e y ON y.vec_id = vb),
          p AS MATERIALIZED (SELECT va, vb, cos FROM cosp WHERE cos >= 0.4),
-         edges AS MATERIALIZED (SELECT va AS a, vb AS b FROM p
-                   UNION ALL SELECT vb, va FROM p),
-         reach AS (
-           SELECT DISTINCT a AS id, a AS r FROM edges
-           UNION
-           SELECT e2.a AS id, reach.r FROM edges e2 JOIN reach ON e2.b = reach.id),
-         cl AS (SELECT id AS vec_id, min(r) AS cluster_id FROM reach GROUP BY 1),
-         directed AS (SELECT va AS vec_id, cos FROM p
-                      UNION ALL SELECT vb, cos FROM p),
-         st AS (SELECT vec_id,
-                       CAST(sum(CAST(floor(cos * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT)
-                         AS centrality_micro
-                FROM directed GROUP BY 1),
-         m AS (SELECT cl.cluster_id, cl.vec_id, st.centrality_micro
-               FROM cl JOIN st USING (vec_id)),
-         rk AS (SELECT cluster_id, vec_id, centrality_micro,
-                       row_number() OVER (PARTITION BY cluster_id
-                         ORDER BY centrality_micro DESC, vec_id DESC) AS rn,
-                       count(*) OVER (PARTITION BY cluster_id) AS nm
-                FROM m)
-         SELECT cluster_id, CAST(nm AS BIGINT) AS n_members,
-                vec_id AS keep_id, centrality_micro AS keep_centrality_micro
-         FROM rk WHERE rn = 1 ORDER BY cluster_id"""),
+         $semdedupKeepSql"""),
 
     // canonical-representative selection: for each near-dup cluster keep
     // the longest document (ties → highest doc_id) — the "keep one per
@@ -1021,13 +949,7 @@ object DedupQueries {
       // by (n_chars, doc_id) — row_number mirror of Spark's struct-max
       s"""${shCte.replaceFirst("WITH", "WITH RECURSIVE")},
           $sigCte,
-          bands AS (
-            SELECT doc_id, b, md5(sig[2*b+1] || sig[2*b+2]) AS bh
-            FROM sig, range(0, 4) t(b)),
-          cand AS (
-            SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
-            FROM bands a JOIN bands b
-              ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
+          $minhashCandCte,
           p AS (
             SELECT ida, idb
             FROM cand JOIN sh x ON x.doc_id = ida JOIN sh y ON y.doc_id = idb
@@ -1083,13 +1005,7 @@ object DedupQueries {
       // estimate-vs-exact in integer ppm over the identical candidate chain
       s"""$shCte,
           $sigCte,
-          bands AS (
-            SELECT doc_id, b, md5(sig[2*b+1] || sig[2*b+2]) AS bh
-            FROM sig, range(0, 4) t(b)),
-          cand AS (
-            SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
-            FROM bands a JOIN bands b
-              ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
+          $minhashCandCte,
           j AS (
             SELECT ida, idb,
                    CAST(len(list_filter(range(0, 8),
@@ -1124,13 +1040,7 @@ object DedupQueries {
     },
       s"""$shCte,
           $sigCte,
-          bands AS (
-            SELECT doc_id, b, md5(sig[2*b+1] || sig[2*b+2]) AS bh
-            FROM sig, range(0, 4) t(b)),
-          cand AS (
-            SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
-            FROM bands a JOIN bands b
-              ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
+          $minhashCandCte,
           v AS (
             SELECT CAST(count(*) AS BIGINT) AS n_verified
             FROM cand
@@ -1238,13 +1148,7 @@ object DedupQueries {
     },
       s"""$shCte,
           $sigCte,
-          bands AS (
-            SELECT doc_id, b, md5(sig[2*b+1] || sig[2*b+2]) AS bh
-            FROM sig, range(0, 4) t(b)),
-          cand AS (
-            SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
-            FROM bands a JOIN bands b
-              ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
+          $minhashCandCte,
           p AS (
             SELECT ida, idb
             FROM cand JOIN sh x ON x.doc_id = ida JOIN sh y ON y.doc_id = idb

@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.WideDiv.{mulDivWide, ppmWide, wide}
+import graft.queries.QueryBlocks.{dailyRevenue, moneySum, orderParts,
+  sqlDailyRevenue, sqlMoneySum, sqlOrderParts}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -26,20 +28,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * engines regardless of aggregation order.
   */
 object EngineQueries {
-
-  /** Exact money sum: per-row double → DECIMAL(18,6) → associative decimal
-    * sum → double result. Scale 6 matters: the harness money columns carry
-    * 2 decimals, so row expressions like price·(1−discount) are exact at
-    * ≤4 decimals — every double is ~1 ulp from a representable 6dp value,
-    * never at a rounding boundary, so Spark's HALF_UP and DuckDB's
-    * HALF_EVEN agree. (At scale 2 the 4dp products hit exact .005 ties and
-    * the engines round them differently.) */
-  private def moneySum(c: Column): Column =
-    graft.functions.WideDiv.decSumToDouble(sum(c.cast("decimal(18,6)")))
-
-  private def sqlMoneySum(expr: String): String =
-    graft.functions.WideDiv.sqlDecSumToDouble(
-      s"sum(CAST($expr AS DECIMAL(18,6)))")
 
   /** Write-once bucketed orders/lineitem layout per (session, sfDir) —
     * the storage-side shuffle eliminator q_eng_bucketed_join gates.
@@ -120,6 +108,24 @@ object EngineQueries {
       deepwalkEdges(s, d).groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("deg"))
     }
+
+  /** Memoized canonical co-order part graph `(u, v)`: parts appearing in
+    * the same order are linked. Read by q_eng_triangles, q_eng_degree_dist,
+    * q_eng_kcore and q_eng_common_neighbors. */
+  private def triEdges(s: SparkSession, d: String): DataFrame =
+    QueryCaches.memo(s, d, "tri_edges") {
+      val op = orderParts(s, d)
+      val edges = op.as("a")
+        .join(op.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+        .select(col("a.p").as("pu"), col("b.p").as("pv"))
+      graft.operators.Graph.canonicalEdges(edges, "pu", "pv")
+    }
+
+  /** DuckDB oracle twin for [[triEdges]]: CTEs `op` and `e(u, v)`. */
+  private val sqlTriEdges =
+    s"""op AS ($sqlOrderParts),
+         e AS (SELECT DISTINCT a.p AS u, b.p AS v
+               FROM op a JOIN op b ON a.o = b.o AND a.p < b.p)"""
 
   val registry: Seq[Q] = Seq(
     // TPC-H Q1-style pricing summary: single hash aggregate, map-side combine
@@ -326,10 +332,7 @@ object EngineQueries {
       // as its own blocking action inside every timed invocation; lazy
       // folds it into the first consuming job (min-of-5 bench pair
       // 2.69 s → 2.20 s, same task work)
-      val op = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-        .localCheckpoint(false)
+      val op = orderParts(s, d).localCheckpoint(false)
       val pairs = op.as("a")
         .join(op.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
         .groupBy(col("a.p").as("pa"), col("b.p").as("pb"))
@@ -358,8 +361,7 @@ object EngineQueries {
             wide(col("ca")) * wide(col("cb"))).as("lift_ppm"))
         .orderBy("pa", "pb")
     },
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                     FROM lineitem),
+      s"""WITH op AS ($sqlOrderParts),
          pr AS (SELECT a.p AS pa, b.p AS pb, CAST(count(*) AS BIGINT) AS support
                 FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
                 GROUP BY 1, 2 HAVING count(*) >= 3),
@@ -2079,15 +2081,7 @@ object EngineQueries {
     // pair self-join per consumer — the cluster analogue of persisting
     // the edge list before graph analytics
     Q("q_eng_triangles", (s, d) => {
-      val e = QueryCaches.memo(s, d, "tri_edges") {
-        val op = Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct()
-        val edges = op.as("a")
-          .join(op.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-          .select(col("a.p").as("pu"), col("b.p").as("pv"))
-        graft.operators.Graph.canonicalEdges(edges, "pu", "pv")
-      }
+      val e = triEdges(s, d)
       val dir = QueryCaches.memo(s, d, "tri_dir") {
         graft.operators.Graph.orient(e)
       }
@@ -2096,10 +2090,7 @@ object EngineQueries {
       // naive all-pairs enumeration: e1=(a,b), e2=(a,c) with b<c closes on
       // e3=(b,c) — independent of the Spark side's degree-ordered
       // orientation, so equality proves the oriented count exact
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                     FROM lineitem),
-         e AS (SELECT DISTINCT a.p AS u, b.p AS v
-               FROM op a JOIN op b ON a.o = b.o AND a.p < b.p)
+      s"""WITH $sqlTriEdges
          SELECT (SELECT CAST(count(DISTINCT n) AS BIGINT)
                  FROM (SELECT u AS n FROM e UNION ALL SELECT v FROM e))
                   AS n_nodes,
@@ -2114,15 +2105,7 @@ object EngineQueries {
     // there a heavy tail?). Reuses the suite-cached edge table; the
     // bucket key is integer (bit-length − 1), identical in both engines
     Q("q_eng_degree_dist", (s, d) => {
-      val e = QueryCaches.memo(s, d, "tri_edges") {
-        val op = Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct()
-        val edges = op.as("a")
-          .join(op.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-          .select(col("a.p").as("pu"), col("b.p").as("pv"))
-        graft.operators.Graph.canonicalEdges(edges, "pu", "pv")
-      }
+      val e = triEdges(s, d)
       e.select(explode(array(col("u"), col("v"))).as("n"))
         .groupBy("n").agg(count(lit(1)).as("deg"))
         .groupBy((length(bin(col("deg"))) - 1).cast("long").as("log2_deg"))
@@ -2130,10 +2113,7 @@ object EngineQueries {
           min(col("deg")).as("min_deg"), max(col("deg")).as("max_deg"))
         .orderBy("log2_deg")
     },
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                     FROM lineitem),
-         e AS (SELECT DISTINCT a.p AS u, b.p AS v
-               FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+      s"""WITH $sqlTriEdges,
          d AS (SELECT n, CAST(count(*) AS BIGINT) AS deg
                FROM (SELECT u AS n FROM e UNION ALL SELECT v FROM e)
                GROUP BY 1)
@@ -2149,21 +2129,12 @@ object EngineQueries {
     // node-sized keep set; the oracle unrolls the same 3 rounds as CTEs,
     // so equality proves every peel round bit-exact
     Q("q_eng_kcore", (s, d) => {
-      val e = QueryCaches.memo(s, d, "tri_edges") {
-        val op = Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct()
-        val edges = op.as("a")
-          .join(op.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-          .select(col("a.p").as("pu"), col("b.p").as("pv"))
-        graft.operators.Graph.canonicalEdges(edges, "pu", "pv")
-      }
+      val e = triEdges(s, d)
       graft.operators.Graph.kCorePeel(e, k = 80, rounds = 3)
         .select(col("n").as("node"), col("deg"))
         .orderBy("node")
     },
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                     FROM lineitem),
+      s"""WITH op AS ($sqlOrderParts),
          e0 AS MATERIALIZED (SELECT DISTINCT a.p AS u, b.p AS v
                 FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
          k1 AS (SELECT n FROM (SELECT u AS n FROM e0 UNION ALL SELECT v FROM e0)
@@ -2541,10 +2512,7 @@ object EngineQueries {
     // through day revenues of ~1e16 cents, and the floor division goes
     // through mulDivWide so both engines round identically.
     Q("q_eng_ewma", (s, d) => {
-      val daily = Tables.orders(s, d)
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
-          .as("rev_cents"))
+      val daily = dailyRevenue(s, d, "rev_cents")
       daily
         .agg(sort_array(collect_list(struct(col("day"), col("rev_cents"))))
           .as("xs"))
@@ -2571,11 +2539,8 @@ object EngineQueries {
       // recursive CTE walks the bounded day series one step per iteration —
       // the sequential recurrence the Spark side runs via aggregate() on the
       // collected day array; per-mille integer arithmetic matches exactly
-      """WITH RECURSIVE daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS rev_cents
-           FROM orders GROUP BY 1),
+      s"""WITH RECURSIVE daily AS (
+           ${sqlDailyRevenue("rev_cents")}),
          idx AS (
            SELECT day, rev_cents,
                   CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
@@ -2661,10 +2626,7 @@ object EngineQueries {
     // drawdown precedent). All integer; the argmax day reported with
     // first-day tiebreak via min_by on (−|U|, day).
     Q("q_eng_pettitt", (s, d) => {
-      val daily = Tables.orders(s, d)
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
-          .as("x"))
+      val daily = dailyRevenue(s, d)
       val v = daily.as("a").join(daily.as("b"), col("a.day") =!= col("b.day"))
         .groupBy(col("a.day").as("day"))
         .agg(sum(when(col("a.x") > col("b.x"), 1L)
@@ -2679,11 +2641,8 @@ object EngineQueries {
         .groupBy(col("n_days"), col("k_stat"))
         .agg(min(col("day")).cast("string").as("change_day"))
     },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
-           FROM orders GROUP BY 1),
+      s"""WITH daily AS (
+           ${sqlDailyRevenue()}),
          v AS (
            SELECT a.day AS day,
                   CAST(sum(CASE WHEN a.x > b.x THEN 1
@@ -2707,10 +2666,7 @@ object EngineQueries {
     // bounded day domain, aggregate() fold carrying (cur, best, end day),
     // recursive-CTE oracle. First maximal run wins (strict > on update).
     Q("q_eng_kadane", (s, d) => {
-      val daily = Tables.orders(s, d)
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
-          .as("x"))
+      val daily = dailyRevenue(s, d)
       val wL = Window.orderBy(col("day"))
       val deltas = daily
         .withColumn("delta", col("x") - lag(col("x"), 1).over(wL))
@@ -2746,10 +2702,7 @@ object EngineQueries {
         val newCur = """CASE WHEN dd.delta > r.cur + dd.delta
                            THEN dd.delta ELSE r.cur + dd.delta END"""
         s"""WITH RECURSIVE daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
-           FROM orders GROUP BY 1),
+           ${sqlDailyRevenue()}),
          idx AS (
            SELECT day, x - lag(x) OVER (ORDER BY day) AS delta,
                   CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
@@ -2856,10 +2809,7 @@ object EngineQueries {
          FROM c"""),
 
     Q("q_eng_mann_kendall", (s, d) => {
-      val daily = Tables.orders(s, d)
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
-          .as("x"))
+      val daily = dailyRevenue(s, d)
       val sTab = daily.as("a").join(daily.as("b"), col("a.day") < col("b.day"))
         .select(when(col("b.x") > col("a.x"), 1L)
           .when(col("b.x") < col("a.x"), -1L).otherwise(0L).as("sgn"))
@@ -2878,10 +2828,7 @@ object EngineQueries {
               lit(18000000L), col("var18"))).as("z2_micro"))
     },
       s"""WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
-           FROM orders GROUP BY 1),
+           ${sqlDailyRevenue()}),
          p AS (
            SELECT CASE WHEN b.x > a.x THEN 1
                        WHEN b.x < a.x THEN -1 ELSE 0 END AS sgn
@@ -2916,10 +2863,7 @@ object EngineQueries {
     // size — only `daily` touches fact-scale data.
     Q("q_eng_theil_sen", (s, d) => {
       import graft.functions.WideDiv.mulDivWideSigned
-      val daily = Tables.orders(s, d)
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
-          .as("x"))
+      val daily = dailyRevenue(s, d)
       // spread the broadcast-NLJ stream side first (explicit partition
       // count — AQE would coalesce the tiny 1-row-per-day pre-join shuffle
       // back to one partition and run the O(days²) pair expansion AND its
@@ -2961,10 +2905,7 @@ object EngineQueries {
       }
     },
       s"""WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
-           FROM orders GROUP BY 1),
+           ${sqlDailyRevenue()}),
          sl AS (
            SELECT ${graft.functions.WideDiv.sqlMulDivSigned("b.x - a.x",
              "1000000", "date_diff('day', a.day, b.day)")} AS slope_micro
@@ -3029,10 +2970,7 @@ object EngineQueries {
     // toward zero — mulDivWideSigned mirrors that, not floor).
     Q("q_eng_holt", (s, d) => {
       import graft.functions.WideDiv.mulDivWideSigned
-      val daily = Tables.orders(s, d)
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
-          .as("rev_cents"))
+      val daily = dailyRevenue(s, d, "rev_cents")
       daily
         .agg(sort_array(collect_list(struct(col("day"), col("rev_cents"))))
           .as("xs"))
@@ -3067,11 +3005,8 @@ object EngineQueries {
       // the trend recurrence repeats the level expression (SQL cannot
       // reference a same-SELECT alias); HUGEINT `//` truncates toward zero,
       // matching mulDivWideSigned exactly on the signed trend
-      """WITH RECURSIVE daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS rev_cents
-           FROM orders GROUP BY 1),
+      s"""WITH RECURSIVE daily AS (
+           ${sqlDailyRevenue("rev_cents")}),
          idx AS (
            SELECT day, rev_cents,
                   CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
@@ -3231,15 +3166,7 @@ object EngineQueries {
     // so the higher threshold made the gate vacuous (r7 verdict). Top-100
     // via TakeOrderedAndProject with a total-order tiebreak.
     Q("q_eng_common_neighbors", (s, d) => {
-      val e = QueryCaches.memo(s, d, "tri_edges") {
-        val op = Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct()
-        val edges = op.as("a")
-          .join(op.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-          .select(col("a.p").as("pu"), col("b.p").as("pv"))
-        graft.operators.Graph.canonicalEdges(edges, "pu", "pv")
-      }
+      val e = triEdges(s, d)
       // one cached-table pass per reference instead of two union branches
       // (opt r13, guide §2.4 — same explode trick as interval_coverage)
       val und = e.select(explode(array(
@@ -3286,10 +3213,7 @@ object EngineQueries {
         .orderBy(desc("jaccard_ppm"), col("x"), col("y"))
         .limit(100)
     },
-      s"""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                      FROM lineitem),
-          e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+      s"""WITH $sqlTriEdges,
           und AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
           deg AS (SELECT u AS n, CAST(count(*) AS BIGINT) AS deg
                   FROM und GROUP BY 1),

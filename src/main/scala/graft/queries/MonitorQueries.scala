@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.WideDiv.wide
+import graft.queries.QueryBlocks.{dailyRevenue, sqlDailyRevenue}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -23,10 +24,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 object MonitorQueries {
 
   private def dbl(c: Column): Column = c.cast("double")
-
-  /** Order totals in exact cents (the shared money quantization). */
-  private def cents: Column =
-    floor(col("o_totalprice") * 100 + lit(0.5)).cast("long")
 
   /** 2^49 — the HLL register-term scale: Σ_j 2^(−M_j) over m=256 registers
     * is held as the exact integer Σ_j 2^(49−M_j) (each term ≤ 2^48, the sum
@@ -71,13 +68,6 @@ object MonitorQueries {
             lit(1000000.0) + lit(0.5)).cast("long")).as("lc_est_micro"),
         col("exact_distinct"))
   }
-
-  /** Daily revenue in cents over the bounded day domain (~2.4k rows at
-    * every SF — the fixture spans fixed calendar years). */
-  private def dailyRevenue(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(cents).as("x"))
 
   val registry: Seq[Q] = Seq(
     // HyperLogLog cardinality over two id streams: o_custkey (1.5k+
@@ -151,11 +141,8 @@ object MonitorQueries {
         .orderBy(col("cusum_scaled").desc, col("day"))
         .limit(5)
     },
-      """WITH daily AS (
-           SELECT CAST(o_orderdate AS DATE) AS day,
-                  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
-           FROM orders GROUP BY 1),
+      s"""WITH daily AS (
+           ${sqlDailyRevenue()}),
          t AS (SELECT CAST(sum(x) AS BIGINT) AS sx,
                       CAST(count(*) AS BIGINT) AS n FROM daily),
          p AS (SELECT day, x,

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.multimodal.Multimodal
+import graft.multimodal.Multimodal.payloadByte
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -53,6 +54,32 @@ object MultimodalQueries {
                 CAST(n_chars * 40 AS BIGINT) AS duration_ms
          FROM documents)"""
 
+  /** `${p}b(media_id, bytes)`: the payload bytes of the `mediaType` rows
+    * of `from`. */
+  private def bytesOf(mediaType: String, p: String = "",
+                      from: String = "m"): String =
+    s"""${p}b AS (
+            SELECT media_id, ${Multimodal.sqlPayloadBytes("h")} AS bytes
+            FROM $from WHERE media_type = '$mediaType')"""
+
+  /** `${p}b` over the image rows of `from`, then `${p}t(media_id, bytes,
+    * total)` adding the pixel total the threshold-at-mean hash compares
+    * against. */
+  private def imageTotalsCtes(p: String = "", from: String = "m"): String =
+    s"""${bytesOf("image", p, from)},
+          ${p}t AS (
+            SELECT media_id, bytes,
+                   list_reduce(list_prepend(0::BIGINT, bytes), (a, b) -> a + b) AS total
+            FROM ${p}b)"""
+
+  /** [[imageTotalsCtes]] + `${p}ph(media_id, phash)`: the twin of
+    * Multimodal.phash. */
+  private def phashCtes(p: String = "", from: String = "m"): String =
+    s"""${imageTotalsCtes(p, from)},
+          ${p}ph AS (
+            SELECT media_id, ${Multimodal.sqlMeanThresholdHash()} AS phash
+            FROM ${p}t)"""
+
   /** Bounded-round min-label CTE chain over distinct pHash VALUES — the
     * oracle twin of [[phashClusterTable]]'s capped propagation. Expects a
     * `${p}vals(v, cnt, minid)` CTE upstream; emits `${p}l0..l$rounds`
@@ -103,8 +130,7 @@ object MultimodalQueries {
       s"""$bytesCte,
           b AS (
             SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
+                   ${Multimodal.sqlPayloadBytes("h")} AS bytes
             FROM m)
           SELECT media_id,
                  CAST(16 AS BIGINT) AS n_bytes,
@@ -164,11 +190,7 @@ object MultimodalQueries {
       Multimodal.patchSums(media(s, d))
         .orderBy("media_id", "patch_idx"),
       s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'image'),
+          ${bytesOf("image")},
           p AS (
             SELECT media_id, pi,
                    bytes[((pi // 2) * 2 + 0) * 4 + (pi % 2) * 2 + 0 + 1]
@@ -185,20 +207,9 @@ object MultimodalQueries {
     Q("q_mm_phash", (s, d) =>
       Multimodal.phash(media(s, d)).orderBy("media_id"),
       s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'image'),
-          t AS (
-            SELECT media_id, bytes,
-                   list_reduce(list_prepend(0::BIGINT, bytes), (a, b) -> a + b) AS total
-            FROM b)
+          ${imageTotalsCtes()}
           SELECT media_id,
-                 CAST(list_reduce(list_prepend(0::BIGINT,
-                   [CASE WHEN bytes[i+1] * 16 > total THEN (1::BIGINT << i)
-                         ELSE 0::BIGINT END for i in range(0, 16)]),
-                   (a, b) -> a + b) AS BIGINT) AS phash
+                 ${Multimodal.sqlMeanThresholdHash()} AS phash
           FROM t ORDER BY media_id"""),
 
     // near-dup image pairs: nibble-banded candidates + exact Hamming ≤ 3
@@ -208,22 +219,7 @@ object MultimodalQueries {
       Multimodal.phashPairs(Multimodal.phash(media(s, d)), 3)
         .orderBy("ida", "idb"),
       s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'image'),
-          t AS (
-            SELECT media_id, bytes,
-                   list_reduce(list_prepend(0::BIGINT, bytes), (a, b) -> a + b) AS total
-            FROM b),
-          ph AS (
-            SELECT media_id,
-                   CAST(list_reduce(list_prepend(0::BIGINT,
-                     [CASE WHEN bytes[i+1] * 16 > total THEN (1::BIGINT << i)
-                           ELSE 0::BIGINT END for i in range(0, 16)]),
-                     (a, b) -> a + b) AS BIGINT) AS phash
-            FROM t)
+          ${phashCtes()}
           SELECT a.media_id AS ida, b.media_id AS idb,
                  CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS ham
           FROM ph a JOIN ph b ON a.media_id < b.media_id
@@ -240,29 +236,11 @@ object MultimodalQueries {
           Multimodal.phashMirrored(media(s, d)), 3)
         .orderBy("ida", "idb"),
       s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'image'),
-          t AS (
-            SELECT media_id, bytes,
-                   list_reduce(list_prepend(0::BIGINT, bytes), (a, b) -> a + b) AS total
-            FROM b),
-          ph AS (
-            SELECT media_id,
-                   CAST(list_reduce(list_prepend(0::BIGINT,
-                     [CASE WHEN bytes[i+1] * 16 > total THEN (1::BIGINT << i)
-                           ELSE 0::BIGINT END for i in range(0, 16)]),
-                     (a, b) -> a + b) AS BIGINT) AS phash
-            FROM t),
+          ${phashCtes()},
           mi AS (
             SELECT media_id,
-                   CAST(list_reduce(list_prepend(0::BIGINT,
-                     [CASE WHEN bytes[(i // 4) * 4 + (3 - i % 4) + 1] * 16 > total
-                           THEN (1::BIGINT << i) ELSE 0::BIGINT END
-                      for i in range(0, 16)]),
-                     (a, b) -> a + b) AS BIGINT) AS mhash
+                   ${Multimodal.sqlMeanThresholdHash(
+                     "bytes[(i // 4) * 4 + (3 - i % 4) + 1]")} AS mhash
             FROM t)
           SELECT a.media_id AS ida, b.media_id AS idb,
                  CAST(bit_count(xor(a.phash, b.mhash)) AS BIGINT) AS ham
@@ -277,11 +255,9 @@ object MultimodalQueries {
     // everything is integer. Map-side level extraction (shiftright), one
     // (media, level) aggregate
     Q("q_mm_image_entropy", (s, d) => {
-      def px(i: Int) =
-        conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
       media(s, d).where(col("meta.media_type") === "image")
         .select(col("media_id"), explode(array(
-          (0 until 16).map(i => shiftright(px(i), 6)): _*)).as("lvl"))
+          (0 until 16).map(i => shiftright(payloadByte(i), 6)): _*)).as("lvl"))
         .groupBy(col("media_id"), col("lvl")).agg(count(lit(1)).as("c"))
         .withColumn("term", col("c") *
           floor(log(lit(16.0) / col("c").cast("double")) * 1000000.0 + 0.5)
@@ -292,11 +268,7 @@ object MultimodalQueries {
         .orderBy("media_id")
     },
       s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'image'),
+          ${bytesOf("image")},
           lv AS (SELECT media_id, unnest(bytes) // 64 AS lvl FROM b),
           c AS (SELECT media_id, lvl, CAST(count(*) AS BIGINT) AS c
                 FROM lv GROUP BY 1, 2),
@@ -317,11 +289,7 @@ object MultimodalQueries {
       Multimodal.phashPairs(Multimodal.audioFingerprint(media(s, d)), 3)
         .orderBy("ida", "idb"),
       s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'audio'),
+          ${bytesOf("audio")},
           fp AS (
             SELECT media_id,
                    CAST(list_reduce(list_prepend(0::BIGINT,
@@ -353,22 +321,7 @@ object MultimodalQueries {
       // (quadratic in component size — infeasible on sf1mut's saturated
       // one-component domain, r9 verdict #4).
       s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'image'),
-          t AS (
-            SELECT media_id, bytes,
-                   list_reduce(list_prepend(0::BIGINT, bytes), (a, b) -> a + b) AS total
-            FROM b),
-          ph AS (
-            SELECT media_id,
-                   CAST(list_reduce(list_prepend(0::BIGINT,
-                     [CASE WHEN bytes[i+1] * 16 > total THEN (1::BIGINT << i)
-                           ELSE 0::BIGINT END for i in range(0, 16)]),
-                     (a, b) -> a + b) AS BIGINT) AS phash
-            FROM t),
+          ${phashCtes()},
           vals AS (SELECT phash AS v, CAST(count(*) AS BIGINT) AS cnt,
                           min(media_id) AS minid
                    FROM ph GROUP BY 1),
@@ -408,22 +361,7 @@ object MultimodalQueries {
             SELECT doc_id AS media_id, md5(text) AS h,
                    (['image','audio','video'])[(doc_id % 3) + 1] AS media_type
             FROM documents),
-          ib AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM mm WHERE media_type = 'image'),
-          it AS (
-            SELECT media_id, bytes,
-                   list_reduce(list_prepend(0::BIGINT, bytes), (a, b) -> a + b) AS total
-            FROM ib),
-          iph AS (
-            SELECT media_id,
-                   CAST(list_reduce(list_prepend(0::BIGINT,
-                     [CASE WHEN bytes[i+1] * 16 > total THEN (1::BIGINT << i)
-                           ELSE 0::BIGINT END for i in range(0, 16)]),
-                     (a, b) -> a + b) AS BIGINT) AS phash
-            FROM it),
+          ${phashCtes("i", "mm")},
           ivals AS (SELECT phash AS v, CAST(count(*) AS BIGINT) AS cnt,
                            min(media_id) AS minid
                     FROM iph GROUP BY 1),
@@ -496,11 +434,7 @@ object MultimodalQueries {
       Multimodal.exposure(media(s, d), lo = 64, hi = 192)
         .orderBy("media_id"),
       s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'image'),
+          ${bytesOf("image")},
           e AS (
             SELECT media_id,
                    CAST(len(list_filter(bytes, x -> x < 64)) AS BIGINT) AS n_dark,
@@ -520,13 +454,11 @@ object MultimodalQueries {
     // no self-join, runs of any length in a single pass. The curation
     // signal: clips that are mostly silence get dropped before decode
     Q("q_mm_audio_silence", (s, d) => {
-      def px(i: Int) =
-        conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("media_id").orderBy("pos")
       val samples = media(s, d).where(col("meta.media_type") === "audio")
         .select(col("media_id"),
-          posexplode(array((0 until 16).map(px): _*)).as(Seq("pos", "amp")))
+          posexplode(array((0 until 16).map(payloadByte): _*)).as(Seq("pos", "amp")))
       val runs = samples.where(col("amp") < 64)
         .withColumn("grp", col("pos") - row_number().over(w))
         .groupBy(col("media_id"), col("grp"))
@@ -538,11 +470,7 @@ object MultimodalQueries {
         .orderBy("media_id")
     },
       s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'audio'),
+          ${bytesOf("audio")},
           sm AS (
             SELECT media_id, i AS pos, bytes[i + 1] AS amp
             FROM b, range(0, 16) t(i)),
@@ -564,10 +492,8 @@ object MultimodalQueries {
     // from greatest/least over the decoded row bytes — map-side integer
     // expressions, one scan, no aggregation
     Q("q_mm_letterbox", (s, d) => {
-      def px(i: Int) =
-        conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
       def rowRange(r: Int) = {
-        val b = (0 to 3).map(c => px(4 * r + c))
+        val b = (0 to 3).map(c => payloadByte(4 * r + c))
         greatest(b: _*) - least(b: _*)
       }
       media(s, d).where(col("meta.media_type") === "image")
@@ -579,11 +505,7 @@ object MultimodalQueries {
         .orderBy("media_id")
     },
       s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'image'),
+          ${bytesOf("image")},
           r AS (
             SELECT media_id,
                    CAST(greatest(bytes[1], bytes[2], bytes[3], bytes[4])
@@ -604,11 +526,10 @@ object MultimodalQueries {
     // arithmetic on the decoded bytes (map-side expressions only: no
     // shuffle, no UDF), so the blur flag is bitwise across engines
     Q("q_mm_blur_energy", (s, d) => {
-      def px(i: Int) =
-        conv(substring(col("payload_md5"), 2 * i + 1, 2), 16, 10).cast("long")
       val terms = for { r <- 1 to 2; c <- 1 to 2 } yield {
-        val l = px(4 * r + c) * 4 - px(4 * (r - 1) + c) - px(4 * (r + 1) + c) -
-          px(4 * r + c - 1) - px(4 * r + c + 1)
+        val l = payloadByte(4 * r + c) * 4 - payloadByte(4 * (r - 1) + c) -
+          payloadByte(4 * (r + 1) + c) - payloadByte(4 * r + c - 1) -
+          payloadByte(4 * r + c + 1)
         l * l
       }
       media(s, d).where(col("meta.media_type") === "image")
@@ -619,11 +540,7 @@ object MultimodalQueries {
         .orderBy("media_id")
     },
       s"""$bytesCte,
-          b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                     i -> CAST('0x' || substr(h, 2*i + 1, 2) AS BIGINT)) AS bytes
-            FROM m WHERE media_type = 'image'),
+          ${bytesOf("image")},
           l AS (
             SELECT media_id,
                    CAST(

@@ -73,20 +73,18 @@ object PipelineQueries {
     },
       // full-chain replay: filter → fingerprint dedup → split → epoch key →
       // running-window packing → manifest, stage for stage
-      """WITH f AS (
+      s"""WITH f AS (
            SELECT doc_id, text FROM documents
            WHERE lang IN ('en', 'de') AND n_chars BETWEEN 100 AND 5000),
          n AS (SELECT doc_id, text,
-                      md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
+                      md5(${TextFunctions.sqlNormalized("text")})
                         AS fp
                FROM f),
          keep AS (SELECT min(doc_id) AS doc_id FROM n GROUP BY fp),
          ded AS (SELECT n.doc_id, n.text FROM n JOIN keep USING (doc_id)),
          base AS (
            SELECT doc_id,
-                  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                       ELSE len(string_split_regex(trim(text), '\s+'))
-                  END AS BIGINT) AS n_tokens,
+                  CAST(${TextFunctions.sqlTokenCount("text")} AS BIGINT) AS n_tokens,
                   CAST('0x' || substr(md5(md5(text)), 1, 4) AS BIGINT) % 100
                     AS bucket
            FROM ded),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.WideDiv.{mulDivWide, mulDivWideDec, mulDivWideSigned, wide}
+import graft.queries.QueryBlocks.sqlEmbeddings
 import graft.similarity.Similarity
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -97,7 +98,7 @@ object SimilarityQueries {
         """cand AS MATERIALIZED (SELECT DISTINCT a.vec_id AS va, p.vec_id AS vb
                 FROM probes a JOIN probes p
                   ON a.b = p.b AND a.probe = p.probe AND a.vec_id < p.vec_id)"""
-    s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    s"""${sqlEmbeddings()},
        pl AS (SELECT b, i,
                 [CASE WHEN substr(md5('$seed:' || b || ':' || i || ':' || d), 1, 1) <= '7'
                       THEN 1.0 ELSE -1.0 END for d in range(0, 64)] AS r
@@ -147,7 +148,7 @@ object SimilarityQueries {
                       / (CAST(count(*) AS DOUBLE) * 1000000.0) AS cval
                   FROM a$n, range(0, 64) t(dim) GROUP BY 1, 2),
           u$n AS (SELECT cid, list(cval ORDER BY dim) AS cv FROM m$n GROUP BY 1)"""
-    s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    s"""${sqlEmbeddings()},
         c0 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
         ${step(1, "c0")},
         c1 AS (SELECT c0.cid, coalesce(u1.cv, c0.cv) AS cv
@@ -189,15 +190,10 @@ object SimilarityQueries {
            FROM d) WHERE rn = 1),
        dt AS (SELECT id AS qid, m, cid, d2q FROM d WHERE id < $QuerySetMax)"""
 
-  private val cosSql =
-    """list_dot_product(x.v, y.v)
-       / (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v)))"""
+  private val cosSql = Similarity.sqlCosine("x.v", "y.v")
 
   /** 8-dim-prefix variant of [[cosSql]] (the Matryoshka truncation arm). */
-  private val cos8Sql =
-    """list_dot_product(x.v[1:8], y.v[1:8])
-       / (sqrt(list_dot_product(x.v[1:8], x.v[1:8]))
-        * sqrt(list_dot_product(y.v[1:8], y.v[1:8])))"""
+  private val cos8Sql = Similarity.sqlCosine("x.v[1:8]", "y.v[1:8]")
 
   val registry: Seq[Q] = Seq(
     // exact brute-force cosine top-5: broadcast query set × corpus scan
@@ -207,7 +203,7 @@ object SimilarityQueries {
         emb.where(col("vec_id") < QuerySetMax), emb, 5)
         .orderBy("qid", "rank")
     },
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
           scored AS (
             SELECT x.vec_id AS qid, y.vec_id AS nid, $cosSql AS cos
             FROM e x JOIN e y ON y.vec_id != x.vec_id
@@ -249,7 +245,7 @@ object SimilarityQueries {
           count(when(col("pred") === col("truth"), 1)).as("n_correct"))
         .orderBy("truth")
     },
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
           l AS (SELECT vec_id, label FROM embeddings),
           scored AS (
             SELECT x.vec_id AS qid, y.vec_id AS nid, $cosSql AS cos
@@ -312,7 +308,7 @@ object SimilarityQueries {
       }
       out.select("pick", "vec_id", "score").orderBy("pick")
     },
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
           s1 AS (SELECT * FROM e WHERE vec_id = (SELECT min(vec_id) FROM e)),
           m1 AS (SELECT x.vec_id, greatest(-2.0, $cosSql) AS maxcos
                  FROM e x, s1 y WHERE x.vec_id != y.vec_id),
@@ -396,7 +392,7 @@ object SimilarityQueries {
           col("s3").as("nid"), col("score3").as("score")))
         .orderBy("qid", "pick")
     },
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
           scored AS (
             SELECT x.vec_id AS qid, y.vec_id AS nid, $cosSql AS cos
             FROM e x JOIN e y ON y.vec_id != x.vec_id
@@ -478,7 +474,7 @@ object SimilarityQueries {
       // vector rank CTE shared with q_sim_topk_brute — the fusion oracle
       // can only drift if one of those does
       s"""WITH ${TextQueries.bm25RankCte()},
-          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+          ${sqlEmbeddings()},
           scored AS (
             SELECT x.vec_id AS qid, y.vec_id AS nid, $cosSql AS cos
             FROM e x JOIN e y ON y.vec_id != x.vec_id
@@ -538,7 +534,7 @@ object SimilarityQueries {
       Similarity.ivfTopK(Tables.embeddings(s, d),
         nCentroids = 8, queryMaxId = QuerySetMax, k = 3)
         .orderBy("qid", "rank"),
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
           cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
           scored AS (
             SELECT e.vec_id AS id, e.v, cid,
@@ -554,8 +550,7 @@ object SimilarityQueries {
           c AS (SELECT id AS nid, v AS nv, cell FROM assigned),
           cos AS (
             SELECT qid, nid,
-                   ${dotSql("qv", "nv")}
-                     / (sqrt(${dotSql("qv", "qv")}) * sqrt(${dotSql("nv", "nv")})) AS cos
+                   ${Similarity.sqlCosine("qv", "nv")} AS cos
             FROM q JOIN c USING (cell) WHERE qid != nid),
           r AS (
             SELECT qid, nid, cos,
@@ -569,7 +564,7 @@ object SimilarityQueries {
       Similarity.ivfTopKProbes(Tables.embeddings(s, d),
         nCentroids = 8, queryMaxId = QuerySetMax, k = 3, nprobe = 2)
         .orderBy("qid", "rank"),
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
           cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
           ranked AS (
             SELECT id, v, cid,
@@ -582,8 +577,7 @@ object SimilarityQueries {
                 WHERE rn <= 2 AND id < $QuerySetMax),
           cos AS (
             SELECT qid, nid,
-                   ${dotSql("qv", "nv")}
-                     / (sqrt(${dotSql("qv", "qv")}) * sqrt(${dotSql("nv", "nv")})) AS cos
+                   ${Similarity.sqlCosine("qv", "nv")} AS cos
             FROM q JOIN c USING (cell) WHERE qid != nid),
           r AS (
             SELECT qid, nid, cos,
@@ -791,7 +785,7 @@ object SimilarityQueries {
           Similarity.l2norm(n).as("renorm"))
         .orderBy("vec_id")
     },
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
           n AS (SELECT vec_id, v,
                        sqrt(${dotSql("v", "v")}) AS nrm
                 FROM e),
@@ -821,7 +815,7 @@ object SimilarityQueries {
         .join(hits, Seq("qid"), "left").na.fill(0L, Seq("n_hit"))
         .orderBy("qid")
     },
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
           cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
           scored AS (
             SELECT e.vec_id AS id, e.v, cid, ${dotSql("v", "cv")} AS score
@@ -836,8 +830,7 @@ object SimilarityQueries {
           c AS (SELECT id AS nid, v AS nv, cell FROM assigned),
           icos AS (
             SELECT qid, nid,
-                   ${dotSql("qv", "nv")}
-                     / (sqrt(${dotSql("qv", "qv")}) * sqrt(${dotSql("nv", "nv")})) AS cos
+                   ${Similarity.sqlCosine("qv", "nv")} AS cos
             FROM q JOIN c USING (cell) WHERE qid != nid),
           i3 AS (SELECT qid, nid
                  FROM (SELECT qid, nid,
@@ -878,7 +871,7 @@ object SimilarityQueries {
           max(when(col("d") === 32, col("sc"))).cast("long").as("s33"))
         .orderBy("vec_id")
     },
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
          x AS (SELECT vec_id, d, CAST(floor(v[d+1] * 1000000 + 0.5) AS BIGINT) AS xm
                FROM e, range(0, 64) r(d)),
          st AS (SELECT d, min(xm) AS mn, max(xm) AS mx FROM x GROUP BY d),
@@ -904,7 +897,7 @@ object SimilarityQueries {
           aggregate(col("qz.q"), lit(0L), (acc, x) => acc + x).as("qsum"))
         .orderBy("vec_id")
     },
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
          s AS (SELECT vec_id, v,
                       list_max(list_transform(v, x -> abs(x))) AS scale
                FROM e),
@@ -1043,7 +1036,7 @@ object SimilarityQueries {
       Similarity.hardNegatives(Tables.embeddings(s, d),
         queryMaxId = QuerySetMax, k = 3)
         .orderBy("qid", "rank"),
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings(cols = "vec_id, label")},
           scored AS (
             SELECT x.vec_id AS qid, x.label AS qlabel,
                    y.vec_id AS nid, y.label AS nlabel, $cosSql AS cos
@@ -1088,7 +1081,7 @@ object SimilarityQueries {
         m = 8, subDim = 8, ksub = 16, k = 3)
         .orderBy("qid", "rank"),
       s"""WITH $pqCtes,
-         er AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         ${sqlEmbeddings("er")},
          cents AS (SELECT vec_id AS ccid, v AS cv FROM er WHERE vec_id < 8),
          ranked AS (
            SELECT id, ccid,
@@ -1123,7 +1116,7 @@ object SimilarityQueries {
           element_at(p, 8).as("p8"))
         .orderBy("vec_id")
     },
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
          pl AS (SELECT j,
                   [CASE WHEN substr(md5('7:0:' || j || ':' || d), 1, 1) <= '7'
                         THEN 1.0 ELSE -1.0 END for d in range(0, 64)] AS r
@@ -1155,7 +1148,7 @@ object SimilarityQueries {
         .select(col("qid"), coalesce(col("h"), lit(0L)).as("recall5_hits"))
         .orderBy("qid")
     },
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
           fs AS (
             SELECT x.vec_id AS qid, y.vec_id AS nid, $cosSql AS cos
             FROM e x JOIN e y ON y.vec_id != x.vec_id
@@ -1195,7 +1188,7 @@ object SimilarityQueries {
           expr("mx * nc * 1000000 DIV tot").as("imbalance_ppm"))
         .orderBy("cell")
     },
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
           cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
           scored AS (
             SELECT e.vec_id AS id, cid, ${dotSql("v", "cv")} AS score
@@ -1469,7 +1462,7 @@ object SimilarityQueries {
           expr("(csize - 1) * 1000000 DIV (n - 1)").as("scan_ratio_ppm"))
         .orderBy("qid")
     },
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH ${sqlEmbeddings()},
           cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
           scored AS (
             SELECT e.vec_id AS id, cid, ${dotSql("v", "cv")} AS score

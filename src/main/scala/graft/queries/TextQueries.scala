@@ -21,6 +21,33 @@ object TextQueries {
 
   private def docs(s: SparkSession, d: String): DataFrame = Tables.documents(s, d)
 
+  /** `t(doc_id, toks)`: every document's lowercased whitespace tokens, the
+    * twin of `tokens(lower(col("text")))`. */
+  private val docToksCte =
+    s"""t AS (
+           SELECT doc_id, ${sqlTokens("lower(text)")} AS toks
+           FROM documents)"""
+
+  /** Memoized distinct token 3-gram hashes `(doc_id, ng)` of every
+    * document: the eval and corpus slices of the decontamination queries
+    * both come from this one table. */
+  private def decontamNgrams(s: SparkSession, d: String): DataFrame =
+    QueryCaches.memo(s, d, "decontam_ngrams") {
+      graft.text.Decontaminate.ngramTable(
+        docs(s, d), col("doc_id"), col("text"), n = 3)
+    }
+
+  /** DuckDB oracle twin for [[decontamNgrams]]: CTEs `t`, `g` and
+    * `gd(doc_id, ng)`. */
+  private val decontamNgramsCte =
+    s"""t AS (
+           SELECT doc_id, ${sqlTokens("text")} AS toks
+           FROM documents),
+         g AS (
+           SELECT doc_id, md5(array_to_string(toks[i+1 : i+3], ' ')) AS ng
+           FROM t, lateral unnest(range(0, greatest(len(toks) - 2, 0))) u(i)),
+         gd AS (SELECT DISTINCT doc_id, ng FROM g)"""
+
   /** Waterfilling allocation over a BOUNDED (source, cap) frame with
     * budget ⌊bNum·Σcap/bDen⌋ — see q_text_mix_waterfill (which fixes
     * 9/10). Factored so specs can drive synthetic cap profiles and
@@ -66,6 +93,16 @@ object TextQueries {
         posexplode(tokens(lower(col("text")))).as(Seq("pos", "tok")))
     }
 
+  /** DuckDB oracle twin for [[postings]]: [[docToksCte]] and
+    * `<cte>(doc_id, <tok>, pos)` — generate_subscripts expands in lockstep
+    * with unnest (1-based → pos-1 matches Spark's 0-based posexplode). */
+  private def postingsCtes(cte: String = "x", tok: String = "tok"): String =
+    s"""$docToksCte,
+         $cte AS (
+           SELECT doc_id, unnest(toks) AS $tok,
+                  generate_subscripts(toks, 1) - 1 AS pos
+           FROM t)"""
+
   /** Memoized DSIR per-doc importance weights (target = the `en` stratum,
     * 4096 hashed unigram+bigram buckets) — the select and shift rows read
     * the same scoring pass (lifecycle in [[QueryCaches]]). */
@@ -80,10 +117,9 @@ object TextQueries {
     * md5 buckets, same Laplace-(+1) ln-difference quantized to micro-nats
     * per bucket BEFORE the per-doc sum. */
   private val dsirCte: String =
-    """WITH t AS (
+    s"""WITH t AS (
          SELECT doc_id, lang = 'en' AS is_tgt,
-                CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                     ELSE string_split_regex(trim(lower(text)), '\s+') END
+                ${sqlTokens("lower(text)")}
                   AS toks
          FROM documents),
        g AS (
@@ -133,11 +169,7 @@ object TextQueries {
     *             the gate row was silently vacuous there until the sf1
     *             run flagged it). */
   private[queries] def bm25RankCte(qBag: String = "doc_id < 10"): String =
-    raw"""t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
+    raw"""$docToksCte,
          p AS (
            SELECT nid, dl, tok, CAST(count(*) AS BIGINT) AS tf FROM (
              SELECT doc_id AS nid, CAST(len(toks) AS BIGINT) AS dl,
@@ -173,36 +205,14 @@ object TextQueries {
                         ORDER BY score_micro DESC, nid) AS BIGINT) AS rank
                FROM ag)"""
 
-  /** DuckDB-side score expression for one language profile. */
-  private def sqlLangScore(words: Seq[String]): String = {
-    val list = words.map(w => s"'$w'").mkString("[", ", ", "]")
-    s"len(list_filter(toks, t -> list_contains($list, t)))"
-  }
-
-  private val sqlToks =
-    """CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-            ELSE string_split_regex(trim(lower(text)), '\s+') END"""
-
-  /** Shared langid CTE chain + prediction expression (q_text_langid and
-    * q_text_langid_eval must agree verbatim). */
+  /** Shared langid CTE chain (q_text_langid and q_text_langid_eval must
+    * agree verbatim); the prediction over it is `sqlLangPred`. */
   private lazy val sqlLangidCtes =
     s"""WITH t AS (
-          SELECT doc_id, lang, text, $sqlToks AS toks FROM documents),
+          SELECT doc_id, lang, text, ${sqlTokens("lower(text)")} AS toks FROM documents),
         s AS (
-          SELECT doc_id, lang, text,
-                 ${sqlLangScore(Seq("the", "a", "of", "and", "to", "in", "is"))} AS s_en,
-                 ${sqlLangScore(Seq("der", "die", "das", "und", "ist", "nicht", "mit"))} AS s_de,
-                 ${sqlLangScore(Seq("el", "los", "las", "es", "un", "una", "y"))} AS s_es,
-                 ${sqlLangScore(Seq("le", "la", "les", "et", "est", "une", "dans"))} AS s_fr
+          SELECT doc_id, lang, text, $sqlLangScores
           FROM t)"""
-
-  private val sqlLangPred =
-    """CASE WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
-            WHEN s_en > 0 AND s_en >= s_de AND s_en >= s_es AND s_en >= s_fr THEN 'en'
-            WHEN s_de > 0 AND s_de >= s_es AND s_de >= s_fr THEN 'de'
-            WHEN s_es > 0 AND s_es >= s_fr THEN 'es'
-            WHEN s_fr > 0 THEN 'fr'
-            ELSE 'und' END"""
 
   val registry: Seq[Q] = Seq(
     // whitespace + BPE-ish token counting
@@ -213,11 +223,9 @@ object TextQueries {
         bpeTokenCount(col("text")).cast("long").as("n_bpe_tokens"),
         length(col("text")).cast("long").as("len_chars"))
         .orderBy("doc_id"),
-      """SELECT doc_id,
-                CASE WHEN length(trim(text)) = 0 THEN 0
-                     ELSE len(string_split_regex(trim(text), '\s+')) END AS n_ws_tokens,
-                len(regexp_extract_all(text,
-                    '''(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s'']+')) AS n_bpe_tokens,
+      s"""SELECT doc_id,
+                ${sqlTokenCount("text")} AS n_ws_tokens,
+                ${sqlBpeTokenCount("text")} AS n_bpe_tokens,
                 length(text) AS len_chars
          FROM documents ORDER BY doc_id"""),
 
@@ -229,16 +237,12 @@ object TextQueries {
         punctCount(col("text")).cast("long").as("n_punct"),
         qualityScore(col("text")).as("quality"))
         .orderBy("doc_id"),
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
                   CAST(length(text) AS DOUBLE) AS chars,
-                  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                            ELSE len(string_split_regex(trim(text), '\s+')) END AS DOUBLE) AS toks,
-                  len(list_filter(
-                        CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                             ELSE string_split_regex(trim(lower(text)), '\s+') END,
-                        t -> list_contains(['the','a','an','and','or','of','to','in','is','it'], t))) AS n_stop,
-                  len(regexp_extract_all(text, '[.,!?;:''"()\[\]{}*#@&%/\\_-]')) AS n_punct
+                  CAST(${sqlTokenCount("text")} AS DOUBLE) AS toks,
+                  ${sqlStopwordCount("text")} AS n_stop,
+                  ${sqlPunctCount("text")} AS n_punct
            FROM documents)
          SELECT doc_id, n_stop, n_punct,
                 0.4 * least(1.0, chars / 500.0)
@@ -264,13 +268,10 @@ object TextQueries {
             - call_function("div", lit(84600000L) * col("n_syll"),
               greatest(lit(1L), col("n_words"))))
         .orderBy("doc_id"),
-      """WITH f AS (
+      s"""WITH f AS (
            SELECT doc_id,
-                  CAST(len(list_filter(string_split_regex(text, '[.!?]+'),
-                       s -> length(trim(s)) > 0)) AS BIGINT) AS n_sents,
-                  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                       ELSE len(string_split_regex(trim(text), '\s+'))
-                       END AS BIGINT) AS n_words,
+                  CAST(${sqlSentenceCount("text")} AS BIGINT) AS n_sents,
+                  CAST(${sqlTokenCount("text")} AS BIGINT) AS n_words,
                   CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
                     AS BIGINT) AS n_syll
            FROM documents)
@@ -294,7 +295,7 @@ object TextQueries {
       // confusion matrix of the langid heuristic against the fixture's
       // ground-truth label — same prediction CTEs as q_text_langid
       s"""$sqlLangidCtes,
-          p AS (SELECT lang, $sqlLangPred AS lang_pred FROM s)
+          p AS (SELECT lang, ${sqlLangPred("text")} AS lang_pred FROM s)
           SELECT lang, lang_pred, CAST(count(*) AS BIGINT) AS n
           FROM p GROUP BY 1, 2 ORDER BY lang, lang_pred"""),
 
@@ -303,7 +304,7 @@ object TextQueries {
         .select(col("doc_id"), col("lang"), col("lang_pred"))
         .orderBy("doc_id"),
       s"""$sqlLangidCtes
-          SELECT doc_id, lang, $sqlLangPred AS lang_pred
+          SELECT doc_id, lang, ${sqlLangPred("text")} AS lang_pred
           FROM s ORDER BY doc_id"""),
 
     // md5 + polynomial rolling-hash fingerprints
@@ -313,8 +314,8 @@ object TextQueries {
         fingerprintMd5(col("text")).as("fp_md5"),
         fingerprintRolling(col("text")).as("fp_roll"))
         .orderBy("doc_id"),
-      """WITH n AS (
-           SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
+      s"""WITH n AS (
+           SELECT doc_id, ${sqlNormalized("text")} AS norm
            FROM documents)
          SELECT doc_id, md5(norm) AS fp_md5,
                 CASE WHEN length(norm) = 0 THEN 0
@@ -359,10 +360,9 @@ object TextQueries {
           md5(col("chunk")).as("chunk_md5"),
           size(split(col("chunk"), " ")).cast("long").as("n_chunk_tokens"))
         .orderBy("doc_id", "chunk_idx"),
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(text), '\s+') END AS toks
+                  ${sqlTokens("text")} AS toks
            FROM documents),
          c AS (
            SELECT doc_id, toks,
@@ -434,16 +434,11 @@ object TextQueries {
           qd AS (
             SELECT doc_id,
                    0.4 * least(1.0, CAST(length(text) AS DOUBLE) / 500.0)
-                 + 0.3 * least(1.0, 4.0 * (CAST(len(list_filter(
-                       CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                            ELSE string_split_regex(trim(lower(text)), '\\s+') END,
-                       t -> list_contains(['the','a','an','and','or','of','to','in','is','it'], t))) AS DOUBLE)
-                     / greatest(CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                            ELSE len(string_split_regex(trim(text), '\\s+')) END AS DOUBLE), 1.0)))
-                 + 0.3 * (1.0 - least(1.0, 10.0 * (CAST(len(regexp_extract_all(text, '[.,!?;:''"()\\[\\]{}*#@&%/\\\\_-]')) AS DOUBLE)
+                 + 0.3 * least(1.0, 4.0 * (CAST(${sqlStopwordCount("text")} AS DOUBLE)
+                     / greatest(CAST(${sqlTokenCount("text")} AS DOUBLE), 1.0)))
+                 + 0.3 * (1.0 - least(1.0, 10.0 * (CAST(${sqlPunctCount("text")} AS DOUBLE)
                      / greatest(CAST(length(text) AS DOUBLE), 1.0)))) AS quality,
-                   CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                        ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT) AS n_tokens
+                   CAST(${sqlTokenCount("text")} AS BIGINT) AS n_tokens
             FROM documents),
           wq AS (SELECT q.doc_id, q.quality, q.n_tokens,
                         COALESCE(cl.cluster_id, q.doc_id) AS c
@@ -487,12 +482,10 @@ object TextQueries {
       s"""WITH t AS (
             SELECT doc_id, source, lang, n_chars, text,
                    CAST(length(text) AS DOUBLE) AS chars,
-                   CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                             ELSE len(string_split_regex(trim(text), '\\s+')) END AS DOUBLE) AS toksn,
-                   len(list_filter($sqlToks,
-                         t -> list_contains(['the','a','an','and','or','of','to','in','is','it'], t))) AS n_stop,
-                   len(regexp_extract_all(text, '[.,!?;:''"()\\[\\]{}*#@&%/\\\\_-]')) AS n_punct,
-                   $sqlToks AS toks
+                   CAST(${sqlTokenCount("text")} AS DOUBLE) AS toksn,
+                   ${sqlStopwordCount("text")} AS n_stop,
+                   ${sqlPunctCount("text")} AS n_punct,
+                   ${sqlTokens("lower(text)")} AS toks
             FROM documents),
           q AS (
             SELECT *,
@@ -501,23 +494,14 @@ object TextQueries {
                  + 0.3 * (1.0 - least(1.0, 10.0 * (CAST(n_punct AS DOUBLE) / greatest(chars, 1.0)))) AS quality
             FROM t),
           sc AS (
-            SELECT *,
-                   ${sqlLangScore(Seq("the", "a", "of", "and", "to", "in", "is"))} AS s_en,
-                   ${sqlLangScore(Seq("der", "die", "das", "und", "ist", "nicht", "mit"))} AS s_de,
-                   ${sqlLangScore(Seq("el", "los", "las", "es", "un", "una", "y"))} AS s_es,
-                   ${sqlLangScore(Seq("le", "la", "les", "et", "est", "une", "dans"))} AS s_fr
+            SELECT *, $sqlLangScores
             FROM q),
           l AS (
             SELECT *,
-                   CASE WHEN len(regexp_extract_all(text, '[\\x{4e00}-\\x{9fff}]')) > 0 THEN 'zh'
-                        WHEN s_en > 0 AND s_en >= s_de AND s_en >= s_es AND s_en >= s_fr THEN 'en'
-                        WHEN s_de > 0 AND s_de >= s_es AND s_de >= s_fr THEN 'de'
-                        WHEN s_es > 0 AND s_es >= s_fr THEN 'es'
-                        WHEN s_fr > 0 THEN 'fr'
-                        ELSE 'und' END AS pred
+                   ${sqlLangPred("text")} AS pred
             FROM sc),
           surv AS (
-            SELECT *, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+            SELECT *, md5(${sqlNormalized("text")}) AS fp
             FROM l WHERE quality >= 0.5 AND pred = lang),
           kept AS (
             SELECT * FROM (
@@ -554,11 +538,9 @@ object TextQueries {
         .select("doc_id", "n_tokens", "bin")
         .orderBy("doc_id")
     },
-      """WITH n AS (
+      s"""WITH n AS (
            SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN 0
-                       ELSE len(string_split_regex(trim(text), '\s+'))
-                  END AS nt
+                  ${sqlTokenCount("text")} AS nt
            FROM documents),
          p AS (
            SELECT doc_id, CAST(nt AS BIGINT) AS n_tokens,
@@ -586,11 +568,9 @@ object TextQueries {
             e => e.getField("text")), "\n")).as("seq_md5"))
         .orderBy("bin")
     },
-      """WITH n AS (
+      s"""WITH n AS (
            SELECT doc_id, text,
-                  CASE WHEN length(trim(text)) = 0 THEN 0
-                       ELSE len(string_split_regex(trim(text), '\s+'))
-                  END AS nt
+                  ${sqlTokenCount("text")} AS nt
            FROM documents),
          p AS (
            SELECT doc_id, text, CAST(nt AS BIGINT) AS n_tokens,
@@ -641,11 +621,9 @@ object TextQueries {
         .select("epoch", "bin", "n_docs", "total_tokens", "manifest_md5")
         .orderBy("epoch", "bin")
     },
-      """WITH base AS (
+      s"""WITH base AS (
            SELECT doc_id,
-                  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                       ELSE len(string_split_regex(trim(text), '\s+'))
-                  END AS BIGINT) AS n_tokens,
+                  CAST(${sqlTokenCount("text")} AS BIGINT) AS n_tokens,
                   CAST('0x' || substr(md5(md5(text)), 1, 4) AS BIGINT) % 100
                     AS bucket
            FROM documents),
@@ -695,11 +673,7 @@ object TextQueries {
         .orderBy(col("total").desc, col("tok"))
         .limit(20)
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
+      s"""WITH $docToksCte,
          x AS (SELECT doc_id, unnest(toks) AS tok FROM t),
          pd AS (SELECT tok, doc_id, CAST(count(*) AS BIGINT) AS c
                 FROM x GROUP BY 1, 2),
@@ -734,11 +708,7 @@ object TextQueries {
         .select(col("ida"), col("idb"))
         .orderBy("ida", "idb")
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
+      s"""WITH $docToksCte,
          f AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 3),
          pre AS (SELECT doc_id AS idb,
                         md5(array_to_string(toks[1:3], ' ')) AS h
@@ -784,15 +754,7 @@ object TextQueries {
         .select("ctx", "rank", "nxt", "cvw", "p_kn_ppm")
         .orderBy("ctx", "rank")
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
-         tok AS (
-           SELECT doc_id, unnest(toks) AS tok,
-                  generate_subscripts(toks, 1) - 1 AS pos
-           FROM t),
+      s"""WITH ${postingsCtes("tok")},
          pr AS (
            SELECT ctx, nxt FROM (
              SELECT tok AS ctx,
@@ -840,9 +802,8 @@ object TextQueries {
           ppmWide(col("cum"), col("t")).as("coverage_ppm"))
         .orderBy("rank")
     },
-      """WITH t AS (
-           SELECT CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
+      s"""WITH t AS (
+           SELECT ${sqlTokens("lower(text)")} AS toks
            FROM documents),
          x AS (SELECT unnest(toks) AS tok FROM t),
          c AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM x GROUP BY 1),
@@ -886,11 +847,9 @@ object TextQueries {
       // ascending-caps prefix saturation + floor level, mirrored verbatim;
       // the all-saturated −1 branch is unreachable at bNum/bDen = 9/10
       // (sat_m would need B ≥ Σcap) but mirrored for formula parity
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT source,
-                  CASE WHEN length(trim(text)) = 0 THEN 0
-                       ELSE len(string_split_regex(trim(text), '\s+'))
-                  END AS nt
+                  ${sqlTokenCount("text")} AS nt
            FROM documents),
          caps AS (SELECT source, CAST(sum(CAST(nt AS BIGINT)) AS BIGINT) AS cap
                   FROM t GROUP BY 1),
@@ -941,11 +900,9 @@ object TextQueries {
             .as("epoch_milli"))
         .orderBy("source")
     },
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT source,
-                  CASE WHEN length(trim(text)) = 0 THEN 0
-                       ELSE len(string_split_regex(trim(text), '\s+'))
-                  END AS nt
+                  ${sqlTokenCount("text")} AS nt
            FROM documents),
          c AS (SELECT source, CAST(sum(CAST(nt AS BIGINT)) AS BIGINT) AS n_tokens
                FROM t GROUP BY 1),
@@ -991,10 +948,9 @@ object TextQueries {
         .select(col("src_a"), col("src_b"), expr("l1 DIV 2").as("tv_ppm"))
         .orderBy("src_a", "src_b")
     },
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT source,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
+                  ${sqlTokens("lower(text)")} AS toks
            FROM documents),
          x AS (SELECT source, unnest(toks) AS tok FROM t),
          cnt AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS c
@@ -1034,8 +990,7 @@ object TextQueries {
     },
       s"""WITH t AS (
            SELECT source,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\\s+') END
+                  ${sqlTokens("lower(text)")}
                     AS toks
            FROM documents),
          x AS (SELECT source, unnest(toks) AS tok FROM t),
@@ -1092,14 +1047,7 @@ object TextQueries {
         .where(col("shared_fps") >= 5)
         .orderBy("ida", "idb")
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
-         x AS (SELECT doc_id, unnest(toks) AS tok,
-                      generate_subscripts(toks, 1) - 1 AS pos
-               FROM t),
+      s"""WITH ${postingsCtes()},
          g AS (
            SELECT doc_id, pos, tok,
                   lead(tok, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS t1,
@@ -1151,14 +1099,7 @@ object TextQueries {
             e => e.getField("tok")), " ")).as("chunk_md5"))
         .orderBy("doc_id", "chunk_id")
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
-         x AS (SELECT doc_id, unnest(toks) AS tok,
-                      generate_subscripts(toks, 1) - 1 AS pos
-               FROM t),
+      s"""WITH ${postingsCtes()},
          f AS (SELECT doc_id, pos, tok,
                       CASE WHEN CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) % 16 = 0
                            THEN 1 ELSE 0 END AS b
@@ -1187,10 +1128,9 @@ object TextQueries {
           min(col("doc_id") * 1000000 + col("chunk_idx")).as("keep_key"))
         .where(col("n_copies") > 1)
         .orderBy("chunk_md5"),
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(text), '\s+') END AS toks
+                  ${sqlTokens("text")} AS toks
            FROM documents),
          c AS (
            SELECT doc_id, toks,
@@ -1217,25 +1157,14 @@ object TextQueries {
     // from ONE table, so the n-gram projection is built once and cached
     // (QueryCaches) instead of tokenizing the documents per side
     Q("q_text_decontaminate", (s, d) => {
-      val ng = QueryCaches.memo(s, d, "decontam_ngrams") {
-        graft.text.Decontaminate.ngramTable(
-          docs(s, d), col("doc_id"), col("text"), n = 3)
-      }
+      val ng = decontamNgrams(s, d)
       graft.text.Decontaminate.contaminationOnNgrams(
           ng.where(col("doc_id") % 41 =!= 0),
           ng.where(col("doc_id") % 41 === 0)
             .withColumnRenamed("doc_id", "__eval_id"))
         .orderBy("doc_id")
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(text), '\s+') END AS toks
-           FROM documents),
-         g AS (
-           SELECT doc_id, md5(array_to_string(toks[i+1 : i+3], ' ')) AS ng
-           FROM t, lateral unnest(range(0, greatest(len(toks) - 2, 0))) u(i)),
-         gd AS (SELECT DISTINCT doc_id, ng FROM g),
+      s"""WITH $decontamNgramsCte,
          ev AS (SELECT doc_id AS eval_id, ng FROM gd WHERE doc_id % 41 = 0),
          tr AS (SELECT doc_id, ng FROM gd WHERE doc_id % 41 != 0)
          SELECT tr.doc_id,
@@ -1272,16 +1201,12 @@ object TextQueries {
               sqrt(col("n").cast("double") * col("syy") - col("sy") * col("sy"))))
             .as("pearson_r"))
     },
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
                   CAST(length(text) AS DOUBLE) AS chars,
-                  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                            ELSE len(string_split_regex(trim(text), '\s+')) END AS DOUBLE) AS toks,
-                  len(list_filter(
-                        CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                             ELSE string_split_regex(trim(lower(text)), '\s+') END,
-                        t -> list_contains(['the','a','an','and','or','of','to','in','is','it'], t))) AS n_stop,
-                  len(regexp_extract_all(text, '[.,!?;:''"()\[\]{}*#@&%/\\_-]')) AS n_punct
+                  CAST(${sqlTokenCount("text")} AS DOUBLE) AS toks,
+                  ${sqlStopwordCount("text")} AS n_stop,
+                  ${sqlPunctCount("text")} AS n_punct
            FROM documents),
          qx AS (
            SELECT doc_id,
@@ -1292,8 +1217,7 @@ object TextQueries {
            FROM t),
          tk AS (
            SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
+                  ${sqlTokens("lower(text)")} AS toks
            FROM documents),
          xx AS (SELECT doc_id, unnest(toks) AS tok FROM tk),
          f AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM xx GROUP BY 1),
@@ -1324,10 +1248,7 @@ object TextQueries {
     // Reuses the memoized n-gram projection; docs with zero hits count
     // through the left join
     Q("q_text_contamination_by_source", (s, d) => {
-      val ng = QueryCaches.memo(s, d, "decontam_ngrams") {
-        graft.text.Decontaminate.ngramTable(
-          docs(s, d), col("doc_id"), col("text"), n = 3)
-      }
+      val ng = decontamNgrams(s, d)
       val hits = graft.text.Decontaminate.contaminationOnNgrams(
         ng.where(col("doc_id") % 41 =!= 0),
         ng.where(col("doc_id") % 41 === 0)
@@ -1343,15 +1264,7 @@ object TextQueries {
           expr("n_contaminated * 1000000 DIV n_docs"))
         .orderBy("source")
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(text), '\s+') END AS toks
-           FROM documents),
-         g AS (
-           SELECT doc_id, md5(array_to_string(toks[i+1 : i+3], ' ')) AS ng
-           FROM t, lateral unnest(range(0, greatest(len(toks) - 2, 0))) u(i)),
-         gd AS (SELECT DISTINCT doc_id, ng FROM g),
+      s"""WITH $decontamNgramsCte,
          ev AS (SELECT ng FROM gd WHERE doc_id % 41 = 0),
          tr AS (SELECT doc_id, ng FROM gd WHERE doc_id % 41 != 0),
          hits AS (SELECT DISTINCT tr.doc_id FROM tr JOIN ev USING (ng)),
@@ -1384,10 +1297,9 @@ object TextQueries {
         .na.fill(0L, Seq("n_novel"))
         .orderBy("source")
     },
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id, source,
-                  CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(text), '\s+') END AS toks
+                  ${sqlTokens("text")} AS toks
            FROM documents),
          c AS (
            SELECT doc_id, source, toks,
@@ -1437,11 +1349,7 @@ object TextQueries {
             greatest(col("n_tokens") - 1, lit(1L)).cast("double")).as("top_bigram_frac"))
         .orderBy("doc_id")
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
+      s"""WITH $docToksCte,
          b AS (
            SELECT doc_id,
                   CAST(len(toks) AS BIGINT) AS n_tokens,
@@ -1623,9 +1531,8 @@ object TextQueries {
         .where(col("rank") <= 3)
         .orderBy("ctx", "rank")
     },
-      """WITH t AS (
-           SELECT CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
+      s"""WITH t AS (
+           SELECT ${sqlTokens("lower(text)")} AS toks
            FROM documents),
          bg AS (
            SELECT toks[i+1] AS ctx, toks[i+2] AS nxt
@@ -1644,11 +1551,7 @@ object TextQueries {
     Q("q_text_surprisal", (s, d) =>
       graft.text.UnigramLm.surprisal(docs(s, d), col("doc_id"), col("text"))
         .orderBy("doc_id"),
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
+      s"""WITH $docToksCte,
          x AS (SELECT doc_id, unnest(toks) AS tok FROM t),
          f AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM x GROUP BY 1),
          tt AS (SELECT CAST(count(*) AS BIGINT) AS total FROM x)
@@ -1675,10 +1578,9 @@ object TextQueries {
         .orderBy(col("draw_ppm").desc, col("tok"))
         .limit(20)
     },
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END
+                  ${sqlTokens("lower(text)")}
                     AS toks
            FROM documents),
          x AS (SELECT unnest(toks) AS tok FROM t),
@@ -1705,14 +1607,12 @@ object TextQueries {
         .withColumn("fertility_ppm",
           expr("bpe_tokens * 1000000 DIV ws_tokens"))
         .orderBy("lang"),
-      """WITH f AS (
+      s"""WITH f AS (
            SELECT lang,
                   CAST(count(*) AS BIGINT) AS n_docs,
-                  CAST(sum(CASE WHEN length(trim(text)) = 0 THEN 0
-                       ELSE len(string_split_regex(trim(text), '\s+')) END)
+                  CAST(sum(${sqlTokenCount("text")})
                     AS BIGINT) AS ws_tokens,
-                  CAST(sum(len(regexp_extract_all(text,
-                      '''(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s'']+')))
+                  CAST(sum(${sqlBpeTokenCount("text")})
                     AS BIGINT) AS bpe_tokens
            FROM documents GROUP BY 1)
          SELECT lang, n_docs, ws_tokens, bpe_tokens,
@@ -1742,10 +1642,9 @@ object TextQueries {
         .orderBy(col("jaccard_ppm").desc, col("sa"), col("sb"))
         .limit(20)
     },
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END
+                  ${sqlTokens("lower(text)")}
                     AS toks
            FROM documents),
          sv AS (SELECT DISTINCT d.source, x.tok
@@ -1778,11 +1677,7 @@ object TextQueries {
           expr("sum(surprisal_micro) DIV sum(n_tokens)")
             .as("avg_surprisal_micro"))
         .orderBy("source"),
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
+      s"""WITH $docToksCte,
          x AS (SELECT doc_id, unnest(toks) AS tok FROM t),
          f AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM x GROUP BY 1),
          tt AS (SELECT CAST(count(*) AS BIGINT) AS total FROM x),
@@ -1917,10 +1812,9 @@ object TextQueries {
       graft.text.FuzzyJoin.editDistancePairs2(vocab, col("w"))
         .orderBy("wa", "wb")
     },
-      """WITH v AS (
+      s"""WITH v AS (
            SELECT DISTINCT unnest(
-             CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END) AS w
+             ${sqlTokens("lower(text)")}) AS w
            FROM documents)
          SELECT a.w AS wa, b.w AS wb,
                 CAST(levenshtein(a.w, b.w) AS BIGINT) AS ed
@@ -1947,10 +1841,8 @@ object TextQueries {
         .agg(pick(0.1, "p10"), pick(0.5, "p50"),
           pick(0.9, "p90"), pick(0.99, "p99"))
     },
-      """WITH n AS (
-           SELECT CASE WHEN length(trim(text)) = 0 THEN CAST(0 AS BIGINT)
-                       ELSE CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
-                  END AS v
+      s"""WITH n AS (
+           SELECT CAST(${sqlTokenCount("text")} AS BIGINT) AS v
            FROM documents),
          h AS (SELECT v, CAST(count(*) AS BIGINT) AS cnt FROM n GROUP BY 1),
          c AS (SELECT v, sum(cnt) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
@@ -1977,9 +1869,8 @@ object TextQueries {
         .select("tok", "true_cnt", "est")
         .orderBy(col("true_cnt").desc, col("tok"))
     },
-      """WITH t AS (
-           SELECT CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
+      s"""WITH t AS (
+           SELECT ${sqlTokens("lower(text)")} AS toks
            FROM documents),
          x AS (SELECT unnest(toks) AS tok FROM t),
          sk AS (
@@ -2017,9 +1908,8 @@ object TextQueries {
           .otherwise(array().cast("array<string>"))).as("bg"))
       graft.operators.HeavyHitters.exact(bigrams, col("bg"), k = 900, capacity = 1024)
     },
-      """WITH t AS (
-           SELECT CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
+      s"""WITH t AS (
+           SELECT ${sqlTokens("lower(text)")} AS toks
            FROM documents),
          b AS (
            SELECT unnest(list_transform(range(1, len(toks)),
@@ -2049,11 +1939,7 @@ object TextQueries {
           greatest(col("n_tokens"), lit(1L)).cast("double"))
         .orderBy("doc_id")
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
+      s"""WITH $docToksCte,
          x AS (SELECT doc_id, unnest(toks) AS tok FROM t),
          v AS (SELECT tok, 1 AS inv FROM (
                  SELECT tok, count(*) AS cnt FROM x GROUP BY 1
@@ -2092,10 +1978,9 @@ object TextQueries {
           greatest(col("n_ngrams"), lit(1L)).cast("double"))
         .orderBy("doc_id")
     },
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(text), '\s+') END AS toks
+                  ${sqlTokens("text")} AS toks
            FROM documents),
          g AS (
            SELECT DISTINCT doc_id, md5(array_to_string(toks[i+1 : i+3], ' ')) AS ng
@@ -2132,9 +2017,8 @@ object TextQueries {
         .orderBy(col("n_occ").desc, col("pair"))
         .limit(20)
     },
-      """WITH t AS (
-           SELECT CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
+      s"""WITH t AS (
+           SELECT ${sqlTokens("lower(text)")} AS toks
            FROM documents),
          w AS (SELECT unnest(toks) AS w FROM t),
          wc AS (SELECT w, CAST(count(*) AS BIGINT) AS wc FROM w GROUP BY 1),
@@ -2214,14 +2098,11 @@ object TextQueries {
       // positional unnest (unnest + generate_subscripts expand in lockstep)
       // mirrors posexplode; the island window and the deg/freq stats follow
       // the Spark plan exactly
-      """WITH n AS (
+      s"""WITH n AS (
            SELECT doc_id,
-                  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS nt
+                  ${sqlNormalized("text")} AS nt
            FROM documents),
-         t AS (SELECT doc_id,
-                      CASE WHEN length(nt) = 0 THEN []::VARCHAR[]
-                           ELSE string_split_regex(nt, '\s+') END AS toks
-               FROM n),
+         t AS (SELECT doc_id, ${sqlTokens("nt")} AS toks FROM n),
          x AS (SELECT doc_id, unnest(toks) AS w,
                       generate_subscripts(toks, 1) - 1 AS pos
                FROM t),
@@ -2265,11 +2146,10 @@ object TextQueries {
         .orderBy(col("df").desc, col("tok"))
         .limit(20)
     },
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
                   unnest(list_distinct(
-                    CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                         ELSE string_split_regex(trim(lower(text)), '\s+') END)) AS tok
+                    ${sqlTokens("lower(text)")})) AS tok
            FROM documents)
          SELECT tok, count(DISTINCT doc_id) AS df
          FROM t GROUP BY tok ORDER BY df DESC, tok LIMIT 20"""),
@@ -2283,17 +2163,7 @@ object TextQueries {
         .agg(count(lit(1)).cast("long").as("n_hits"),
           min("pos").cast("long").as("first_pos"))
         .orderBy("doc_id"),
-      // positional unnest: generate_subscripts expands in lockstep with
-      // unnest (1-based → pos-1 matches Spark's 0-based posexplode)
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
-         tok AS (
-           SELECT doc_id, unnest(toks) AS term,
-                  generate_subscripts(toks, 1) - 1 AS pos
-           FROM t)
+      s"""WITH ${postingsCtes("tok", "term")}
          SELECT a.doc_id,
                 CAST(count(*) AS BIGINT) AS n_hits,
                 CAST(min(a.pos) AS BIGINT) AS first_pos
@@ -2307,15 +2177,7 @@ object TextQueries {
     Q("q_text_span_removal", (s, d) =>
       graft.text.SpanDedup.removeDuplicatedSpansFromTokens(postings(s, d), n = 3)
         .orderBy("doc_id"),
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
-         tok AS (
-           SELECT doc_id, unnest(toks) AS tok,
-                  generate_subscripts(toks, 1) - 1 AS pos
-           FROM t),
+      s"""WITH ${postingsCtes("tok")},
          g AS (
            SELECT doc_id, pos,
                   tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS g,
@@ -2363,11 +2225,7 @@ object TextQueries {
         .select("doc_id", "rank", "tok", "score_micro")
         .orderBy("doc_id", "rank")
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
+      s"""WITH $docToksCte,
          x AS (SELECT doc_id, unnest(toks) AS tok FROM t),
          tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
                 FROM x GROUP BY 1, 2),
@@ -2405,15 +2263,7 @@ object TextQueries {
         .orderBy(col("cnt").desc, col("center"), col("context"))
         .limit(20)
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
-         tok AS (
-           SELECT doc_id, unnest(toks) AS center,
-                  generate_subscripts(toks, 1) - 1 AS pos
-           FROM t),
+      s"""WITH ${postingsCtes("tok", "center")},
          led AS (
            SELECT center, lead(center, 1) OVER w AS c1, lead(center, 2) OVER w AS c2
            FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
@@ -2449,11 +2299,7 @@ object TextQueries {
           md5(array_join(transform(col("v"), _.cast("string")), ",")).as("vec_md5"))
         .orderBy("doc_id")
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
+      s"""WITH $docToksCte,
          x AS (SELECT doc_id, unnest(toks) AS tok FROM t),
          bc AS (SELECT doc_id,
                        CAST('0x' || substr(md5(tok), 1, 4) AS BIGINT) % 16 AS b,
@@ -2500,15 +2346,7 @@ object TextQueries {
         .orderBy(col("pmi_micro").desc, col("w1"), col("w2"))
         .limit(20)
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
-         tok AS (
-           SELECT doc_id, unnest(toks) AS tok,
-                  generate_subscripts(toks, 1) - 1 AS pos
-           FROM t),
+      s"""WITH ${postingsCtes("tok")},
          uni AS (SELECT tok, CAST(count(*) AS BIGINT) AS cx FROM tok GROUP BY 1),
          nt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tok),
          led AS (
@@ -2546,11 +2384,7 @@ object TextQueries {
           max(col("dl")).as("dl"))
         .orderBy("doc_id")
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
+      s"""WITH $docToksCte,
          x AS (SELECT doc_id, unnest(toks) AS tok FROM t),
          cnt AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS c
                  FROM x GROUP BY 1, 2),
@@ -2598,11 +2432,7 @@ object TextQueries {
             .as("zipf_slope"))
         .orderBy("source")
     },
-      """WITH t AS (
-           SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents),
+      s"""WITH $docToksCte,
          x AS (SELECT doc_id, unnest(toks) AS tok FROM t),
          tf AS (SELECT d.source, x.tok, CAST(count(*) AS BIGINT) AS f
                 FROM x JOIN documents d USING (doc_id) GROUP BY 1, 2),
@@ -2639,9 +2469,8 @@ object TextQueries {
         .where(col("n_docs") >= 2)
         .orderBy(col("n_docs").desc, col("prefix"))
         .limit(20),
-      """WITH t AS (
-           SELECT CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END
+      s"""WITH t AS (
+           SELECT ${sqlTokens("lower(text)")}
                     AS toks
            FROM documents)
          SELECT array_to_string(toks[1:3], ' ') AS prefix,
@@ -2663,10 +2492,9 @@ object TextQueries {
           count(when(col("f") === 1, 1)).as("hapax"))
         .withColumn("hapax_ppm", expr("hapax * 1000000 DIV vocab"))
         .orderBy("source"),
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
-                  CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END
+                  ${sqlTokens("lower(text)")}
                     AS toks
            FROM documents),
          x AS (SELECT doc_id, unnest(toks) AS tok FROM t),
@@ -2719,8 +2547,7 @@ object TextQueries {
                     FROM nodes LEFT JOIN s$k USING (node), n)"""
         s"""WITH t AS (
             SELECT doc_id,
-                   CASE WHEN length(trim(lower(text))) = 0 THEN []::VARCHAR[]
-                        ELSE string_split_regex(trim(lower(text)), '\\s+') END
+                   ${sqlTokens("lower(text)")}
                      AS toks
             FROM documents),
           tok AS (
@@ -2758,8 +2585,7 @@ object TextQueries {
         .withColumn("ttr_ppm", when(col("n_tokens") === 0, lit(0L))
           .otherwise(ppmWide(col("n_types"), col("n_tokens"))))
         .orderBy("doc_id"),
-      s"""WITH t AS (
-           SELECT doc_id, $sqlToks AS toks FROM documents)
+      s"""WITH $docToksCte
          SELECT doc_id,
                 CAST(len(toks) AS BIGINT) AS n_tokens,
                 CAST(len(list_distinct(toks)) AS BIGINT) AS n_types,
@@ -2795,8 +2621,7 @@ object TextQueries {
           sum(col("n_new")).over(w).as("cum_types"))
         .orderBy("bucket")
     },
-      s"""WITH t AS (
-           SELECT doc_id, $sqlToks AS toks FROM documents),
+      s"""WITH $docToksCte,
          x AS (SELECT doc_id, unnest(toks) AS tok FROM t),
          mx AS (SELECT max(doc_id) AS mx FROM documents),
          b AS (SELECT doc_id * 10 // (mx + 1) AS bucket, tok FROM x, mx),

@@ -36,6 +36,11 @@ object Similarity {
   /** Cosine similarity. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
 
+  /** DuckDB oracle twin for [[cosine]] over two DOUBLE-list expressions
+    * (`list_dot_product` is the same sequential left-to-right fold). */
+  def sqlCosine(a: String, b: String): String =
+    s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
+
   /** Unit-normalized copy of a vector (each element divided by the L2
     * norm). Elementwise ops on a shared scalar — bitwise reproducible
     * cross-engine. Zero vectors normalize to NaNs (0/0), matching SQL

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.util.BroadcastGate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -37,13 +38,6 @@ import org.apache.spark.sql.{Column, DataFrame}
   * headroom.
   */
 object Dsir {
-
-  /** Largest log-ratio table the scoring join will broadcast. One row is
-    * (bucket LONG, lr_micro LONG) = 16 bytes + row overhead, so 2^24
-    * buckets ≈ 400 MB hydrated — the edge of a sane 8 GB-executor
-    * broadcast. Past it `weights` degrades to a plain shuffle join on
-    * `bucket` (near-uniform md5 keys — no skew), staying linear. */
-  val BroadcastCeiling: Int = 1 << 24
 
   /** Hashed n-gram features: `(doc_id, bucket, cnt)` — unigrams + bigrams
     * of the whitespace-lowercased token stream, md5-hashed into
@@ -92,7 +86,7 @@ object Dsir {
     * and coalesce to 0). */
   def weights(docs: DataFrame, id: Column, text: Column, isTarget: Column,
               buckets: Int,
-              broadcastCeiling: Int = BroadcastCeiling): DataFrame = {
+              broadcastCeiling: Long = BroadcastGate.CeilingRows): DataFrame = {
     // the target flag rides the feature aggregation key (functionally
     // dependent on doc_id — zero extra groups), so the model aggregates
     // read the feature table directly instead of re-joining a data-sized
@@ -117,15 +111,13 @@ object Dsir {
                    (col("tr") + b).cast("double")))
           * lit(1000000.0) + lit(0.5)).cast("long").as("lr_micro"))
     // the documented web-scale degradation: at B ≤ ceiling the ≤B-row lr
-    // table broadcasts (map-side scoring join); past it, one shuffle-hash
-    // join on the near-uniform md5 bucket key (build side = the lr
-    // partition, B/partitions rows — hinted, so Catalyst's size estimate
-    // can never re-broadcast a table we've ruled too big for the driver).
-    // Identical values either way — the branches are spec'd bit-equal.
-    val scored =
-      if (buckets <= broadcastCeiling) feat.join(broadcast(lr), "bucket")
-      else feat.join(lr.hint("shuffle_hash"), "bucket")
-    scored
+    // table (bucket, lr_micro: 16 B a row) broadcasts (map-side scoring
+    // join); past it, one shuffle-hash join on the near-uniform md5 bucket
+    // key (build side = the lr partition, B/partitions rows — hinted, so
+    // Catalyst's size estimate can never re-broadcast a table we've ruled
+    // too big for the driver). Identical values either way — the branches
+    // are spec'd bit-equal.
+    feat.join(BroadcastGate(lr, buckets, broadcastCeiling), "bucket")
       .groupBy("doc_id")
       .agg(sum(col("cnt")).as("n_feats"),
         sum(col("cnt") * col("lr_micro")).as("weight_micro"))

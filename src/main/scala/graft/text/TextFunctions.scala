@@ -29,8 +29,18 @@ object TextFunctions {
     when(length(trim(text)) === 0, array().cast("array<string>"))
       .otherwise(split(trim(text), "\\s+"))
 
+  /** DuckDB oracle twin for [[tokens]] over the SQL expression `text`. */
+  def sqlTokens(text: String): String =
+    s"""CASE WHEN length(trim($text)) = 0 THEN []::VARCHAR[]
+            ELSE string_split_regex(trim($text), '\\s+') END"""
+
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokens(text))
+
+  /** DuckDB oracle twin for [[tokenCount]]. */
+  def sqlTokenCount(text: String): String =
+    s"""CASE WHEN length(trim($text)) = 0 THEN 0
+            ELSE len(string_split_regex(trim($text), '\\s+')) END"""
 
   /** BPE-ish pre-tokenizer pattern (GPT-2-style, RE2-safe: the original's
     * trailing-whitespace lookahead is dropped): contractions, optional-space
@@ -41,9 +51,18 @@ object TextFunctions {
   /** Count of BPE-ish pre-tokens — the standard proxy for LLM token cost. */
   def bpeTokenCount(text: Column): Column = regexp_count(text, lit(BpePattern))
 
+  /** DuckDB oracle twin for [[bpeTokenCount]] (the SQL literal doubles the
+    * pattern's quotes). */
+  def sqlBpeTokenCount(text: String): String =
+    s"len(regexp_extract_all($text, '${BpePattern.replace("'", "''")}'))"
+
   /** Sentence count: non-blank segments between terminator runs. */
   def sentenceCount(text: Column): Column =
     size(filter(split(text, "[.!?]+"), s => length(trim(s)) > 0))
+
+  /** DuckDB oracle twin for [[sentenceCount]]. */
+  def sqlSentenceCount(text: String): String =
+    s"len(list_filter(string_split_regex($text, '[.!?]+'), s -> length(trim(s)) > 0))"
 
   /** Syllable proxy: vowel-group runs (the standard cheap estimator —
     * whitespace never splits a vowel group, so counting over the whole
@@ -64,11 +83,23 @@ object TextFunctions {
   def stopwordCount(text: Column): Column =
     countIn(tokens(lower(text)), Stopwords)
 
-  /** Punctuation character count (explicit class, identical across RE2 and
-    * Java regex — `\p{Punct}` is deliberately avoided: its membership
-    * differs between engines). */
-  def punctCount(text: Column): Column =
-    regexp_count(text, lit("[.,!?;:'\"()\\[\\]{}*#@&%/\\\\_-]"))
+  /** DuckDB oracle twin for [[stopwordCount]]. */
+  def sqlStopwordCount(text: String): String =
+    s"""len(list_filter(
+          ${sqlTokens(s"lower($text)")},
+          t -> list_contains(${Stopwords.map(w => s"'$w'").mkString("[", ",", "]")}, t)))"""
+
+  /** Punctuation class (explicit, identical across RE2 and Java regex —
+    * `\p{Punct}` is deliberately avoided: its membership differs between
+    * engines). */
+  private val PunctPattern = "[.,!?;:'\"()\\[\\]{}*#@&%/\\\\_-]"
+
+  /** Punctuation character count. */
+  def punctCount(text: Column): Column = regexp_count(text, lit(PunctPattern))
+
+  /** DuckDB oracle twin for [[punctCount]]. */
+  def sqlPunctCount(text: String): String =
+    s"len(regexp_extract_all($text, '${PunctPattern.replace("'", "''")}'))"
 
   /** Heuristic document-quality score in [0,1] — the standard
     * pretraining-corpus signals (length, stopword density, punctuation
@@ -101,13 +132,35 @@ object TextFunctions {
     "fr" -> Seq("le", "la", "les", "et", "est", "une", "dans")
   )
 
+  /** Any character in it marks a text as 'zh'. */
+  private val CjkPattern = "[\\x{4e00}-\\x{9fff}]"
+
+  /** DuckDB oracle twin for [[langId]]'s profile scores over a token list
+    * column `toks`: one `s_<code>` column per profile. */
+  def sqlLangScores: String = LangProfiles.map { case (code, words) =>
+    val list = words.map(w => s"'$w'").mkString("[", ", ", "]")
+    s"len(list_filter(toks, t -> list_contains($list, t))) AS s_$code"
+  }.mkString(",\n")
+
+  /** DuckDB oracle twin for [[langId]]'s decision, over `text` and the
+    * [[sqlLangScores]] columns. */
+  def sqlLangPred(text: String): String = {
+    val codes = LangProfiles.map(_._1)
+    val wins = codes.indices.map { i =>
+      (s"s_${codes(i)} > 0" +: codes.drop(i + 1).map(l => s"s_${codes(i)} >= s_$l"))
+        .mkString("WHEN ", " AND ", s" THEN '${codes(i)}'")
+    }
+    (s"CASE WHEN len(regexp_extract_all($text, '$CjkPattern')) > 0 THEN 'zh'" +:
+      wins :+ "ELSE 'und' END").mkString("\n")
+  }
+
   /** Predicted language code: 'zh' on any CJK character, else the
     * highest-scoring stopword profile (ties broken by profile order,
     * en > de > es > fr), else 'und' when nothing matches. */
   def langId(text: Column): Column = {
     val toks = tokens(lower(text))
     val scores = LangProfiles.map { case (code, words) => code -> countIn(toks, words) }
-    val hasCjk = regexp_count(text, lit("[\\x{4e00}-\\x{9fff}]")) > 0
+    val hasCjk = regexp_count(text, lit(CjkPattern)) > 0
     val best = scores.foldRight(lit("und")) { case ((code, score), elseCol) =>
       // this profile wins iff score > 0 and >= every later profile's score
       val laterScores = scores.dropWhile(_._1 != code).drop(1).map(_._2)
@@ -142,7 +195,7 @@ object TextFunctions {
     val scores = LangProfiles.map { case (code, _) =>
       code -> col(s"__lid_$code")
     }
-    val hasCjk = regexp_count(text, lit("[\\x{4e00}-\\x{9fff}]")) > 0
+    val hasCjk = regexp_count(text, lit(CjkPattern)) > 0
     val best = scores.foldRight(lit("und")) { case ((code, score), elseCol) =>
       val laterScores = scores.dropWhile(_._1 != code).drop(1).map(_._2)
       val isMax = laterScores.foldLeft(score > 0)((acc, s2) => acc && score >= s2)
@@ -227,6 +280,11 @@ object TextFunctions {
     * whitespace runs to single spaces, trim. */
   def normalized(text: Column): Column =
     trim(regexp_replace(lower(text), "\\s+", " "))
+
+  /** DuckDB oracle twin for [[normalized]] (the 'g' flag is Spark's
+    * replace-all). */
+  def sqlNormalized(text: String): String =
+    s"trim(regexp_replace(lower($text), '\\s+', ' ', 'g'))"
 
   /** Full-document fingerprint: md5 hex of the normalized text (md5 is
     * available and bit-identical in Spark and DuckDB, which makes the

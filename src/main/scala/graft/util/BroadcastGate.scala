@@ -10,12 +10,15 @@ import org.apache.spark.sql.functions.broadcast
   * is honored all the way to the 8 GB / 512M-row broadcast hard limit — a
   * vertex/label/marginal table that outgrows the driver does not "degrade
   * to a shuffle join", it kills the query. The pattern that actually
-  * degrades is [[graft.text.Dsir.weights]]' broadcast ceiling: measure the
-  * small side once and PICK the strategy. Rows, not bytes, because every
-  * gated table in this engine is a narrow fixed-width frame (a node id
-  * plus one or two longs ≈ 16–24 B hydrated per row): 2^24 rows ≈ 400 MB —
-  * the same "edge of a sane executor broadcast" calculus as
-  * `Dsir.BroadcastCeiling`, far below the 512M-row hard cap.
+  * degrades is to measure the small side once and PICK the strategy
+  * ([[graft.text.Dsir.weights]]' scoring join goes through this gate).
+  * The ceiling is 2^24 rows of at most 24 B (a node id plus one or two
+  * longs, the width of every gated table in this engine) ≈ 400 MB — the
+  * "edge of a sane executor broadcast", far below the 512M-row hard cap.
+  * Both bounds hold: a frame wider than 24 B a row (by its schema's
+  * default size) broadcasts only while rows × width stays within the
+  * same 2^24 × 24 B, so a wide frame under the row ceiling cannot ride
+  * the hint to gigabytes.
   *
   * Past the ceiling the small side is hinted `shuffle_hash` instead: the
   * big side then shuffles (that IS the degradation — unavoidable once the
@@ -31,15 +34,22 @@ import org.apache.spark.sql.functions.broadcast
   */
 object BroadcastGate {
 
-  /** Largest row count the gate will broadcast — Dsir.BroadcastCeiling's
-    * calculus (~400 MB hydrated at ≤ 24 B/row). */
+  /** Largest row count the gate will broadcast (~400 MB hydrated at
+    * ≤ 24 B/row). */
   val CeilingRows: Long = 1L << 24
+
+  /** Largest estimated size, rows × `schema.defaultSize`, the gate will
+    * broadcast: the row ceiling at 24 B a row. */
+  val CeilingBytes: Long = CeilingRows * 24
 
   /** Gate on a pre-computed row count — one count per query, its decision
     * reused across every join that attaches the same-sized frame. */
   def apply(df: DataFrame, rows: Long,
             ceilingRows: Long = CeilingRows): DataFrame =
-    if (rows <= ceilingRows) broadcast(df) else df.hint("shuffle_hash")
+    if (rows <= ceilingRows &&
+        rows <= CeilingBytes / math.max(1, df.schema.defaultSize))
+      broadcast(df)
+    else df.hint("shuffle_hash")
 
   /** Count-and-gate. The frame must be materialized (localCheckpoint'ed /
     * cached) or cheap, or the count re-executes its lineage. */

@@ -51,6 +51,23 @@ class GraphSpec extends SparkSpec {
     assert(err.getMessage.contains("'s' has type string"), err.getMessage)
   }
 
+  test("countOriented fails on a NULL node id, naming the column") {
+    // dir built without canonicalEdges: collect_list would drop the NULL t
+    // and the joins the NULL s, undercounting with no error
+    val e = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("u", "v")
+    val Seq(one, two, three) = Seq(1L, 2L, 3L).map(Option(_))
+    for ((c, edges) <- Seq(
+        "t" -> Seq((one, two), (two, three), (one, None)),
+        "s" -> Seq((one, two), (two, three), (None, three)))) {
+      val dir = edges.toDF("s", "t").withColumn("tk", lit(0L))
+      val err = intercept[Exception](Graph.countOriented(dir, e).collect())
+      val msgs = Iterator.iterate(err: Throwable)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).toSeq
+      assert(msgs.exists(_.contains(s"NULL node id in column '$c'")),
+        msgs.mkString("\n"))
+    }
+  }
+
   private def peel(edges: Seq[(Long, Long)], k: Int, rounds: Int): Map[Long, Long] =
     Graph.kCorePeel(
         Graph.canonicalEdges(edges.toDF("a", "b"), "a", "b"), k, rounds)

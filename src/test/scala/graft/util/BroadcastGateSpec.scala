@@ -43,6 +43,18 @@ class BroadcastGateSpec extends SparkSpec {
     }
   }
 
+  test("byte ceiling: a wide frame under the row ceiling shuffles, a narrow one broadcasts") {
+    val claimed = 1L << 23 // under CeilingRows
+    val narrow = Seq(3L, 6L).toDF("k") // 8 B a row: 64 MB at the claimed rows
+    // 41 longs = 328 B a row: ~2.7 GB at the claimed rows, past 2^24 × 24 B
+    val wide = (0 until 40).foldLeft(narrow)((df, i) =>
+      df.withColumn(s"c$i", col("k") + i))
+    def plan(df: DataFrame) = planOf(big.join(BroadcastGate(df, claimed), "k"))
+    assert(plan(wide).contains("ShuffledHashJoin"), plan(wide))
+    assert(!plan(wide).contains("BroadcastHashJoin"), plan(wide))
+    assert(plan(narrow).contains("BroadcastHashJoin"), plan(narrow))
+  }
+
   test("counted() gates on the materialized frame's actual row count") {
     val s2 = small.localCheckpoint(false)
     val under = big.join(BroadcastGate.counted(s2), "k")
