@@ -190,9 +190,11 @@ object Bench {
     // measurement); "load_summary" bounds the whole run; "retried" counts
     // re-measures triggered by load > threshold; "retried_kept" lists the
     // queries whose committed number came from a retry pass (their load
-    // label describes that retry); "shared_builds" is the per-memo-key
-    // materialization ledger (seconds) — per-query rows are post-memo
-    // only; "stat" names the kept statistic and "medians" preserves the
+    // label describes that retry); "shared_builds" is the per-key build
+    // ledger (seconds, "key@sfLeaf") of every QueryCaches entry — cached
+    // frames, the stream_in/stream_exec/stream_append/gdelt_tsv scratch
+    // dirs, the bucketed/bucketed32 tables and the doc_count/vec_count
+    // counts — per-query rows are post-memo only; "stat" names the kept statistic and "medians" preserves the
     // per-query median-of-iters for continuity with pre-r11 artifacts;
     // "drift_retried"/"drift_flagged" are the committed-baseline drift
     // ledger (triggered / still-above-trigger after retries);

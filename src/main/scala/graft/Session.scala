@@ -26,7 +26,7 @@ object Session {
     // bucketed-layout queries saveAsTable; keep the warehouse out of
     // the repo working tree; per-PID so two JVMs on the same fixture
     // never race on DROP + recursive delete of shared table dirs (the
-    // discipline runStreamExec's sink paths already follow)
+    // discipline QueryCaches.memoDir's scratch dirs follow)
     "spark.sql.warehouse.dir" -> warehouseDir,
     // Shuffle-partition sizing across SFs (r11 verdict #2): a fixed 32
     // partitions makes each task's window/join buffer 10× bigger at the

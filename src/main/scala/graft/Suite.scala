@@ -1,7 +1,6 @@
 package graft
 
-import graft.queries.{ParityQueries, QueryCaches, StreamTwinQueries}
-import graft.util.PartitionSizing
+import graft.queries.QueryCaches
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -42,13 +41,15 @@ final class Suite(tool: String, sfDir: String, only: Option[Set[String]]) {
   // temporally local in suite order. An evicted memo a later query
   // still wants is rebuilt during that query's UNTIMED warmup (timed
   // rows stay post-memo); rebuild seconds accumulate in shared_builds.
-  // The valve opens on the SAME data-size signal as partition sizing:
-  // when the fixture is small enough that initialPartitions clamps to
+  // The valve opens on the SAME data-size signal as partition sizing
+  // (the session's initial shuffle partitions, so a `-D` override moves
+  // both): when the fixture is small enough that the count clamps to
   // cpus, the whole memo union fits a default heap (the r11 sf0.1 pair
   // proved it at 212 s) and eviction would only pay rebuilds — so the
   // age bound engages only past that size.
   private val memoAge =
-    if (PartitionSizing.initialPartitions(sfDir, cpus) > cpus) 25
+    if (spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+        .toInt > cpus) 25
     else Int.MaxValue / 2
 
   private val meter = new Suite.Meter
@@ -80,15 +81,13 @@ final class Suite(tool: String, sfDir: String, only: Option[Set[String]]) {
     try body finally spark.sparkContext.clearJobGroup()
   }
 
-  /** Release the memos, stop the session and remove the stream scratch.
+  /** Release the memos, scratch dirs and tables, and stop the session.
     * Returns the summed metrics of each name's [[metered]] work, zeros for
     * a name never metered; stopping drains the listener bus first, so no
     * event is missing. */
   def close(): Map[String, Seq[(String, Double)]] = {
     QueryCaches.clear()
     spark.stop()
-    StreamTwinQueries.cleanupScratch()
-    ParityQueries.cleanupScratch()
     meter.sums.view.mapValues(_.toSeq).toMap
       .withDefaultValue(Suite.MetricNames.map(_ -> 0.0))
   }

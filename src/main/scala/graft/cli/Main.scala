@@ -45,24 +45,22 @@ import scala.util.Try
 object Main {
 
   def main(args: Array[String]): Unit = args.toList match {
-    case "scrape" :: rest  => scrape(parseFlags(rest))
-    case "convert" :: rest => withSpark(s => convert(s, parseFlags(rest)))
-    case "filter" :: rest  => withSpark(s => filter(s, parseFlags(rest)))
-    case "sample" :: rest  => withSpark(s => sample(s, parseFlags(rest)))
-    // extension ops-tooling (beyond the reference surface):
-    case "dedup" :: rest   => withSpark(s => dedup(s, parseFlags(rest)))
-    case "compact" :: rest => withSpark(s => compactCmd(s, parseFlags(rest)))
-    case "diff" :: rest    => withSpark(s => diffCmd(s, parseFlags(rest)))
-    case "prepare" :: rest => withSpark(s => prepare(s, parseFlags(rest)))
-    case "manifest" :: rest => withSpark(s => manifestCmd(s, parseFlags(rest)))
-    case "ann" :: rest     => withSpark(s => annCmd(s, parseFlags(rest)))
-    case "merge" :: rest   => withSpark(s => mergeCmd(s, parseFlags(rest)))
-    case "pipeline" :: rest => withSpark(s => pipelineCmd(s, parseFlags(rest)))
+    case "scrape" :: rest => scrape(parseFlags(rest))
+    case cmd :: rest if sparkCommands.contains(cmd) =>
+      val flags = parseFlags(rest)
+      withSpark(flags)(sparkCommands(cmd)(_, flags))
     case other =>
       throw new IllegalArgumentException(
         s"Unknown command: ${other.headOption.getOrElse("<none>")} " +
           "(expected scrape | convert | filter | sample | dedup | compact | diff | prepare | manifest | ann | merge | pipeline)")
   }
+
+  private val sparkCommands: Map[String, (SparkSession, Flags) => Unit] = Map(
+    "convert" -> convert, "filter" -> filter, "sample" -> sample,
+    // extension ops-tooling (beyond the reference surface):
+    "dedup" -> dedup, "compact" -> compactCmd, "diff" -> diffCmd,
+    "prepare" -> prepare, "manifest" -> manifestCmd, "ann" -> annCmd,
+    "merge" -> mergeCmd, "pipeline" -> pipelineCmd)
 
   // ------------------------------------------------------------ commands
 
@@ -346,6 +344,11 @@ object Main {
       cfg.numericColumns, Gdelt.intColumns)
     val flatDir = s"$outBase/flat"
     val histDir = s"$outBase/hist"
+    // both sinks append, so a re-run first removes its own earlier output
+    for (dir <- Seq(flatDir, histDir)) {
+      val out = new org.apache.hadoop.fs.Path(dir)
+      out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+    }
     val daily = byType.getOrElse("daily", Nil)
     val monthly = byType.getOrElse("monthly", Nil)
     val yearly = byType.getOrElse("yearly", Nil)
@@ -445,17 +448,19 @@ object Main {
     Flags(grouped.view.mapValues(_.toSeq).toMap)
   }
 
-  private def withSpark[T](body: SparkSession => T): T = {
-    // only stop the session if this invocation created it (embedding callers
-    // — tests, notebooks — keep theirs)
-    val preExisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try body(spark) finally if (preExisting.isEmpty) spark.stop()
-  }
+  /** Runs `body` on the caller's live session as it is (tests, notebooks
+    * and embedding jobs keep theirs, settings included), else on a fresh
+    * certified [[graft.Session]] that it stops afterwards:
+    * `$SPARK_GRAFT_CPUS` threads (default: every core), shuffle sizing
+    * from the first input path, `-Dspark.master` to run elsewhere. */
+  private def withSpark(flags: Flags)(body: SparkSession => Unit): Unit =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
+      case Some(spark) => body(spark)
+      case None =>
+        val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+          .getOrElse(Runtime.getRuntime.availableProcessors)
+        val input = Seq("in", "prev", "target").flatMap(flags.get).headOption
+        val spark = graft.Session.start(cpus, input.getOrElse(""), "cli")
+        try body(spark) finally spark.stop()
+    }
 }

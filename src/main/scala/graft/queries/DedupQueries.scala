@@ -67,17 +67,12 @@ object DedupQueries {
       pairs.where(inSample(col("ida")) || inSample(col("idb")))
     }
   // oracle twin: the `keep` CTE of [[dfCappedCandCte]]
-  // metadata-cheap corpus count, cached per (session, dir) like QueryCaches
-  private val countCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), Long]
+  // metadata-cheap corpus counts, built once per (session, dir)
   private def docCount(s: SparkSession, d: String): Long =
-    countCache.getOrElseUpdate((System.identityHashCode(s), d),
-      docs(s, d).count())
-  // same metadata-cheap count for the embeddings corpus (sampled recall's
-  // modulus derivation); "#emb" suffix keeps the cache key disjoint
+    QueryCaches.once(s, d, "doc_count")(docs(s, d).count())(_ => ())
+  // the embeddings corpus (sampled recall's modulus derivation)
   private def vecCount(s: SparkSession, d: String): Long =
-    countCache.getOrElseUpdate((System.identityHashCode(s), d + "#emb"),
-      Tables.embeddings(s, d).count())
+    QueryCaches.once(s, d, "vec_count")(Tables.embeddings(s, d).count())(_ => ())
 
   private def docs(s: SparkSession, d: String): DataFrame = Tables.documents(s, d)
 

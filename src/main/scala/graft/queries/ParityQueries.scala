@@ -47,27 +47,10 @@ object ParityQueries {
   // through `spark.read.format("gdelt-tsv")` with a pushed Day range, so
   // filename FILE pruning, line-aligned offset splits, parse-time column
   // pruning, and row-level pushdown all sit in a hash-gated path.
-  private val gdeltTsvDone =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private val gdeltScratch =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
-  /** Remove this process's generated-TSV scratch and invalidate the
-    * memos into it (Bench/Verify call at exit, like the streaming one). */
-  def cleanupScratch(): Unit = {
-    gdeltScratch.keys.foreach(graft.util.Scratch.deleteRecursively)
-    gdeltScratch.clear()
-    gdeltTsvDone.clear()
-  }
-
-  private def ensureGdeltTsv(s: SparkSession, d: String): String =
-    gdeltTsvDone.getOrElseUpdate((s, d), {
-      val base = s"/tmp/graft_gdelt_tsv_${ProcessHandle.current().pid()}_" +
-        graft.util.PathTag.tag(d)
-      gdeltScratch.put(base, ())
-      val hp = new org.apache.hadoop.fs.Path(base)
-      val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(hp, true)
+  private def gdeltTsv(s: SparkSession, d: String): String =
+    QueryCaches.memoDir(s, d, "gdelt_tsv") { base =>
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       // 61-column TSV line per event: the date-int columns derive from
       // ts exactly as the oracle's strftime does; unused columns empty
       val cols: Seq[org.apache.spark.sql.Column] =
@@ -102,8 +85,7 @@ object ParityQueries {
         fs.rename(parts.head.getPath, new org.apache.hadoop.fs.Path(inDir,
           s"${st.getPath.getName.stripPrefix("day=")}.export.CSV"))
       }
-      s"$base/in"
-    })
+    } + "/in"
 
   val registry: Seq[Q] = Seq(
     // P5: scalar equality via the JSON DSL
@@ -321,7 +303,7 @@ object ParityQueries {
     // lossless. Bounds derive from min(ts), not literals, so the row
     // gates unchanged at every SF.
     Q("q_gdelt_tsv_scan", (s, d) => {
-      val dir = ensureGdeltTsv(s, d)
+      val dir = gdeltTsv(s, d)
       val r = ev(s, d).agg(
         date_format(date_add(min(to_date(col("ts"))), 7), "yyyyMMdd").as("lo"),
         date_format(date_add(min(to_date(col("ts"))), 21), "yyyyMMdd").as("hi"))

@@ -1,29 +1,45 @@
 package graft.queries
 
+import graft.util.{PathTag, Scratch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.collection.concurrent.TrieMap
 
-/** Explicit lifecycle for the cached projections shared across query
-  * families (minhash signatures, simhash signatures, sign-LSH pair tables).
+import scala.collection.mutable
+
+/** The one build-once registry: every artifact built once per (session,
+  * sfDir, key) and shared across queries — cached projections ([[memo]]),
+  * scratch directories ([[memoDir]]), catalog tables and corpus counts
+  * ([[once]]) — together with the action that releases it.
   *
   * Two problems this solves (both flagged in round-2 review):
   *
   *   1. Calling `.cache()` on a freshly-built identical plan per invocation
   *      makes CacheManager warn ("already cached") and leaves N cached
   *      copies' bookkeeping behind over a long session. Memoizing on
-  *      (session, sfDir, key) returns the SAME DataFrame instance, so a
-  *      suite run materializes each shared projection exactly once.
-  *   2. Nothing ever unpersisted. [[clear]] releases every registered cache
-  *      and is called by Bench/Verify after their suite runs — the cluster
-  *      analogue of scoping persisted tables to the job that owns them.
+  *      (session, sfDir, key) returns the SAME value, so a suite run
+  *      builds each shared artifact exactly once.
+  *   2. Nothing ever released. [[clear]] runs every registered release
+  *      action and is called by the suite runner after its queries — the
+  *      cluster analogue of scoping persisted tables to the job that owns
+  *      them.
+  *
+  * Entries are keyed on the session REFERENCE, not its identity hash: a
+  * hash can recur after GC and hand a new session an artifact it never
+  * built. Builds run under the registry's (reentrant) lock, so a key never
+  * builds twice at once and a build may use other keys.
   */
 object QueryCaches {
 
-  private val reg = TrieMap.empty[(SparkSession, String, String), DataFrame]
+  /** A built artifact, its release action and the tick of its last use. */
+  private final class Entry(val value: Any, val release: () => Unit, var touched: Long)
+
+  private val reg = mutable.HashMap.empty[(SparkSession, String, String), Entry]
   // ledger key = (sfDir, key) to match reg's scope (ADVICE r9: keying by
   // memo key alone merged build times across SF dirs when one session
   // iterates gateSfs, as the multi-SF specs do)
-  private val buildSecs = TrieMap.empty[(String, String), Double]
+  private val buildSecs = mutable.HashMap.empty[(String, String), Double]
+  // seconds spent in the builds nested inside the running one, which
+  // each land under their own key and not again under the outer one
+  private var nestedSecs = 0.0
 
   // —— bounded-lifetime discipline (r11 verdict #2) ————————————————
   // Caching every memo for the whole suite put the sf1mut working set
@@ -36,25 +52,19 @@ object QueryCaches {
   // simply rebuilt — during that query's UNTIMED warmup, so per-query
   // bench rows stay post-memo — and its rebuild seconds accumulate in
   // the shared-build ledger like the first build.
-  private val clock = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val lastTouch =
-    TrieMap.empty[(SparkSession, String, String), Long]
+  private var clock = 0L
 
   /** Advance the suite clock — call once per completed query. */
-  def tick(): Unit = clock.incrementAndGet()
+  def tick(): Unit = synchronized { clock += 1 }
 
-  /** Unpersist and forget every memo whose last touch is more than
+  private def drop(k: (SparkSession, String, String)): Unit =
+    reg.remove(k).foreach(e => try e.release() catch { case _: Throwable => () })
+
+  /** Release and forget every entry whose last touch is more than
     * `maxAge` ticks old. Returns the released keys (for ledgers). */
-  def evictStale(maxAge: Int): Seq[String] = {
-    val now = clock.get()
-    val stale = lastTouch.toSeq.collect {
-      case (k, t) if now - t > maxAge => k
-    }
-    stale.foreach { k =>
-      reg.remove(k).foreach(df =>
-        try df.unpersist(false) catch { case _: Throwable => () })
-      lastTouch.remove(k)
-    }
+  def evictStale(maxAge: Int): Seq[String] = synchronized {
+    val stale = reg.collect { case (k, e) if clock - e.touched > maxAge => k }.toSeq
+    stale.foreach(drop)
     stale.map(_._3).sorted
   }
 
@@ -110,6 +120,33 @@ object QueryCaches {
       : Seq[String] =
     if (usedFraction(s) > highWater) evictStale(keepYoung) else Nil
 
+  /** The value built for (session, sfDir, key): `build` runs on first use
+    * (and again after the entry is released); later calls return the same
+    * value. Eviction and [[clear]] call `release` on it. The build's
+    * seconds, less those of the builds nested in it, accumulate in
+    * [[sharedBuilds]]. */
+  def once[T](s: SparkSession, sfDir: String, key: String)(build: => T)
+             (release: T => Unit): T = synchronized {
+    reg.get((s, sfDir, key)) match {
+      case Some(e) =>
+        e.touched = clock
+        e.value.asInstanceOf[T]
+      case None =>
+        val outer = nestedSecs
+        nestedSecs = 0.0
+        val t0 = System.nanoTime()
+        var own = 0.0
+        val v = try build finally {
+          val dt = (System.nanoTime() - t0) / 1e9
+          own = dt - nestedSecs
+          nestedSecs = outer + dt
+        }
+        buildSecs((sfDir, key)) = buildSecs.getOrElse((sfDir, key), 0.0) + own
+        reg((s, sfDir, key)) = new Entry(v, () => release(v), clock)
+        v
+    }
+  }
+
   /** Memoized cached DataFrame: builds + caches on first use per
     * (session, sfDir, key), returns the identical instance afterwards.
     *
@@ -119,48 +156,42 @@ object QueryCaches {
     * q_eng_bfs_hops 7.9 s standalone vs 2.9 s in-suite — pure attribution
     * artifact). The cost lands in [[sharedBuilds]], which Bench emits as
     * its own `shared_builds` ledger; per-query rows then measure post-memo
-    * work only.
-    *
-    * Concurrency: build-then-putIfAbsent instead of TrieMap
-    * .getOrElseUpdate — two racing threads may both build, but the loser's
-    * cached DataFrame is unpersisted immediately (ADVICE r9: the orphaned
-    * loser was cached+counted and never released by [[clear]]) and only
-    * the winner's build time lands in the ledger. */
+    * work only. Release unpersists. */
   def memo(s: SparkSession, sfDir: String, key: String)
-          (build: => DataFrame): DataFrame = {
-    lastTouch.put((s, sfDir, key), clock.get())
-    reg.get((s, sfDir, key)).getOrElse {
+          (build: => DataFrame): DataFrame =
+    once(s, sfDir, key) {
       val df = build.cache()
-      val t0 = System.nanoTime()
       df.count() // populates the InMemoryRelation (all columns)
-      val dt = (System.nanoTime() - t0) / 1e9
-      reg.putIfAbsent((s, sfDir, key), df) match {
-        case Some(winner) =>
-          try df.unpersist(false) catch { case _: Throwable => () }
-          winner
-        case None =>
-          buildSecs += ((sfDir, key) ->
-            (buildSecs.getOrElse((sfDir, key), 0.0) + dt))
-          df
-      }
-    }
-  }
+      df
+    }(_.unpersist(false))
 
-  /** Seconds spent materializing each memo key since the last [[clear]]
-    * — the shared-build ledger Bench commits alongside per-query rows.
+  /** Memoized scratch directory `/tmp/graft_<key>_<pid>_<sfDir tag>`:
+    * emptied, then filled by `write(dir)` on first use; release (or a
+    * failed write) removes it. The pid keeps two JVMs on one fixture (a
+    * bench and a verify run side by side) off each other's files. */
+  def memoDir(s: SparkSession, sfDir: String, key: String)
+             (write: String => Unit): String =
+    once(s, sfDir, key) {
+      val dir = s"/tmp/graft_${key}_${ProcessHandle.current().pid()}_${PathTag.tag(sfDir)}"
+      Scratch.deleteRecursively(dir)
+      try write(dir) catch { case t: Throwable => Scratch.deleteRecursively(dir); throw t }
+      dir
+    }(Scratch.deleteRecursively)
+
+  /** Seconds spent building each key since the last [[clear]] — the
+    * shared-build ledger Bench commits alongside per-query rows.
     * Keys rendered as "key" when one SF dir is in play (the Bench case)
     * would collide across SFs, so the label is "key@sfLeaf". */
-  def sharedBuilds: Map[String, Double] =
+  def sharedBuilds: Map[String, Double] = synchronized {
     buildSecs.toMap.map { case ((sfDir, key), v) =>
       val leaf = sfDir.reverse.takeWhile(_ != '/').reverse
       s"$key@$leaf" -> v
     }
+  }
 
-  /** Unpersist and forget every registered cache (non-blocking). */
-  def clear(): Unit = {
-    reg.values.foreach(df => try df.unpersist(false) catch { case _: Throwable => () })
-    reg.clear()
+  /** Release and forget every entry, and reset the ledger. */
+  def clear(): Unit = synchronized {
+    reg.keys.toSeq.foreach(drop)
     buildSecs.clear()
-    lastTouch.clear()
   }
 }

@@ -44,32 +44,6 @@ object StreamTwinQueries {
   @volatile var lastAppendStateRemoved: Long = 0L
   @volatile var lastAppendStateResident: Long = 0L
 
-  // one true streaming execution per (session, sfDir) — the sink dir is
-  // the memo value; Bench's untimed warmup pays the run like every other
-  // shared build
-  // keyed on the session reference (not identity hash — see
-  // EngineQueries.bucketedTables): a recycled hash must never hand a new
-  // session a sink it didn't run
-  private val streamExecDone =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
-  // every per-PID scratch base this process created (split inputs,
-  // sinks, checkpoints), for end-of-run removal
-  private val scratchBases =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
-  /** Best-effort removal of this process's streaming scratch dirs and
-    * the memos pointing into them. Invalidates the gate memos — call
-    * only when no more queries will run (Bench/Verify do, after their
-    * suite, next to the warehouse cleanup). */
-  def cleanupScratch(): Unit = {
-    scratchBases.keys.foreach(graft.util.Scratch.deleteRecursively)
-    scratchBases.clear()
-    streamExecDone.clear()
-    streamExecAppendDone.clear()
-    splitInputDone.clear()
-  }
-
   /** One 4-way time-ranged parquet split of the events fixture per
     * (session, sfDir) — the shared micro-batch backlog BOTH streaming
     * gates drain (they differ only in watermark/output-mode/sink, so
@@ -78,16 +52,8 @@ object StreamTwinQueries {
     * source its arrival order — complete mode is order-invariant, and
     * append mode sees no late rows (nothing arrives behind the
     * watermark), which is exactly the archival-replay arrival model. */
-  private val splitInputDone =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private def ensureSplitInput(s: SparkSession, d: String): String =
-    splitInputDone.getOrElseUpdate((s, d), {
-      val base = s"/tmp/graft_stream_in_${ProcessHandle.current().pid()}_" +
-        graft.util.PathTag.tag(d)
-      scratchBases.put(base, ())
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+  private def splitInput(s: SparkSession, d: String): String =
+    QueryCaches.memoDir(s, d, "stream_in") { base =>
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts"))
@@ -100,8 +66,7 @@ object StreamTwinQueries {
             unix_micros(col("ts")) < lo + (k + 1) * step)
           .coalesce(1).write.mode("append").parquet(s"$base/in")
       }
-      s"$base/in"
-    })
+    } + "/in"
 
   /** Execute a REAL Structured Streaming query over the events fixture
     * (r11 verdict #6 — the q_stream_* rows gate batch twins of the shared
@@ -118,17 +83,9 @@ object StreamTwinQueries {
     * standing query: file-source backlog drained in bounded batches,
     * keyed state merged per batch, sink overwritten transactionally. */
   private def runStreamExec(s: SparkSession, d: String): String =
-    streamExecDone.getOrElseUpdate((s, d), {
-      // per-process component: two JVMs gating the same fixture (a bench
-      // and a verify run side by side) must not share a sink/checkpoint
-      val base = s"/tmp/graft_stream_exec_${ProcessHandle.current().pid()}_" +
-        graft.util.PathTag.tag(d)
-      scratchBases.put(base, ())
+    QueryCaches.memoDir(s, d, "stream_exec") { base =>
       val (outDir, ckpt) = (s"$base/out", s"$base/ckpt")
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val inDir = ensureSplitInput(s, d)
+      val inDir = splitInput(s, d)
       val stream = s.readStream
         .schema(s.read.parquet(inDir).schema)
         .option("maxFilesPerTrigger", "1")
@@ -150,11 +107,7 @@ object StreamTwinQueries {
         .start()
       q.awaitTermination()
       lastStreamBatches = batches
-      outDir
-    })
-
-  private val streamExecAppendDone =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+    } + "/out"
 
   /** The PRODUCTION streaming topology (r12 verdict #1): same 4
     * micro-batch AvailableNow run as [[runStreamExec]], but through
@@ -174,16 +127,9 @@ object StreamTwinQueries {
     * the sink holds precisely the plain GROUP BY restricted below that
     * threshold — expressible in DuckDB from the raw table alone. */
   private def runStreamExecAppend(s: SparkSession, d: String): String =
-    streamExecAppendDone.getOrElseUpdate((s, d), {
-      val base =
-        s"/tmp/graft_stream_append_${ProcessHandle.current().pid()}_" +
-          graft.util.PathTag.tag(d)
-      scratchBases.put(base, ())
+    QueryCaches.memoDir(s, d, "stream_append") { base =>
       val (outDir, ckpt) = (s"$base/out", s"$base/ckpt")
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val inDir = ensureSplitInput(s, d)
+      val inDir = splitInput(s, d)
       val stream = s.readStream
         .schema(s.read.parquet(inDir).schema)
         .option("maxFilesPerTrigger", "1")
@@ -213,8 +159,7 @@ object StreamTwinQueries {
       lastAppendStateResident = progress.lastOption
         .flatMap(_.stateOperators.headOption.map(_.numRowsTotal))
         .getOrElse(0L)
-      outDir
-    })
+    } + "/out"
 
   // 6 h session gap in exact integer microseconds (the events fixture's
   // per-user inter-arrival is ~hours, so this yields real multi-event

@@ -83,6 +83,22 @@ class PipelineSpec extends SparkSpec {
     assert(byDay.values.forall(_ == 2))
   }
 
+  test("a re-run into the same --out replaces flat and hist instead of appending") {
+    val work = JFiles.createTempDirectory("graft_pipe_rerun").toString
+    def run(): (Long, Long, Long) = {
+      Main.main(Array("pipeline", "--in", rawDir, "--out", work,
+        "--start-day", "20130301", "--end-day", "20130402",
+        "--per-day", "2", "--seed", "7"))
+      (spark.read.parquet(s"$work/flat").count(),
+        spark.read.parquet(s"$work/hist").count(),
+        spark.read.parquet(s"$work/filtered").count())
+    }
+    val first = run()
+    val second = run()
+    assert(second._1 == 16, s"flat must hold the 16 daily rows once, got ${second._1}")
+    assert(second == first, s"re-run changed the outputs: $first -> $second")
+  }
+
   test("a day range inside the monthly period samples the Hive side; pruning reaches PartitionFilters") {
     val work = JFiles.createTempDirectory("graft_pipe_out2").toString
     Main.main(Array("pipeline", "--in", rawDir, "--out", work,

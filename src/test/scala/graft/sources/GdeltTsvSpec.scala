@@ -222,7 +222,7 @@ class GdeltTsvSpec extends SparkSpec {
       s"expected 15 daily files planned, got ${GdeltTsv.lastFilesPlanned}")
     assert(GdeltTsv.lastFilesPruned > 0L,
       "the 15-day range must prune out-of-range daily files at planning")
-    graft.queries.ParityQueries.cleanupScratch()
+    graft.queries.QueryCaches.clear()
   }
 
   test("pushed IN-list and null-semantics match the residual filter") {

@@ -66,9 +66,9 @@ class StreamExecGateSpec extends SparkSpec {
         "a strict subset of the batch answer")
   }
 
-  test("cleanupScratch removes this process's streaming scratch dirs") {
-    // cleanup (what Bench/Verify call at exit) must remove the per-PID
-    // scratch and nothing else, and invalidate the memos with it.
+  test("QueryCaches.clear removes this process's streaming scratch dirs") {
+    // clearing the registry (what the suite runner does at exit) must
+    // remove the per-PID scratch and invalidate the memos with it.
     // Self-sufficient: runs a gate first, so the test also passes in
     // isolation (-z), not only after the earlier tests in suite order
     SparkEntry.queries("q_stream_exec_windowed")(spark, sf).collect()
@@ -78,7 +78,7 @@ class StreamExecGateSpec extends SparkSpec {
         f.getName.startsWith(s"graft_stream_append_${pid}_") ||
         f.getName.startsWith(s"graft_stream_in_${pid}_")).toSeq
     assert(mine().nonEmpty, "expected live scratch from the gate run")
-    graft.queries.StreamTwinQueries.cleanupScratch()
+    graft.queries.QueryCaches.clear()
     assert(mine().isEmpty,
       s"scratch left behind: ${mine().map(_.getName).mkString(", ")}")
   }
