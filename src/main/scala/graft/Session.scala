@@ -65,7 +65,10 @@ object Session {
     // q_eng_waiting_supplier task time 10.4 s → 6.4 s, q_eng_triangles
     // 31.1 s → 26.7 s, mann_whitney/span_removal −10-15%, rest neutral;
     // oracle re-proved 347/347 under the flag.
-    "spark.sql.join.preferSortMergeJoin" -> "false")
+    "spark.sql.join.preferSortMergeJoin" -> "false",
+    // inert except on a join of two bucketed tables with different bucket
+    // counts — only q_eng_bucketed_join_coalesce (orders@16 ⋈ lineitem@32)
+    "spark.sql.bucketing.coalesceBucketsInJoin.enabled" -> "true")
 
   /** Start (or join) the certified session at WARN logging. `tag` names
     * the per-PID warehouse, which is removed when the JVM exits. */

@@ -18,8 +18,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftFunctions.all.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteTopKWindow)
   }
 }
 

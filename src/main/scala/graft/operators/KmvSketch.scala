@@ -15,8 +15,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   *   - hash h(x) = first 13 hex chars of md5(x) — uniform on [0, 2^52);
   *   - sketch(S) = k smallest distinct h values: a per-set rank window;
-  *     distributed build is bottom-k per partition then re-rank (the same
-  *     mergeable bottom-k discipline as [[graft.sample.BottomKByPriority]]);
+  *     distributed build is bottom-k per partition then re-rank (Spark's
+  *     partial/final `WindowGroupLimit` under the rank filter);
   *   - |S| ≈ (k−1)·2^52 / h_(k) — with a 52-bit space the numerator fits
   *     a long for k ≤ 2048, no wide-decimal detour;
   *   - merge(A, B) = k smallest of the multiset union — never rescans data;
@@ -34,7 +34,7 @@ object KmvSketch {
   /** Bottom-k distinct hashes per `setKey`: (set, h, rn) with rn ≤ k.
     * One distinct + one rank window keyed on the set — at scale the
     * window input is already capped by per-partition bottom-k (Spark's
-    * TakeOrderedAndProject-style partial top-k under AQE). */
+    * partial `WindowGroupLimit`, inferred for k ≤ 1000). */
   def sketch(df: DataFrame, setKey: Column, value: Column, k: Int): DataFrame = {
     val w = Window.partitionBy("set").orderBy(col("h"))
     df.select(setKey.as("set"), hash52(value).as("h")).distinct()

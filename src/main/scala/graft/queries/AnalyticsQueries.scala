@@ -955,21 +955,10 @@ object AnalyticsQueries {
          FROM documents d JOIN sk ON sk.lang = d.lang
          GROUP BY d.lang ORDER BY d.lang"""),
 
-    // the RewriteTopKWindow optimizer rule ON the gate: this query is
-    // written in the stock rank-filter-drop idiom, the injected rule
-    // replans it as the sort-free TopKPerGroup node (PlanRewriteSpec
-    // asserts the node fires for this shape), and the DuckDB oracle runs
-    // the plain window semantics — hash equality proves the rewrite is
-    // row-identical, not just spec-identical
+    // the stock rank-filter-drop idiom: Spark's InferWindowGroupLimit
+    // plans it as a partial WindowGroupLimit before the shuffle and a
+    // final one after it; the DuckDB oracle runs the plain window
     Q("q_eng_topk_rewritten", (s, d) => {
-      if (!s.experimental.extraOptimizations.contains(
-          graft.plans.RewriteTopKWindow))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.RewriteTopKWindow
-      if (!s.experimental.extraStrategies.contains(
-          graft.plans.TopKPerGroupStrategy))
-        s.experimental.extraStrategies =
-          s.experimental.extraStrategies :+ graft.plans.TopKPerGroupStrategy
       val w = Window.partitionBy(col("o_orderpriority"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       Tables.orders(s, d)

@@ -1123,23 +1123,17 @@ object EngineQueries {
 
     // Bucket-count EVOLUTION (r12 verdict #3): the same join across
     // tables bucketed at DIFFERENT counts (orders@16 ⋈ lineitem@32).
-    // With coalesceBucketsInJoin enabled, Catalyst folds the 32-bucket
-    // scan down to 16 at read time (each task reads 2 buckets of the
-    // finer table) — still ZERO ShuffleExchangeExec (BucketingSpec pins
-    // it), so a re-bucketed fact table keeps joining shuffle-free
-    // against older layouts during a live bucket-count migration. Same
+    // With coalesceBucketsInJoin (on in graft.Session), Catalyst folds
+    // the 32-bucket scan down to 16 at read time (each task reads 2
+    // buckets of the finer table) — still ZERO ShuffleExchangeExec
+    // (BucketingSpec pins it), so a re-bucketed fact table keeps joining
+    // shuffle-free against older layouts during a live bucket-count
+    // migration. Same
     // aggregate + oracle as q_eng_bucketed_join: equality also proves
     // the coalesced read loses no rows.
     Q("q_eng_bucketed_join_coalesce", (s, d) => {
       val (ot, _) = ensureBucketed(s, d)
       val lt32 = ensureBucketed32(s, d)
-      // set WITHOUT restore, deliberately: physical planning is lazy (the
-      // caller executes the returned DataFrame after this lambda exits,
-      // so a finally-restore would plan the query with the flag OFF), and
-      // the flag is inert everywhere else — CoalesceBucketsInJoin only
-      // fires on a join of two bucketed tables with DIFFERENT counts,
-      // which exists in this suite only via ensureBucketed32, i.e. here
-      s.conf.set("spark.sql.bucketing.coalesceBucketsInJoin.enabled", "true")
       graft.etl.Bucketing.readBucketed(s, ot)
         .join(graft.etl.Bucketing.readBucketed(s, lt32), "o_orderkey")
         .groupBy(col("o_orderkey"))

@@ -276,12 +276,11 @@ object ParityQueries {
                 CAST(least(cnt, tgt) AS BIGINT) AS n_distinct
          FROM t WHERE least(cnt, tgt) > 0 ORDER BY event_type"""),
 
-    // Custom-plan path: exact-k per stratum through the TopKPerGroup
-    // LogicalPlan/Strategy/Exec (k-bounded heaps, no group sort) — same
-    // deterministic selection as q_sample_stratified's window form, so the
-    // full-row oracle verifies the custom physical operator end to end
+    // exact-k per stratum, 50 smallest ids: Spark plans the rank window
+    // with a partial WindowGroupLimit before the shuffle and a final one
+    // after it; the full-row oracle checks every selected row
     Q("q_sample_topk_planned", (s, d) =>
-      Samplers.perGroupPlanned(ev(s, d), Seq(col("event_type")), 50,
+      Samplers.perGroup(ev(s, d), Seq(col("event_type")), 50,
         SampleOrder.By(Seq(col("event_id"))))
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id"),
@@ -354,22 +353,15 @@ object ParityQueries {
                          '%Y-%m-%d') AS month_end
          FROM events ORDER BY event_id"""),
 
-    // R4 true single-pass path: mergeable bottom-k reservoir Aggregator
-    // (map-side combined, O(k) state/group/task). Invariant oracle — DuckDB
-    // has no xxhash64, so the per-stratum exact-k counts are the checkable
-    // contract; row-identity with the window path is spec-verified.
-    Q("q_sample_reservoir_counts", (s, d) => {
-      import s.implicits._
-      ev(s, d)
-        .select(col("event_type"),
-          xxhash64(lit(42L), col("event_id")).as("p"), col("event_id"))
-        .as[(String, Long, Long)]
-        .groupByKey(_._1).mapValues(t => (t._2, t._3))
-        .agg(graft.sample.BottomKByPriority(100).toColumn.name("ids"))
-        .toDF("stratum", "ids")
-        .select(col("stratum"), size(col("ids")).cast("long").as("n"))
-        .orderBy("stratum")
-    },
+    // R4 reservoir: exact-k per stratum by content-hash priority.
+    // Invariant oracle — DuckDB has no xxhash64, so the per-stratum
+    // exact-k counts are the checkable contract.
+    Q("q_sample_reservoir_counts", (s, d) =>
+      Samplers.perGroup(ev(s, d), Seq(col("event_type")), 100,
+        SampleOrder.HashOf(42, Seq(col("event_id"))))
+        .groupBy(col("event_type").as("stratum"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy("stratum"),
       """SELECT event_type AS stratum, LEAST(100, COUNT(*)) AS n
          FROM events GROUP BY event_type ORDER BY stratum"""),
 

@@ -20,7 +20,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   *     memory per task, single pass, same guarantees as a merged reservoir.
   *   - exact-k per group → `row_number() OVER (PARTITION BY g ORDER BY
   *     <rand>) <= k`: one hash shuffle on the group key; groups smaller than
-  *     k return all rows (samplers.py:433-446 semantics).
+  *     k return all rows (samplers.py:433-446 semantics). For k ≤
+  *     `spark.sql.optimizer.windowGroupLimitThreshold` (1000) Spark plans a
+  *     partial `WindowGroupLimit` below the shuffle and a final one above
+  *     it, so each map task cuts every group to k rows before the shuffle.
   *
   * Randomness is an ORDERING, pluggable via [[SampleOrder]]:
   *
@@ -95,47 +98,6 @@ object Samplers {
     df.withColumn(rn, row_number().over(w))
       .where(col(rn) <= k)
       .drop(rn)
-  }
-
-  /** Heap-based exact-k per group via the custom [[graft.plans.TopKPerGroup]]
-    * plan node — same selection as [[perGroup]] under the same ordering,
-    * but executed with k-bounded per-group heaps (O(n log k), no sort)
-    * instead of WindowExec's full per-partition sort. The scale pick when
-    * k is small and groups are huge. Registers the planner strategy on the
-    * session if absent.
-    *
-    * Ordering contract: `order.sortExprs` must be plain value expressions
-    * ranked ASCENDING (all built-in [[SampleOrder]]s qualify). A
-    * `Column.desc` sort-order wrapper is not a value expression — it fails
-    * analysis when projected; express descending intent by negating or
-    * inverting the expression instead. */
-  def perGroupPlanned(df: DataFrame, groupCols: Seq[Column], k: Int,
-                      order: SampleOrder,
-                      maxGroupsInMemory: Int = graft.plans.TopKPerGroup.DefaultMaxGroups)
-      : DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
-    val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.TopKPerGroupStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.TopKPerGroupStrategy
-    // Spark 4 Columns carry lazy ColumnNode expressions the analyzer only
-    // resolves through the Dataset API — so materialize group/order exprs
-    // as projected columns first, then hand the custom node fully-resolved
-    // child attributes.
-    val gNames = groupCols.indices.map(i => s"__tk_g$i")
-    val oNames = order.sortExprs.indices.map(i => s"__tk_o$i")
-    require(!df.columns.exists(c => c.startsWith("__tk_")),
-      "column names starting with __tk_ are reserved by perGroupPlanned")
-    val prepared = (gNames.zip(groupCols) ++ oNames.zip(order.sortExprs))
-      .foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
-    val child = GraftColumnBridge.logicalPlan(prepared)
-    val attr = child.output.map(a => a.name -> a).toMap
-    val node = graft.plans.TopKPerGroup(
-      gNames.map(attr(_)),
-      oNames.map(n => SortOrder(attr(n), Ascending)),
-      k, child, maxGroupsInMemory)
-    GraftColumnBridge.ofRows(spark, node).drop((gNames ++ oNames): _*)
   }
 
   /** Daily sampler (R2): k rows per day. The reference samples per

@@ -1,13 +1,13 @@
 package graft.cli
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import java.nio.file.{Files => JFiles, Paths}
 
 /** CLI contract (reference: main.py:49-57,118-156): error cases fail before
   * any job starts; sample subcommand runs end to end on a parquet input. */
-class MainSpec extends SparkSpec {
+class MainSpec extends SparkSpec with TempDirs {
 
-  private lazy val workDir = JFiles.createTempDirectory("graft_cli").toString
+  private lazy val workDir = tempDir("graft_cli")
 
   private lazy val eventsParquet: String = {
     val p = s"$workDir/events_pq"
@@ -64,7 +64,7 @@ class MainSpec extends SparkSpec {
 
   test("full pipeline: convert → filter → sample chained through the CLI") {
     import graft.schema.Gdelt
-    val dir = JFiles.createTempDirectory("graft_pipe").toString
+    val dir = tempDir("graft_pipe")
     // GDELT-shaped daily TSV: 40 rows, QuadClass null every 5th (dropped by
     // filter), two distinct days
     val lines = (1 to 40).map { i =>
@@ -131,7 +131,7 @@ class MainSpec extends SparkSpec {
 
   test("convert: .zip archives extract, convert, and honor the archive .done marker") {
     import graft.schema.Gdelt
-    val dir = JFiles.createTempDirectory("graft_zip_cli").toString
+    val dir = tempDir("graft_zip_cli")
     val m = Map("GlobalEventID" -> "1", "Day" -> "20130401",
       "MonthYear" -> "201304", "Year" -> "2013", "QuadClass" -> "1")
     val line = Gdelt.columns.map(c => m.getOrElse(c, "x")).mkString("\t")
@@ -154,7 +154,7 @@ class MainSpec extends SparkSpec {
 
   test("dedup: keeps the smallest-tiebreak row per key; validates columns") {
     import spark.implicits._
-    val dir = JFiles.createTempDirectory("graft_dedup_cli").toString
+    val dir = tempDir("graft_dedup_cli")
     Seq((1L, 10L, "a"), (1L, 5L, "b"), (2L, 7L, "c"))
       .toDF("k", "seq", "v").write.parquet(s"$dir/in")
     Main.main(Array("dedup", "--in", s"$dir/in", "--by", "k",
@@ -169,7 +169,7 @@ class MainSpec extends SparkSpec {
   }
 
   test("compact: merges small files through the CLI") {
-    val dir = JFiles.createTempDirectory("graft_compact_cli").toString
+    val dir = tempDir("graft_compact_cli")
     spark.range(1000).toDF("id").repartition(8).write.parquet(s"$dir/t")
     Main.main(Array("compact", "--in", s"$dir/t"))
     assert(spark.read.parquet(s"$dir/t").inputFiles.length == 1)
@@ -177,7 +177,7 @@ class MainSpec extends SparkSpec {
   }
 
   test("manifest: writes a per-file min/max index through the CLI") {
-    val dir = JFiles.createTempDirectory("graft_manifest_cli").toString
+    val dir = tempDir("graft_manifest_cli")
     graft.etl.Layout.writeSorted(
       spark.range(1, 101).toDF("id"),
       Seq(org.apache.spark.sql.functions.col("id")), s"$dir/t", targetFiles = 4)
@@ -192,7 +192,7 @@ class MainSpec extends SparkSpec {
 
   test("prepare: quality gate, dedup keep-min, token-budget bins") {
     import spark.implicits._
-    val dir = JFiles.createTempDirectory("graft_prepare_cli").toString
+    val dir = tempDir("graft_prepare_cli")
     val good = "the quick brown fox and the lazy dog of a farm in town " * 10
     Seq(
       (1L, good),          // survives, keeps the duplicate group
@@ -215,7 +215,7 @@ class MainSpec extends SparkSpec {
 
   test("diff: writes the I/U/D changeset; validates columns") {
     import spark.implicits._
-    val dir = JFiles.createTempDirectory("graft_diff_cli").toString
+    val dir = tempDir("graft_diff_cli")
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$dir/prev")
     Seq((1L, "a"), (2L, "B"), (3L, "c")).toDF("k", "v").write.parquet(s"$dir/next")
     Main.main(Array("diff", "--prev", s"$dir/prev", "--next", s"$dir/next",
@@ -233,7 +233,7 @@ class MainSpec extends SparkSpec {
 
   test("ann: brute top-k through the CLI matches the library call; error contract") {
     import org.apache.spark.sql.functions.col
-    val dir = JFiles.createTempDirectory("graft_ann_cli").toString
+    val dir = tempDir("graft_ann_cli")
     val emb = graft.Tables.embeddings(spark, sf)
     Main.main(Array("ann", "--in", "/root/testdata/sf0.001/embeddings.parquet",
       "--queries", "0,1", "--topk", "3", "--out", s"$dir/out"))
@@ -260,7 +260,7 @@ class MainSpec extends SparkSpec {
 
   test("merge: upsert with delete clause through the CLI; error contract") {
     import spark.implicits._
-    val dir = JFiles.createTempDirectory("graft_merge_cli").toString
+    val dir = tempDir("graft_merge_cli")
     Seq((1L, "O", 10.0), (2L, "F", 20.0), (3L, "O", 30.0))
       .toDF("k", "st", "v").write.parquet(s"$dir/target")
     Seq((2L, "F", 99.0), (3L, "O", 33.0), (9L, "O", 90.0))

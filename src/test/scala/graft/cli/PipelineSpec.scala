@@ -1,6 +1,6 @@
 package graft.cli
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.schema.Gdelt
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -12,7 +12,7 @@ import java.nio.file.{Files => JFiles, Paths}
   * day-range re-read (Hive side partition-pruned) → null-check filter →
   * daily sample, over a multi-day fixture mixing daily and monthly files.
   */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   /** One 61-field TSV line; numeric/filter columns are parseable, the
@@ -40,7 +40,7 @@ class PipelineSpec extends SparkSpec {
     }.mkString("\t")
 
   private lazy val rawDir = {
-    val d = JFiles.createTempDirectory("graft_pipe_raw").toString
+    val d = tempDir("graft_pipe_raw")
     def write(name: String, lines: Seq[String]): Unit =
       JFiles.write(Paths.get(d, name), lines.mkString("\n").getBytes)
     // three daily files; one row on 0401 has an empty Actor1Name → filtered
@@ -54,7 +54,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("one pipeline invocation: DSv2 read, typed flat+hive sinks, pruned re-read, filter, daily sample") {
-    val work = JFiles.createTempDirectory("graft_pipe_out").toString
+    val work = tempDir("graft_pipe_out")
     Main.main(Array("pipeline", "--in", rawDir, "--out", work,
       "--start-day", "20130401", "--end-day", "20130402",
       "--per-day", "2", "--seed", "7"))
@@ -84,7 +84,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("a re-run into the same --out replaces flat and hist instead of appending") {
-    val work = JFiles.createTempDirectory("graft_pipe_rerun").toString
+    val work = tempDir("graft_pipe_rerun")
     def run(): (Long, Long, Long) = {
       Main.main(Array("pipeline", "--in", rawDir, "--out", work,
         "--start-day", "20130301", "--end-day", "20130402",
@@ -100,7 +100,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("a day range inside the monthly period samples the Hive side; pruning reaches PartitionFilters") {
-    val work = JFiles.createTempDirectory("graft_pipe_out2").toString
+    val work = tempDir("graft_pipe_out2")
     Main.main(Array("pipeline", "--in", rawDir, "--out", work,
       "--start-day", "20130301", "--end-day", "20130331",
       "--per-day", "3", "--seed", "7"))

@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.schema.Gdelt
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
@@ -9,10 +9,10 @@ import java.nio.file.{Files => JFiles, Paths}
 /** Convert + Filter stage contract over a synthetic GDELT-shaped TSV
   * fixture (FIXTURES.md §B.1): coercion nulls, malformed-line handling,
   * Hive layout, done-markers, filter retention. */
-class EtlSpec extends SparkSpec {
+class EtlSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
-  private lazy val workDir = JFiles.createTempDirectory("graft_etl").toString
+  private lazy val workDir = tempDir("graft_etl")
 
   /** One synthetic row: id, day (YYYYMMDD), quadClass ("" = null),
     * goldstein (possibly non-numeric), actor1Name. */

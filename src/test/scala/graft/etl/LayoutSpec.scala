@@ -1,17 +1,16 @@
 package graft.etl
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files => JFiles}
 
 /** Write-side layout contract: range-partitioned sorted writes produce
   * files with disjoint key ranges (the property parquet min/max skipping
   * needs); zorder2 interleaves bits correctly and clusters both dims. */
-class LayoutSpec extends SparkSpec {
+class LayoutSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   test("writeSorted: per-file key ranges are disjoint and cover the data") {
-    val out = JFiles.createTempDirectory("graft_layout").toString + "/t"
+    val out = tempDir("graft_layout") + "/t"
     val df = graft.Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
     Layout.writeSorted(df, Seq(col("l_orderkey")), out, targetFiles = 4)
 
@@ -33,7 +32,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compact bin-packs small files, preserves rows, no-ops when compact") {
-    val dir = JFiles.createTempDirectory("graft_compact").toString + "/t"
+    val dir = tempDir("graft_compact") + "/t"
     val df = graft.Tables.lineitem(spark, sf)
     df.repartition(16).write.parquet(dir)
     val rows = df.count()
@@ -62,7 +61,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("z-order clustering bounds both dimensions per file") {
-    val out = JFiles.createTempDirectory("graft_layout").toString + "/z"
+    val out = tempDir("graft_layout") + "/z"
     // 64x64 grid, one row per cell, written as 16 z-clustered files
     val grid = spark.range(64L * 64)
       .select((col("id") % 64).as("x"), (col("id") / 64).cast("long").as("y"))

@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files => JFiles, Paths}
@@ -12,7 +12,7 @@ import java.nio.file.{Files => JFiles, Paths}
   * is the difference between scanning one month and scanning a decade
   * (reference analogue: sampling/samplers.py:300-316 reads the whole tree
   * and filters in pandas). */
-class PartitionPruningSpec extends SparkSpec {
+class PartitionPruningSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def mkData(yearMonths: Seq[(Long, Long)], rowsEach: Int) =
@@ -24,7 +24,7 @@ class PartitionPruningSpec extends SparkSpec {
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val dir = JFiles.createTempDirectory("graft_prune").toString
+      val dir = tempDir("graft_prune")
       val histDir = s"$dir/hist"
       val flatDir = s"$dir/flat"
       val months = Seq((2013L, 201301L), (2013L, 201302L), (2013L, 201303L), (2014L, 201401L))

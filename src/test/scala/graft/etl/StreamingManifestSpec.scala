@@ -1,18 +1,17 @@
 package graft.etl
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import java.nio.file.{Files => JFiles}
 
 /** Streaming ingest keeps the file-skipping manifest fresh: a
   * foreachBatch writer appends parquet and re-derives Layout.manifest
   * after each micro-batch — the table-format discipline (data + index
   * updated together) composed from the shipped pieces. */
-class StreamingManifestSpec extends SparkSpec {
+class StreamingManifestSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   test("manifest tracks every appended file across micro-batches") {
-    val dir = JFiles.createTempDirectory("graft_stream_manifest").toString
+    val dir = tempDir("graft_stream_manifest")
     val data = s"$dir/t"
     val mem = MemoryStream[Long](spark)
     def run(): Unit =

@@ -1,13 +1,12 @@
 package graft.etl
 
-import graft.SparkSpec
-import java.nio.file.{Files => JFiles}
+import graft.{SparkSpec, TempDirs}
 
-class VersionedSpec extends SparkSpec {
+class VersionedSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   test("commits are immutable snapshots; time travel reads any retained version") {
-    val root = JFiles.createTempDirectory("graft_versioned").toString + "/t"
+    val root = tempDir("graft_versioned") + "/t"
     assert(Versioned.commit(spark, root, Seq(1L, 2L).toDF("k")) == 0L)
     assert(Versioned.commit(spark, root, Seq(1L, 2L, 3L).toDF("k")) == 1L)
     assert(Versioned.commit(spark, root, Seq(9L).toDF("k")) == 2L)
@@ -20,7 +19,7 @@ class VersionedSpec extends SparkSpec {
   }
 
   test("vacuum drops only versions beyond the retention window") {
-    val root = JFiles.createTempDirectory("graft_versioned").toString + "/t"
+    val root = tempDir("graft_versioned") + "/t"
     (0 to 4).foreach(i => Versioned.commit(spark, root, Seq(i.toLong).toDF("k")))
     val dropped = Versioned.vacuum(spark, root, keepLast = 2)
     assert(dropped == Seq(0L, 1L, 2L))
@@ -30,7 +29,7 @@ class VersionedSpec extends SparkSpec {
   }
 
   test("idempotent commits: replayed batch ids are no-ops (exactly-once sink)") {
-    val root = JFiles.createTempDirectory("graft_versioned").toString + "/t"
+    val root = tempDir("graft_versioned") + "/t"
     assert(Versioned.commitIdempotent(spark, root, Seq(1L).toDF("k"), 0L))
     assert(Versioned.commitIdempotent(spark, root, Seq(2L).toDF("k"), 1L))
     // crash re-delivery of batch 1: must not double-commit or move the pointer
@@ -44,7 +43,7 @@ class VersionedSpec extends SparkSpec {
 
   test("streaming drive: foreachBatch + commitIdempotent survives replay") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val root = JFiles.createTempDirectory("graft_versioned").toString + "/t"
+    val root = tempDir("graft_versioned") + "/t"
     val mem = MemoryStream[Long](spark)
     def run(ckpt: String): Unit =
       mem.toDF().toDF("k").writeStream
@@ -53,7 +52,7 @@ class VersionedSpec extends SparkSpec {
           Versioned.commitIdempotent(spark, root, b, id); () }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start().awaitTermination()
-    val ckpt = JFiles.createTempDirectory("graft_versioned_ckpt").toString
+    val ckpt = tempDir("graft_versioned_ckpt")
     mem.addData(1L, 2L); run(ckpt)
     mem.addData(3L); run(ckpt)
     assert(Versioned.latestVersion(spark, root).contains(1L))
@@ -63,7 +62,7 @@ class VersionedSpec extends SparkSpec {
   }
 
   test("reading an empty table and bad retention fail loudly") {
-    val root = JFiles.createTempDirectory("graft_versioned").toString + "/t"
+    val root = tempDir("graft_versioned") + "/t"
     intercept[IllegalStateException](Versioned.read(spark, root))
     assert(Versioned.vacuum(spark, root, 3) == Nil)
     intercept[IllegalArgumentException](Versioned.vacuum(spark, root, 0))

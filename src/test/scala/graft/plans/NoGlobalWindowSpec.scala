@@ -66,11 +66,22 @@ class NoGlobalWindowSpec extends SparkSpec {
     def hasFileScan(p: LogicalPlan): Boolean = p.collectFirst {
       case r @ (_: LogicalRelation | _: DataSourceV2ScanRelation) => r
     }.isDefined
+    // Building a query must leave the session's planner as it found it,
+    // so every later query and spec runs under the certified config.
+    // Tables.events sets its nanos read guard on first use: read it first.
+    Tables.events(spark, sf)
+    def planner = (spark.experimental.extraOptimizations,
+      spark.experimental.extraStrategies, spark.conf.getAll)
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot(_._1.startsWith("q_stream_exec_"))
       .flatMap { case (name, fn) =>
+        val before = planner
         val plan = fn(spark, sf).queryExecution.optimizedPlan
-        plan.collect {
+        val after = planner
+        val changed = Option.when(after != before)(
+          s"$name: changes the session's planner (rules ${after._1}, " +
+            s"strategies ${after._2}, conf ${after._3.toSet diff before._3.toSet})")
+        changed.toSeq ++ plan.collect {
           case w: LogicalWindow
               if w.partitionSpec.isEmpty && !hasAgg(w.child) &&
                 hasFileScan(w.child) =>

@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSpec, Tables}
+import graft.{SparkEntry, SparkSpec, Tables, TempDirs}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files => JFiles}
 
 /** Independent semantic proofs for the analytics queries whose DuckDB
   * oracles share the same formulation (coverage explosion, rank-rule
@@ -10,7 +9,7 @@ import java.nio.file.{Files => JFiles}
   * pass the cross-engine gate, so these tests recompute the answers
   * NAIVELY (collected Scala collections, brute-force windows) or on
   * crafted fixtures with known ground truth. */
-class AnalyticsSemanticsSpec extends SparkSpec {
+class AnalyticsSemanticsSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def dailyCents: Map[java.time.LocalDate, Long] =
@@ -156,7 +155,7 @@ class AnalyticsSemanticsSpec extends SparkSpec {
   }
 
   test("attribution: 7-day lookback boundary on a crafted event stream") {
-    val dir = JFiles.createTempDirectory("graft_attr").toString
+    val dir = tempDir("graft_attr")
     def ns(day: Int, sec: Int): Long =
       (java.time.LocalDateTime.of(2024, 1, day, 0, 0, 0)
         .toEpochSecond(java.time.ZoneOffset.UTC) + sec) * 1000000000L

@@ -1,12 +1,12 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{SparkEntry, SparkSpec, TempDirs}
 import org.apache.spark.sql.functions._
 
 /** Round-11 operator semantics: semantic decontamination (benchmark
   * sample membership, threshold, tie-break) and the sketch-backed
   * grouped profiler (exactness below k, quantile ordering, bounds). */
-class Round11SemanticsSpec extends SparkSpec {
+class Round11SemanticsSpec extends SparkSpec with TempDirs {
 
   private def benchIds(): Set[Long] = {
     val emb = graft.Tables.embeddings(spark, sf)
@@ -99,7 +99,7 @@ class Round11SemanticsSpec extends SparkSpec {
     // quantiles replay the oracle's rank reads over the NULL-FILTERED
     // sample in plain Scala.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("profnull").toString
+    val dir = tempDir("profnull")
     val rows =
       (1L to 40L).map(i => (i, s"t$i", "aa", "s",
         if (i % 4 == 0L) None else Some(i * 10L))) ++

@@ -2,6 +2,7 @@ package graft.sample
 
 import graft.SparkSpec
 import graft.sample.Samplers.SampleOrder
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sampler invariants (SURVEY.md §2.6 / §7.4): exact counts, small-group
@@ -27,13 +28,35 @@ class SamplersSpec extends SparkSpec {
   }
 
   test("perGroup: k per group; groups smaller than k return all rows") {
-    val k = 7
-    val s = Samplers.stratified(ev, $"event_type", k, SampleOrder.HashOf(42, Seq($"event_id")))
-    val got = s.groupBy("event_type").count().as[(String, Long)].collect().toMap
     val totals = ev.groupBy("event_type").count().as[(String, Long)].collect().toMap
-    totals.foreach { case (g, total) =>
-      assert(got(g) == math.min(k.toLong, total), s"group $g")
+    for (k <- Seq(7, 100000)) { // 100000 exceeds every group
+      val s = Samplers.stratified(ev, $"event_type", k, SampleOrder.HashOf(42, Seq($"event_id")))
+      val got = s.groupBy("event_type").count().as[(String, Long)].collect().toMap
+      totals.foreach { case (g, total) =>
+        assert(got(g) == math.min(k.toLong, total), s"k=$k group $g")
+      }
     }
+    // k=1 under ascending id order keeps the minimum id of each group
+    val one = Samplers.perGroup(ev, Seq($"event_type"), 1, SampleOrder.By(Seq($"event_id")))
+      .select("event_type", "event_id").as[(String, Long)].collect()
+    val minIds = ev.groupBy("event_type").agg(min("event_id"))
+      .as[(String, Long)].collect()
+    assert(one.length == totals.size && one.toSet == minIds.toSet)
+  }
+
+  test("perGroup with k <= 1000 cuts each group to k rows before its shuffle") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    val df = Samplers.perGroup(ev, Seq($"event_type"), 50, SampleOrder.By(Seq($"event_id")))
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan // the initial plan, exchanges in place
+      case p => p
+    }
+    val partialBelowShuffle = plan.collect { case e: ShuffleExchangeLike => e }.exists(
+      _.collectFirst { case l: WindowGroupLimitExec if l.mode == Partial && l.limit == 50 => l }
+        .isDefined)
+    assert(partialBelowShuffle, s"no partial WindowGroupLimit below a shuffle:\n$plan")
   }
 
   test("stratified: null strata collapse into one __NA__ group") {
@@ -65,11 +88,13 @@ class SamplersSpec extends SparkSpec {
 
   test("HashOf sample is identical under different partitionings") {
     val order = SampleOrder.HashOf(42, Seq($"event_id"))
-    val a = Samplers.uniformExact(ev.repartition(1), 50, order)
-      .select("event_id").as[Long].collect().toSet
-    val b = Samplers.uniformExact(ev.repartition(13, $"user_id"), 50, order)
-      .select("event_id").as[Long].collect().toSet
-    assert(a == b)
+    for ((what, sample) <- Seq[(String, DataFrame => DataFrame)](
+        "uniformExact" -> (Samplers.uniformExact(_, 50, order)),
+        "perGroup" -> (Samplers.perGroup(_, Seq($"event_type"), 5, order)))) {
+      val a = sample(ev.repartition(1)).select("event_id").as[Long].collect().toSet
+      val b = sample(ev.repartition(13, $"user_id")).select("event_id").as[Long].collect().toSet
+      assert(a.nonEmpty && a == b, what)
+    }
   }
 
   test("weightedExact: exact n, deterministic, weight-sensitive, zero-weight excluded") {

@@ -1,18 +1,18 @@
 package graft.sources
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import java.io.{ByteArrayInputStream, IOException, InputStream}
 import java.nio.file.{Files => JFiles, Paths}
 
 /** S4 idempotency contract (scraper.py:217-276) with a mocked transport:
   * skip-existing, .tmp + atomic rename, bounded retry, failure cleanup. */
-class DownloaderSpec extends AnyFunSuite {
+class DownloaderSpec extends AnyFunSuite with TempDirs {
 
-  private def tmpDir(): String = JFiles.createTempDirectory("dlspec").toString
   private def bytes(s: String): InputStream = new ByteArrayInputStream(s.getBytes("UTF-8"))
 
   test("success path: file lands under its final name, no .tmp residue") {
-    val dir = tmpDir()
+    val dir = tempDir("dlspec")
     val r = Downloader.download(
       Seq("http://host/a/20130401.export.CSV.zip"), dir, retries = 3,
       transport = _ => bytes("payload"), sleep = _ => ())
@@ -23,7 +23,7 @@ class DownloaderSpec extends AnyFunSuite {
   }
 
   test("existing file is skipped without touching the transport") {
-    val dir = tmpDir()
+    val dir = tempDir("dlspec")
     JFiles.write(Paths.get(dir, "x.zip"), "already".getBytes)
     var calls = 0
     val r = Downloader.download(Seq("http://h/x.zip"), dir, retries = 3,
@@ -34,7 +34,7 @@ class DownloaderSpec extends AnyFunSuite {
   }
 
   test("transient failures retry up to the bound, then succeed") {
-    val dir = tmpDir()
+    val dir = tempDir("dlspec")
     var calls = 0
     var slept = 0
     val r = Downloader.download(Seq("http://h/y.zip"), dir, retries = 3,
@@ -50,7 +50,7 @@ class DownloaderSpec extends AnyFunSuite {
   }
 
   test("permanent failure: reported, .tmp cleaned, other files unaffected") {
-    val dir = tmpDir()
+    val dir = tempDir("dlspec")
     // stream that fails MID-copy: a torn .tmp must never survive as final
     def torn(): InputStream = new InputStream {
       private var n = 0
@@ -71,6 +71,6 @@ class DownloaderSpec extends AnyFunSuite {
 
   test("retries must be >= 1") {
     intercept[IllegalArgumentException](
-      Downloader.download(Nil, tmpDir(), 0, _ => bytes("")))
+      Downloader.download(Nil, tempDir("dlspec"), 0, _ => bytes("")))
   }
 }

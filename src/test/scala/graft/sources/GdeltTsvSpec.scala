@@ -1,15 +1,15 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.schema.Gdelt
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files => JFiles, Paths}
 
-class GdeltTsvSpec extends SparkSpec {
+class GdeltTsvSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private lazy val dir = {
-    val d = JFiles.createTempDirectory("graft_dsv2").toString
+    val d = tempDir("graft_dsv2")
     def line(id: Long, day: String) = Gdelt.columns.map {
       case "GlobalEventID" => id.toString
       case "Day" => day
@@ -139,7 +139,7 @@ class GdeltTsvSpec extends SparkSpec {
     // r12 verdict #2: the archive layout carries each file's period in
     // its name — a pushed Day range must drop whole files at planning
     // time, before any task launches
-    val d = JFiles.createTempDirectory("graft_dsv2_prune").toString
+    val d = tempDir("graft_dsv2_prune")
     def line(id: Long, day: String) = Gdelt.columns.map {
       case "GlobalEventID" => id.toString
       case "Day" => day
@@ -182,7 +182,7 @@ class GdeltTsvSpec extends SparkSpec {
     // r12 verdict #7: past maxSplitBytes a file splits into line-aligned
     // byte ranges (LineRecordReader ownership convention), so one
     // multi-GB historical file never serializes onto a single task
-    val d = JFiles.createTempDirectory("graft_dsv2_split").toString
+    val d = tempDir("graft_dsv2_split")
     def line(id: Long) = Gdelt.columns.map {
       case "GlobalEventID" => id.toString
       case "Day" => "20130401"
@@ -233,7 +233,7 @@ class GdeltTsvSpec extends SparkSpec {
       Seq("1", "2"))
     // a NULL Day never satisfies a pushed range (SQL unknown → skipped):
     // the short row's Day is non-null here, so build one with a null Day
-    val d2 = JFiles.createTempDirectory("graft_dsv2_null").toString
+    val d2 = tempDir("graft_dsv2_null")
     val fields = Gdelt.columns.map {
       case "GlobalEventID" => "9"
       case "Day" => "" // empty field reads as SQL NULL

@@ -1,12 +1,13 @@
 package graft.sources
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files => JFiles, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 /** S5 extraction contract (utils/io.py:16-49): default/explicit target
   * dirs, returned file list, missing-archive error, zip-slip hardening. */
-class ZipSpec extends AnyFunSuite {
+class ZipSpec extends AnyFunSuite with TempDirs {
 
   private def mkZip(dir: String, name: String, entries: (String, String)*): String = {
     val p = Paths.get(dir, name)
@@ -20,11 +21,8 @@ class ZipSpec extends AnyFunSuite {
     p.toString
   }
 
-  private def tmpDir(): String =
-    JFiles.createTempDirectory("zipspec").toString
-
   test("extracts all file entries next to the archive by default") {
-    val dir = tmpDir()
+    val dir = tempDir("zipspec")
     val zip = mkZip(dir, "20130401.export.CSV.zip",
       "20130401.export.CSV" -> "1\t2\t3", "readme.txt" -> "hi")
     val extracted = Zip.unzip(zip)
@@ -34,7 +32,7 @@ class ZipSpec extends AnyFunSuite {
   }
 
   test("explicit extraction dir is created; nested entries keep structure") {
-    val dir = tmpDir()
+    val dir = tempDir("zipspec")
     val zip = mkZip(dir, "a.zip", "sub/inner.tsv" -> "x")
     val out = Paths.get(dir, "out", "deeper").toString
     val extracted = Zip.unzip(zip, Some(out))
@@ -48,7 +46,7 @@ class ZipSpec extends AnyFunSuite {
   }
 
   test("zip-slip entries are rejected") {
-    val dir = tmpDir()
+    val dir = tempDir("zipspec")
     val zip = mkZip(dir, "evil.zip", "../escape.txt" -> "pwn")
     intercept[SecurityException](Zip.unzip(zip, Some(Paths.get(dir, "out").toString)))
     assert(!JFiles.exists(Paths.get(dir, "escape.txt")))

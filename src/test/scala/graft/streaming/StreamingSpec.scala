@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.schema.Gdelt
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -10,10 +10,10 @@ import java.sql.Timestamp
 /** Streaming extension contract: incremental file ingest picks up only new
   * files across restarts; watermarked windowed counts; gap sessionization
   * closes sessions on gap and on watermark timeout. */
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
-  private lazy val workDir = JFiles.createTempDirectory("graft_stream").toString
+  private lazy val workDir = tempDir("graft_stream")
 
   private def writeTsv(name: String, ids: Seq[Long]): Unit = {
     val lines = ids.map { id =>
@@ -56,7 +56,7 @@ class StreamingSpec extends SparkSpec {
     // nothing new is a no-op (marker-skip); (3) a third run after a new
     // file lands picks up ONLY that file. The checkpoint WAL is the
     // transactional replacement for the marker files.
-    val base = JFiles.createTempDirectory("graft_an").toString
+    val base = tempDir("graft_an")
     JFiles.createDirectories(Paths.get(base, "in"))
     def tsv(name: String, ids: Seq[Long]): Unit = {
       val lines = ids.map { id =>

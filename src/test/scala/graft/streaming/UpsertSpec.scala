@@ -1,19 +1,18 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import java.nio.file.{Files => JFiles}
 import java.sql.Timestamp
 
 /** Keyed upsert sink: keep-latest semantics, idempotent replay, atomic
   * table swap, streaming drive via foreachBatch. */
-class UpsertSpec extends SparkSpec {
+class UpsertSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s"2024-01-01 $s:00")
 
   test("mergeLatest keeps the (ts, tieBreak)-max row per key and is idempotent") {
-    val dir = JFiles.createTempDirectory("graft_upsert").toString + "/t"
+    val dir = tempDir("graft_upsert") + "/t"
     val b1 = Seq((1L, ts("10:00"), 1L, "a"), (2L, ts("10:00"), 1L, "b"))
       .toDF("k", "ts", "seq", "v")
     Upsert.mergeLatest(b1, dir, "k", "ts", "seq")
@@ -34,7 +33,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("streaming drive: foreachBatch merges each micro-batch") {
-    val dir = JFiles.createTempDirectory("graft_upsert").toString
+    val dir = tempDir("graft_upsert")
     val mem = MemoryStream[(Long, Timestamp, Long, String)](spark)
     def run(): Unit =
       Upsert.upsertLatest(mem.toDF().toDF("k", "ts", "seq", "v"),

@@ -1,11 +1,9 @@
 package graft.util
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.etl.Versioned
 import graft.streaming.Upsert
 import org.apache.hadoop.fs.Path
-
-import java.nio.file.Files
 
 /** Failure injection for the atomic-swap family: simulate a crash at each
   * rename/flip boundary by performing exactly the operations the code
@@ -14,14 +12,11 @@ import java.nio.file.Files
   * exactly-once claims of the upsert/versioning sinks rest on these
   * boundaries.
   */
-class SwapFailureSpec extends SparkSpec {
+class SwapFailureSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def fs = new Path("/tmp").getFileSystem(
     spark.sparkContext.hadoopConfiguration)
-
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   private def writeTable(path: String, rows: Seq[(Long, String)]): Unit =
     rows.toDF("k", "v").write.mode("overwrite").parquet(path)
@@ -32,7 +27,7 @@ class SwapFailureSpec extends SparkSpec {
   // ---- Fs.swapInto ----
 
   test("swapInto crash between rename-out and rename-in: recover restores the original, re-swap completes") {
-    val root = tmpDir("graft_swap1")
+    val root = tempDir("graft_swap1")
     val cur = new Path(s"$root/table")
     val tmp = new Path(s"$root/table.tmp")
     val old = new Path(cur.toString + ".old")
@@ -52,7 +47,7 @@ class SwapFailureSpec extends SparkSpec {
   }
 
   test("swapInto crash between rename-in and .old cleanup: new data is live, stale .old is cleaned by the next swap") {
-    val root = tmpDir("graft_swap2")
+    val root = tempDir("graft_swap2")
     val cur = new Path(s"$root/table")
     val old = new Path(cur.toString + ".old")
     writeTable(cur.toString, Seq((1L, "old")))
@@ -75,7 +70,7 @@ class SwapFailureSpec extends SparkSpec {
   // ---- Versioned.commit pointer flip ----
 
   test("commit crash after data write, before pointer flip: readers stay on the previous version, recommit resumes") {
-    val root = tmpDir("graft_ver1")
+    val root = tempDir("graft_ver1")
     Versioned.commit(spark, root, Seq((1L, "a")).toDF("k", "v"))
     // crash point: v=1 directory fully written, _latest never touched
     Seq((2L, "b")).toDF("k", "v").write.mode("overwrite").parquet(s"$root/v=1")
@@ -88,7 +83,7 @@ class SwapFailureSpec extends SparkSpec {
   }
 
   test("commit crash between pointer delete and rename: _latest.tmp is the live pointer, reads and commits recover it") {
-    val root = tmpDir("graft_ver2")
+    val root = tempDir("graft_ver2")
     Versioned.commit(spark, root, Seq((1L, "a")).toDF("k", "v"))
     Versioned.commit(spark, root, Seq((2L, "b")).toDF("k", "v"))
     // crash point inside commit of v=2: data written, tmp written, live
@@ -110,7 +105,7 @@ class SwapFailureSpec extends SparkSpec {
   }
 
   test("commitIdempotent replay after a crash-before-flip performs the commit; replay after success is a no-op") {
-    val root = tmpDir("graft_ver3")
+    val root = tempDir("graft_ver3")
     assert(Versioned.commitIdempotent(spark, root, Seq((1L, "a")).toDF("k", "v"), 0L))
     // crash-before-flip of batch 1: data landed, pointer still at 0
     Seq((2L, "b")).toDF("k", "v").write.mode("overwrite").parquet(s"$root/v=1")
@@ -125,7 +120,7 @@ class SwapFailureSpec extends SparkSpec {
   // ---- Upsert.mergeLatest over a crashed swap ----
 
   test("mergeLatest onto a crash-torn table (.old only) recovers before merging; replaying the same batch is idempotent") {
-    val root = tmpDir("graft_ups1")
+    val root = tempDir("graft_ups1")
     val table = s"$root/dim"
     Seq((1L, 10L, "v1"), (2L, 10L, "v1")).toDF("k", "ts", "v")
       .write.parquet(table)
