@@ -68,7 +68,11 @@ object Session {
     "spark.sql.join.preferSortMergeJoin" -> "false",
     // inert except on a join of two bucketed tables with different bucket
     // counts — only q_eng_bucketed_join_coalesce (orders@16 ⋈ lineitem@32)
-    "spark.sql.bucketing.coalesceBucketsInJoin.enabled" -> "true")
+    "spark.sql.bucketing.coalesceBucketsInJoin.enabled" -> "true",
+    // graft_ SQL functions in this and every newSession() function registry
+    "spark.sql.extensions" -> "graft.functions.GraftExtensions",
+    // reads parquet TIMESTAMP(NANOS) as epoch-nanos long (see Tables.events)
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** Start (or join) the certified session at WARN logging. `tag` names
     * the per-PID warehouse, which is removed when the JVM exits. */

@@ -36,17 +36,16 @@ object Tables {
     *    cast to TimestampType is a wall-clock-preserving reinterpretation,
     *    which is exactly what DuckDB's `CAST(ts AS TIMESTAMP)` oracle sees.
     *  - parquet TIMESTAMP(NANOS) — the original fixture. Spark 4 rejects it
-    *    unless read as epoch-nanos long (legacy conf, set lazily here), then
-    *    truncated to micros. `DIV` keeps the arithmetic integral — a double
-    *    division would lose precision above 2^53 ns.
+    *    unless read as epoch-nanos long, then truncated to micros. `DIV`
+    *    keeps the arithmetic integral — a double division would lose
+    *    precision above 2^53 ns.
     *
     * Either way callers get a plain TimestampType(micros) `ts` column. The
-    * nanosAsLong conf is harmless for non-nanos files, so it is set before
-    * the read to make schema *inference itself* survive a nanos fixture. */
+    * nanos read needs `spark.sql.legacy.parquet.nanosAsLong=true`, a row of
+    * [[Session]]'s table; this loader leaves the session's conf alone. */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case _: TimestampType    => raw

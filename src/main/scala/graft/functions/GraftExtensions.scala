@@ -7,11 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SQL-surface registration for the graft custom expressions, so
   * `spark.sql("... graft_dot(a, b) ...")` works alongside the Column API.
   *
-  * Two entry points:
-  *   - cluster/config path: `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  *     (applied at session build via [[SparkSessionExtensions.injectFunction]]);
-  *   - programmatic path: [[GraftFunctions.register]] on a live session
-  *     (temp-function registry), used by tests and notebooks.
+  * Installed at session build by `spark.sql.extensions=graft.functions.GraftExtensions`,
+  * a row of [[graft.Session]]'s table (every `newSession()` gets them too).
+  * A session built elsewhere calls the idempotent [[GraftFunctions.register]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -89,10 +87,11 @@ object GraftFunctions {
       })
   )
 
-  /** Register all graft functions on a live session. */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
+  /** Register the graft functions the session's registry does not hold
+    * yet, so a call on a [[graft.Session]] replaces nothing. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    for ((name, _, builder) <- all if !registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+  }
 }

@@ -834,7 +834,6 @@ object AnalyticsQueries {
     // estimator per group, so the custom aggregate's update/merge/eval
     // path is hash-compared cross-engine, not just spec-tested
     Q("q_eng_kmv_agg", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.orders(s, d).createOrReplaceTempView("kmv_orders")
       s.sql(
         """SELECT o_orderpriority,
@@ -872,7 +871,6 @@ object AnalyticsQueries {
     // (the graft_hll / graft_kmv_distinct discipline). Sample rank error
     // is the standard O(1/√k); groups with ≤ k rows are EXACT.
     Q("q_eng_sketch_quantiles", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d).createOrReplaceTempView("qsk_docs")
       s.sql(
         """SELECT lang, qs.n_sample AS n_sample,
@@ -912,7 +910,6 @@ object AnalyticsQueries {
     // below. One extra scan + broadcast join; the sketch side reuses the
     // same one-pass aggregate.
     Q("q_eng_sketch_error", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d).createOrReplaceTempView("qse_docs")
       s.sql(
         """WITH sk AS (SELECT lang,

@@ -138,7 +138,6 @@ object DataQualityQueries {
     // the identical priority sample and rank reads next to the exact
     // aggregates.
     Q("q_eng_profile_sketch", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d).createOrReplaceTempView("prof_docs")
       s.sql(
         """SELECT lang, n, n_nulls, n_distinct, min_val, max_val,

@@ -167,7 +167,6 @@ object MonitorQueries {
     // hash-compared cross-engine, not just spec-tested (the KMV
     // discipline, q_eng_kmv_agg).
     Q("q_eng_hll_by_type", (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.events(s, d).createOrReplaceTempView("hll_events")
       s.sql(
         // every literal CAST AS DOUBLE: Spark SQL parses bare decimal

@@ -60,9 +60,8 @@ class FixtureSchemaSpec extends SparkSpec {
 
   for (sfDir <- sfs; (tbl, cols) <- expected.toSeq.sortBy(_._1)) {
     test(s"$tbl @ ${sfDir.split('/').last}: physical types match engine assumptions") {
-      // go through Tables.table (the real read path) so conf-dependent
-      // inference (nanosAsLong, NTZ inference) is exercised as queries see it
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // go through Tables.table (the real read path) under the certified
+      // session, so conf-dependent inference is exercised as queries see it
       val schema = Tables.table(spark, sfDir, tbl).schema
       val byName = schema.fields.map(f => f.name -> f.dataType).toMap
       for ((col, ok) <- cols) {

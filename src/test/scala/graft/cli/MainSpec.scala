@@ -39,14 +39,12 @@ class MainSpec extends SparkSpec with TempDirs {
 
   test("a CLI command runs on the caller's live session with its settings unchanged") {
     val key = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(key)
-    spark.conf.set(key, "7")
-    try {
+    withConf(key -> "7") {
       Main.main(Array("sample", "--in", eventsParquet, "--mode", "indexed",
         "-n", "10", "--seed", "7", "--out", s"$workDir/sample_conf"))
       assert(spark.conf.get(key) == "7")
       assert(spark.read.parquet(s"$workDir/sample_conf").count() == 10)
-    } finally spark.conf.set(key, before)
+    }
   }
 
   test("sample filtered+stratified: k per stratum, projected columns") {

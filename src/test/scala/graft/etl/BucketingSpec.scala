@@ -40,6 +40,9 @@ class BucketingSpec extends SparkSpec {
     assert(shuffles(joined) == 0,
       s"bucketed join planned ${shuffles(joined)} exchanges:\n" +
         joined.queryExecution.executedPlan)
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.contains("SortMergeJoin"), plan.take(2000))
+    assert(joined.count() > 0)
     val agg = Bucketing.readBucketed(s, "bk_lineitem")
       .groupBy("o_orderkey").agg(sum("l_quantity").as("q"))
     assert(shuffles(agg) == 0,

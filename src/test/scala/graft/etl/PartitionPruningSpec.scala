@@ -21,9 +21,7 @@ class PartitionPruningSpec extends SparkSpec with TempDirs {
     }.toDF("GlobalEventID", "Year", "MonthYear", "value")
 
   test("partition filters prune Year=/MonthYear= dirs; flat scan gets pushdown") {
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val dir = tempDir("graft_prune")
       val histDir = s"$dir/hist"
       val flatDir = s"$dir/flat"
@@ -67,6 +65,6 @@ class PartitionPruningSpec extends SparkSpec with TempDirs {
       val pushed = flatScan.toString
       assert(pushed.contains("PushedFilters") && pushed.contains("Year"),
         pushed.take(800))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
   }
 }

@@ -2,12 +2,12 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** SQL registration contract for the custom expressions. */
 class GraftFunctionsSpec extends SparkSpec {
 
   test("graft_dot usable from SQL after registration; matches Column API") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT graft_dot(array(1.0d, 2.0d, 3.0d), array(4.0d, 5.0d, 6.0d)) AS d")
       .collect()(0).getDouble(0)
@@ -27,8 +27,19 @@ class GraftFunctionsSpec extends SparkSpec {
         "graft_quantile_sketch"))
   }
 
-  test("graft_sign_bands usable from SQL; geometry must be literal") {
+  test("register on the certified session replaces no function") {
+    val registry = spark.sessionState.functionRegistry
+    def entries = GraftFunctions.all.map { case (name, _, _) =>
+      registry.lookupFunction(FunctionIdentifier(name))
+    }
+    val before = entries
+    assert(before.forall(_.isDefined), "graft.Session installs every graft function")
     GraftFunctions.register(spark)
+    // ExpressionInfo has reference equality: a replaced entry is a new object
+    assert(entries.zip(before).forall { case (a, b) => a.get eq b.get })
+  }
+
+  test("graft_sign_bands usable from SQL; geometry must be literal") {
     val r = spark.sql(
       "SELECT graft_sign_bands(array(1.0d, -2.0d, 3.0d, 0.5d), 42L, 2, 4, 4) AS p")
       .collect()(0).getSeq[Long](0)
@@ -45,7 +56,6 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("graft_dot propagates null array elements (codegen and interpreted)") {
-    GraftFunctions.register(spark)
     // codegen path (projection over a literal-free plan)
     import spark.implicits._
     val df = Seq(
@@ -63,12 +73,10 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("graft_dot arity is enforced") {
-    GraftFunctions.register(spark)
     intercept[Exception](spark.sql("SELECT graft_dot(array(1.0d))").collect())
   }
 
   test("graft_dot rejects non-double arrays at analysis time") {
-    GraftFunctions.register(spark)
     // int arrays would silently produce garbage via getDouble reinterpretation
     intercept[Exception](spark.sql("SELECT graft_dot(array(1, 2), array(3, 4))").collect())
     intercept[Exception](

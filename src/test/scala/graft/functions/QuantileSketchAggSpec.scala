@@ -10,8 +10,6 @@ import scala.util.Random
 class QuantileSketchAggSpec extends SparkSpec {
   import spark.implicits._
 
-  private def registered = { GraftFunctions.register(spark); spark }
-
   // unit-level handle on the aggregate: uid at ordinal 0, value at 1
   private def agg(k: Int) = QuantileSketchAgg(
     BoundReference(0, LongType, nullable = true),
@@ -46,11 +44,10 @@ class QuantileSketchAggSpec extends SparkSpec {
   }
 
   test("groups at or below k are EXACT: sketch quantiles == sorted-rank reads") {
-    val s = registered
     val rnd = new Random(11)
     val vals = (1L to 200L).map(i => (i, rnd.nextInt(100000).toLong))
     vals.toDF("uid", "v").createOrReplaceTempView("qs_small")
-    val row = s.sql(
+    val row = spark.sql(
       "SELECT graft_quantile_sketch(uid, v, 256) AS q FROM qs_small")
       .select("q.*").as[(Long, Long, Long, Long, Long, Long, Long)].head()
     val sorted = vals.map(_._2).sorted
@@ -60,19 +57,17 @@ class QuantileSketchAggSpec extends SparkSpec {
   }
 
   test("partition-layout invariance through real partial aggregation") {
-    val s = registered
     val vals = (1L to 5000L).map(i => (i, (i * 48271L) % 100000L))
     vals.toDF("uid", "v").coalesce(1).createOrReplaceTempView("qs_one")
     vals.toDF("uid", "v").repartition(32).createOrReplaceTempView("qs_many")
-    val a = s.sql("SELECT graft_quantile_sketch(uid, v, 128) AS q FROM qs_one")
+    val a = spark.sql("SELECT graft_quantile_sketch(uid, v, 128) AS q FROM qs_one")
       .select("q.*").collect().head
-    val b = s.sql("SELECT graft_quantile_sketch(uid, v, 128) AS q FROM qs_many")
+    val b = spark.sql("SELECT graft_quantile_sketch(uid, v, 128) AS q FROM qs_many")
       .select("q.*").collect().head
     assert(a == b, "sample must be a pure function of the input set")
   }
 
   test("JVM priority == the SQL md5 path (the cross-engine hash contract)") {
-    val s = registered
     // the sample the aggregate keeps at k=8 is exactly the bottom-8 uids
     // by the conv(substring(md5(uid),1,13),16,10) priority Spark computes
     val uids = (1L to 100L)
@@ -86,20 +81,19 @@ class QuantileSketchAggSpec extends SparkSpec {
     // mirror with the aggregate: value = uid, so every quantile read must
     // come from the identical 8-uid sample
     uids.map(i => (i, i)).toDF("uid", "v").createOrReplaceTempView("qs_hash")
-    val viaAgg = s.sql(
+    val viaAgg = spark.sql(
       "SELECT graft_quantile_sketch(uid, v, 8) AS q FROM qs_hash")
       .select("q.*").as[(Long, Long, Long, Long, Long, Long, Long)].head()
     assert(viaAgg == ((8L, at(10), at(25), at(50), at(75), at(90), at(99))))
   }
 
   test("GROUP BY cohort sketching and null handling") {
-    val s = registered
     val rows = (1L to 300L).map(i => (s"g${i % 3}", i, i * 3L)) :+
       (("g0", 9999L, -1L))
     rows.toDF("g", "uid", "v")
       .withColumn("v", when(col("uid") === 9999L, lit(null)).otherwise(col("v")))
       .createOrReplaceTempView("qs_groups")
-    val out = s.sql(
+    val out = spark.sql(
       """SELECT g, q.n_sample FROM
          (SELECT g, graft_quantile_sketch(uid, v, 512) AS q
           FROM qs_groups GROUP BY g) ORDER BY g""")

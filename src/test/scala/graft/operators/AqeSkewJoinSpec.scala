@@ -13,21 +13,16 @@ import org.apache.spark.sql.functions._
 class AqeSkewJoinSpec extends SparkSpec {
   import spark.implicits._
 
+  // broadcast off; the local fixture is small, so lower the skew thresholds
+  // until the hot partition qualifies (prod keeps the defaults)
+  private val skewConf = Seq(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "131072",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2")
+
   test("AQE splits the hot key's partition at runtime (skew=true in final plan)") {
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // local fixture is small, so lower the skew thresholds until the
-      // hot partition qualifies (prod keeps the defaults)
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "131072")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "65536")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
+    withConf(skewConf: _*) {
       val pad = "x" * 96
       val hot = spark.range(0, 200000).select(lit(0L).as("k"),
         concat(lit(pad), col("id").cast("string")).as("payload"))
@@ -43,9 +38,6 @@ class AqeSkewJoinSpec extends SparkSpec {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE must mark the skewed join:\n${plan.take(3000)}")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 
@@ -54,18 +46,7 @@ class AqeSkewJoinSpec extends SparkSpec {
     // salting for skew you predicted, AQE OptimizeSkewedJoin for skew
     // you didn't. They must compute the same relation, and the AQE path
     // must really have split (skew=true), or the "agreement" is vacuous.
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "131072")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "65536")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
+    withConf(skewConf: _*) {
       val pad = "x" * 96
       val hot = spark.range(0, 200000).select(lit(0L).as("k"),
         concat(lit(pad), col("id").cast("string")).as("payload"),
@@ -93,9 +74,6 @@ class AqeSkewJoinSpec extends SparkSpec {
         left, right, key = "k", saltFrom = Seq(col("rid")), buckets = 8))
       assert(salted == plainRows && salted.nonEmpty,
         "salted join diverged from the AQE skew-split plain join")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 }

@@ -46,10 +46,7 @@ class PackingSpec extends SparkSpec {
     // independently-planned range shuffles coalesce differently under a
     // small advisory partition size. The fix derives both passes from one
     // RDD, so this must both not throw and match the sequential reference.
-    val advisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val prev = spark.conf.getOption(advisoryKey)
-    spark.conf.set(advisoryKey, "65536")
-    try {
+    withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536") {
       val n = 4000
       // payload must be shuffle-incompressible (sha2 chain, not a repeated
       // literal) or both shuffles coalesce to one partition and the
@@ -64,11 +61,6 @@ class PackingSpec extends SparkSpec {
       val prefix = seq.scanLeft(0L)(_ + _)
       val expect = (0 until n).map(i => i.toLong -> prefix(i) / 64L).toMap
       assert(out == expect)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(advisoryKey, v)
-        case None    => spark.conf.unset(advisoryKey)
-      }
     }
   }
 

@@ -66,12 +66,14 @@ class NoGlobalWindowSpec extends SparkSpec {
     def hasFileScan(p: LogicalPlan): Boolean = p.collectFirst {
       case r @ (_: LogicalRelation | _: DataSourceV2ScanRelation) => r
     }.isDefined
-    // Building a query must leave the session's planner as it found it,
-    // so every later query and spec runs under the certified config.
-    // Tables.events sets its nanos read guard on first use: read it first.
-    Tables.events(spark, sf)
+    // Building a query must leave the session's planner and function
+    // registry as it found them, so every later query and spec runs under
+    // the certified config. ExpressionInfo compares by reference, so a
+    // function replaced under the same name shows up too.
+    val registry = spark.sessionState.functionRegistry
     def planner = (spark.experimental.extraOptimizations,
-      spark.experimental.extraStrategies, spark.conf.getAll)
+      spark.experimental.extraStrategies, spark.conf.getAll,
+      registry.listFunction().map(f => f -> registry.lookupFunction(f)).toMap)
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot(_._1.startsWith("q_stream_exec_"))
       .flatMap { case (name, fn) =>
@@ -80,7 +82,8 @@ class NoGlobalWindowSpec extends SparkSpec {
         val after = planner
         val changed = Option.when(after != before)(
           s"$name: changes the session's planner (rules ${after._1}, " +
-            s"strategies ${after._2}, conf ${after._3.toSet diff before._3.toSet})")
+            s"strategies ${after._2}, conf ${after._3.toSet diff before._3.toSet}, " +
+            s"functions ${(after._4.toSet diff before._4.toSet).map(_._1)})")
         changed.toSeq ++ plan.collect {
           case w: LogicalWindow
               if w.partitionSpec.isEmpty && !hasAgg(w.child) &&

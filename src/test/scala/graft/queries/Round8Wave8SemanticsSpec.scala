@@ -126,7 +126,6 @@ class Round8Wave8SemanticsSpec extends SparkSpec {
     // merge path: the same aggregate over an adversarial 64-partition
     // round-robin layout must be bitwise identical (update/merge order
     // independence — the property that makes the sketch mergeable)
-    graft.functions.GraftFunctions.register(spark)
     Tables.events(spark, sf).repartition(64)
       .createOrReplaceTempView("hll_events_64")
     val re = spark.sql(

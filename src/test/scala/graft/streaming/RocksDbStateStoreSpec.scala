@@ -4,7 +4,6 @@ import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
-import org.scalatest.BeforeAndAfterAll
 
 import java.sql.Timestamp
 
@@ -16,40 +15,18 @@ import java.sql.Timestamp
   * produce identical results — proving the operators depend only on the
   * GroupState/dedup/window contracts, not on provider internals.
   */
-class RocksDbStateStoreSpec extends SparkSpec with BeforeAndAfterAll {
+class RocksDbStateStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
   private val RocksDb =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private var defaultProvider: Option[String] = None
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    defaultProvider = spark.conf.getOption(ProviderKey)
-  }
-  override def afterAll(): Unit = {
-    defaultProvider match {
-      case Some(p) => spark.conf.set(ProviderKey, p)
-      case None => spark.conf.unset(ProviderKey)
-    }
-    super.afterAll()
-  }
-
-  /** Run `pipeline` to a memory sink under the given provider; collect. */
-  private def run(provider: Option[String], name: String)
-                 (pipeline: String => Set[Row]): Set[Row] = {
-    provider match {
-      case Some(p) => spark.conf.set(ProviderKey, p)
-      case None => spark.conf.unset(ProviderKey)
-    }
-    try pipeline(name)
-    finally spark.conf.unset(ProviderKey)
-  }
-
+  /** Run `pipeline` to a memory sink under the session's default (HDFS)
+    * provider, then under RocksDB; the two must collect the same rows. */
   private def bothProviders(label: String)(pipeline: String => Set[Row]): Unit = {
-    val hdfs = run(None, s"${label}_hdfs")(pipeline)
-    val rocks = run(Some(RocksDb), s"${label}_rocks")(pipeline)
+    val hdfs = pipeline(s"${label}_hdfs")
+    val rocks = withConf(ProviderKey -> RocksDb)(pipeline(s"${label}_rocks"))
     assert(hdfs.nonEmpty, s"$label: fixture must produce rows")
     assert(rocks == hdfs,
       s"$label: provider drift — only-hdfs: ${hdfs -- rocks}; only-rocks: ${rocks -- hdfs}")
