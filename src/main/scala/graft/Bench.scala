@@ -1,19 +1,21 @@
 package graft
 
 import org.json4s._
-import org.json4s.jackson.JsonMethods.{compact, parse, render}
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 import java.nio.file.{Files, Paths}
 import scala.collection.immutable.ListMap
 
 object Bench {
+  /** Timed runs per query, after its one untimed warmup. */
+  private val Runs = 3
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     val e2eStart = System.nanoTime()
     // local-iteration filter (unset, the whole suite is benched):
-    // comma-separated query names to re-measure after a targeted
-    // change without paying the whole-suite wall clock
+    // comma-separated query names to time after a targeted change
+    // without paying the whole-suite wall clock
     val suite = new Suite("bench", sfDir,
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet))
     val spark = suite.spark
@@ -21,19 +23,16 @@ object Bench {
     // machinery) with the flagship query on the smallest SF so the first
     // measured query doesn't absorb one-time SQL-engine initialization
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    // Self-labeling against machine contention (r7 verdict "What's wrong
-    // #4": the driver's recorded numbers ran 1.6–7.6× above a clean re-run
-    // because OTHER processes shared the box). Record the 1-minute system
-    // load average around each query so a contaminated run is
-    // distinguishable from a real regression without a judge re-bench:
-    // on this 32-core box a load far above ~32 while a query ran means
-    // the timing is suspect.
+    // Self-labeling against machine contention: record the 1-minute
+    // system load average as each query's timed runs finish, so a run
+    // that shared the box with other work is distinguishable from a real
+    // regression. A label is evidence, not a retry trigger: every row is
+    // measured the same way whatever the load.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     def loadAvg(): Double = osBean.getSystemLoadAverage // -1.0 if unsupported
     var loads = ListMap.empty[String, Double]
     val loadStart = loadAvg()
     var loadMax = loadStart
-    val loadThreshold = math.max(suite.cpus / 2.0, 8.0)
     def once(fn: Suite.Query): Double = {
       val t0 = System.nanoTime()
       // the noop sink evaluates EVERY output column of the exact plan
@@ -43,119 +42,32 @@ object Bench {
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9
     }
-    // Kept statistic (r10 verdict #3 — the ±15–30% machine-state swing
-    // between identical-code benches was the largest error bar in
-    // round-over-round perf judgment): timing noise on this box is
-    // STRICTLY ADDITIVE — contention, page-cache misses, and JIT only
-    // ever inflate a run — so the MIN of the timed iterations is the
-    // tightest upper bound on the clean time and the estimator whose
-    // variance shrinks fastest with k. This is the same reasoning the
-    // load-retry rule below already committed to ("the smaller median
-    // wins"); min-of-k just applies it per query from the start. The
-    // median is still recorded per query in bench_full.json ("medians")
-    // for continuity with pre-r11 artifacts.
+    // Kept statistic: timing noise on a shared box is additive —
+    // contention, page-cache misses and JIT only ever inflate a run — so
+    // the MIN of the timed runs is the tightest upper bound on the clean
+    // time. The median of the same runs is recorded beside it.
     var results = ListMap.empty[String, Double]
     var medians = ListMap.empty[String, Double]
-    // timed runs per query, to turn the summed Spark metrics into per-run ones
-    var timedRuns = Map.empty[String, Int].withDefaultValue(0)
-    // (min, median) of `iters` timed runs; throws on the first failing run
-    def measure(name: String, fn: Suite.Query): (Double, Double) = {
-      val times = suite.metered(name)(Seq.fill(iters)(once(fn))).sorted
-      timedRuns += name -> (timedRuns(name) + iters)
-      (times.head, times(times.size / 2))
-    }
     // per-query: one untimed warmup (absorbs plan compilation + shared-cache
-    // materialization), then min of `iters` timed runs — single-iteration
-    // numbers charged JIT/first-touch to whichever query ran first and made
-    // rounds incomparable (round-2 review: 36.6s reported for a 0.7s query).
-    // A failing query must surface as an error entry, never as a timing: the
-    // round-6 fixture break shipped 46 analysis errors as "healthy" ~0.06 s
-    // rows because failures were swallowed here. Failure during warmup skips
-    // the timed iterations (the plan won't suddenly start analyzing).
+    // materialization), then `Runs` timed runs — single-iteration numbers
+    // charged JIT/first-touch to whichever query ran first. A failing
+    // query must surface as an error entry, never as a timing: the first
+    // failing run (warmup or timed) ends the query and Suite records it.
     suite.run { (name, fn) =>
       once(fn)
-      val (kept, med) = measure(name, fn)
+      val times = suite.metered(name)(Seq.fill(Runs)(once(fn))).sorted
       val la = loadAvg()
       loads += (name -> la)
       if (la > loadMax) loadMax = la
-      results += (name -> kept)
-      medians += (name -> med)
+      results += (name -> times.head)
+      medians += (name -> times(Runs / 2))
     }
-    // Re-measure the `suspects` (recomputed before each of up to 2
-    // passes); the smaller kept statistic wins — contention only ever
-    // inflates a timing, so the smaller of two is the tighter upper bound
-    // on the clean time. A retry failure adds no error (ADVICE r9: the
-    // same name otherwise appears in both full_queries and errors and the
-    // FAILED banner fires for a query that has a valid number — the
-    // original row simply stands). The recorded load label must describe
-    // the pass that PRODUCED the kept number (ADVICE r9: relabeling with a
-    // rejected retry's lower load made the label describe a different run
-    // than the number), so it is only replaced when the retry is kept;
-    // `retriedKept` records per query which rows carry a retry-pass number
-    // at all, so a reader can tell first-pass timings from re-measured ones.
-    val fns = suite.queries.toMap
-    var retriedKept = Set.empty[String]
-    def remeasure(suspects: => Iterable[String])(onRetry: String => Unit): Unit =
-      for (_ <- 0 until 2; name <- suspects.toSeq) {
-        onRetry(name)
-        scala.util.Try(measure(name, fns(name))).foreach { case (kept2, med2) =>
-          if (kept2 < results(name)) {
-            results += (name -> kept2)
-            medians += (name -> med2)
-            loads += (name -> loadAvg())
-            retriedKept += name
-          }
-        }
-      }
-    // ACT on the load labels, don't just record them (r8 verdict: the
-    // committed map shipped 12.35 s for a verified-1.65 s query with only
-    // a footnote). Any row whose 1-min load exceeded ~cpus/2 is
-    // re-measured. Rows still above threshold after both passes stay
-    // labeled (the box never went quiet).
-    var retried = 0
-    remeasure(loads.collect { case (n, la) if la > loadThreshold => n }) { _ =>
-      retried += 1
-    }
-    // Drift ledger (r11 verdict #3): min-of-k cannot fix a contention
-    // window that spans all k timed runs of one query — BENCH_r11 shipped
-    // 6.46 s for a query the committed pair times at 0.89 s on identical
-    // code. The committed bench_full.json is a second, independent
-    // estimate of the clean time, so any kept min exceeding ~3× it (and
-    // by > 0.5 s absolutely, so millisecond rows can't trigger) is
-    // re-measured like a load suspect. The baseline is
-    // only trusted when its "sf" matches this run — a sf1mut bench
-    // compared against the committed sf0.1 pair would flag everything.
-    // Rows that triggered land in `drift_retried`; rows STILL above the
-    // trigger after both passes land in `drift_flagged` (either a real
-    // regression or a box that never went quiet — the reader decides with
-    // the load labels).
-    val baselinePath =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "bench_full.json")
-    val baseline: Map[String, Double] = try {
-      val j = parse(new String(Files.readAllBytes(Paths.get(baselinePath)), "UTF-8"))
-      if (j \ "sf" != JString(sfDir)) Map.empty
-      else (j \ "full_queries") match {
-        case JObject(fields) => fields.collect {
-          case (k, JDouble(v)) => k -> v
-          case (k, JInt(v)) => k -> v.toDouble
-          case (k, JDecimal(v)) => k -> v.toDouble
-        }.toMap
-        case _ => Map.empty
-      }
-    } catch { case _: Throwable => Map.empty }
-    def drifting(n: String, v: Double): Boolean =
-      baseline.get(n).exists(b => v > 3.0 * b && v - b > 0.5)
-    var driftRetried = Set.empty[String]
-    remeasure(results.collect { case (n, v) if drifting(n, v) => n })(driftRetried += _)
-    val driftFlagged =
-      results.collect { case (n, v) if drifting(n, v) => n }.toSeq.sorted
     val loadEnd = loadAvg()
     // shared-memo build ledger: memo materialization is timed inside
     // QueryCaches (forced at first touch, during some query's untimed
     // warmup), so per-query rows measure post-memo work only and the
     // build cost is attributed explicitly here instead of to whichever
-    // query ran first (r8: q_eng_bfs_hops 7.9 s standalone vs 2.9 s
-    // in-suite was exactly this artifact).
+    // query ran first.
     val sharedBuilds = graft.queries.QueryCaches.sharedBuilds
     val metrics = suite.close()
     val e2eWall = (System.nanoTime() - e2eStart) / 1e9
@@ -164,51 +76,39 @@ object Bench {
       JDecimal(BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP))
     def nums(kv: Iterable[(String, Double)]): JObject =
       JObject(kv.map { case (k, v) => k -> num(v) }.toList)
-    def strs(names: Iterable[String]): JArray = JArray(names.map(JString).toList)
     def json(fields: (String, JValue)*): String = compact(render(JObject(fields: _*)))
     val errorsJson = JObject(errors.map { case (k, v) => k -> JString(v) }.toList)
     val total = results.values.sum
-    // The driver captures only the last ~4 KB of output, and at 111 queries
-    // the full per-query map alone exceeds that (BENCH_r03/r04 "parsed":
-    // null — the line was cut from the front). So: full map first on a line
-    // the driver's {"metric" match skips, then a size-bounded parseable
-    // final line — total + the 20 slowest queries (the ones perf review
-    // reads) + the suite count. ~800 B regardless of suite growth.
+    // A bounded tail capture of the output keeps only the last ~4 KB, and
+    // the full per-query map alone exceeds that. So: full map first on a
+    // line a {"metric" match skips, then a size-bounded parseable final
+    // line — total + the 20 slowest queries + the suite count, ~800 B
+    // regardless of suite growth.
     println(json("full_queries" -> nums(results), "errors" -> errorsJson,
       "sf" -> JString(sfDir)))
-    // also persist the full map as a file artifact — the driver's bounded
-    // tail capture keeps only the slowest 20, so round-over-round diffs of
-    // all queries need a committed file. The DEFAULT path is deliberately
-    // NOT the committed bench_full.json (r10 verdict "What's wrong #2":
-    // the driver's own bench run silently overwrote the clean committed
-    // artifact); promoting a clean run to bench_full.json is an explicit
-    // SPARK_GRAFT_BENCH_OUT=bench_full.json act.
+    // also persist the full map as a file artifact, for diffs of every
+    // query between runs. The default path is deliberately not the
+    // committed bench_full.json, so a routine run never overwrites it;
+    // promoting a run is an explicit SPARK_GRAFT_BENCH_OUT=bench_full.json.
     val outFile =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full_latest.json")
-    // "load" = 1-min system load average sampled as each query's timed
-    // runs finished (after the load-retry passes, the label of the KEPT
-    // measurement); "load_summary" bounds the whole run; "retried" counts
-    // re-measures triggered by load > threshold; "retried_kept" lists the
-    // queries whose committed number came from a retry pass (their load
-    // label describes that retry); "shared_builds" is the per-key build
-    // ledger (seconds, "key@sfLeaf") of every QueryCaches entry — cached
-    // frames, the stream_in/stream_exec/stream_append/gdelt_tsv scratch
-    // dirs, the bucketed/bucketed32 tables and the doc_count/vec_count
-    // counts — per-query rows are post-memo only; "stat" names the kept statistic and "medians" preserves the
-    // per-query median-of-iters for continuity with pre-r11 artifacts;
-    // "drift_retried"/"drift_flagged" are the committed-baseline drift
-    // ledger (triggered / still-above-trigger after retries);
-    // "memo_evicted" lists the memo keys the lifetime rule released;
-    // "metrics" holds each query's Spark work per timed run (jobs,
-    // stages, tasks, task run/CPU/GC seconds, shuffle and spill bytes) —
-    // the per-layer split of its row, from every timed run, never the
-    // warmup; "e2e_wall" is the wall clock a user pays for the whole run,
-    // from suite construction (session start) to close, shared-memo builds,
-    // warmups and re-measures included — "total" sums only the kept rows.
-    // Schema note for the artifact: {full_queries, medians, stat, errors,
-    // load, load_summary, shared_builds, retried, retried_kept,
-    // drift_retried, drift_flagged, memo_evicted, metrics, total,
-    // e2e_wall, n_queries, failed, sf}.
+    // Artifact schema: {full_queries, medians, stat, errors, load,
+    // load_summary, shared_builds, memo_evicted, metrics, total, e2e_wall,
+    // n_queries, failed, sf}. "full_queries" is each query's min of its
+    // `Runs` timed runs ("stat"), "medians" their median; "load" is the
+    // 1-min system load average sampled as each query's timed runs
+    // finished, "load_summary" its start/end/max over the run;
+    // "shared_builds" is the per-key build ledger (seconds, "key@sfLeaf")
+    // of every QueryCaches entry — cached frames, the stream_in/
+    // stream_exec/stream_append/gdelt_tsv scratch dirs, the bucketed/
+    // bucketed32 tables and the doc_count/vec_count counts — so per-query
+    // rows are post-memo only; "memo_evicted" lists the memo keys the
+    // lifetime rule released; "metrics" holds each query's Spark work per
+    // timed run (jobs, stages, tasks, task run/CPU/GC seconds, shuffle and
+    // spill bytes), never the warmup; "e2e_wall" is the wall clock a user
+    // pays for the whole run, from suite construction (session start) to
+    // close, shared-memo builds and warmups included — "total" sums only
+    // the rows.
     val loadSummary = Seq("start" -> loadStart, "end" -> loadEnd, "max" -> loadMax)
     val sorted = results.toSeq.sortBy(_._1)
     // a failed write is reported (path + error on stderr, non-zero exit
@@ -220,15 +120,11 @@ object Bench {
       "stat" -> JString("min"),
       "errors" -> errorsJson,
       "load" -> nums(loads.toSeq.sortBy(_._1)),
-      "load_summary" -> nums(loadSummary :+ ("retry_threshold" -> loadThreshold)),
+      "load_summary" -> nums(loadSummary),
       "shared_builds" -> nums(sharedBuilds.toSeq.sortBy(_._1)),
-      "retried" -> JInt(retried),
-      "retried_kept" -> strs(retriedKept.toSeq.sorted),
-      "drift_retried" -> strs(driftRetried.toSeq.sorted),
-      "drift_flagged" -> strs(driftFlagged),
-      "memo_evicted" -> strs(suite.evicted),
+      "memo_evicted" -> JArray(suite.evicted.map(JString).toList),
       "metrics" -> JObject(sorted.map { case (n, _) =>
-        n -> nums(metrics(n).map { case (k, v) => k -> v / timedRuns(n) })
+        n -> nums(metrics(n).map { case (k, v) => k -> v / Runs })
       }.toList),
       "total" -> num(total),
       "e2e_wall" -> num(e2eWall),
@@ -240,9 +136,7 @@ object Bench {
       s"BENCH: could not write ${new java.io.File(outFile).getAbsolutePath}: $e"))
     println(json("metric" -> JString("total"), "value" -> num(total),
       "unit" -> JString("sec"), "n_queries" -> JInt(results.size),
-      "failed" -> JInt(errors.size), "retried" -> JInt(retried),
-      "drift_retried" -> JInt(driftRetried.size),
-      "drift_flagged" -> strs(driftFlagged),
+      "failed" -> JInt(errors.size),
       "load_summary" -> nums(loadSummary),
       "queries" -> nums(results.toSeq.sortBy(-_._2).take(20)),
       "sf" -> JString(sfDir)))

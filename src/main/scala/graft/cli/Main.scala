@@ -153,7 +153,7 @@ object Main {
   /** `dedup --in DIR... --by c1,c2 [--tiebreak col] --out DIR`: exact
     * row-level dedup — keep one row per `--by` key, the one with the
     * smallest `--tiebreak` value (default: first --by column) so re-runs
-    * are deterministic. One rank window over a hash exchange on the key. */
+    * are deterministic. [[Samplers.perGroup]] with k = 1. */
   private def dedup(spark: SparkSession, flags: Flags): Unit = {
     val df = spark.read.parquet(flags.reqList("in"): _*)
     val by = flags.req("by").split(',').toSeq
@@ -161,11 +161,7 @@ object Main {
     require(unknown.isEmpty, s"Unknown columns: ${unknown.mkString(", ")}")
     val tiebreak = flags.get("tiebreak").getOrElse(by.head)
     require(df.columns.contains(tiebreak), s"Unknown columns: $tiebreak")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(by.map(col): _*).orderBy(col(tiebreak))
-    val kept = df
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
+    val kept = Samplers.perGroup(df, by.map(col), 1, SampleOrder.By(Seq(col(tiebreak))))
     val out = flags.req("out")
     kept.write.mode("overwrite").parquet(out)
     println(s"dedup: wrote $out")

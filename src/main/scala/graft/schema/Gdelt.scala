@@ -58,15 +58,6 @@ object Gdelt {
   val rawSchema: StructType =
     StructType(columns.map(StructField(_, StringType, nullable = true)))
 
-  /** Post-conversion schema: coerced doubles + long date-ints + strings. */
-  val typedSchema: StructType = StructType(columns.map { c =>
-    val dt: DataType =
-      if (intColumns.contains(c)) LongType
-      else if (numericColumns.contains(c)) DoubleType
-      else StringType
-    StructField(c, dt, nullable = true)
-  })
-
   /** Default filter-stage check columns (settings.example.yaml:153-165). */
   val defaultFilterColumns: Seq[String] = Seq(
     "GlobalEventID", "Actor1Name", "Actor2Name", "QuadClass",

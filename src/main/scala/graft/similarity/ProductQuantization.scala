@@ -111,8 +111,10 @@ object ProductQuantization {
               queryMaxId: Long, m: Int, subDim: Int, ksub: Int, k: Int): DataFrame = {
     val (codes, dt) = encode(emb, idCol, vecCol, queryMaxId, m, subDim, ksub)
     val w = Window.partitionBy(col("qid")).orderBy(col("adist_micro2"), col("nid"))
-    codes.join(broadcast(dt),
-        codes("m") === dt("m") && codes("code") === dt("cid"))
+    // codes and dt share one lineage: rename dt's `m` so the key is two
+    // distinct columns, not a self-comparison left to the self-join rewrite
+    codes.join(broadcast(dt.withColumnRenamed("m", "dm")),
+        col("m") === col("dm") && col("code") === col("cid"))
       .where(col("qid") =!= col("id"))
       .groupBy(col("qid"), col("id").as("nid"))
       .agg(sum(col("qd2q")).as("adist_micro2"))

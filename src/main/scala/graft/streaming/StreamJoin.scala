@@ -63,21 +63,4 @@ object StreamJoin {
         "leftOuter")
       .drop(rk)
   }
-
-  /** Stream-static enrichment: left-join a static dimension onto a
-    * stream — the lookup pattern (event → user segment / product
-    * attributes) that needs NO state store: the dimension broadcasts to
-    * every task and Spark re-resolves the static side each micro-batch,
-    * so a slowly-changing dimension file is picked up on its next write.
-    * Contrast with [[intervalJoin]], whose per-side watermark state this
-    * join never allocates. */
-  def enrich(stream: DataFrame, dim: DataFrame, key: String,
-             dimCols: Seq[String]): DataFrame = {
-    require(dim.columns.contains(key), s"dimension needs key column '$key'")
-    val clashes = dimCols.filter(stream.columns.contains)
-    require(clashes.isEmpty,
-      s"dimension columns ${clashes.mkString(",")} collide with stream columns")
-    stream.join(broadcast(dim.select((key +: dimCols).map(col): _*)),
-      Seq(key), "left")
-  }
 }

@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs: one per suite, the certified
-  * [[Session]] at test size (4 threads over sf0.001). */
+/** Shared local session for specs: the certified [[Session]] at test size
+  * (4 threads over sf0.001), started once per test JVM. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val sf: String = "/root/testdata/sf0.001"
+  lazy val sf: String = SparkSpec.sf
 
-  lazy val spark: SparkSession = Session.start(4, sf, "spec")
+  lazy val spark: SparkSession = SparkSpec.spark
 
   /** Run `body` with the shared session's conf `kv` set, then restore each
     * key's old value, or unset a key that had none. */
@@ -21,4 +21,10 @@ trait SparkSpec extends AnyFunSuite {
       case (k, None)    => spark.conf.unset(k)
     }
   }
+}
+
+object SparkSpec {
+  val sf: String = "/root/testdata/sf0.001"
+
+  lazy val spark: SparkSession = Session.start(4, sf, "spec")
 }

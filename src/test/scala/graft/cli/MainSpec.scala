@@ -166,6 +166,19 @@ class MainSpec extends SparkSpec with TempDirs {
       "dedup", "--in", s"$dir/in", "--out", s"$dir/x")))
   }
 
+  test("dedup: an input column named __rn survives with its values") {
+    import spark.implicits._
+    val dir = tempDir("graft_dedup_rn_cli")
+    Seq((1L, 10L, "a"), (1L, 5L, "b"), (2L, 7L, "c"))
+      .toDF("k", "seq", "__rn").write.parquet(s"$dir/in")
+    Main.main(Array("dedup", "--in", s"$dir/in", "--by", "k",
+      "--tiebreak", "seq", "--out", s"$dir/out"))
+    val out = spark.read.parquet(s"$dir/out")
+    assert(out.columns.toSeq == Seq("k", "seq", "__rn"))
+    assert(out.select("k", "__rn").as[(Long, String)].collect().toMap ==
+      Map(1L -> "b", 2L -> "c"))
+  }
+
   test("compact: merges small files through the CLI") {
     val dir = tempDir("graft_compact_cli")
     spark.range(1000).toDF("id").repartition(8).write.parquet(s"$dir/t")

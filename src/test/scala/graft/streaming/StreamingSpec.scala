@@ -196,25 +196,6 @@ class StreamingSpec extends SparkSpec with TempDirs {
     q.stop()
   }
 
-  test("stream-static enrich: broadcast lookup, no state store allocated") {
-    val mem = MemoryStream[(Long, Double)](spark)
-    val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "segment")
-    val out = StreamJoin.enrich(
-      mem.toDF().toDF("user_id", "value"), dim, "user_id", Seq("segment"))
-    val q = out.writeStream.format("memory").queryName("enriched")
-      .outputMode("append").start()
-    mem.addData((1L, 10.0), (2L, 5.0), (9L, 1.0)) // 9 has no dim row
-    q.processAllAvailable()
-    val rows = spark.table("enriched").select("user_id", "value", "segment")
-      .as[(Long, Double, Option[String])].collect().toSet
-    assert(rows == Set((1L, 10.0, Some("gold")), (2L, 5.0, Some("basic")),
-      (9L, 1.0, None)), "left semantics: unmatched stream rows survive")
-    // the whole point vs a stream-stream join: zero stateful operators
-    assert(q.lastProgress.stateOperators.isEmpty,
-      "stream-static join must not allocate a state store")
-    q.stop()
-  }
-
   test("sessionize: gap closes a session; watermark timeout closes the last one") {
     val mem = MemoryStream[SessionEvent](spark)
     val sessions = Sessionize.sessions(
