@@ -1,11 +1,11 @@
 package graft.cli
 
 import graft.dsl.FilterDsl
-import graft.etl.{Convert, FilterStage}
+import graft.etl.{Convert, FilterStage, Layout}
 import graft.sample.Samplers
 import graft.sample.Samplers.SampleOrder
 import graft.sources.Files
-import graft.util.Config
+import graft.util.{Config, ParquetFooter}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.time.LocalDate
@@ -111,7 +111,7 @@ object Main {
 
   private def sample(spark: SparkSession, flags: Flags): Unit = {
     val cfg = config(flags)
-    val df = spark.read.parquet(flags.reqList("in"): _*)
+    val df = ParquetFooter.read(spark, flags.reqList("in"): _*)
     val seed = flags.get("seed").map(_.toLong).getOrElse(cfg.defaultSeed)
     val n = flags.get("n").map(_.toInt).getOrElse(cfg.defaultN)
     val projected = flags.getList("columns").map(_.flatMap(_.split(','))) match {
@@ -155,7 +155,7 @@ object Main {
     * smallest `--tiebreak` value (default: first --by column) so re-runs
     * are deterministic. [[Samplers.perGroup]] with k = 1. */
   private def dedup(spark: SparkSession, flags: Flags): Unit = {
-    val df = spark.read.parquet(flags.reqList("in"): _*)
+    val df = ParquetFooter.read(spark, flags.reqList("in"): _*)
     val by = flags.req("by").split(',').toSeq
     val unknown = by.filterNot(df.columns.contains)
     require(unknown.isEmpty, s"Unknown columns: ${unknown.mkString(", ")}")
@@ -168,10 +168,12 @@ object Main {
   }
 
   /** `compact --in DIR [--target-bytes N]`: bin-pack a parquet directory's
-    * small files (default target 128 MiB per output file). */
+    * small files (default target `Layout.TargetFileBytes`, 128 MiB per
+    * output file, the size the ETL sinks write). */
   private def compactCmd(spark: SparkSession, flags: Flags): Unit = {
-    val target = flags.get("target-bytes").map(_.toLong).getOrElse(128L * 1024 * 1024)
-    val (before, after) = graft.etl.Layout.compact(spark, flags.req("in"), target)
+    val target = flags.get("target-bytes").map(_.toLong)
+      .getOrElse(Layout.TargetFileBytes)
+    val (before, after) = Layout.compact(spark, flags.req("in"), target)
     println(s"compact: files_before=$before files_after=$after")
   }
 
@@ -185,7 +187,7 @@ object Main {
     * set × corpus scan), `lsh` the banded-candidates scale path. */
   private def annCmd(spark: SparkSession, flags: Flags): Unit = {
     import graft.similarity.Similarity
-    val df = spark.read.parquet(flags.req("in"))
+    val df = ParquetFooter.read(spark, flags.req("in"))
     val idCol = flags.get("id-col").getOrElse("vec_id")
     val vecCol = flags.get("vec-col").getOrElse("embedding")
     val unknown = Seq(idCol, vecCol).filterNot(df.columns.contains)
@@ -225,7 +227,7 @@ object Main {
   }
 
   private def manifestCmd(spark: SparkSession, flags: Flags): Unit = {
-    val m = graft.etl.Layout.manifest(spark, flags.req("in"), flags.req("key"))
+    val m = Layout.manifest(spark, flags.req("in"), flags.req("key"))
     flags.get("out") match {
       case Some(out) => m.write.mode("overwrite").parquet(out)
       case None      => ()
@@ -237,8 +239,8 @@ object Main {
     * CDC changeset (I/U/D rows) between two keyed parquet snapshots
     * (ChangeData.snapshotDiff). */
   private def diffCmd(spark: SparkSession, flags: Flags): Unit = {
-    val prev = spark.read.parquet(flags.req("prev"))
-    val next = spark.read.parquet(flags.req("next"))
+    val prev = ParquetFooter.read(spark, flags.req("prev"))
+    val next = ParquetFooter.read(spark, flags.req("next"))
     val key = flags.req("key")
     val compare = flags.req("compare").split(',').toSeq
     val unknown = (key +: compare).filterNot(c =>
@@ -257,8 +259,8 @@ object Main {
     * `--delete-when-equals` drops matched rows whose SOURCE column equals
     * the literal. Refuses mismatched schemas before any job starts. */
   private def mergeCmd(spark: SparkSession, flags: Flags): Unit = {
-    val target = spark.read.parquet(flags.req("target"))
-    val source = spark.read.parquet(flags.req("source"))
+    val target = ParquetFooter.read(spark, flags.req("target"))
+    val source = ParquetFooter.read(spark, flags.req("source"))
     val keys = flags.req("key").split(',').toSeq
     val unknown = keys.filterNot(k =>
       target.columns.contains(k) && source.columns.contains(k))
@@ -288,7 +290,7 @@ object Main {
     * with `n_tokens` and `bin` columns. */
   private def prepare(spark: SparkSession, flags: Flags): Unit = {
     import graft.text.TextFunctions
-    val df = spark.read.parquet(flags.reqList("in"): _*)
+    val df = ParquetFooter.read(spark, flags.reqList("in"): _*)
     Seq("doc_id", "text").foreach(c =>
       require(df.columns.contains(c), s"prepare requires a '$c' column"))
     val minQ = flags.get("min-quality").map(_.toDouble).getOrElse(0.5)
@@ -378,24 +380,25 @@ object Main {
       df.select(Gdelt.columns.map(c =>
         if (Gdelt.intColumns.contains(c)) col(c).cast("long").as(c)
         else col(c)): _*)
+    def read(dir: String) = ParquetFooter.read(spark, dir)
     val sides =
-      (if (daily.nonEmpty) Seq(dayRange(spark.read.parquet(flatDir))) else Nil) ++
+      (if (daily.nonEmpty) Seq(dayRange(read(flatDir))) else Nil) ++
       (if (monthly.nonEmpty || yearly.nonEmpty)
-        Seq(prunedHist(spark.read.parquet(histDir))) else Nil)
+        Seq(prunedHist(read(histDir))) else Nil)
     val unioned = sides.map(aligned).reduceOption(_.unionByName(_)).getOrElse(
       throw new IllegalArgumentException("pipeline: no recognized input files"))
 
     val checkCols = flags.get("check-cols").map(_.split(',').toSeq)
       .getOrElse(cfg.filterColumns)
-    FilterStage.dropNullRows(unioned, checkCols)
+    Layout.sized(FilterStage.dropNullRows(unioned, checkCols))
       .write.mode("overwrite").option("compression", "snappy")
       .parquet(s"$outBase/filtered")
-    val filtered = spark.read.parquet(s"$outBase/filtered")
+    val filtered = read(s"$outBase/filtered")
     val perDay = flags.get("per-day").map(_.toInt).getOrElse(cfg.defaultPerDay)
     val seed = flags.get("seed").map(_.toLong).getOrElse(cfg.defaultSeed)
     Samplers.daily(filtered, col("Day"), perDay, sampleOrder(filtered, seed))
       .write.mode("overwrite").parquet(s"$outBase/sample")
-    val sampled = spark.read.parquet(s"$outBase/sample").count()
+    val sampled = read(s"$outBase/sample").count()
     println(s"pipeline: files=${files.size} daily=${daily.size} " +
       s"monthly=${monthly.size} yearly=${yearly.size} " +
       s"filtered_rows=${filtered.count()} sampled=$sampled")

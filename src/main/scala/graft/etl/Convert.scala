@@ -63,19 +63,21 @@ object Convert {
   /** Flat write: append to the snappy parquet dataset
     * (converter.py:238-262). Append, not overwrite: the flat dataset
     * accumulates days across runs; idempotency comes from the `.done`
-    * markers in [[run]], never from clobbering previously converted data. */
+    * markers in [[run]], never from clobbering previously converted data.
+    * Files are sized by [[Layout.sized]]. */
   def writeFlat(df: DataFrame, outDir: String): Unit =
-    df.write.mode("append").option("compression", "snappy").parquet(outDir)
+    Layout.sized(df).write.mode("append").option("compression", "snappy")
+      .parquet(outDir)
 
   /** Hive-partitioned historical write (converter.py:267-313): drop rows
     * with null partition keys, then `partitionBy` — Spark emits the same
     * `col=val/` directory tree the reference builds by hand with a pandas
-    * groupby loop. */
+    * groupby loop. Files are sized by [[Layout.sized]]. */
   def writeHistorical(df: DataFrame, histDir: String, fileType: String,
                       rules: Map[String, Seq[String]] = Gdelt.partitionRules): Unit = {
     val partCols = rules.getOrElse(fileType,
       throw new IllegalArgumentException(s"No partition rule for file type '$fileType'"))
-    df.na.drop("any", partCols)
+    Layout.sized(df.na.drop("any", partCols))
       .write.mode("append")
       .option("compression", "snappy")
       .partitionBy(partCols: _*)

@@ -28,15 +28,18 @@ object FilterStage {
   }
 
   /** Run the stage: read → filter → write, returning
-    * (rowsBefore, rowsAfter) from one observed pass over the data. */
+    * (rowsBefore, rowsAfter) from one observed pass over the data — one
+    * Spark job: the read takes its schema from a footer
+    * ([[graft.util.ParquetFooter]]) and the files are sized by
+    * [[Layout.sized]]. */
   def run(spark: SparkSession, inDirs: Seq[String], outDir: String,
           checkCols: Seq[String]): (Long, Long) = {
-    val df = spark.read.parquet(inDirs: _*)
+    val df = graft.util.ParquetFooter.read(spark, inDirs: _*)
     val obs = Observation("filter_retention")
     val observed = df.observe(obs, count(lit(1)).as("rows_before"))
     val filtered = dropNullRows(observed, checkCols)
     val obsAfter = Observation("filter_kept")
-    filtered.observe(obsAfter, count(lit(1)).as("rows_after"))
+    Layout.sized(filtered.observe(obsAfter, count(lit(1)).as("rows_after")))
       .write.mode("overwrite").option("compression", "snappy").parquet(outDir)
     val before = obs.get("rows_before").asInstanceOf[Long]
     val after = obsAfter.get("rows_after").asInstanceOf[Long]

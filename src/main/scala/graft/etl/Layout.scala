@@ -20,8 +20,39 @@ import org.apache.spark.sql.{Column, DataFrame}
   * only serves the leading one): a z-range contains each dimension's range
   * at ~√(selectivity) — the standard multi-dimensional layout trick
   * (Z-ordering), implemented as pure integer Column algebra.
+  *
+  * [[sized]] is the file-size rule every GDELT ETL sink writes through
+  * (Convert's flat and Hive writes, the filter stage's write): the read
+  * split size (`spark.sql.files.maxPartitionBytes`, 512 KB in the
+  * certified session) sets scan parallelism, not output file size, so a
+  * sink coalesces to `max(defaultParallelism, ⌈planned bytes /
+  * TargetFileBytes⌉)` partitions before it writes. [[compact]] bins to
+  * the same constant with the same ceiling rule.
   */
 object Layout {
+
+  /** Target output file size of the ETL sinks and of [[compact]]. */
+  val TargetFileBytes: Long = 128L * 1024 * 1024
+
+  /** Files that hold `bytes` at `targetBytes` each: ⌈bytes / targetBytes⌉,
+    * at least `floor`. */
+  def fileCount(bytes: BigInt, floor: Int,
+                targetBytes: Long = TargetFileBytes): Int =
+    ((bytes + targetBytes - 1) / targetBytes).max(floor).min(Int.MaxValue).toInt
+
+  /** `df` coalesced to [[fileCount]] of its planned size (the optimized
+    * plan's `sizeInBytes`) with `defaultParallelism` as the floor, so a
+    * sink writes one file per core at small scale and ~128 MiB files at
+    * large scale, however finely its input was split. Returns `df` as it
+    * is when the plan cannot size itself (the `defaultSizeInBytes`
+    * placeholder); a frame with fewer partitions keeps its own count,
+    * as `coalesce` never adds partitions. */
+  def sized(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (bytes >= spark.sessionState.conf.defaultSizeInBytes) df
+    else df.coalesce(fileCount(bytes, spark.sparkContext.defaultParallelism))
+  }
 
   /** Range-partition + in-partition sort + parquet write: `targetFiles`
     * files with disjoint sorted key ranges (Spark's range partitioner
@@ -51,8 +82,7 @@ object Layout {
     graft.util.Fs.recover(fs, cur)
     val files = fs.listStatus(cur).filter(f =>
       f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val total = files.map(_.getLen).sum
-    val n = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
+    val n = fileCount(files.map(_.getLen).sum, 1, targetBytes)
     if (n >= files.length) return (files.length, files.length)
     val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
     spark.read.parquet(path).coalesce(n)
@@ -74,37 +104,6 @@ object Layout {
       .groupBy(input_file_name().as("file"))
       .agg(min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
         count(lit(1)).cast("long").as("n_rows"))
-
-  /** Sort-preserving compaction: where [[compact]]'s shuffle-free
-    * `coalesce` merges arbitrary partitions (file key ranges widen and
-    * min/max skipping degrades), this variant re-range-partitions on the
-    * cluster key while bin-packing — post-compaction files keep disjoint
-    * sorted ranges, so the manifest/row-group pruning that motivated
-    * [[writeSorted]] survives every compaction wave. Same atomic
-    * two-rename swap. Returns (filesBefore, filesAfter). */
-  def compactSorted(spark: org.apache.spark.sql.SparkSession, path: String,
-                    sortCols: Seq[String], targetBytes: Long): (Int, Int) = {
-    require(sortCols.nonEmpty, "need at least one sort column")
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val cur = new org.apache.hadoop.fs.Path(path)
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.util.Fs.recover(fs, cur)
-    val files = fs.listStatus(cur).filter(f =>
-      f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val total = files.map(_.getLen).sum
-    val n = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-    if (n >= files.length) return (files.length, files.length)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val cols = sortCols.map(col)
-    spark.read.parquet(path)
-      .repartitionByRange(n, cols: _*)
-      .sortWithinPartitions(cols: _*)
-      .write.mode("overwrite").parquet(tmp.toString)
-    graft.util.Fs.swapInto(fs, tmp, cur)
-    val after = fs.listStatus(cur).count(f =>
-      f.isFile && f.getPath.getName.endsWith(".parquet"))
-    (files.length, after)
-  }
 
   /** Incremental manifest refresh: stat only files ABSENT from the prior
     * manifest and union with the still-valid prior rows. At 100 TB the

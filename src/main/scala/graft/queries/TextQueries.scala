@@ -1723,7 +1723,9 @@ object TextQueries {
     // difference); hash-equality with the SAME oracle as
     // q_text_dsir_select makes the degradation path continuously
     // oracle-gated, not just spec'd. Not memoized with the broadcast
-    // row on purpose — sharing the memo would gate one branch twice.
+    // row on purpose — sharing the memo would gate one branch twice; the
+    // shuffle branch hash-partitions lr on bucket, so the cache (whose
+    // lookup ignores hints) cannot serve this memo from dsir_weights.
     Q("q_text_dsir_select_shuffle", (s, d) => {
       val w = QueryCaches.memo(s, d, "dsir_weights_shuffle") {
         graft.text.Dsir.weights(docs(s, d), col("doc_id"), col("text"),

@@ -117,7 +117,8 @@ object Dsir {
     // Catalyst's size estimate can never re-broadcast a table we've ruled
     // too big for the driver). Identical values either way — the branches
     // are spec'd bit-equal.
-    feat.join(BroadcastGate(lr, buckets, broadcastCeiling), "bucket")
+    feat.join(BroadcastGate(lr, buckets, broadcastCeiling, Seq("bucket")),
+        "bucket")
       .groupBy("doc_id")
       .agg(sum(col("cnt")).as("n_feats"),
         sum(col("cnt") * col("lr_micro")).as("weight_micro"))

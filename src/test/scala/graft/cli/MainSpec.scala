@@ -47,6 +47,20 @@ class MainSpec extends SparkSpec with TempDirs {
     }
   }
 
+  test("sample daily: the input's schema is read without a Spark job") {
+    import spark.implicits._
+    val in = s"$workDir/daily_in"
+    (1L to 200L).map(i => (i, 20130401L + i % 5)).toDF("GlobalEventID", "Day")
+      .write.mode("overwrite").parquet(in)
+    val out = s"$workDir/sample_daily"
+    val jobs = graft.JobCount(spark) {
+      Main.main(Array("sample", "--in", in, "--mode", "daily",
+        "--per-day", "3", "--seed", "1", "--out", out))
+    }
+    assert(jobs == 2, s"expected 2 jobs, got $jobs") // the sampler's shuffle stage and the write
+    assert(spark.read.parquet(out).count() == 15)
+  }
+
   test("sample filtered+stratified: k per stratum, projected columns") {
     val out = s"$workDir/sample_strat"
     Main.main(Array("sample", "--in", eventsParquet, "--mode", "filtered",

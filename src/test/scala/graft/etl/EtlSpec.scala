@@ -135,6 +135,42 @@ class EtlSpec extends SparkSpec with TempDirs {
     assert(spark.read.parquet(out).count() == 2)
   }
 
+  test("convert writes max(cores, ⌈bytes / 128 MiB⌉) flat files, not one per read split") {
+    // two ~1.4 MB daily files: 512 KB read splits give 6 scan partitions,
+    // more than the session's cores
+    val files = Seq("20130405", "20130406").map { day =>
+      val p = Paths.get(workDir, s"$day.export.CSV")
+      JFiles.write(p, (1 to 6000).map(i => tsvLine(day.toLong * 10000 + i,
+        day, (i % 4 + 1).toString, s"${i % 10}.5", s"ACTOR$i"))
+        .mkString("\n").getBytes)
+      p.toString
+    }
+    val bytes = files.map(f => JFiles.size(Paths.get(f))).sum
+    val cores = spark.sparkContext.defaultParallelism
+    val raw = Convert.coerce(Convert.readRawTsv(spark, files))
+    assert(raw.rdd.getNumPartitions > cores)
+    val flat = s"$workDir/flat_sized"
+    Convert.run(spark, files, flat, s"$workDir/hist_sized")
+    val written = new java.io.File(flat).list().count(_.endsWith(".parquet"))
+    val target = 128L * 1024 * 1024
+    assert(written == math.max(cores, ((bytes + target - 1) / target).toInt),
+      s"$written files for $bytes bytes on $cores cores")
+    def digest(df: org.apache.spark.sql.DataFrame) =
+      df.agg(bit_xor(xxhash64(df.columns.map(col).toIndexedSeq: _*)),
+        count(lit(1))).head()
+    assert(digest(spark.read.parquet(flat)) == digest(raw))
+  }
+
+  test("filter stage runs one Spark job: its read infers no schema") {
+    val flat = s"$workDir/flat_jobs"
+    Convert.writeFlat(Convert.coerce(Convert.readRawTsv(spark, Seq(dailyTsv))), flat)
+    val jobs = graft.JobCount(spark) {
+      FilterStage.run(spark, Seq(flat), s"$workDir/filtered_jobs",
+        Gdelt.defaultFilterColumns)
+    }
+    assert(jobs == 1, s"expected 1 job, got $jobs")
+  }
+
   test("filter stage: missing check columns no-op (pass-through)") {
     val df = Seq((1, "a"), (2, null)).toDF("id", "s")
     assert(FilterStage.dropNullRows(df, Seq("NotThere")).count() == 2)

@@ -58,26 +58,6 @@ class ManifestSpec extends SparkSpec {
     assert(Layout.manifestIncremental(spark, dir, "k", inc).count() == 4)
   }
 
-  test("compactSorted keeps post-compaction file ranges disjoint") {
-    val dir = freshDir("m5")
-    // 8 append waves with interleaved keys: every file spans ~the whole
-    // domain, so plain coalesce-compaction could not restore clustering
-    import org.apache.spark.sql.functions.lit
-    (0 until 8).foreach { w =>
-      (0 until 100).map(i => i * 8L + w).toDF("k")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
-    assert(spark.read.parquet(dir).inputFiles.length == 8)
-    val (before, after) = Layout.compactSorted(spark, dir, Seq("k"),
-      targetBytes = spark.read.parquet(dir).inputFiles.length * 400L)
-    assert(before == 8 && after < 8 && after > 1)
-    assert(spark.read.parquet(dir).count() == 800)
-    val m = Layout.manifest(spark, dir, "k")
-      .select("min_key", "max_key").as[(Long, Long)].collect().sortBy(_._1)
-    m.sliding(2).foreach { case Array(a, b) => assert(a._2 < b._1,
-      s"ranges overlap after compaction: $a vs $b"); case _ => }
-  }
-
   test("prunedRead against a stored manifest prunes without re-derivation") {
     val dir = freshDir("m6")
     Layout.writeSorted((1L to 1000L).toDF("k"), Seq(col("k")), dir, targetFiles = 4)

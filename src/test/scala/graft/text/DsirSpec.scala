@@ -80,6 +80,22 @@ class DsirSpec extends SparkSpec {
     assert(!planOf(1 << 24).contains("ShuffledHashJoin"))
     assert(planOf(256).contains("ShuffledHashJoin [bucket"),
       "past the ceiling the scoring join must degrade to a shuffle join")
+    // a cached broadcast branch must not serve the shuffle branch: the
+    // cache lookup ignores hints, so the plans must differ beyond them
+    def weights(ceiling: Int) =
+      Dsir.weights(docs, col("doc_id"), col("text"), col("lang") === "en",
+        buckets = 512, broadcastCeiling = ceiling)
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val cached = weights(1 << 24).cache()
+    try {
+      cached.count()
+      val entry = cached.queryExecution.withCachedData
+        .collectFirst { case r: InMemoryRelation => r.cacheBuilder }.get
+      assert(!weights(256).queryExecution.withCachedData.exists {
+        case r: InMemoryRelation => r.cacheBuilder eq entry
+        case _ => false
+      }, "the shuffle branch read the cached broadcast branch")
+    } finally cached.unpersist()
   }
 
   test("fixture direction: en docs average above non-en docs") {
