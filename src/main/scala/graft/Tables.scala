@@ -12,19 +12,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   // Schema memo per (sfDir, table): a bare `spark.read.parquet` re-infers
-  // the schema from file footers on the driver for EVERY call, and a suite
-  // run issues thousands of them over the same immutable fixture files.
-  // Passing the known schema is the standard production discipline
-  // (explicit schemas skip the footer-listing round trip); values are
-  // unchanged because the schema IS the inferred one, computed once.
-  // (opt r13, guide §5 "the driver should do almost no data work")
+  // the schema from file footers for EVERY call, and a suite run issues
+  // thousands of them over the same immutable fixture files. Passing the
+  // known schema is the standard production discipline (explicit schemas
+  // skip the footer-listing round trip); values are unchanged because the
+  // schema IS the inferred one, computed once — from one footer on the
+  // driver (graft.util.ParquetFooter), without Spark's one-task schema
+  // job, falling back to Spark's inference where no footer is read.
   private val schemaMemo = scala.collection.concurrent.TrieMap
     .empty[String, org.apache.spark.sql.types.StructType]
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val schema = schemaMemo.getOrElseUpdate(path,
-      spark.read.parquet(path).schema)
+      graft.util.ParquetFooter.schema(spark, Seq(path))
+        .getOrElse(spark.read.parquet(path).schema))
     spark.read.schema(schema).parquet(path)
   }
 

@@ -125,7 +125,13 @@ object Main {
 
     val result: DataFrame = flags.req("mode") match {
       case "indexed" =>
-        Samplers.uniformExact(df, n, order, strict = true)
+        // the reference's metadata index: the row count from the footers,
+        // so an oversized n fails before any Spark job starts
+        val total = ParquetFooter.rowCount(spark, flags.reqList("in"))
+          .getOrElse(df.count())
+        if (n > total) throw new IllegalArgumentException(
+          s"Requested sample size $n exceeds total rows $total")
+        Samplers.uniformExact(df, n, order)
       case "daily" =>
         require(df.columns.contains("Day"), "daily mode requires a Day column")
         Samplers.daily(df, col("Day"),
@@ -177,9 +183,6 @@ object Main {
     println(s"compact: files_before=$before files_after=$after")
   }
 
-  /** `manifest --in DIR --key COL [--out PATH]`: per-file min/max/count
-    * file-skipping index (Layout.manifest); prints row count, optionally
-    * writes the manifest itself as parquet. */
   /** `ann --in DIR --queries id,id,... [--topk K] [--mode brute|lsh]
     * [--id-col C] [--vec-col C] [--seed S] [--bands B] [--width W]
     * --out PATH`: top-k nearest neighbors for the named query ids over an
@@ -226,6 +229,9 @@ object Main {
     println(s"ann: wrote $out")
   }
 
+  /** `manifest --in DIR --key COL [--out PATH]`: per-file min/max/count
+    * file-skipping index (Layout.manifest); prints row count, optionally
+    * writes the manifest itself as parquet. */
   private def manifestCmd(spark: SparkSession, flags: Flags): Unit = {
     val m = Layout.manifest(spark, flags.req("in"), flags.req("key"))
     flags.get("out") match {
@@ -390,9 +396,8 @@ object Main {
 
     val checkCols = flags.get("check-cols").map(_.split(',').toSeq)
       .getOrElse(cfg.filterColumns)
-    Layout.sized(FilterStage.dropNullRows(unioned, checkCols))
-      .write.mode("overwrite").option("compression", "snappy")
-      .parquet(s"$outBase/filtered")
+    val (_, filteredRows) =
+      FilterStage.write(unioned, s"$outBase/filtered", checkCols)
     val filtered = read(s"$outBase/filtered")
     val perDay = flags.get("per-day").map(_.toInt).getOrElse(cfg.defaultPerDay)
     val seed = flags.get("seed").map(_.toLong).getOrElse(cfg.defaultSeed)
@@ -401,7 +406,7 @@ object Main {
     val sampled = read(s"$outBase/sample").count()
     println(s"pipeline: files=${files.size} daily=${daily.size} " +
       s"monthly=${monthly.size} yearly=${yearly.size} " +
-      s"filtered_rows=${filtered.count()} sampled=$sampled")
+      s"filtered_rows=$filteredRows sampled=$sampled")
   }
 
   /** Content-hash ordering on GlobalEventID when present (partition-layout

@@ -381,6 +381,11 @@ object Dedup {
     inter / (size(a).cast("double") + size(b).cast("double") - inter)
   }
 
+  /** DuckDB oracle twin for [[jaccard]] over two list expressions. */
+  def sqlJaccard(a: String, b: String): String =
+    s"CAST(len(list_intersect($a, $b)) AS DOUBLE) / (CAST(len($a) AS DOUBLE) + " +
+      s"CAST(len($b) AS DOUBLE) - CAST(len(list_intersect($a, $b)) AS DOUBLE))"
+
   // --------------------------------------------------------- SimHash
 
   /** 60-bit SimHash over a feature (shingle) array: per-bit majority vote

@@ -27,14 +27,21 @@ object FilterStage {
     if (existing.isEmpty) df else df.na.drop("any", existing)
   }
 
-  /** Run the stage: read → filter → write, returning
-    * (rowsBefore, rowsAfter) from one observed pass over the data — one
-    * Spark job: the read takes its schema from a footer
-    * ([[graft.util.ParquetFooter]]) and the files are sized by
-    * [[Layout.sized]]. */
+  /** Run the stage: [[read]] → [[write]]. */
   def run(spark: SparkSession, inDirs: Seq[String], outDir: String,
-          checkCols: Seq[String]): (Long, Long) = {
-    val df = graft.util.ParquetFooter.read(spark, inDirs: _*)
+          checkCols: Seq[String]): (Long, Long) =
+    write(read(spark, inDirs), outDir, checkCols)
+
+  /** The stage's input, its schema from a footer
+    * ([[graft.util.ParquetFooter]]) rather than a Spark job. */
+  def read(spark: SparkSession, inDirs: Seq[String]): DataFrame =
+    graft.util.ParquetFooter.read(spark, inDirs: _*)
+
+  /** Filter `df` and write it to `outDir` as snappy parquet sized by
+    * [[Layout.sized]], returning (rowsBefore, rowsAfter) from one observed
+    * pass over the data — one Spark job. */
+  def write(df: DataFrame, outDir: String,
+            checkCols: Seq[String]): (Long, Long) = {
     val obs = Observation("filter_retention")
     val observed = df.observe(obs, count(lit(1)).as("rows_before"))
     val filtered = dropNullRows(observed, checkCols)

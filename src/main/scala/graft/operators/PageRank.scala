@@ -107,4 +107,25 @@ object PageRank {
     }
     ranks
   }
+
+  /** DuckDB oracle twin for [[integerPageRank]] over an edge CTE
+    * `e(src, dst)` declared earlier in the chain: CTEs `nodes`, `deg`, `n`
+    * and `r0` … `r<iters>`, the last holding `(node, pr)`. */
+  def sqlIntegerPageRank(iters: Int, scale: Long = 1000000000000L): String = {
+    def iter(k: Int) =
+      s"""c$k AS (SELECT r.node, r.pr // d.deg AS c
+                FROM r${k - 1} r JOIN deg d USING (node)),
+        s$k AS (SELECT e.dst AS node, CAST(sum(c.c) AS BIGINT) AS s
+                FROM e JOIN c$k c ON e.src = c.node GROUP BY 1),
+        r$k AS (SELECT nodes.node,
+                       15 * ($scale // n.n) // 100
+                         + 85 * coalesce(s$k.s, 0) // 100 AS pr
+                FROM nodes LEFT JOIN s$k USING (node), n)"""
+    (s"""nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
+      deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
+              FROM e GROUP BY 1),
+      n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
+      r0 AS (SELECT node, $scale // n.n AS pr FROM nodes, n)""" +:
+      (1 to iters).map(iter)).mkString(",\n")
+  }
 }

@@ -3,7 +3,8 @@ package graft.queries
 import graft.Tables
 import graft.functions.WideDiv.{mulDivWide, mulDivWideDec, ppmWide, sqlMulDiv, wide}
 import graft.queries.QueryBlocks.{dailyRevenue, moneySum, orderParts,
-  sqlDailyRevenue, sqlLangLengthSample, sqlMoneySum, sqlOrderParts}
+  sqlDailyRevenue, sqlLangLengthSample, sqlMoneySum, sqlOrderParts,
+  sqlSampleQuantiles}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -82,6 +83,80 @@ object AnalyticsQueries {
                GROUP BY 1, 2 HAVING count(*) >= 2),
        e AS MATERIALIZED (SELECT u AS src, v AS dst, w FROM und
              UNION ALL SELECT v, u, w FROM und)"""
+
+  /** Customer account balances in integer cents `(seg, ck, cents)`, by
+    * market segment. */
+  private def segmentCents(s: SparkSession, d: String): DataFrame =
+    Tables.customer(s, d).select(
+      col("c_mktsegment").as("seg"), col("c_custkey").as("ck"),
+      floor(col("c_acctbal") * 100 + 0.5).cast("long").as("cents"))
+
+  /** DuckDB oracle twin for [[segmentCents]] and its per-segment doubled
+    * median by the naive full-window rank selection: CTEs `c`,
+    * `r1(<r1Cols>, rn, n)` and `m(seg, <out>)`. */
+  private def sqlSegmentMedian2(r1Cols: String, out: String): String =
+    s"""c AS (
+           SELECT c_mktsegment AS seg, c_custkey AS ck,
+                  CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS cents
+           FROM customer),
+         r1 AS (
+           SELECT $r1Cols,
+                  row_number() OVER (PARTITION BY seg ORDER BY cents, ck) AS rn,
+                  count(*) OVER (PARTITION BY seg) AS n
+           FROM c),
+         m AS (
+           SELECT seg,
+                  CAST(max(CASE WHEN rn = (n + 1) // 2 THEN cents END)
+                     + max(CASE WHEN rn = n // 2 + 1 THEN cents END)
+                   AS BIGINT) AS $out
+           FROM r1 GROUP BY seg)"""
+
+  /** Event values in integer cents `(user_id, us, vc)`, `us` the event
+    * time in epoch micros, with the stream's time midpoint `mid`. */
+  private def eventCentsMid(s: SparkSession, d: String): DataFrame = {
+    val ev = Tables.events(s, d)
+      .select(col("user_id"), unix_micros(col("ts")).as("us"),
+        floor(col("value") * 100 + lit(0.5)).cast("long").as("vc"))
+    val mid = ev.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
+      .select(expr("mn + (mx - mn) DIV 2").as("mid"))
+    ev.crossJoin(broadcast(mid))
+  }
+
+  /** DuckDB oracle twin for [[eventCentsMid]]: a WITH chain of CTEs `ev`
+    * and `mid`, read as `FROM ev, mid`. */
+  private val sqlEventCentsMid =
+    """WITH ev AS (
+           SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
+                  CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc
+           FROM events),
+         mid AS (SELECT min(us) + (max(us) - min(us)) // 2 AS mid FROM ev)"""
+
+  /** The (event type × weekday) contingency table `cells(et, dow, o)` with
+    * its row totals `(et, r)` and column totals `(dow, c)`; weekday 0 is
+    * Monday, from a sign-safe day difference to 1995-01-02. */
+  private def weekdayContingency(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val base = Tables.events(s, d).select(col("event_type").as("et"),
+      pmod(datediff(to_date(col("ts")), to_date(lit("1995-01-02")))
+        .cast("long"), lit(7L)).as("dow"))
+    val cells = base.groupBy("et", "dow").agg(count(lit(1)).as("o"))
+    (cells, cells.groupBy("et").agg(sum("o").as("r")),
+      cells.groupBy("dow").agg(sum("o").as("c")))
+  }
+
+  /** DuckDB oracle twin for [[weekdayContingency]]: a WITH chain of CTEs
+    * `base`, `cells`, `rt` and `ct`. */
+  private val sqlWeekdayContingency =
+    """WITH base AS (
+           SELECT event_type AS et,
+                  ((datediff('day', DATE '1995-01-02', CAST(ts AS DATE)) % 7)
+                   + 7) % 7 AS dow
+           FROM events),
+         cells AS (SELECT et, CAST(dow AS BIGINT) AS dow,
+                          CAST(count(*) AS BIGINT) AS o
+                   FROM base GROUP BY 1, 2),
+         rt AS (SELECT et, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY 1),
+         ct AS (SELECT dow, CAST(sum(o) AS BIGINT) AS c FROM cells GROUP BY 1)"""
 
   val registry: Seq[Q] = Seq(
     // TPC-H Q13 shape: how many customers placed exactly k orders,
@@ -179,9 +254,7 @@ object AnalyticsQueries {
     // middle rank are re-scanned. The DuckDB oracle runs the naive
     // full-window formulation, so gate equality proves the rewrite
     Q("q_eng_mad_outliers", (s, d) => {
-      val c = Tables.customer(s, d).select(
-        col("c_mktsegment").as("seg"), col("c_custkey").as("ck"),
-        floor(col("c_acctbal") * 100 + 0.5).cast("long").as("cents"))
+      val c = segmentCents(s, d)
 
       def med2(df: DataFrame, value: String, ord: String, out: String): DataFrame =
         graft.operators.WeightedMedian.medianRank2(df,
@@ -201,21 +274,7 @@ object AnalyticsQueries {
           count(when(col("d2") * 2 > col("mad_cents4") * 3, 1)).as("n_outliers"))
         .orderBy("seg")
     },
-      """WITH c AS (
-           SELECT c_mktsegment AS seg, c_custkey AS ck,
-                  CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS cents
-           FROM customer),
-         r1 AS (
-           SELECT seg, cents,
-                  row_number() OVER (PARTITION BY seg ORDER BY cents, ck) AS rn,
-                  count(*) OVER (PARTITION BY seg) AS n
-           FROM c),
-         m AS (
-           SELECT seg,
-                  CAST(max(CASE WHEN rn = (n + 1) // 2 THEN cents END)
-                     + max(CASE WHEN rn = n // 2 + 1 THEN cents END)
-                   AS BIGINT) AS median_cents2
-           FROM r1 GROUP BY seg),
+      s"""WITH ${sqlSegmentMedian2("seg, cents", "median_cents2")},
          dv AS (
            SELECT c.seg, c.ck, abs(c.cents * 2 - m.median_cents2) AS d2,
                   m.median_cents2
@@ -290,12 +349,7 @@ object AnalyticsQueries {
     // aggregation. Doubles appear only as identically-shaped IEEE
     // expressions over the exact integers, so the gate stays bitwise
     Q("q_eng_chi_square", (s, d) => {
-      val base = Tables.events(s, d).select(col("event_type").as("et"),
-        pmod(datediff(to_date(col("ts")), to_date(lit("1995-01-02")))
-          .cast("long"), lit(7L)).as("dow"))
-      val cells = base.groupBy("et", "dow").agg(count(lit(1)).as("o"))
-      val rowT = cells.groupBy("et").agg(sum("o").as("r"))
-      val colT = cells.groupBy("dow").agg(sum("o").as("c"))
+      val (cells, rowT, colT) = weekdayContingency(s, d)
       val tot = cells.agg(sum("o").as("n"))
       val dvn = (col("o") * col("n") - col("r") * col("c")).cast("double")
       cells.join(broadcast(rowT), "et").join(broadcast(colT), "dow")
@@ -305,16 +359,7 @@ object AnalyticsQueries {
             col("n").cast("double"))).as("chi2_contrib"))
         .orderBy("et", "dow")
     },
-      """WITH base AS (
-           SELECT event_type AS et,
-                  ((datediff('day', DATE '1995-01-02', CAST(ts AS DATE)) % 7)
-                   + 7) % 7 AS dow
-           FROM events),
-         cells AS (SELECT et, CAST(dow AS BIGINT) AS dow,
-                          CAST(count(*) AS BIGINT) AS o
-                   FROM base GROUP BY 1, 2),
-         rt AS (SELECT et, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY 1),
-         ct AS (SELECT dow, CAST(sum(o) AS BIGINT) AS c FROM cells GROUP BY 1),
+      s"""$sqlWeekdayContingency,
          t AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM cells)
          SELECT et, dow, o AS observed,
                 CAST(o * n - r * c AS DOUBLE) * CAST(o * n - r * c AS DOUBLE)
@@ -337,12 +382,7 @@ object AnalyticsQueries {
     // (dev² · 1e6 stays inside DECIMAL(38) up to ~1e7-row×margin scales;
     // beyond that the margins pre-scale to per-million shares first.)
     Q("q_eng_cramers_v", (s, d) => {
-      val base = Tables.events(s, d).select(col("event_type").as("et"),
-        pmod(datediff(to_date(col("ts")), to_date(lit("1995-01-02")))
-          .cast("long"), lit(7L)).as("dow"))
-      val cells = base.groupBy("et", "dow").agg(count(lit(1)).as("o"))
-      val rowT = cells.groupBy("et").agg(sum("o").as("r"))
-      val colT = cells.groupBy("dow").agg(sum("o").as("c"))
+      val (cells, rowT, colT) = weekdayContingency(s, d)
       val tot = cells.agg(sum("o").as("n"),
         countDistinct(col("et")).as("nr"), countDistinct(col("dow")).as("nc"))
       val dev = wide(col("o")) * wide(col("n")) - wide(col("r")) * wide(col("c"))
@@ -360,16 +400,7 @@ object AnalyticsQueries {
               (least(col("nr"), col("nc")) - lit(1L)).cast("double")))
             .as("cramers_v"))
     },
-      """WITH base AS (
-           SELECT event_type AS et,
-                  ((datediff('day', DATE '1995-01-02', CAST(ts AS DATE)) % 7)
-                   + 7) % 7 AS dow
-           FROM events),
-         cells AS (SELECT et, CAST(dow AS BIGINT) AS dow,
-                          CAST(count(*) AS BIGINT) AS o
-                   FROM base GROUP BY 1, 2),
-         rt AS (SELECT et, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY 1),
-         ct AS (SELECT dow, CAST(sum(o) AS BIGINT) AS c FROM cells GROUP BY 1),
+      s"""$sqlWeekdayContingency,
          t AS (SELECT CAST(sum(o) AS BIGINT) AS n,
                       CAST(count(DISTINCT et) AS BIGINT) AS nr,
                       CAST(count(DISTINCT dow) AS BIGINT) AS nc
@@ -450,9 +481,7 @@ object AnalyticsQueries {
     // S_g²·N/n_g terms floor through DECIMAL(38) (mirrored floor-for-floor
     // in the oracle), and the single output ratio floors once to ppm.
     Q("q_eng_levene_bf", (s, d) => {
-      val c = Tables.customer(s, d).select(
-        col("c_mktsegment").as("seg"), col("c_custkey").as("ck"),
-        floor(col("c_acctbal") * 100 + 0.5).cast("long").as("cents"))
+      val c = segmentCents(s, d)
       val m = graft.operators.WeightedMedian.medianRank2(c,
           grp = col("seg"), v = col("cents"), ord = col("ck"),
           bucketWidth = 10000.0)
@@ -482,21 +511,7 @@ object AnalyticsQueries {
             (col("q") * wide(col("n")) - col("termsum")) *
               wide(col("k") - lit(1L))).as("w_ppm"))
     },
-      """WITH c AS (
-           SELECT c_mktsegment AS seg, c_custkey AS ck,
-                  CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS cents
-           FROM customer),
-         r1 AS (
-           SELECT seg, ck, cents,
-                  row_number() OVER (PARTITION BY seg ORDER BY cents, ck) AS rn,
-                  count(*) OVER (PARTITION BY seg) AS n
-           FROM c),
-         m AS (
-           SELECT seg,
-                  CAST(max(CASE WHEN rn = (n + 1) // 2 THEN cents END)
-                     + max(CASE WHEN rn = n // 2 + 1 THEN cents END)
-                   AS BIGINT) AS med2
-           FROM r1 GROUP BY seg),
+      s"""WITH ${sqlSegmentMedian2("seg, ck, cents", "med2")},
          z AS (
            SELECT c.seg, abs(c.cents * 2 - m.med2) AS z
            FROM c JOIN m ON c.seg = m.seg),
@@ -885,18 +900,7 @@ object AnalyticsQueries {
       // aggregate's all-integer rank reads idx = (m-1)*p // 100 (0-based)
       s"""WITH ${sqlLangLengthSample("documents")}
          SELECT lang, CAST(max(m) AS BIGINT) AS n_sample,
-                CAST(max(CASE WHEN rn = (m-1)*10//100 + 1 THEN n_chars END)
-                  AS BIGINT) AS q10,
-                CAST(max(CASE WHEN rn = (m-1)*25//100 + 1 THEN n_chars END)
-                  AS BIGINT) AS q25,
-                CAST(max(CASE WHEN rn = (m-1)*50//100 + 1 THEN n_chars END)
-                  AS BIGINT) AS q50,
-                CAST(max(CASE WHEN rn = (m-1)*75//100 + 1 THEN n_chars END)
-                  AS BIGINT) AS q75,
-                CAST(max(CASE WHEN rn = (m-1)*90//100 + 1 THEN n_chars END)
-                  AS BIGINT) AS q90,
-                CAST(max(CASE WHEN rn = (m-1)*99//100 + 1 THEN n_chars END)
-                  AS BIGINT) AS q99
+                ${sqlSampleQuantiles(10, 25, 50, 75, 90, 99)}
          FROM r GROUP BY lang ORDER BY lang"""),
 
     // the sketch's measured error, ON the gate: per-language, the
@@ -1437,12 +1441,7 @@ object AnalyticsQueries {
     // pass; moments and arm rollups are scalar-sized broadcasts.
     Q("q_eng_cuped", (s, d) => {
       import graft.functions.WideDiv.mulDivWideSigned
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), unix_micros(col("ts")).as("us"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("vc"))
-      val mid = ev.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
-        .select(expr("mn + (mx - mn) DIV 2").as("mid"))
-      val per = ev.crossJoin(broadcast(mid))
+      val per = eventCentsMid(s, d)
         .groupBy("user_id")
         .agg(sum(when(col("us") < col("mid"), col("vc")).otherwise(0L))
             .as("x"),
@@ -1479,11 +1478,7 @@ object AnalyticsQueries {
     },
       // HUGEINT `//` truncates toward zero, mirroring mulDivWideSigned on
       // the signed θ and centered-mean terms
-      """WITH ev AS (
-           SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-                  CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc
-           FROM events),
-         mid AS (SELECT min(us) + (max(us) - min(us)) // 2 AS mid FROM ev),
+      s"""$sqlEventCentsMid,
          per AS (
            SELECT user_id,
                   CAST(sum(CASE WHEN us < mid THEN vc ELSE 0 END) AS BIGINT)
@@ -1540,12 +1535,7 @@ object AnalyticsQueries {
     // 4-row cell table is scalar algebra.
     Q("q_eng_did", (s, d) => {
       import graft.functions.WideDiv.mulDivWideSigned
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), unix_micros(col("ts")).as("us"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("vc"))
-      val mid = ev.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
-        .select(expr("mn + (mx - mn) DIV 2").as("mid"))
-      val cells = ev.crossJoin(broadcast(mid))
+      val cells = eventCentsMid(s, d)
         .select(
           when(conv(substring(md5(col("user_id").cast("string")), 1, 13),
             16, 10).cast("long") % 2 === 0, lit("A")).otherwise(lit("B"))
@@ -1573,11 +1563,7 @@ object AnalyticsQueries {
     },
       // each cell mean truncates separately (HUGEINT // = trunc-toward-zero,
       // the mulDivWideSigned contract); DiD is then exact integer algebra
-      """WITH ev AS (
-           SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-                  CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc
-           FROM events),
-         mid AS (SELECT min(us) + (max(us) - min(us)) // 2 AS mid FROM ev),
+      s"""$sqlEventCentsMid,
          cells AS (
            SELECT CASE WHEN CAST('0x' ||
                     substr(md5(CAST(user_id AS VARCHAR)), 1, 13) AS BIGINT)

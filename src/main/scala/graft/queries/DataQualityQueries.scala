@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.WideDiv.{mulDivWide, ppmWide, sqlMulDiv, sqlPpm, wide}
-import graft.queries.QueryBlocks.sqlLangLengthSample
+import graft.queries.QueryBlocks.{sqlLangLengthSample, sqlSampleQuantiles}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -162,14 +162,7 @@ object DataQualityQueries {
       // keep counting ALL rows — n_nulls stays the completeness readout.
       s"""WITH ${sqlLangLengthSample("documents WHERE n_chars IS NOT NULL")},
          sk AS (SELECT lang,
-                  CAST(max(CASE WHEN rn = (m-1)*25//100 + 1 THEN n_chars END)
-                    AS BIGINT) AS q25,
-                  CAST(max(CASE WHEN rn = (m-1)*50//100 + 1 THEN n_chars END)
-                    AS BIGINT) AS q50,
-                  CAST(max(CASE WHEN rn = (m-1)*75//100 + 1 THEN n_chars END)
-                    AS BIGINT) AS q75,
-                  CAST(max(CASE WHEN rn = (m-1)*90//100 + 1 THEN n_chars END)
-                    AS BIGINT) AS q90
+                  ${sqlSampleQuantiles(25, 50, 75, 90)}
                 FROM r GROUP BY lang),
          ex AS (SELECT lang,
                   CAST(count(*) AS BIGINT) AS n,

@@ -103,20 +103,28 @@ object DedupQueries {
       Dedup.simhash(withSig(s, d), col("doc_id"), col("shingles"))
     }
 
+  /** MinHash-LSH candidate pairs `(ida, idb)` with each side's signature
+    * (`sa`, `sb`) and shingles (`xa`, `xb`). */
+  private def lshCandSides(s: SparkSession, d: String): DataFrame = {
+    val sig = withSig(s, d)
+    Dedup.lshCandidates(sig, col("doc_id"), col("sig"), BANDS, R)
+      .join(sig.select(col("doc_id").as("ida"), col("sig").as("sa"),
+        col("shingles").as("xa")), "ida")
+      .join(sig.select(col("doc_id").as("idb"), col("sig").as("sb"),
+        col("shingles").as("xb")), "idb")
+  }
+
+  /** How many of the K signature components of `sa` and `sb` agree. */
+  private def sigMatches: Column =
+    size(filter(sequence(lit(0), lit(K - 1)),
+      i => get(col("sa"), i) === get(col("sb"), i))).cast("long")
+
   /** Memoized MinHash-LSH verified pair table (ida, idb, sig_matches, jac
     * ≥ 0.8) — shared by q_dedup_minhash_lsh and q_dedup_clusters. */
   private def minhashPairs(s: SparkSession, d: String): DataFrame =
     QueryCaches.memo(s, d, "minhash_pairs") {
-      val sig = withSig(s, d)
-      val cand = Dedup.lshCandidates(sig, col("doc_id"), col("sig"), BANDS, R)
-      cand
-        .join(sig.select(col("doc_id").as("ida"), col("sig").as("sa"),
-          col("shingles").as("xa")), "ida")
-        .join(sig.select(col("doc_id").as("idb"), col("sig").as("sb"),
-          col("shingles").as("xb")), "idb")
-        .withColumn("sig_matches",
-          size(filter(sequence(lit(0), lit(K - 1)),
-            i => get(col("sa"), i) === get(col("sb"), i))).cast("long"))
+      lshCandSides(s, d)
+        .withColumn("sig_matches", sigMatches)
         .withColumn("jac", Dedup.jaccard(col("xa"), col("xb")))
         .where(col("jac") >= 0.8)
         .select("ida", "idb", "sig_matches", "jac")
@@ -162,21 +170,21 @@ object DedupQueries {
         .where(col("cos") >= 0.45)
     }
 
-  /** SemDeDup keep rule over a verified ANN pair table: star components,
-    * per-member summed micro-quantized cosine centrality, keep the most
-    * central member per cluster — shared by the fixture-geometry and
-    * production-geometry gate rows so the two differ ONLY in the
-    * candidate stage they audit. */
-  private def semdedupKeep(pairs: DataFrame): DataFrame = {
-    val clusters = graft.operators.StarComponents
-      .components(pairs, col("va"), col("vb"))
-      .select(col("doc_id").as("vec_id"), col("cluster_id"))
+  /** SemDeDup keep rule over a verified ANN pair table and its component
+    * table `clusters(doc_id, cluster_id)`: per-member summed
+    * micro-quantized cosine centrality, keep the most central member per
+    * cluster — shared by the fixture-geometry and production-geometry gate
+    * rows (star components, [[starKeep]]) so the two differ ONLY in the
+    * candidate stage they audit, and by q_dedup_semdedup_keep (min-label
+    * components). */
+  private def semdedupKeep(pairs: DataFrame, clusters: DataFrame): DataFrame = {
+    val members = clusters.select(col("doc_id").as("vec_id"), col("cluster_id"))
     val directed = pairs.select(col("va").as("vec_id"), col("cos"))
       .unionByName(pairs.select(col("vb").as("vec_id"), col("cos")))
       .withColumn("cm", floor(col("cos") * 1000000.0 + 0.5).cast("long"))
     val strength = directed.groupBy("vec_id")
       .agg(sum("cm").as("centrality_micro"))
-    clusters.join(strength, "vec_id")
+    members.join(strength, "vec_id")
       .groupBy("cluster_id")
       .agg(count(lit(1)).as("n_members"),
         max(struct(col("centrality_micro"), col("vec_id"))).as("mx"))
@@ -185,6 +193,11 @@ object DedupQueries {
         col("mx.centrality_micro").as("keep_centrality_micro"))
       .orderBy("cluster_id")
   }
+
+  /** [[semdedupKeep]] over the star components of `pairs`. */
+  private def starKeep(pairs: DataFrame): DataFrame =
+    semdedupKeep(pairs,
+      graft.operators.StarComponents.components(pairs, col("va"), col("vb")))
 
   /** `edges` + recursive `reach(id, r)` over a pair CTE `p(va, vb)`: every
     * node with each id it reaches — min(r) is the component label. Needs
@@ -285,6 +298,14 @@ object DedupQueries {
             SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
             FROM kx a JOIN kx b ON a.h = b.h AND a.doc_id < b.doc_id)"""
 
+  /** `p(ida, idb)`: the `cand` pairs whose shingle-set Jaccard is ≥ 0.8 —
+    * the twin of [[minhashPairs]]' verify step. */
+  private val jacPairsCte =
+    s"""p AS (
+          SELECT ida, idb
+          FROM cand JOIN sh x ON x.doc_id = ida JOIN sh y ON y.doc_id = idb
+          WHERE ${Dedup.sqlJaccard("x.shingles", "y.shingles")} >= 0.8)"""
+
   /** Shared recursive chain: LSH candidates → Jaccard-verified pairs →
     * transitive closure → `cl(doc_id, cluster_id)` (min reachable id).
     * `private[queries]`: the cross-modal oracle (MultimodalQueries)
@@ -293,12 +314,7 @@ object DedupQueries {
     s"""${shCte.replaceFirst("WITH", "WITH RECURSIVE")},
         $sigCte,
         $minhashCandCte,
-        p AS (
-          SELECT ida, idb
-          FROM cand JOIN sh x ON x.doc_id = ida JOIN sh y ON y.doc_id = idb
-          WHERE CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-                  / (CAST(len(x.shingles) AS DOUBLE) + CAST(len(y.shingles) AS DOUBLE)
-                     - CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)) >= 0.8),
+        $jacPairsCte,
         edges AS MATERIALIZED (SELECT ida AS a, idb AS b FROM p
                   UNION ALL SELECT idb, ida FROM p),
         reach AS (
@@ -345,9 +361,7 @@ object DedupQueries {
             SELECT ida, idb,
                    CAST(len(list_filter(range(0, 8),
                      i -> sa.sig[i+1] = sb.sig[i+1])) AS BIGINT) AS sig_matches,
-                   CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-                     / (CAST(len(x.shingles) AS DOUBLE) + CAST(len(y.shingles) AS DOUBLE)
-                        - CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)) AS jac
+                   ${Dedup.sqlJaccard("x.shingles", "y.shingles")} AS jac
             FROM cand
             JOIN sig sa ON sa.doc_id = ida JOIN sig sb ON sb.doc_id = idb
             JOIN sh x ON x.doc_id = ida JOIN sh y ON y.doc_id = idb)
@@ -377,9 +391,7 @@ object DedupQueries {
           j AS (
             SELECT ida, idb,
                    CAST(len(list_intersect(x.hs, y.hs)) AS BIGINT) AS shared,
-                   CAST(len(list_intersect(x.hs, y.hs)) AS DOUBLE)
-                     / (CAST(len(x.hs) AS DOUBLE) + CAST(len(y.hs) AS DOUBLE)
-                        - CAST(len(list_intersect(x.hs, y.hs)) AS DOUBLE)) AS jac
+                   ${Dedup.sqlJaccard("x.hs", "y.hs")} AS jac
             FROM cand JOIN hsh x ON x.doc_id = ida JOIN hsh y ON y.doc_id = idb)
           SELECT ida, idb, shared, jac FROM j
           WHERE jac >= 0.8 ORDER BY ida, idb"""),
@@ -408,9 +420,7 @@ object DedupQueries {
                    CAST(len(list_intersect(x.hs, y.hs)) AS BIGINT) AS shared,
                    CAST(len(x.hs) AS BIGINT) AS na,
                    CAST(len(y.hs) AS BIGINT) AS nb,
-                   CAST(len(list_intersect(x.hs, y.hs)) AS DOUBLE)
-                     / (CAST(len(x.hs) AS DOUBLE) + CAST(len(y.hs) AS DOUBLE)
-                        - CAST(len(list_intersect(x.hs, y.hs)) AS DOUBLE)) AS jac
+                   ${Dedup.sqlJaccard("x.hs", "y.hs")} AS jac
             FROM cand JOIN hsh x ON x.doc_id = ida JOIN hsh y ON y.doc_id = idb)
           SELECT CAST(shared * 10 // (na + nb - shared) AS BIGINT) AS jac_decile,
                  CAST(count(*) AS BIGINT) AS n_pairs
@@ -579,14 +589,10 @@ object DedupQueries {
             FROM bands a JOIN bands b ON a.b = b.b AND a.bh = b.bh
             WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0)
           SELECT ida, idb,
-                 CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-                   / (CAST(len(x.shingles) AS DOUBLE) + CAST(len(y.shingles) AS DOUBLE)
-                      - CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)) AS jac
+                 ${Dedup.sqlJaccard("x.shingles", "y.shingles")} AS jac
           FROM cand
           JOIN sh x ON x.doc_id = ida JOIN sh y ON y.doc_id = idb
-          WHERE CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-                  / (CAST(len(x.shingles) AS DOUBLE) + CAST(len(y.shingles) AS DOUBLE)
-                     - CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)) >= 0.8
+          WHERE ${Dedup.sqlJaccard("x.shingles", "y.shingles")} >= 0.8
           ORDER BY ida, idb"""),
 
     // same component semantics through the alternating large-star /
@@ -619,7 +625,7 @@ object DedupQueries {
     // oracle is quadratic by design → documented SKIP (prefix_filter
     // precedent).
     Q("q_dedup_semdedup_ann", (s, d) =>
-      semdedupKeep(annPairsR2(s, d)), // already verified at cos >= 0.45
+      starKeep(annPairsR2(s, d)), // already verified at cos >= 0.45
       // deliberately UNFILTERED quadratic cosine join (NO LSH chain): every
       // pair with cos >= 0.45, then the identical components/centrality/keep
       // replay — equality with the engine's radius-2-LSH-candidate result
@@ -645,7 +651,7 @@ object DedupQueries {
     // holds at fixture scale. The quadratic-oracle losslessness proof
     // stays the fixture row's job.
     Q("q_dedup_semdedup_ann_prod", (s, d) =>
-      semdedupKeep(annPairsProd(s, d)),
+      starKeep(annPairsProd(s, d)),
       // production geometry: the oracle replays the w12 b32 radius-2 LSH
       // chain ITSELF (symmetric probe join — the engine's radius-2 form),
       // then the identical verify/components/centrality/keep replay — the
@@ -896,24 +902,9 @@ object DedupQueries {
     // the "closest to centroid" selection without materializing centroids.
     // Integer centrality sums keep the cross-engine contract float-free
     // past the audited per-pair quantization
-    Q("q_dedup_semdedup_keep", (s, d) => {
-      val pairs = SimilarityQueries.lshPairTable(s, d).where(col("cos") >= 0.4)
-      val clusters = embedClusterTable(s, d)
-        .select(col("doc_id").as("vec_id"), col("cluster_id"))
-      val directed = pairs.select(col("va").as("vec_id"), col("cos"))
-        .unionByName(pairs.select(col("vb").as("vec_id"), col("cos")))
-        .withColumn("cm", floor(col("cos") * 1000000.0 + 0.5).cast("long"))
-      val strength = directed.groupBy("vec_id")
-        .agg(sum("cm").as("centrality_micro"))
-      clusters.join(strength, "vec_id")
-        .groupBy("cluster_id")
-        .agg(count(lit(1)).as("n_members"),
-          max(struct(col("centrality_micro"), col("vec_id"))).as("mx"))
-        .select(col("cluster_id"), col("n_members"),
-          col("mx.vec_id").as("keep_id"),
-          col("mx.centrality_micro").as("keep_centrality_micro"))
-        .orderBy("cluster_id")
-    },
+    Q("q_dedup_semdedup_keep", (s, d) =>
+      semdedupKeep(SimilarityQueries.lshPairTable(s, d).where(col("cos") >= 0.4),
+        embedClusterTable(s, d)),
       s"""WITH RECURSIVE ${SimilarityQueries.lshCandCte},
          cosp AS (
            SELECT va, vb,
@@ -942,23 +933,7 @@ object DedupQueries {
     },
       // clusters CTE chain as in q_dedup_clusters, then per-cluster argmax
       // by (n_chars, doc_id) — row_number mirror of Spark's struct-max
-      s"""${shCte.replaceFirst("WITH", "WITH RECURSIVE")},
-          $sigCte,
-          $minhashCandCte,
-          p AS (
-            SELECT ida, idb
-            FROM cand JOIN sh x ON x.doc_id = ida JOIN sh y ON y.doc_id = idb
-            WHERE CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-                    / (CAST(len(x.shingles) AS DOUBLE) + CAST(len(y.shingles) AS DOUBLE)
-                       - CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)) >= 0.8),
-          edges AS MATERIALIZED (SELECT ida AS a, idb AS b FROM p
-                    UNION ALL SELECT idb, ida FROM p),
-          reach AS (
-            SELECT DISTINCT a AS id, a AS r FROM edges
-            UNION
-            SELECT e.a AS id, reach.r FROM edges e JOIN reach ON e.b = reach.id),
-          cl AS (SELECT id AS doc_id, min(r) AS cluster_id
-                 FROM reach GROUP BY 1),
+      s"""$clustersCte,
           m AS (SELECT cl.cluster_id, cl.doc_id, d.n_chars
                 FROM cl JOIN documents d USING (doc_id)),
           rk AS (SELECT cluster_id, doc_id, n_chars,
@@ -976,19 +951,11 @@ object DedupQueries {
     // column quantifies what K=8 signatures buy, over the same candidate
     // generation the dedup path uses (no extra shuffles beyond it)
     Q("q_dedup_minhash_est", (s, d) => {
-      val sig = withSig(s, d)
-      val cand = Dedup.lshCandidates(sig, col("doc_id"), col("sig"), BANDS, R)
-      cand
-        .join(sig.select(col("doc_id").as("ida"), col("sig").as("sa"),
-          col("shingles").as("xa")), "ida")
-        .join(sig.select(col("doc_id").as("idb"), col("sig").as("sb"),
-          col("shingles").as("xb")), "idb")
+      lshCandSides(s, d)
         .withColumn("inter", size(array_intersect(col("xa"), col("xb"))).cast("long"))
         .withColumn("uni",
           size(col("xa")).cast("long") + size(col("xb")).cast("long") - col("inter"))
-        .withColumn("sig_matches",
-          size(filter(sequence(lit(0), lit(K - 1)),
-            i => get(col("sa"), i) === get(col("sb"), i))).cast("long"))
+        .withColumn("sig_matches", sigMatches)
         .select(col("ida"), col("idb"),
           call_function("div", col("sig_matches") * 1000000L, lit(K.toLong))
             .as("est_ppm"),
@@ -1040,11 +1007,7 @@ object DedupQueries {
             SELECT CAST(count(*) AS BIGINT) AS n_verified
             FROM cand
             JOIN sh x ON x.doc_id = ida JOIN sh y ON y.doc_id = idb
-            WHERE CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-                    / (CAST(len(x.shingles) AS DOUBLE)
-                       + CAST(len(y.shingles) AS DOUBLE)
-                       - CAST(len(list_intersect(x.shingles, y.shingles))
-                           AS DOUBLE)) >= 0.8),
+            WHERE ${Dedup.sqlJaccard("x.shingles", "y.shingles")} >= 0.8),
           c AS (SELECT CAST(count(*) AS BIGINT) AS n_candidates FROM cand)
           SELECT n_candidates, n_verified,
                  CAST(n_verified * 1000000 // n_candidates AS BIGINT)
@@ -1144,14 +1107,7 @@ object DedupQueries {
       s"""$shCte,
           $sigCte,
           $minhashCandCte,
-          p AS (
-            SELECT ida, idb
-            FROM cand JOIN sh x ON x.doc_id = ida JOIN sh y ON y.doc_id = idb
-            WHERE CAST(len(list_intersect(x.shingles, y.shingles)) AS DOUBLE)
-                    / (CAST(len(x.shingles) AS DOUBLE)
-                       + CAST(len(y.shingles) AS DOUBLE)
-                       - CAST(len(list_intersect(x.shingles, y.shingles))
-                           AS DOUBLE)) >= 0.8),
+          $jacPairsCte,
           sp AS (
             SELECT CASE WHEN CAST('0x' || substr(md5(CAST(ida AS VARCHAR)), 1, 4)
                           AS BIGINT) % 100 < 80 THEN 'train'

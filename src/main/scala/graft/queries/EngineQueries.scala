@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.WideDiv.{mulDivWide, ppmWide, wide}
+import graft.operators.PageRank.sqlIntegerPageRank
 import graft.queries.QueryBlocks.{dailyRevenue, moneySum, orderParts,
   sqlDailyRevenue, sqlMoneySum, sqlOrderParts}
 import org.apache.spark.sql.expressions.Window
@@ -48,11 +49,7 @@ object EngineQueries {
         Tables.orders(s, d).select(col("o_orderkey"),
           floor(col("o_totalprice") * 100 + 0.5).cast("long").as("o_cents")),
         ot, "o_orderkey", 16)
-      graft.etl.Bucketing.writeBucketed(
-        Tables.lineitem(s, d).select(col("l_orderkey").as("o_orderkey"),
-          floor(col("l_quantity") + 0.5).cast("long").as("qty"),
-          floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("l_cents")),
-        lt, "o_orderkey", 16)
+      graft.etl.Bucketing.writeBucketed(bucketLineitem(s, d), lt, "o_orderkey", 16)
       (ot, lt)
     } { case (ot, lt) => dropTables(s, ot, lt) }
 
@@ -69,11 +66,7 @@ object EngineQueries {
     QueryCaches.once(s, d, "bucketed32") {
       val tag = graft.util.PathTag.tag(d)
       val lt32 = s"graft_bk32_lineitem_$tag"
-      graft.etl.Bucketing.writeBucketed(
-        Tables.lineitem(s, d).select(col("l_orderkey").as("o_orderkey"),
-          floor(col("l_quantity") + 0.5).cast("long").as("qty"),
-          floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("l_cents")),
-        lt32, "o_orderkey", 32)
+      graft.etl.Bucketing.writeBucketed(bucketLineitem(s, d), lt32, "o_orderkey", 32)
       lt32
     }(dropTables(s, _))
 
@@ -116,6 +109,77 @@ object EngineQueries {
         .select(col("a.p").as("pu"), col("b.p").as("pv"))
       graft.operators.Graph.canonicalEdges(edges, "pu", "pv")
     }
+
+  /** The lineitem columns the bucketed layouts carry, money in cents. */
+  private def bucketLineitem(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d).select(col("l_orderkey").as("o_orderkey"),
+      floor(col("l_quantity") + 0.5).cast("long").as("qty"),
+      floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("l_cents"))
+
+  /** Read-back join of bucketed orders `ot` and lineitem `lt` on orderkey,
+    * then the top-20 orders by line revenue — the gated aggregate of
+    * q_eng_bucketed_join and q_eng_bucketed_join_coalesce. */
+  private def bucketedJoin(s: SparkSession, ot: String, lt: String): DataFrame =
+    graft.etl.Bucketing.readBucketed(s, ot)
+      .join(graft.etl.Bucketing.readBucketed(s, lt), "o_orderkey")
+      .groupBy(col("o_orderkey"))
+      .agg(max(col("o_cents")).as("o_cents"),
+        count(lit(1)).as("n_items"),
+        sum(col("qty")).as("sum_qty"),
+        sum(col("l_cents")).as("sum_cents"))
+      .orderBy(col("sum_cents").desc, col("o_orderkey"))
+      .limit(20)
+
+  /** DuckDB oracle twin for [[bucketedJoin]]: the same join over the RAW
+    * parquet tables. */
+  private val sqlBucketedJoin =
+    """WITH j AS (
+         SELECT o.o_orderkey,
+                CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS oc,
+                CAST(floor(l.l_quantity + 0.5) AS BIGINT) AS qty,
+                CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT) AS lc
+         FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey)
+       SELECT o_orderkey, CAST(max(oc) AS BIGINT) AS o_cents,
+              CAST(count(*) AS BIGINT) AS n_items,
+              CAST(sum(qty) AS BIGINT) AS sum_qty,
+              CAST(sum(lc) AS BIGINT) AS sum_cents
+       FROM j GROUP BY o_orderkey
+       ORDER BY sum_cents DESC, o_orderkey LIMIT 20"""
+
+  /** Lines per part brand with their exact revenue, over a lineitem ⋈ part
+    * join. */
+  private def brandRevenue(lp: DataFrame): DataFrame =
+    lp.groupBy(col("p_brand"))
+      .agg(count(lit(1)).as("n_items"),
+        moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+          .as("revenue"))
+      .orderBy("p_brand")
+
+  /** DuckDB oracle twin for [[brandRevenue]] over the plain join. */
+  private val sqlBrandRevenue =
+    s"""SELECT p_brand, count(*) AS n_items,
+               ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+        GROUP BY p_brand ORDER BY p_brand"""
+
+  /** Daily revenue `(day, rev_cents)` as one day-sorted array `xs` of
+    * structs: the input of the sequential day-series recurrences
+    * (q_eng_ewma, q_eng_holt). */
+  private def dailyRevenueSeries(s: SparkSession, d: String): DataFrame =
+    dailyRevenue(s, d, "rev_cents")
+      .agg(sort_array(collect_list(struct(col("day"), col("rev_cents"))))
+        .as("xs"))
+
+  /** DuckDB oracle twin for [[dailyRevenueSeries]]: a WITH RECURSIVE chain
+    * opening with `daily` and `idx(day, rev_cents, i)`, days numbered from
+    * 1 in order. */
+  private val sqlDailyRevenueSeries =
+    s"""WITH RECURSIVE daily AS (
+         ${sqlDailyRevenue("rev_cents")}),
+       idx AS (
+         SELECT day, rev_cents,
+                CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
+         FROM daily)"""
 
   /** DuckDB oracle twin for [[triEdges]]: CTEs `op` and `e(u, v)`. */
   private val sqlTriEdges =
@@ -171,17 +235,9 @@ object EngineQueries {
 
     // revenue per part brand: lineitem ⋈ broadcast(part)
     Q("q_eng_join_brand_revenue", (s, d) =>
-      Tables.lineitem(s, d)
-        .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("n_items"),
-          moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("revenue"))
-        .orderBy("p_brand"),
-      s"""SELECT p_brand, count(*) AS n_items,
-                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-          GROUP BY p_brand ORDER BY p_brand"""),
+      brandRevenue(Tables.lineitem(s, d)
+        .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))),
+      sqlBrandRevenue),
 
     // weekday seasonality: order volume + revenue share per weekday.
     // The weekday derives from an anchor-Monday day difference with a
@@ -1065,22 +1121,14 @@ object EngineQueries {
     // oracle runs the PLAIN join — equality proves the salted plan is
     // row-identical while spreading each hot key over 16 reducers
     Q("q_eng_salted_join", (s, d) =>
-      graft.operators.Skew.saltedJoin(
+      brandRevenue(graft.operators.Skew.saltedJoin(
           Tables.lineitem(s, d).select("l_partkey", "l_extendedprice", "l_discount",
             "l_orderkey", "l_linenumber"),
           Tables.part(s, d).select("p_partkey", "p_brand")
             .withColumnRenamed("p_partkey", "l_partkey"),
           key = "l_partkey",
-          saltFrom = Seq(col("l_orderkey"), col("l_linenumber")), buckets = 16)
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("n_items"),
-          moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("revenue"))
-        .orderBy("p_brand"),
-      s"""SELECT p_brand, count(*) AS n_items,
-                 ${sqlMoneySum("l_extendedprice * (1.0 - l_discount)")} AS revenue
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-          GROUP BY p_brand ORDER BY p_brand"""),
+          saltFrom = Seq(col("l_orderkey"), col("l_linenumber")), buckets = 16)),
+      sqlBrandRevenue),
 
     // bucketed-table layout, gated end-to-end (r11 verdict #1): orders
     // and lineitem are WRITTEN bucketed+sorted on orderkey (once per
@@ -1095,31 +1143,12 @@ object EngineQueries {
     // by line revenue, tie-broken on key.
     Q("q_eng_bucketed_join", (s, d) => {
       val (ot, lt) = ensureBucketed(s, d)
-      graft.etl.Bucketing.readBucketed(s, ot)
-        .join(graft.etl.Bucketing.readBucketed(s, lt), "o_orderkey")
-        .groupBy(col("o_orderkey"))
-        .agg(max(col("o_cents")).as("o_cents"),
-          count(lit(1)).as("n_items"),
-          sum(col("qty")).as("sum_qty"),
-          sum(col("l_cents")).as("sum_cents"))
-        .orderBy(col("sum_cents").desc, col("o_orderkey"))
-        .limit(20)
+      bucketedJoin(s, ot, lt)
     },
       // replays the bucketed join over the RAW parquet tables — equality
       // proves the bucketed write+read round-trip is lossless and the
       // zero-exchange plan computes the plain join's answer
-      """WITH j AS (
-           SELECT o.o_orderkey,
-                  CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS oc,
-                  CAST(floor(l.l_quantity + 0.5) AS BIGINT) AS qty,
-                  CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT) AS lc
-           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey)
-         SELECT o_orderkey, CAST(max(oc) AS BIGINT) AS o_cents,
-                CAST(count(*) AS BIGINT) AS n_items,
-                CAST(sum(qty) AS BIGINT) AS sum_qty,
-                CAST(sum(lc) AS BIGINT) AS sum_cents
-         FROM j GROUP BY o_orderkey
-         ORDER BY sum_cents DESC, o_orderkey LIMIT 20"""),
+      sqlBucketedJoin),
 
     // Bucket-count EVOLUTION (r12 verdict #3): the same join across
     // tables bucketed at DIFFERENT counts (orders@16 ⋈ lineitem@32).
@@ -1133,31 +1162,11 @@ object EngineQueries {
     // the coalesced read loses no rows.
     Q("q_eng_bucketed_join_coalesce", (s, d) => {
       val (ot, _) = ensureBucketed(s, d)
-      val lt32 = ensureBucketed32(s, d)
-      graft.etl.Bucketing.readBucketed(s, ot)
-        .join(graft.etl.Bucketing.readBucketed(s, lt32), "o_orderkey")
-        .groupBy(col("o_orderkey"))
-        .agg(max(col("o_cents")).as("o_cents"),
-          count(lit(1)).as("n_items"),
-          sum(col("qty")).as("sum_qty"),
-          sum(col("l_cents")).as("sum_cents"))
-        .orderBy(col("sum_cents").desc, col("o_orderkey"))
-        .limit(20)
+      bucketedJoin(s, ot, ensureBucketed32(s, d))
     },
       // identical replay: the mixed-bucket-count (16 ⋈ 32, coalesced) join
       // must land exactly the raw-parquet join's answer
-      """WITH j AS (
-           SELECT o.o_orderkey,
-                  CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS oc,
-                  CAST(floor(l.l_quantity + 0.5) AS BIGINT) AS qty,
-                  CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT) AS lc
-           FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey)
-         SELECT o_orderkey, CAST(max(oc) AS BIGINT) AS o_cents,
-                CAST(count(*) AS BIGINT) AS n_items,
-                CAST(sum(qty) AS BIGINT) AS sum_qty,
-                CAST(sum(lc) AS BIGINT) AS sum_cents
-         FROM j GROUP BY o_orderkey
-         ORDER BY sum_cents DESC, o_orderkey LIMIT 20"""),
+      sqlBucketedJoin),
 
     // HLL approximate distinct vs exact, asserted within 5% in-plan —
     // the boolean invariant is the cross-engine-checkable part
@@ -1699,30 +1708,12 @@ object EngineQueries {
           iters = 3, broadcastRanks = true) // 2k vertices vs 160k edges
         .orderBy(col("pr").desc, col("node")).limit(25)
     },
-      {
-        def iter(k: Int, prev: String) =
-          s"""c$k AS (SELECT r.node, r.pr // d.deg AS c
-                    FROM $prev r JOIN deg d USING (node)),
-            s$k AS (SELECT e.dst AS node, CAST(sum(c.c) AS BIGINT) AS s
-                    FROM e JOIN c$k c ON e.src = c.node GROUP BY 1),
-            r$k AS (SELECT nodes.node,
-                           15 * (1000000000000 // n.n) // 100
-                             + 85 * coalesce(s$k.s, 0) // 100 AS pr
-                    FROM nodes LEFT JOIN s$k USING (node), n)"""
-        s"""WITH ps AS (SELECT DISTINCT l_partkey * 2 AS pnode,
-                             l_suppkey * 2 + 1 AS snode FROM lineitem),
-          e AS (SELECT pnode AS src, snode AS dst FROM ps
-                UNION ALL SELECT snode, pnode FROM ps),
-          nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-          deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
-                  FROM e GROUP BY 1),
-          n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-          r0 AS (SELECT node, 1000000000000 // n.n AS pr FROM nodes, n),
-          ${iter(1, "r0")},
-          ${iter(2, "r1")},
-          ${iter(3, "r2")}
-          SELECT node, pr FROM r3 ORDER BY pr DESC, node LIMIT 25"""
-      }),
+      s"""WITH ps AS (SELECT DISTINCT l_partkey * 2 AS pnode,
+                           l_suppkey * 2 + 1 AS snode FROM lineitem),
+        e AS (SELECT pnode AS src, snode AS dst FROM ps
+              UNION ALL SELECT snode, pnode FROM ps),
+        ${sqlIntegerPageRank(3)}
+        SELECT node, pr FROM r3 ORDER BY pr DESC, node LIMIT 25"""),
 
     // 7-day rolling revenue: RANGE frame over the pre-aggregated daily
     // table (cardinality = distinct days — tiny at any corpus scale, so
@@ -2502,10 +2493,7 @@ object EngineQueries {
     // through day revenues of ~1e16 cents, and the floor division goes
     // through mulDivWide so both engines round identically.
     Q("q_eng_ewma", (s, d) => {
-      val daily = dailyRevenue(s, d, "rev_cents")
-      daily
-        .agg(sort_array(collect_list(struct(col("day"), col("rev_cents"))))
-          .as("xs"))
+      dailyRevenueSeries(s, d)
         .select(explode(aggregate(
           col("xs"),
           expr("CAST(array() AS ARRAY<STRUCT<day: DATE, rev_cents: BIGINT, ewma_cents: BIGINT>>)"),
@@ -2529,12 +2517,7 @@ object EngineQueries {
       // recursive CTE walks the bounded day series one step per iteration —
       // the sequential recurrence the Spark side runs via aggregate() on the
       // collected day array; per-mille integer arithmetic matches exactly
-      s"""WITH RECURSIVE daily AS (
-           ${sqlDailyRevenue("rev_cents")}),
-         idx AS (
-           SELECT day, rev_cents,
-                  CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
-           FROM daily),
+      s"""$sqlDailyRevenueSeries,
          r AS (
            SELECT i, day, rev_cents, rev_cents AS ewma_cents
            FROM idx WHERE i = 1
@@ -2960,10 +2943,7 @@ object EngineQueries {
     // toward zero — mulDivWideSigned mirrors that, not floor).
     Q("q_eng_holt", (s, d) => {
       import graft.functions.WideDiv.mulDivWideSigned
-      val daily = dailyRevenue(s, d, "rev_cents")
-      daily
-        .agg(sort_array(collect_list(struct(col("day"), col("rev_cents"))))
-          .as("xs"))
+      dailyRevenueSeries(s, d)
         .select(explode(aggregate(
           col("xs"),
           expr("CAST(array() AS ARRAY<STRUCT<day: DATE, rev_cents: BIGINT, level_cents: BIGINT, trend_cents: BIGINT>>)"),
@@ -2995,12 +2975,7 @@ object EngineQueries {
       // the trend recurrence repeats the level expression (SQL cannot
       // reference a same-SELECT alias); HUGEINT `//` truncates toward zero,
       // matching mulDivWideSigned exactly on the signed trend
-      s"""WITH RECURSIVE daily AS (
-           ${sqlDailyRevenue("rev_cents")}),
-         idx AS (
-           SELECT day, rev_cents,
-                  CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i
-           FROM daily),
+      s"""$sqlDailyRevenueSeries,
          r AS (
            SELECT i, day, rev_cents, rev_cents AS level_cents,
                   CAST(0 AS BIGINT) AS trend_cents

@@ -128,21 +128,24 @@ object EvalQueries {
           + col("unc_ppm2")))
   }
 
-  /** Benjamini–Hochberg step-up over a (name, p_ub_ppm) frame: rank by
-    * (p asc, name asc), reject ranks ≤ max{i : p_(i)·m ≤ i·α·1e6}. Factored
-    * out so the property spec can drive synthetic p-value frames with
-    * mixed accept/reject outcomes through the SAME code path the fixture
-    * query uses (the fixture is deliberately uniform, so the honest gate
-    * result rejects nothing and would leave this branch unexercised).
-    * The Window is over the caller's BOUNDED test-family domain. */
+  /** [[scored]] orders with their customer's `c_nationkey`. */
+  private def scoredNations(s: SparkSession, d: String): DataFrame =
+    scored(s, d)
+      .join(Tables.customer(s, d)
+        .select(col("c_custkey"), col("c_nationkey")),
+        col("o_custkey") === col("c_custkey"))
+
+  /** DuckDB oracle twin for [[scoredNations]] over a `scored` CTE:
+    * `oc(c_nationkey, label)`. */
+  private val sqlScoredNations =
+    """oc AS (SELECT c_nationkey, label FROM scored s
+              JOIN customer c ON s.o_custkey = c.c_custkey)"""
+
   /** Per-nation Chebyshev p-value upper bounds on the return-rate test —
     * the (n_name, p_ub_ppm) frame both FDR procedures rank. See
     * q_eng_fdr_bh's comment for the two-step dev-division contract. */
   private def nationReturnPv(s: SparkSession, d: String): DataFrame = {
-    val oc = scored(s, d)
-      .join(Tables.customer(s, d)
-        .select(col("c_custkey"), col("c_nationkey")),
-        col("o_custkey") === col("c_custkey"))
+    val oc = scoredNations(s, d)
     val byNation = oc.groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("n"), sum(col("label")).as("pos"))
     val tot = byNation
@@ -162,6 +165,53 @@ object EvalQueries {
       .select(col("n_name"), col("p_ub_ppm"))
   }
 
+  /** DuckDB oracle twin for [[nationReturnPv]] and the rank [[stepUp]]
+    * gives it, over a `scored` CTE: CTEs `oc`, `bn`, `t`, `pv`, `pp` and
+    * `rk(n_name, p_ub_ppm, rk, m)`. */
+  private val sqlNationReturnRanks =
+    s"""$sqlScoredNations,
+       bn AS (SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n,
+                     CAST(sum(label) AS BIGINT) AS pos
+              FROM oc GROUP BY 1),
+       t AS (SELECT CAST(sum(n) AS BIGINT) AS n_tot,
+                    CAST(sum(pos) AS BIGINT) AS pos_tot FROM bn),
+       pv AS (SELECT n_name,
+                     abs(CAST(pos AS HUGEINT) * t.n_tot
+                         - CAST(n AS HUGEINT) * t.pos_tot) AS dev,
+                     CAST(n AS HUGEINT) * t.pos_tot * (t.n_tot - t.pos_tot)
+                       AS varnum
+              FROM bn CROSS JOIN t
+              JOIN nation ON bn.c_nationkey = n_nationkey),
+       pp AS (SELECT n_name,
+                     CASE WHEN dev = 0 THEN 1000000
+                          WHEN varnum // dev >= dev THEN 1000000
+                          ELSE CAST((varnum // dev) * 1000000 // dev
+                                    AS BIGINT) END AS p_ub_ppm
+              FROM pv),
+       rk AS (SELECT n_name, p_ub_ppm,
+                     CAST(row_number() OVER (ORDER BY p_ub_ppm, n_name)
+                       AS BIGINT) AS rk,
+                     CAST(count(*) OVER () AS BIGINT) AS m
+              FROM pp)"""
+
+  /** `sc(cents, n1, n2)`: urgent and other orders per distinct `cents` of
+    * a `scored` CTE — the two-sample counts of q_eng_ks_test and
+    * q_eng_mann_whitney. */
+  private val sqlUrgentCounts =
+    """sc AS (SELECT cents,
+                     CAST(sum(CASE WHEN o_orderpriority = '1-URGENT'
+                       THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+                     CAST(count(*) - sum(CASE WHEN o_orderpriority =
+                       '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS n2
+              FROM scored GROUP BY 1)"""
+
+  /** Benjamini–Hochberg step-up over a (name, p_ub_ppm) frame: rank by
+    * (p asc, name asc), reject ranks ≤ max{i : p_(i)·m ≤ i·α·1e6}. Factored
+    * out so the property spec can drive synthetic p-value frames with
+    * mixed accept/reject outcomes through the SAME code path the fixture
+    * query uses (the fixture is deliberately uniform, so the honest gate
+    * result rejects nothing and would leave this branch unexercised).
+    * The Window is over the caller's BOUNDED test-family domain. */
   private[queries] def bhStepUp(pv: DataFrame, alphaPpm: Long): DataFrame =
     stepUp(pv, alphaPpm, harmonic = false)
 
@@ -362,12 +412,7 @@ object EvalQueries {
           col("t1").as("n_urgent"), col("t2").as("n_other"))
     },
       s"""WITH $scoredSql,
-         sc AS (SELECT cents,
-                       CAST(sum(CASE WHEN o_orderpriority = '1-URGENT'
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-                       CAST(count(*) - sum(CASE WHEN o_orderpriority =
-                         '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS n2
-                FROM scored GROUP BY 1),
+         $sqlUrgentCounts,
          cumt AS (SELECT
                     CAST(sum(n1) OVER w AS BIGINT) AS cum1,
                     CAST(sum(n2) OVER w AS BIGINT) AS cum2
@@ -402,12 +447,7 @@ object EvalQueries {
         .withColumnRenamed("n_a", "n_urgent")
         .withColumnRenamed("n_b", "n_other"),
       s"""WITH $scoredSql,
-         sc AS (SELECT cents,
-                       CAST(sum(CASE WHEN o_orderpriority = '1-URGENT'
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-                       CAST(count(*) - sum(CASE WHEN o_orderpriority =
-                         '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS n2
-                FROM scored GROUP BY 1),
+         $sqlUrgentCounts,
          cumt AS (SELECT n1, n2,
                     CAST(sum(n1) OVER w AS BIGINT) AS cum1,
                     CAST(sum(n2) OVER w AS BIGINT) AS cum2
@@ -694,10 +734,7 @@ object EvalQueries {
     // the same broadcast of per-nation stats this plan builds. Orders join
     // customers on the one custkey shuffle; nation names broadcast.
     Q("q_eng_target_encode", (s, d) => {
-      val oc = scored(s, d)
-        .join(Tables.customer(s, d)
-          .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
+      val oc = scoredNations(s, d)
       val byLabel = oc.groupBy(col("c_nationkey"), col("label"))
         .agg(count(lit(1)).as("n_rows"))
       val stats = oc.groupBy(col("c_nationkey").as("nk"))
@@ -712,8 +749,7 @@ object EvalQueries {
         .orderBy(col("n_name"), col("label"))
     },
       s"""WITH $scoredSql,
-         oc AS (SELECT c_nationkey, label FROM scored s
-                JOIN customer c ON s.o_custkey = c.c_custkey),
+         $sqlScoredNations,
          bl AS (SELECT c_nationkey, label, CAST(count(*) AS BIGINT) AS n_rows
                 FROM oc GROUP BY 1, 2),
          st AS (SELECT c_nationkey AS nk, CAST(count(*) AS BIGINT) AS n,
@@ -791,31 +827,7 @@ object EvalQueries {
       // mirrors the two-step truncating division verbatim (HUGEINT `//` is
       // floor division; operands non-negative here)
       s"""WITH $scoredSql,
-         oc AS (SELECT c_nationkey, label FROM scored s
-                JOIN customer c ON s.o_custkey = c.c_custkey),
-         bn AS (SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n,
-                       CAST(sum(label) AS BIGINT) AS pos
-                FROM oc GROUP BY 1),
-         t AS (SELECT CAST(sum(n) AS BIGINT) AS n_tot,
-                      CAST(sum(pos) AS BIGINT) AS pos_tot FROM bn),
-         pv AS (SELECT n_name,
-                       abs(CAST(pos AS HUGEINT) * t.n_tot
-                           - CAST(n AS HUGEINT) * t.pos_tot) AS dev,
-                       CAST(n AS HUGEINT) * t.pos_tot * (t.n_tot - t.pos_tot)
-                         AS varnum
-                FROM bn CROSS JOIN t
-                JOIN nation ON bn.c_nationkey = n_nationkey),
-         pp AS (SELECT n_name,
-                       CASE WHEN dev = 0 THEN 1000000
-                            WHEN varnum // dev >= dev THEN 1000000
-                            ELSE CAST((varnum // dev) * 1000000 // dev
-                                      AS BIGINT) END AS p_ub_ppm
-                FROM pv),
-         rk AS (SELECT n_name, p_ub_ppm,
-                       CAST(row_number() OVER (ORDER BY p_ub_ppm, n_name)
-                         AS BIGINT) AS rk,
-                       CAST(count(*) OVER () AS BIGINT) AS m
-                FROM pp),
+         $sqlNationReturnRanks,
          km AS (SELECT max(CASE WHEN p_ub_ppm * m <= rk * 50000
                                 THEN rk END) AS kmax FROM rk)
          SELECT n_name, p_ub_ppm, rk,
@@ -833,31 +845,7 @@ object EvalQueries {
       // BY: same chain as BH with the exact integer harmonic factor in the
       // step-up comparison (list comprehension over the bounded family)
       s"""WITH $scoredSql,
-         oc AS (SELECT c_nationkey, label FROM scored s
-                JOIN customer c ON s.o_custkey = c.c_custkey),
-         bn AS (SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n,
-                       CAST(sum(label) AS BIGINT) AS pos
-                FROM oc GROUP BY 1),
-         t AS (SELECT CAST(sum(n) AS BIGINT) AS n_tot,
-                      CAST(sum(pos) AS BIGINT) AS pos_tot FROM bn),
-         pv AS (SELECT n_name,
-                       abs(CAST(pos AS HUGEINT) * t.n_tot
-                           - CAST(n AS HUGEINT) * t.pos_tot) AS dev,
-                       CAST(n AS HUGEINT) * t.pos_tot * (t.n_tot - t.pos_tot)
-                         AS varnum
-                FROM bn CROSS JOIN t
-                JOIN nation ON bn.c_nationkey = n_nationkey),
-         pp AS (SELECT n_name,
-                       CASE WHEN dev = 0 THEN 1000000
-                            WHEN varnum // dev >= dev THEN 1000000
-                            ELSE CAST((varnum // dev) * 1000000 // dev
-                                      AS BIGINT) END AS p_ub_ppm
-                FROM pv),
-         rk AS (SELECT n_name, p_ub_ppm,
-                       CAST(row_number() OVER (ORDER BY p_ub_ppm, n_name)
-                         AS BIGINT) AS rk,
-                       CAST(count(*) OVER () AS BIGINT) AS m
-                FROM pp),
+         $sqlNationReturnRanks,
          hm AS (SELECT CAST(list_sum(
                   [1000000 // i for i in range(1, m + 1)]) AS BIGINT) AS h,
                        n_name, p_ub_ppm, rk, m

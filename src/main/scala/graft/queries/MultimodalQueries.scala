@@ -54,6 +54,16 @@ object MultimodalQueries {
                 CAST(n_chars * 40 AS BIGINT) AS duration_ms
          FROM documents)"""
 
+  /** `f(media_id, h, frame_idx)` over [[bytesCte]]'s `m`: the frames
+    * `Multimodal.sampleFrames(_, 8)` keeps of each video. */
+  private val framesCte =
+    """v AS (SELECT media_id, h, duration_ms FROM m WHERE media_type = 'video'),
+          f AS (
+            SELECT media_id, h,
+                   unnest(range(0, least(CAST(floor(duration_ms / 1000.0) AS BIGINT), 7) + 1))
+                     AS frame_idx
+            FROM v)"""
+
   /** `${p}b(media_id, bytes)`: the payload bytes of the `mediaType` rows
     * of `from`. */
   private def bytesOf(mediaType: String, p: String = "",
@@ -147,12 +157,7 @@ object MultimodalQueries {
     Q("q_mm_frame_sample", (s, d) =>
       Multimodal.sampleFrames(media(s, d), 8).orderBy("media_id", "frame_idx"),
       s"""$bytesCte,
-          v AS (SELECT media_id, h, duration_ms FROM m WHERE media_type = 'video'),
-          f AS (
-            SELECT media_id, h,
-                   unnest(range(0, least(CAST(floor(duration_ms / 1000.0) AS BIGINT), 7) + 1))
-                     AS frame_idx
-            FROM v)
+          $framesCte
           SELECT media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
                  md5(h || ':' || CAST(frame_idx AS VARCHAR)) AS frame_key
           FROM f ORDER BY media_id, frame_idx"""),
@@ -384,12 +389,7 @@ object MultimodalQueries {
       Multimodal.sceneChanges(media(s, d), 8, threshold = 25)
         .orderBy("media_id", "boundary_frame"),
       s"""$bytesCte,
-          v AS (SELECT media_id, h, duration_ms FROM m WHERE media_type = 'video'),
-          f AS (
-            SELECT media_id, h,
-                   unnest(range(0, least(CAST(floor(duration_ms / 1000.0) AS BIGINT), 7) + 1))
-                     AS frame_idx
-            FROM v),
+          $framesCte,
           k AS (SELECT media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
                        CAST('0x' || substr(md5(h || ':' || CAST(frame_idx AS VARCHAR)), 1, 15)
                          AS BIGINT) AS sig

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.queries.QueryBlocks.{epochManifest, sqlTrainTokens, trainTokens}
 import graft.text.TextFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -48,27 +49,9 @@ object PipelineQueries {
         .select(col("keep_id").as("doc_id"))
       val deduped = filtered.join(keep, Seq("doc_id"))
       // leakage-safe split on the CONTENT hash (train = buckets 0-79) +
-      // whitespace token mass for the packer
-      val base = deduped.select(col("doc_id"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
-          TextFunctions.splitBucket(md5(col("text"))).as("bucket"))
-        .where(col("bucket") < 80)
-        .drop("bucket")
-      // epoch-0 deterministic shuffle order (md5 key ++ zero-padded id —
-      // total order, replayable on any executor count), then 512-token
+      // whitespace token mass, then the epoch-0 shuffle order, 512-token
       // bins and the per-bin manifest a trainer consumes
-      val keyed = base.withColumn("okey",
-        concat(md5(concat(lit("epoch0:"), col("doc_id").cast("string"))),
-          lpad(col("doc_id").cast("string"), 12, "0")))
-      graft.operators.Packing.packByBudget(keyed, col("okey"),
-          col("n_tokens"), budget = 512L)
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("total_tokens"),
-          md5(array_join(transform(
-            array_sort(collect_list(struct(col("okey"), col("doc_id")))),
-            x => x.getField("doc_id").cast("string")), ","))
-            .as("manifest_md5"))
+      epochManifest(trainTokens(deduped), 0L)
         .orderBy("bin")
     },
       // full-chain replay: filter → fingerprint dedup → split → epoch key →
@@ -82,13 +65,7 @@ object PipelineQueries {
                FROM f),
          keep AS (SELECT min(doc_id) AS doc_id FROM n GROUP BY fp),
          ded AS (SELECT n.doc_id, n.text FROM n JOIN keep USING (doc_id)),
-         base AS (
-           SELECT doc_id,
-                  CAST(${TextFunctions.sqlTokenCount("text")} AS BIGINT) AS n_tokens,
-                  CAST('0x' || substr(md5(md5(text)), 1, 4) AS BIGINT) % 100
-                    AS bucket
-           FROM ded),
-         tr AS (SELECT doc_id, n_tokens FROM base WHERE bucket < 80),
+         ${sqlTrainTokens("ded")},
          k AS (
            SELECT doc_id, n_tokens,
                   md5('epoch0:' || CAST(doc_id AS VARCHAR)) ||

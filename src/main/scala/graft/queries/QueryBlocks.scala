@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.WideDiv.{decSumToDouble, sqlDecSumToDouble}
+import graft.text.TextFunctions.{splitBucket, sqlTokenCount, tokenCount}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -75,8 +76,55 @@ object QueryBlocks {
                       count(*) OVER (PARTITION BY lang) AS m
                FROM kk)"""
 
+  /** Quantiles `ps` (in percent) of each [[sqlLangLengthSample]] group,
+    * as BIGINT columns `q<p>`. */
+  def sqlSampleQuantiles(ps: Int*): String =
+    ps.map(p => s"CAST(max(CASE WHEN rn = (m-1)*$p//100 + 1 THEN n_chars END) AS BIGINT) AS q$p")
+      .mkString(",\n")
+
   /** `<cte>(<cols>, v)`: the embeddings table with each vector as a
     * DOUBLE list `v` (the oracle side of `Tables.embeddings`). */
   def sqlEmbeddings(cte: String = "e", cols: String = "vec_id"): String =
     s"$cte AS (SELECT $cols, embedding::DOUBLE[] AS v FROM embeddings)"
+
+  /** The train split of `docs(doc_id, text)` — content-hash buckets 0–79,
+    * leakage-safe — with each document's whitespace token count
+    * `n_tokens`: the packer's input. */
+  def trainTokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        tokenCount(col("text")).cast("long").as("n_tokens"),
+        splitBucket(md5(col("text"))).as("bucket"))
+      .where(col("bucket") < 80)
+      .drop("bucket")
+
+  /** DuckDB oracle twin for [[trainTokens]] over the table or CTE `from`:
+    * CTEs `base` and `tr(doc_id, n_tokens)`. */
+  def sqlTrainTokens(from: String): String =
+    s"""base AS (
+           SELECT doc_id,
+                  CAST(${sqlTokenCount("text")} AS BIGINT) AS n_tokens,
+                  CAST('0x' || substr(md5(md5(text)), 1, 4) AS BIGINT) % 100
+                    AS bucket
+           FROM $from),
+         tr AS (SELECT doc_id, n_tokens FROM base WHERE bucket < 80)"""
+
+  /** Epoch `e`'s training manifest over `base(doc_id, n_tokens)`: the
+    * deterministic epoch shuffle order (md5 key ++ zero-padded id — a
+    * total order, replayable on any executor count), 512-token bins, and
+    * per bin its doc count, token mass and the md5 of its doc_id
+    * sequence in pack order. */
+  def epochManifest(base: DataFrame, e: Long): DataFrame = {
+    val keyed = base.withColumn("okey",
+      concat(md5(concat(lit(s"epoch$e:"), col("doc_id").cast("string"))),
+        lpad(col("doc_id").cast("string"), 12, "0")))
+    graft.operators.Packing.packByBudget(keyed, col("okey"),
+        col("n_tokens"), budget = 512L)
+      .groupBy(col("bin"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("n_tokens")).as("total_tokens"),
+        md5(array_join(transform(
+          array_sort(collect_list(struct(col("okey"), col("doc_id")))),
+          x => x.getField("doc_id").cast("string")), ","))
+          .as("manifest_md5"))
+  }
 }

@@ -195,6 +195,38 @@ object SimilarityQueries {
   /** 8-dim-prefix variant of [[cosSql]] (the Matryoshka truncation arm). */
   private val cos8Sql = Similarity.sqlCosine("x.v[1:8]", "y.v[1:8]")
 
+  /** `<cte>(qid, nid, cos)`: every query vector (vec_id < QuerySetMax)
+    * against every other vector of `e`, by exact cosine. */
+  private def bruteCosCte(cte: String = "scored"): String =
+    s"""$cte AS (
+            SELECT x.vec_id AS qid, y.vec_id AS nid, $cosSql AS cos
+            FROM e x JOIN e y ON y.vec_id != x.vec_id
+            WHERE x.vec_id < $QuerySetMax)"""
+
+  /** The cell-restricted search of [[Similarity.ivfTopKProbes]] at k = 3
+    * over CTEs `q(qid, qv, cell)` and `c(nid, nv, cell)`, through the
+    * query's final SELECT. */
+  private val ivfSearchSql =
+    s"""cos AS (
+            SELECT qid, nid,
+                   ${Similarity.sqlCosine("qv", "nv")} AS cos
+            FROM q JOIN c USING (cell) WHERE qid != nid),
+          r AS (
+            SELECT qid, nid, cos,
+                   CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS BIGINT) AS rank
+            FROM cos)
+          SELECT qid, nid, rank, cos FROM r WHERE rank <= 3 ORDER BY qid, rank"""
+
+  /** The top-3 by ADC distance per query over a CTE
+    * `adc(qid, nid, adist_micro2)`, through the query's final SELECT. */
+  private val adcTop3Sql =
+    """r AS (SELECT qid, nid, adist_micro2,
+                      CAST(row_number() OVER (PARTITION BY qid
+                        ORDER BY adist_micro2, nid) AS BIGINT) AS rank
+               FROM adc)
+         SELECT qid, nid, rank, adist_micro2 FROM r WHERE rank <= 3
+         ORDER BY qid, rank"""
+
   val registry: Seq[Q] = Seq(
     // exact brute-force cosine top-5: broadcast query set × corpus scan
     Q("q_sim_topk_brute", (s, d) => {
@@ -204,10 +236,7 @@ object SimilarityQueries {
         .orderBy("qid", "rank")
     },
       s"""WITH ${sqlEmbeddings()},
-          scored AS (
-            SELECT x.vec_id AS qid, y.vec_id AS nid, $cosSql AS cos
-            FROM e x JOIN e y ON y.vec_id != x.vec_id
-            WHERE x.vec_id < $QuerySetMax),
+          ${bruteCosCte()},
           r AS (
             SELECT qid, nid, cos,
                    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS BIGINT) AS rank
@@ -393,10 +422,7 @@ object SimilarityQueries {
         .orderBy("qid", "pick")
     },
       s"""WITH ${sqlEmbeddings()},
-          scored AS (
-            SELECT x.vec_id AS qid, y.vec_id AS nid, $cosSql AS cos
-            FROM e x JOIN e y ON y.vec_id != x.vec_id
-            WHERE x.vec_id < $QuerySetMax),
+          ${bruteCosCte()},
           cand AS (
             SELECT qid, nid, cos FROM (
               SELECT qid, nid, cos,
@@ -475,10 +501,7 @@ object SimilarityQueries {
       // can only drift if one of those does
       s"""WITH ${TextQueries.bm25RankCte()},
           ${sqlEmbeddings()},
-          scored AS (
-            SELECT x.vec_id AS qid, y.vec_id AS nid, $cosSql AS cos
-            FROM e x JOIN e y ON y.vec_id != x.vec_id
-            WHERE x.vec_id < $QuerySetMax),
+          ${bruteCosCte()},
           vecr AS (
             SELECT qid, nid,
                    CAST(row_number() OVER (PARTITION BY qid
@@ -535,28 +558,10 @@ object SimilarityQueries {
         nCentroids = 8, queryMaxId = QuerySetMax, k = 3)
         .orderBy("qid", "rank"),
       s"""WITH ${sqlEmbeddings()},
-          cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-          scored AS (
-            SELECT e.vec_id AS id, e.v, cid,
-                   ${dotSql("v", "cv")} AS score
-            FROM e CROSS JOIN cents),
-          assigned AS (
-            SELECT id, v, cid AS cell
-            FROM (SELECT id, v, cid,
-                         row_number() OVER (PARTITION BY id ORDER BY score DESC, cid) AS rn
-                  FROM scored)
-            WHERE rn = 1),
+          ${Similarity.sqlIvfAssign(8)},
           q AS (SELECT id AS qid, v AS qv, cell FROM assigned WHERE id < $QuerySetMax),
           c AS (SELECT id AS nid, v AS nv, cell FROM assigned),
-          cos AS (
-            SELECT qid, nid,
-                   ${Similarity.sqlCosine("qv", "nv")} AS cos
-            FROM q JOIN c USING (cell) WHERE qid != nid),
-          r AS (
-            SELECT qid, nid, cos,
-                   CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS BIGINT) AS rank
-            FROM cos)
-          SELECT qid, nid, rank, cos FROM r WHERE rank <= 3 ORDER BY qid, rank"""),
+          $ivfSearchSql"""),
 
     // multi-probe IVF (nprobe = 2): queries search their two nearest cells
     // — the standard fix for single-probe's recall cliff at Voronoi edges
@@ -575,15 +580,7 @@ object SimilarityQueries {
           c AS (SELECT id AS nid, v AS nv, cid AS cell FROM ranked WHERE rn = 1),
           q AS (SELECT id AS qid, v AS qv, cid AS cell FROM ranked
                 WHERE rn <= 2 AND id < $QuerySetMax),
-          cos AS (
-            SELECT qid, nid,
-                   ${Similarity.sqlCosine("qv", "nv")} AS cos
-            FROM q JOIN c USING (cell) WHERE qid != nid),
-          r AS (
-            SELECT qid, nid, cos,
-                   CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS BIGINT) AS rank
-            FROM cos)
-          SELECT qid, nid, rank, cos FROM r WHERE rank <= 3 ORDER BY qid, rank"""),
+          $ivfSearchSql"""),
 
     // clustering quality readout: per-cell mean of the centroid-based
     // silhouette (squared-distance form, per-point micro-quantized at the
@@ -816,16 +813,7 @@ object SimilarityQueries {
         .orderBy("qid")
     },
       s"""WITH ${sqlEmbeddings()},
-          cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-          scored AS (
-            SELECT e.vec_id AS id, e.v, cid, ${dotSql("v", "cv")} AS score
-            FROM e CROSS JOIN cents),
-          assigned AS (
-            SELECT id, v, cid AS cell
-            FROM (SELECT id, v, cid,
-                         row_number() OVER (PARTITION BY id ORDER BY score DESC, cid) AS rn
-                  FROM scored)
-            WHERE rn = 1),
+          ${Similarity.sqlIvfAssign(8)},
           q AS (SELECT id AS qid, v AS qv, cell FROM assigned WHERE id < $QuerySetMax),
           c AS (SELECT id AS nid, v AS nv, cell FROM assigned),
           icos AS (
@@ -837,10 +825,7 @@ object SimilarityQueries {
                               row_number() OVER (PARTITION BY qid
                                 ORDER BY cos DESC, nid) AS rank
                        FROM icos) WHERE rank <= 3),
-          bcos AS (
-            SELECT x.vec_id AS qid, y.vec_id AS nid, $cosSql AS cos
-            FROM e x JOIN e y ON y.vec_id != x.vec_id
-            WHERE x.vec_id < $QuerySetMax),
+          ${bruteCosCte("bcos")},
           b3 AS (SELECT qid, nid
                  FROM (SELECT qid, nid,
                               row_number() OVER (PARTITION BY qid
@@ -1064,12 +1049,7 @@ object SimilarityQueries {
            SELECT dt.qid, c.id AS nid, CAST(sum(dt.d2q) AS BIGINT) AS adist_micro2
            FROM codes c JOIN dt ON c.m = dt.m AND c.code = dt.cid
            WHERE c.id != dt.qid GROUP BY 1, 2),
-         r AS (SELECT qid, nid, adist_micro2,
-                      CAST(row_number() OVER (PARTITION BY qid
-                        ORDER BY adist_micro2, nid) AS BIGINT) AS rank
-               FROM adc)
-         SELECT qid, nid, rank, adist_micro2 FROM r WHERE rank <= 3
-         ORDER BY qid, rank"""),
+         $adcTop3Sql"""),
 
     // IVF-PQ: coarse cells (nprobe = 2) restrict candidates, PQ codes
     // supply the distances — the FAISS IndexIVFPQ composition, fully
@@ -1099,12 +1079,7 @@ object SimilarityQueries {
            FROM cand JOIN codes c ON c.id = cand.nid
            JOIN dt ON dt.qid = cand.qid AND dt.m = c.m AND dt.cid = c.code
            GROUP BY 1, 2),
-         r AS (SELECT qid, nid, adist_micro2,
-                      CAST(row_number() OVER (PARTITION BY qid
-                        ORDER BY adist_micro2, nid) AS BIGINT) AS rank
-               FROM adc)
-         SELECT qid, nid, rank, adist_micro2 FROM r WHERE rank <= 3
-         ORDER BY qid, rank"""),
+         $adcTop3Sql"""),
 
     // seeded Rademacher random projection 64 → 8 dims (JL sketch)
     Q("q_sim_rproj", (s, d) => {
@@ -1149,10 +1124,7 @@ object SimilarityQueries {
         .orderBy("qid")
     },
       s"""WITH ${sqlEmbeddings()},
-          fs AS (
-            SELECT x.vec_id AS qid, y.vec_id AS nid, $cosSql AS cos
-            FROM e x JOIN e y ON y.vec_id != x.vec_id
-            WHERE x.vec_id < $QuerySetMax),
+          ${bruteCosCte("fs")},
           fr AS (SELECT qid, nid FROM (
                    SELECT qid, nid, row_number() OVER (PARTITION BY qid
                      ORDER BY cos DESC, nid) AS rk FROM fs) WHERE rk <= 5),
@@ -1189,17 +1161,7 @@ object SimilarityQueries {
         .orderBy("cell")
     },
       s"""WITH ${sqlEmbeddings()},
-          cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-          scored AS (
-            SELECT e.vec_id AS id, cid, ${dotSql("v", "cv")} AS score
-            FROM e CROSS JOIN cents),
-          assigned AS (
-            SELECT id, cid AS cell
-            FROM (SELECT id, cid,
-                         row_number() OVER (PARTITION BY id
-                           ORDER BY score DESC, cid) AS rn
-                  FROM scored)
-            WHERE rn = 1),
+          ${Similarity.sqlIvfAssign(8, withVectors = false)},
           cells AS (SELECT cell, CAST(count(*) AS BIGINT) AS n
                     FROM assigned GROUP BY 1),
           st AS (SELECT CAST(sum(n) AS BIGINT) AS tot,
@@ -1463,17 +1425,7 @@ object SimilarityQueries {
         .orderBy("qid")
     },
       s"""WITH ${sqlEmbeddings()},
-          cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-          scored AS (
-            SELECT e.vec_id AS id, cid, ${dotSql("v", "cv")} AS score
-            FROM e CROSS JOIN cents),
-          assigned AS (
-            SELECT id, cid AS cell
-            FROM (SELECT id, cid,
-                         row_number() OVER (PARTITION BY id
-                           ORDER BY score DESC, cid) AS rn
-                  FROM scored)
-            WHERE rn = 1),
+          ${Similarity.sqlIvfAssign(8, withVectors = false)},
           sizes AS (SELECT cell, CAST(count(*) AS BIGINT) AS csize
                     FROM assigned GROUP BY 1),
           n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM assigned)

@@ -47,24 +47,24 @@ object StatsQueries {
       .withColumn("ar2", (col("cumt") - col("t")) * 2L + col("t") + 1L)
   }
 
+  /** `f(g)` for each priority group g = 1..5, joined by `sep`: the SQL
+    * side of the Spark bodies' `(1 to 5).map`. */
+  private def perGroup(f: Int => String, sep: String = ",\n"): String =
+    (1 to 5).map(f).mkString(sep)
+
+  /** `ng_1 + … + ng_5`: the group sizes' total N. */
+  private val sqlN = perGroup(g => s"ng_$g", " + ")
+
   private val rankedSql =
     s"""dist AS (SELECT cents,
-                 CAST(sum(CASE WHEN p = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-                 CAST(sum(CASE WHEN p = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-                 CAST(sum(CASE WHEN p = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
-                 CAST(sum(CASE WHEN p = 4 THEN 1 ELSE 0 END) AS BIGINT) AS n4,
-                 CAST(sum(CASE WHEN p = 5 THEN 1 ELSE 0 END) AS BIGINT) AS n5,
+                 ${perGroup(g => s"CAST(sum(CASE WHEN p = $g THEN 1 ELSE 0 END) AS BIGINT) AS n$g")},
                  CAST(count(*) AS BIGINT) AS t
           FROM (SELECT cents,
                        CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS p
                 FROM scored)
           GROUP BY 1),
        cumt AS (SELECT *,
-                  CAST(sum(n1) OVER w AS BIGINT) AS c1,
-                  CAST(sum(n2) OVER w AS BIGINT) AS c2,
-                  CAST(sum(n3) OVER w AS BIGINT) AS c3,
-                  CAST(sum(n4) OVER w AS BIGINT) AS c4,
-                  CAST(sum(n5) OVER w AS BIGINT) AS c5,
+                  ${perGroup(g => s"CAST(sum(n$g) OVER w AS BIGINT) AS c$g")},
                   CAST(2 * (sum(t) OVER w - t) + t + 1 AS BIGINT) AS ar2
                 FROM dist
                 WINDOW w AS (ORDER BY cents
@@ -100,56 +100,28 @@ object StatsQueries {
       a.select(n.as("n"), lit(5L).as("k_groups"), h.as("h"),
         (h / c).as("h_tie_corrected"))
     },
-      s"""WITH $scoredSql, $rankedSql,
-         a AS (SELECT
-                 CAST(sum(CAST(n1 AS HUGEINT) * ar2) AS HUGEINT) AS r2_1,
-                 CAST(sum(CAST(n2 AS HUGEINT) * ar2) AS HUGEINT) AS r2_2,
-                 CAST(sum(CAST(n3 AS HUGEINT) * ar2) AS HUGEINT) AS r2_3,
-                 CAST(sum(CAST(n4 AS HUGEINT) * ar2) AS HUGEINT) AS r2_4,
-                 CAST(sum(CAST(n5 AS HUGEINT) * ar2) AS HUGEINT) AS r2_5,
-                 CAST(sum(n1) AS BIGINT) AS ng_1,
-                 CAST(sum(n2) AS BIGINT) AS ng_2,
-                 CAST(sum(n3) AS BIGINT) AS ng_3,
-                 CAST(sum(n4) AS BIGINT) AS ng_4,
-                 CAST(sum(n5) AS BIGINT) AS ng_5,
-                 CAST(sum(CAST(t AS HUGEINT) * t * t - t) AS HUGEINT) AS ties
-               FROM cumt)
-         SELECT CAST(ng_1 + ng_2 + ng_3 + ng_4 + ng_5 AS BIGINT) AS n,
-                CAST(5 AS BIGINT) AS k_groups,
-                3.0 * (CAST(r2_1 AS DOUBLE) * CAST(r2_1 AS DOUBLE)
-                         / CAST(ng_1 AS DOUBLE)
-                     + CAST(r2_2 AS DOUBLE) * CAST(r2_2 AS DOUBLE)
-                         / CAST(ng_2 AS DOUBLE)
-                     + CAST(r2_3 AS DOUBLE) * CAST(r2_3 AS DOUBLE)
-                         / CAST(ng_3 AS DOUBLE)
-                     + CAST(r2_4 AS DOUBLE) * CAST(r2_4 AS DOUBLE)
-                         / CAST(ng_4 AS DOUBLE)
-                     + CAST(r2_5 AS DOUBLE) * CAST(r2_5 AS DOUBLE)
-                         / CAST(ng_5 AS DOUBLE))
-                  / (CAST(ng_1 + ng_2 + ng_3 + ng_4 + ng_5 AS DOUBLE)
-                     * CAST(ng_1 + ng_2 + ng_3 + ng_4 + ng_5 + 1 AS DOUBLE))
-                  - 3.0 * CAST(ng_1 + ng_2 + ng_3 + ng_4 + ng_5 + 1 AS DOUBLE)
-                  AS h,
-                (3.0 * (CAST(r2_1 AS DOUBLE) * CAST(r2_1 AS DOUBLE)
-                          / CAST(ng_1 AS DOUBLE)
-                      + CAST(r2_2 AS DOUBLE) * CAST(r2_2 AS DOUBLE)
-                          / CAST(ng_2 AS DOUBLE)
-                      + CAST(r2_3 AS DOUBLE) * CAST(r2_3 AS DOUBLE)
-                          / CAST(ng_3 AS DOUBLE)
-                      + CAST(r2_4 AS DOUBLE) * CAST(r2_4 AS DOUBLE)
-                          / CAST(ng_4 AS DOUBLE)
-                      + CAST(r2_5 AS DOUBLE) * CAST(r2_5 AS DOUBLE)
-                          / CAST(ng_5 AS DOUBLE))
-                   / (CAST(ng_1 + ng_2 + ng_3 + ng_4 + ng_5 AS DOUBLE)
-                      * CAST(ng_1 + ng_2 + ng_3 + ng_4 + ng_5 + 1 AS DOUBLE))
-                   - 3.0 * CAST(ng_1 + ng_2 + ng_3 + ng_4 + ng_5 + 1 AS DOUBLE))
-                  / (1.0 - CAST(ties AS DOUBLE)
-                     / (CAST(ng_1 + ng_2 + ng_3 + ng_4 + ng_5 AS DOUBLE)
-                        * CAST(ng_1 + ng_2 + ng_3 + ng_4 + ng_5 AS DOUBLE)
-                        * CAST(ng_1 + ng_2 + ng_3 + ng_4 + ng_5 AS DOUBLE)
-                        - CAST(ng_1 + ng_2 + ng_3 + ng_4 + ng_5 AS DOUBLE)))
-                  AS h_tie_corrected
-         FROM a"""),
+      {
+        // H, written once: SQL cannot reference a same-SELECT alias
+        val h =
+          s"""3.0 * (${perGroup(g => s"CAST(r2_$g AS DOUBLE) * CAST(r2_$g AS DOUBLE) / CAST(ng_$g AS DOUBLE)", " + ")})
+              / (CAST($sqlN AS DOUBLE) * CAST($sqlN + 1 AS DOUBLE))
+              - 3.0 * CAST($sqlN + 1 AS DOUBLE)"""
+        s"""WITH $scoredSql, $rankedSql,
+           a AS (SELECT
+                   ${perGroup(g => s"CAST(sum(CAST(n$g AS HUGEINT) * ar2) AS HUGEINT) AS r2_$g")},
+                   ${perGroup(g => s"CAST(sum(n$g) AS BIGINT) AS ng_$g")},
+                   CAST(sum(CAST(t AS HUGEINT) * t * t - t) AS HUGEINT) AS ties
+                 FROM cumt)
+           SELECT CAST($sqlN AS BIGINT) AS n,
+                  CAST(5 AS BIGINT) AS k_groups,
+                  $h AS h,
+                  ($h)
+                    / (1.0 - CAST(ties AS DOUBLE)
+                       / (CAST($sqlN AS DOUBLE) * CAST($sqlN AS DOUBLE)
+                          * CAST($sqlN AS DOUBLE) - CAST($sqlN AS DOUBLE)))
+                    AS h_tie_corrected
+           FROM a"""
+      }),
 
     // Jonckheere–Terpstra ordered-alternative trend across priorities
     // 1 < 2 < … < 5: U = Σ_{i<j} #{x∈g_i < y∈g_j} with midrank half-weight
@@ -196,38 +168,18 @@ object StatsQueries {
       s"""WITH $scoredSql, $rankedSql,
          a AS (SELECT
                  CAST(sum(
-                   CAST(n2 AS HUGEINT) * (2 * (c1 - n1) + n1)
-                 + CAST(n3 AS HUGEINT) * (2 * (c1 - n1) + n1)
-                 + CAST(n3 AS HUGEINT) * (2 * (c2 - n2) + n2)
-                 + CAST(n4 AS HUGEINT) * (2 * (c1 - n1) + n1)
-                 + CAST(n4 AS HUGEINT) * (2 * (c2 - n2) + n2)
-                 + CAST(n4 AS HUGEINT) * (2 * (c3 - n3) + n3)
-                 + CAST(n5 AS HUGEINT) * (2 * (c1 - n1) + n1)
-                 + CAST(n5 AS HUGEINT) * (2 * (c2 - n2) + n2)
-                 + CAST(n5 AS HUGEINT) * (2 * (c3 - n3) + n3)
-                 + CAST(n5 AS HUGEINT) * (2 * (c4 - n4) + n4)) AS HUGEINT)
-                   AS u2w,
-                 CAST(sum(n1) AS BIGINT) AS ng_1,
-                 CAST(sum(n2) AS BIGINT) AS ng_2,
-                 CAST(sum(n3) AS BIGINT) AS ng_3,
-                 CAST(sum(n4) AS BIGINT) AS ng_4,
-                 CAST(sum(n5) AS BIGINT) AS ng_5,
+                   ${(2 to 5).flatMap(j => (1 until j).map(i =>
+                     s"CAST(n$j AS HUGEINT) * (2 * (c$i - n$i) + n$i)")).mkString(" + ")})
+                   AS HUGEINT) AS u2w,
+                 ${perGroup(g => s"CAST(sum(n$g) AS BIGINT) AS ng_$g")},
                  CAST(sum(t) AS BIGINT) AS n
                FROM cumt),
          b AS (SELECT n, CAST(u2w AS BIGINT) AS u2,
                  CAST((CAST(n AS HUGEINT) * n
-                       - (CAST(ng_1 AS HUGEINT) * ng_1
-                          + CAST(ng_2 AS HUGEINT) * ng_2
-                          + CAST(ng_3 AS HUGEINT) * ng_3
-                          + CAST(ng_4 AS HUGEINT) * ng_4
-                          + CAST(ng_5 AS HUGEINT) * ng_5)) // 2 AS BIGINT)
+                       - (${perGroup(g => s"CAST(ng_$g AS HUGEINT) * ng_$g", " + ")})) // 2 AS BIGINT)
                    AS e2,
                  CAST(CAST(n AS HUGEINT) * n * (2 * n + 3)
-                      - (CAST(ng_1 AS HUGEINT) * ng_1 * (2 * ng_1 + 3)
-                         + CAST(ng_2 AS HUGEINT) * ng_2 * (2 * ng_2 + 3)
-                         + CAST(ng_3 AS HUGEINT) * ng_3 * (2 * ng_3 + 3)
-                         + CAST(ng_4 AS HUGEINT) * ng_4 * (2 * ng_4 + 3)
-                         + CAST(ng_5 AS HUGEINT) * ng_5 * (2 * ng_5 + 3))
+                      - (${perGroup(g => s"CAST(ng_$g AS HUGEINT) * ng_$g * (2 * ng_$g + 3)", " + ")})
                       AS DECIMAL(38,0)) AS v18
                FROM a)
          SELECT n, u2, e2,

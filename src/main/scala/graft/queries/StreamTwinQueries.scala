@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Batch twins of the streaming operator family, each DuckDB-gated.
   *
@@ -84,30 +85,41 @@ object StreamTwinQueries {
     * keyed state merged per batch, sink overwritten transactionally. */
   private def runStreamExec(s: SparkSession, d: String): String =
     QueryCaches.memoDir(s, d, "stream_exec") { base =>
-      val (outDir, ckpt) = (s"$base/out", s"$base/ckpt")
-      val inDir = splitInput(s, d)
-      val stream = s.readStream
-        .schema(s.read.parquet(inDir).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir)
-      val agg = stream
-        .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(unix_micros(col("window.start")).as("wstart_us"),
-          col("event_type"), col("n_events"))
-      var batches = 0L
-      val q = agg.writeStream
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          batches += 1
-          df.write.mode("overwrite").parquet(outDir)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastStreamBatches = batches
+      lastStreamBatches = drainWindowCounts(s, d, base, append = false)._2
     } + "/out"
+
+  /** Drains [[splitInput]] 1 file per micro-batch (AvailableNow) through
+    * epoch-aligned 6 h tumbling-window counts per event type, committed by
+    * a foreachBatch parquet sink at `<base>/out` with its checkpoint at
+    * `<base>/ckpt`: COMPLETE mode overwriting the sink each batch, or,
+    * when `append`, a 1 h watermark and APPEND mode adding each finalized
+    * window once. Returns the finished query and its batch count. */
+  private def drainWindowCounts(s: SparkSession, d: String, base: String,
+                                append: Boolean): (StreamingQuery, Long) = {
+    val inDir = splitInput(s, d)
+    val stream = s.readStream
+      .schema(s.read.parquet(inDir).schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(inDir)
+    val agg = (if (append) stream.withWatermark("ts", "1 hour") else stream)
+      .groupBy(window(col("ts"), "6 hours"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(unix_micros(col("window.start")).as("wstart_us"),
+        col("event_type"), col("n_events"))
+    var batches = 0L
+    val q = agg.writeStream
+      .outputMode(if (append) "append" else "complete")
+      .option("checkpointLocation", s"$base/ckpt")
+      .foreachBatch { (df: DataFrame, _: Long) =>
+        batches += 1
+        // append: a monotone append of finalized windows, never rewritten
+        df.write.mode(if (append) "append" else "overwrite").parquet(s"$base/out")
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    (q, batches)
+  }
 
   /** The PRODUCTION streaming topology (r12 verdict #1): same 4
     * micro-batch AvailableNow run as [[runStreamExec]], but through
@@ -128,30 +140,7 @@ object StreamTwinQueries {
     * threshold — expressible in DuckDB from the raw table alone. */
   private def runStreamExecAppend(s: SparkSession, d: String): String =
     QueryCaches.memoDir(s, d, "stream_append") { base =>
-      val (outDir, ckpt) = (s"$base/out", s"$base/ckpt")
-      val inDir = splitInput(s, d)
-      val stream = s.readStream
-        .schema(s.read.parquet(inDir).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir)
-      val agg = stream
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(unix_micros(col("window.start")).as("wstart_us"),
-          col("event_type"), col("n_events"))
-      var batches = 0L
-      val q = agg.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          batches += 1
-          // monotone append of finalized windows only — never rewritten
-          df.write.mode("append").parquet(outDir)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val (q, batches) = drainWindowCounts(s, d, base, append = true)
       lastAppendBatches = batches
       val progress = q.recentProgress
       lastAppendStateRemoved = progress

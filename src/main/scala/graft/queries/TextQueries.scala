@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.WideDiv.{mulDivWide, ppmWide, wide}
+import graft.operators.PageRank.sqlIntegerPageRank
+import graft.queries.QueryBlocks.{epochManifest, sqlTrainTokens, trainTokens}
 import graft.text.TextFunctions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,6 +29,53 @@ object TextQueries {
     s"""t AS (
            SELECT doc_id, ${sqlTokens("lower(text)")} AS toks
            FROM documents)"""
+
+  /** `t(doc_id, chars, toks, n_stop, n_punct)`: the per-document inputs
+    * of `qualityScore`, lengths as DOUBLE. */
+  private val qualityInputsCte =
+    s"""t AS (
+           SELECT doc_id,
+                  CAST(length(text) AS DOUBLE) AS chars,
+                  CAST(${sqlTokenCount("text")} AS DOUBLE) AS toks,
+                  ${sqlStopwordCount("text")} AS n_stop,
+                  ${sqlPunctCount("text")} AS n_punct
+           FROM documents)"""
+
+  /** Every document's 32-token chunks at stride 24 (8-token overlap),
+    * `(doc_id, chunk_idx, chunk)`. */
+  private def docChunks(s: SparkSession, d: String): DataFrame =
+    docs(s, d).select(col("doc_id"),
+      posexplode(chunkTokens(col("text"), 32, 24)).as(Seq("chunk_idx", "chunk")))
+
+  /** DuckDB oracle twin for [[docChunks]]: CTEs `t`, `c`, `e` and
+    * `ch(doc_id, chunk_idx, chunk)`. */
+  private val docChunksCte =
+    s"""t AS (
+           SELECT doc_id,
+                  ${sqlTokens("text")} AS toks
+           FROM documents),
+         c AS (
+           SELECT doc_id, toks,
+                  greatest(CAST(ceil(CAST(len(toks) - 8 AS DOUBLE) / 24) AS INT), 1)
+                    AS n_chunks
+           FROM t WHERE len(toks) > 0),
+         e AS (
+           SELECT doc_id, toks, unnest(range(0, n_chunks)) AS i FROM c),
+         ch AS (
+           SELECT doc_id, i AS chunk_idx,
+                  array_to_string(toks[i*24 + 1 : i*24 + 32], ' ') AS chunk
+           FROM e)"""
+
+  /** Every adjacent lowercased token pair `(ctx, nxt)` of every document. */
+  private def bigramPairs(s: SparkSession, d: String): DataFrame =
+    docs(s, d).select(tokens(lower(col("text"))).as("toks"))
+      .select(explode(
+        when(size(col("toks")) < 2,
+          array().cast("array<struct<ctx:string,nxt:string>>"))
+        .otherwise(transform(sequence(lit(0), size(col("toks")) - 2),
+          i => struct(element_at(col("toks"), i + 1).as("ctx"),
+            element_at(col("toks"), i + 2).as("nxt"))))).as("p"))
+      .select(col("p.ctx").as("ctx"), col("p.nxt").as("nxt"))
 
   /** Memoized distinct token 3-gram hashes `(doc_id, ng)` of every
     * document: the eval and corpus slices of the decontamination queries
@@ -155,12 +204,29 @@ object TextQueries {
                 CAST(sum(cnt * lr_micro) AS BIGINT) AS weight_micro
          FROM f JOIN lr USING (bucket) GROUP BY 1)"""
 
+  /** The 100 documents of highest DSIR weight in `w`, ties by doc_id. */
+  private def dsirSelect(s: SparkSession, d: String, w: DataFrame): DataFrame =
+    w.join(docs(s, d).select("doc_id", "source", "lang"), "doc_id")
+      .select(col("doc_id"), col("source"), col("lang"),
+        col("n_feats"), col("weight_micro"))
+      .orderBy(col("weight_micro").desc, col("doc_id"))
+      .limit(100)
+
+  /** DuckDB oracle twin for [[dsirSelect]] over [[dsirCte]]. */
+  private val sqlDsirSelect =
+    dsirCte +
+      """
+       SELECT w.doc_id, d.source, d.lang, n_feats, weight_micro
+       FROM w JOIN documents d USING (doc_id)
+       ORDER BY weight_micro DESC, doc_id LIMIT 100"""
+
   /** Shared BM25 oracle CTE body (through `lexr`, the per-query rank
     * table): bitwise mirror of [[graft.text.Bm25.topK]] with k1=2.2,
     * b=0.75 as exact integer rationals and the audited idf ln site —
     * consumed by q_text_bm25 and the RRF fusion oracle in
-    * [[SimilarityQueries]], so the two stay in lockstep by construction. */
-  /** @param qBag SQL predicate selecting the query-doc bag. The default
+    * [[SimilarityQueries]], so the two stay in lockstep by construction.
+    *
+    * @param qBag SQL predicate selecting the query-doc bag. The default
     *             (first 10 docs) is what q_sim_rrf_fusion pairs with its
     *             vector leg; q_text_bm25 itself passes the informative-doc
     *             bag — on this fixture's 31-token vocabulary only one term
@@ -205,6 +271,34 @@ object TextQueries {
                         ORDER BY score_micro DESC, nid) AS BIGINT) AS rank
                FROM ag)"""
 
+  /** BM25 top-`k` corpus matches, stop-terms cut at df > 30% of the
+    * corpus, for the informative query bag: the 10 lowest-id docs carrying
+    * ≥1 informative (sub-30%-df) term. A fixed first-10 bag is fixture
+    * luck — on the 31-token vocabulary only one term clears the stop cut,
+    * and no low-id doc carries it at sf0.1/sf1, which made the q_text_bm25
+    * gate row silently vacuous there (caught by the sf1 VACUOUS status). */
+  private def bm25Informative(s: SparkSession, d: String, k: Int): DataFrame = {
+    val all = docs(s, d)
+    val n = all.agg(count(lit(1)).as("n"))
+    val docTok = postings(s, d).select(col("doc_id"), col("tok")).distinct()
+    val nonstop = docTok.groupBy("tok").agg(count(lit(1)).as("df"))
+      .crossJoin(broadcast(n))
+      .where(col("df") * 1000 <= col("n") * 300).select("tok")
+    val qids = docTok.join(broadcast(nonstop), "tok")
+      .select("doc_id").distinct().orderBy("doc_id").limit(10)
+    graft.text.Bm25.topK(all, col("doc_id"), col("text"),
+      all.join(broadcast(qids), "doc_id"), col("doc_id"), col("text"),
+      k = k, maxDfPermille = 300)
+  }
+
+  /** The [[bm25RankCte]] query bag of [[bm25Informative]]. */
+  private val informativeBag =
+    """doc_id IN (
+         SELECT nid FROM (
+           SELECT DISTINCT p.nid FROM p JOIN dfi USING (tok)
+           WHERE dfi.df * 1000 <= dfi.n * 300)
+         ORDER BY nid LIMIT 10)"""
+
   /** Shared langid CTE chain (q_text_langid and q_text_langid_eval must
     * agree verbatim); the prediction over it is `sqlLangPred`. */
   private lazy val sqlLangidCtes =
@@ -237,13 +331,7 @@ object TextQueries {
         punctCount(col("text")).cast("long").as("n_punct"),
         qualityScore(col("text")).as("quality"))
         .orderBy("doc_id"),
-      s"""WITH t AS (
-           SELECT doc_id,
-                  CAST(length(text) AS DOUBLE) AS chars,
-                  CAST(${sqlTokenCount("text")} AS DOUBLE) AS toks,
-                  ${sqlStopwordCount("text")} AS n_stop,
-                  ${sqlPunctCount("text")} AS n_punct
-           FROM documents)
+      s"""WITH $qualityInputsCte
          SELECT doc_id, n_stop, n_punct,
                 0.4 * least(1.0, chars / 500.0)
               + 0.3 * least(1.0, 4.0 * (CAST(n_stop AS DOUBLE) / greatest(toks, 1.0)))
@@ -354,27 +442,12 @@ object TextQueries {
 
     // long-document chunking: 32-token windows, stride 24 (8-token overlap)
     Q("q_text_chunks", (s, d) =>
-      docs(s, d).select(col("doc_id"),
-        posexplode(chunkTokens(col("text"), 32, 24)).as(Seq("chunk_idx", "chunk")))
+      docChunks(s, d)
         .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
           md5(col("chunk")).as("chunk_md5"),
           size(split(col("chunk"), " ")).cast("long").as("n_chunk_tokens"))
         .orderBy("doc_id", "chunk_idx"),
-      s"""WITH t AS (
-           SELECT doc_id,
-                  ${sqlTokens("text")} AS toks
-           FROM documents),
-         c AS (
-           SELECT doc_id, toks,
-                  greatest(CAST(ceil(CAST(len(toks) - 8 AS DOUBLE) / 24) AS INT), 1)
-                    AS n_chunks
-           FROM t WHERE len(toks) > 0),
-         e AS (
-           SELECT doc_id, toks, unnest(range(0, n_chunks)) AS i FROM c),
-         ch AS (
-           SELECT doc_id, i AS chunk_idx,
-                  array_to_string(toks[i*24 + 1 : i*24 + 32], ' ') AS chunk
-           FROM e)
+      s"""WITH $docChunksCte
          SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
                 md5(chunk) AS chunk_md5,
                 CAST(len(string_split(chunk, ' ')) AS BIGINT) AS n_chunk_tokens
@@ -597,37 +670,16 @@ object TextQueries {
     //      md5 of the doc_id sequence in pack order — the artifact a
     //      trainer consumes and the oracle verifies byte-for-byte.
     Q("q_text_epoch_manifest", (s, d) => {
-      val base = docs(s, d).select(col("doc_id"),
-          tokenCount(col("text")).cast("long").as("n_tokens"),
-          graft.text.TextFunctions.splitBucket(md5(col("text"))).as("bucket"))
-        .where(col("bucket") < 80)
-        .drop("bucket")
+      val base = trainTokens(docs(s, d))
       val perEpoch = (0L to 1L).map { e =>
-        val keyed = base.withColumn("okey",
-          concat(md5(concat(lit(s"epoch$e:"), col("doc_id").cast("string"))),
-            lpad(col("doc_id").cast("string"), 12, "0")))
-        graft.operators.Packing.packByBudget(keyed, col("okey"),
-            col("n_tokens"), budget = 512L)
-          .groupBy(col("bin"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_tokens")).as("total_tokens"),
-            md5(array_join(transform(
-              array_sort(collect_list(struct(col("okey"), col("doc_id")))),
-              x => x.getField("doc_id").cast("string")), ","))
-              .as("manifest_md5"))
+        epochManifest(base, e)
           .withColumn("epoch", lit(e))
       }
       perEpoch.reduce(_ unionByName _)
         .select("epoch", "bin", "n_docs", "total_tokens", "manifest_md5")
         .orderBy("epoch", "bin")
     },
-      s"""WITH base AS (
-           SELECT doc_id,
-                  CAST(${sqlTokenCount("text")} AS BIGINT) AS n_tokens,
-                  CAST('0x' || substr(md5(md5(text)), 1, 4) AS BIGINT) % 100
-                    AS bucket
-           FROM documents),
-         tr AS (SELECT doc_id, n_tokens FROM base WHERE bucket < 80),
+      s"""WITH ${sqlTrainTokens("documents")},
          k AS (
            SELECT t.e, doc_id, n_tokens,
                   md5('epoch' || CAST(t.e AS VARCHAR) || ':' ||
@@ -727,14 +779,7 @@ object TextQueries {
     // surface at all. Top-3 continuations per context; the aggregates
     // are one bigram shuffle plus joins on vocabulary-sized tables
     Q("q_text_kn_lm", (s, d) => {
-      val t = docs(s, d).select(tokens(lower(col("text"))).as("toks"))
-      val pairs = t.select(explode(
-          when(size(col("toks")) < 2,
-            array().cast("array<struct<ctx:string,nxt:string>>"))
-          .otherwise(transform(sequence(lit(0), size(col("toks")) - 2),
-            i => struct(element_at(col("toks"), i + 1).as("ctx"),
-              element_at(col("toks"), i + 2).as("nxt"))))).as("p"))
-        .select(col("p.ctx").as("ctx"), col("p.nxt").as("nxt"))
+      val pairs = bigramPairs(s, d)
       val big = pairs.groupBy(col("ctx"), col("nxt"))
         .agg(count(lit(1)).as("cvw"))
       val cv = pairs.groupBy(col("ctx")).agg(count(lit(1)).as("cv"))
@@ -1120,29 +1165,14 @@ object TextQueries {
     // numeric keep_key = doc_id*1e6 + chunk_idx is the deterministic
     // cross-engine "first wins" tiebreak.
     Q("q_text_chunk_dedup", (s, d) =>
-      docs(s, d).select(col("doc_id"),
-          posexplode(chunkTokens(col("text"), 32, 24)).as(Seq("chunk_idx", "chunk")))
+      docChunks(s, d)
         .groupBy(md5(col("chunk")).as("chunk_md5"))
         .agg(count(lit(1)).as("n_copies"),
           countDistinct(col("doc_id")).as("n_docs"),
           min(col("doc_id") * 1000000 + col("chunk_idx")).as("keep_key"))
         .where(col("n_copies") > 1)
         .orderBy("chunk_md5"),
-      s"""WITH t AS (
-           SELECT doc_id,
-                  ${sqlTokens("text")} AS toks
-           FROM documents),
-         c AS (
-           SELECT doc_id, toks,
-                  greatest(CAST(ceil(CAST(len(toks) - 8 AS DOUBLE) / 24) AS INT), 1)
-                    AS n_chunks
-           FROM t WHERE len(toks) > 0),
-         e AS (
-           SELECT doc_id, toks, unnest(range(0, n_chunks)) AS i FROM c),
-         ch AS (
-           SELECT doc_id, i AS chunk_idx,
-                  array_to_string(toks[i*24 + 1 : i*24 + 32], ' ') AS chunk
-           FROM e)
+      s"""WITH $docChunksCte
          SELECT md5(chunk) AS chunk_md5,
                 CAST(count(*) AS BIGINT) AS n_copies,
                 CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
@@ -1201,13 +1231,7 @@ object TextQueries {
               sqrt(col("n").cast("double") * col("syy") - col("sy") * col("sy"))))
             .as("pearson_r"))
     },
-      s"""WITH t AS (
-           SELECT doc_id,
-                  CAST(length(text) AS DOUBLE) AS chars,
-                  CAST(${sqlTokenCount("text")} AS DOUBLE) AS toks,
-                  ${sqlStopwordCount("text")} AS n_stop,
-                  ${sqlPunctCount("text")} AS n_punct
-           FROM documents),
+      s"""WITH $qualityInputsCte,
          qx AS (
            SELECT doc_id,
                   CAST(floor((0.4 * least(1.0, chars / 500.0)
@@ -1382,31 +1406,10 @@ object TextQueries {
     // the only float (one audited ln per distinct df, quantized to integer
     // micro-units); every other score factor is an exact integer rational,
     // so no engine-version float drift can flip a score
-    Q("q_text_bm25", (s, d) => {
-      val all = docs(s, d)
-      // query bag: the 10 lowest-id docs carrying ≥1 informative
-      // (sub-30%-df) term. A fixed first-10 bag is fixture luck — on the
-      // 31-token vocabulary only one term clears the stop cut, and no
-      // low-id doc carries it at sf0.1/sf1, which made this gate row
-      // silently vacuous there (caught by the sf1 VACUOUS status).
-      val n = all.agg(count(lit(1)).as("n"))
-      val docTok = postings(s, d).select(col("doc_id"), col("tok")).distinct()
-      val nonstop = docTok.groupBy("tok").agg(count(lit(1)).as("df"))
-        .crossJoin(broadcast(n))
-        .where(col("df") * 1000 <= col("n") * 300).select("tok")
-      val qids = docTok.join(broadcast(nonstop), "tok")
-        .select("doc_id").distinct().orderBy("doc_id").limit(10)
-      graft.text.Bm25.topK(all, col("doc_id"), col("text"),
-          all.join(broadcast(qids), "doc_id"), col("doc_id"), col("text"),
-          k = 5, maxDfPermille = 300)
-        .orderBy("qid", "rank")
-    },
-      s"""WITH ${bm25RankCte(qBag =
-        """doc_id IN (
-             SELECT nid FROM (
-               SELECT DISTINCT p.nid FROM p JOIN dfi USING (tok)
-               WHERE dfi.df * 1000 <= dfi.n * 300)
-             ORDER BY nid LIMIT 10)""")}
+    Q("q_text_bm25", (s, d) =>
+      bm25Informative(s, d, k = 5)
+        .orderBy("qid", "rank"),
+      s"""WITH ${bm25RankCte(qBag = informativeBag)}
          SELECT qid, nid, rank, score_micro FROM lexr WHERE rank <= 5
          ORDER BY qid, rank"""),
 
@@ -1420,18 +1423,8 @@ object TextQueries {
     // 10-value domain), so DCG/IDCG are exact integer sums and nDCG is
     // one ppm integer division. MRR counts source-grade hits (grade ≥ 2)
     Q("q_text_retrieval_eval", (s, d) => {
-      val all = docs(s, d)
-      val n = all.agg(count(lit(1)).as("n"))
-      val docTok = postings(s, d).select(col("doc_id"), col("tok")).distinct()
-      val nonstop = docTok.groupBy("tok").agg(count(lit(1)).as("df"))
-        .crossJoin(broadcast(n))
-        .where(col("df") * 1000 <= col("n") * 300).select("tok")
-      val qids = docTok.join(broadcast(nonstop), "tok")
-        .select("doc_id").distinct().orderBy("doc_id").limit(10)
-      val ranked = graft.text.Bm25.topK(all, col("doc_id"), col("text"),
-        all.join(broadcast(qids), "doc_id"), col("doc_id"), col("text"),
-        k = 10, maxDfPermille = 300)
-      val meta = all.select(col("doc_id"), col("source"), col("lang"))
+      val ranked = bm25Informative(s, d, k = 10)
+      val meta = docs(s, d).select(col("doc_id"), col("source"), col("lang"))
       def disc(r: org.apache.spark.sql.Column) =
         floor(log(lit(2.0)) / log((r + lit(1L)).cast("double"))
           * lit(1000000.0) + lit(0.5)).cast("long")
@@ -1466,12 +1459,7 @@ object TextQueries {
             expr("1000000 DIV first_rel_rank")).otherwise(0L))
         .orderBy("qid")
     },
-      s"""WITH ${bm25RankCte(qBag =
-        """doc_id IN (
-             SELECT nid FROM (
-               SELECT DISTINCT p.nid FROM p JOIN dfi USING (tok)
-               WHERE dfi.df * 1000 <= dfi.n * 300)
-             ORDER BY nid LIMIT 10)""")},
+      s"""WITH ${bm25RankCte(qBag = informativeBag)},
          topk AS (SELECT qid, nid, rank FROM lexr WHERE rank <= 10),
          g AS (
            SELECT t.qid, t.nid, t.rank,
@@ -1516,14 +1504,7 @@ object TextQueries {
     // — the corpus-level conditional distribution a tokenizer/LM data
     // audit inspects (and the n-gram LM building block)
     Q("q_text_ngram_lm", (s, d) => {
-      val t = docs(s, d).select(tokens(lower(col("text"))).as("toks"))
-      val pairs = t.select(explode(
-          when(size(col("toks")) < 2,
-            array().cast("array<struct<ctx:string,nxt:string>>"))
-          .otherwise(transform(sequence(lit(0), size(col("toks")) - 2),
-            i => struct(element_at(col("toks"), i + 1).as("ctx"),
-              element_at(col("toks"), i + 2).as("nxt"))))).as("p"))
-        .select(col("p.ctx").as("ctx"), col("p.nxt").as("nxt"))
+      val pairs = bigramPairs(s, d)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("ctx")).orderBy(col("cnt").desc, col("nxt"))
       pairs.groupBy("ctx", "nxt").agg(count(lit(1)).as("cnt"))
@@ -1578,11 +1559,7 @@ object TextQueries {
         .orderBy(col("draw_ppm").desc, col("tok"))
         .limit(20)
     },
-      s"""WITH t AS (
-           SELECT doc_id,
-                  ${sqlTokens("lower(text)")}
-                    AS toks
-           FROM documents),
+      s"""WITH $docToksCte,
          x AS (SELECT unnest(toks) AS tok FROM t),
          c AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM x GROUP BY 1),
          w AS (SELECT tok, c,
@@ -1642,11 +1619,7 @@ object TextQueries {
         .orderBy(col("jaccard_ppm").desc, col("sa"), col("sb"))
         .limit(20)
     },
-      s"""WITH t AS (
-           SELECT doc_id,
-                  ${sqlTokens("lower(text)")}
-                    AS toks
-           FROM documents),
+      s"""WITH $docToksCte,
          sv AS (SELECT DISTINCT d.source, x.tok
                 FROM (SELECT doc_id, unnest(toks) AS tok FROM t) x
                 JOIN documents d USING (doc_id)),
@@ -1700,19 +1673,9 @@ object TextQueries {
     // weights — top-k selection with deterministic (weight, doc_id)
     // tiebreaks. The lr table is 4096 broadcast rows at ANY corpus size;
     // scoring is one map-side join + per-doc integer sum (graft.text.Dsir)
-    Q("q_text_dsir_select", (s, d) => {
-      val w = dsirWeights(s, d)
-      w.join(docs(s, d).select("doc_id", "source", "lang"), "doc_id")
-        .select(col("doc_id"), col("source"), col("lang"),
-          col("n_feats"), col("weight_micro"))
-        .orderBy(col("weight_micro").desc, col("doc_id"))
-        .limit(100)
-    },
-      (dsirCte +
-        """
-         SELECT w.doc_id, d.source, d.lang, n_feats, weight_micro
-         FROM w JOIN documents d USING (doc_id)
-         ORDER BY weight_micro DESC, doc_id LIMIT 100""")),
+    Q("q_text_dsir_select", (s, d) =>
+      dsirSelect(s, d, dsirWeights(s, d)),
+      sqlDsirSelect),
 
     // The documented web-scale DSIR degradation, ON the gate: the same
     // selection computed through Dsir.weights' SHUFFLE branch
@@ -1731,20 +1694,12 @@ object TextQueries {
         graft.text.Dsir.weights(docs(s, d), col("doc_id"), col("text"),
           col("lang") === "en", buckets = 4096, broadcastCeiling = 1024)
       }
-      w.join(docs(s, d).select("doc_id", "source", "lang"), "doc_id")
-        .select(col("doc_id"), col("source"), col("lang"),
-          col("n_feats"), col("weight_micro"))
-        .orderBy(col("weight_micro").desc, col("doc_id"))
-        .limit(100)
+      dsirSelect(s, d, w)
     },
       // identical oracle text as q_text_dsir_select: the engine's two
       // scoring-join branches are value-equal by construction, so ONE
       // DuckDB replay gates both — each engine row hashed independently
-      (dsirCte +
-        """
-         SELECT w.doc_id, d.source, d.lang, n_feats, weight_micro
-         FROM w JOIN documents d USING (doc_id)
-         ORDER BY weight_micro DESC, doc_id LIMIT 100""")),
+      sqlDsirSelect),
 
     // DSIR distribution shift: what the selector thinks of each source —
     // per-source feature mass and summed importance weight (negative =
@@ -2494,11 +2449,7 @@ object TextQueries {
           count(when(col("f") === 1, 1)).as("hapax"))
         .withColumn("hapax_ppm", expr("hapax * 1000000 DIV vocab"))
         .orderBy("source"),
-      s"""WITH t AS (
-           SELECT doc_id,
-                  ${sqlTokens("lower(text)")}
-                    AS toks
-           FROM documents),
+      s"""WITH $docToksCte,
          x AS (SELECT doc_id, unnest(toks) AS tok FROM t),
          tf AS (SELECT d.source, x.tok, CAST(count(*) AS BIGINT) AS f
                 FROM x JOIN documents d USING (doc_id) GROUP BY 1, 2),
@@ -2537,41 +2488,15 @@ object TextQueries {
           iters = 3, broadcastRanks = true)
         .orderBy(col("pr").desc, col("node")).limit(25)
     },
-      {
-        def iter(k: Int, prev: String) =
-          s"""c$k AS (SELECT r.node, r.pr // d.deg AS c
-                    FROM $prev r JOIN deg d USING (node)),
-            s$k AS (SELECT e.dst AS node, CAST(sum(c.c) AS BIGINT) AS s
-                    FROM e JOIN c$k c ON e.src = c.node GROUP BY 1),
-            r$k AS (SELECT nodes.node,
-                           15 * (1000000000000 // n.n) // 100
-                             + 85 * coalesce(s$k.s, 0) // 100 AS pr
-                    FROM nodes LEFT JOIN s$k USING (node), n)"""
-        s"""WITH t AS (
-            SELECT doc_id,
-                   ${sqlTokens("lower(text)")}
-                     AS toks
-            FROM documents),
-          tok AS (
-            SELECT doc_id, unnest(toks) AS tok,
-                   generate_subscripts(toks, 1) - 1 AS pos
-            FROM t),
-          adj AS (
-            SELECT a.tok AS u, b.tok AS v
-            FROM tok a JOIN tok b
-              ON a.doc_id = b.doc_id AND b.pos = a.pos + 1 AND a.tok <> b.tok),
-          e AS (SELECT u AS src, v AS dst FROM adj
-                UNION SELECT v, u FROM adj),
-          nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-          deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
-                  FROM e GROUP BY 1),
-          n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-          r0 AS (SELECT node, 1000000000000 // n.n AS pr FROM nodes, n),
-          ${iter(1, "r0")},
-          ${iter(2, "r1")},
-          ${iter(3, "r2")}
-          SELECT node, pr FROM r3 ORDER BY pr DESC, node LIMIT 25"""
-      }),
+      s"""WITH ${postingsCtes("tok")},
+        adj AS (
+          SELECT a.tok AS u, b.tok AS v
+          FROM tok a JOIN tok b
+            ON a.doc_id = b.doc_id AND b.pos = a.pos + 1 AND a.tok <> b.tok),
+        e AS (SELECT u AS src, v AS dst FROM adj
+              UNION SELECT v, u FROM adj),
+        ${sqlIntegerPageRank(3)}
+        SELECT node, pr FROM r3 ORDER BY pr DESC, node LIMIT 25"""),
 
     // type-token ratio (lexical diversity) per document — the corpus
     // curation signal between quality (surface ratios) and vocab metrics

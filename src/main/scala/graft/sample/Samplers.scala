@@ -70,18 +70,12 @@ object Samplers {
   /** Exact-n uniform sample without replacement over `df` (R1/R4).
     *
     * Plans as `TakeOrderedAndProject` — per-partition top-n heap, driver
-    * merge; no global sort materializes. With `strict=true`, raises if
-    * `n > total` like the reference's IndexedSampler (samplers.py:86-87) at
-    * the cost of one extra metadata-only count.
+    * merge; no global sort materializes. The reference's IndexedSampler
+    * raises when `n > total` (samplers.py:86-87); the CLI's `indexed` mode
+    * checks that against the input's footer row counts before calling.
     */
-  def uniformExact(df: DataFrame, n: Int, order: SampleOrder,
-                   strict: Boolean = false): DataFrame = {
+  def uniformExact(df: DataFrame, n: Int, order: SampleOrder): DataFrame = {
     require(n >= 0, s"sample size must be >= 0, got $n")
-    if (strict) {
-      val total = df.count()
-      if (n > total) throw new IllegalArgumentException(
-        s"Requested sample size $n exceeds total rows $total")
-    }
     df.orderBy(order.sortExprs: _*).limit(n)
   }
 

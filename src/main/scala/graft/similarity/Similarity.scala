@@ -150,6 +150,23 @@ object Similarity {
       .select(col("id"), col("v"), col("cid").as("cell"))
   }
 
+  /** DuckDB oracle twin for [[ivfAssign]] over a CTE `e(vec_id, v)`: CTEs
+    * `cents`, `scored` and `assigned(id, v, cell)`; `withVectors = false`
+    * leaves `v` out of `scored` and `assigned`. */
+  def sqlIvfAssign(nCentroids: Int, withVectors: Boolean = true): String = {
+    val (ev, v) = if (withVectors) ("e.v, ", "v, ") else ("", "")
+    s"""cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < $nCentroids),
+          scored AS (
+            SELECT e.vec_id AS id, ${ev}cid, list_dot_product(v, cv) AS score
+            FROM e CROSS JOIN cents),
+          assigned AS (
+            SELECT id, ${v}cid AS cell
+            FROM (SELECT id, ${v}cid,
+                         row_number() OVER (PARTITION BY id ORDER BY score DESC, cid) AS rn
+                  FROM scored)
+            WHERE rn = 1)"""
+  }
+
   /** IVF top-k: rank only corpus vectors sharing the query's cell
     * (single-probe). Returns (qid, nid, rank, cos); recall vs brute force
     * depends on the quantizer — the engine contract is the deterministic

@@ -37,6 +37,30 @@ class MainSpec extends SparkSpec with TempDirs {
     assert(spark.read.parquet(out).count() == 50)
   }
 
+  test("sample indexed: the row count comes from the footers, so the sample is the only job") {
+    val out = s"$workDir/sample_jobs"
+    val jobs = graft.JobCount(spark) {
+      Main.main(Array("sample", "--in", eventsParquet, "--mode", "indexed",
+        "-n", "50", "--seed", "7", "--out", out))
+    }
+    assert(jobs == 1, s"expected 1 job, got $jobs") // the sampling write
+    assert(spark.read.parquet(out).count() == 50)
+  }
+
+  test("sample indexed: -n above the row count throws before any job and writes nothing") {
+    val out = s"$workDir/sample_too_many"
+    val total = spark.read.parquet(eventsParquet).count()
+    var err: IllegalArgumentException = null
+    val jobs = graft.JobCount(spark) {
+      err = intercept[IllegalArgumentException](Main.main(Array("sample",
+        "--in", eventsParquet, "--mode", "indexed", "-n", (total + 1).toString,
+        "--out", out)))
+    }
+    assert(jobs == 0, s"expected 0 jobs, got $jobs")
+    assert(err.getMessage.contains(s"${total + 1}") && err.getMessage.contains(s"$total"))
+    assert(!JFiles.exists(Paths.get(out)))
+  }
+
   test("a CLI command runs on the caller's live session with its settings unchanged") {
     val key = "spark.sql.shuffle.partitions"
     withConf(key -> "7") {

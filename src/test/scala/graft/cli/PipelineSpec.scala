@@ -83,6 +83,18 @@ class PipelineSpec extends SparkSpec with TempDirs {
     assert(byDay.values.forall(_ == 2))
   }
 
+  test("pipeline: filtered_rows comes from the filter write's observation, not a re-scan") {
+    val work = tempDir("graft_pipe_jobs")
+    val jobs = graft.JobCount(spark) {
+      Main.main(Array("pipeline", "--in", rawDir, "--out", work,
+        "--start-day", "20130401", "--end-day", "20130402",
+        "--per-day", "2", "--seed", "7"))
+    }
+    // the kept-row count comes from the filter write's observation, not a
+    // re-scan of its output (2 more jobs)
+    assert(jobs == 7, s"expected 7 jobs, got $jobs")
+  }
+
   test("a re-run into the same --out replaces flat and hist instead of appending") {
     val work = tempDir("graft_pipe_rerun")
     def run(): (Long, Long, Long) = {

@@ -20,13 +20,6 @@ class SamplersSpec extends SparkSpec {
     assert(ids.toSet.size == 100)
   }
 
-  test("uniformExact strict raises when n > total") {
-    intercept[IllegalArgumentException] {
-      Samplers.uniformExact(ev, 100000000, SampleOrder.HashOf(1, Seq($"event_id")),
-        strict = true)
-    }
-  }
-
   test("perGroup: k per group; groups smaller than k return all rows") {
     val totals = ev.groupBy("event_type").count().as[(String, Long)].collect().toMap
     for (k <- Seq(7, 100000)) { // 100000 exceeds every group
