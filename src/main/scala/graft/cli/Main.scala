@@ -6,8 +6,8 @@ import graft.sample.Samplers
 import graft.sample.Samplers.SampleOrder
 import graft.sources.Files
 import graft.util.{Config, ParquetFooter}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import java.time.LocalDate
 import scala.util.Try
 
@@ -336,13 +336,13 @@ object Main {
     for (s <- startDay; e <- endDay)
       require(s <= e, s"start-day $s must be <= end-day $e")
 
-    // driver-side type routing by archive-name shape (same rule as convert)
+    // driver-side type routing by archive-name shape (convert's rule)
     val p = new org.apache.hadoop.fs.Path(rawDir)
     val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(hfs.exists(p), s"pipeline: no such path $rawDir")
     val files = hfs.listStatus(p).toSeq.filter(_.isFile)
       .map(_.getPath.toString).sorted
-    val byType = files.groupBy(f => Files.detectFileType(Convert.fileZipName(f)))
+    val byType = Convert.route(files)
     def coerced(paths: Seq[String]) = Convert.coerce(
       spark.read.format("gdelt-tsv").load(paths.mkString(",")),
       cfg.numericColumns, Gdelt.intColumns)
@@ -380,7 +380,7 @@ object Main {
       dayRange(out)
     }
     // partition columns read back as int (directory-value inference) while
-    // the flat side wrote them long — align to the 61-column schema order
+    // the flat side wrote them long — align to the 58-column schema order
     // with int columns cast to long so the union is exact
     def aligned(df: DataFrame): DataFrame =
       df.select(Gdelt.columns.map(c =>
@@ -401,11 +401,15 @@ object Main {
     val filtered = read(s"$outBase/filtered")
     val perDay = flags.get("per-day").map(_.toInt).getOrElse(cfg.defaultPerDay)
     val seed = flags.get("seed").map(_.toLong).getOrElse(cfg.defaultSeed)
+    // the sampled-row count is observed on the sample write, not re-read
+    val sampleObs = Observation("pipeline_sample")
     Samplers.daily(filtered, col("Day"), perDay, sampleOrder(filtered, seed))
+      .observe(sampleObs, count(lit(1)).as("rows"))
       .write.mode("overwrite").parquet(s"$outBase/sample")
-    val sampled = read(s"$outBase/sample").count()
+    val sampled = sampleObs.get("rows")
     println(s"pipeline: files=${files.size} daily=${daily.size} " +
       s"monthly=${monthly.size} yearly=${yearly.size} " +
+      s"unknown=${byType.getOrElse("unknown", Nil).size} " +
       s"filtered_rows=$filteredRows sampled=$sampled")
   }
 

@@ -161,17 +161,7 @@ object Dedup {
       .where(col("ub").cast("double") >=
         lit(minJaccard) * (col("na") + col("nb") - col("ub")).cast("double"))
       .select("ida", "idb")
-    // verify side sorts each doc's hash array ONCE (docs-sized work) so the
-    // per-PAIR exact intersection is an allocation-free merge count instead
-    // of array_intersect's per-row hash set + materialized array — pairs
-    // outnumber docs, so the trade is strictly favorable (opt r13, guide §4;
-    // value-identical on distinct arrays, IntersectExpressionsSpec)
-    val sortedBase = base.select(col("id"), array_sort(col("hs")).as("hs"))
-    pruned
-      .join(sortedBase.select(col("id").as("ida"), col("hs").as("ha")), "ida")
-      .join(sortedBase.select(col("id").as("idb"), col("hs").as("hb")), "idb")
-      .withColumn("shared", graft.functions.IntersectExpressions
-        .sortedIntersectCount(col("ha"), col("hb")))
+    withShared(pruned, base)
       .withColumn("jac", col("shared").cast("double") /
         (size(col("ha")).cast("double") + size(col("hb")).cast("double") -
           col("shared").cast("double")))
@@ -226,21 +216,29 @@ object Dedup {
     val cand = prefix.as("a").join(prefix.as("b"),
         col("a.h") === col("b.h") && col("a.id") < col("b.id"))
       .select(col("a.id").as("ida"), col("b.id").as("idb")).distinct()
-    // same verify trade as ngramJaccardPairs (opt r14): sort each doc's
-    // distinct hash array ONCE (docs-sized) so the per-PAIR intersection
-    // is the allocation-free merge count — value-identical to
-    // size(array_intersect) on distinct arrays (IntersectExpressionsSpec)
-    val sortedBase = base.select(col("id"), array_sort(col("hs")).as("hs"))
-    cand
-      .join(sortedBase.select(col("id").as("ida"), col("hs").as("ha")), "ida")
-      .join(sortedBase.select(col("id").as("idb"), col("hs").as("hb")), "idb")
-      .withColumn("shared", graft.functions.IntersectExpressions
-        .sortedIntersectCount(col("ha"), col("hb")))
+    withShared(cand, base)
       .withColumn("na", size(col("ha")).cast("long"))
       .withColumn("nb", size(col("hb")).cast("long"))
       .where(col("shared") * lit(1000000L + tPpm) >=
         lit(tPpm.toLong) * (col("na") + col("nb")))
       .select("ida", "idb", "shared", "na", "nb")
+  }
+
+  /** Verify stage of the set-similarity joins: each candidate (ida, idb)
+    * with both documents' sorted hash arrays `ha`/`hb` of `base(id, hs)`
+    * and their exact `shared` count. Each doc's hash array is sorted ONCE
+    * (docs-sized work) so the per-PAIR exact intersection is an
+    * allocation-free merge count instead of array_intersect's per-row hash
+    * set + materialized array — pairs outnumber docs, so the trade is
+    * strictly favorable (opt r13, guide §4; value-identical on distinct
+    * arrays, IntersectExpressionsSpec). */
+  private def withShared(pairs: DataFrame, base: DataFrame): DataFrame = {
+    val sortedBase = base.select(col("id"), array_sort(col("hs")).as("hs"))
+    pairs
+      .join(sortedBase.select(col("id").as("ida"), col("hs").as("ha")), "ida")
+      .join(sortedBase.select(col("id").as("idb"), col("hs").as("hb")), "idb")
+      .withColumn("shared", graft.functions.IntersectExpressions
+        .sortedIntersectCount(col("ha"), col("hb")))
   }
 
   /** Shared candidate stage of the jaccard / containment verifiers:
@@ -289,15 +287,7 @@ object Dedup {
       .where(col("ub").cast("double") >=
         lit(minContainment) * least(col("na"), col("nb")).cast("double"))
       .select("ida", "idb")
-    // same verify trade as ngramJaccardPairs (opt r14): sorted-merge
-    // count over the once-sorted distinct hash arrays instead of
-    // array_intersect's per-pair hash set (IntersectExpressionsSpec)
-    val sortedBase = base.select(col("id"), array_sort(col("hs")).as("hs"))
-    pruned
-      .join(sortedBase.select(col("id").as("ida"), col("hs").as("ha")), "ida")
-      .join(sortedBase.select(col("id").as("idb"), col("hs").as("hb")), "idb")
-      .withColumn("shared", graft.functions.IntersectExpressions
-        .sortedIntersectCount(col("ha"), col("hb")))
+    withShared(pruned, base)
       .withColumn("cont", col("shared").cast("double") /
         least(size(col("ha")), size(col("hb"))).cast("double"))
       .where(col("cont") >= minContainment)

@@ -22,7 +22,7 @@ import java.nio.file.{Files => JFiles, Paths}
 object Convert {
 
   /** Read headerless tab-separated GDELT CSV with the injected all-string
-    * 61-column schema (converter.py:214-223). DROPMALFORMED ≈ the
+    * 58-column schema (converter.py:214-223). DROPMALFORMED ≈ the
     * reference's `on_bad_lines="warn"` skip-and-continue contract, with one
     * documented divergence (SURVEY.md §7.4): Spark drops rows with *either*
     * too many or too few fields, while pandas null-pads short rows — the
@@ -31,12 +31,12 @@ object Convert {
     * counts physical lines (column pruning reads none) — materialize
     * through the parquet sink before relying on row counts. */
   def readRawTsv(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read
-      .option("sep", "\t")
-      .option("header", "false")
-      .option("mode", "DROPMALFORMED")
-      .schema(Gdelt.rawSchema)
-      .csv(paths: _*)
+    spark.read.options(RawTsvOptions).schema(Gdelt.rawSchema).csv(paths: _*)
+
+  /** CSV reader options of the raw TSV: [[readRawTsv]] and the streaming
+    * [[graft.streaming.Incremental.incrementalConvert]]. */
+  private[graft] val RawTsvOptions =
+    Map("sep" -> "\t", "header" -> "false", "mode" -> "DROPMALFORMED")
 
   /** Numeric coercion (converter.py:225-227, 246-250): 19 configured
     * columns → double via try_cast (null on parse failure, matching
@@ -111,10 +111,8 @@ object Convert {
     val (zipsDone, zipsTodo) = zips.partition(isDone)
     val tsvFiles = plain ++
       zipsTodo.flatMap(z => graft.sources.Zip.unzip(z).map(_.toString))
-    val byType = tsvFiles.groupBy(p => Files.detectFileType(fileZipName(p)))
+    val byType = route(tsvFiles)
     val unknown = byType.getOrElse("unknown", Nil)
-    unknown.foreach(p =>
-      System.err.println(s"[convert] unrecognized file name, not converted: $p"))
     def coerceCfg(df: DataFrame): DataFrame =
       coerce(df, config.numericColumns, Gdelt.intColumns)
     var skipped = zipsDone.size
@@ -137,6 +135,17 @@ object Convert {
     }
     zipsTodo.foreach(markDone)
     (dailyTodo.size, hist, skipped, unknown.size)
+  }
+
+  /** The file-type routing rule of [[run]] and the CLI `pipeline`: `paths`
+    * grouped by [[Files.detectFileType]] of their archive-name shape
+    * ("daily", "monthly", "yearly" or "unknown"). Each unrecognized path
+    * is named on stderr. */
+  def route(paths: Seq[String]): Map[String, Seq[String]] = {
+    val byType = paths.groupBy(p => Files.detectFileType(fileZipName(p)))
+    byType.getOrElse("unknown", Nil).foreach(p =>
+      System.err.println(s"[convert] unrecognized file name, not converted: $p"))
+    byType
   }
 
   /** Map an extracted TSV/CSV path back to the zip-style name used for

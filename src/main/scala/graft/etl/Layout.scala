@@ -100,8 +100,11 @@ object Layout {
     * column; the manifest is O(#files), pure metadata. */
   def manifest(spark: org.apache.spark.sql.SparkSession, path: String,
                keyCol: String): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
+    fileStats(spark.read.parquet(path), keyCol)
+
+  /** (file, min_key, max_key, n_rows) per input file of `df`. */
+  private def fileStats(df: DataFrame, keyCol: String): DataFrame =
+    df.groupBy(input_file_name().as("file"))
       .agg(min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
         count(lit(1)).cast("long").as("n_rows"))
 
@@ -131,10 +134,7 @@ object Layout {
       .as[String].collect()  // O(delta): only the files the prior misses
     if (fresh.isEmpty) prior
     else {
-      val newRows = spark.read.parquet(fresh.toIndexedSeq: _*)
-        .groupBy(input_file_name().as("file"))
-        .agg(min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
-          count(lit(1)).cast("long").as("n_rows"))
+      val newRows = fileStats(spark.read.parquet(fresh.toIndexedSeq: _*), keyCol)
       val stillValid = prior.join(live,
         normC(col("file")) === normC(col("live_file")), "left_semi")
       stillValid.unionByName(newRows)

@@ -36,12 +36,8 @@ object GraftFunctions {
       (children: Seq[Expression]) => {
         require(children.length == 5,
           "graft_sign_bands expects (vec, seed, bands, width, dims)")
-        def lit(e: Expression, what: String): Long = e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toLong
-          case other => throw new IllegalArgumentException(
-            s"graft_sign_bands: $what must be an integer literal, got $other")
-        }
+        def lit(e: Expression, what: String): Long =
+          integerLiteral("graft_sign_bands", what, e)
         SignBandPatterns(children.head, lit(children(1), "seed"),
           lit(children(2), "bands").toInt, lit(children(3), "width").toInt,
           lit(children(4), "dims").toInt)
@@ -53,12 +49,7 @@ object GraftFunctions {
       (children: Seq[Expression]) => {
         require(children.length == 2,
           "graft_kmv_distinct expects (value, k)")
-        val k = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_kmv_distinct: k must be an integer literal, got $other")
-        }
+        val k = integerLiteral("graft_kmv_distinct", "k", children(1)).toInt
         KmvDistinctAgg(children.head, k).toAggregateExpression()
       }),
     // graft_hll(id): mergeable 256-register HyperLogLog sketch; returns
@@ -77,15 +68,19 @@ object GraftFunctions {
       (children: Seq[Expression]) => {
         require(children.length == 3,
           "graft_quantile_sketch expects (uid, value, k)")
-        val k = children(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_quantile_sketch: k must be an integer literal, got $other")
-        }
+        val k = integerLiteral("graft_quantile_sketch", "k", children(2)).toInt
         QuantileSketchAgg(children.head, children(1), k).toAggregateExpression()
       })
   )
+
+  /** The value of `fn`'s argument `what`, which must be a foldable
+    * integer literal. */
+  private def integerLiteral(fn: String, what: String, e: Expression): Long = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
+    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toLong
+    case other => throw new IllegalArgumentException(
+      s"$fn: $what must be an integer literal, got $other")
+  }
 
   /** Register the graft functions the session's registry does not hold
     * yet, so a call on a [[graft.Session]] replaces nothing. */

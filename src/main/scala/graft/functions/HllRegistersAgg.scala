@@ -50,10 +50,7 @@ case class HllRegistersAgg(child: Expression,
   override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
     val v = child.eval(input)
     if (v != null) {
-      val id = v match {
-        case l: Long => l
-        case i: Int => i.toLong
-      }
+      val id = KmvDistinctAgg.asLong(v)
       val d = md.digest(id.toString.getBytes("UTF-8"))
       val reg = d(0) & 0xff
       // next 48 bits, big-endian: bytes 1..6

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native merge-scan intersection COUNT over two SORTED long arrays — the
   * allocation-free replacement for `size(array_intersect(a, b))` on the
@@ -39,16 +39,8 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_sorted_intersect_count"
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<bigint> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorExpressions.checkArraysOf(this, LongType)
 
   override def nullable: Boolean = left.nullable || right.nullable
 

@@ -45,18 +45,6 @@ case class KmvDistinctAgg(child: Expression, k: Int,
   // per-task; digest() resets the state), not one per input row
   @transient private lazy val md = MessageDigest.getInstance("MD5")
 
-  /** First 13 hex nibbles of md5 as a long — derived straight from the
-    * first 7 digest bytes (56 bits big-endian >> 4), value-identical to
-    * the DataFrame path's `substring(md5(...), 1, 13)` parse without the
-    * per-row hex round-trip. */
-  private def hash52(v: Long): Long = {
-    val d = md.digest(v.toString.getBytes("UTF-8"))
-    var acc = 0L
-    var i = 0
-    while (i < 7) { acc = (acc << 8) | (d(i) & 0xffL); i += 1 }
-    acc >>> 4
-  }
-
   private def insert(buf: java.util.TreeSet[java.lang.Long], h: Long): Unit = {
     buf.add(h)
     if (buf.size > k) buf.pollLast()
@@ -65,10 +53,7 @@ case class KmvDistinctAgg(child: Expression, k: Int,
   override def update(buf: java.util.TreeSet[java.lang.Long],
                       input: InternalRow): java.util.TreeSet[java.lang.Long] = {
     val v = child.eval(input)
-    if (v != null) insert(buf, hash52(v match {
-      case l: Long => l
-      case i: Int => i.toLong
-    }))
+    if (v != null) insert(buf, KmvDistinctAgg.hash52(md, KmvDistinctAgg.asLong(v)))
     buf
   }
 
@@ -113,4 +98,28 @@ case class KmvDistinctAgg(child: Expression, k: Int,
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren.head)
+}
+
+object KmvDistinctAgg {
+
+  /** First 13 hex nibbles of md5(decimal string of `v`) as a long —
+    * derived straight from the first 7 digest bytes (56 bits big-endian
+    * >> 4), value-identical to the DataFrame path's
+    * `substring(md5(...), 1, 13)` parse without the per-row hex round-trip.
+    * `md` is the caller's own MD5 instance: MessageDigest is not
+    * thread-safe, so each aggregate instance keeps one. */
+  def hash52(md: MessageDigest, v: Long): Long = {
+    val d = md.digest(v.toString.getBytes("UTF-8"))
+    var acc = 0L
+    var i = 0
+    while (i < 7) { acc = (acc << 8) | (d(i) & 0xffL); i += 1 }
+    acc >>> 4
+  }
+
+  /** An integral input value (the sketch aggregates accept int or bigint)
+    * as a long. */
+  private[functions] def asLong(v: Any): Long = v match {
+    case l: Long => l
+    case i: Int => i.toLong
+  }
 }

@@ -74,26 +74,10 @@ case class QuantileSketchAgg(uid: Expression, value: Expression, k: Int,
 
   @transient private lazy val md = MessageDigest.getInstance("MD5")
 
-  /** First 13 hex nibbles of md5(uid decimal string) as a long — the
-    * [[KmvDistinctAgg.hash52]] construction, value-identical to DuckDB's
-    * `CAST('0x' || substr(md5(CAST(uid AS VARCHAR)), 1, 13) AS BIGINT)`. */
-  private def hash52(v: Long): Long = {
-    val d = md.digest(v.toString.getBytes("UTF-8"))
-    var acc = 0L
-    var i = 0
-    while (i < 7) { acc = (acc << 8) | (d(i) & 0xffL); i += 1 }
-    acc >>> 4
-  }
-
   private def insert(buf: java.util.TreeSet[(Long, Long, Long)],
                      t: (Long, Long, Long)): Unit = {
     buf.add(t)
     if (buf.size > k) buf.pollLast()
-  }
-
-  private def asLong(v: Any): Long = v match {
-    case l: Long => l
-    case i: Int => i.toLong
   }
 
   override def update(buf: java.util.TreeSet[(Long, Long, Long)],
@@ -101,8 +85,10 @@ case class QuantileSketchAgg(uid: Expression, value: Expression, k: Int,
     val u = uid.eval(input)
     val v = value.eval(input)
     if (u != null && v != null) {
-      val id = asLong(u)
-      insert(buf, (hash52(id), id, asLong(v)))
+      val id = KmvDistinctAgg.asLong(u)
+      // [[KmvDistinctAgg.hash52]], value-identical to DuckDB's
+      // `CAST('0x' || substr(md5(CAST(uid AS VARCHAR)), 1, 13) AS BIGINT)`
+      insert(buf, (KmvDistinctAgg.hash52(md, id), id, KmvDistinctAgg.asLong(v)))
     }
     buf
   }

@@ -33,16 +33,8 @@ case class DotProductDouble(left: Expression, right: Expression)
 
   /** Reject non-double arrays at analysis time — `ArrayData.getDouble` on
     * a float/int array would silently return garbage at runtime. */
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<double> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorExpressions.checkArraysOf(this, DoubleType)
 
   override def nullable: Boolean = true
 
@@ -206,4 +198,18 @@ object VectorExpressions {
                        dims: Int): Column =
     GraftColumnBridge.column(SignBandPatterns(
       GraftColumnBridge.expression(vec), seed, bands, width, dims))
+
+  /** Analysis-time check of a binary array kernel: both arguments must be
+    * `array<elem>`; the failure names the two argument types. */
+  private[functions] def checkArraysOf(e: BinaryExpression,
+                                       elem: DataType): TypeCheckResult = {
+    def ok(dt: DataType): Boolean = dt match {
+      case ArrayType(t, _) => t == elem
+      case _ => false
+    }
+    if (ok(e.left.dataType) && ok(e.right.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"${e.prettyName} requires two array<${elem.simpleString}> arguments, got " +
+        s"${e.left.dataType.simpleString} and ${e.right.dataType.simpleString}")
+  }
 }

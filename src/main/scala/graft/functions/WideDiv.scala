@@ -37,16 +37,8 @@ object WideDiv {
   def wide(c: Column): Column = c.cast(D)
 
   /** Exact `floor(num * mul / den)` as long, via DECIMAL(38,0). */
-  def mulDivWide(num: Column, mul: Column, den: Column): Column = {
-    val n = num.cast(D) * mul.cast(D)
-    val d = den.cast(D)
-    val q0 = floor(n / d).cast(D)
-    val r = n - q0 * d
-    when(r < lit(0).cast(D), q0 - lit(1).cast(D))
-      .when(r >= d, q0 + lit(1).cast(D))
-      .otherwise(q0)
-      .cast("long")
-  }
+  def mulDivWide(num: Column, mul: Column, den: Column): Column =
+    floorDiv(num.cast(D) * mul.cast(D), den.cast(D)).cast("long")
 
   /** The ppm-share special case: `floor(num * 1000000 / den)`. */
   def ppmWide(num: Column, den: Column): Column =
@@ -58,16 +50,8 @@ object WideDiv {
     * wide division rather than the output schema. Same non-negative /
     * den > 0 contract; DuckDB twin is plain HUGEINT `... * m // d`, which
     * stays HUGEINT. */
-  def mulDivWideDec(num: Column, mul: Column, den: Column): Column = {
-    val n = num.cast(D) * mul.cast(D)
-    val d = den.cast(D)
-    val q0 = floor(n / d).cast(D)
-    val r = n - q0 * d
-    when(r < lit(0).cast(D), q0 - lit(1).cast(D))
-      .when(r >= d, q0 + lit(1).cast(D))
-      .otherwise(q0)
-      .cast(D)
-  }
+  def mulDivWideDec(num: Column, mul: Column, den: Column): Column =
+    floorDiv(num.cast(D) * mul.cast(D), den.cast(D)).cast(D)
 
   /** Exact `trunc-toward-zero(num * mul / den)` as long, via DECIMAL(38,0),
     * for SIGNED numerators (smoothing trends, covariance numerators,
@@ -83,14 +67,19 @@ object WideDiv {
     * round across the integer boundary. */
   def mulDivWideSigned(num: Column, mul: Column, den: Column): Column = {
     val n = num.cast(D) * mul.cast(D)
-    val a = abs(n)
-    val d = den.cast(D)
-    val q0 = floor(a / d).cast(D)
-    val r = a - q0 * d
-    val q = when(r < lit(0).cast(D), q0 - lit(1).cast(D))
+    val q = floorDiv(abs(n), den.cast(D))
+    when(n < lit(0).cast(D), -q).otherwise(q).cast("long")
+  }
+
+  /** Exact `floor(n / d)` of two DECIMAL(38,0) columns: Spark's decimal
+    * division rounds HALF_UP to the result scale, so the quotient's floor
+    * is corrected by one step from the remainder. */
+  private def floorDiv(n: Column, d: Column): Column = {
+    val q0 = floor(n / d).cast(D)
+    val r = n - q0 * d
+    when(r < lit(0).cast(D), q0 - lit(1).cast(D))
       .when(r >= d, q0 + lit(1).cast(D))
       .otherwise(q0)
-    when(n < lit(0).cast(D), -q).otherwise(q).cast("long")
   }
 
   /** DuckDB oracle twin for [[mulDivWideSigned]]: HUGEINT `//` truncates

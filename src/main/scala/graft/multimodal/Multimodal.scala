@@ -259,19 +259,32 @@ object Multimodal {
     * pigeonhole, with candidate volume O(images · 4 / 16-bucket) instead
     * of all pairs. Same banding discipline as the SimHash text pairs. */
   def phashPairs(sig: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming <= 3,
-      "1-of-4-nibble banding guarantees full recall only for Hamming <= 3")
-    // keyed pin: the signature table is media-count-sized (tiny → AQE
-    // would run the whole n²/bucket fan-out in 1-2 tasks); (c, v) is a
-    // 64-value uniform band domain (hash bits), safe to pin without AQE
-    // skew-splitting — see [[graft.operators.Fanout]]
-    val chunks = graft.operators.Fanout.pin(
-        sig.select(col("media_id"), col("phash"),
+    val c = chunks(sig)
+    hammingPairs(c, c, maxHamming)
+  }
+
+  /** (media_id, phash, c, v): one row per 4-bit nibble `v` at position `c`
+    * of each phash — the banding keys of [[phashPairs]]. Keyed pin: the
+    * signature table is media-count-sized (tiny → AQE would run the whole
+    * n²/bucket fan-out in 1-2 tasks); (c, v) is a 64-value uniform band
+    * domain (hash bits), safe to pin without AQE skew-splitting — see
+    * [[graft.operators.Fanout]]. */
+  private def chunks(sig: DataFrame): DataFrame =
+    graft.operators.Fanout.pin(
+      sig.select(col("media_id"), col("phash"),
           explode(array((0 until 4).map(c => struct(lit(c).as("c"),
             shiftright(col("phash"), 4 * c).bitwiseAND(lit(15L)).as("v"))): _*)).as("ch"))
         .select(col("media_id"), col("phash"), col("ch.c").as("c"), col("ch.v").as("v")),
-        col("c"), col("v"))
-    chunks.as("a").join(chunks.as("b"),
+      col("c"), col("v"))
+
+  /** Pairs of [[chunks]] rows a → b sharing a nibble, distinct ids
+    * directed a < b, kept when the exact Hamming distance `ham` of their
+    * phashes is ≤ `maxHamming`. */
+  private def hammingPairs(a: DataFrame, b: DataFrame,
+                           maxHamming: Int): DataFrame = {
+    require(maxHamming <= 3,
+      "1-of-4-nibble banding guarantees full recall only for Hamming <= 3")
+    a.as("a").join(b.as("b"),
         col("a.c") === col("b.c") && col("a.v") === col("b.v") &&
           col("a.media_id") < col("b.media_id"))
       .select(col("a.media_id").as("ida"), col("b.media_id").as("idb"),
@@ -295,26 +308,8 @@ object Multimodal {
     * phash)): same 1-of-4-nibble candidate rule as [[phashPairs]], exact
     * Hamming verify, pairs directed a→b with distinct ids. */
   def phashPairsAcross(sigA: DataFrame, sigB: DataFrame,
-                       maxHamming: Int): DataFrame = {
-    require(maxHamming <= 3,
-      "1-of-4-nibble banding guarantees full recall only for Hamming <= 3")
-    // same keyed pin rationale as [[phashPairs]]
-    def chunks(sig: DataFrame) = graft.operators.Fanout.pin(
-      sig.select(col("media_id"), col("phash"),
-          explode(array((0 until 4).map(c => struct(lit(c).as("c"),
-            shiftright(col("phash"), 4 * c).bitwiseAND(lit(15L)).as("v"))): _*)).as("ch"))
-        .select(col("media_id"), col("phash"), col("ch.c").as("c"), col("ch.v").as("v")),
-      col("c"), col("v"))
-    chunks(sigA).as("a").join(chunks(sigB).as("b"),
-        col("a.c") === col("b.c") && col("a.v") === col("b.v") &&
-          col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("ida"), col("b.media_id").as("idb"),
-        col("a.phash").as("pa"), col("b.phash").as("pb"))
-      .distinct()
-      .withColumn("ham", bit_count(col("pa").bitwiseXOR(col("pb"))).cast("long"))
-      .where(col("ham") <= maxHamming)
-      .select("ida", "idb", "ham")
-  }
+                       maxHamming: Int): DataFrame =
+    hammingPairs(chunks(sigA), chunks(sigB), maxHamming)
 
   /** Haitsma–Kalker-style audio fingerprint over the decoded byte series:
     * bit i = 1 iff energy(i+1) > energy(i) — the delta-sign bits that

@@ -42,9 +42,7 @@ object CountMin {
   def sketch(df: DataFrame, value: Column, d: Int, w: Int): DataFrame =
     if (df.isStreaming) {
       require(d > 0 && w > 0, s"need d > 0, w > 0; got d=$d w=$w")
-      df.select(value.as("v"))
-        .select(col("v"), explode(sequence(lit(0), lit(d - 1))).as("r"))
-        .withColumn("bucket", bucket(col("r"), col("v"), w))
+      perHashRow(df.select(value.as("v")), d, w, col("v"))
         .groupBy("r", "bucket").agg(count(lit(1)).as("cnt"))
     } else sketchWeighted(
       df.groupBy(value.as("v")).agg(count(lit(1)).as("wt")),
@@ -56,20 +54,23 @@ object CountMin {
   def sketchWeighted(df: DataFrame, value: Column, weight: Column,
                      d: Int, w: Int): DataFrame = {
     require(d > 0 && w > 0, s"need d > 0, w > 0; got d=$d w=$w")
-    df.select(value.as("v"), weight.cast("long").as("wt"))
-      .select(col("v"), col("wt"), explode(sequence(lit(0), lit(d - 1))).as("r"))
-      .withColumn("bucket", bucket(col("r"), col("v"), w))
+    perHashRow(df.select(value.as("v"), weight.cast("long").as("wt")), d, w,
+        col("v"), col("wt"))
       .groupBy("r", "bucket").agg(sum(col("wt")).as("cnt"))
   }
+
+  /** `cols` of `df` once per hash row `r` in [0, d), with the `bucket` of
+    * its value `v` in that row. */
+  private def perHashRow(df: DataFrame, d: Int, w: Int, cols: Column*): DataFrame =
+    df.select(cols :+ explode(sequence(lit(0), lit(d - 1))).as("r"): _*)
+      .withColumn("bucket", bucket(col("r"), col("v"), w))
 
   /** Point estimates for the distinct values of `items`: (v, est).
     * `d`/`w` must match the sketch's. Items the sketch never saw get the
     * collision mass of their buckets (possibly 0). */
   def estimate(sk: DataFrame, items: DataFrame, value: Column,
                d: Int, w: Int): DataFrame =
-    items.select(value.as("v")).distinct()
-      .select(col("v"), explode(sequence(lit(0), lit(d - 1))).as("r"))
-      .withColumn("bucket", bucket(col("r"), col("v"), w))
+    perHashRow(items.select(value.as("v")).distinct(), d, w, col("v"))
       .join(sk, Seq("r", "bucket"), "left")
       .na.fill(0L, Seq("cnt"))
       .groupBy("v").agg(min(col("cnt")).as("est"))

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame}
 
 /** Contiguous sequence packing — assign documents to fixed token-budget
@@ -31,57 +30,38 @@ object Packing {
   def packByBudget(df: DataFrame, orderCol: Column, tokensCol: Column,
                    budget: Long, binCol: String = "bin"): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
-    require(!df.columns.contains(binCol), s"column '$binCol' already exists")
     val tok = "__pack_toks"
     require(!df.columns.contains(tok), s"column '$tok' is reserved")
-    val spark = df.sparkSession
-    val sorted = df.withColumn(tok, tokensCol.cast("long"))
-      .repartitionByRange(orderCol)
-      .sortWithinPartitions(orderCol)
-    val tokIdx = sorted.schema.fieldIndex(tok)
+    val withTok = df.withColumn(tok, tokensCol.cast("long"))
+    val tokIdx = withTok.schema.fieldIndex(tok)
     // Both passes MUST observe one materialized partitioning. Planning the
     // per-partition totals from a separate narrow projection
     // (`sorted.select(tok).rdd`) lets AQE coalesce the two range shuffles to
     // DIFFERENT partition counts (the tok-only plan is smaller), so the
     // offsets array goes out of sync with the data pass — observed as an
-    // ArrayIndexOutOfBounds at sf1. Converting to an RDD once pins the
-    // partition count and range cuts; pass 2 then reuses pass 1's shuffle
-    // files rather than re-shuffling.
-    //
-    // InternalRow level (opt r14, guide §4 / VERDICT r13 #4): `.rdd`
-    // deserialized every row to an external Row in both passes; `toRdd`
-    // reads the unsafe rows in place, and the value pass appends the bin
-    // via a JoinedRow the downstream scan node projects to unsafe format.
-    val rdd = sorted.queryExecution.toRdd
-    // pass 1: per-partition token totals → exclusive partition offsets
+    // ArrayIndexOutOfBounds at sf1. [[StableIds.appendScan]] runs both
+    // passes over one RDD, which pins the partition count and range cuts;
+    // pass 2 then reuses pass 1's shuffle files rather than re-shuffling.
     val tokName = tokensCol.toString
-    val totals = rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        var s = 0L
-        it.foreach { r =>
-          StableIds.requireNonNull(r, tokIdx, "packByBudget", tokName)
-          s += r.getLong(tokIdx)
+    val packed = StableIds.appendScan(withTok, Seq(orderCol), Seq(binCol)) { it =>
+      // pass 1: per-partition token totals
+      var s = 0L
+      it.foreach { r =>
+        StableIds.requireNonNull(r, tokIdx, "packByBudget", tokName)
+        s += r.getLong(tokIdx)
+      }
+      s
+    } { totals =>
+      // pass 2: in-partition scan from the exclusive partition offset
+      val offsets = totals.scanLeft(0L)(_ + _)
+      pid => {
+        var run = offsets(pid)
+        (r, extra) => {
+          extra.update(0, run / budget)
+          run += r.getLong(tokIdx)
         }
-        Iterator((pid, s))
-      }.collect().sortBy(_._1).map(_._2)
-    val offsets = totals.scanLeft(0L)(_ + _)
-    // pass 2: in-partition scan with the broadcast offset
-    val outSchema = StructType(sorted.schema.fields :+
-      StructField(binCol, LongType, nullable = false))
-    val rows = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var run = offsets(pid)
-      val extra = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      it.map { r =>
-        extra.update(0, run / budget)
-        run += r.getLong(tokIdx)
-        // safe to reuse r/extra: the scan node's per-row unsafe projection
-        // copies before this iterator advances (row-at-a-time pipeline)
-        joined(r, extra): org.apache.spark.sql.catalyst.InternalRow
       }
     }
-    org.apache.spark.sql.GraftColumnBridge
-      .internalCreateDataFrame(spark, rows, outSchema)
-      .drop(tok)
+    packed.drop(tok)
   }
 }

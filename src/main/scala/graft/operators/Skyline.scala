@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** 2-D Pareto skyline (maximize `maxCol`, minimize `minCol`).
   *
@@ -38,10 +39,7 @@ object Skyline {
     // stage 1: certain-dominance prune via the bucket grid
     val bucketed = points.withColumn("__b", floor(x / lit(bucketWidth)))
     val grid = bucketed.groupBy(col("__b")).agg(min(y).as("__bmin"))
-    val wb = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__b").desc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val gridCum = grid.withColumn("__above", min(col("__bmin")).over(wb))
+    val gridCum = grid.withColumn("__above", minOfHigher(col("__bmin"), col("__b")))
     val survivors = bucketed
       .join(broadcast(gridCum.select(col("__b"), col("__above"))), Seq("__b"))
       .where(col("__above").isNull || y < col("__above"))
@@ -49,14 +47,15 @@ object Skyline {
 
     // stage 2: exact dominance on the survivor set
     val perX = survivors.groupBy(x.as("__x")).agg(min(y).as("__xmin"))
-    val wx = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__x").desc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val cum = perX.withColumn("__higher", min(col("__xmin")).over(wx))
+    val cum = perX.withColumn("__higher", minOfHigher(col("__xmin"), col("__x")))
     survivors
       .join(broadcast(cum), survivors(maxCol) === cum("__x"))
       .where(
         (col("__higher").isNull || y < col("__higher")) && y <= col("__xmin"))
       .drop("__x", "__xmin", "__higher")
   }
+
+  /** min(`v`) over the rows of strictly higher `key`; null on the top row. */
+  private def minOfHigher(v: Column, key: Column): Column =
+    min(v).over(Window.orderBy(key.desc).rowsBetween(Window.unboundedPreceding, -1))
 }

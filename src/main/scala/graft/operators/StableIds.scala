@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.ClassTag
 
 /** Stable global row-id assignment — a training-data-pipeline staple
   * (shard-stable example ids), built the scalable way.
@@ -37,14 +39,13 @@ object StableIds {
     * reproduces the global sequence. */
   def assignIds(df: DataFrame, orderCols: Seq[Column],
                 idCol: String = "id"): DataFrame = {
-    require(!df.columns.contains(idCol), s"column '$idCol' already exists")
+    requireNew(df, Seq(idCol))
     import org.apache.spark.sql.functions._
     val pidC = "__sid_pid"
     val midC = "__sid_mid"
     for (c <- Seq(pidC, midC))
       require(!df.columns.contains(c), s"column '$c' is reserved")
-    val sorted = df.repartitionByRange(orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
+    val sorted = rangeSorted(df, orderCols)
       .withColumn(pidC, spark_partition_id())
       .withColumn(midC, monotonically_increasing_id())
       .localCheckpoint()
@@ -97,14 +98,6 @@ object StableIds {
                     cumCol: String = "cum"): DataFrame =
     rankAndCumSums(df, orderCols, Seq(valueCol -> cumCol), rankCol)
 
-  /** Multi-value generalization of [[rankAndCumSum]]: one range-partitioned
-    * two-phase scan producing the global rank plus an inclusive running sum
-    * for EACH (valueCol -> cumCol) pair — the scalable form of k parallel
-    * `sum() OVER (ORDER BY … ROWS UNBOUNDED PRECEDING)` windows. Two-sample
-    * ECDF statistics (KS distance, AUC rank-sums) need the running counts of
-    * BOTH classes in one score order; funneling the score domain through a
-    * single window partition twice is the exact anti-pattern this avoids.
-    * The metadata job moves k+1 longs per partition to the driver. */
   /** Inclusive global running MAX of each `valueCol` (LongType) in
     * `orderCols` order — the scalable form of
     * `max() OVER (ORDER BY … ROWS UNBOUNDED PRECEDING)`.
@@ -120,25 +113,10 @@ object StableIds {
     * prefix maxes seeded with Long.MinValue, then a map-side scan. */
   def runningMaxes(df: DataFrame, orderCols: Seq[Column],
                    valueCols: Seq[(String, String)]): DataFrame = {
-    for (c <- valueCols.map(_._2))
-      require(!df.columns.contains(c), s"column '$c' already exists")
-    val spark = df.sparkSession
-    val sorted = df.repartitionByRange(orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-    val vIdx = valueCols.map { case (v, _) => sorted.schema.fieldIndex(v) }
+    val vIdx = valueCols.map { case (v, _) => df.schema.fieldIndex(v) }
     val vName = valueCols.map(_._1)
     val k = vIdx.length
-    // InternalRow-level two-phase scan (opt r14, guide §4 / VERDICT r13
-    // #4): `sorted.rdd` deserialized EVERY row to an external Row in both
-    // passes and rebuilt InternalRows on the way out; `toRdd` reads the
-    // unsafe rows in place — the stats pass touches k longs per row, the
-    // value pass appends k longs via a JoinedRow that the downstream scan
-    // node projects to unsafe format (one projection per row, total).
-    // Both passes still run over the SAME materialized RDD so AQE cannot
-    // re-coalesce them to different partition layouts (the Packing
-    // lesson, 87c3e20).
-    val rdd = sorted.queryExecution.toRdd
-    val stats = rdd.mapPartitionsWithIndex { (pid, it) =>
+    appendScan(df, orderCols, valueCols.map(_._2)) { it =>
       val m = Array.fill(k)(Long.MinValue)
       it.foreach { r =>
         var j = 0
@@ -148,52 +126,42 @@ object StableIds {
           j += 1
         }
       }
-      Iterator((pid, m.toSeq))
-    }.collect().sortBy(_._1)
-    // exclusive prefix max per partition (what all EARLIER partitions saw)
-    val maxOff = Array.tabulate(k) { j =>
-      stats.map(_._2(j)).scanLeft(Long.MinValue)(math.max)
-    }
-    val outSchema = StructType(sorted.schema.fields ++
-      valueCols.map { case (_, c) => StructField(c, LongType, nullable = false) })
-    val rows = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val run = Array.tabulate(k)(j => maxOff(j)(pid))
-      val extra = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(k)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      it.map { r =>
-        var j = 0
-        while (j < k) {
-          run(j) = math.max(run(j), r.getLong(vIdx(j)))
-          extra.update(j, run(j))
-          j += 1
+      m
+    } { stats =>
+      // exclusive prefix max per partition (what all EARLIER partitions saw)
+      val maxOff = Array.tabulate(k) { j =>
+        stats.map(_(j)).scanLeft(Long.MinValue)(math.max)
+      }
+      pid => {
+        val run = Array.tabulate(k)(j => maxOff(j)(pid))
+        (r, extra) => {
+          var j = 0
+          while (j < k) {
+            run(j) = math.max(run(j), r.getLong(vIdx(j)))
+            extra.update(j, run(j))
+            j += 1
+          }
         }
-        // safe to reuse r/extra: the scan node's per-row unsafe projection
-        // copies before this iterator advances (row-at-a-time pipeline)
-        joined(r, extra): org.apache.spark.sql.catalyst.InternalRow
       }
     }
-    org.apache.spark.sql.GraftColumnBridge
-      .internalCreateDataFrame(spark, rows, outSchema)
   }
 
+  /** Multi-value generalization of [[rankAndCumSum]]: one range-partitioned
+    * two-phase scan producing the global rank plus an inclusive running sum
+    * for EACH (valueCol -> cumCol) pair — the scalable form of k parallel
+    * `sum() OVER (ORDER BY … ROWS UNBOUNDED PRECEDING)` windows. Two-sample
+    * ECDF statistics (KS distance, AUC rank-sums) need the running counts of
+    * BOTH classes in one score order; funneling the score domain through a
+    * single window partition twice is the exact anti-pattern this avoids.
+    * The metadata job moves k+1 longs per partition to the driver:
+    * (row count, per-value sum). */
   def rankAndCumSums(df: DataFrame, orderCols: Seq[Column],
                      valueCols: Seq[(String, String)],
                      rankCol: String = "rank"): DataFrame = {
-    for (c <- rankCol +: valueCols.map(_._2))
-      require(!df.columns.contains(c), s"column '$c' already exists")
-    val spark = df.sparkSession
-    val sorted = df.repartitionByRange(orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-    val vIdx = valueCols.map { case (v, _) => sorted.schema.fieldIndex(v) }
+    val vIdx = valueCols.map { case (v, _) => df.schema.fieldIndex(v) }
     val vName = valueCols.map(_._1)
     val k = vIdx.length
-    // InternalRow-level two-phase scan — same shape and rationale as
-    // [[runningMaxes]] (opt r14, guide §4 / VERDICT r13 #4). One metadata
-    // pass: (row count, per-value sum) per partition; both passes run
-    // over the SAME materialized RDD so AQE cannot re-coalesce them to
-    // different partition layouts (the Packing lesson, 87c3e20).
-    val rdd = sorted.queryExecution.toRdd
-    val stats = rdd.mapPartitionsWithIndex { (pid, it) =>
+    appendScan(df, orderCols, rankCol +: valueCols.map(_._2)) { it =>
       var n = 0L; val s = Array.fill(k)(0L)
       it.foreach { r =>
         n += 1L
@@ -204,34 +172,77 @@ object StableIds {
           j += 1
         }
       }
-      Iterator((pid, n, s.toSeq))
-    }.collect().sortBy(_._1)
-    val cntOff = stats.map(_._2).scanLeft(0L)(_ + _)
-    val sumOff = Array.tabulate(k) { j =>
-      stats.map(_._3(j)).scanLeft(0L)(_ + _)
-    }
-    val outSchema = StructType(sorted.schema.fields ++
-      (StructField(rankCol, LongType, nullable = false) +:
-        valueCols.map { case (_, c) => StructField(c, LongType, nullable = false) }))
-    val rows = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var rk = cntOff(pid)
-      val run = Array.tabulate(k)(j => sumOff(j)(pid))
-      val extra = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(k + 1)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      it.map { r =>
-        rk += 1L
-        extra.update(0, rk)
-        var j = 0
-        while (j < k) {
-          run(j) += r.getLong(vIdx(j))
-          extra.update(j + 1, run(j))
-          j += 1
+      (n, s)
+    } { stats =>
+      val cntOff = stats.map(_._1).scanLeft(0L)(_ + _)
+      val sumOff = Array.tabulate(k) { j =>
+        stats.map(_._2(j)).scanLeft(0L)(_ + _)
+      }
+      pid => {
+        var rk = cntOff(pid)
+        val run = Array.tabulate(k)(j => sumOff(j)(pid))
+        (r, extra) => {
+          rk += 1L
+          extra.update(0, rk)
+          var j = 0
+          while (j < k) {
+            run(j) += r.getLong(vIdx(j))
+            extra.update(j + 1, run(j))
+            j += 1
+          }
         }
-        joined(r, extra): org.apache.spark.sql.catalyst.InternalRow
+      }
+    }
+  }
+
+  /** Fail when `df` already holds any of the output columns `cols`. */
+  private def requireNew(df: DataFrame, cols: Seq[String]): Unit =
+    for (c <- cols)
+      require(!df.columns.contains(c), s"column '$c' already exists")
+
+  /** `df` range-partitioned by `orderCols` and sorted within partitions. */
+  private def rangeSorted(df: DataFrame, orderCols: Seq[Column]): DataFrame =
+    df.repartitionByRange(orderCols: _*).sortWithinPartitions(orderCols: _*)
+
+  /** The two-phase InternalRow scan (opt r14, guide §4 / VERDICT r13 #4)
+    * behind [[runningMaxes]], [[rankAndCumSums]] and
+    * [[Packing.packByBudget]]: `df` in `orderCols` order (range-partitioned,
+    * sorted within partitions) with the non-null LongType columns `newCols`
+    * appended. Pass 1 summarizes each partition with `stat`; `seed` turns
+    * the summaries, in partition order, into each partition's row writer,
+    * which sets a row's appended values in `extra`. `toRdd` reads the
+    * unsafe rows in place (`.rdd` deserialized EVERY row to an external
+    * Row), and the JoinedRow of pass 2 is projected to unsafe format by the
+    * downstream scan node (one projection per row, total). Both passes run
+    * over the SAME materialized RDD so AQE cannot re-coalesce them to
+    * different partition layouts (the Packing lesson, 87c3e20). */
+  private[operators] def appendScan[S: ClassTag](df: DataFrame,
+      orderCols: Seq[Column], newCols: Seq[String])(
+      stat: Iterator[InternalRow] => S)(
+      seed: Array[S] => Int => (InternalRow, GenericInternalRow) => Unit)
+      : DataFrame = {
+    requireNew(df, newCols)
+    val sorted = rangeSorted(df, orderCols)
+    val rdd = sorted.queryExecution.toRdd
+    val stats = rdd.mapPartitionsWithIndex((pid, it) => Iterator((pid, stat(it))))
+      .collect().sortBy(_._1).map(_._2)
+    val writer = seed(stats)
+    val n = newCols.length
+    val outSchema = StructType(sorted.schema.fields ++
+      newCols.map(StructField(_, LongType, nullable = false)))
+    val rows = rdd.mapPartitionsWithIndex { (pid, it) =>
+      val write = writer(pid)
+      val extra = new GenericInternalRow(n)
+      val joined = new JoinedRow
+      it.map { r =>
+        write(r, extra)
+        // safe to reuse r/extra: the scan node's per-row unsafe projection
+        // copies before this iterator advances (row-at-a-time pipeline)
+        joined(r, extra): InternalRow
       }
     }
     org.apache.spark.sql.GraftColumnBridge
-      .internalCreateDataFrame(spark, rows, outSchema)
+      .internalCreateDataFrame(sorted.sparkSession, rows, outSchema)
   }
 
   /** First-pass guard of the two-phase scans: `InternalRow.getLong` reads

@@ -51,7 +51,7 @@ object ParityQueries {
     QueryCaches.memoDir(s, d, "gdelt_tsv") { base =>
       val fs = new org.apache.hadoop.fs.Path(base)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      // 61-column TSV line per event: the date-int columns derive from
+      // 58-column TSV line per event: the date-int columns derive from
       // ts exactly as the oracle's strftime does; unused columns empty
       val cols: Seq[org.apache.spark.sql.Column] =
         graft.schema.Gdelt.columns.map {
@@ -294,7 +294,7 @@ object ParityQueries {
     // daily-named TSV archive through `gdelt-tsv` with a pushed 15-day
     // Day range — filename pruning drops ~half the files at planning
     // time, 64 KB offset splits engage on every kept file, parse-time
-    // projection materializes 4 of 61 columns, and the pushed range
+    // projection materializes 4 of 58 columns, and the pushed range
     // skips residual rows pre-InternalRow. The oracle recomputes the
     // aggregate from the events parquet alone (the TSV derivation is
     // deterministic: Day = strftime '%Y%m%d'), so equality proves the

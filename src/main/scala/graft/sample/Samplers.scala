@@ -84,15 +84,27 @@ object Samplers {
   def perGroup(df: DataFrame, groupCols: Seq[Column], k: Int,
                order: SampleOrder): DataFrame = {
     require(k >= 0, s"per-group sample size must be >= 0, got $k")
-    // Collision-free temp name: a caller column literally named "__rn"
-    // must survive the round-trip untouched.
-    val rn = Iterator.from(0).map(i => s"__rn$i")
-      .find(n => !df.columns.contains(n)).get
+    firstPerGroup(df, groupCols, order, "__rn", lit(k))
+  }
+
+  /** The rows of `df` whose `row_number()` within their `groupCols` group,
+    * in `order`, is at most `limit` — the exact-k-per-group tail of
+    * [[perGroup]] and [[mixExact]]. */
+  private def firstPerGroup(df: DataFrame, groupCols: Seq[Column],
+                            order: SampleOrder, prefix: String,
+                            limit: Column): DataFrame = {
+    val rn = freshNames(df, prefix).next()
     val w = Window.partitionBy(groupCols: _*).orderBy(order.sortExprs: _*)
     df.withColumn(rn, row_number().over(w))
-      .where(col(rn) <= k)
+      .where(col(rn) <= limit)
       .drop(rn)
   }
+
+  /** Temp column names `prefix0`, `prefix1`, … absent from `df`: a caller
+    * column literally named like a temp column survives the round-trip
+    * untouched. */
+  private def freshNames(df: DataFrame, prefix: String): Iterator[String] =
+    Iterator.from(0).map(i => s"$prefix$i").filter(n => !df.columns.contains(n))
 
   /** Daily sampler (R2): k rows per day. The reference samples per
     * (file, day) — an artifact of its per-file loop (samplers.py:142-154)
@@ -120,8 +132,7 @@ object Samplers {
                     idCols: Seq[Column]): DataFrame = {
     require(n >= 0, s"sample size must be >= 0, got $n")
     val M = 1L << 40
-    val names = Iterator.from(0).map(i => s"__wp$i")
-      .filter(nm => !df.columns.contains(nm))
+    val names = freshNames(df, "__wp")
     val (rn, wh) = (names.next(), names.next())
     // the content hash feeds both the uniform key and the tiebreak — bind it
     // to one column so it is evaluated once per row, not twice
@@ -145,11 +156,7 @@ object Samplers {
     require(targets.values.forall(_ >= 0), "targets must be >= 0")
     val tmap = map(targets.flatMap { case (k, v) =>
       Seq(lit(k), lit(v)) }.toSeq: _*)
-    val rn = Iterator.from(0).map(i => s"__mx$i")
-      .find(nm => !df.columns.contains(nm)).get
-    val w = Window.partitionBy(sourceCol).orderBy(order.sortExprs: _*)
-    df.withColumn(rn, row_number().over(w))
-      .where(col(rn) <= coalesce(element_at(tmap, sourceCol.cast("string")), lit(0)))
-      .drop(rn)
+    firstPerGroup(df, Seq(sourceCol), order, "__mx",
+      coalesce(element_at(tmap, sourceCol.cast("string")), lit(0)))
   }
 }

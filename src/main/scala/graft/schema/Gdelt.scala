@@ -2,7 +2,7 @@ package graft.schema
 
 import org.apache.spark.sql.types._
 
-/** GDELT 2.0 event schema: 61 fixed columns, injected (never inferred) into
+/** GDELT 2.0 event schema: 58 fixed columns, injected (never inferred) into
   * every stage — mirrors the reference's config-driven column list
   * (reference: config/settings.example.yaml:8-67, conversion/converter.py:67).
   *
@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   */
 object Gdelt {
 
-  /** Ordered 61-column list (settings.example.yaml:8-67). */
+  /** Ordered 58-column list (settings.example.yaml:8-67). */
   val columns: Seq[String] = Seq(
     "GlobalEventID", "Day", "MonthYear", "Year", "FractionDate",
     "Actor1Code", "Actor1Name", "Actor1CountryCode", "Actor1KnownGroupCode",

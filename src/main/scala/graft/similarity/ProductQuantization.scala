@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 
 /** Product quantization (PQ) for approximate nearest-neighbor search:
   * split each vector into `m` subvectors, quantize every subvector to its
@@ -50,6 +50,20 @@ object ProductQuantization {
       .withColumn("m", col("__e.m")).withColumn("sv", col("__e.sv"))
       .drop("__e")
 
+  /** Per (vector, subspace): the squared distance `d2q` to every centroid
+    * `cid` of that subspace's training-free codebook (the first `ksub`
+    * vectors). */
+  private def centroidDistances(emb: DataFrame, idCol: Column, vecCol: Column,
+                                m: Int, subDim: Int, ksub: Int): DataFrame = {
+    val base = emb.select(idCol.as("id"),
+      microVec(vecCol.cast("array<double>")).as("v"))
+    val sub = subspaces(base, col("v"), m, subDim).select("id", "m", "sv")
+    val cb = sub.where(col("id") < ksub)
+      .select(col("id").as("cid"), col("m"), col("sv").as("cv"))
+    sub.join(broadcast(cb), "m")
+      .withColumn("d2q", dist2Micro2(col("sv"), col("cv")))
+  }
+
   /** Corpus PQ codes and query ADC distance tables.
     * Returns (codes(id, m, code), dt(qid, m, cid, qd2q)) — codes is one
     * scan + an (id, m)-keyed argmin; dt is |Q|·m·ksub rows (broadcast by
@@ -57,14 +71,7 @@ object ProductQuantization {
   private def encode(emb: DataFrame, idCol: Column, vecCol: Column,
                      queryMaxId: Long, m: Int, subDim: Int,
                      ksub: Int): (DataFrame, DataFrame) = {
-    val base = emb.select(idCol.as("id"),
-      microVec(vecCol.cast("array<double>")).as("v"))
-    val sub = subspaces(base, col("v"), m, subDim).select("id", "m", "sv")
-    val cb = sub.where(col("id") < ksub)
-      .select(col("id").as("cid"), col("m"), col("sv").as("cv"))
-    // per (vector, subspace): distance to every centroid of that subspace
-    val d = sub.join(broadcast(cb), "m")
-      .withColumn("d2q", dist2Micro2(col("sv"), col("cv")))
+    val d = centroidDistances(emb, idCol, vecCol, m, subDim, ksub)
       .select(col("id"), col("m"), col("cid"), col("d2q"))
     // corpus codes: argmin centroid per (id, m) — struct-min ties on cid
     val codes = d.groupBy("id", "m")
@@ -84,13 +91,7 @@ object ProductQuantization {
     * path, so the report gates bitwise. */
   def distortion(emb: DataFrame, idCol: Column, vecCol: Column,
                  m: Int, subDim: Int, ksub: Int): DataFrame = {
-    val base = emb.select(idCol.as("id"),
-      microVec(vecCol.cast("array<double>")).as("v"))
-    val sub = subspaces(base, col("v"), m, subDim).select("id", "m", "sv")
-    val cb = sub.where(col("id") < ksub)
-      .select(col("id").as("cid"), col("m"), col("sv").as("cv"))
-    sub.join(broadcast(cb), "m")
-      .withColumn("d2q", dist2Micro2(col("sv"), col("cv")))
+    centroidDistances(emb, idCol, vecCol, m, subDim, ksub)
       .groupBy("id", "m").agg(min(col("d2q")).as("d2q"))
       .groupBy(col("m").cast("long").as("m"))
       .agg(count(lit(1)).as("n"),
@@ -110,14 +111,20 @@ object ProductQuantization {
   def adcTopK(emb: DataFrame, idCol: Column, vecCol: Column,
               queryMaxId: Long, m: Int, subDim: Int, ksub: Int, k: Int): DataFrame = {
     val (codes, dt) = encode(emb, idCol, vecCol, queryMaxId, m, subDim, ksub)
-    val w = Window.partitionBy(col("qid")).orderBy(col("adist_micro2"), col("nid"))
     // codes and dt share one lineage: rename dt's `m` so the key is two
     // distinct columns, not a self-comparison left to the self-join rewrite
-    codes.join(broadcast(dt.withColumnRenamed("m", "dm")),
+    topKByAdc(codes.join(broadcast(dt.withColumnRenamed("m", "dm")),
         col("m") === col("dm") && col("code") === col("cid"))
       .where(col("qid") =!= col("id"))
-      .groupBy(col("qid"), col("id").as("nid"))
-      .agg(sum(col("qd2q")).as("adist_micro2"))
+      .groupBy(col("qid"), col("id").as("nid")), k)
+  }
+
+  /** ADC distance `adist_micro2` per (qid, nid) group of code-matched
+    * distance-table rows, the k nearest per qid (ties → lowest nid).
+    * Output: (qid, nid, rank, adist_micro2). */
+  private def topKByAdc(pairs: RelationalGroupedDataset, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col("adist_micro2"), col("nid"))
+    pairs.agg(sum(col("qd2q")).as("adist_micro2"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
       .select("qid", "nid", "rank", "adist_micro2")
@@ -164,14 +171,9 @@ object ProductQuantization {
       .where(col("qid") =!= col("nid"))
       .select("qid", "nid")
     val (codes, dt) = encode(emb, idCol, vecCol, queryMaxId, m, subDim, ksub)
-    val w = Window.partitionBy(col("qid")).orderBy(col("adist_micro2"), col("nid"))
-    broadcast(cand)
+    topKByAdc(broadcast(cand)
       .join(codes.withColumnRenamed("id", "nid"), "nid")
       .join(broadcast(dt.withColumnRenamed("cid", "code")), Seq("qid", "m", "code"))
-      .groupBy("qid", "nid")
-      .agg(sum(col("qd2q")).as("adist_micro2"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select("qid", "nid", "rank", "adist_micro2")
+      .groupBy("qid", "nid"), k)
   }
 }

@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.dedup.Dedup
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -78,11 +79,6 @@ object Similarity {
     array(planes.toIndexedSeq.map(p => dot(vec, typedlit(p.toSeq))): _*)
   }
 
-  /** Brute-force exact top-k by cosine: for each row of `queries`, the k
-    * nearest `corpus` rows (excluding self-matches on id equality). The
-    * query side is expected to be small — Spark broadcasts it, so the
-    * corpus is scanned once with no shuffle. Deterministic tiebreak on
-    * corpus id. Returns (qid, nid, rank, cos). */
   /** Hard-negative mining for contrastive training: per query, the top-k
     * most-cosine-similar corpus items with a DIFFERENT label — the
     * "confusable but wrong" examples a retrieval/embedding trainer wants.
@@ -90,42 +86,55 @@ object Similarity {
     * inequality rides the join as a residual); swap the corpus for an LSH
     * candidate table to scale past a full scan, exactly as ANN top-k does. */
   def hardNegatives(emb: DataFrame, queryMaxId: Long, k: Int): DataFrame = {
-    val q = emb.where(col("vec_id") < queryMaxId)
-      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-        col("embedding").cast("array<double>").as("qv"))
-      .withColumn("qn", l2norm(col("qv")))
-    val c = emb.select(col("vec_id").as("nid"), col("label").as("nlabel"),
-      col("embedding").cast("array<double>").as("nv"))
-      .withColumn("nn", l2norm(col("nv")))
-    val scored = broadcast(q).crossJoin(c)
-      .where(col("qlabel") =!= col("nlabel"))
-      .withColumn("cos", dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select("qid", "qlabel", "nid", "nlabel", "rank", "cos")
+    val q = normed(emb.where(col("vec_id") < queryMaxId),
+      Seq(col("vec_id").as("qid"), col("label").as("qlabel")), "qv", "qn")
+    val c = normed(emb, Seq(col("vec_id").as("nid"), col("label").as("nlabel")),
+      "nv", "nn")
+    topKByCosine(broadcast(q).crossJoin(c).where(col("qlabel") =!= col("nlabel")),
+      k, "qid", "qlabel", "nid", "nlabel", "rank", "cos")
   }
 
+  /** Brute-force exact top-k by cosine: for each row of `queries`, the k
+    * nearest `corpus` rows (excluding self-matches on id equality). The
+    * query side is expected to be small — Spark broadcasts it, so the
+    * corpus is scanned once with no shuffle. Deterministic tiebreak on
+    * corpus id. Returns (qid, nid, rank, cos). */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    // norms precomputed per side: each corpus row scores against every
-    // query, so folding the norm into the pair expression would recompute
-    // it |queries| times per row. sqrt(dot(v,v)) here is the identical
-    // expression, so cos values stay bitwise unchanged.
-    val q = queries.select(col("vec_id").as("qid"),
-      col("embedding").cast("array<double>").as("qv"))
-      .withColumn("qn", l2norm(col("qv")))
-    val c = corpus.select(col("vec_id").as("nid"),
-      col("embedding").cast("array<double>").as("nv"))
-      .withColumn("nn", l2norm(col("nv")))
-    val scored = broadcast(q).crossJoin(c)
-      .where(col("qid") =!= col("nid"))
-      .withColumn("cos", dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
+    val q = normed(queries, Seq(col("vec_id").as("qid")), "qv", "qn")
+    val c = normed(corpus, Seq(col("vec_id").as("nid")), "nv", "nn")
+    topKByCosine(broadcast(q).crossJoin(c).where(col("qid") =!= col("nid")),
+      k, "qid", "nid", "rank", "cos")
+  }
+
+  /** (id, v): each vector's id and its embedding as a double vector. */
+  private def idVectors(vectors: DataFrame): DataFrame =
+    vectors.select(col("vec_id").as("id"),
+      col("embedding").cast("array<double>").as("v"))
+
+  /** The training-free centroid set (cid, cv): the (id, v) rows with id
+    * below `n`. */
+  private def firstCentroids(v: DataFrame, n: Int): DataFrame =
+    v.where(col("id") < n).select(col("id").as("cid"), col("v").as("cv"))
+
+  /** `cols` of `df` beside its embedding as a double vector `v` and that
+    * vector's norm `n`. Norms are precomputed per side: each corpus row
+    * scores against every query, so folding the norm into the pair
+    * expression would recompute it |queries| times per row. sqrt(dot(v,v))
+    * here is the identical expression, so cos values stay bitwise
+    * unchanged. */
+  private def normed(df: DataFrame, cols: Seq[Column], v: String,
+                     n: String): DataFrame =
+    df.select(cols :+ col("embedding").cast("array<double>").as(v): _*)
+      .withColumn(n, l2norm(col(v)))
+
+  /** The k best-scoring `nid`s per `qid` of a (qid, qv, qn, nid, nv, nn)
+    * pair table by cosine, ties on `nid`, projected to `out`. */
+  private def topKByCosine(pairs: DataFrame, k: Int, out: String*): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
+    pairs.withColumn("cos", dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
+      .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
-      .select("qid", "nid", "rank", "cos")
+      .select(out.map(col): _*)
   }
 
   /** IVF-style cell assignment: each vector goes to the centroid with the
@@ -136,18 +145,22 @@ object Similarity {
     * broadcast the centroid set, one scan to assign, then searches touch
     * only matching cells instead of the corpus.
     * Returns (id, v, cell). */
-  def ivfAssign(vectors: DataFrame, nCentroids: Int): DataFrame = {
-    val v = vectors.select(col("vec_id").as("id"),
-      col("embedding").cast("array<double>").as("v"))
-    val cents = v.where(col("id") < nCentroids)
-      .select(col("id").as("cid"), col("v").as("cv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("score").desc, col("cid"))
+  def ivfAssign(vectors: DataFrame, nCentroids: Int): DataFrame =
+    rankedCells(vectors, nCentroids)
+      .where(col("rn") === 1)
+      .select(col("id"), col("v"), col("cid").as("cell"))
+
+  /** The coarse quantizer behind [[ivfAssign]] and [[ivfTopKProbes]]:
+    * every (id, v) against every centroid (cid, cv) of the first
+    * `nCentroids` vectors, with its dot-product `score` and its rank `rn`
+    * per id (best score first, ties → lowest cid). */
+  private def rankedCells(vectors: DataFrame, nCentroids: Int): DataFrame = {
+    val v = idVectors(vectors)
+    val cents = firstCentroids(v, nCentroids)
+    val w = Window.partitionBy(col("id")).orderBy(col("score").desc, col("cid"))
     v.crossJoin(broadcast(cents))
       .withColumn("score", dot(col("v"), col("cv")))
       .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-      .select(col("id"), col("v"), col("cid").as("cell"))
   }
 
   /** DuckDB oracle twin for [[ivfAssign]] over a CTE `e(vec_id, v)`: CTEs
@@ -187,50 +200,36 @@ object Similarity {
   def ivfTopKProbes(vectors: DataFrame, nCentroids: Int, queryMaxId: Long,
                     k: Int, nprobe: Int): DataFrame = {
     require(nprobe > 0, s"nprobe must be positive, got $nprobe")
-    val v = vectors.select(col("vec_id").as("id"),
-      col("embedding").cast("array<double>").as("v"))
-    val cents = v.where(col("id") < nCentroids)
-      .select(col("id").as("cid"), col("v").as("cv"))
-    val wAssign = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("score").desc, col("cid"))
-    val ranked = v.crossJoin(broadcast(cents))
-      .withColumn("score", dot(col("v"), col("cv")))
-      .withColumn("rn", row_number().over(wAssign))
+    val ranked = rankedCells(vectors, nCentroids)
     val c = ranked.where(col("rn") === 1)
       .select(col("id").as("nid"), col("v").as("nv"), col("cid").as("cell"))
       .withColumn("nn", l2norm(col("nv")))
     val q = ranked.where(col("id") < queryMaxId && col("rn") <= nprobe)
       .select(col("id").as("qid"), col("v").as("qv"), col("cid").as("cell"))
       .withColumn("qn", l2norm(col("qv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    broadcast(q).join(c, "cell")
-      .where(col("qid") =!= col("nid"))
-      .withColumn("cos", dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select("qid", "nid", "rank", "cos")
+    topKByCosine(broadcast(q).join(c, "cell").where(col("qid") =!= col("nid")),
+      k, "qid", "nid", "rank", "cos")
+  }
+
+  /** All-centroid squared distances: one row per (vector, centroid), with
+    * the centroid's rank `rn` per vector (nearest first, ties → lowest
+    * cid). The dist² chain (‖v‖² − 2·v·c + ‖c‖²) is the fixed-order IEEE
+    * expression the DuckDB oracles mirror bitwise. */
+  private def scoredCells(v: DataFrame, cents: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("id")).orderBy(col("dist2"), col("cid"))
+    v.crossJoin(broadcast(cents))
+      .withColumn("dist2",
+        dot(col("v"), col("v")) - lit(2.0) * dot(col("v"), col("cv")) +
+          dot(col("cv"), col("cv")))
+      .withColumn("rn", row_number().over(w))
   }
 
   /** One Lloyd assignment step: each vector to its nearest centroid by
     * squared L2 distance, ties → lowest cid. The dist2 expression keeps a
     * fixed association order so the oracle reproduces it bitwise. */
-  /** All-centroid squared distances: one row per (vector, centroid). The
-    * dist² chain (‖v‖² − 2·v·c + ‖c‖²) is the fixed-order IEEE expression
-    * the DuckDB oracles mirror bitwise. */
-  private def scoredCells(v: DataFrame, cents: DataFrame): DataFrame =
-    v.crossJoin(broadcast(cents))
-      .withColumn("dist2",
-        dot(col("v"), col("v")) - lit(2.0) * dot(col("v"), col("cv")) +
-          dot(col("cv"), col("cv")))
-
-  private def assignCells(v: DataFrame, cents: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("dist2"), col("cid"))
-    scoredCells(v, cents).withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
+  private def assignCells(v: DataFrame, cents: DataFrame): DataFrame =
+    scoredCells(v, cents).where(col("rn") === 1)
       .select(col("id"), col("v"), col("cid"), col("dist2"))
-  }
 
   /** Per-point centroid-based (simplified) silhouette over trained k-means
     * cells, on SQUARED distances: a² = dist² to the nearest centroid (the
@@ -245,13 +244,9 @@ object Similarity {
     * exactly k rows. Returns (id, cell, s_micro). */
   def silhouetteByCell(vectors: DataFrame, k: Int, iters: Int,
                        dims: Int = 64): DataFrame = {
-    val v = vectors.select(col("vec_id").as("id"),
-      col("embedding").cast("array<double>").as("v"))
+    val v = idVectors(vectors)
     val cents = kmeansCentroids(vectors, k, iters, dims)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("dist2"), col("cid"))
-    val top2 = scoredCells(v, cents)
-      .withColumn("rn", row_number().over(w)).where(col("rn") <= 2)
+    val top2 = scoredCells(v, cents).where(col("rn") <= 2)
     top2.groupBy("id").agg(
         min(when(col("rn") === 1, col("cid"))).as("cell"),
         min(when(col("rn") === 1, col("dist2"))).as("a2"),
@@ -279,9 +274,8 @@ object Similarity {
   def kmeansCentroids(vectors: DataFrame, k: Int, iters: Int,
                       dims: Int = 64): DataFrame = {
     require(k > 0 && iters >= 0, s"need k > 0, iters >= 0; got k=$k iters=$iters")
-    val v = vectors.select(col("vec_id").as("id"),
-      col("embedding").cast("array<double>").as("v"))
-    var cents = v.where(col("id") < k).select(col("id").as("cid"), col("v").as("cv"))
+    val v = idVectors(vectors)
+    var cents = firstCentroids(v, k)
     for (_ <- 1 to iters) {
       val assigned = assignCells(v, cents)
       val means = (0 until dims).map { d0 =>
@@ -305,8 +299,7 @@ object Similarity {
     * then one nearest-centroid pass. Returns (id, cell, dist2). */
   def kmeansAssign(vectors: DataFrame, k: Int, iters: Int,
                    dims: Int = 64): DataFrame = {
-    val v = vectors.select(col("vec_id").as("id"),
-      col("embedding").cast("array<double>").as("v"))
+    val v = idVectors(vectors)
     assignCells(v, kmeansCentroids(vectors, k, iters, dims))
       .select(col("id"), col("cid").as("cell"), col("dist2"))
   }
@@ -355,8 +348,7 @@ object Similarity {
       s"probeRadius must be 0, 1, or 2, got $probeRadius")
     // per-vector norm computed once on the (small) vector side, not once
     // per candidate pair — cos values are bitwise unchanged (same sqrt(dot))
-    val v = vectors.select(col("vec_id").as("id"),
-      col("embedding").cast("array<double>").as("v"))
+    val v = idVectors(vectors)
       .withColumn("nrm", l2norm(col("v")))
     // Fanout.pin BEFORE the bands/probes explode (same reason as
     // lshCandidates): the embeddings scan is a handful of splits, and the

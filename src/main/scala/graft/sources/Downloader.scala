@@ -54,11 +54,7 @@ object Downloader {
             val in = transport(url)
             try {
               val out = JFiles.newOutputStream(tmp)
-              try {
-                val buf = new Array[Byte](8192)
-                var n = in.read(buf)
-                while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-              } finally out.close()
+              try in.transferTo(out) finally out.close()
             } finally in.close()
             // atomic publish: the final name appears all-at-once or not at all
             try JFiles.move(tmp, local, StandardCopyOption.ATOMIC_MOVE,

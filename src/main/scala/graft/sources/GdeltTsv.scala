@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import java.nio.charset.StandardCharsets
 
 /** DataSource V2 reader for the reference's raw GDELT event TSV files
-  * (61 fixed tab-separated columns, headerless — reference:
+  * (58 fixed tab-separated columns, headerless — reference:
   * conversion/converter.py:214-223): `spark.read.format("gdelt-tsv")
   * .load(dir)`.
   *
@@ -25,7 +25,7 @@ import java.nio.charset.StandardCharsets
   * the shape every proprietary-format connector takes on Spark:
   *
   *   - **schema injection, never inference** — the table reports the fixed
-  *     61-column schema without reading a byte;
+  *     58-column schema without reading a byte;
   *   - **one InputPartition per file, line-aligned offset splits past
   *     128 MB** — Spark schedules files across the cluster exactly like
   *     its built-in file sources; a giant historical file splits into

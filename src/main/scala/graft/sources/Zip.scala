@@ -46,11 +46,7 @@ object Zip {
         else {
           Option(target.getParent).foreach(JFiles.createDirectories(_))
           val out = new BufferedOutputStream(new FileOutputStream(target.toFile))
-          try {
-            val buf = new Array[Byte](8192)
-            var n = in.read(buf)
-            while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-          } finally out.close()
+          try in.transferTo(out) finally out.close()
           extracted += target
         }
         in.closeEntry()

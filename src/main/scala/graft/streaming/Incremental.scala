@@ -27,9 +27,7 @@ object Incremental {
                          checkpointDir: String,
                          maxFilesPerTrigger: Int = 64): DataStreamWriter[Row] = {
     val raw = spark.readStream
-      .option("sep", "\t")
-      .option("header", "false")
-      .option("mode", "DROPMALFORMED")
+      .options(Convert.RawTsvOptions)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .schema(Gdelt.rawSchema)
       .csv(inDir)

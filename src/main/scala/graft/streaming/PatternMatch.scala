@@ -55,25 +55,7 @@ object PatternMatch {
             state.remove()
             Iterator.empty
           } else {
-            val out = ArrayBuffer[PatternHit]()
-            var acc = state.getOption
-            batch.toSeq.sortBy(_.ts.getTime).foreach { e =>
-              val t = e.ts.getTime
-              // expire a partial the span has outrun BEFORE matching, so the
-              // current event can open a fresh attempt
-              acc = acc.filter(a => t - a.start_ms <= maxSpanMs)
-              acc match {
-                case Some(a) if stages(a.stage) == e.event_type =>
-                  if (a.stage + 1 == stages.size) {
-                    out += PatternHit(user, new java.sql.Timestamp(a.start_ms),
-                      new java.sql.Timestamp(t), t - a.start_ms)
-                    acc = None // non-overlapping: completed match resets
-                  } else acc = Some(PatternAcc(a.stage + 1, a.start_ms))
-                case None if stages.head == e.event_type =>
-                  acc = Some(PatternAcc(1, t))
-                case _ => () // non-advancing event: ignored, not a reset
-              }
-            }
+            val (out, acc) = fold(stages, maxSpanMs, user, batch, state.getOption)
             acc match {
               case Some(a) =>
                 state.update(a)
@@ -101,24 +83,35 @@ object PatternMatch {
     import spark.implicits._
     val stages = pattern.toIndexedSeq
     events.groupByKey(_.user_id).flatMapGroups { (user, it) =>
-      val out = ArrayBuffer[PatternHit]()
-      var acc: Option[PatternAcc] = None
-      it.toSeq.sortBy(_.ts.getTime).foreach { e =>
-        val t = e.ts.getTime
-        acc = acc.filter(a => t - a.start_ms <= maxSpanMs)
-        acc match {
-          case Some(a) if stages(a.stage) == e.event_type =>
-            if (a.stage + 1 == stages.size) {
-              out += PatternHit(user, new java.sql.Timestamp(a.start_ms),
-                new java.sql.Timestamp(t), t - a.start_ms)
-              acc = None
-            } else acc = Some(PatternAcc(a.stage + 1, a.start_ms))
-          case None if stages.head == e.event_type =>
-            acc = Some(PatternAcc(1, t))
-          case _ => ()
-        }
-      }
-      out.iterator
+      fold(stages, maxSpanMs, user, it, None)._1.iterator
     }
+  }
+
+  /** The greedy fold both detectors share: `user`'s events in time order
+    * advance the partial `start`; returns the completed hits and the
+    * partial left open. */
+  private def fold(stages: IndexedSeq[String], maxSpanMs: Long, user: Long,
+                   events: Iterator[SessionEvent], start: Option[PatternAcc])
+      : (ArrayBuffer[PatternHit], Option[PatternAcc]) = {
+    val out = ArrayBuffer[PatternHit]()
+    var acc = start
+    events.toSeq.sortBy(_.ts.getTime).foreach { e =>
+      val t = e.ts.getTime
+      // expire a partial the span has outrun BEFORE matching, so the
+      // current event can open a fresh attempt
+      acc = acc.filter(a => t - a.start_ms <= maxSpanMs)
+      acc match {
+        case Some(a) if stages(a.stage) == e.event_type =>
+          if (a.stage + 1 == stages.size) {
+            out += PatternHit(user, new java.sql.Timestamp(a.start_ms),
+              new java.sql.Timestamp(t), t - a.start_ms)
+            acc = None // non-overlapping: completed match resets
+          } else acc = Some(PatternAcc(a.stage + 1, a.start_ms))
+        case None if stages.head == e.event_type =>
+          acc = Some(PatternAcc(1, t))
+        case _ => () // non-advancing event: ignored, not a reset
+      }
+    }
+    (out, acc)
   }
 }

@@ -21,21 +21,8 @@ object StreamJoin {
     * `rightTs` falls within [leftTs, leftTs + maxLagMs].
     * Timestamp columns must be named differently on the two sides. */
   def intervalJoin(left: DataFrame, right: DataFrame, key: String,
-                   leftTs: String, rightTs: String, maxLagMs: Long): DataFrame = {
-    require(maxLagMs > 0, s"maxLagMs must be positive, got $maxLagMs")
-    require(left.columns.contains(key) && right.columns.contains(key),
-      s"both sides need key column '$key'")
-    require(leftTs != rightTs,
-      "left and right timestamp columns must be named differently")
-    val rk = "__sj_rk"
-    require(!left.columns.contains(rk) && !right.columns.contains(rk),
-      s"column '$rk' is reserved")
-    left.join(right.withColumnRenamed(key, rk),
-        col(key) === col(rk) &&
-          col(rightTs) >= col(leftTs) &&
-          col(rightTs) <= col(leftTs) + expr(s"INTERVAL $maxLagMs MILLISECONDS"))
-      .drop(rk)
-  }
+                   leftTs: String, rightTs: String, maxLagMs: Long): DataFrame =
+    join(left, right, key, leftTs, rightTs, maxLagMs, "inner")
 
   /** Left-outer variant of [[intervalJoin]]: unmatched left rows ARE
     * emitted (right columns null) — but only once the right-side
@@ -47,7 +34,14 @@ object StreamJoin {
     * entry and the null-joined result. */
   def leftOuterIntervalJoin(left: DataFrame, right: DataFrame, key: String,
                             leftTs: String, rightTs: String,
-                            maxLagMs: Long): DataFrame = {
+                            maxLagMs: Long): DataFrame =
+    join(left, right, key, leftTs, rightTs, maxLagMs, "leftOuter")
+
+  /** The interval join of type `joinType`: the argument checks, the
+    * reserved right-key name and the time-range condition. */
+  private def join(left: DataFrame, right: DataFrame, key: String,
+                   leftTs: String, rightTs: String, maxLagMs: Long,
+                   joinType: String): DataFrame = {
     require(maxLagMs > 0, s"maxLagMs must be positive, got $maxLagMs")
     require(left.columns.contains(key) && right.columns.contains(key),
       s"both sides need key column '$key'")
@@ -60,7 +54,7 @@ object StreamJoin {
         col(key) === col(rk) &&
           col(rightTs) >= col(leftTs) &&
           col(rightTs) <= col(leftTs) + expr(s"INTERVAL $maxLagMs MILLISECONDS"),
-        "leftOuter")
+        joinType)
       .drop(rk)
   }
 }

@@ -159,7 +159,12 @@ object TextFunctions {
     * en > de > es > fr), else 'und' when nothing matches. */
   def langId(text: Column): Column = {
     val toks = tokens(lower(text))
-    val scores = LangProfiles.map { case (code, words) => code -> countIn(toks, words) }
+    pickLang(text, LangProfiles.map { case (code, words) => code -> countIn(toks, words) })
+  }
+
+  /** The [[langId]] rule over per-profile `scores`: 'zh' on any CJK
+    * character in `text`, else the argmax profile, else 'und'. */
+  private def pickLang(text: Column, scores: Seq[(String, Column)]): Column = {
     val hasCjk = regexp_count(text, lit(CjkPattern)) > 0
     val best = scores.foldRight(lit("und")) { case ((code, score), elseCol) =>
       // this profile wins iff score > 0 and >= every later profile's score
@@ -195,13 +200,7 @@ object TextFunctions {
     val scores = LangProfiles.map { case (code, _) =>
       code -> col(s"__lid_$code")
     }
-    val hasCjk = regexp_count(text, lit(CjkPattern)) > 0
-    val best = scores.foldRight(lit("und")) { case ((code, score), elseCol) =>
-      val laterScores = scores.dropWhile(_._1 != code).drop(1).map(_._2)
-      val isMax = laterScores.foldLeft(score > 0)((acc, s2) => acc && score >= s2)
-      when(isMax, lit(code)).otherwise(elseCol)
-    }
-    staged.withColumn(out, when(hasCjk, lit("zh")).otherwise(best))
+    staged.withColumn(out, pickLang(text, scores))
       .drop(toksC +: scoreC: _*)
   }
 

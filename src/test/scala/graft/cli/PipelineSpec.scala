@@ -15,7 +15,7 @@ import java.nio.file.{Files => JFiles, Paths}
 class PipelineSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
-  /** One 61-field TSV line; numeric/filter columns are parseable, the
+  /** One 58-field TSV line; numeric/filter columns are parseable, the
     * rest carry opaque strings. `a1` empties Actor1Name (nulls after read,
     * so the filter stage drops the row). */
   private def line(id: Long, day: Long, a1: String = "actor"): String =
@@ -59,7 +59,7 @@ class PipelineSpec extends SparkSpec with TempDirs {
       "--start-day", "20130401", "--end-day", "20130402",
       "--per-day", "2", "--seed", "7"))
 
-    // the converted flat dataset carries the typed 61-column schema
+    // the converted flat dataset carries the typed 58-column schema
     val flat = spark.read.parquet(s"$work/flat")
     assert(flat.schema.fieldNames.toSeq == Gdelt.columns)
     assert(flat.schema("Day").dataType == LongType)
@@ -90,9 +90,40 @@ class PipelineSpec extends SparkSpec with TempDirs {
         "--start-day", "20130401", "--end-day", "20130402",
         "--per-day", "2", "--seed", "7"))
     }
-    // the kept-row count comes from the filter write's observation, not a
-    // re-scan of its output (2 more jobs)
-    assert(jobs == 7, s"expected 7 jobs, got $jobs")
+    // the kept-row and sampled-row counts come from the filter and sample
+    // writes' observations, not re-scans of their outputs (2 more jobs each)
+    assert(jobs == 5, s"expected 5 jobs, got $jobs")
+  }
+
+  test("pipeline: an unrecognized file in --in is named and counted as unknown=1; outputs unchanged") {
+    val withNotes = tempDir("graft_pipe_raw_notes")
+    JFiles.list(Paths.get(rawDir)).forEach(f =>
+      JFiles.copy(f, Paths.get(withNotes, f.getFileName.toString)))
+    JFiles.write(Paths.get(withNotes, "notes.txt"), "not a GDELT file\n".getBytes)
+    def run(in: String, out: String): (String, String) = {
+      val stdout = new java.io.ByteArrayOutputStream
+      val stderr = new java.io.ByteArrayOutputStream
+      val err = System.err
+      System.setErr(new java.io.PrintStream(stderr, true))
+      try Console.withOut(stdout) {
+        Main.main(Array("pipeline", "--in", in, "--out", out,
+          "--start-day", "20130401", "--end-day", "20130402",
+          "--per-day", "2", "--seed", "7"))
+      } finally System.setErr(err)
+      (stdout.toString, stderr.toString)
+    }
+    val plain = tempDir("graft_pipe_plain")
+    val noted = tempDir("graft_pipe_noted")
+    val (plainOut, _) = run(rawDir, plain)
+    val (notedOut, notedErr) = run(withNotes, noted)
+    assert(plainOut.contains(" unknown=0 "), plainOut)
+    assert(notedOut.contains(" unknown=1 "), notedOut)
+    assert(notedErr.contains("notes.txt"), s"notes.txt not named on stderr:\n$notedErr")
+    for (sub <- Seq("flat", "filtered", "sample")) {
+      def rows(base: String) = spark.read.parquet(s"$base/$sub")
+        .collect().map(_.toString).sorted.toSeq
+      assert(rows(noted) == rows(plain), s"$sub differs with notes.txt present")
+    }
   }
 
   test("a re-run into the same --out replaces flat and hist instead of appending") {
