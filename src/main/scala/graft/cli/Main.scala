@@ -319,8 +319,8 @@ object Main {
 
   /** `pipeline --in RAWDIR --out DIR [--start-day D --end-day D]
     * [--per-day K] [--seed S] [--check-cols c1,...]`: the whole ingest
-    * chain in ONE invocation, reading the raw TSVs through the
-    * `gdelt-tsv` DataSource V2 connector — type-route by archive-name
+    * chain in ONE invocation, writing the raw TSVs exactly as `convert`
+    * does ([[Convert.writeRouted]]) — type-route by archive-name
     * shape → coerce → flat (daily) + Hive (monthly/yearly) sinks →
     * day-range re-read where the flat side is row-filtered and the Hive
     * side is partition-PRUNED (Year/MonthYear predicates derived from the
@@ -343,9 +343,6 @@ object Main {
     val files = hfs.listStatus(p).toSeq.filter(_.isFile)
       .map(_.getPath.toString).sorted
     val byType = Convert.route(files)
-    def coerced(paths: Seq[String]) = Convert.coerce(
-      spark.read.format("gdelt-tsv").load(paths.mkString(",")),
-      cfg.numericColumns, Gdelt.intColumns)
     val flatDir = s"$outBase/flat"
     val histDir = s"$outBase/hist"
     // both sinks append, so a re-run first removes its own earlier output
@@ -356,11 +353,9 @@ object Main {
     val daily = byType.getOrElse("daily", Nil)
     val monthly = byType.getOrElse("monthly", Nil)
     val yearly = byType.getOrElse("yearly", Nil)
-    if (daily.nonEmpty) Convert.writeFlat(coerced(daily), flatDir)
-    if (monthly.nonEmpty)
-      Convert.writeHistorical(coerced(monthly), histDir, "monthly", cfg.partitionRules)
-    if (yearly.nonEmpty)
-      Convert.writeHistorical(coerced(yearly), histDir, "yearly", cfg.partitionRules)
+    for (ft <- Convert.FileTypes; paths = byType.getOrElse(ft, Nil)
+         if paths.nonEmpty)
+      Convert.writeRouted(spark, ft, paths, flatDir, histDir, cfg)
 
     // day-range re-read: flat = parquet row-group filter on Day; Hive =
     // partition pruning via Year/MonthYear bounds implied by the range

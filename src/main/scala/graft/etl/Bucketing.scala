@@ -23,8 +23,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     ~128–512 MB (e.g. 4096 buckets for a 1 TB table). BOTH join
   *     sides must use the same count (or a multiple, with
   *     spark.sql.bucketing.coalesceBucketsInJoin.enabled).
-  *   - `sortBy` the join key: the bucketed SMJ then streams pre-sorted
-  *     runs (no per-task sort, no spill) — the right default.
+  *   - every bucket is sorted by the join key: the bucketed SMJ then
+  *     streams pre-sorted runs (no per-task sort, no spill).
   *
   * Bucketed tables are catalog objects (`saveAsTable` — bucket metadata
   * lives in the metastore, not in parquet), so readers go through
@@ -39,8 +39,8 @@ object Bucketing {
     * default-location directory — a fresh metastore (e.g. a new local
     * session against a reused warehouse dir) otherwise refuses the name
     * with LOCATION_ALREADY_EXISTS even under SaveMode.Overwrite. */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int,
-                    sorted: Boolean = true): Unit = {
+  def writeBucketed(df: DataFrame, table: String, key: String,
+                    buckets: Int): Unit = {
     require(buckets > 0, s"need buckets > 0, got $buckets")
     // simple current-database names only: the warehouse/<name> path
     // derivation below is wrong for a qualified 'db.tbl' (the
@@ -62,9 +62,8 @@ object Bucketing {
       val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(loc)) fs.delete(loc, true)
     }
-    val w = df.write.mode(SaveMode.Overwrite).format("parquet")
-      .bucketBy(buckets, key)
-    (if (sorted) w.sortBy(key) else w).saveAsTable(table)
+    df.write.mode(SaveMode.Overwrite).format("parquet")
+      .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
   }
 
   /** Read a bucketed table back with its distribution contract intact. */

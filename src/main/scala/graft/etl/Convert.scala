@@ -112,29 +112,35 @@ object Convert {
     val tsvFiles = plain ++
       zipsTodo.flatMap(z => graft.sources.Zip.unzip(z).map(_.toString))
     val byType = route(tsvFiles)
-    val unknown = byType.getOrElse("unknown", Nil)
-    def coerceCfg(df: DataFrame): DataFrame =
-      coerce(df, config.numericColumns, Gdelt.intColumns)
     var skipped = zipsDone.size
-    val (dailyDone, dailyTodo) = byType.getOrElse("daily", Nil).partition(isDone)
-    skipped += dailyDone.size
-    if (dailyTodo.nonEmpty) {
-      writeFlat(coerceCfg(readRawTsv(spark, dailyTodo)), flatDir)
-      dailyTodo.foreach(markDone)
-    }
-    var hist = 0
-    Seq("monthly", "yearly").foreach { ft =>
+    val written = FileTypes.map { ft =>
       val (done, todo) = byType.getOrElse(ft, Nil).partition(isDone)
       skipped += done.size
       if (todo.nonEmpty) {
-        writeHistorical(coerceCfg(readRawTsv(spark, todo)), histDir, ft,
-          config.partitionRules)
+        writeRouted(spark, ft, todo, flatDir, histDir, config)
         todo.foreach(markDone)
-        hist += todo.size
       }
-    }
+      ft -> todo.size
+    }.toMap
     zipsTodo.foreach(markDone)
-    (dailyTodo.size, hist, skipped, unknown.size)
+    (written("daily"), written("monthly") + written("yearly"), skipped,
+      byType.getOrElse("unknown", Nil).size)
+  }
+
+  /** The file types [[route]] recognizes, in the order they are written. */
+  val FileTypes: Seq[String] = Seq("daily", "monthly", "yearly")
+
+  /** The routed write of [[run]] and the CLI `pipeline`: `paths`, all of
+    * one `fileType`, read through [[readRawTsv]], coerced under `config`
+    * and appended to their sink — daily files to the flat dataset,
+    * monthly and yearly files to the Hive tree. */
+  def writeRouted(spark: SparkSession, fileType: String, paths: Seq[String],
+                  flatDir: String, histDir: String,
+                  config: graft.util.GraftConfig): Unit = {
+    val df = coerce(readRawTsv(spark, paths), config.numericColumns,
+      Gdelt.intColumns)
+    if (fileType == "daily") writeFlat(df, flatDir)
+    else writeHistorical(df, histDir, fileType, config.partitionRules)
   }
 
   /** The file-type routing rule of [[run]] and the CLI `pipeline`: `paths`

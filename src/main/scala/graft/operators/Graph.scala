@@ -170,13 +170,13 @@ object Graph {
     * no transitive-closure blow-up; the per-hop `distinct` keeps frontier
     * rows ≤ |V| regardless of edge multiplicity.
     *
-    * `checkpointEvery` (opt-in, 0 = off): `localCheckpoint` the visited +
-    * frontier frames every N hops — at convergence-depth BFS (graph
-    * diameter can be tens of hops) the unrolled lineage re-plans every
-    * prior hop's joins; truncation bounds plan growth, values identical
-    * (spec-pinned). */
-  def bfsHops(edges: DataFrame, seed: DataFrame, maxHops: Int,
-              checkpointEvery: Int = 0): DataFrame = {
+    * The visited and frontier frames are `localCheckpoint`ed after every
+    * hop but the last: hop h's plan would otherwise reference the
+    * hop-(h−1) chain twice (next-join + visited anti-join) and re-run
+    * every earlier hop per reference, so work and plan size grow with
+    * the hop count. With the cut, each hop plans over two materialized
+    * frames (the rule of every iterative operator here). */
+  def bfsHops(edges: DataFrame, seed: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     var visited = seed
     var frontier = seed.select("node")
@@ -189,7 +189,7 @@ object Graph {
       visited = visited
         .union(next.select(col("node"), lit(h.toLong).as("hop")))
       frontier = next
-      if (checkpointEvery > 0 && h % checkpointEvery == 0 && h < maxHops) {
+      if (h < maxHops) {
         visited = visited.localCheckpoint()
         frontier = frontier.localCheckpoint()
       }
@@ -205,17 +205,18 @@ object Graph {
     * over ≤ r-edge paths. Non-negative costs assumed (standard BF would
     * need |V|−1 rounds + a negative-cycle check otherwise).
     *
-    * `checkpointEvery` as in [[bfsHops]]. */
-  def bellmanFord(edges: DataFrame, seed: DataFrame, rounds: Int,
-                  checkpointEvery: Int = 0): DataFrame = {
+    * The distance frame is `localCheckpoint`ed after every round but the
+    * last, as in [[bfsHops]]: each round reads `dist` twice (the relax
+    * join and the union), so an uncut chain re-runs the earlier rounds
+    * once per reference. */
+  def bellmanFord(edges: DataFrame, seed: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     var dist = seed
     for (r <- 1 to rounds) {
       val relax = edges.join(dist, col("src") === col("node"))
         .select(col("dst").as("node"), (col("dist") + col("cost")).as("dist"))
       dist = dist.union(relax).groupBy("node").agg(min("dist").as("dist"))
-      if (checkpointEvery > 0 && r % checkpointEvery == 0 && r < rounds)
-        dist = dist.localCheckpoint()
+      if (r < rounds) dist = dist.localCheckpoint()
     }
     dist
   }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * Plan shape per round: edges ⋈ labels (hash join on the node id) →
   * groupBy (node, label) count → struct-min argmax per node → left join
   * back to nodes. Two shuffles per round, both keyed on node id — at
-  * 100 TB, bucket the edge table by src and persist the label frame
-  * between rounds (same guidance as [[PageRank.prepared]]). */
+  * 100 TB, bucket the edge table by src. The label frame is
+  * `localCheckpoint`ed between rounds, as in [[PageRank.prepared]]. */
 object LabelPropagation {
 
   /** `nodes`: (id, label) — label integral. `edges`: directed (src, dst);
@@ -29,13 +29,12 @@ object LabelPropagation {
     * `dst` would materialize as a phantom output row labeled only by its
     * neighbors (an unknown `src` simply contributes no votes).
     *
-    * `checkpointEvery` (opt-in, 0 = off): `localCheckpoint` the label
-    * frame every N rounds — unrolled rounds grow the plan superlinearly
-    * at convergence-scale iteration counts (see [[PageRank.prepared]]);
-    * values are bit-identical with and without (spec-pinned). */
+    * The label frame is `localCheckpoint`ed after every round but the
+    * last: each round reads it twice (the vote join and the self-vote),
+    * so an uncut chain re-runs every earlier round per reference. */
   def propagate(nodes: DataFrame, id: Column, label: Column,
                 edges: DataFrame, src: Column, dst: Column,
-                iters: Int, checkpointEvery: Int = 0): DataFrame = {
+                iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val e = edges.select(src.as("__src"), dst.as("__dst"))
     var labels = nodes.select(id.as("id"), label.cast("long").as("label"))
@@ -48,8 +47,7 @@ object LabelPropagation {
         .groupBy(col("id"))
         .agg(min(struct((-col("cnt")).as("nc"), col("label").as("lb"))).as("mn"))
         .select(col("id"), col("mn.lb").as("label"))
-      if (checkpointEvery > 0 && it % checkpointEvery == 0 && it < iters)
-        labels = labels.localCheckpoint()
+      if (it < iters) labels = labels.localCheckpoint()
     }
     labels
   }

@@ -23,12 +23,12 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Packing {
 
-  /** Append `binCol` = floor(exclusive running token total / budget) in
+  /** Append `bin` = floor(exclusive running token total / budget) in
     * `orderCol` order. `tokensCol` must be non-null and non-negative (a
     * NULL fails the job, naming the column); `orderCol` unique for a
     * deterministic layout. */
   def packByBudget(df: DataFrame, orderCol: Column, tokensCol: Column,
-                   budget: Long, binCol: String = "bin"): DataFrame = {
+                   budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     val tok = "__pack_toks"
     require(!df.columns.contains(tok), s"column '$tok' is reserved")
@@ -43,7 +43,7 @@ object Packing {
     // passes over one RDD, which pins the partition count and range cuts;
     // pass 2 then reuses pass 1's shuffle files rather than re-shuffling.
     val tokName = tokensCol.toString
-    val packed = StableIds.appendScan(withTok, Seq(orderCol), Seq(binCol)) { it =>
+    val packed = StableIds.appendScan(withTok, Seq(orderCol), Seq("bin")) { it =>
       // pass 1: per-partition token totals
       var s = 0L
       it.foreach { r =>

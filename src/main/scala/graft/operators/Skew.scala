@@ -49,15 +49,12 @@ object Skew {
     * Row-identical to the plain join: every (left row, right row) pair
     * with equal keys meets in exactly one salt bucket — the left row's.
     * Same content-salt contract as [[saltedCount]] (retry-deterministic).
-    * Supports "inner" and "left" join types (right/outer would need the
-    * unmatched-right bookkeeping deduplicated across replicas). */
+    * An inner join (an outer join would need the unmatched-right
+    * bookkeeping deduplicated across replicas). */
   def saltedJoin(left: DataFrame, right: DataFrame, key: String,
-                 saltFrom: Seq[Column], buckets: Int,
-                 joinType: String = "inner"): DataFrame = {
+                 saltFrom: Seq[Column], buckets: Int): DataFrame = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     require(saltFrom.nonEmpty, "saltFrom must name at least one content column")
-    require(Seq("inner", "left").contains(joinType),
-      s"joinType must be inner or left, got $joinType")
     val reserved = "__salt"
     require(!left.columns.contains(reserved) && !right.columns.contains(reserved),
       s"input columns clash with reserved name $reserved")
@@ -65,6 +62,6 @@ object Skew {
       pmod(xxhash64(saltFrom: _*), lit(buckets.toLong)))
     val r = right.withColumn(reserved,
       explode(sequence(lit(0L), lit(buckets.toLong - 1))))
-    l.join(r, Seq(key, reserved), joinType).drop(reserved)
+    l.join(r, Seq(key, reserved)).drop(reserved)
   }
 }

@@ -82,22 +82,6 @@ object StableIds {
       .drop(zero)
   }
 
-  /** 1-based global rank AND inclusive running sum of `valueCol` (LongType)
-    * in `orderCols` order — the scalable form of
-    * `row_number()/sum() OVER (ORDER BY … ROWS UNBOUNDED PRECEDING)`.
-    *
-    * Same two-phase shape as [[Packing.packByBudget]]: range-partition +
-    * in-partition sort, one metadata job collecting per-partition
-    * (row count, value sum) — two longs per partition to the driver — then a
-    * map-side scan seeded with the broadcast exclusive offsets. Both passes
-    * are pinned to ONE materialized RDD so AQE cannot coalesce them to
-    * different partition counts (the Packing offset-misalignment lesson,
-    * 87c3e20). */
-  def rankAndCumSum(df: DataFrame, orderCols: Seq[Column], valueCol: String,
-                    rankCol: String = "rank",
-                    cumCol: String = "cum"): DataFrame =
-    rankAndCumSums(df, orderCols, Seq(valueCol -> cumCol), rankCol)
-
   /** Inclusive global running MAX of each `valueCol` (LongType) in
     * `orderCols` order — the scalable form of
     * `max() OVER (ORDER BY … ROWS UNBOUNDED PRECEDING)`.
@@ -146,22 +130,26 @@ object StableIds {
     }
   }
 
-  /** Multi-value generalization of [[rankAndCumSum]]: one range-partitioned
-    * two-phase scan producing the global rank plus an inclusive running sum
-    * for EACH (valueCol -> cumCol) pair — the scalable form of k parallel
+  /** 1-based global rank (`rank`) AND an inclusive running sum for EACH
+    * (valueCol -> cumCol) pair (LongType values) in `orderCols` order — the
+    * scalable form of `row_number()` plus k parallel
     * `sum() OVER (ORDER BY … ROWS UNBOUNDED PRECEDING)` windows. Two-sample
     * ECDF statistics (KS distance, AUC rank-sums) need the running counts of
     * BOTH classes in one score order; funneling the score domain through a
     * single window partition twice is the exact anti-pattern this avoids.
-    * The metadata job moves k+1 longs per partition to the driver:
-    * (row count, per-value sum). */
+    *
+    * Same two-phase shape as [[Packing.packByBudget]]: range-partition +
+    * in-partition sort, one metadata job collecting k+1 longs per partition
+    * (row count, per-value sum) to the driver, then a map-side scan seeded
+    * with the broadcast exclusive offsets. Both passes are pinned to ONE
+    * materialized RDD so AQE cannot coalesce them to different partition
+    * counts (the Packing offset-misalignment lesson, 87c3e20). */
   def rankAndCumSums(df: DataFrame, orderCols: Seq[Column],
-                     valueCols: Seq[(String, String)],
-                     rankCol: String = "rank"): DataFrame = {
+                     valueCols: Seq[(String, String)]): DataFrame = {
     val vIdx = valueCols.map { case (v, _) => df.schema.fieldIndex(v) }
     val vName = valueCols.map(_._1)
     val k = vIdx.length
-    appendScan(df, orderCols, rankCol +: valueCols.map(_._2)) { it =>
+    appendScan(df, orderCols, "rank" +: valueCols.map(_._2)) { it =>
       var n = 0L; val s = Array.fill(k)(0L)
       it.foreach { r =>
         n += 1L

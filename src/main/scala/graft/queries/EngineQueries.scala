@@ -1704,8 +1704,7 @@ object EngineQueries {
       val e = deepwalkAdj(s, d)
         .select(col("node").as("__src"), col("dst").as("__dst"))
       val nodes = deg.select(col("node"))
-      graft.operators.PageRank.prepared(nodes, deg, e,
-          iters = 3, broadcastRanks = true) // 2k vertices vs 160k edges
+      graft.operators.PageRank.prepared(nodes, deg, e, iters = 3)
         .orderBy(col("pr").desc, col("node")).limit(25)
     },
       s"""WITH ps AS (SELECT DISTINCT l_partkey * 2 AS pnode,

@@ -105,20 +105,19 @@ object QueryCaches {
       .foldLeft(0.0)(math.max)
   }
 
-  /** Evict aggressively when memory pressure crosses `highWater`: every
-    * memo older than `keepYoung` ticks goes (the current family's newest
-    * memos survive, so the running query keeps its working set). The
-    * production signal is the WORSE of storage-pool use and live-heap
-    * after GC — either one near the top means the next fat window/join
-    * task allocates into a full heap. Returns the released keys; Nil
-    * when the valve stays closed. `usedFraction` is injectable so specs
-    * can drive the pressure path without actually filling memory. */
-  def evictOnPressure(s: SparkSession, highWater: Double = 0.70,
-      keepYoung: Int = 3,
+  /** Evict aggressively when memory pressure crosses 70 %: every memo
+    * older than 3 ticks goes (the current family's newest memos survive,
+    * so the running query keeps its working set). The production signal
+    * is the WORSE of storage-pool use and live-heap after GC — either one
+    * near the top means the next fat window/join task allocates into a
+    * full heap. Returns the released keys; Nil when the valve stays
+    * closed. `usedFraction` is injectable so specs can drive the pressure
+    * path without actually filling memory. */
+  def evictOnPressure(s: SparkSession,
       usedFraction: SparkSession => Double =
         sess => math.max(storageUsedFraction(sess), heapAfterGcFraction()))
       : Seq[String] =
-    if (usedFraction(s) > highWater) evictStale(keepYoung) else Nil
+    if (usedFraction(s) > 0.70) evictStale(3) else Nil
 
   /** The value built for (session, sfDir, key): `build` runs on first use
     * (and again after the entry is released); later calls return the same

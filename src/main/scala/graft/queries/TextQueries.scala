@@ -221,8 +221,9 @@ object TextQueries {
        ORDER BY weight_micro DESC, doc_id LIMIT 100"""
 
   /** Shared BM25 oracle CTE body (through `lexr`, the per-query rank
-    * table): bitwise mirror of [[graft.text.Bm25.topK]] with k1=2.2,
-    * b=0.75 as exact integer rationals and the audited idf ln site —
+    * table): bitwise mirror of [[graft.text.Bm25.topK]] with k1=1.2,
+    * b=0.75 as exact integer rationals (44 = 20·(k1+1), 6 = 20·k1·(1−b),
+    * 18 = 20·k1·b) and the audited idf ln site —
     * consumed by q_text_bm25 and the RRF fusion oracle in
     * [[SimilarityQueries]], so the two stay in lockstep by construction.
     *
@@ -839,8 +840,8 @@ object TextQueries {
       val cnts = postings(s, d).groupBy(col("tok"))
         .agg(count(lit(1)).as("c"))
       val tot = cnts.agg(sum(col("c")).as("t"))
-      graft.operators.StableIds.rankAndCumSum(cnts,
-          Seq(col("c").desc, col("tok")), "c", "rank", "cum")
+      graft.operators.StableIds.rankAndCumSums(cnts,
+          Seq(col("c").desc, col("tok")), Seq("c" -> "cum"))
         .crossJoin(broadcast(tot))
         .select(col("rank"), col("tok"), col("c"),
           // cum is a token-count sum — wide path past ~9.2e12 tokens
@@ -2485,7 +2486,7 @@ object TextQueries {
           .distinct()
       }
       graft.operators.PageRank.integerPageRank(edges, col("src"), col("dst"),
-          iters = 3, broadcastRanks = true)
+          iters = 3)
         .orderBy(col("pr").desc, col("node")).limit(25)
     },
       s"""WITH ${postingsCtes("tok")},

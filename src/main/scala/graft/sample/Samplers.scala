@@ -33,7 +33,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   *     the reference's seed-reproducibility, which silently depends on file
   *     enumeration order (samplers.py:60-67). This is the one to use at
   *     100 TB: re-running on a different cluster layout returns the same rows.
-  *   - [[SampleOrder.Rand]]: Spark `rand(seed)` + unique tiebreak. Matches
+  *   - [[SampleOrder.Rand]]: Spark `rand(seed)`. Matches
   *     the "same seed ⇒ same sample" contract only for a fixed partitioning
   *     (rand seeds per-partition); kept for uniformity when no stable id
   *     column exists.
@@ -51,8 +51,8 @@ object Samplers {
       def sortExprs: Seq[Column] = xxhash64(lit(seed) +: idCols: _*) +: idCols
     }
     /** Spark rand(seed); deterministic only for fixed partitioning. */
-    final case class Rand(seed: Long, tiebreak: Seq[Column] = Nil) extends SampleOrder {
-      def sortExprs: Seq[Column] = rand(seed) +: tiebreak
+    final case class Rand(seed: Long) extends SampleOrder {
+      def sortExprs: Seq[Column] = Seq(rand(seed))
     }
     /** Caller-supplied deterministic ordering (oracle surrogate). */
     final case class By(cols: Seq[Column]) extends SampleOrder {

@@ -39,13 +39,17 @@ import java.nio.charset.StandardCharsets
   *     `ReadSchema` in `.explain` shrinks accordingly, which is the
   *     whole-pipeline win the builder prompt's "a scan that reads all
   *     columns for a 2-column projection is wrong" rule demands;
-  *   - **strict DROPMALFORMED**: over-length rows are dropped, short rows
-  *     null-pad, empty fields read as null — the same outcomes as
-  *     readRawTsv EXCEPT that the CSV parser's malformation check is
-  *     projection-dependent (univocity only flags excess tokens it
-  *     parses, so pruned reads keep over-length rows); the connector
-  *     applies the arity rule before projection, so row counts never
-  *     change with the column list (spec-pinned).
+  *   - **one arity rule, whatever the projection**: over-length rows
+  *     are dropped, short rows null-pad, empty fields read as null. The
+  *     connector applies the rule before projection, so row counts never
+  *     change with the column list. readRawTsv's DROPMALFORMED check is
+  *     projection-dependent instead: the CSV parser checks arity over
+  *     the columns it parses, so a full-width read drops short AND
+  *     over-length rows, while a column-pruned read keeps both (short
+  *     rows null-padded). The two readers agree on short rows only for
+  *     pruned reads (spec-pinned both ways); the ETL sinks
+  *     ([[graft.etl.Convert.writeRouted]]) read full width through
+  *     readRawTsv.
   */
 object GdeltTsv {
   /** Driver-side handle on the most recent scan's row-skip accumulator —
@@ -89,12 +93,10 @@ private[sources] class GdeltTsvTable(path: String) extends Table with SupportsRe
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GdeltTsvScanBuilder(path,
-      options.getLong("maxSplitBytes", GdeltTsv.DefaultMaxSplitBytes),
-      options.getBoolean("filenamePruning", true))
+      options.getLong("maxSplitBytes", GdeltTsv.DefaultMaxSplitBytes))
 }
 
-private[sources] class GdeltTsvScanBuilder(path: String, maxSplitBytes: Long,
-    filenamePruning: Boolean)
+private[sources] class GdeltTsvScanBuilder(path: String, maxSplitBytes: Long)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
   private var required: StructType = Gdelt.rawSchema
@@ -119,7 +121,7 @@ private[sources] class GdeltTsvScanBuilder(path: String, maxSplitBytes: Long,
   }
   override def pushedFilters(): Array[Filter] = pushed
   override def build(): Scan =
-    new GdeltTsvScan(path, required, pushed, maxSplitBytes, filenamePruning)
+    new GdeltTsvScan(path, required, pushed, maxSplitBytes)
 }
 
 /** Pushable-filter vocabulary + compiler for [[GdeltTsvScanBuilder]]. */
@@ -202,9 +204,7 @@ private[sources] object GdeltTsvFilters {
   * assumed to contain only rows of that period (the same trust Hive
   * partition pruning places in directory names). Rows violating the
   * naming contract (malformed Day fields in a well-named file) can be
-  * planned away; `.option("filenamePruning", false)` restores
-  * open-every-file behavior for untrusted layouts. Files with
-  * unparseable names are never pruned. */
+  * planned away. Files with unparseable names are never pruned. */
 private[sources] object GdeltTsvPrune {
   /** Per-column inclusive [lo, hi] digit-string bounds implied by the
     * filename's period; None when the name carries no period. Fixed-width
@@ -246,7 +246,7 @@ private[sources] object GdeltTsvPrune {
 }
 
 private[sources] class GdeltTsvScan(path: String, required: StructType,
-    pushed: Array[Filter], maxSplitBytes: Long, filenamePruning: Boolean)
+    pushed: Array[Filter], maxSplitBytes: Long)
     extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -282,7 +282,7 @@ private[sources] class GdeltTsvScan(path: String, required: StructType,
       .toSeq.sortBy(_.getPath.toString)
     // file-level pruning BEFORE any task is planned: drop files whose
     // filename period can't satisfy the pushed date conjunction
-    if (filenamePruning && pushed.nonEmpty)
+    if (pushed.nonEmpty)
       distinct.partition { st =>
         !GdeltTsvPrune.bounds(st.getPath.getName)
           .exists(GdeltTsvPrune.prunable(pushed, _))
@@ -380,11 +380,10 @@ private[sources] class GdeltTsvReaderFactory(ordinals: Array[Int],
           if (n == 0) return false // EOF
           pos += n
           // -1 keeps trailing empty fields so the arity check is exact.
-          // DROPMALFORMED parity with the CSV reader: EMPTY lines are
-          // skipped (the CSV parser never emits a record for them), rows
-          // with MORE fields than the schema are malformed and dropped;
-          // SHORT rows null-pad (Spark's CSV parser only flags excess
-          // tokens)
+          // EMPTY lines are skipped (the CSV parser never emits a record
+          // for them), rows with MORE fields than the schema are dropped,
+          // SHORT rows null-pad — what a column-pruned CSV read does; a
+          // full-width CSV read drops short rows too (see the class doc)
           if (text.getLength > 0) {
             val line = new String(text.getBytes, 0, text.getLength,
               StandardCharsets.UTF_8)

@@ -24,10 +24,10 @@ final case class RateVerdict(key: String, ts: java.sql.Timestamp,
   * same verdicts (wall-clock-based limiters do not).
   *
   * Scale shape: state is ONE small record per active key, partitioned by
-  * key; event-time timeouts evict buckets idle past `idleEvictMs` (an
-  * idle bucket refills to full, so eviction is semantics-preserving —
-  * a fresh bucket IS a full bucket). State tracks active keys, not
-  * history.
+  * key; an event-time timeout evicts a bucket once it has been idle for
+  * `capacity / ratePerSec` seconds, the time an empty bucket takes to
+  * refill to full — so eviction is semantics-preserving: a fresh bucket
+  * IS a full bucket. State tracks active keys, not history.
   */
 object RateLimit {
 
@@ -55,10 +55,12 @@ object RateLimit {
     (out, st)
   }
 
-  def admit(events: Dataset[RateEvent], capacity: Double, ratePerSec: Double,
-            idleEvictMs: Long = 3600 * 1000L): Dataset[RateVerdict] = {
+  def admit(events: Dataset[RateEvent], capacity: Double,
+            ratePerSec: Double): Dataset[RateVerdict] = {
     require(capacity >= 1.0, s"capacity must be >= 1, got $capacity")
     require(ratePerSec > 0, s"ratePerSec must be positive, got $ratePerSec")
+    // an empty bucket is full again after this many ms of event time
+    val refillMs = capacity / ratePerSec * 1000.0
     val spark = events.sparkSession
     import spark.implicits._
     events
@@ -76,7 +78,9 @@ object RateLimit {
             val (out, st) = foldBucket(batch.toSeq, st0, capacity, ratePerSec)
             state.update(st)
             val floor = state.getCurrentWatermarkMs() + 1
-            state.setTimeoutTimestamp(math.max(st.last_ms + idleEvictMs, floor))
+            // rounded up, and saturating for a refill time past Long range
+            val full = math.ceil(st.last_ms + refillMs).toLong
+            state.setTimeoutTimestamp(math.max(full, floor))
             out.iterator
           }
       }

@@ -27,8 +27,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * quantized to integer micro-units per distinct document frequency — a
   * vocabulary-sized table both engines derive with one `ln` per df value
   * (boundary distances audited by QuantBoundarySpec). Every other factor
-  * of the score is an exact integer rational: with k1 and b restricted to
-  * multiples of 1/20, multiplying the tf saturation's numerator and
+  * of the score is an exact integer rational: with the classic k1 = 1.2
+  * and b = 0.75, multiplying the tf saturation's numerator and
   * denominator by 20·sumdl clears all fractions (avgdl = sumdl/n never
   * materializes as a float), and the half-up rounding
   * floor(idf·num/den + 1/2) becomes the pure integer
@@ -37,7 +37,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * floating-point operation anywhere for an engine to drift on.
   *
   * Overflow envelope: 2·idf_micro·D(k1+1)·tf·sumdl must stay below 2⁶³ —
-  * with idf_micro ≤ 2·10⁷ and the default k1, that is tf·sumdl < 5·10¹²,
+  * with idf_micro ≤ 2·10⁷, that is tf·sumdl < 5·10¹²,
   * comfortable for any single-shard corpus this operator would score
   * directly (a 100 TB corpus shards the postings and reuses the same
   * integers per shard).
@@ -46,25 +46,18 @@ object Bm25 {
 
   /** Top-k corpus docs per query doc. Output:
     * (qid, nid, rank, score_micro) — score in 1e-6 units.
-    *
-    * `k1` and `b` must be non-negative multiples of 1/20 (0.05) so the
-    * score is exactly representable in integers; `maxDfPermille` drops
-    * query terms whose df exceeds permille·N/1000 (1000 = no cutoff). */
+    * `maxDfPermille` drops query terms whose df exceeds permille·N/1000
+    * (1000 = no cutoff). */
   def topK(corpus: DataFrame, cId: Column, cText: Column,
            queries: DataFrame, qId: Column, qText: Column,
-           k: Int, k1: Double = 1.2, b: Double = 0.75,
-           maxDfPermille: Int = 1000): DataFrame = {
+           k: Int, maxDfPermille: Int = 1000): DataFrame = {
     require(maxDfPermille > 0 && maxDfPermille <= 1000,
       s"maxDfPermille must be in (0, 1000], got $maxDfPermille")
+    // k1 = 1.2 and b = 0.75 over the common denominator D
     val D = 20L
-    val iNum = math.round(D * (k1 + 1.0)) // D·(k1+1)
-    val iK1nb = math.round(D * k1 * (1.0 - b)) // D·k1·(1−b)
-    val iK1b = math.round(D * k1 * b) // D·k1·b
-    require(math.abs(D * (k1 + 1.0) - iNum) < 1e-9 &&
-      math.abs(D * k1 * (1.0 - b) - iK1nb) < 1e-9 &&
-      math.abs(D * k1 * b - iK1b) < 1e-9 &&
-      k1 >= 0 && b >= 0 && b <= 1,
-      s"k1 and b must be non-negative multiples of 1/20 (b ≤ 1), got k1=$k1 b=$b")
+    val iNum = 44L // D·(k1+1)
+    val iK1nb = 6L // D·k1·(1−b)
+    val iK1b = 18L // D·k1·b
 
     val base = corpus.select(cId.as("nid"),
       TextFunctions.tokens(lower(cText)).as("__toks"))

@@ -41,21 +41,20 @@ object Decontaminate {
     * with (`n_eval_docs`). Documents with no overlap are absent — callers
     * wanting a keep-list anti-join on the result.
     *
-    * Output: (idName, n_hits, n_eval_docs).
+    * Output: (doc_id, n_hits, n_eval_docs).
     */
   def contamination(corpus: DataFrame, corpusId: Column, corpusText: Column,
                     evalSet: DataFrame, evalId: Column, evalText: Column,
-                    n: Int, idName: String = "doc_id"): DataFrame =
+                    n: Int): DataFrame =
     contaminationOnNgrams(
-      ngramTable(corpus, corpusId, corpusText, n, idName),
-      ngramTable(evalSet, evalId, evalText, n, "__eval_id"), idName)
+      ngramTable(corpus, corpusId, corpusText, n),
+      ngramTable(evalSet, evalId, evalText, n, "__eval_id"))
 
   /** Contamination over pre-built [[ngramTable]] projections (corpus side
-    * keyed `idName`, eval side keyed `__eval_id`). */
-  def contaminationOnNgrams(corpusNg: DataFrame, evalNg: DataFrame,
-                            idName: String = "doc_id"): DataFrame =
+    * keyed `doc_id`, eval side keyed `__eval_id`). */
+  def contaminationOnNgrams(corpusNg: DataFrame, evalNg: DataFrame): DataFrame =
     corpusNg.join(broadcast(evalNg), "__ng")
-      .groupBy(col(idName))
+      .groupBy(col("doc_id"))
       .agg(countDistinct(col("__ng")).as("n_hits"),
         countDistinct(col("__eval_id")).as("n_eval_docs"))
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 import java.nio.file.{Files => JFiles, Paths}
 
 /** End-to-end GDELT volume drill (round-5 verdict #8): ONE CLI invocation
-  * chains gdelt-tsv DSv2 read → type-routed convert (flat ∪ Hive tree) →
+  * chains the raw read → type-routed convert (flat ∪ Hive tree) →
   * day-range re-read (Hive side partition-pruned) → null-check filter →
   * daily sample, over a multi-day fixture mixing daily and monthly files.
   */
@@ -53,7 +53,7 @@ class PipelineSpec extends SparkSpec with TempDirs {
     d
   }
 
-  test("one pipeline invocation: DSv2 read, typed flat+hive sinks, pruned re-read, filter, daily sample") {
+  test("one pipeline invocation: raw read, typed flat+hive sinks, pruned re-read, filter, daily sample") {
     val work = tempDir("graft_pipe_out")
     Main.main(Array("pipeline", "--in", rawDir, "--out", work,
       "--start-day", "20130401", "--end-day", "20130402",
@@ -124,6 +124,25 @@ class PipelineSpec extends SparkSpec with TempDirs {
         .collect().map(_.toString).sorted.toSeq
       assert(rows(noted) == rows(plain), s"$sub differs with notes.txt present")
     }
+  }
+
+  test("convert and pipeline write the same flat rows from raw input with a short row") {
+    // one daily file: three full rows and one short row, which the raw
+    // reader's full-width arity check drops in both commands
+    val raw = tempDir("graft_pipe_short")
+    val file = Paths.get(raw, "20130401.export.CSV")
+    JFiles.write(file, ((1L to 3L).map(i => line(i, 20130401L)) :+ "short\trow")
+      .mkString("\n").getBytes)
+    val piped = tempDir("graft_pipe_short_out")
+    Main.main(Array("pipeline", "--in", raw, "--out", piped,
+      "--start-day", "20130401", "--end-day", "20130401", "--per-day", "2"))
+    val converted = tempDir("graft_pipe_short_conv")
+    Main.main(Array("convert", "--in", file.toString,
+      "--flat-out", s"$converted/flat", "--hist-out", s"$converted/hist"))
+    val pipeRows = spark.read.parquet(s"$piped/flat").count()
+    val convRows = spark.read.parquet(s"$converted/flat").count()
+    assert(pipeRows == convRows, s"pipeline wrote $pipeRows flat rows, convert $convRows")
+    assert(convRows == 3L)
   }
 
   test("a re-run into the same --out replaces flat and hist instead of appending") {

@@ -5,14 +5,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 
-/** Lineage hygiene for the iterative operators: `checkpointEvery` must
-  * (a) leave every value exactly equal to the recurrence computed by an
-  * independent in-memory implementation, and (b) truncate the unrolled
-  * plan so 10+-iteration runs don't grow superlinearly in analysis/
-  * codegen time. The unrolled variant is ONLY analyzed, never executed —
-  * its planning blow-up is precisely the pathology these options exist to
-  * avoid (a 10-iteration unrolled PageRank spends minutes in analysis on
-  * this 300-node fixture).
+/** Lineage hygiene for the iterative operators: each one
+  * `localCheckpoint`s its state after every round but the last, so a
+  * 10-round run must (a) leave every value exactly equal to the
+  * recurrence computed by an independent in-memory implementation, and
+  * (b) analyze to the same plan size as a 2-round run — every earlier
+  * round is one materialized leaf, so the plan does not grow with the
+  * round count.
   */
 class GraphIterationSpec extends SparkSpec {
   import spark.implicits._
@@ -34,8 +33,8 @@ class GraphIterationSpec extends SparkSpec {
   }
   private lazy val edges = edgeList.toDF("src", "dst")
 
-  test("PageRank: 10 checkpointed iterations match the in-memory integer recurrence; unrolled plan grows, checkpointed stays bounded") {
-    val scale = 1000000000000L
+  test("PageRank: 10 checkpointed iterations match the in-memory integer recurrence; plan bounded") {
+    val scale = PageRank.Scale
     // independent in-memory recurrence (same integer arithmetic)
     val nodes = edgeList.flatMap(e => Seq(e._1, e._2)).distinct.sorted
     val n = nodes.size.toLong
@@ -49,16 +48,12 @@ class GraphIterationSpec extends SparkSpec {
       }
       pr = nodes.map(nd => nd -> (base + 85L * sums.getOrElse(nd, 0L) / 100L)).toMap
     }
-    val ckpt = PageRank.integerPageRank(edges, col("src"), col("dst"),
-      iters = 10, checkpointEvery = 3)
+    def run(iters: Int) =
+      PageRank.integerPageRank(edges, col("src"), col("dst"), iters)
+    val ckpt = run(10)
     assert(ckpt.orderBy("node").as[(Long, Long)].collect().toSeq ==
       nodes.map(nd => nd -> pr(nd)))
-    // plan growth: the unrolled 10-iteration plan must dwarf the
-    // checkpointed one (lineage truncated at iteration 9)
-    val plain = PageRank.integerPageRank(edges, col("src"), col("dst"),
-      iters = 10)
-    assert(planSize(ckpt) * 4 < planSize(plain),
-      s"expected truncated lineage, got ${planSize(ckpt)} vs ${planSize(plain)}")
+    assert(planSize(ckpt) == planSize(run(2)))
   }
 
   test("bfsHops: 10 checkpointed hops match in-memory BFS; plan bounded") {
@@ -73,10 +68,10 @@ class GraphIterationSpec extends SparkSpec {
       frontier = next
     }
     val seed = Seq((seedNode, 0L)).toDF("node", "hop")
-    val ckpt = Graph.bfsHops(edges, seed, maxHops = 10, checkpointEvery = 3)
+    val ckpt = Graph.bfsHops(edges, seed, maxHops = 10)
     assert(ckpt.orderBy("node").as[(Long, Long)].collect().toSeq ==
       expected.toSeq.sortBy(_._1))
-    assert(planSize(ckpt) * 4 < planSize(Graph.bfsHops(edges, seed, maxHops = 10)))
+    assert(planSize(ckpt) == planSize(Graph.bfsHops(edges, seed, maxHops = 2)))
   }
 
   test("bellmanFord: 10 checkpointed rounds match in-memory relaxation; plan bounded") {
@@ -91,10 +86,10 @@ class GraphIterationSpec extends SparkSpec {
     }
     val we = edges.withColumn("cost", col("src") % 7 + col("dst") % 5 + 1)
     val seed = Seq((0L, 0L)).toDF("node", "dist")
-    val ckpt = Graph.bellmanFord(we, seed, rounds = 10, checkpointEvery = 3)
+    val ckpt = Graph.bellmanFord(we, seed, rounds = 10)
     assert(ckpt.orderBy("node").as[(Long, Long)].collect().toSeq ==
       expected.toSeq.sortBy(_._1))
-    assert(planSize(ckpt) * 4 < planSize(Graph.bellmanFord(we, seed, rounds = 10)))
+    assert(planSize(ckpt) == planSize(Graph.bellmanFord(we, seed, rounds = 2)))
   }
 
   test("LabelPropagation: 10 checkpointed rounds match in-memory majority vote; plan bounded") {
@@ -110,12 +105,11 @@ class GraphIterationSpec extends SparkSpec {
       }.toMap
     }
     val nodes = nodeIds.toDF("id").withColumn("label", col("id") % 11)
-    def run(every: Int) = LabelPropagation.propagate(nodes, col("id"),
-      col("label"), edges, col("src"), col("dst"), iters = 10,
-      checkpointEvery = every)
-    val ckpt = run(3)
+    def run(iters: Int) = LabelPropagation.propagate(nodes, col("id"),
+      col("label"), edges, col("src"), col("dst"), iters)
+    val ckpt = run(10)
     assert(ckpt.orderBy("id").as[(Long, Long)].collect().toSeq ==
       nodeIds.map(nd => nd -> expected(nd)))
-    assert(planSize(ckpt) * 4 < planSize(run(0)))
+    assert(planSize(ckpt) == planSize(run(2)))
   }
 }

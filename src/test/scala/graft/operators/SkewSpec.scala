@@ -33,17 +33,10 @@ class SkewSpec extends SparkSpec {
         .select("lid", "tag").as[(Long, String)].collect().sorted.toSeq
       assert(salted == plain, s"buckets=$buckets")
     }
-    // left join keeps unmatched left rows exactly once
-    val plainL = left.join(right, Seq("k"), "left").count()
-    val saltedL = Skew.saltedJoin(left, right, "k", Seq(col("lid")), 7, "left").count()
-    assert(saltedL == plainL)
   }
 
-  test("saltedJoin rejects outer types and reserved names") {
+  test("saltedJoin rejects reserved names") {
     val df = Seq((1L, 2L)).toDF("k", "v")
-    intercept[IllegalArgumentException] {
-      Skew.saltedJoin(df, df, "k", Seq(col("v")), 4, "right")
-    }
     val bad = Seq((1L, 0L)).toDF("k", "__salt")
     intercept[IllegalArgumentException] {
       Skew.saltedJoin(bad, df, "k", Seq(col("k")), 4)

@@ -51,8 +51,8 @@ class StableIdsSpec extends SparkSpec {
     val df = ev.select($"event_id",
       ($"event_id" % 7).as("v1"), ($"event_id" % 3).as("v2"))
     val got = StableIds.rankAndCumSums(df, Seq($"event_id"),
-        Seq("v1" -> "c1", "v2" -> "c2"), "rk")
-      .select("event_id", "rk", "c1", "c2")
+        Seq("v1" -> "c1", "v2" -> "c2"))
+      .select("event_id", "rank", "c1", "c2")
       .as[(Long, Long, Long, Long)].collect().toSet
     val w = Window.orderBy($"event_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -56,13 +56,15 @@ class AqePlanShapeSpec extends SparkSpec {
     * pruned from every parquet scan). */
   private val pins: Seq[(String, Int, Seq[String])] = Seq(
     // 18 → 6 (opt r13): PageRank's vertex-sized nodes/deg tables are
-    // checkpointed once instead of re-derived per iteration reference
-    ("q_text_textrank", 6, Seq("source")),
+    // checkpointed once instead of re-derived per iteration reference;
+    // 6 → 3: PageRank cuts lineage after every iteration but the last
+    ("q_text_textrank", 3, Seq("source")),
     // 11 → 7 (opt r13): iteration tables come from the suite-shared
     // deepwalk adjacency/degree memos
     // 7 → 6, triangles 6 → 4 (certified session): the memos are AQE-planned
-    // (canChangeCachedPlanOutputPartitioning), so fewer re-shuffles
-    ("q_eng_pagerank", 6, Nil),
+    // (canChangeCachedPlanOutputPartitioning), so fewer re-shuffles;
+    // 6 → 2: only the last PageRank iteration stays in the plan
+    ("q_eng_pagerank", 2, Nil),
     ("q_eng_common_neighbors", 5, Nil),
     ("q_eng_modularity", 7, Nil),
     // 2 → 3 (opt r13): +1 one-row exchange for the keyless string

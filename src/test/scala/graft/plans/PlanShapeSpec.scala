@@ -61,13 +61,14 @@ class PlanShapeSpec extends SparkSpec {
   private val pins: Seq[(String, Int, Seq[String])] = Seq(
     // counts audited at sf0.001 / 4 shuffle partitions / AQE off. 0 means
     // the returned frame is entirely post-localCheckpoint (the iterative
-    // loop materialized every shuffle before returning); high counts on
-    // pagerank/textrank are the final unrolled power rounds between the
-    // last checkpoint and the output projection.
-    ("q_text_textrank", 7, Seq("source")),
+    // loop materialized every shuffle before returning).
+    // 7 → 2: PageRank cuts lineage after every iteration but the last, so
+    // only the last iteration stays in the returned plan
+    ("q_text_textrank", 2, Seq("source")),
     // 11 → 4 (opt r13): iteration tables come from the suite-shared
-    // deepwalk adjacency/degree memos instead of per-iteration re-derives
-    ("q_eng_pagerank", 4, Nil),
+    // deepwalk adjacency/degree memos instead of per-iteration re-derives;
+    // 4 → 2: only the last iteration stays in the plan, as for textrank
+    ("q_eng_pagerank", 2, Nil),
     ("q_eng_common_neighbors", 2, Nil),
     ("q_eng_modularity", 7, Nil),
     // 2 → 3 (opt r13): the two string min/max moved to a keyless side

@@ -52,13 +52,11 @@ class QueryCachesEvictionSpec extends SparkSpec {
     for (_ <- 1 to 5) { QueryCaches.tick(); memoNew() }
     // valve closed: nothing goes, however stale (NB: calling memoOld()
     // here would touch it and reset its age — assert via the ledger)
-    assert(QueryCaches.evictOnPressure(spark, highWater = 0.75,
-      keepYoung = 0, usedFraction = _ => 0.10) == Nil,
+    assert(QueryCaches.evictOnPressure(spark, usedFraction = _ => 0.10) == Nil,
       "closed valve must not evict")
-    // valve open: everything older than keepYoung goes, the fresh memo
+    // valve open: everything older than 3 ticks goes, the fresh memo
     // survives (the running family keeps its working set)
-    val released = QueryCaches.evictOnPressure(spark, highWater = 0.75,
-      keepYoung = 3, usedFraction = _ => 0.90)
+    val released = QueryCaches.evictOnPressure(spark, usedFraction = _ => 0.90)
     assert(released == Seq("press_old"), s"expected press_old, got $released")
     val n = memoNew(); assert(n eq memoNew(), "young memo must survive the valve")
     memoOld(); assert(builds == 2, "evicted memo rebuilds on demand")

@@ -16,8 +16,8 @@ class GdeltTsvSpec extends SparkSpec with TempDirs {
       case "Actor1Name" => if (id % 2 == 0) "" else s"actor$id" // empty → null
       case c => s"$c-$id"
     }.mkString("\t")
-    // a short row (null-padded, kept) and an over-length row (dropped) —
-    // both semantics must match the CSV-reader path exactly
+    // a short row (null-padded, kept) and an over-length row (dropped);
+    // the CSV-reader path agrees on them only for column-pruned reads
     JFiles.write(Paths.get(d, "a.tsv"),
       (Seq(line(1, "20130401"), line(2, "20130401"), "short\trow") :+
         (line(4, "20130403") + "\textra"))
@@ -46,7 +46,15 @@ class GdeltTsvSpec extends SparkSpec with TempDirs {
         .orderBy("GlobalEventID")
     assert(comparable(v2).collect().toSeq == comparable(v1).collect().toSeq)
     assert(v2.where(col("GlobalEventID") === "short").count() == 1,
-      "short rows null-pad like the CSV reader")
+      "short rows null-pad, as in a column-pruned CSV read")
+    // full width, the CSV reader's arity check sees every field and drops
+    // the short row; the connector keeps it, whatever the projection
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getString(0)).toSet
+    assert(!ids(v1).contains("short"),
+      "a full-width CSV read drops short rows")
+    assert(ids(v2).contains("short"),
+      "the connector null-pads short rows at full width too")
     assert(v2.where(col("GlobalEventID") === "4").count() == 0,
       "over-length rows are malformed and dropped regardless of projection")
     assert(v2.where(col("Actor1Name").isNull).count() ==
@@ -168,14 +176,6 @@ class GdeltTsvSpec extends SparkSpec with TempDirs {
       .where(col("Year") === "2014")
     assert(byYear.count() == 0L)
     assert(GdeltTsv.lastFilesPruned == 3L && GdeltTsv.lastFilesPlanned == 1L)
-
-    // opt-out restores open-every-file behavior, identical results
-    val noprune = spark.read.format("gdelt-tsv")
-      .option("filenamePruning", "false").load(d)
-      .where(col("Day") >= "20130402" && col("Day") <= "20130430")
-    assert(noprune.select("GlobalEventID").as[String].collect().sorted.toSeq
-      == Seq("3"))
-    assert(GdeltTsv.lastFilesPruned == 0L && GdeltTsv.lastFilesPlanned == 4L)
   }
 
   test("size estimate: sizeInBytes is the bytes of the files kept after filename pruning") {

@@ -50,6 +50,36 @@ class RateLimitSpec extends SparkSpec {
       Seq(("a", 1L, true), ("a", 2L, false), ("b", 3L, true), ("b", 4L, false)))
   }
 
+  test("an idle bucket is kept until it has refilled: admit matches admitBatch across a 62-min gap") {
+    // capacity 2, one token an hour: an empty bucket is full after 2 h.
+    // Key a empties its bucket at 0 min and sits idle for 62 min while
+    // key b moves the watermark to 61.5 min; at 62 min a has 62/60
+    // tokens, so one of its two arrivals is rejected. Evicting a after a
+    // fixed hour would hand it a fresh, full bucket and admit both
+    val (cap, rate) = (2.0, 1.0 / 3600.0)
+    def at(min: Double) = new Timestamp(1700000000000L + (min * 60000).toLong)
+    val waves = Seq(
+      Seq(RateEvent("a", at(0), 1), RateEvent("a", at(0), 2)),
+      Seq(RateEvent("b", at(61), 3)),
+      Seq(RateEvent("b", at(61.5), 4)),
+      Seq(RateEvent("a", at(62), 5), RateEvent("a", at(62), 6)))
+    val mem = MemoryStream[RateEvent](spark)
+    val q = RateLimit.admit(
+        mem.toDS().withWatermark("ts", "0 seconds").as[RateEvent], cap, rate)
+      .writeStream.format("memory").queryName("rl_idle")
+      .outputMode("append").start()
+    for (w <- waves) { mem.addData(w: _*); q.processAllAvailable() }
+    q.stop()
+    def verdicts(ds: org.apache.spark.sql.Dataset[RateVerdict]) =
+      ds.collect().map(v => (v.payload, v.admitted)).sortBy(_._1).toSeq
+    val streamed = verdicts(spark.table("rl_idle").as[RateVerdict])
+    spark.sql("DROP TABLE IF EXISTS rl_idle")
+    val batch = verdicts(RateLimit.admitBatch(waves.flatten.toDS(), cap, rate))
+    assert(batch == Seq((1L, true), (2L, true), (3L, true), (4L, true),
+      (5L, true), (6L, false)))
+    assert(streamed == batch)
+  }
+
   test("replaying the identical stream yields identical verdicts (event-time determinism)") {
     val events = (0 until 20).map(i => RateEvent("k", ts(i / 2), i.toLong))
     val a = run(events, capacity = 3.0, ratePerSec = 0.5)

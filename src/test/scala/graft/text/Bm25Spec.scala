@@ -57,11 +57,4 @@ class Bm25Spec extends SparkSpec {
       q, col("id"), col("text"), k = 10, maxDfPermille = 700)
     assert(out.count() == 0, "a stop-term query must not touch the corpus")
   }
-
-  test("k1 and b outside the 1/20 grid are rejected") {
-    intercept[IllegalArgumentException] {
-      Bm25.topK(corpus, col("id"), col("text"),
-        corpus, col("id"), col("text"), k = 5, k1 = 1.23)
-    }
-  }
 }

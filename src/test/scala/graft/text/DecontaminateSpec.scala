@@ -27,7 +27,7 @@ class DecontaminateSpec extends SparkSpec {
       (11L, "v x y z")
     ).toDF("id", "text")
     val out = Decontaminate.contamination(corpus, col("id"), col("text"),
-        eval, col("id"), col("text"), n = 3, idName = "id")
+        eval, col("id"), col("text"), n = 3)
       .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(out(1L) == ((2L, 2L))) // ngrams {x y z, y z w}; eval docs {10, 11}
     assert(out(3L) == ((1L, 2L))) // only "x y z", present in both eval docs
@@ -38,7 +38,7 @@ class DecontaminateSpec extends SparkSpec {
     val corpus = Seq((1L, "x y z")).toDF("id", "text")
     val eval = Seq((10L, "x y z")).toDF("id", "text")
     val plan = Decontaminate.contamination(corpus, col("id"), col("text"),
-      eval, col("id"), col("text"), n = 3, idName = "id")
+      eval, col("id"), col("text"), n = 3)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"))
   }

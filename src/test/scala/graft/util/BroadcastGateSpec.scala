@@ -64,16 +64,4 @@ class BroadcastGateSpec extends SparkSpec {
     assert(under.select("k").as[Long].collect().sorted ===
       over.select("k").as[Long].collect().sorted)
   }
-
-  test("PageRank broadcastRanks gate: ranks identical with the flag on and off") {
-    // the gate inside prepared() only disables broadcasting; values must
-    // be bit-identical on both join strategies
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (4L, 1L))
-      .toDF("src", "dst")
-    def pr(bc: Boolean) =
-      graft.operators.PageRank.integerPageRank(edges, col("src"), col("dst"),
-          iters = 3, broadcastRanks = bc)
-        .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(pr(true) === pr(false))
-  }
 }
