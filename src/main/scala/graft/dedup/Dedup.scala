@@ -309,7 +309,7 @@ object Dedup {
     * (production-hardening for adversarial long chains would add the
     * star-contraction variants; the join/agg shape is identical). The
     * propagation DOUBLE-steps between convergence checks: at local[32]
-    * scale each checkpoint/count is a fixed-overhead job and the label
+    * scale each convergence count is a fixed-overhead job and the label
     * table is tiny, so halving the number of materialization rounds — not
     * the number of edge joins — is what moves wall-clock; the fixpoint is
     * unchanged (labels decrease monotonically, and an extra step at the
@@ -339,7 +339,7 @@ object Dedup {
     val edges = pairs.select(idaCol.as("src"), idbCol.as("dst"))
       .unionByName(pairs.select(idbCol.as("src"), idaCol.as("dst")))
       .distinct()
-      .localCheckpoint()
+      .localCheckpoint(false)
     def step(l: DataFrame): DataFrame = {
       val nbrMin = edges
         .join(l.select(col("id").as("dst"), col("label").as("nl")), "dst")
@@ -350,11 +350,11 @@ object Dedup {
     }
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
-      .localCheckpoint()
+      .localCheckpoint(false)
     var changed = 1L
     var steps = 0
     while (changed > 0 && steps < maxSteps) {
-      val next = step(step(labels)).localCheckpoint()
+      val next = step(step(labels)).localCheckpoint(false)
       changed = labels.select(col("id"), col("label").as("__old"))
         .join(next, "id")
         .where(col("__old") =!= col("label")).count()

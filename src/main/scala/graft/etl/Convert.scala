@@ -22,16 +22,19 @@ import java.nio.file.{Files => JFiles, Paths}
 object Convert {
 
   /** Read headerless tab-separated GDELT CSV with the injected all-string
-    * 58-column schema (converter.py:214-223). DROPMALFORMED ≈ the
-    * reference's `on_bad_lines="warn"` skip-and-continue contract, with one
-    * documented divergence (SURVEY.md §7.4): Spark drops rows with *either*
-    * too many or too few fields, while pandas null-pads short rows — the
-    * stricter "skip bad lines" reading. NB: malformed detection only runs
-    * for columns the plan actually reads; a bare `count()` on the raw CSV
-    * counts physical lines (column pruning reads none) — materialize
-    * through the parquet sink before relying on row counts. */
-  def readRawTsv(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.options(RawTsvOptions).schema(Gdelt.rawSchema).csv(paths: _*)
+    * schema of `columns`, in order (converter.py:67, 214-223).
+    * DROPMALFORMED ≈ the reference's `on_bad_lines="warn"` skip-and-continue
+    * contract, with one documented divergence (SURVEY.md §7.4): Spark drops
+    * rows with *either* too many or too few fields, while pandas null-pads
+    * short rows — the stricter "skip bad lines" reading. NB: malformed
+    * detection only runs for columns the plan actually reads; a bare
+    * `count()` on the raw CSV counts physical lines (column pruning reads
+    * none) — materialize through the parquet sink before relying on row
+    * counts. */
+  def readRawTsv(spark: SparkSession, paths: Seq[String],
+                 columns: Seq[String] = Gdelt.columns): DataFrame =
+    spark.read.options(RawTsvOptions).schema(Gdelt.rawSchema(columns))
+      .csv(paths: _*)
 
   /** CSV reader options of the raw TSV: [[readRawTsv]] and the streaming
     * [[graft.streaming.Incremental.incrementalConvert]]. */
@@ -74,7 +77,7 @@ object Convert {
     * `col=val/` directory tree the reference builds by hand with a pandas
     * groupby loop. Files are sized by [[Layout.sized]]. */
   def writeHistorical(df: DataFrame, histDir: String, fileType: String,
-                      rules: Map[String, Seq[String]] = Gdelt.partitionRules): Unit = {
+                      rules: Map[String, Seq[String]]): Unit = {
     val partCols = rules.getOrElse(fileType,
       throw new IllegalArgumentException(s"No partition rule for file type '$fileType'"))
     Layout.sized(df.na.drop("any", partCols))
@@ -131,14 +134,14 @@ object Convert {
   val FileTypes: Seq[String] = Seq("daily", "monthly", "yearly")
 
   /** The routed write of [[run]] and the CLI `pipeline`: `paths`, all of
-    * one `fileType`, read through [[readRawTsv]], coerced under `config`
-    * and appended to their sink — daily files to the flat dataset,
-    * monthly and yearly files to the Hive tree. */
+    * one `fileType`, read through [[readRawTsv]] with `config.columns`,
+    * coerced under `config` and appended to their sink — daily files to
+    * the flat dataset, monthly and yearly files to the Hive tree. */
   def writeRouted(spark: SparkSession, fileType: String, paths: Seq[String],
                   flatDir: String, histDir: String,
                   config: graft.util.GraftConfig): Unit = {
-    val df = coerce(readRawTsv(spark, paths), config.numericColumns,
-      Gdelt.intColumns)
+    val df = coerce(readRawTsv(spark, paths, config.columns),
+      config.numericColumns, Gdelt.intColumns)
     if (fileType == "daily") writeFlat(df, flatDir)
     else writeHistorical(df, histDir, fileType, config.partitionRules)
   }

@@ -49,8 +49,7 @@ object BloomPrune {
     * matching row survives; a later real join removes false positives. */
   def prune(probe: DataFrame, probeKey: Column,
             build: DataFrame, buildKey: Column,
-            expectedItems: Long = 1000000L,
-            numBits: Long = 8L * 1024 * 1024): DataFrame = {
+            expectedItems: Long, numBits: Long): DataFrame = {
     val bf = keyBloom(build, buildKey, expectedItems, numBits)
     probe.where(GraftColumnBridge.column(BloomFilterMightContain(
       GraftColumnBridge.expression(bf),

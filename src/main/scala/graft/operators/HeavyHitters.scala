@@ -94,7 +94,7 @@ object HeavyHitters {
     // typically an expensive derivation (exploded bigrams), and each
     // reference re-ran it (opt r13, guide §2.4)
     val vals = df.select(value.cast("string").as("v")).where(col("v").isNotNull)
-      .localCheckpoint()
+      .localCheckpoint(false)
     val candidates = vals.as[String]
       .select(MisraGries(capacity).toColumn.name("cand"))
       .select(explode(map_keys(col("cand"))).as("v"))

@@ -47,7 +47,7 @@ object LabelPropagation {
         .groupBy(col("id"))
         .agg(min(struct((-col("cnt")).as("nc"), col("label").as("lb"))).as("mn"))
         .select(col("id"), col("mn.lb").as("label"))
-      if (it < iters) labels = labels.localCheckpoint()
+      if (it < iters) labels = labels.localCheckpoint(false)
     }
     labels
   }

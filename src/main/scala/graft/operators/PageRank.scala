@@ -43,9 +43,9 @@ object PageRank {
     // cluster analogue is persisting the derived graph tables, exactly
     // what the Scaladoc below tells prepared() callers to do)
     val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst").as("node"))).distinct().localCheckpoint()
+      .union(e.select(col("__dst").as("node"))).distinct().localCheckpoint(false)
     val deg = e.groupBy(col("__src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+      .localCheckpoint(false)
     prepared(nodes, deg, e, iters)
   }
 
@@ -94,7 +94,7 @@ object PageRank {
         .crossJoin(broadcast(nstat))
         .select(col("node"),
           (base + expr("85 * coalesce(s, CAST(0 AS BIGINT)) div 100")).as("pr"))
-      if (it < iters) ranks = ranks.localCheckpoint()
+      if (it < iters) ranks = ranks.localCheckpoint(false)
     }
     ranks
   }

@@ -32,7 +32,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 object Skyline {
 
   def skyline2D(points: DataFrame, maxCol: String, minCol: String,
-      bucketWidth: Double = 1000.0): DataFrame = {
+      bucketWidth: Double): DataFrame = {
     val x = col(maxCol)
     val y = col(minCol)
 

@@ -28,9 +28,9 @@ object StableIds {
     * zipWithIndex's extra counting job plus a full recompute of the sort
     * for the value pass, and (c) leaves the downstream plan opaque to
     * column pruning. This version stays in the DataFrame engine: range
-    * partition + in-partition sort are materialized ONCE
-    * (localCheckpoint pins the partition layout, the same role the
-    * single pinned RDD played before), `monotonically_increasing_id()`
+    * partition + in-partition sort are materialized ONCE (the counts
+    * pass pins layout and ids in the localCheckpoint's blocks, which the
+    * id pass reads), `monotonically_increasing_id()`
     * supplies the in-partition index ((pid << 33) + idx — its documented
     * construction), and the per-partition row counts (one long per
     * partition, collected like the old stats pass) broadcast back as
@@ -48,7 +48,7 @@ object StableIds {
     val sorted = rangeSorted(df, orderCols)
       .withColumn(pidC, spark_partition_id())
       .withColumn(midC, monotonically_increasing_id())
-      .localCheckpoint()
+      .localCheckpoint(false)
     // per-partition row counts to the driver — one long per partition,
     // the same metadata round-trip the RDD form's stats pass made —
     // then the exclusive prefix sums rejoin as a broadcast local

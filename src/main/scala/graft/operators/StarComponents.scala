@@ -29,10 +29,6 @@ object StarComponents {
   /** (doc_id, cluster_id) with cluster_id = min reachable node id; one
     * row per distinct node appearing in `pairs`. */
   def components(pairs: DataFrame, idaCol: Column, idbCol: Column): DataFrame = {
-    // lazy checkpoints (opt r13): each round's ONLY action is the
-    // convergence check — the checkpoint materializes inside it instead
-    // of as its own job (the eager form doubled the driver's job count,
-    // and at fixture scale the per-job latency dominated the round)
     val nodes = pairs.select(idaCol.as("id"))
       .unionByName(pairs.select(idbCol.as("id"))).distinct()
       .localCheckpoint(false)

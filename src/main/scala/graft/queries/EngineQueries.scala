@@ -379,11 +379,7 @@ object EngineQueries {
       // order count): materialize the distinct once instead of re-running
       // the lineitem scan + distinct per reference (opt r13, guide §2.4;
       // A/B'd against exchange reuse alone — 11.2 s vs 9.6 s task time,
-      // reuse does not cover the cnt/nOrders actions). LAZY checkpoint
-      // (opt r14, VERDICT r13 #3): the eager form ran the materialization
-      // as its own blocking action inside every timed invocation; lazy
-      // folds it into the first consuming job (min-of-5 bench pair
-      // 2.69 s → 2.20 s, same task work)
+      // reuse does not cover the cnt/nOrders actions)
       val op = orderParts(s, d).localCheckpoint(false)
       val pairs = op.as("a")
         .join(op.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
@@ -391,7 +387,7 @@ object EngineQueries {
         .agg(count(lit(1)).as("support"))
         .where(col("support") >= 3)
       // cnt is part-sized and consumed twice: materialize it once (the
-      // gate's count is the lazy checkpoint's materializing action) and
+      // gate's count is the checkpoint's materializing action) and
       // attach it gated — broadcast under the row ceiling so the pair
       // table is not shuffled twice just for the marginals (opt r13,
       // guide §3.1), shuffle_hash past it instead of riding a bare hint

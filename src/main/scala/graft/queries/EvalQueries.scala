@@ -1085,7 +1085,7 @@ object EvalQueries {
         .withColumn("bin", expr("(rk - 1) * 20 DIV n_tot"))
         .groupBy(col("bin"))
         .agg(count(lit(1)).as("n_bin"), sum(col("label")).as("pos_bin"))
-        .localCheckpoint()
+        .localCheckpoint(false)
       bins.join(broadcast(isotonicFit(bins)), Seq("bin"))
         .select(col("bin"), col("n_bin"), col("pos_bin"),
           ppmWide(col("pos_bin"), col("n_bin")).as("raw_ppm"), col("iso_ppm"))

@@ -49,7 +49,7 @@ object SimilarityQueries {
     * through the exact code path the fixture query uses. */
   private[queries] def ariFromContingency(ctg0: DataFrame): DataFrame = {
     // localCheckpoint: the bounded k×L contingency feeds three aggregates
-    val ctg = ctg0.localCheckpoint()
+    val ctg = ctg0.localCheckpoint(false)
     val p1 = ctg.agg(
       sum(wide(col("nij")) * wide(col("nij") - 1L)).as("sum_idx2"),
       countDistinct(col("cell")).as("n_cells"),
@@ -690,7 +690,7 @@ object SimilarityQueries {
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n_points"), sum(col("d2m")).as("s2sum"))
         .withColumn("s2_micro", expr("s2sum DIV n_points"))
-        .localCheckpoint()
+        .localCheckpoint(false)
       val cents = Similarity.kmeansCentroids(Tables.embeddings(s, d),
         k = 8, iters = 2)
       val sep = cents.select(col("cid").as("i"), col("cv").as("vi"))

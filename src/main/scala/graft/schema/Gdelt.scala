@@ -53,10 +53,10 @@ object Gdelt {
     * (converter.py:47-49,246-250). */
   val intColumns: Set[String] = Set("Year", "MonthYear", "Day")
 
-  /** Ingest schema: TSV read with every column as string
-    * (converter.py:214-223). */
-  val rawSchema: StructType =
-    StructType(columns.map(StructField(_, StringType, nullable = true)))
+  /** Ingest schema: TSV read with every column of `cols` as string, in
+    * order (converter.py:214-223). */
+  def rawSchema(cols: Seq[String]): StructType =
+    StructType(cols.map(StructField(_, StringType, nullable = true)))
 
   /** Default filter-stage check columns (settings.example.yaml:153-165). */
   val defaultFilterColumns: Seq[String] = Seq(

@@ -290,7 +290,7 @@ object Similarity {
       cents = cents.select(col("cid"), col("cv").as("prev"))
         .join(updated.select(col("cid"), col("cv").as("upd")), Seq("cid"), "left")
         .select(col("cid"), coalesce(col("upd"), col("prev")).as("cv"))
-        .localCheckpoint()
+        .localCheckpoint(false)
     }
     cents
   }

@@ -76,7 +76,7 @@ class GdeltTsv extends TableProvider with DataSourceRegister {
   override def shortName(): String = "gdelt-tsv"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    Gdelt.rawSchema
+    Gdelt.rawSchema(Gdelt.columns)
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table = {
@@ -88,7 +88,7 @@ class GdeltTsv extends TableProvider with DataSourceRegister {
 
 private[sources] class GdeltTsvTable(path: String) extends Table with SupportsRead {
   override def name(): String = s"gdelt_tsv(`$path`)"
-  override def schema(): StructType = Gdelt.rawSchema
+  override def schema(): StructType = Gdelt.rawSchema(Gdelt.columns)
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -99,7 +99,7 @@ private[sources] class GdeltTsvTable(path: String) extends Table with SupportsRe
 private[sources] class GdeltTsvScanBuilder(path: String, maxSplitBytes: Long)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
-  private var required: StructType = Gdelt.rawSchema
+  private var required: StructType = Gdelt.rawSchema(Gdelt.columns)
   private var pushed: Array[Filter] = Array.empty
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema

@@ -29,7 +29,7 @@ object Incremental {
     val raw = spark.readStream
       .options(Convert.RawTsvOptions)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(Gdelt.rawSchema)
+      .schema(Gdelt.rawSchema(Gdelt.columns))
       .csv(inDir)
     Convert.coerce(raw).writeStream
       .format("parquet")

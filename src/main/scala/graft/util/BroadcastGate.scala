@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions.{broadcast, col}
   * rationale).
   *
   * The count is one job; call sites either reuse a count they already
-  * need, or count a frame that is localCheckpoint'ed anyway (a lazy
+  * need, or count a frame that is localCheckpoint'ed anyway (the
   * checkpoint materializes inside the counting job, so the gate adds one
   * small job dispatch, never a recomputation).
   */

@@ -98,6 +98,20 @@ class EtlSpec extends SparkSpec with TempDirs {
     assert(spark.read.parquet(flat).count() == 3)
   }
 
+  test("convert reads the configured schema.columns: a renamed SOURCEURL lands in parquet") {
+    val cols = Gdelt.columns.map(c => if (c == "SOURCEURL") "source_url" else c)
+    val cfg = graft.util.Config.parse(
+      ("schema:" +: "  columns:" +: cols.map(c => s"    - $c")).mkString("\n"))
+    val p = Paths.get(workDir, "20130402.export.CSV")
+    JFiles.write(p, tsvLine(30, "20130402", "1", "1.0", "A").getBytes)
+    val flat = s"$workDir/flat_cols"
+    Convert.run(spark, Seq(p.toString), flat, s"$workDir/hist_cols", cfg)
+    val back = spark.read.parquet(flat)
+    assert(back.columns.toSeq == cols)
+    assert(back.select("source_url").as[String].collect().toSeq ==
+      Seq("http://example.com"))
+  }
+
   test("unknown filenames are counted, reported, and never converted") {
     val p = Paths.get(workDir, "notes.txt")
     JFiles.write(p, "hello".getBytes)

@@ -26,7 +26,8 @@ class PartitionPruningSpec extends SparkSpec with TempDirs {
       val histDir = s"$dir/hist"
       val flatDir = s"$dir/flat"
       val months = Seq((2013L, 201301L), (2013L, 201302L), (2013L, 201303L), (2014L, 201401L))
-      Convert.writeHistorical(mkData(months, 5).repartition(1), histDir, "monthly")
+      Convert.writeHistorical(mkData(months, 5).repartition(1), histDir, "monthly",
+        graft.schema.Gdelt.partitionRules)
       // flat side: several physical files, Year carried as data
       Convert.writeFlat(mkData(months, 5).repartition(3), flatDir)
 

@@ -112,4 +112,25 @@ class GraphIterationSpec extends SparkSpec {
       nodeIds.map(nd => nd -> expected(nd)))
     assert(planSize(ckpt) == planSize(run(2)))
   }
+
+  // Job-count pins: a cut materializes inside the next job that reads it,
+  // so it adds no job of its own; an eager cut would run one more job per
+  // cut (82 here for PageRank's 9 cuts, 40 for Dedup's 5).
+  test("PageRank.prepared: 10 iterations run a pinned number of jobs") {
+    val e = edges.select(col("src").as("__src"), col("dst").as("__dst"))
+    val nodes = edgeList.flatMap(e => Seq(e._1, e._2)).distinct.toDF("node")
+    val deg = edgeList.groupBy(_._1).toSeq
+      .map { case (s, es) => (s, es.size.toLong) }.toDF("node", "deg")
+    val jobs = graft.JobCount(spark) {
+      PageRank.prepared(nodes, deg, e, iters = 10).collect()
+    }
+    assert(jobs == 73)
+  }
+
+  test("Dedup.duplicateClusters: the convergence loop runs a pinned number of jobs") {
+    val jobs = graft.JobCount(spark) {
+      graft.dedup.Dedup.duplicateClusters(edges, col("src"), col("dst")).collect()
+    }
+    assert(jobs == 35)
+  }
 }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.execution.joins.CartesianProductExec
   *      guards against a conf regression silently reverting to static);
   *   2. exchange budget on the FINAL plan — counts legitimately differ
   *      from the static pins (AQE demotes exchanges to broadcasts, reuses
-  *      stages, and the eager iterative builders leave a different
+  *      stages, and the iterative builders leave a different
   *      checkpoint boundary), so these are their own audited values, not
   *      the static ones;
   *   3. zero CartesianProductExec — the claim that must survive ANY

@@ -25,13 +25,14 @@ import org.apache.spark.sql.execution.joins.CartesianProductExec
   *      column; an unpruned documents scan drags the whole corpus through
   *      the scan at scale).
   *
-  * Iterative builders (pagerank, textrank, kcore, …) run their bounded
-  * loops eagerly at construction; localCheckpoint truncates those rounds
-  * out of the RETURNED plan, so the pins here cover the declarative
-  * remainder — the part Catalyst owns. Exchange budgets are upper bounds
-  * pinned at the audited count; if an optimizer upgrade REMOVES a
-  * shuffle, update the pin downward (the assert is two-sided to make the
-  * improvement visible, not to forbid it).
+  * Iterative builders (pagerank, textrank, kcore, …) cut every round with
+  * a lazy localCheckpoint: the earlier rounds are LogicalRDD leaves of
+  * the RETURNED plan, materialized by the first job that reads them, so
+  * the pins here cover the declarative remainder — the part Catalyst
+  * owns. Exchange budgets are upper bounds pinned at the audited count;
+  * if an optimizer upgrade REMOVES a shuffle, update the pin downward
+  * (the assert is two-sided to make the improvement visible, not to
+  * forbid it).
   */
 class PlanShapeSpec extends SparkSpec {
 
@@ -60,8 +61,8 @@ class PlanShapeSpec extends SparkSpec {
     * every parquet scan the query plans). */
   private val pins: Seq[(String, Int, Seq[String])] = Seq(
     // counts audited at sf0.001 / 4 shuffle partitions / AQE off. 0 means
-    // the returned frame is entirely post-localCheckpoint (the iterative
-    // loop materialized every shuffle before returning).
+    // every shuffle of the returned frame sits behind a localCheckpoint
+    // leaf, a memoized cache or a broadcast.
     // 7 → 2: PageRank cuts lineage after every iteration but the last, so
     // only the last iteration stays in the returned plan
     ("q_text_textrank", 2, Seq("source")),
